@@ -2,7 +2,7 @@ package graft
 
 import scala.collection.mutable
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 
 /** Counter surface ≅ the reference's TaskCounter service
@@ -12,7 +12,11 @@ import org.apache.spark.sql.SparkSession
   */
 object Counters {
 
+  /** `jobs` counts the Spark jobs started in the scope — the per-call job
+    * contract the iterative operators are pinned to.
+    */
   final case class Snapshot(
+      jobs: Long,
       tasks: Long,
       inputRecords: Long,
       inputBytes: Long,
@@ -71,6 +75,9 @@ object Counters {
 
   private final class TaskAccumulator extends SparkListener {
     private val m = mutable.Map.empty[String, Long].withDefaultValue(0L)
+    override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
+      m("jobs") += 1
+    }
     override def onTaskEnd(e: SparkListenerTaskEnd): Unit = synchronized {
       val tm = e.taskMetrics
       if (tm != null) {
@@ -84,7 +91,7 @@ object Counters {
       }
     }
     def snapshot: Snapshot = synchronized {
-      Snapshot(m("tasks"), m("inputRecords"), m("inputBytes"),
+      Snapshot(m("jobs"), m("tasks"), m("inputRecords"), m("inputBytes"),
         m("shuffleReadBytes"), m("shuffleWriteBytes"), m("spilledBytes"),
         m("outputRecords"))
     }

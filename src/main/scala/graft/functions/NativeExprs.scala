@@ -394,32 +394,42 @@ object NativeKernels {
     bpeMergeFold(syms, bytes.length, mA, mB, mAB)
   }
 
-  /** The shared exact greedy left-to-right merge fold (in-place stack with
-    * a write pointer) — char-level and byte-level encoders both end here.
+  /** The shared exact greedy left-to-right merge fold — char-level and
+    * byte-level encoders both end here, one [[bpeMergeStep]] per rule.
     */
-  private def bpeMergeFold(
-      syms: Array[org.apache.spark.unsafe.types.UTF8String], n0: Int,
-      mA: Array[org.apache.spark.unsafe.types.UTF8String],
-      mB: Array[org.apache.spark.unsafe.types.UTF8String],
-      mAB: Array[org.apache.spark.unsafe.types.UTF8String]): ArrayData = {
+  private def bpeMergeFold(syms: Array[UTF8String], n0: Int,
+      mA: Array[UTF8String], mB: Array[UTF8String],
+      mAB: Array[UTF8String]): ArrayData = {
     var n = n0
     var m = 0
     while (m < mA.length) {
-      val a = mA(m); val b = mB(m); val ab = mAB(m)
-      var w = 0
-      var i = 0
-      while (i < n) {
-        val x = syms(i)
-        if (w > 0 && syms(w - 1).equals(a) && x.equals(b)) syms(w - 1) = ab
-        else { syms(w) = x; w += 1 }
-        i += 1
-      }
-      n = w
+      n = bpeMergeStep(syms, n, mA(m), mB(m), mAB(m))
       m += 1
     }
     val out = new Array[AnyRef](n)
     System.arraycopy(syms, 0, out, 0, n)
     new GenericArrayData(out)
+  }
+
+  /** Apply ONE merge rule to `syms(0 until n)` in place (a stack with a
+    * write pointer: merge when the top is `a` and the incoming symbol is
+    * `b`, the merged symbol becoming the new top) and return the new
+    * length. The encoders and the in-memory trainers
+    * ([[graft.operators.TextOps.bpeMerges]],
+    * [[graft.operators.TextOps.wordPieceMerges]]) share this step, so
+    * training and serving cannot drift in application semantics.
+    */
+  private[graft] def bpeMergeStep(syms: Array[UTF8String], n: Int,
+      a: UTF8String, b: UTF8String, ab: UTF8String): Int = {
+    var w = 0
+    var i = 0
+    while (i < n) {
+      val x = syms(i)
+      if (w > 0 && syms(w - 1).equals(a) && x.equals(b)) syms(w - 1) = ab
+      else { syms(w) = x; w += 1 }
+      i += 1
+    }
+    w
   }
 
   /** Product-quantization encode: per subspace m, the code of the nearest

@@ -1,7 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.collection.mutable
+
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Text-analysis operators for large-scale training-data pipelines.
   *
@@ -322,27 +325,28 @@ object TextOps {
     * symbol pair (ties: lexicographic (sym_a, sym_b)) and applying it
     * greedily left-to-right to every word.
     *
-    * Scale design — the classic trainer decomposition: ONE distributed
-    * pass aggregates the corpus to its word-frequency table (hash agg with
-    * partial combine; a 10^9-occurrence word costs O(1) combiner state),
-    * and every merge round then runs on that VOCAB-sized table — pair
-    * counting is an explode + hash aggregate over distinct words weighted
-    * by n, never a corpus rescan. Per round: one vocab-sized aggregate,
-    * ONE driver-side row (the argmax pair — a scalar decision, the
-    * kCoreExact convergence-count discipline), and a narrow fold applying
-    * the merge; localCheckpoint truncates the per-round lineage. Merge
-    * application is an exact greedy left-to-right fold (a running stack:
-    * merge when the top symbol is a and the incoming is b), expressed as
-    * a codegen'd `aggregate` lambda — no UDF.
+    * Scale design — the classic trainer decomposition (HF tokenizers,
+    * SentencePiece): ONE distributed pass aggregates the corpus to its
+    * word-frequency table (hash agg with partial combine; a
+    * 10^9-occurrence word costs O(1) combiner state), the table is
+    * collected to the driver, and every merge round runs there in memory
+    * — pair counting, argmax and the fold — so a trainer call costs a
+    * fixed number of jobs whatever `rounds` is, and the corpus is never
+    * rescanned. Driver memory is bounded by the number of DISTINCT
+    * pre-tokens, not by the corpus: a table above [[MaxTrainerWords]]
+    * fails with an error naming the bound instead of exhausting the
+    * driver. Merge application is the encoders' exact greedy
+    * left-to-right stack fold ([[graft.functions.NativeKernels.bpeMergeStep]]).
     *
     * Determinism: pair counts are exact integer sums of word frequencies;
-    * the argmax order (cnt desc, sym_a, sym_b) and the fold are replayed
-    * verbatim by the DuckDB oracle (unrolled rounds, same stack fold via
-    * list_reduce over singleton lists).
+    * the argmax order (cnt desc, sym_a, sym_b) compares symbols as UTF-8
+    * bytes (Spark's string sort order); both the order and the fold are
+    * replayed verbatim by the DuckDB oracle (unrolled rounds, same stack
+    * fold via list_reduce over singleton lists).
     */
   def bpeMerges(docs: DataFrame, text: Column, rounds: Int,
       requireFull: Boolean = false): DataFrame =
-    bpeMergeLoop(
+    mergeTable(docs.sparkSession, trainBpe(
       docs
         .select(text.as("__t"))
         .select(explode(expr(
@@ -351,7 +355,7 @@ object TextOps {
         .select(expr(
           "transform(sequence(1, length(w)), i -> substring(w, i, 1))").as("syms"),
           col("n")),
-      rounds, requireFull)
+      rounds, requireFull))
 
   /** BYTE-LEVEL BPE vocabulary induction — the production tokenizer
     * boundary (GPT-2, Llama): pre-tokenize with the regex splitter
@@ -369,15 +373,16 @@ object TextOps {
     */
   def bpeMergesByteLevel(docs: DataFrame, text: Column, rounds: Int,
       requireFull: Boolean = false): DataFrame =
-    bpeMergesByteLevelFromPretokens(
-      docs
+    mergeTable(docs.sparkSession, trainBpe(
+      byteLevelWordCounts(docs
         .select(text.as("__t"))
         .select(explode(regexp_extract_all(lower(col("__t")),
-          lit(byteLevelTokenPattern), lit(0))).as("w")),
-      rounds, requireFull)
+          lit(byteLevelTokenPattern), lit(0))).as("w"))),
+      rounds, requireFull))
 
   /** [[bpeMergesByteLevel]] over an ALREADY pre-tokenized frame — one
-    * column `w`, one row per pre-token occurrence. The shard-packing
+    * column `w`, one row per pre-token occurrence — returning the ordered
+    * (sym_a, sym_b) merge list. The shard-packing
     * family tokenizes the same corpus again right after training, so
     * deriving both the trainer's word counts and the packing tokenize
     * from ONE persisted regex pass (instead of two full-corpus regex
@@ -385,83 +390,97 @@ object TextOps {
     * identical by construction, so the learned merges are bit-identical.
     */
   def bpeMergesByteLevelFromPretokens(pre: DataFrame, rounds: Int,
-      requireFull: Boolean = false): DataFrame =
-    bpeMergeLoop(
-      pre
-        .groupBy(col("w")).agg(count(lit(1)).as("n"))
-        // hex(w) = hex of the word's UTF-8 bytes (Spark hex-of-string
-        // semantics, uppercase — DuckDB's hex(varchar) matches both);
-        // symbols = its 2-char slices
-        .select(expr(
-          """transform(sequence(1, length(hex(w)) div 2),
-            |  i -> substring(hex(w), 2 * i - 1, 2))""".stripMargin).as("syms"),
-          col("n")),
-      rounds, requireFull)
+      requireFull: Boolean = false): Seq[(String, String)] =
+    trainBpe(byteLevelWordCounts(pre), rounds, requireFull)
+      .map(m => (m._2, m._3))
 
-  /** The shared BPE merge-round loop over a (syms, n) word-frequency
-    * table — see [[bpeMerges]] for the scale/determinism contract. Both
-    * the char-level and byte-level trainers end here, so their merge
-    * semantics are identical by construction.
+  /** The byte-level (syms, n) word table: hex(w) = hex of the word's UTF-8
+    * bytes (Spark hex-of-string semantics, uppercase — DuckDB's
+    * hex(varchar) matches both); symbols = its 2-char slices.
     */
-  private def bpeMergeLoop(wc0: DataFrame, rounds: Int,
-      requireFull: Boolean): DataFrame = {
-    val spark = wc0.sparkSession
+  private def byteLevelWordCounts(pre: DataFrame): DataFrame =
+    pre
+      .groupBy(col("w")).agg(count(lit(1)).as("n"))
+      .select(expr(
+        """transform(sequence(1, length(hex(w)) div 2),
+          |  i -> substring(hex(w), 2 * i - 1, 2))""".stripMargin).as("syms"),
+        col("n"))
+
+  private def mergeTable(spark: SparkSession,
+      merges: Seq[(Long, String, String, Long)]): DataFrame = {
     import spark.implicits._
-    require(rounds >= 1, s"rounds must be >= 1, got $rounds")
-    // LAZY checkpoints: each round's argmax (orderBy + head) computes every
-    // partition of wc anyway (the sort reads the whole frame), so an eager
-    // checkpoint job per round only duplicated that pass — lazy halves the
-    // loop's job count (2/round → 1/round) and skips materializing the
-    // LAST round's fold, which nothing ever reads. Lineage truncation is
-    // unchanged once the round's head job commits the checkpoint.
-    var wc = wc0.localCheckpoint(eager = false)
-    val merges = Seq.newBuilder[(Long, String, String, Long)]
-    var r = 1
-    var exhausted = false
-    while (r <= rounds && !exhausted) {
-      val best = wc.filter(size(col("syms")) >= 2)
-        .select(col("n"), explode(expr(
-          "transform(sequence(1, size(syms) - 1), i -> struct(syms[i - 1] as a, syms[i] as b))"))
-          .as("p"))
-        .groupBy(col("p.a").as("a"), col("p.b").as("b"))
-        .agg(sum(col("n")).as("cnt"))
-        .orderBy(desc("cnt"), asc("a"), asc("b"))
-        .head(1)
-      if (best.isEmpty) exhausted = true
-      else {
-        val (a, b, cnt) = (best(0).getString(0), best(0).getString(1), best(0).getLong(2))
-        merges += ((r.toLong, a, b, cnt))
-        wc = wc.select(expr(mergeFoldSql(a, b, a + b)).as("syms"), col("n"))
-          // vocab-sized; truncate the per-round lineage (lazy — see wc0)
-          .localCheckpoint(eager = false)
-        r += 1
-      }
-    }
-    val learned = merges.result()
-    // requireFull: callers whose oracle unrolls EXACTLY `rounds` CTE rounds
-    // (q156/q157) must fail loudly on a fixture with fewer learnable merges
-    // — an empty p_i CROSS JOIN would silently empty every later wc_i and
-    // the gate would diverge without an error
-    if (requireFull) require(learned.size == rounds,
-      s"corpus exhausted after ${learned.size} of $rounds BPE merges; " +
-        "the unrolled oracle CTE chain assumes exactly `rounds` rounds")
-    learned.toDF("merge_round", "sym_a", "sym_b", "pair_count")
+    merges.toDF("merge_round", "sym_a", "sym_b", "pair_count")
   }
 
-  /** The exact greedy left-to-right merge-application stack fold, shared
-    * by the BPE and WordPiece trainers (one rule per round: merge when
-    * the stack top is `a` and the incoming symbol is `b`, pushing
-    * `merged`) — a codegen'd `aggregate` lambda, no UDF. Factored so the
-    * two trainers cannot drift in application semantics.
+  /** Most distinct pre-tokens a trainer holds in driver memory: above it
+    * training fails with an error naming the bound, not a driver OOM.
     */
-  private def mergeFoldSql(a: String, b: String, merged: String): String = {
-    val sq = (s: String) => s.replace("\\", "\\\\").replace("'", "\\'")
-    s"""aggregate(transform(syms, s -> array(s)),
-       |  cast(array() as array<string>),
-       |  (acc, x) -> CASE WHEN size(acc) > 0
-       |      AND element_at(acc, -1) = '${sq(a)}' AND x[0] = '${sq(b)}'
-       |    THEN concat(slice(acc, 1, size(acc) - 1), array('${sq(merged)}'))
-       |    ELSE concat(acc, x) END)""".stripMargin
+  private val MaxTrainerWords = 1 << 20
+
+  /** Symbol order of the trainers' tie-breaks: UTF-8 bytes, Spark's string
+    * sort order — NOT `String.compareTo`'s UTF-16 order above the BMP.
+    */
+  private implicit val utf8Order: Ordering[UTF8String] = (x, y) => x.compareTo(y)
+
+  /** The BPE trainer over a (syms, n) word table ([[bpeMerges]]' contract;
+    * both symbolizations end here): (merge_round, sym_a, sym_b, pair_count).
+    */
+  private[graft] def trainBpe(wc: DataFrame, rounds: Int, requireFull: Boolean,
+      maxWords: Int = MaxTrainerWords): Seq[(Long, String, String, Long)] =
+    trainMerges(wc, rounds, requireFull, maxWords, "BPE") { (r, pairs, _) =>
+      val ((a, b), cnt) = pairs.minBy { case ((a, b), cnt) => (-cnt, a, b) }
+      (a, b, UTF8String.concat(a, b), (r.toLong, a.toString, b.toString, cnt))
+    }
+
+  /** The merge-round loop both trainers share. The (syms, n) table is
+    * collected under the `maxWords` bound (limit maxWords + 1 detects an
+    * oversized table without collecting it whole). Each round `pick`
+    * chooses the merge (a, b) → ab from the exact pair counts (symbol
+    * counts on demand), and the encoders' fold step applies it to every
+    * word. requireFull: callers whose oracle unrolls EXACTLY `rounds` CTE
+    * rounds (q156/q157) must fail loudly when the corpus runs out of pairs
+    * — the oracle's empty p_i CROSS JOIN would diverge silently.
+    */
+  private def trainMerges[M](wc: DataFrame, rounds: Int, requireFull: Boolean,
+      maxWords: Int, trainer: String)(
+      pick: (Int, mutable.Map[(UTF8String, UTF8String), Long],
+        () => mutable.Map[UTF8String, Long]) => (UTF8String, UTF8String, UTF8String, M))
+      : Seq[M] = {
+    require(rounds >= 1, s"rounds must be >= 1, got $rounds")
+    val (syms, ns) = {
+      val rows = wc.select(col("syms"), col("n")).limit(maxWords + 1).collect()
+      require(rows.length <= maxWords,
+        s"$trainer trainer word table exceeds the in-memory bound of " +
+          s"$maxWords distinct words (MaxTrainerWords)")
+      val interned = mutable.HashMap.empty[String, UTF8String]
+      (rows.map(r => Option(r.getSeq[String](0)).getOrElse(Nil)
+        .map(s => interned.getOrElseUpdate(s, UTF8String.fromString(s))).toArray),
+        rows.map(_.getLong(1)))
+    }
+    val lens = syms.map(_.length)
+    def counts[K](keys: Int => Iterator[K]): mutable.Map[K, Long] = {
+      val m = mutable.HashMap.empty[K, Long]
+      for (w <- syms.indices; k <- keys(w)) m(k) = m.getOrElse(k, 0L) + ns(w)
+      m
+    }
+    def pairCounts() = counts(w =>
+      Iterator.range(1, lens(w)).map(i => (syms(w)(i - 1), syms(w)(i))))
+    val learned = Vector.newBuilder[M]
+    var r = 1
+    var pairs = pairCounts()
+    while (r <= rounds && pairs.nonEmpty) {
+      val (a, b, ab, m) = pick(r, pairs, () => counts(w => syms(w).iterator.take(lens(w))))
+      for (w <- syms.indices)
+        lens(w) = graft.functions.NativeKernels.bpeMergeStep(syms(w), lens(w), a, b, ab)
+      learned += m
+      r += 1
+      if (r <= rounds) pairs = pairCounts()
+    }
+    val out = learned.result()
+    if (requireFull) require(out.size == rounds,
+      s"corpus exhausted after ${out.size} of $rounds $trainer merges; " +
+        "the unrolled oracle CTE chain assumes exactly `rounds` rounds")
+    out
   }
 
   /** The WordPiece word table: (w, syms, n) with BERT's symbolization —
@@ -505,16 +524,16 @@ object TextOps {
     * correctly-rounded double division of exact-in-double integers
     * (counts < 2⁵³, products < 2⁵³ on any real vocabulary since both
     * factors are symbol counts of a bounded table) — identical in both
-    * engines; ties break (sym_a, sym_b) lexicographic, the same rule
-    * replayed by the oracle. Application is [[mergeFoldSql]] — the BPE
-    * trainer's own fold, shared verbatim.
+    * engines; ties break (sym_a, sym_b) compared as UTF-8 bytes, the same
+    * rule replayed by the oracle. Application is the BPE trainer's own
+    * fold step, shared verbatim.
     *
-    * 100 TB design: per round TWO vocab-sized aggregates (adjacent-pair
-    * counts and symbol counts) + two BROADCAST joins of the bounded
-    * symbol-count table + one TakeOrdered argmax row to the driver (a
-    * scalar decision, the kCoreExact discipline) + one narrow fold;
-    * localCheckpoint truncates per-round lineage. The corpus is never
-    * rescanned after the word-table pass.
+    * 100 TB design: ONE distributed aggregate reduces the corpus to the
+    * word table, which is collected to the driver; every round (pair and
+    * symbol counts, argmax, fold) then runs in driver memory bounded by
+    * the number of distinct words, so the job count is fixed whatever
+    * `rounds` is and the corpus is never rescanned. A table above
+    * [[MaxTrainerWords]] fails with an error naming the bound.
     *
     * Output: (merge_round, sym_a, sym_b, pair_count, cnt_a, cnt_b) — the
     * merge table plus the exact integers the score derives from, so the
@@ -524,43 +543,16 @@ object TextOps {
       requireFull: Boolean = false): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    require(rounds >= 1, s"rounds must be >= 1, got $rounds")
-    var wc = wordPieceWordTable(docs, text).localCheckpoint()
-    val merges = Seq.newBuilder[(Long, String, String, Long, Long, Long)]
-    var r = 1
-    var exhausted = false
-    while (r <= rounds && !exhausted) {
-      val sym = wc.select(explode(col("syms")).as("s"), col("n"))
-        .groupBy(col("s")).agg(sum(col("n")).as("c"))
-      val best = wc.filter(size(col("syms")) >= 2)
-        .select(col("n"), explode(expr(
-          "transform(sequence(1, size(syms) - 1), i -> struct(syms[i - 1] as a, syms[i] as b))"))
-          .as("p"))
-        .groupBy(col("p.a").as("a"), col("p.b").as("b"))
-        .agg(sum(col("n")).as("cnt"))
-        .join(broadcast(sym.select(col("s").as("a"), col("c").as("ca"))), Seq("a"))
-        .join(broadcast(sym.select(col("s").as("b"), col("c").as("cb"))), Seq("b"))
-        .withColumn("score", col("cnt").cast("double") /
-          (col("ca").cast("double") * col("cb").cast("double")))
-        .orderBy(desc("score"), asc("a"), asc("b"))
-        .select("a", "b", "cnt", "ca", "cb")
-        .head(1)
-      if (best.isEmpty) exhausted = true
-      else {
-        val row = best(0)
-        val (a, b) = (row.getString(0), row.getString(1))
-        merges += ((r.toLong, a, b, row.getLong(2), row.getLong(3), row.getLong(4)))
-        wc = wc.select(col("w"),
-          expr(mergeFoldSql(a, b, wpMergedSym(a, b))).as("syms"), col("n"))
-          .localCheckpoint()
-        r += 1
+    import scala.math.Ordering.Double.TotalOrdering
+    trainMerges(wordPieceWordTable(docs, text), rounds, requireFull,
+        MaxTrainerWords, "WordPiece") { (r, pairs, symbolCounts) =>
+      val c = symbolCounts()
+      val ((a, b), cnt) = pairs.minBy { case ((a, b), cnt) =>
+        (-(cnt.toDouble / (c(a).toDouble * c(b).toDouble)), a, b)
       }
-    }
-    val learned = merges.result()
-    if (requireFull) require(learned.size == rounds,
-      s"corpus exhausted after ${learned.size} of $rounds WordPiece merges; " +
-        "the unrolled oracle CTE chain assumes exactly `rounds` rounds")
-    learned.toDF("merge_round", "sym_a", "sym_b", "pair_count", "cnt_a", "cnt_b")
+      (a, b, UTF8String.fromString(wpMergedSym(a.toString, b.toString)),
+        (r.toLong, a.toString, b.toString, cnt, c(a), c(b)))
+    }.toDF("merge_round", "sym_a", "sym_b", "pair_count", "cnt_a", "cnt_b")
   }
 
   /** The serving vocabulary a trained WordPiece tokenizer ships: the word

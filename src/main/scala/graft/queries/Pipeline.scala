@@ -92,9 +92,9 @@ object Pipeline {
 
   /** The persisted one-regex-pass pre-token frame (source, doc_id, ws) —
     * built ONCE per query and shared between the in-query BPE trainer
-    * ([[TextOps.bpeMergesByteLevelFromPretokens]]) and the packing
-    * tokenize ([[byteTokDocsFromWords]]); round-16 left the trainer on
-    * its own second full-corpus regex pass.
+    * ([[TextOps.bpeMergesByteLevelFromPretokens]], whose only jobs are
+    * the word-count aggregate it collects; its merge rounds run in driver
+    * memory) and the packing tokenize ([[byteTokDocsFromWords]]).
     */
   private def byteTokWords(docs: DataFrame): DataFrame =
     docs.select(col("source"), col("doc_id"),
@@ -5646,8 +5646,6 @@ object Pipeline {
     val merges = TextOps.bpeMergesByteLevelFromPretokens(
       tokWords.select(explode(col("ws")).as("w")),
       BpeRounds, requireFull = true)
-      .orderBy(col("merge_round"))
-      .collect().map(r => (r.getString(1), r.getString(2))).toSeq
     val vocab = TextOps.bpeVocabIdsByteLevel(merges)
     val dt = byteTokDocsFromWords(tokWords, merges)
     graft.operators.Curation.packShardIdsSep(dt, col("source"),
@@ -5766,8 +5764,6 @@ object Pipeline {
     val merges = TextOps.bpeMergesByteLevelFromPretokens(
       tokWords.select(explode(col("ws")).as("w")),
       BpeRounds, requireFull = true)
-      .orderBy(col("merge_round"))
-      .collect().map(r => (r.getString(1), r.getString(2))).toSeq
     val dt = byteTokDocsFromWords(tokWords, merges)
     graft.operators.Curation.packShards(dt, col("source"), col("doc_id"),
       col("toks"), PackBudget, partitions = 32)
@@ -5856,8 +5852,6 @@ object Pipeline {
     val merges = TextOps.bpeMergesByteLevelFromPretokens(
       tokWords.select(explode(col("ws")).as("w")),
       BpeRounds, requireFull = true)
-      .orderBy(col("merge_round"))
-      .collect().map(r => (r.getString(1), r.getString(2))).toSeq
     val vocab = TextOps.bpeVocabIdsByteLevel(merges)
     val dt = byteTokDocsFromWords(tokWords, merges)
     graft.operators.Curation.packShardIds(dt, col("source"), col("doc_id"),
@@ -6009,8 +6003,6 @@ object Pipeline {
     val merges = TextOps.bpeMergesByteLevelFromPretokens(
       tokWords.select(explode(col("ws")).as("w")),
       BpeRounds, requireFull = true)
-      .orderBy(col("merge_round"))
-      .collect().map(r => (r.getString(1), r.getString(2))).toSeq
     val vocab = TextOps.bpeVocabIdsByteLevel(merges)
     val dt = byteTokDocsFromWords(tokWords, merges)
     graft.operators.Curation.packShardIdsSep(dt, col("source"),
@@ -6398,8 +6390,6 @@ object Pipeline {
     val merges = TextOps.bpeMergesByteLevelFromPretokens(
       words.select(explode(col("__ws")).as("w")), BpeRounds,
       requireFull = true)
-      .orderBy(col("merge_round"))
-      .collect().map(r => (r.getString(1), r.getString(2))).toSeq
     TextOps.bpeRoundTripByteLevelFromWords(words, merges)
       .select(col("id").as("doc_id"), col("n_pretokens"),
         col("n_mismatch"), col("rt_md5"))
@@ -6834,8 +6824,6 @@ object Pipeline {
     val merges = TextOps.bpeMergesByteLevelFromPretokens(
       words5.select(explode(col("__ws")).as("w")), BpeRounds,
       requireFull = true)
-      .orderBy(col("merge_round"))
-      .collect().map(r => (r.getString(1), r.getString(2))).toSeq
     val toks = TextOps.bpeTokenCountsByteLevelFromWords(words5, merges)
       .select(col("id").as("doc_id"), col("n_tokens"))
     graft.operators.Curation.packBinsScalable(
@@ -7284,8 +7272,8 @@ object Pipeline {
 
   // ===== q156 BPE vocabulary induction ===================================
   // Learn a tokenizer from the corpus (TextOps.bpeMerges): one
-  // distributed word-frequency pass, then `BpeRounds` merge rounds on the
-  // vocab-sized table — each round picks the most frequent adjacent
+  // distributed word-frequency pass, then `BpeRounds` merge rounds in
+  // driver memory on the vocab-sized table — each round picks the most frequent adjacent
   // symbol pair (exact integer counts, lexicographic tie-break) and
   // applies it with the exact greedy left-to-right stack fold. The output
   // is the merge table a tokenizer ships. The oracle unrolls the rounds

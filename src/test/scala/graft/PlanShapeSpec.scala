@@ -587,31 +587,81 @@ class PlanShapeSpec extends AnyFunSuite {
     } finally CacheScope.drain()
   }
 
-  test("IVF index build and ingest shuffle only centroid-sized data, never the corpus") {
+  test("IVF index build and ingest: the corpus crosses only each write's one rebalance") {
     // the build's scale contract: scan → narrow argmax fold over the
-    // broadcast centroid array → partitioned write. The ONLY exchange is
-    // the nCells-sized centroid-array aggregation (collect_list partials,
-    // ~9 KB here); the corpus itself never shuffles. Bound the total at
-    // 32 KB — corpus embeddings at this SF are ~128 KB, so the old
-    // bestCells-based assignment (one partially-aggregated row per
-    // corpus vector through its groupBy, embeddings included) trips this
-    // by 4× per build.
+    // broadcast centroid array → ONE rebalance on `cell` → partitioned
+    // write. The rebalance moves each vector once so every cell directory
+    // gets few files; no join or aggregate exchange may carry the
+    // embeddings. The old bestCells assignment (a groupBy per corpus
+    // vector, first(embedding) in its buffer) is caught by the type
+    // check: the partial-aggregate buffer is named `first`, typed like
+    // `embedding`.
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.command.DataWritingCommandExec
+    import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+    import org.apache.spark.sql.execution.exchange.{REBALANCE_PARTITIONS_BY_COL, ShuffleExchangeExec}
+    import org.apache.spark.sql.util.QueryExecutionListener
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
       .select(col("vec_id"), col("embedding"))
+    val vecType = emb.schema("embedding").dataType
     val d1 = Files.createTempDirectory("ivf-noshuffle").toString
     val d2 = Files.createTempDirectory("ivf-noshuffle-v").toString
+    val qes = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        qes.add(qe)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
     try {
-      val (_, snap) = Counters.track(spark) {
-        graft.operators.Similarity.writeIvfIndex(emb, d1, 16)
-        graft.operators.Similarity.writeIvfIndexVersioned(
-          emb.filter(col("vec_id") % 2 === 0), d2, 16)
-        graft.operators.Similarity.ingestIntoIvfIndex(
-          emb.filter(col("vec_id") % 2 === 1), d2, 1L)
+      graft.operators.Similarity.writeIvfIndex(emb, d1, 16)
+      graft.operators.Similarity.writeIvfIndexVersioned(
+        emb.filter(col("vec_id") % 2 === 0), d2, 16)
+      graft.operators.Similarity.ingestIntoIvfIndex(
+        emb.filter(col("vec_id") % 2 === 1), d2, 1L)
+      org.apache.spark.graftaccess.ListenerBusAccess.drain(spark.sparkContext)
+    } finally {
+      spark.listenerManager.unregister(listener)
+      CacheScope.drain()
+    }
+    val aqe = new AdaptiveSparkPlanHelper {}
+    val plans = qes.asScala.toSeq.map(_.executedPlan)
+    def writesLists(p: org.apache.spark.sql.execution.SparkPlan) =
+      aqe.collect(p) { case w: DataWritingCommandExec => w.cmd }.exists {
+        case c: InsertIntoHadoopFsRelationCommand =>
+          c.outputPath.toString.contains("/lists")
+        case _ => false
       }
-      assert(snap.tasks > 0)
-      assert(snap.shuffleWriteBytes < 32 * 1024,
-        s"index build shuffled ${snap.shuffleWriteBytes} bytes — corpus-sized, not centroid-sized")
-    } finally CacheScope.drain()
+    assert(plans.count(writesLists) == 3, plans.mkString("\n"))
+    for (p <- plans) {
+      val (rebalance, other) = aqe.collect(p) { case s: ShuffleExchangeExec => s }
+        .partition(_.shuffleOrigin == REBALANCE_PARTITIONS_BY_COL)
+      assert(other.forall(!_.child.output.exists(a =>
+        a.name == "embedding" || a.dataType == vecType)),
+        s"a join or aggregate exchange carries the corpus vectors:\n$p")
+      assert(rebalance.size == (if (writesLists(p)) 1 else 0), p)
+    }
+    val cellDirs = Seq(s"$d1/lists", s"$d2/lists/batch=0", s"$d2/lists/batch=1")
+      .flatMap(d => new java.io.File(d).listFiles().filter(_.getName.startsWith("cell=")))
+    assert(cellDirs.nonEmpty)
+    for (c <- cellDirs) {
+      val files = c.listFiles().count(_.getName.endsWith(".parquet"))
+      assert(files <= 2, s"$c holds $files files")
+    }
+  }
+
+  test("byte-BPE trainer: a fixed job count per call, whatever the round count") {
+    // one word-count aggregate collected to the driver; the merge rounds
+    // run in driver memory, so 8 rounds cost the jobs 2 rounds do
+    val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    def jobs(rounds: Int): Long = Counters.track(spark) {
+      graft.operators.TextOps.bpeMergesByteLevel(docs, col("text"), rounds)
+    }._2.jobs
+    val (j2, j8) = (jobs(2), jobs(8))
+    assert(j2 == j8, s"rounds = 2 ran $j2 jobs, rounds = 8 ran $j8")
+    assert(j8 <= 3, s"the trainer ran $j8 jobs")
   }
 
   test("q44 IVF top-k: no exchange ever carries the corpus embeddings") {

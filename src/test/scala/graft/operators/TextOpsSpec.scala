@@ -235,6 +235,32 @@ class TextOpsSpec extends AnyFunSuite {
     assert(m == Seq((1L, "x", "y", 5L)))
   }
 
+  test("trainers break count ties on UTF-8 byte order, not UTF-16 order") {
+    // U+FF61 is EF BD A1 in UTF-8 and U+1F600 is F0 9F 98 80, so Spark's
+    // string order puts U+FF61 first; String.compareTo sees the emoji's
+    // high surrogate D83D < FF61 and would pick the emoji pair
+    val (half, emoji) = ("｡", new String(Character.toChars(0x1F600)))
+    val docs = Seq(s"${emoji}a ${half}a").toDF("text")
+    val bpe = TextOps.bpeMerges(docs, $"text", 2)
+      .as[(Long, String, String, Long)].collect().sortBy(_._1).toSeq
+    assert(bpe == Seq((1L, half, "a", 1L), (2L, emoji, "a", 1L)))
+    // WordPiece: both pairs score 1 / (1 · 2)
+    val wp = TextOps.wordPieceMerges(docs, $"text", 1)
+      .as[(Long, String, String, Long, Long, Long)].collect().toSeq
+    assert(wp == Seq((1L, half, "##a", 1L, 1L, 2L)))
+  }
+
+  test("trainer word table above the in-memory bound fails naming the bound") {
+    val wc = Seq((Seq("a", "b"), 2L), (Seq("b", "c"), 1L), (Seq("c", "d"), 1L))
+      .toDF("syms", "n")
+    assert(TextOps.trainBpe(wc, 1, requireFull = false, maxWords = 3) ==
+      Seq((1L, "a", "b", 2L)))
+    val e = intercept[IllegalArgumentException](
+      TextOps.trainBpe(wc, 1, requireFull = false, maxWords = 2))
+    assert(e.getMessage.contains("in-memory bound of 2 distinct words"),
+      e.getMessage)
+  }
+
   test("lmPerplexityFilter: exact smoothing/pruning against an independent reimplementation") {
     def r4(x: Double) = BigDecimal(x).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
     def toks(s: String) = s.toLowerCase.split("""\s+""").filter(_.nonEmpty).toSeq
