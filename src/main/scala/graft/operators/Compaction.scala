@@ -1,7 +1,9 @@
 package graft.operators
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.StructType
 
 /** Small-files compaction — the table-maintenance operator every long-lived
   * 100 TB dataset needs: streaming sinks, per-batch ingests and
@@ -14,24 +16,88 @@ import org.apache.spark.sql.{Column, SparkSession}
   * tez-mapreduce/src/main/java/org/apache/tez/mapreduce/grouper/TezSplitGrouper.java:206);
   * compaction is the write-side fix that makes every later read cheap
   * instead of re-grouping per query.
+  *
+  * It is also the versioned store every stored index family commits
+  * through: IVF (raw, SQ8, PQ, residual PQ), BM25, the dedup corpus
+  * index, aHash fingerprints, CC labels and CountMin sketches. A family
+  * declares its [[View]]s and the per-view frames; the layout and the
+  * commit steps live here, once.
+  *
+  * Layout: a store at `dir` holds its views at `<view>/batch=<id>/`
+  * (epoch 0) or `<view>_e<N>/batch=<id>/` (epoch N), plus an `EPOCH`
+  * pointer file naming the live epoch; no pointer means epoch 0. Frozen
+  * artifacts (centroids, codebooks, meta, params) sit beside the views,
+  * outside the epoch scheme.
+  *
+  * Reads ([[snapshot]]) resolve the pointer once and read every view of
+  * that epoch, so a reader sees one complete epoch, never a mix.
+  *
+  * Build and ingest ([[build]], [[ingest]]) overwrite one `batch=<id>`
+  * directory per view under the live epoch; the build is batch 0,
+  * ingests are batches ≥ 1. Overwrite, not append, is what makes an
+  * ingest replay-safe: a crash-replayed batch rewrites the same
+  * directories and the store converges to identical contents.
+  *
+  * Rewrite ([[rewrite]], behind both compaction and deletion) commits in
+  * this order: read every view of the live epoch `e`; write each view's
+  * new frame as ONE `batch=0` under epoch `e + 1`; atomically swap the
+  * pointer to `e + 1` ([[advanceEpoch]]); delete epoch `e`'s
+  * directories. This is the Iceberg-style snapshot-pointer commit: a
+  * crash before the swap leaves epoch `e` live and untouched. Readers in
+  * flight keep their resolved epoch until the delete (a production
+  * deployment defers it by a read TTL).
+  *
+  * Replay horizon: a rewrite folds batch ids away, so it must run beyond
+  * the producer's replay horizon, i.e. after its checkpoint commits. A
+  * batch replayed after being folded would re-land beside its own rows,
+  * and would resurrect rows a deletion erased. The streaming sinks here
+  * commit their checkpoint with the batch, so every batch older than the
+  * last commit is sealed. Consult [[compactIfNeeded]] from a maintenance
+  * tick after that commit, never inside the uncommitted batch.
+  *
+  * Refresh: every commit ends with `refreshByPath(dir)`. The writes are
+  * external to any DataFrame this session may already have listed, and
+  * Spark's shared file-status cache would otherwise serve the pre-write
+  * listing to a later read of the same path.
+  *
+  * Empty views: a partitioned write of zero rows emits no file, so a
+  * later read would fail with "unable to infer schema" (a deletion of
+  * every id, or the compaction after it). The write is checked AFTER it
+  * runs by listing its output, with no Spark job; a file-less result
+  * lands one schema-carrying empty file under the partition-shaped leaf
+  * `<partCol>=0/`. The leaf keeps the directory depth and the int-typed
+  * partition column of a real write, so a later ingest's
+  * `batch=N/<partCol>=…/` beside it still passes partition discovery.
   */
 object Compaction {
 
-  // ===== epoch pointer for batch-versioned index layouts ==================
-  // The replay-safe index layouts (Similarity.writeIvfIndexVersioned,
-  // Retrieval.writeBm25IndexVersioned) grow one `batch=<id>` directory per
-  // ingest forever; at production cadence thousands of batch dirs make
-  // every probe's file listing the bottleneck (measured ~2× probe file-open
-  // overhead with just TWO batches at sf0.1 — BENCH_LOCAL.md round 8).
-  // Compaction rewrites all batches into ONE consolidated batch under the
-  // NEXT epoch directory and then atomically swaps the `EPOCH` pointer
-  // file — the Iceberg-style snapshot-pointer commit: readers resolve the
-  // pointer first, so they see either the old complete epoch or the new
-  // complete epoch, never a half-written mix. Epoch 0 is the unmarked
-  // legacy layout (`<dir>/<name>`), so pre-compaction indexes read
-  // unchanged.
+  // ===== versioned store ==================================================
 
-  /** Current epoch of a versioned index: the `EPOCH` pointer's value, 0
+  /** One view of a versioned store and the family's physical write for it.
+    *
+    * @param partCol       partition column of the view's directories
+    * @param ingestLayout  applied to a build or ingest batch before its write
+    * @param rewriteLayout applied to a compaction or deletion frame before
+    *                      its write
+    */
+  final case class View(name: String, partCol: Option[String] = None,
+      ingestLayout: DataFrame => DataFrame = identity,
+      rewriteLayout: DataFrame => DataFrame = identity)
+
+  object View {
+    /** A view partitioned by `partCol`. Batches rebalance on it before the
+      * write: a narrow partitioned write opens one file per (upstream
+      * partition × partition value), which every probe pays as listing and
+      * open cost, and the AQE rebalance packs each directory to
+      * advisory-sized files. Rewrites repartition on it: one task, so one
+      * file per partition directory.
+      */
+    def partitioned(name: String, partCol: String): View =
+      View(name, Some(partCol), _.hint("rebalance", col(partCol)),
+        _.repartition(col(partCol)))
+  }
+
+  /** Current epoch of a versioned store: the `EPOCH` pointer's value, 0
     * when absent.
     */
   def currentEpoch(spark: SparkSession, dir: String): Int = {
@@ -46,17 +112,13 @@ object Compaction {
     }
   }
 
-  /** Epoch-scoped path of a layout component (`lists`, `stats`):
-    * epoch 0 = the unmarked original layout.
-    */
+  /** Epoch-scoped path of a view: epoch 0 is the unmarked `<dir>/<name>`. */
   def epochPath(dir: String, name: String, epoch: Int): String =
     if (epoch == 0) s"$dir/$name" else s"$dir/${name}_e$epoch"
 
   /** Atomically advance the epoch pointer: write `EPOCH.tmp`, rename over
     * `EPOCH` (atomic on posix and HDFS; an object-store deployment swaps a
-    * metastore pointer instead). Readers in flight keep their resolved
-    * epoch; the caller deletes the old epoch's directories AFTER the swap
-    * (immediately here — a production deployment defers by a read-TTL).
+    * metastore pointer instead).
     */
   def advanceEpoch(spark: SparkSession, dir: String, epoch: Int): Unit = {
     val conf = spark.sparkContext.hadoopConfiguration
@@ -71,65 +133,141 @@ object Compaction {
       .rename(tmp, dst, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
   }
 
-  /** Number of sealed `batch=<id>` directories in the CURRENT epoch of a
-    * versioned index component — the signal the compact-when-needed
-    * helpers (compactIvfIndexIfNeeded and siblings) threshold on. Batch
-    * directories accrete one per ingest until file listing dominates
-    * probe cost; nothing previously decided WHEN to compact. The flat
-    * (unversioned) layout has no batch level and reports 0.
-    *
-    * Consult pattern for streaming ingest drivers: call the family's
-    * `compact*IfNeeded(spark, dir, maxBatches)` AFTER the producer's
-    * checkpoint has committed the batch (foreachBatch returns → commit),
-    * e.g. from a separate maintenance tick — never inside the uncommitted
-    * batch itself, or a crash-replay would re-land a batch compaction
-    * already folded away (the replay-horizon contract of
-    * [[Similarity.compactIvfIndex]]).
+  /** Epoch-resolved reader of a store's views: the pointer is read once,
+    * here, and every view comes from that epoch. Each view is read at most
+    * once per reader.
     */
-  def batchCount(spark: SparkSession, dir: String, name: String): Int = {
-    val p = new Path(epochPath(dir, name, currentEpoch(spark, dir)))
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) 0
-    else fs.listStatus(p)
-      .count(s => s.isDirectory && s.getPath.getName.startsWith("batch="))
+  def snapshot(spark: SparkSession, dir: String): String => DataFrame =
+    reader(spark, dir, currentEpoch(spark, dir))
+
+  private def reader(spark: SparkSession, dir: String,
+      epoch: Int): String => DataFrame = {
+    val seen = scala.collection.mutable.Map.empty[String, DataFrame]
+    name => seen.getOrElseUpdate(name,
+      spark.read.parquet(epochPath(dir, name, epoch)))
   }
 
-  /** Partitioned overwrite that stays READABLE when `df` is empty: a
-    * `partitionBy` write of zero rows emits no part files and no partition
-    * directories at all, so a later `spark.read.parquet` of the path fails
-    * with "unable to infer schema" — the delete-everything corner of the
-    * index-deletion ops. The empty frame writes one schema-carrying empty
-    * file (SPARK-23271) under a PARTITION-SHAPED leaf, `<partCol>=0/`,
-    * with the partition column dropped from the data — so partition
-    * discovery sees the SAME directory depth and the same (int-valued)
-    * partition column as a real partitioned write. A bare unpartitioned
-    * file here would poison the epoch directory: a later `ingestInto*`
-    * lands `batch=N/<partCol>=.../` beside it and every subsequent read
-    * fails partition discovery with "Conflicting directory structures".
-    * Downstream reads see zero rows either way; equi-joins on the
-    * partition column simply match nothing.
-    *
-    * The partition value must parse as the column's real type — every
-    * caller partitions on an int column (cell/bucket/band), for which
-    * `0` is a legitimate value of the right type.
-    *
-    * The emptiness probe is a limit-1 action — it short-circuits at the
-    * first surviving row, so the non-empty (i.e. every real) case pays a
-    * near-zero peek, not a full pass.
+  /** Whether the live epoch holds view `name` (for a view added to a
+    * family after some of its stores were written).
     */
-  def writePartitioned(df: org.apache.spark.sql.DataFrame, partCol: String,
-      path: String): Unit =
-    if (df.isEmpty) {
-      // keep the overwrite contract symmetric: a partitionBy overwrite of
-      // zero rows touches no existing <partCol>=X directories, so if a
-      // non-empty write previously landed here its other partitions would
-      // survive and a later read would return stale rows — clear the whole
-      // path first, then land the schema-carrying empty leaf
-      deleteDir(df.sparkSession, path)
-      df.drop(partCol).write.mode("overwrite").parquet(s"$path/$partCol=0")
-    } else df.write.mode("overwrite").partitionBy(partCol).parquet(path)
+  def hasView(spark: SparkSession, dir: String, name: String): Boolean = {
+    val p = new Path(epochPath(dir, name, currentEpoch(spark, dir)))
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
+  }
 
-  /** Delete a directory tree (post-swap cleanup of a superseded epoch). */
+  /** Ids of the `batch=<id>` directories of view `name` in the live epoch. */
+  private[graft] def batchIds(spark: SparkSession, dir: String,
+      name: String): Seq[Long] = {
+    val p = new Path(epochPath(dir, name, currentEpoch(spark, dir)))
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(p)) Nil
+    else fs.listStatus(p).toSeq
+      .filter(s => s.isDirectory && s.getPath.getName.startsWith("batch="))
+      .map(_.getPath.getName.stripPrefix("batch=").toLong)
+  }
+
+  /** Number of sealed `batch=<id>` directories of view `name` in the live
+    * epoch: the signal [[compactIfNeeded]] thresholds on. Batch
+    * directories accrete one per ingest until file listing dominates probe
+    * cost (about 2× probe file-open overhead with just two batches at
+    * sf0.1). A flat layout has no batch level and reports 0.
+    */
+  def batchCount(spark: SparkSession, dir: String, name: String): Int =
+    batchIds(spark, dir, name).size
+
+  /** Write batch `batchId` of every given view under the live epoch, then
+    * refresh. [[build]] and [[ingest]] are the entry points; a stream whose
+    * first micro-batch is its build writes through here directly.
+    */
+  private[graft] def writeBatch(spark: SparkSession, dir: String,
+      batchId: Long, views: (View, DataFrame)*): Unit = {
+    val e = currentEpoch(spark, dir)
+    views.foreach { case (v, df) =>
+      write(spark, v, v.ingestLayout(df),
+        s"${epochPath(dir, v.name, e)}/batch=$batchId")
+    }
+    spark.catalog.refreshByPath(dir)
+  }
+
+  /** Build a store: batch 0 of every view. */
+  def build(spark: SparkSession, dir: String, views: (View, DataFrame)*): Unit =
+    writeBatch(spark, dir, 0L, views: _*)
+
+  /** Replay-safe ingest: batch `batchId` of every given view overwrites its
+    * own directory under the live epoch.
+    */
+  def ingest(spark: SparkSession, dir: String, batchId: Long,
+      views: (View, DataFrame)*): Unit = {
+    require(batchId >= 1, s"batch 0 is the build (got $batchId)")
+    writeBatch(spark, dir, batchId, views: _*)
+  }
+
+  /** The one rewrite behind compaction and deletion: `next` receives the
+    * live epoch's reader and returns each view's new frame, in `views`
+    * order; the `batch` column is folded away and the frames commit as the
+    * next epoch (the commit order in the object doc).
+    *
+    * @return the new epoch number
+    */
+  def rewrite(spark: SparkSession, dir: String, views: View*)(
+      next: (String => DataFrame) => Seq[DataFrame]): Int = {
+    val e = currentEpoch(spark, dir)
+    val frames = next(reader(spark, dir, e))
+    require(frames.size == views.size,
+      s"${frames.size} frames for ${views.size} views")
+    views.zip(frames).foreach { case (v, df) =>
+      write(spark, v, v.rewriteLayout(df.drop("batch")),
+        s"${epochPath(dir, v.name, e + 1)}/batch=0")
+    }
+    advanceEpoch(spark, dir, e + 1)
+    views.foreach(v => deleteDir(spark, epochPath(dir, v.name, e)))
+    spark.catalog.refreshByPath(dir)
+    e + 1
+  }
+
+  /** Compaction: every batch of every view folds into one batch of the
+    * next epoch with its rows unchanged, so probes are identical before
+    * and after; only the file layout changes.
+    */
+  def compact(spark: SparkSession, dir: String, views: View*): Int =
+    rewrite(spark, dir, views: _*)(cur => views.map(v => cur(v.name)))
+
+  /** Deletion: the compaction rewrite with every view anti-joined to `ids`
+    * on `key`. An anti-join rewrite, not a tombstone mask: the erasure
+    * obligation is on the stored bytes. Absent ids are ignored, so a
+    * re-run is a no-op rewrite. `ids` broadcasts when request-sized and
+    * hash-joins when not.
+    */
+  def delete(spark: SparkSession, dir: String, key: String, ids: DataFrame,
+      views: View*): Int = {
+    val del = ids.select(col(key))
+    rewrite(spark, dir, views: _*)(cur =>
+      views.map(v => cur(v.name).join(del, Seq(key), "left_anti")))
+  }
+
+  /** Run `compact` only when view `name` holds more than `maxBatches`
+    * sealed batch directories.
+    *
+    * @return the new epoch, or None when under threshold (no-op)
+    */
+  def compactIfNeeded(spark: SparkSession, dir: String, name: String,
+      maxBatches: Int)(compact: => Int): Option[Int] =
+    if (batchCount(spark, dir, name) > maxBatches) Some(compact) else None
+
+  private def write(spark: SparkSession, v: View, df: DataFrame,
+      path: String): Unit = v.partCol match {
+    case None => df.write.mode("overwrite").parquet(path)
+    case Some(p) =>
+      df.write.mode("overwrite").partitionBy(p).parquet(path)
+      // the empty-view leaf (see the object doc); an empty RDD writes
+      // one schema-carrying file without re-running df's lineage
+      if (dataFileCount(spark, path) == 0)
+        spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
+            StructType(df.schema.filterNot(_.name == p)))
+          .write.mode("overwrite").parquet(s"$path/$p=0")
+  }
+
+  /** Delete a directory tree. */
   def deleteDir(spark: SparkSession, dir: String): Unit = {
     val p = new Path(dir)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -137,20 +275,21 @@ object Compaction {
   }
 
   /** Number of data files under `dir` (the probe-listing cost compaction
-    * exists to cut; ignores _SUCCESS/_metadata and the EPOCH pointer).
+    * exists to cut; ignores hidden `_`/`.` entries and the EPOCH pointer).
+    * Walks plain `listStatus` rather than `listFiles`: a located listing
+    * of the local file system forks a shell per file to read its
+    * permissions, which made every store write measurably slower.
     */
   def dataFileCount(spark: SparkSession, dir: String): Int = {
     val p = new Path(dir)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) return 0
-    val it = fs.listFiles(p, true)
-    var n = 0
-    while (it.hasNext) {
-      val f = it.next()
-      val nm = f.getPath.getName
-      if (!nm.startsWith("_") && !nm.startsWith("EPOCH")) n += 1
-    }
-    n
+    def count(d: Path): Int = fs.listStatus(d).iterator.map { s =>
+      val nm = s.getPath.getName
+      if (nm.startsWith("_") || nm.startsWith(".") || nm.startsWith("EPOCH")) 0
+      else if (s.isDirectory) count(s.getPath)
+      else 1
+    }.sum
+    if (fs.exists(p)) count(p) else 0
   }
 
   /** Total bytes of data files under `dir` (ignores _SUCCESS/_metadata). */

@@ -461,21 +461,19 @@ object Dedup {
   /** The three derived views of a corpus that [[dedupAgainst]] actually
     * joins against — exact-text hashes, LSH band keys, shingle arrays —
     * written to parquet once. At 100 TB this is the production shape: the
-    * index is built (or incrementally appended) when documents are
-    * ingested, and each new batch's dedup cost is then proportional to
-    * the BATCH, never the corpus. Band keys are written partitioned by
-    * band so a probe scans only colliding bands.
+    * index is built (or incrementally ingested, in the versioned layout)
+    * when documents arrive, and each new batch's dedup cost is then
+    * proportional to the BATCH, never the corpus. Band keys are written
+    * partitioned by band so a probe scans only colliding bands.
     */
   def writeCorpusIndex(docs: DataFrame, dir: String,
       n: Int = 3, numHashes: Int = 64, bands: Int = 16): Unit = {
     docs.select(md5(col("text")).as("h"))
       .write.mode("overwrite").parquet(s"$dir/hashes")
     bandKeys(lshSignatures(docs, n, numHashes), numHashes, bands)
-      // cluster by band before the partitioned write: a narrow write opens
-      // one file per (upstream partition × band) — 512 files at sf0.01 —
-      // and every probe pays that listing/open cost; the AQE rebalance
-      // packs each band dir to advisory-sized files. The shuffled rows are
-      // (band, key, id) band keys — index metadata, never the corpus text.
+      // band-packed files (see Compaction.View.partitioned). The shuffled
+      // rows are (band, key, id) band keys — index metadata, never the
+      // corpus text.
       .hint("rebalance", col("band"))
       .write.mode("overwrite").partitionBy("band").parquet(s"$dir/bands")
     shingleArrays(docs, n)
@@ -483,65 +481,40 @@ object Dedup {
     docs.sparkSession.catalog.refreshByPath(dir)
   }
 
-  /** Incrementally extend a stored [[writeCorpusIndex]] with (already
-    * deduplicated) new documents — append-mode writes of the same three
-    * views, so ingestion grows the index by the batch instead of
-    * rebuilding it. Duplicate index entries from a replayed append are
-    * semantically harmless for MEMBERSHIP (repeated hashes/bands only
-    * produce repeated candidates, which the probe dedups) — but note a
-    * replayed producer that re-PROBES after re-appending would see its own
-    * entries; replay-safe ingestion needs the batch-versioned layout
-    * ([[graft.streaming.EventStreams.dedupIngest]] probes only strictly
-    * older batches and overwrites its own partition on replay).
+  /** Store views of the versioned corpus index (the `hashes` view is
+    * shared with the aHash store, whose rows differ but whose write does
+    * not).
     */
-  def appendToCorpusIndex(docs: DataFrame, dir: String,
-      n: Int = 3, numHashes: Int = 64, bands: Int = 16): Unit = {
-    // guard against the silent-loss corner shared by every flat append:
-    // after a compaction the live views move to <name>_e<N> (with a batch=
-    // level this flat layout lacks), so an append into the superseded
-    // epoch-0 paths would vanish from every probe
-    require(Compaction.currentEpoch(docs.sparkSession, dir) == 0,
-      s"$dir has been compacted (epoch > 0); use ingestIntoCorpusIndex " +
-        "with a fresh batch id instead of the flat append")
-    docs.select(md5(col("text")).as("h"))
-      .write.mode("append").parquet(s"$dir/hashes")
-    bandKeys(lshSignatures(docs, n, numHashes), numHashes, bands)
-      .hint("rebalance", col("band")) // band-packed files (see writeCorpusIndex)
-      .write.mode("append").partitionBy("band").parquet(s"$dir/bands")
-    shingleArrays(docs, n)
-      .write.mode("append").parquet(s"$dir/shingles")
-    // external append to a possibly-listed path — invalidate the shared
-    // file-status cache so same-session probes see the new files
-    docs.sparkSession.catalog.refreshByPath(dir)
-  }
+  private val Hashes = Compaction.View("hashes")
+  private val CorpusBands = Compaction.View.partitioned("bands", "band")
+  private val Shingles = Compaction.View("shingles")
+  private val Chunks = Compaction.View("chunks")
+
+  /** The versioned corpus index's views for one doc batch; the chunk view
+    * only when `chunks` is set.
+    */
+  private def corpusViews(docs: DataFrame, n: Int, numHashes: Int,
+      bands: Int, chunks: Option[(Int, Int)])
+      : Seq[(Compaction.View, DataFrame)] =
+    Seq(Hashes -> docs.select(col("id"), md5(col("text")).as("h")),
+      CorpusBands -> bandKeys(lshSignatures(docs, n, numHashes), numHashes, bands),
+      Shingles -> shingleArrays(docs, n)) ++
+      chunks.map { case (w, m) => Chunks -> cdcChunkView(docs, w, m) }
 
   /** Build the stored dedup index in the BATCH-VERSIONED layout — the
-    * replay-safe sibling of [[writeCorpusIndex]], completing for the dedup
-    * index the lifecycle the BM25/IVF/PQ families have: each view lives
-    * under `<view>/batch=<id>` (the build is batch 0), so an ingest batch
-    * OVERWRITES its own batch partitions and a crash-replayed producer
-    * converges to identical index contents instead of duplicating its
-    * entries. The versioned `hashes/` view carries the DOC ID beside the
-    * text hash — [[deleteFromCorpusIndex]] needs it to erase a document's
-    * hash row (the flat layout's id-less hashes cannot be deleted by id).
-    * Probes ([[dedupAgainstIndex]]) work unchanged: `batch` reads back as
-    * a partition column the probe simply doesn't select.
+    * replay-safe sibling of [[writeCorpusIndex]]: the four views are
+    * [[Compaction]] store views, with the build as batch 0. The versioned
+    * `hashes/` view carries the DOC ID beside the text hash —
+    * [[deleteFromCorpusIndex]] needs it to erase a document's hash row
+    * (the flat layout's id-less hashes cannot be deleted by id). Probes
+    * ([[dedupAgainstIndex]]) work unchanged: `batch` reads back as a
+    * partition column the probe simply doesn't select.
     */
   def writeCorpusIndexVersioned(docs: DataFrame, dir: String,
       n: Int = 3, numHashes: Int = 64, bands: Int = 16,
-      cdcWindow: Int = 3, cdcModulus: Int = 8): Unit = {
-    docs.select(col("id"), md5(col("text")).as("h"))
-      .write.mode("overwrite").parquet(s"$dir/hashes/batch=0")
-    bandKeys(lshSignatures(docs, n, numHashes), numHashes, bands)
-      .hint("rebalance", col("band")) // band-packed files (see writeCorpusIndex)
-      .write.mode("overwrite").partitionBy("band")
-      .parquet(s"$dir/bands/batch=0")
-    shingleArrays(docs, n)
-      .write.mode("overwrite").parquet(s"$dir/shingles/batch=0")
-    cdcChunkView(docs, cdcWindow, cdcModulus)
-      .write.mode("overwrite").parquet(s"$dir/chunks/batch=0")
-    docs.sparkSession.catalog.refreshByPath(dir)
-  }
+      cdcWindow: Int = 3, cdcModulus: Int = 8): Unit =
+    Compaction.build(docs.sparkSession, dir,
+      corpusViews(docs, n, numHashes, bands, Some((cdcWindow, cdcModulus))): _*)
 
   /** The (id, chunk_idx, chunk_md5) CDC-chunk view of a doc batch — the
     * fourth index view ([[cdcChunks]]'s content-anchored boundaries), so
@@ -556,151 +529,73 @@ object Dedup {
       .select(col("id"), col("chunk_idx"), col("chunk_md5"))
 
   /** Replay-safe incremental ingestion into a [[writeCorpusIndexVersioned]]
-    * index: the batch's three views OVERWRITE this batch's own partition
-    * directories (epoch-resolved, so ingestion keeps working after a
-    * compaction). Re-running the same (batch, batchId) — a streaming
-    * replay after a crash — rewrites the same files and leaves the index
-    * contents identical; per-ingest cost stays ∝ batch.
+    * index ([[Compaction.ingest]]); per-ingest cost stays ∝ batch. The
+    * chunk view is ingested only when the build wrote one (the fourth
+    * view is round-12+; older three-view stores keep ingesting three — no
+    * silent half-indexed view).
     */
   def ingestIntoCorpusIndex(docs: DataFrame, dir: String, batchId: Long,
       n: Int = 3, numHashes: Int = 64, bands: Int = 16,
       cdcWindow: Int = 3, cdcModulus: Int = 8): Unit = {
-    require(batchId >= 1, s"batch 0 is the build (got $batchId)")
     val spark = docs.sparkSession
-    val e = Compaction.currentEpoch(spark, dir)
-    docs.select(col("id"), md5(col("text")).as("h"))
-      .write.mode("overwrite")
-      .parquet(s"${Compaction.epochPath(dir, "hashes", e)}/batch=$batchId")
-    bandKeys(lshSignatures(docs, n, numHashes), numHashes, bands)
-      .hint("rebalance", col("band")) // band-packed files (see writeCorpusIndex)
-      .write.mode("overwrite").partitionBy("band")
-      .parquet(s"${Compaction.epochPath(dir, "bands", e)}/batch=$batchId")
-    shingleArrays(docs, n)
-      .write.mode("overwrite")
-      .parquet(s"${Compaction.epochPath(dir, "shingles", e)}/batch=$batchId")
-    // chunk-view parity: only when the build wrote one (pre-chunk layouts
-    // keep ingesting their three views — no silent half-indexed view)
-    if (hasChunkView(spark, dir))
-      cdcChunkView(docs, cdcWindow, cdcModulus)
-        .write.mode("overwrite")
-        .parquet(s"${Compaction.epochPath(dir, "chunks", e)}/batch=$batchId")
-    // external write to a path this session may already have listed:
-    // invalidate the shared file-status cache
-    spark.catalog.refreshByPath(dir)
+    val chunks =
+      if (Compaction.hasView(spark, dir, Chunks.name)) Some((cdcWindow, cdcModulus))
+      else None
+    Compaction.ingest(spark, dir, batchId,
+      corpusViews(docs, n, numHashes, bands, chunks): _*)
   }
 
-  /** Whether `dir` carries the CDC chunk view (the fourth view is
-    * round-12+; compaction/deletion/ingest stay compatible with stored
-    * three-view indexes by consulting this).
-    */
-  private def hasChunkView(spark: org.apache.spark.sql.SparkSession,
-      dir: String): Boolean = {
-    val e = Compaction.currentEpoch(spark, dir)
-    val p = new org.apache.hadoop.fs.Path(Compaction.epochPath(dir, "chunks", e))
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-  }
+  /** The live views of a stored corpus index (three or four). */
+  private def liveCorpusViews(spark: org.apache.spark.sql.SparkSession,
+      dir: String): Seq[Compaction.View] =
+    Seq(Hashes, CorpusBands, Shingles) ++
+      (if (Compaction.hasView(spark, dir, Chunks.name)) Seq(Chunks) else Nil)
 
-  /** Compact a batch-versioned dedup index — [[Compaction]]'s atomic
-    * epoch-pointer commit applied to all three views: every batch folds
-    * into ONE consolidated batch under the next epoch (bands re-packed to
-    * one file per band directory — the probe's DPP unit), `EPOCH` swaps,
-    * the superseded epoch drops. Probe results identical pre/post
-    * (spec-pinned). Must run beyond the producer's replay horizon — see
-    * [[Similarity.compactIvfIndex]].
+  /** Compact a batch-versioned dedup index ([[Compaction.compact]] of
+    * every view): bands re-pack to one file per band directory — the
+    * probe's DPP unit. Probe results identical pre/post (spec-pinned).
     *
     * @return the new epoch number
     */
   def compactCorpusIndex(spark: org.apache.spark.sql.SparkSession,
-      dir: String): Int = {
-    val e = Compaction.currentEpoch(spark, dir)
-    val views = Seq("hashes", "bands", "shingles") ++
-      (if (hasChunkView(spark, dir)) Seq("chunks") else Seq.empty)
-    val cur = views.map(v => v -> Compaction.epochPath(dir, v, e)).toMap
-    def fold(df: DataFrame): DataFrame =
-      df.select(df.columns.filter(_ != "batch").map(col): _*)
-    fold(spark.read.parquet(cur("hashes")))
-      .write.mode("overwrite")
-      .parquet(s"${Compaction.epochPath(dir, "hashes", e + 1)}/batch=0")
-    fold(spark.read.parquet(cur("bands")))
-      .repartition(col("band")) // one task → one file per band directory
-      .write.mode("overwrite").partitionBy("band")
-      .parquet(s"${Compaction.epochPath(dir, "bands", e + 1)}/batch=0")
-    fold(spark.read.parquet(cur("shingles")))
-      .write.mode("overwrite")
-      .parquet(s"${Compaction.epochPath(dir, "shingles", e + 1)}/batch=0")
-    cur.get("chunks").foreach { p =>
-      fold(spark.read.parquet(p))
-        .write.mode("overwrite")
-        .parquet(s"${Compaction.epochPath(dir, "chunks", e + 1)}/batch=0")
-    }
-    Compaction.advanceEpoch(spark, dir, e + 1)
-    cur.values.foreach(Compaction.deleteDir(spark, _))
-    spark.catalog.refreshByPath(dir)
-    e + 1
-  }
+      dir: String): Int =
+    Compaction.compact(spark, dir, liveCorpusViews(spark, dir): _*)
 
-  /** Auto-compaction trigger for the dedup index — compact only when the
-    * current epoch holds more than `maxBatches` sealed batch directories
-    * (thresholds on the bands store — the probe's DPP-pruned view, where
-    * listing cost bites first). Same consult pattern and replay-horizon
-    * contract as [[Compaction.batchCount]].
+  /** Auto-compaction trigger for the dedup index ([[Compaction.compactIfNeeded]]),
+    * thresholding on the bands store — the probe's DPP-pruned view, where
+    * listing cost bites first.
     *
     * @return the new epoch, or None when under threshold (no-op)
     */
   def compactCorpusIndexIfNeeded(spark: org.apache.spark.sql.SparkSession,
       dir: String, maxBatches: Int): Option[Int] =
-    if (Compaction.batchCount(spark, dir, "bands") > maxBatches)
-      Some(compactCorpusIndex(spark, dir))
-    else None
+    Compaction.compactIfNeeded(spark, dir, "bands", maxBatches)(
+      compactCorpusIndex(spark, dir))
 
   /** Physically DELETE documents from a stored dedup index — the erasure
-    * op the BM25/IVF/PQ families already have, owed here just as much:
-    * the index stores text hashes and shingle arrays, i.e. DERIVED
-    * PERSONAL DATA under the same right-to-be-forgotten obligation as the
-    * documents themselves. Anti-join rewrite of all three views (bytes
-    * gone, not masked) committed by the atomic epoch swap; a post-delete
-    * probe is identical to probing an index built from the survivors
-    * (spec-pinned — band keys and shingles are per-document, nothing
-    * cross-document to recount). Requires the versioned layout: the flat
-    * [[writeCorpusIndex]] `hashes/` view carries no doc id to delete by.
-    * Deletion implies compaction; same replay-horizon contract.
+    * op the BM25/IVF/PQ families have, owed here just as much: the index
+    * stores text hashes and shingle arrays, i.e. DERIVED PERSONAL DATA
+    * under the same right-to-be-forgotten obligation as the documents
+    * themselves. The [[Compaction.delete]] anti-join rewrite of every
+    * view; a post-delete probe is identical to probing an index built
+    * from the survivors (spec-pinned — band keys and shingles are
+    * per-document, nothing cross-document to recount). Requires the
+    * versioned layout: the flat [[writeCorpusIndex]] `hashes/` view
+    * carries no doc id to delete by.
     *
     * @param ids one column `id`; absent ids are ignored (idempotent)
     * @return the new epoch number
     */
   def deleteFromCorpusIndex(spark: org.apache.spark.sql.SparkSession,
       dir: String, ids: DataFrame): Int = {
+    val views = liveCorpusViews(spark, dir)
     val del = ids.select(col("id"))
-    val e = Compaction.currentEpoch(spark, dir)
-    val views = Seq("hashes", "bands", "shingles") ++
-      (if (hasChunkView(spark, dir)) Seq("chunks") else Seq.empty)
-    val cur = views.map(v => v -> Compaction.epochPath(dir, v, e)).toMap
-    val hashes = spark.read.parquet(cur("hashes"))
-    require(hashes.columns.contains("id"),
-      s"$dir/hashes carries no doc ids (flat writeCorpusIndex layout) — " +
-        "rebuild with writeCorpusIndexVersioned to support deletion")
-    def survivors(df: DataFrame): DataFrame =
-      df.join(del, Seq("id"), "left_anti")
-        .select(df.columns.filter(_ != "batch").map(col): _*)
-    survivors(hashes)
-      .write.mode("overwrite")
-      .parquet(s"${Compaction.epochPath(dir, "hashes", e + 1)}/batch=0")
-    // writePartitioned: delete-everything must leave a readable bands dir
-    Compaction.writePartitioned(
-      survivors(spark.read.parquet(cur("bands"))).repartition(col("band")),
-      "band", s"${Compaction.epochPath(dir, "bands", e + 1)}/batch=0")
-    survivors(spark.read.parquet(cur("shingles")))
-      .write.mode("overwrite")
-      .parquet(s"${Compaction.epochPath(dir, "shingles", e + 1)}/batch=0")
-    cur.get("chunks").foreach { p =>
-      survivors(spark.read.parquet(p))
-        .write.mode("overwrite")
-        .parquet(s"${Compaction.epochPath(dir, "chunks", e + 1)}/batch=0")
+    Compaction.rewrite(spark, dir, views: _*) { cur =>
+      require(cur(Hashes.name).columns.contains("id"),
+        s"$dir/hashes carries no doc ids (flat writeCorpusIndex layout) — " +
+          "rebuild with writeCorpusIndexVersioned to support deletion")
+      views.map(v => cur(v.name).join(del, Seq("id"), "left_anti"))
     }
-    Compaction.advanceEpoch(spark, dir, e + 1)
-    cur.values.foreach(Compaction.deleteDir(spark, _))
-    spark.catalog.refreshByPath(dir)
-    e + 1
   }
 
   /** CDC duplicate-chunk report straight off a stored index's `chunks/`
@@ -719,8 +614,7 @@ object Dedup {
     */
   def cdcReportFromIndex(spark: org.apache.spark.sql.SparkSession,
       dir: String): DataFrame = {
-    val e = Compaction.currentEpoch(spark, dir)
-    val ch = spark.read.parquet(Compaction.epochPath(dir, "chunks", e))
+    val ch = Compaction.snapshot(spark, dir)("chunks")
       .select(col("id"), col("chunk_md5"))
     val own = ch.groupBy(col("chunk_md5")).agg(min(col("id")).as("owner"))
     ch.join(own, "chunk_md5")
@@ -751,20 +645,14 @@ object Dedup {
   def dedupAgainstIndex(newDocs: DataFrame, dir: String,
       n: Int = 3, numHashes: Int = 64, bands: Int = 16,
       threshold: Double = 0.8): DataFrame = {
-    val spark = newDocs.sparkSession
-    // resolve the epoch pointer first (the snapshot-read side of
-    // [[compactCorpusIndex]]'s atomic swap); epoch 0 = the unmarked
-    // layouts (flat or versioned). Columns are selected explicitly: the
-    // versioned views carry `batch` (and hashes an `id`) the probe's
-    // joins must not capture.
-    val e = Compaction.currentEpoch(spark, dir)
+    // an epoch-resolved read of the flat or versioned layout. Columns are
+    // selected explicitly: the versioned views carry `batch` (and hashes
+    // an `id`) the probe's joins must not capture.
+    val store = Compaction.snapshot(newDocs.sparkSession, dir)
     dedupAgainstParts(newDocs,
-      spark.read.parquet(Compaction.epochPath(dir, "hashes", e))
-        .select(col("h")),
-      spark.read.parquet(Compaction.epochPath(dir, "bands", e))
-        .select(col("id"), col("band"), col("key")),
-      spark.read.parquet(Compaction.epochPath(dir, "shingles", e))
-        .select(col("id"), col("sh"), col("n_sh")),
+      store("hashes").select(col("h")),
+      store("bands").select(col("id"), col("band"), col("key")),
+      store("shingles").select(col("id"), col("sh"), col("n_sh")),
       n, numHashes, bands, threshold)
   }
 
@@ -806,8 +694,7 @@ object Dedup {
   def nearDupPairsAgainstIndex(newDocs: DataFrame, dir: String,
       n: Int = 3, numHashes: Int = 64, bands: Int = 16,
       threshold: Double = 0.8, beforeBatch: Option[Long] = None): DataFrame = {
-    val spark = newDocs.sparkSession
-    val e = Compaction.currentEpoch(spark, dir)
+    val store = Compaction.snapshot(newDocs.sparkSession, dir)
     def pre(df: DataFrame): DataFrame = beforeBatch match {
       case Some(b) => df.filter(col("batch").cast("long") < b)
       case None => df
@@ -816,11 +703,10 @@ object Dedup {
     val within = minhashLshPairs(nd, n, numHashes, bands, threshold)
       .select(col("id_a"), col("id_b"))
     val bandedNew = bandKeys(lshSignatures(nd, n, numHashes), numHashes, bands)
-    val exBands = pre(spark.read.parquet(Compaction.epochPath(dir, "bands", e)))
+    val exBands = pre(store("bands"))
       .select(col("id"), col("band"), col("key"))
-    val exShingles =
-      pre(spark.read.parquet(Compaction.epochPath(dir, "shingles", e)))
-        .select(col("id"), col("sh"), col("n_sh"))
+    val exShingles = pre(store("shingles"))
+      .select(col("id"), col("sh"), col("n_sh"))
     val cand = bandedNew.as("x")
       .join(exBands.as("y"),
         col("x.band") === col("y.band") && col("x.key") === col("y.key"))
@@ -970,11 +856,11 @@ object Dedup {
 
   /** Persist a near-dup CLUSTERING artifact — (id, comp) labels with
     * comp = min member id, [[connectedComponents]]' canonical form — in
-    * the versioned layout: `labels/batch=0` plus an (initially empty)
-    * `remap/` store of MERGE EVENTS. The clustering every leakage-safe
-    * op downstream consumes (q170's split, q194's batches, q135's reps)
-    * becomes maintainable under ingestion instead of recomputed from
-    * scratch per batch.
+    * the [[Compaction]] store layout: the `labels` view plus an
+    * (initially empty) `remap` view of MERGE EVENTS. The clustering
+    * every leakage-safe op downstream consumes (q170's split, q194's
+    * batches, q135's reps) becomes maintainable under ingestion instead
+    * of recomputed from scratch per batch.
     *
     * The incremental contract (min-label algebra): a stored component's
     * label is the min id of its members, so merging components {A, B}
@@ -999,18 +885,21 @@ object Dedup {
       s"$dangling edge endpoint(s) not present in the id set")
     val labels = connectedComponents(edges.select(col("id_a"), col("id_b")))
       .withColumnRenamed("id", "lid")
-    ids.select(col("id"))
-      .join(labels, col("id") === col("lid"), "left")
-      .select(col("id"), coalesce(col("comp"), col("id")).as("comp"))
-      .write.mode("overwrite").parquet(s"$dir/labels/batch=0")
-    emptyCcRemap(spark).coalesce(1).write.mode("overwrite")
-      .parquet(s"$dir/remap/batch=0")
-    spark.catalog.refreshByPath(dir)
+    Compaction.build(spark, dir,
+      CcLabels -> ids.select(col("id"))
+        .join(labels, col("id") === col("lid"), "left")
+        .select(col("id"), coalesce(col("comp"), col("id")).as("comp")),
+      CcRemap -> emptyCcRemap(spark))
   }
 
-  /** Schema-carrying empty remap frame (one empty file still writes —
-    * the delete-everything-epoch lesson).
+  /** The CC store's views; merge events are tiny, so every remap batch is
+    * one file.
     */
+  private val CcLabels = Compaction.View("labels")
+  private val CcRemap = Compaction.View("remap",
+    ingestLayout = _.coalesce(1), rewriteLayout = _.coalesce(1))
+
+  /** Schema-carrying empty remap frame (one empty file still writes). */
   private def emptyCcRemap(spark: org.apache.spark.sql.SparkSession): DataFrame =
     spark.range(0).select(col("id").as("from_comp"), col("id").as("to_comp"))
 
@@ -1021,11 +910,9 @@ object Dedup {
     * if new, its current resolved component label if existing), CC runs
     * on that batch-sized quotient graph, and the batch writes:
     *
-    *  - `labels/batch=<id>`: the new docs' labels (own-partition
-    *    overwrite — replay-convergent);
-    *  - `remap/batch=<id>`: (from_comp → to_comp) rows for every
-    *    EXISTING component the batch merged (the merge events; usually
-    *    empty or tiny).
+    *  - `labels`: the new docs' labels;
+    *  - `remap`: (from_comp → to_comp) rows for every EXISTING component
+    *    the batch merged (the merge events; usually empty or tiny).
     *
     * Cost ∝ batch: resolved labels are semi-filtered to the touched ids
     * under a broadcast of the batch's endpoint set before anything
@@ -1037,7 +924,6 @@ object Dedup {
     require(batchId >= 1, s"batch 0 is the build (got $batchId)")
     val spark = batchIds.sparkSession
     import graft.CacheScope.ScopedPersist
-    val e = Compaction.currentEpoch(spark, dir)
     val bIds = batchIds.select(col("id")).persistScoped()
     val ed = edges.select(col("id_a"), col("id_b")).persistScoped()
     val touched = ed.select(explode(array(col("id_a"), col("id_b"))).as("id"))
@@ -1068,19 +954,14 @@ object Dedup {
       s"$dangling edge endpoint(s) neither in the batch nor in the stored labels")
     val qlabels = connectedComponents(qe.filter(col("id_a") =!= col("id_b")))
       .persistScoped() // quotient-sized
-    bIds
-      .join(qlabels.select(col("id"), col("comp")), Seq("id"), "left")
-      .select(col("id"), coalesce(col("comp"), col("id")).as("comp"))
-      .write.mode("overwrite")
-      .parquet(s"${Compaction.epochPath(dir, "labels", e)}/batch=$batchId")
-    curT.select(col("comp").as("from_comp")).distinct()
-      .join(qlabels.select(col("id").as("from_comp"),
-        col("comp").as("to_comp")), Seq("from_comp"))
-      .filter(col("from_comp") =!= col("to_comp"))
-      .coalesce(1)
-      .write.mode("overwrite")
-      .parquet(s"${Compaction.epochPath(dir, "remap", e)}/batch=$batchId")
-    spark.catalog.refreshByPath(dir)
+    Compaction.ingest(spark, dir, batchId,
+      CcLabels -> bIds
+        .join(qlabels.select(col("id"), col("comp")), Seq("id"), "left")
+        .select(col("id"), coalesce(col("comp"), col("id")).as("comp")),
+      CcRemap -> curT.select(col("comp").as("from_comp")).distinct()
+        .join(qlabels.select(col("id").as("from_comp"),
+          col("comp").as("to_comp")), Seq("from_comp"))
+        .filter(col("from_comp") =!= col("to_comp")))
   }
 
   /** The store's current (id, comp) labeling: base labels with every
@@ -1092,20 +973,22 @@ object Dedup {
     */
   def ccLabelsResolved(spark: org.apache.spark.sql.SparkSession,
       dir: String): DataFrame =
-    ccLabelsResolvedBefore(spark, dir, Long.MaxValue)
+    ccResolve(Compaction.snapshot(spark, dir), Long.MaxValue)
 
   /** Resolution over batches < `beforeBatch` only — the pre-batch view an
     * ingest derives its quotient from (replay convergence demands the
     * batch's output be a pure function of the PRE-batch store).
     */
   private def ccLabelsResolvedBefore(spark: org.apache.spark.sql.SparkSession,
-      dir: String, beforeBatch: Long): DataFrame = {
-    val e = Compaction.currentEpoch(spark, dir)
-    val labels = spark.read
-      .parquet(Compaction.epochPath(dir, "labels", e))
+      dir: String, beforeBatch: Long): DataFrame =
+    ccResolve(Compaction.snapshot(spark, dir), beforeBatch)
+
+  private def ccResolve(store: String => DataFrame,
+      beforeBatch: Long): DataFrame = {
+    val labels = store(CcLabels.name)
       .filter(col("batch").cast("long") < beforeBatch)
       .select(col("id"), col("comp"))
-    val remap = spark.read.parquet(Compaction.epochPath(dir, "remap", e))
+    val remap = store(CcRemap.name)
     val batches = remap.select(col("batch").cast("long")).distinct()
       .collect().map(_.getLong(0)).filter(_ < beforeBatch).sorted
     batches.foldLeft(labels) { (acc, b) =>
@@ -1116,38 +999,25 @@ object Dedup {
     }
   }
 
-  /** Fold the remap chain into the labels (epoch swap): one fully
-    * resolved `labels/batch=0`, an empty remap store. The consult-after-
-    * checkpoint contract of the other versioned families applies.
+  /** Fold the remap chain into the labels ([[Compaction.rewrite]]): one
+    * fully resolved labels batch, an empty remap view.
     */
   def compactCcLabels(spark: org.apache.spark.sql.SparkSession,
-      dir: String): Int = {
-    val e = Compaction.currentEpoch(spark, dir)
-    ccLabelsResolved(spark, dir)
-      .write.mode("overwrite")
-      .parquet(s"${Compaction.epochPath(dir, "labels", e + 1)}/batch=0")
-    emptyCcRemap(spark).coalesce(1).write.mode("overwrite")
-      .parquet(s"${Compaction.epochPath(dir, "remap", e + 1)}/batch=0")
-    Compaction.advanceEpoch(spark, dir, e + 1)
-    Compaction.deleteDir(spark, Compaction.epochPath(dir, "labels", e))
-    Compaction.deleteDir(spark, Compaction.epochPath(dir, "remap", e))
-    spark.catalog.refreshByPath(dir)
-    e + 1
-  }
+      dir: String): Int =
+    Compaction.rewrite(spark, dir, CcLabels, CcRemap)(cur =>
+      Seq(ccResolve(cur, Long.MaxValue), emptyCcRemap(spark)))
 
-  /** Auto-compaction trigger — [[Similarity.compactIvfIndexIfNeeded]]'s
-    * pattern on the CC label store: the resolution cost grows with every
+  /** Auto-compaction trigger on the CC label store
+    * ([[Compaction.compactIfNeeded]]): the resolution cost grows with every
     * ingest (each batch adds one broadcast remap join to
     * [[ccLabelsResolved]]'s chain plus one batch dir to the listing), so
-    * compact when the current epoch's `remap/` holds more than
-    * `maxBatches` sealed batches. Consult AFTER the producer's checkpoint
-    * commit (the [[Compaction.batchCount]] contract).
+    * compact when the live `remap` view holds more than `maxBatches`
+    * sealed batches.
     */
   def compactCcLabelsIfNeeded(spark: org.apache.spark.sql.SparkSession,
       dir: String, maxBatches: Int): Option[Int] =
-    if (Compaction.batchCount(spark, dir, "remap") > maxBatches)
-      Some(compactCcLabels(spark, dir))
-    else None
+    Compaction.compactIfNeeded(spark, dir, "remap", maxBatches)(
+      compactCcLabels(spark, dir))
 
   /** Physical deletion from the labels store: the ids' rows are GONE and
     * every component re-canonicalizes to its surviving min id (a deleted
@@ -1158,23 +1028,14 @@ object Dedup {
     * the SQ8/PQ families).
     */
   def deleteFromCcLabels(spark: org.apache.spark.sql.SparkSession,
-      dir: String, ids: DataFrame): Int = {
-    val e = Compaction.currentEpoch(spark, dir)
-    val survivors = ccLabelsResolved(spark, dir)
-      .join(ids.select(col("id")), Seq("id"), "left_anti")
-    val relabel = survivors.groupBy(col("comp")).agg(min(col("id")).as("__nc"))
-    survivors.join(relabel, Seq("comp"))
-      .select(col("id"), col("__nc").as("comp"))
-      .write.mode("overwrite")
-      .parquet(s"${Compaction.epochPath(dir, "labels", e + 1)}/batch=0")
-    emptyCcRemap(spark).coalesce(1).write.mode("overwrite")
-      .parquet(s"${Compaction.epochPath(dir, "remap", e + 1)}/batch=0")
-    Compaction.advanceEpoch(spark, dir, e + 1)
-    Compaction.deleteDir(spark, Compaction.epochPath(dir, "labels", e))
-    Compaction.deleteDir(spark, Compaction.epochPath(dir, "remap", e))
-    spark.catalog.refreshByPath(dir)
-    e + 1
-  }
+      dir: String, ids: DataFrame): Int =
+    Compaction.rewrite(spark, dir, CcLabels, CcRemap) { cur =>
+      val survivors = ccResolve(cur, Long.MaxValue)
+        .join(ids.select(col("id")), Seq("id"), "left_anti")
+      val relabel = survivors.groupBy(col("comp")).agg(min(col("id")).as("__nc"))
+      Seq(survivors.join(relabel, Seq("comp"))
+        .select(col("id"), col("__nc").as("comp")), emptyCcRemap(spark))
+    }
 
   /** Plain iterative min-label propagation — the pre-alternating-star
     * implementation, kept for round-count comparison and as the simpler
@@ -1331,8 +1192,8 @@ object Dedup {
   // image against the corpus ON ARRIVAL, so the fingerprints live in a
   // versioned store with the same lifecycle the text/BM25/IVF families
   // have — batch-partitioned replay-safe ingest, epoch-swap compaction,
-  // physical erasure. Two views: `hashes/batch=N` (id, ah_hi, ah_lo — the
-  // erasure unit) and `bands/batch=N` partitioned by `bkt` (the banded
+  // physical erasure. Two store views: `hashes` (id, ah_hi, ah_lo — the
+  // erasure unit) and `bands` partitioned by `bkt` (the banded
   // rows a probe's equi-join DPP-prunes to the probe keys' buckets — at
   // billions of stored images a probe batch must read its candidate
   // buckets, never the store). Band geometry (maxHamming, buckets) is
@@ -1376,14 +1237,18 @@ object Dedup {
     import spark.implicits._
     Seq((maxHamming, buckets)).toDF("max_hamming", "buckets")
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/params")
-    fps.filter(col("ah_hi").isNotNull && col("ah_lo").isNotNull)
-      .select(col("id"), col("ah_hi"), col("ah_lo"))
-      .write.mode("overwrite").parquet(s"$dir/hashes/batch=0")
-    Compaction.writePartitioned(
-      ahashBandRows(fps, maxHamming, buckets).repartition(col("bkt")),
-      "bkt", s"$dir/bands/batch=0")
-    spark.catalog.refreshByPath(dir)
+    Compaction.build(spark, dir, ahashViews(fps, maxHamming, buckets): _*)
   }
+
+  /** The aHash store's bands view: every write repartitions on `bkt`. */
+  private val AHashBands = Compaction.View("bands", Some("bkt"),
+    _.repartition(col("bkt")), _.repartition(col("bkt")))
+
+  private def ahashViews(fps: DataFrame, maxHamming: Int, buckets: Int)
+      : Seq[(Compaction.View, DataFrame)] =
+    Seq(Hashes -> fps.filter(col("ah_hi").isNotNull && col("ah_lo").isNotNull)
+        .select(col("id"), col("ah_hi"), col("ah_lo")),
+      AHashBands -> ahashBandRows(fps, maxHamming, buckets))
 
   /** The frozen band geometry of a stored index. */
   private[graft] def ahashParams(spark: org.apache.spark.sql.SparkSession,
@@ -1393,25 +1258,16 @@ object Dedup {
     (r.getInt(0), r.getInt(1))
   }
 
-  /** Replay-safe incremental ingest: the batch OVERWRITES its own
-    * batch=<id> partitions under the live epoch (a crash-replayed
-    * producer rewrites identical files); per-ingest cost ∝ batch. Band
-    * geometry comes from the frozen `params/` — never from the caller.
+  /** Replay-safe incremental ingest ([[Compaction.ingest]]); per-ingest
+    * cost ∝ batch. Band geometry comes from the frozen `params/` — never
+    * from the caller.
     */
   def ingestIntoAHashIndex(fps: DataFrame, dir: String,
       batchId: Long): Unit = {
-    require(batchId >= 1, s"batch 0 is the build (got $batchId)")
     val spark = fps.sparkSession
     val (maxHamming, buckets) = ahashParams(spark, dir)
-    val e = Compaction.currentEpoch(spark, dir)
-    fps.filter(col("ah_hi").isNotNull && col("ah_lo").isNotNull)
-      .select(col("id"), col("ah_hi"), col("ah_lo"))
-      .write.mode("overwrite")
-      .parquet(s"${Compaction.epochPath(dir, "hashes", e)}/batch=$batchId")
-    Compaction.writePartitioned(
-      ahashBandRows(fps, maxHamming, buckets).repartition(col("bkt")),
-      "bkt", s"${Compaction.epochPath(dir, "bands", e)}/batch=$batchId")
-    spark.catalog.refreshByPath(dir)
+    Compaction.ingest(spark, dir, batchId,
+      ahashViews(fps, maxHamming, buckets): _*)
   }
 
   /** Probe a fingerprint batch against the stored index: every stored
@@ -1429,7 +1285,7 @@ object Dedup {
     import graft.CacheScope.ScopedPersist
     val spark = fps.sparkSession
     val (maxHamming, buckets) = ahashParams(spark, dir)
-    val e = Compaction.currentEpoch(spark, dir)
+    val store = Compaction.snapshot(spark, dir)
     val probe = ahashBandRows(fps, maxHamming, buckets)
       .persistScoped() // bucket-set derivation + the candidate join
     // STATIC partition pruning on the stored bands: Spark's dynamic
@@ -1441,8 +1297,7 @@ object Dedup {
     // opens only its candidate bucket directories, never the store.
     val probeBkts = probe.select(col("bkt")).distinct()
       .collect().map(_.getLong(0)).sorted
-    val stored0 = spark.read
-      .parquet(Compaction.epochPath(dir, "bands", e))
+    val stored0 = store("bands")
       .filter(col("bkt").isin(probeBkts: _*))
     val stored = beforeBatch.fold(stored0)(b =>
       stored0.filter(col("batch") < b))
@@ -1460,70 +1315,35 @@ object Dedup {
       .select(col("id"), col("match_id"), col("hamming"))
   }
 
-  /** Compact: fold every batch into ONE consolidated batch=0 under the
-    * next epoch (bands re-packed one file per bucket — the probe's DPP
-    * unit), atomic epoch-pointer swap, superseded epoch deleted. Probe
-    * results identical pre/post (spec-pinned). Run beyond the producer's
-    * replay horizon ([[Similarity.compactIvfIndex]]'s contract).
+  /** Compact ([[Compaction.compact]] of both views): bands re-pack one
+    * file per bucket — the probe's DPP unit. Probe results identical
+    * pre/post (spec-pinned).
     */
   def compactAHashIndex(spark: org.apache.spark.sql.SparkSession,
-      dir: String): Int = {
-    val e = Compaction.currentEpoch(spark, dir)
-    val curH = Compaction.epochPath(dir, "hashes", e)
-    val curB = Compaction.epochPath(dir, "bands", e)
-    def fold(df: DataFrame): DataFrame =
-      df.select(df.columns.filter(_ != "batch").map(col): _*)
-    fold(spark.read.parquet(curH))
-      .write.mode("overwrite")
-      .parquet(s"${Compaction.epochPath(dir, "hashes", e + 1)}/batch=0")
-    Compaction.writePartitioned(
-      fold(spark.read.parquet(curB)).repartition(col("bkt")),
-      "bkt", s"${Compaction.epochPath(dir, "bands", e + 1)}/batch=0")
-    Compaction.advanceEpoch(spark, dir, e + 1)
-    Seq(curH, curB).foreach(Compaction.deleteDir(spark, _))
-    spark.catalog.refreshByPath(dir)
-    e + 1
-  }
+      dir: String): Int =
+    Compaction.compact(spark, dir, Hashes, AHashBands)
 
-  /** Auto-compaction trigger — thresholds on the bands view (the probe's
-    * DPP-pruned side, where batch-listing cost bites first); the
-    * [[Compaction.batchCount]] consult-after-checkpoint contract.
+  /** Auto-compaction trigger ([[Compaction.compactIfNeeded]]), thresholding
+    * on the bands view (the probe's DPP-pruned side, where batch-listing
+    * cost bites first).
     */
   def compactAHashIndexIfNeeded(spark: org.apache.spark.sql.SparkSession,
       dir: String, maxBatches: Int): Option[Int] =
-    if (Compaction.batchCount(spark, dir, "bands") > maxBatches)
-      Some(compactAHashIndex(spark, dir))
-    else None
+    Compaction.compactIfNeeded(spark, dir, "bands", maxBatches)(
+      compactAHashIndex(spark, dir))
 
-  /** Physically DELETE images from the store — perceptual fingerprints
-    * are derived personal data under the same erasure obligation as the
-    * images; anti-join rewrite of both views committed by the atomic
-    * epoch swap. A post-delete probe ≡ probing an index built from the
-    * survivors (fingerprints are per-image — nothing cross-image to
-    * recount). Absent ids are ignored (idempotent).
+  /** Physically DELETE images from the store ([[Compaction.delete]] of
+    * both views) — perceptual fingerprints are derived personal data
+    * under the same erasure obligation as the images. A post-delete probe
+    * ≡ probing an index built from the survivors (fingerprints are
+    * per-image — nothing cross-image to recount). Absent ids are ignored
+    * (idempotent).
     *
     * @return the new epoch number
     */
   def deleteFromAHashIndex(spark: org.apache.spark.sql.SparkSession,
-      dir: String, ids: DataFrame): Int = {
-    val del = ids.select(col("id"))
-    val e = Compaction.currentEpoch(spark, dir)
-    val curH = Compaction.epochPath(dir, "hashes", e)
-    val curB = Compaction.epochPath(dir, "bands", e)
-    def survivors(df: DataFrame): DataFrame =
-      df.join(del, Seq("id"), "left_anti")
-        .select(df.columns.filter(_ != "batch").map(col): _*)
-    survivors(spark.read.parquet(curH))
-      .write.mode("overwrite")
-      .parquet(s"${Compaction.epochPath(dir, "hashes", e + 1)}/batch=0")
-    Compaction.writePartitioned(
-      survivors(spark.read.parquet(curB)).repartition(col("bkt")),
-      "bkt", s"${Compaction.epochPath(dir, "bands", e + 1)}/batch=0")
-    Compaction.advanceEpoch(spark, dir, e + 1)
-    Seq(curH, curB).foreach(Compaction.deleteDir(spark, _))
-    spark.catalog.refreshByPath(dir)
-    e + 1
-  }
+      dir: String, ids: DataFrame): Int =
+    Compaction.delete(spark, dir, "id", ids, Hashes, AHashBands)
 
   /** Segment-level (paragraph-level) dedup: split every document into
     * consecutive `segLen`-token segments, keep each distinct segment only

@@ -1162,9 +1162,7 @@ object Multimodal {
     import graft.CacheScope.ScopedPersist
     val spark = pairs.sparkSession
     val p = pairs.persistScoped() // decode + two probes + final frame
-    val e = Compaction.currentEpoch(spark, textIndexDir)
-    val textHashes = spark.read
-      .parquet(Compaction.epochPath(textIndexDir, "hashes", e))
+    val textHashes = Compaction.snapshot(spark, textIndexDir)("hashes")
       .select(col("h"))
     val textDups = p.select(col("id"), md5(col("caption")).as("h"))
       .join(textHashes, Seq("h"), "left_semi")

@@ -292,9 +292,9 @@ object Retrieval {
       qTerms: Int): DataFrame = {
     val spark = seeds.sparkSession
     val buckets = spark.read.parquet(s"$dir/meta").head().getInt(0)
-    val e = Compaction.currentEpoch(spark, dir)
-    val lists = spark.read.parquet(Compaction.epochPath(dir, "lists", e))
-    val stats = spark.read.parquet(Compaction.epochPath(dir, "stats", e))
+    val store = Compaction.snapshot(spark, dir)
+    val lists = store("lists")
+    val stats = store("stats")
       .agg(sum(col("n_docs")).as("n_docs"))
     val tf = seeds
       .select(col("id"), expr(
@@ -350,7 +350,7 @@ object Retrieval {
   // hash into. df is derived from the pruned scan itself (a term's
   // postings are wholly inside its bucket, so the pruned count IS the
   // corpus df) and corpus stats (n_docs, tot_dl) live as one summary row
-  // per write — summed at probe time, which makes append trivially
+  // per write — summed at probe time, which makes ingest trivially
   // stats-correct. The bucket hash is engine-internal layout (it never
   // reaches the output), so it can be Spark's native xxhash64.
 
@@ -365,12 +365,8 @@ object Retrieval {
     */
   def writeBm25Index(terms: DataFrame, dir: String, buckets: Int): Unit = {
     val spark = terms.sparkSession
-    import spark.implicits._
-    Seq(buckets).toDF("buckets")
-      .write.mode("overwrite").parquet(s"$dir/meta")
-    terms.groupBy(col("id")).agg(max(col("dl")).as("dl"))
-      .agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("tot_dl"))
-      .write.mode("overwrite").parquet(s"$dir/stats")
+    writeBm25Meta(spark, dir, buckets)
+    docStats(terms).write.mode("overwrite").parquet(s"$dir/stats")
     terms.withColumn("bucket", termBucket(buckets))
       // cluster by bucket before the partitioned write: the narrow write
       // opened one file per (upstream partition × bucket) — 2,049 files at
@@ -380,58 +376,33 @@ object Retrieval {
       // at any scale, trading one postings shuffle at build time
       .hint("rebalance", col("bucket"))
       .write.mode("overwrite").partitionBy("bucket").parquet(s"$dir/lists")
-    // external write to a path this session may already have listed:
-    // invalidate Spark's shared file-status cache, or a later read of the
-    // same path can silently serve the pre-write listing
+    // refresh after an external write (see the Compaction store protocol)
     spark.catalog.refreshByPath(dir)
   }
 
-  /** Incrementally extend a stored [[writeBm25Index]] with a new document
-    * batch: postings append to their bucket partitions and the batch's
-    * own (n_docs, tot_dl) summary row appends beside the build's — probes
-    * sum all stats rows, so df/stats equal a from-scratch build over the
-    * union exactly (df is counted from the postings themselves; unlike
-    * the IVF quantizer there is nothing frozen to drift). Cost per ingest
-    * is ∝ batch. NOT replay-safe (append-mode duplicates on redo);
-    * replaying producers use [[writeBm25IndexVersioned]] +
-    * [[ingestIntoBm25Index]].
-    *
-    * Batches must be DOCUMENT-ATOMIC: all postings of a document arrive
-    * in one batch, and a document id appears in exactly one batch ever —
-    * a doc split across batches would be double-counted in the summed
-    * (n_docs, tot_dl) stats and its straddling terms' df. That is the
-    * natural producer semantics (documents arrive as units), the same
-    * whole-unit contract [[appendToIvfIndex]] has per vector.
-    */
-  def appendToBm25Index(batch: DataFrame, dir: String): Unit = {
-    val spark = batch.sparkSession
-    // guard against the silent-loss corner: after a compaction the live
-    // postings move to lists_e<N> (batch-versioned), so an append into the
-    // superseded epoch-0 path would vanish from every probe (which
-    // resolves the pointer first). Ingest into compacted indexes instead.
-    require(Compaction.currentEpoch(spark, dir) == 0,
-      s"$dir has been compacted (epoch > 0); use ingestIntoBm25Index " +
-        "with a fresh batch id instead of the flat append")
-    val buckets = spark.read.parquet(s"$dir/meta").head().getInt(0)
-    batch.groupBy(col("id")).agg(max(col("dl")).as("dl"))
-      .agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("tot_dl"))
-      .write.mode("append").parquet(s"$dir/stats")
-    batch.withColumn("bucket", termBucket(buckets))
-      .hint("rebalance", col("bucket")) // advisory-sized files per bucket dir (AQE rebalance)
-      .write.mode("append").partitionBy("bucket").parquet(s"$dir/lists")
-    // external write to a path this session may already have listed:
-    // invalidate Spark's shared file-status cache, or a later read of the
-    // same path can silently serve the pre-write listing
-    spark.catalog.refreshByPath(dir)
+  /** The versioned layout's two store views. */
+  private val Bm25Lists = Compaction.View.partitioned("lists", "bucket")
+  private val Bm25Stats = Compaction.View("stats")
+
+  private def writeBm25Meta(spark: org.apache.spark.sql.SparkSession,
+      dir: String, buckets: Int): Unit = {
+    import spark.implicits._
+    Seq(buckets).toDF("buckets")
+      .write.mode("overwrite").parquet(s"$dir/meta")
   }
+
+  /** The one (n_docs, tot_dl) summary row of a document-atomic postings
+    * frame — exact integer sums, 0 for an empty frame.
+    */
+  private def docStats(terms: DataFrame): DataFrame =
+    terms.groupBy(col("id")).agg(max(col("dl")).as("dl"))
+      .agg(count(lit(1)).as("n_docs"),
+        coalesce(sum(col("dl")), lit(0L)).as("tot_dl"))
 
   /** Build a stored BM25 index in the BATCH-VERSIONED layout — the
-    * replay-safe sibling of [[writeBm25Index]] (the
-    * Similarity.writeIvfIndexVersioned scheme): postings live under
-    * `lists/batch=<id>/bucket=<b>/` and the summary row under
-    * `stats/batch=<id>/`, so an ingest batch OVERWRITES its own batch
-    * partitions instead of appending — a crash-replayed producer batch
-    * converges to identical index contents. Probes work unchanged:
+    * replay-safe sibling of [[writeBm25Index]]: postings and the summary
+    * row are the [[Compaction]] store's `lists` (bucket-partitioned) and
+    * `stats` views, with the build as batch 0. Probes work unchanged:
     * `batch` reads back as just another partition column, the probe joins
     * on (bucket, term), bucket pruning applies across every batch
     * directory, and stats rows sum across batches.
@@ -439,150 +410,80 @@ object Retrieval {
   def writeBm25IndexVersioned(terms: DataFrame, dir: String,
       buckets: Int): Unit = {
     val spark = terms.sparkSession
-    import spark.implicits._
-    Seq(buckets).toDF("buckets")
-      .write.mode("overwrite").parquet(s"$dir/meta")
-    terms.groupBy(col("id")).agg(max(col("dl")).as("dl"))
-      .agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("tot_dl"))
-      .write.mode("overwrite").parquet(s"$dir/stats/batch=0")
-    terms.withColumn("bucket", termBucket(buckets))
-      .hint("rebalance", col("bucket")) // bucket-packed files (see writeBm25Index)
-      .write.mode("overwrite").partitionBy("bucket")
-      .parquet(s"$dir/lists/batch=0")
-    // external write to a path this session may already have listed:
-    // invalidate Spark's shared file-status cache, or a later read of the
-    // same path can silently serve the pre-write listing
-    spark.catalog.refreshByPath(dir)
+    writeBm25Meta(spark, dir, buckets)
+    Compaction.build(spark, dir, Bm25Stats -> docStats(terms),
+      Bm25Lists -> terms.withColumn("bucket", termBucket(buckets)))
   }
 
   /** Replay-safe incremental ingestion into a [[writeBm25IndexVersioned]]
-    * index: the batch's postings and stats row OVERWRITE this batch's own
-    * partition directories. Re-running the same (batch, batchId) — a
-    * streaming replay after a crash — rewrites the same files and leaves
-    * the index contents identical; per-ingest cost stays ∝ batch.
+    * index ([[Compaction.ingest]]): the batch's postings and its own
+    * summary row. Probes sum every stats row, so df/stats equal a
+    * from-scratch build over the union exactly (df is counted from the
+    * postings themselves; unlike the IVF quantizer nothing is frozen).
+    *
+    * Batches must be DOCUMENT-ATOMIC: all postings of a document arrive
+    * in one batch, and a document id appears in exactly one batch ever —
+    * a doc split across batches would be double-counted in the summed
+    * (n_docs, tot_dl) stats and its straddling terms' df.
     */
   def ingestIntoBm25Index(batch: DataFrame, dir: String,
       batchId: Long): Unit = {
-    require(batchId >= 1, s"batch 0 is the build (got $batchId)")
     val spark = batch.sparkSession
     val buckets = spark.read.parquet(s"$dir/meta").head().getInt(0)
-    val e = Compaction.currentEpoch(spark, dir)
-    batch.groupBy(col("id")).agg(max(col("dl")).as("dl"))
-      .agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("tot_dl"))
-      .write.mode("overwrite")
-      .parquet(s"${Compaction.epochPath(dir, "stats", e)}/batch=$batchId")
-    batch.withColumn("bucket", termBucket(buckets))
-      .hint("rebalance", col("bucket")) // bucket-packed files (see writeBm25Index)
-      .write.mode("overwrite").partitionBy("bucket")
-      .parquet(s"${Compaction.epochPath(dir, "lists", e)}/batch=$batchId")
-    // external write to a path this session may already have listed:
-    // invalidate Spark's shared file-status cache, or a later read of the
-    // same path can silently serve the pre-write listing
-    spark.catalog.refreshByPath(dir)
+    Compaction.ingest(spark, dir, batchId, Bm25Stats -> docStats(batch),
+      Bm25Lists -> batch.withColumn("bucket", termBucket(buckets)))
   }
 
   /** Compact a batch-versioned BM25 index — the lexical sibling of
-    * [[Similarity.compactIvfIndex]], same epoch-pointer commit: rewrite
-    * every batch's postings into ONE consolidated batch under the next
-    * epoch (one file per bucket via a bucket repartition), reduce the
-    * per-batch stats rows to one summed row (stats sum by design, so the
-    * summed row IS what probes would compute), atomically swap `EPOCH`,
-    * drop the superseded epoch. Probe results are identical pre/post
-    * (spec-pinned). Must run beyond the producer's replay horizon — see
-    * [[Similarity.compactIvfIndex]].
+    * [[Similarity.compactIvfIndex]] through the same
+    * [[Compaction.rewrite]]: postings consolidate to one file per bucket,
+    * and the per-batch stats rows reduce to one summed row (stats sum by
+    * design, so the summed row IS what probes would compute). Probe
+    * results are identical pre/post (spec-pinned).
     *
     * @return the new epoch number
     */
   def compactBm25Index(spark: org.apache.spark.sql.SparkSession,
-      dir: String): Int = {
-    val e = Compaction.currentEpoch(spark, dir)
-    val curLists = Compaction.epochPath(dir, "lists", e)
-    val curStats = Compaction.epochPath(dir, "stats", e)
-    spark.read.parquet(curStats)
-      .agg(sum(col("n_docs")).as("n_docs"), sum(col("tot_dl")).as("tot_dl"))
-      .write.mode("overwrite")
-      .parquet(s"${Compaction.epochPath(dir, "stats", e + 1)}/batch=0")
-    val lists = spark.read.parquet(curLists)
-    lists
-      .select(lists.columns.filter(_ != "batch").map(col): _*) // fold `batch` away
-      .repartition(col("bucket")) // one task → one file per bucket directory
-      .write.mode("overwrite").partitionBy("bucket")
-      .parquet(s"${Compaction.epochPath(dir, "lists", e + 1)}/batch=0")
-    Compaction.advanceEpoch(spark, dir, e + 1)
-    Compaction.deleteDir(spark, curLists)
-    Compaction.deleteDir(spark, curStats)
-    // external write to a path this session may already have listed:
-    // invalidate Spark's shared file-status cache, or a later read of the
-    // same path can silently serve the pre-write listing
-    spark.catalog.refreshByPath(dir)
-    e + 1
-  }
+      dir: String): Int =
+    Compaction.rewrite(spark, dir, Bm25Stats, Bm25Lists)(cur => Seq(
+      cur(Bm25Stats.name)
+        .agg(sum(col("n_docs")).as("n_docs"), sum(col("tot_dl")).as("tot_dl")),
+      cur(Bm25Lists.name)))
 
-  /** Auto-compaction trigger — [[Similarity.compactIvfIndexIfNeeded]]'s
-    * lexical sibling: compact only when the current epoch holds more than
-    * `maxBatches` sealed batch directories. Same consult pattern and
-    * replay-horizon contract ([[Compaction.batchCount]]).
+  /** Run [[compactBm25Index]] only past `maxBatches` sealed batch
+    * directories ([[Compaction.compactIfNeeded]]).
     *
     * @return the new epoch, or None when under threshold (no-op)
     */
   def compactBm25IndexIfNeeded(spark: org.apache.spark.sql.SparkSession,
       dir: String, maxBatches: Int): Option[Int] =
-    if (Compaction.batchCount(spark, dir, "lists") > maxBatches)
-      Some(compactBm25Index(spark, dir))
-    else None
+    Compaction.compactIfNeeded(spark, dir, "lists", maxBatches)(
+      compactBm25Index(spark, dir))
 
   /** Physically DELETE documents from a stored BM25 index — the lexical
-    * [[Similarity.deleteFromIvfIndex]]: rewrite the current epoch's
-    * postings WITHOUT the given doc ids (anti-join rewrite, bytes gone —
-    * a tombstone mask would not meet the erasure obligation) and
-    * RECOMPUTE the (n_docs, tot_dl) summary from the surviving postings
-    * (deleting documents shifts df, idf, and avgdl for every later
-    * query — the part a postings-only delete would silently corrupt),
-    * committed by the atomic epoch-pointer swap. df needs no stored
-    * fix-up: probes derive it from the pruned postings themselves, which
-    * post-delete ARE the surviving corpus. A post-delete probe is
-    * bit-identical to probing an index built from the surviving corpus
-    * (spec-pinned). Deletion implies compaction; same replay-horizon
-    * contract and index-sized cost envelope.
+    * [[Similarity.deleteFromIvfIndex]]: rewrite the postings WITHOUT the
+    * given doc ids and RECOUNT the (n_docs, tot_dl) summary from the
+    * surviving postings (deleting documents shifts df, idf, and avgdl for
+    * every later query — the part a postings-only delete would silently
+    * corrupt), in one [[Compaction.rewrite]]. The recount is exact over
+    * the surviving FRAME — NOT a subtraction from the old summary (so a
+    * delete of an absent id, or a re-run of the same delete, cannot drift
+    * the stats). df needs no stored fix-up: probes derive it from the
+    * pruned postings themselves, which post-delete ARE the surviving
+    * corpus. A post-delete probe is bit-identical to probing an index
+    * built from the surviving corpus (spec-pinned).
     *
     * @param ids one column `id`; absent ids are ignored (idempotent)
     * @return the new epoch number
     */
   def deleteFromBm25Index(spark: org.apache.spark.sql.SparkSession,
-      dir: String, ids: DataFrame): Int = {
-    val e = Compaction.currentEpoch(spark, dir)
-    val curLists = Compaction.epochPath(dir, "lists", e)
-    val curStats = Compaction.epochPath(dir, "stats", e)
-    val lists = spark.read.parquet(curLists)
-    val survivors = lists
-      .join(ids.select(col("id")), Seq("id"), "left_anti")
-      .select(lists.columns.filter(_ != "batch").map(col): _*) // fold `batch` away
-      .repartition(col("bucket")) // one task → one file per bucket directory
-      .persistScoped() // feeds the postings rewrite AND the stats recount
-    // writePartitioned: a delete that removes EVERY document would leave a
-    // fileless lists dir no later read could infer a schema from — the
-    // empty frame writes unpartitioned (schema-carrying) instead
-    Compaction.writePartitioned(survivors, "bucket",
-      s"${Compaction.epochPath(dir, "lists", e + 1)}/batch=0")
-    // exact integer recount over the surviving FRAME — NOT a subtraction
-    // from the old summary (so a delete of an absent id, or a re-run of
-    // the same delete, cannot drift the stats), and NOT a read-back of the
-    // just-written directory (which is empty/fileless on delete-everything)
-    survivors
-      .groupBy(col("id")).agg(max(col("dl")).as("dl"))
-      .agg(count(lit(1)).as("n_docs"),
-        coalesce(sum(col("dl")), lit(0L)).as("tot_dl"))
-      .write.mode("overwrite")
-      .parquet(s"${Compaction.epochPath(dir, "stats", e + 1)}/batch=0")
-    Compaction.advanceEpoch(spark, dir, e + 1)
-    Compaction.deleteDir(spark, curLists)
-    Compaction.deleteDir(spark, curStats)
-    // external write to a path this session may already have listed:
-    // invalidate Spark's shared file-status cache, or a later read of the
-    // same path can silently serve the pre-write listing
-    spark.catalog.refreshByPath(dir)
-    e + 1
-  }
+      dir: String, ids: DataFrame): Int =
+    Compaction.rewrite(spark, dir, Bm25Lists, Bm25Stats) { cur =>
+      val survivors = cur(Bm25Lists.name)
+        .join(ids.select(col("id")), Seq("id"), "left_anti")
+        .persistScoped() // feeds the postings rewrite AND the stats recount
+      Seq(survivors, docStats(survivors))
+    }
 
   /** BM25 top-k per query against a stored index ([[writeBm25Index]] or
     * the versioned layout): the query frame broadcasts into a
@@ -597,11 +498,9 @@ object Retrieval {
       excludeSelf: Boolean = false): DataFrame = {
     val spark = queries.sparkSession
     val buckets = spark.read.parquet(s"$dir/meta").head().getInt(0)
-    // resolve the epoch pointer first (the snapshot-read side of
-    // [[compactBm25Index]]'s atomic swap); epoch 0 = the unmarked layout
-    val e = Compaction.currentEpoch(spark, dir)
-    val lists = spark.read.parquet(Compaction.epochPath(dir, "lists", e))
-    val stats = spark.read.parquet(Compaction.epochPath(dir, "stats", e))
+    val store = Compaction.snapshot(spark, dir)
+    val lists = store("lists")
+    val stats = store("stats")
       .agg(sum(col("n_docs")).as("n_docs"), sum(col("tot_dl")).as("tot_dl"))
     val qb = queries.withColumn("bucket", termBucket(buckets))
     val matched = lists.join(broadcast(qb), Seq("bucket", "term"))

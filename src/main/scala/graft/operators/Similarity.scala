@@ -355,180 +355,95 @@ object Similarity {
     */
   def writeIvfIndex(corpus: DataFrame, dir: String, nCells: Int,
       trainIters: Int = 0, trainSampleMod: Int = 1): Unit = {
-    // trainIters = 0 → deterministic training-free quantizer (the gate's
-    // oracle-reproducible default); > 0 → k-means-trained centroids
-    // ([[centroidsKMeans]], optionally sample-trained via trainSampleMod)
-    // for recall. Probes don't care which built the index: the stored
-    // layout is identical.
-    val cents =
-      if (trainIters > 0) centroidsKMeans(corpus, nCells, trainIters, trainSampleMod)
-      else centroidsOf(corpus, nCells)
-    cents.write.mode("overwrite").parquet(s"$dir/centroids")
-    // cell as int: parquet partition-column inference reads the directory
-    // values back as ints, so writing ints keeps the probe join key
-    // cast-free (a cast on the partition column can defeat static pruning)
-    narrowBestCell(corpus, cents, "vec_id", "embedding")
-      .withColumn("cell", col("cell").cast("int"))
-      .hint("rebalance", col("cell")) // cell-packed files (see Retrieval.writeBm25Index)
+    ivfAssign(corpus, ivfCentroids(corpus, dir, nCells, trainIters, trainSampleMod))
+      .hint("rebalance", col("cell")) // see Compaction.View.partitioned
       .write.mode("overwrite").partitionBy("cell").parquet(s"$dir/lists")
     corpus.sparkSession.catalog.refreshByPath(dir)
   }
 
-  /** Incrementally extend a stored [[writeIvfIndex]] with new vectors:
-    * assign the BATCH against the stored centroids (broadcast, narrow)
-    * and append to the cell-partitioned lists — ingestion grows the
-    * index by the batch, never rebuilding the corpus assignment (the
-    * similarity sibling of [[Dedup.appendToCorpusIndex]]). The quantizer
-    * is frozen at build time — appended vectors never become centroids —
-    * so probes against build+append equal probes against a from-scratch
-    * build over the union whenever the build corpus contained the
-    * centroid id range (spec-pinned). Appends are NOT replay-safe
-    * (append-mode duplicates on redo); replaying producers use the
-    * batch-versioned layout instead — [[writeIvfIndexVersioned]] +
-    * [[ingestIntoIvfIndex]] (the
-    * [[graft.streaming.EventStreams.dedupIngest]] pattern).
-    */
-  def appendToIvfIndex(newVectors: DataFrame, dir: String): Unit = {
-    val spark = newVectors.sparkSession
-    // guard against the silent-loss corner: after a compaction the live
-    // lists move to lists_e<N> (with a batch= level this flat layout lacks),
-    // so an append into the superseded epoch-0 path would vanish from every
-    // probe (which resolves the pointer first). Compacted indexes are
-    // batch-versioned by construction — ingest into them instead.
-    require(Compaction.currentEpoch(spark, dir) == 0,
-      s"$dir has been compacted (epoch > 0); use ingestIntoIvfIndex " +
-        "with a fresh batch id instead of the flat append")
-    val cents = spark.read.parquet(s"$dir/centroids")
-    narrowBestCell(newVectors, cents, "vec_id", "embedding")
-      .withColumn("cell", col("cell").cast("int"))
-      .hint("rebalance", col("cell")) // cell-packed files (see Retrieval.writeBm25Index)
-      .write.mode("append").partitionBy("cell").parquet(s"$dir/lists")
-    // external write to a path this session may already have listed:
-    // invalidate Spark's shared file-status cache, or a later read of the
-    // same path can silently serve the pre-write listing
-    spark.catalog.refreshByPath(dir)
-  }
+  /** The IVF lists view of the versioned layout. */
+  private val IvfLists = Compaction.View.partitioned("lists", "cell")
 
-  /** Build a stored IVF index in the BATCH-VERSIONED layout — the
-    * replay-safe sibling of [[writeIvfIndex]] for indexes that will be fed
-    * by a (possibly replaying) producer: inverted lists live under
-    * `lists/batch=<id>/cell=<c>/` (the build is batch 0), so an ingest
-    * batch OVERWRITES its own batch partition instead of appending —
-    * a crash-replayed batch converges to identical index contents rather
-    * than duplicating its vectors (exactly the
-    * [[graft.streaming.EventStreams.dedupIngest]] index layout). Probes
-    * ([[ivfTopKAgainstIndex]]) work unchanged: partition discovery reads
-    * `batch` as just another partition column, the probe joins on `cell`,
-    * and cell-directory pruning applies across every batch directory.
+  /** Train (or pick) and store the coarse quantizer. trainIters = 0 →
+    * deterministic training-free quantizer (the gate's oracle-reproducible
+    * default); > 0 → k-means-trained centroids ([[centroidsKMeans]],
+    * optionally sample-trained via trainSampleMod) for recall. Probes
+    * don't care which built the index: the stored layout is identical.
     */
-  def writeIvfIndexVersioned(corpus: DataFrame, dir: String, nCells: Int,
-      trainIters: Int = 0, trainSampleMod: Int = 1): Unit = {
+  private def ivfCentroids(corpus: DataFrame, dir: String, nCells: Int,
+      trainIters: Int, trainSampleMod: Int): DataFrame = {
     val cents =
       if (trainIters > 0) centroidsKMeans(corpus, nCells, trainIters, trainSampleMod)
       else centroidsOf(corpus, nCells)
     cents.write.mode("overwrite").parquet(s"$dir/centroids")
-    narrowBestCell(corpus, cents, "vec_id", "embedding")
-      .withColumn("cell", col("cell").cast("int"))
-      .hint("rebalance", col("cell")) // cell-packed files (see Retrieval.writeBm25Index)
-      .write.mode("overwrite").partitionBy("cell").parquet(s"$dir/lists/batch=0")
-    corpus.sparkSession.catalog.refreshByPath(dir)
+    cents
   }
 
+  /** (vec_id, embedding, cell) against stored centroids. cell as int:
+    * parquet partition-column inference reads the directory values back as
+    * ints, so writing ints keeps the probe join key cast-free (a cast on
+    * the partition column can defeat static pruning).
+    */
+  private def ivfAssign(vectors: DataFrame, cents: DataFrame): DataFrame =
+    narrowBestCell(vectors, cents, "vec_id", "embedding")
+      .withColumn("cell", col("cell").cast("int"))
+
+  /** Build a stored IVF index in the BATCH-VERSIONED layout — the
+    * replay-safe sibling of [[writeIvfIndex]] for indexes that will be fed
+    * by a (possibly replaying) producer: the inverted lists are the
+    * [[Compaction]] store's `lists` view, `lists/batch=<id>/cell=<c>/`,
+    * with the build as batch 0. Probes ([[ivfTopKAgainstIndex]]) work
+    * unchanged: partition discovery reads `batch` as just another
+    * partition column, the probe joins on `cell`, and cell-directory
+    * pruning applies across every batch directory.
+    */
+  def writeIvfIndexVersioned(corpus: DataFrame, dir: String, nCells: Int,
+      trainIters: Int = 0, trainSampleMod: Int = 1): Unit =
+    Compaction.build(corpus.sparkSession, dir, IvfLists -> ivfAssign(corpus,
+      ivfCentroids(corpus, dir, nCells, trainIters, trainSampleMod)))
+
   /** Replay-safe incremental ingestion into a [[writeIvfIndexVersioned]]
-    * index: assign the batch against the FROZEN stored centroids
-    * (broadcast, narrow — same frozen-quantizer semantics as
-    * [[appendToIvfIndex]]) and OVERWRITE this batch's own partition
-    * directory. Re-running the same (batch, batchId) — a streaming
-    * replay after a crash — rewrites the same files and leaves the index
-    * contents identical; per-ingest cost stays ∝ batch.
+    * index ([[Compaction.ingest]]): the batch assigns against the FROZEN
+    * stored centroids (broadcast, narrow) — ingested vectors never become
+    * centroids, so probes against build+ingest equal probes against a
+    * from-scratch build over the union whenever the build corpus contained
+    * the centroid id range (spec-pinned). Per-ingest cost stays ∝ batch.
     */
   def ingestIntoIvfIndex(newVectors: DataFrame, dir: String,
       batchId: Long): Unit = {
-    require(batchId >= 1, s"batch 0 is the build (got $batchId)")
     val spark = newVectors.sparkSession
-    val cents = spark.read.parquet(s"$dir/centroids")
-    val lists = Compaction.epochPath(dir, "lists",
-      Compaction.currentEpoch(spark, dir))
-    narrowBestCell(newVectors, cents, "vec_id", "embedding")
-      .withColumn("cell", col("cell").cast("int"))
-      .hint("rebalance", col("cell")) // cell-packed files (see Retrieval.writeBm25Index)
-      .write.mode("overwrite").partitionBy("cell")
-      .parquet(s"$lists/batch=$batchId")
-    // external write to a path this session may already have listed:
-    // invalidate Spark's shared file-status cache, or a later read of the
-    // same path can silently serve the pre-write listing
-    spark.catalog.refreshByPath(dir)
+    Compaction.ingest(spark, dir, batchId, IvfLists ->
+      ivfAssign(newVectors, spark.read.parquet(s"$dir/centroids")))
   }
 
-  /** Compact a batch-versioned IVF index: rewrite every `batch=<id>`
-    * directory of the current epoch into ONE consolidated batch under the
-    * next epoch (one file per cell via a cell repartition), atomically
-    * swap the `EPOCH` pointer, then drop the superseded epoch — probes
-    * resolve the pointer first, so they see either complete epoch, never a
-    * mix, and probe results are IDENTICAL pre/post (spec-pinned): the rows
-    * are the same, only their file layout changes. This is the maintenance
-    * op that stops per-ingest batch directories from accreting until file
-    * listing dominates probe cost (~2× file-open overhead measured with
-    * just two batches at sf0.1).
-    *
-    * Replay horizon: compaction folds batch ids away, so it must run
-    * BEYOND the producer's replay horizon (after its checkpoint commits) —
-    * a batch replayed after being compacted would re-land beside its
-    * already-folded rows. That is the standard contract (compact only
-    * sealed batches); the streaming sinks here commit their checkpoint
-    * with the batch, so anything older than the last commit is sealed.
+  /** Compact a batch-versioned IVF index ([[Compaction.compact]]): one
+    * file per cell directory, probe results identical pre/post
+    * (spec-pinned). This is the maintenance op that stops per-ingest
+    * batch directories from accreting until file listing dominates probe
+    * cost.
     *
     * @return the new epoch number
     */
   def compactIvfIndex(spark: org.apache.spark.sql.SparkSession,
-      dir: String): Int = {
-    val e = Compaction.currentEpoch(spark, dir)
-    val cur = Compaction.epochPath(dir, "lists", e)
-    val next = Compaction.epochPath(dir, "lists", e + 1)
-    spark.read.parquet(cur)
-      .select(col("vec_id"), col("embedding"), col("cell")) // fold `batch` away
-      .repartition(col("cell")) // one task → one file per cell directory
-      .write.mode("overwrite").partitionBy("cell").parquet(s"$next/batch=0")
-    Compaction.advanceEpoch(spark, dir, e + 1)
-    Compaction.deleteDir(spark, cur)
-    // external write to a path this session may already have listed:
-    // invalidate Spark's shared file-status cache, or a later read of the
-    // same path can silently serve the pre-write listing
-    spark.catalog.refreshByPath(dir)
-    e + 1
-  }
+      dir: String): Int =
+    Compaction.compact(spark, dir, IvfLists)
 
-  /** Auto-compaction trigger: run [[compactIvfIndex]] only when the
-    * current epoch holds more than `maxBatches` sealed batch directories
-    * ([[Compaction.batchCount]]) — the threshold helper ingest drivers
-    * consult after their checkpoint commits (see the consult pattern on
-    * batchCount; compaction must stay beyond the replay horizon).
+  /** Run [[compactIvfIndex]] only when the live epoch holds more than
+    * `maxBatches` sealed batch directories ([[Compaction.compactIfNeeded]]).
     *
     * @return the new epoch, or None when under threshold (no-op)
     */
   def compactIvfIndexIfNeeded(spark: org.apache.spark.sql.SparkSession,
       dir: String, maxBatches: Int): Option[Int] =
-    if (Compaction.batchCount(spark, dir, "lists") > maxBatches)
-      Some(compactIvfIndex(spark, dir))
-    else None
+    Compaction.compactIfNeeded(spark, dir, "lists", maxBatches)(
+      compactIvfIndex(spark, dir))
 
   /** Physically DELETE vectors from a stored IVF index — the
-    * right-to-be-forgotten maintenance op: rewrite the current epoch's
-    * lists WITHOUT the given ids (an anti-join rewrite, not a tombstone
-    * mask — the erasure obligation is on the STORED bytes, which a mask
-    * would not meet), committed by [[compactIvfIndex]]'s atomic
-    * epoch-pointer swap, so probes see the pre-delete or post-delete
-    * index in full, never a mix. Centroids stay FROZEN (deletion is not
-    * retraining — the quantizer contract of [[appendToIvfIndex]]), so a
-    * post-delete probe is bit-identical to probing an index built from
-    * the surviving corpus under the same quantizer (spec-pinned).
-    *
-    * Deletion implies compaction (batch ids fold away into one
-    * consolidated batch), so it shares the replay-horizon contract: run
-    * beyond the producer's replay horizon, or a replayed batch would
-    * resurrect its deleted rows. Cost: one index-sized filter-rewrite —
-    * the compaction envelope; `ids` broadcasts when request-sized (the
-    * usual GDPR case) and hash-joins when not.
+    * right-to-be-forgotten maintenance op ([[Compaction.delete]]).
+    * Centroids stay FROZEN (deletion is not retraining), so a post-delete
+    * probe is bit-identical to probing an index built from the surviving
+    * corpus under the same quantizer (spec-pinned). Cost: one index-sized
+    * filter-rewrite — the compaction envelope.
     *
     * @param ids one column `vec_id`; ids absent from the index are
     *            ignored (idempotent: re-running a delete is a no-op
@@ -536,25 +451,8 @@ object Similarity {
     * @return the new epoch number
     */
   def deleteFromIvfIndex(spark: org.apache.spark.sql.SparkSession,
-      dir: String, ids: DataFrame): Int = {
-    val e = Compaction.currentEpoch(spark, dir)
-    val cur = Compaction.epochPath(dir, "lists", e)
-    // writePartitioned: a delete that removes EVERY vector would leave a
-    // fileless lists dir no later read could infer a schema from
-    Compaction.writePartitioned(
-      spark.read.parquet(cur)
-        .join(ids.select(col("vec_id")), Seq("vec_id"), "left_anti")
-        .select(col("vec_id"), col("embedding"), col("cell"))
-        .repartition(col("cell")), // one task → one file per cell directory
-      "cell", s"${Compaction.epochPath(dir, "lists", e + 1)}/batch=0")
-    Compaction.advanceEpoch(spark, dir, e + 1)
-    Compaction.deleteDir(spark, cur)
-    // external write to a path this session may already have listed:
-    // invalidate Spark's shared file-status cache, or a later read of the
-    // same path can silently serve the pre-write listing
-    spark.catalog.refreshByPath(dir)
-    e + 1
-  }
+      dir: String, ids: DataFrame): Int =
+    Compaction.delete(spark, dir, "vec_id", ids, IvfLists)
 
   /** Probe a stored [[writeIvfIndex]]: per-query top-k over the `nProbe`
     * best cells' inverted lists, identical semantics (and identical
@@ -567,10 +465,7 @@ object Similarity {
       k: Int): DataFrame = {
     val spark = queries.sparkSession
     val cents = spark.read.parquet(s"$dir/centroids")
-    // resolve the epoch pointer first (the snapshot-read side of
-    // [[compactIvfIndex]]'s atomic swap); epoch 0 = the unmarked layout
-    val lists = spark.read.parquet(Compaction.epochPath(dir, "lists",
-      Compaction.currentEpoch(spark, dir)))
+    val lists = Compaction.snapshot(spark, dir)("lists")
     val probes = bestCells(queries, cents, "q_id", "q_vec", nProbe)
       .withColumn("cell", col("cell").cast("int"))
     val scored = lists.join(broadcast(probes), Seq("cell"))
@@ -909,13 +804,11 @@ object Similarity {
 
   /** Persist an IVF-SQ8 index — the FOURTH stored ANN layout (raw q145,
     * PQ, residual-PQ): `centroids/`, `sqstats/` (the 2·dim-double
-    * quantizer — the frozen-model artifact of this family), cell-
-    * partitioned 1-byte-per-dim `codes/batch=0`, and the vec_id-sorted
-    * raw `vectors/batch=0` refine store. Compaction and deletion are the
-    * PQ layout's own schema-preserving ops
-    * ([[compactIvfIndexPQ]]/[[deleteFromIvfIndexPQ]]) — same store
-    * names, column-generic folds — so the lifecycle surface is shared,
-    * not reimplemented.
+    * quantizer — the frozen-model artifact of this family), and the PQ
+    * layout's two store views: cell-partitioned 1-byte-per-dim `codes`
+    * and the vec_id-sorted raw `vectors` refine store. Compaction and
+    * deletion are the PQ layout's own ops
+    * ([[compactIvfIndexPQ]]/[[deleteFromIvfIndexPQ]]).
     */
   def writeIvfIndexSQ(corpus: DataFrame, dir: String, nCells: Int): Unit = {
     val spark = corpus.sparkSession
@@ -926,16 +819,11 @@ object Similarity {
     val stats = sq8Stats(lists).persistScoped()
     stats.coalesce(1).write.mode("overwrite").parquet(s"$dir/sqstats")
     val (mnL, stepL) = sq8Lits(stats)
-    lists.select(col("vec_id"),
+    Compaction.build(spark, dir,
+      PqCodes -> lists.select(col("vec_id"),
         sq8EncodeCol(col("embedding"), mnL, stepL).as("codes"),
-        col("cell").cast("int").as("cell"))
-      .hint("rebalance", col("cell")) // cell-packed files (see Retrieval.writeBm25Index)
-      .write.mode("overwrite").partitionBy("cell").parquet(s"$dir/codes/batch=0")
-    corpus.select(col("vec_id"), col("embedding"))
-      .repartitionByRange(col("vec_id"))
-      .sortWithinPartitions(col("vec_id"))
-      .write.mode("overwrite").parquet(s"$dir/vectors/batch=0")
-    spark.catalog.refreshByPath(dir)
+        col("cell").cast("int").as("cell")),
+      PqVectors -> sortedVectors(corpus))
   }
 
   /** Replay-safe incremental ingestion into a [[writeIvfIndexSQ]] index:
@@ -945,27 +833,19 @@ object Similarity {
     * value outside a dim's build-time [mn, mx] clamps to the range edge,
     * the FAISS SQ behavior — quantizer drift is a rebuild-and-swap
     * decision, surfaced by monitoring clamp rates, never an in-stream
-    * stats update), then OVERWRITES its own batch partitions.
+    * stats update), then ingests both views ([[Compaction.ingest]]).
     */
   def ingestIntoIvfIndexSQ(newVectors: DataFrame, dir: String,
       batchId: Long): Unit = {
-    require(batchId >= 1, s"batch 0 is the build (got $batchId)")
     val spark = newVectors.sparkSession
     val cents = spark.read.parquet(s"$dir/centroids")
     val (mnL, stepL) = sq8Lits(spark.read.parquet(s"$dir/sqstats"))
-    val e = Compaction.currentEpoch(spark, dir)
-    narrowBestCell(newVectors, cents, "vec_id", "embedding")
-      .select(col("vec_id"),
-        sq8EncodeCol(col("embedding"), mnL, stepL).as("codes"),
-        col("cell").cast("int").as("cell"))
-      .hint("rebalance", col("cell")) // cell-packed files (see Retrieval.writeBm25Index)
-      .write.mode("overwrite").partitionBy("cell")
-      .parquet(s"${Compaction.epochPath(dir, "codes", e)}/batch=$batchId")
-    newVectors.select(col("vec_id"), col("embedding"))
-      .sortWithinPartitions(col("vec_id"))
-      .write.mode("overwrite")
-      .parquet(s"${Compaction.epochPath(dir, "vectors", e)}/batch=$batchId")
-    spark.catalog.refreshByPath(dir)
+    Compaction.ingest(spark, dir, batchId,
+      PqCodes -> narrowBestCell(newVectors, cents, "vec_id", "embedding")
+        .select(col("vec_id"),
+          sq8EncodeCol(col("embedding"), mnL, stepL).as("codes"),
+          col("cell").cast("int").as("cell")),
+      PqVectors -> newVectors.select(col("vec_id"), col("embedding")))
   }
 
   /** Probe a [[writeIvfIndexSQ]] index: reconstruct-and-score against the
@@ -982,8 +862,8 @@ object Similarity {
     val spark = queries.sparkSession
     val cents = spark.read.parquet(s"$dir/centroids")
     val (mnL, stepL) = sq8Lits(spark.read.parquet(s"$dir/sqstats"))
-    val epoch = Compaction.currentEpoch(spark, dir)
-    val codes = spark.read.parquet(Compaction.epochPath(dir, "codes", epoch))
+    val store = Compaction.snapshot(spark, dir)
+    val codes = store("codes")
     val probes = bestCells(queries, cents, "q_id", "q_vec", nProbe)
       .withColumn("cell", col("cell").cast("int"))
     val q0 = queries.select(col("q_id"), col("q_vec"),
@@ -1001,7 +881,7 @@ object Similarity {
       .persistScoped() // feeds the id fetch AND the exact-rerank join
     val idsDf = short.select(col("vec_id")).distinct()
     val capped = idsDf.limit(inListMax + 1).collect()
-    val vecStore = spark.read.parquet(Compaction.epochPath(dir, "vectors", epoch))
+    val vecStore = store("vectors")
     val raw =
       if (capped.length <= inListMax)
         vecStore.filter(col("vec_id").isin(capped.map(_.getLong(0)).toSeq: _*))
@@ -1079,92 +959,72 @@ object Similarity {
       .toDF("m_sub", "n_codes", "sub_dim", "perm")
       .write.mode("overwrite").parquet(s"$dir/meta")
     val cb = collectCodebooks(cbDf, mSub, nCodes)
-    // batch-versioned from the start (the writeIvfIndexVersioned layout):
-    // the build is batch 0, so replaying producers can ingest with
-    // [[ingestIntoIvfIndexPQ]] and [[compactIvfIndexPQ]] can epoch-swap
-    narrowBestCell(corpus, cents, "vec_id", "embedding")
+    // batch-versioned from the start: the build is batch 0 of the store,
+    // so replaying producers can ingest with [[ingestIntoIvfIndexPQ]] and
+    // [[compactIvfIndexPQ]] can epoch-swap
+    Compaction.build(spark, dir,
+      PqCodes -> pqEncode(corpus, cents, cb, perm),
+      PqVectors -> sortedVectors(corpus))
+  }
+
+  /** The PQ layouts' (PQ, residual PQ, SQ8) two store views: the scanned
+    * cell-partitioned `codes` and the raw `vectors` refine store. Ingests
+    * sort the vectors within the batch; rewrites (and the build,
+    * [[sortedVectors]]) sort them globally by vec_id, so the refine
+    * fetch's row-group pruning bites. Rewrites keep every column, so the
+    * residual layout's n2x survives compaction and deletion.
+    */
+  private val PqCodes = Compaction.View.partitioned("codes", "cell")
+  private val PqVectors = Compaction.View("vectors",
+    ingestLayout = _.sortWithinPartitions(col("vec_id")),
+    rewriteLayout = _.repartitionByRange(col("vec_id"))
+      .sortWithinPartitions(col("vec_id")))
+
+  /** The corpus's raw vectors in the globally sorted refine layout. */
+  private def sortedVectors(corpus: DataFrame): DataFrame =
+    PqVectors.rewriteLayout(corpus.select(col("vec_id"), col("embedding")))
+
+  /** (vec_id, codes, cell): cell assignment against the frozen centroids
+    * and PQ encoding against the frozen codebooks, in one narrow pass.
+    */
+  private def pqEncode(vectors: DataFrame, cents: DataFrame,
+      cb: Array[Array[Array[Float]]], perm: Option[Array[Int]]): DataFrame =
+    narrowBestCell(vectors, cents, "vec_id", "embedding")
       .withColumn("cell", col("cell").cast("int"))
       .withColumn("codes",
         graft.functions.pq_encode(permuteVec(col("embedding"), perm), cb))
       .select(col("vec_id"), col("codes"), col("cell"))
-      .hint("rebalance", col("cell")) // cell-packed files (see Retrieval.writeBm25Index)
-      .write.mode("overwrite").partitionBy("cell").parquet(s"$dir/codes/batch=0")
-    corpus.select(col("vec_id"), col("embedding"))
-      .repartitionByRange(col("vec_id"))
-      .sortWithinPartitions(col("vec_id"))
-      .write.mode("overwrite").parquet(s"$dir/vectors/batch=0")
-    spark.catalog.refreshByPath(dir)
-  }
 
-  /** Replay-safe incremental ingestion into a [[writeIvfIndexPQ]] index:
-    * the batch assigns against the FROZEN stored centroids and encodes
-    * against the FROZEN stored codebooks (both broadcast; the quantizer
-    * contract of [[appendToIvfIndex]] extended to the code level), then
-    * OVERWRITES its own batch partitions — codes under
-    * `codes/batch=<id>/cell=<c>/`, raw vectors (sorted within the batch,
-    * so the refine fetch's row-group pruning still bites) under
-    * `vectors/batch=<id>/`. A crash-replayed batch rewrites the same
-    * partitions and leaves the index contents identical.
+  /** Replay-safe incremental ingestion into a [[writeIvfIndexPQ]] index
+    * ([[Compaction.ingest]] of both views): the batch assigns against the
+    * FROZEN stored centroids and encodes against the FROZEN stored
+    * codebooks (both broadcast; the frozen-quantizer contract of
+    * [[ingestIntoIvfIndex]] extended to the code level).
     */
   def ingestIntoIvfIndexPQ(newVectors: DataFrame, dir: String,
       batchId: Long): Unit = {
-    require(batchId >= 1, s"batch 0 is the build (got $batchId)")
     val spark = newVectors.sparkSession
-    val cents = spark.read.parquet(s"$dir/centroids")
     val meta = spark.read.parquet(s"$dir/meta").head()
     val cb = collectCodebooks(spark.read.parquet(s"$dir/codebooks"),
       meta.getAs[Int]("m_sub"), meta.getAs[Int]("n_codes"))
-    val e = Compaction.currentEpoch(spark, dir)
-    narrowBestCell(newVectors, cents, "vec_id", "embedding")
-      .withColumn("cell", col("cell").cast("int"))
-      .withColumn("codes", graft.functions.pq_encode(
-        permuteVec(col("embedding"), metaPerm(meta)), cb))
-      .select(col("vec_id"), col("codes"), col("cell"))
-      .hint("rebalance", col("cell")) // cell-packed files (see Retrieval.writeBm25Index)
-      .write.mode("overwrite").partitionBy("cell")
-      .parquet(s"${Compaction.epochPath(dir, "codes", e)}/batch=$batchId")
-    newVectors.select(col("vec_id"), col("embedding"))
-      .sortWithinPartitions(col("vec_id"))
-      .write.mode("overwrite")
-      .parquet(s"${Compaction.epochPath(dir, "vectors", e)}/batch=$batchId")
-    spark.catalog.refreshByPath(dir)
+    Compaction.ingest(spark, dir, batchId,
+      PqCodes -> pqEncode(newVectors, spark.read.parquet(s"$dir/centroids"),
+        cb, metaPerm(meta)),
+      PqVectors -> newVectors.select(col("vec_id"), col("embedding")))
   }
 
-  /** Compact a PQ index's batch directories — [[compactIvfIndex]]'s
-    * epoch-pointer commit applied to BOTH stores: codes consolidate to one
-    * batch (one file per cell), the raw vectors re-sort globally by
-    * vec_id (restoring the tightest row-group pruning for the refine
-    * fetch, which per-batch sorting can only approximate). Probe results
-    * identical pre/post (spec-pinned); same replay-horizon contract.
+  /** Compact a PQ index's batch directories ([[Compaction.compact]] of
+    * both views): codes consolidate to one file per cell, the raw vectors
+    * re-sort globally by vec_id (restoring the tightest row-group pruning
+    * for the refine fetch, which per-batch sorting can only approximate).
+    * Probe results identical pre/post (spec-pinned). SQ8 and residual-PQ
+    * indexes compact through here too.
     *
     * @return the new epoch number
     */
   def compactIvfIndexPQ(spark: org.apache.spark.sql.SparkSession,
-      dir: String): Int = {
-    val e = Compaction.currentEpoch(spark, dir)
-    val curCodes = Compaction.epochPath(dir, "codes", e)
-    val curVecs = Compaction.epochPath(dir, "vectors", e)
-    // schema-preserving fold (drop only the batch level): the residual
-    // layout ([[writeIvfIndexPQR]]) carries an extra n2x column the
-    // compaction must not lose — both PQ layouts compact through here
-    val curCodesDf = spark.read.parquet(curCodes)
-    curCodesDf
-      .select(curCodesDf.columns.filter(_ != "batch").map(col): _*)
-      .repartition(col("cell"))
-      .write.mode("overwrite").partitionBy("cell")
-      .parquet(s"${Compaction.epochPath(dir, "codes", e + 1)}/batch=0")
-    spark.read.parquet(curVecs)
-      .select(col("vec_id"), col("embedding"))
-      .repartitionByRange(col("vec_id"))
-      .sortWithinPartitions(col("vec_id"))
-      .write.mode("overwrite")
-      .parquet(s"${Compaction.epochPath(dir, "vectors", e + 1)}/batch=0")
-    Compaction.advanceEpoch(spark, dir, e + 1)
-    Compaction.deleteDir(spark, curCodes)
-    Compaction.deleteDir(spark, curVecs)
-    spark.catalog.refreshByPath(dir)
-    e + 1
-  }
+      dir: String): Int =
+    Compaction.compact(spark, dir, PqCodes, PqVectors)
 
   /** [[compactIvfIndexIfNeeded]] for the PQ layout (thresholds on the
     * codes store's batch count; codes and vectors always compact
@@ -1172,51 +1032,21 @@ object Similarity {
     */
   def compactIvfIndexPQIfNeeded(spark: org.apache.spark.sql.SparkSession,
       dir: String, maxBatches: Int): Option[Int] =
-    if (Compaction.batchCount(spark, dir, "codes") > maxBatches)
-      Some(compactIvfIndexPQ(spark, dir))
-    else None
+    Compaction.compactIfNeeded(spark, dir, "codes", maxBatches)(
+      compactIvfIndexPQ(spark, dir))
 
   /** [[deleteFromIvfIndex]] for the PQ layout: the anti-join rewrite
-    * applied to BOTH stores — the deleted vectors' CODES and their RAW
+    * applied to BOTH views — the deleted vectors' CODES and their RAW
     * vectors must go (the refine store holds the actual embeddings; a
     * codes-only delete would leave the data recoverable) — under one
-    * atomic epoch swap. Centroids and codebooks stay frozen; the vectors
-    * store re-sorts globally by vec_id like [[compactIvfIndexPQ]], so the
-    * refine fetch keeps tight row-group pruning. Same replay-horizon
-    * contract and cost envelope as compaction.
+    * epoch swap. Centroids and codebooks stay frozen.
     *
     * @param ids one column `vec_id`
     * @return the new epoch number
     */
   def deleteFromIvfIndexPQ(spark: org.apache.spark.sql.SparkSession,
-      dir: String, ids: DataFrame): Int = {
-    val del = ids.select(col("vec_id"))
-    val e = Compaction.currentEpoch(spark, dir)
-    val curCodes = Compaction.epochPath(dir, "codes", e)
-    val curVecs = Compaction.epochPath(dir, "vectors", e)
-    // writePartitioned: delete-everything must leave a readable codes dir.
-    // Schema-preserving anti-join (drop only batch) — the residual
-    // layout's n2x column survives deletion like every other column
-    val curCodesDf = spark.read.parquet(curCodes)
-    Compaction.writePartitioned(
-      curCodesDf
-        .join(del, Seq("vec_id"), "left_anti")
-        .select(curCodesDf.columns.filter(_ != "batch").map(col): _*)
-        .repartition(col("cell")),
-      "cell", s"${Compaction.epochPath(dir, "codes", e + 1)}/batch=0")
-    spark.read.parquet(curVecs)
-      .join(del, Seq("vec_id"), "left_anti")
-      .select(col("vec_id"), col("embedding"))
-      .repartitionByRange(col("vec_id"))
-      .sortWithinPartitions(col("vec_id"))
-      .write.mode("overwrite")
-      .parquet(s"${Compaction.epochPath(dir, "vectors", e + 1)}/batch=0")
-    Compaction.advanceEpoch(spark, dir, e + 1)
-    Compaction.deleteDir(spark, curCodes)
-    Compaction.deleteDir(spark, curVecs)
-    spark.catalog.refreshByPath(dir)
-    e + 1
-  }
+      dir: String, ids: DataFrame): Int =
+    Compaction.delete(spark, dir, "vec_id", ids, PqCodes, PqVectors)
 
   /** The stored dim permutation from a meta row — None (identity) for
     * indexes written before the perm column existed, or with an empty one.
@@ -1282,10 +1112,8 @@ object Similarity {
     val meta = spark.read.parquet(s"$dir/meta").head()
     val (mSub, nCodes, subDim) =
       (meta.getAs[Int]("m_sub"), meta.getAs[Int]("n_codes"), meta.getAs[Int]("sub_dim"))
-    // resolve the epoch pointer first (the [[compactIvfIndexPQ]] snapshot
-    // commit); epoch 0 = the build layout
-    val epoch = Compaction.currentEpoch(spark, dir)
-    val codes = spark.read.parquet(Compaction.epochPath(dir, "codes", epoch))
+    val store = Compaction.snapshot(spark, dir)
+    val codes = store("codes")
     val cbRows = spark.read.parquet(s"$dir/codebooks")
     // stride guard (the collectCodebooks check, probe-side): PqAdcExpr
     // indexes lut[m·nCodes + code], so a codebook short of meta's grid
@@ -1354,7 +1182,7 @@ object Similarity {
     // to a semi-join of the id set against the sorted vectors store —
     // fully distributed, losing only row-group pruning on that path.
     val capped = idsDf.limit(inListMax + 1).collect()
-    val vecStore = spark.read.parquet(Compaction.epochPath(dir, "vectors", epoch))
+    val vecStore = store("vectors")
     val raw =
       if (capped.length <= inListMax)
         vecStore.filter(col("vec_id").isin(capped.map(_.getLong(0)).toSeq: _*))
@@ -1375,8 +1203,8 @@ object Similarity {
     * `codes/batch=0/cell=…` carrying (vec_id, codes, n2x) — the EXACT
     * per-vector norm rides beside the codes, the FAISS stored-norm
     * column cosine ADC needs — and `vectors/batch=0` for the exact
-    * refine. Same batch-versioned, cell-partitioned layout as
-    * [[writeIvfIndexPQ]], so probes DPP-prune identically.
+    * refine. The same store views as [[writeIvfIndexPQ]], so probes
+    * DPP-prune identically.
     */
   def writeIvfIndexPQR(corpus: DataFrame, dir: String, nCells: Int,
       mSub: Int, nCodes: Int, trainIters: Int = 0): Unit = {
@@ -1425,17 +1253,12 @@ object Similarity {
       .agg(sort_array(collect_list(struct(col("m"), col("code")))).as("e"))
       .select(col("vec_id"),
         expr("transform(e, x -> CAST(x.code AS INT))").as("codes"))
-    codes.join(resid.select(col("vec_id"), col("cell"), col("n2x")),
-        Seq("vec_id"))
-      .select(col("vec_id"), col("codes"), col("n2x"),
-        col("cell").cast("int").as("cell"))
-      .hint("rebalance", col("cell")) // cell-packed files (see Retrieval.writeBm25Index)
-      .write.mode("overwrite").partitionBy("cell").parquet(s"$dir/codes/batch=0")
-    corpus.select(col("vec_id"), col("embedding"))
-      .repartitionByRange(col("vec_id"))
-      .sortWithinPartitions(col("vec_id"))
-      .write.mode("overwrite").parquet(s"$dir/vectors/batch=0")
-    spark.catalog.refreshByPath(dir)
+    Compaction.build(spark, dir,
+      PqCodes -> codes.join(resid.select(col("vec_id"), col("cell"), col("n2x")),
+          Seq("vec_id"))
+        .select(col("vec_id"), col("codes"), col("n2x"),
+          col("cell").cast("int").as("cell")),
+      PqVectors -> sortedVectors(corpus))
   }
 
   /** Replay-safe incremental ingestion into a [[writeIvfIndexPQR]] index:
@@ -1443,15 +1266,13 @@ object Similarity {
     * residuals against them, and encodes against the FROZEN stored
     * residual codebooks (both broadcast — the quantizer contract of
     * [[ingestIntoIvfIndexPQ]] at the residual level), computing each
-    * vector's EXACT norm at encode time; then OVERWRITES its own batch
-    * partitions, so a crash-replayed batch converges to identical index
-    * contents. Compaction and deletion are the PQ layout's own
-    * ([[compactIvfIndexPQ]]/[[deleteFromIvfIndexPQ]] — schema-preserving,
-    * so the n2x column rides through both).
+    * vector's EXACT norm at encode time; then ingests both views
+    * ([[Compaction.ingest]]). Compaction and deletion are the PQ layout's
+    * own ([[compactIvfIndexPQ]]/[[deleteFromIvfIndexPQ]]; the n2x column
+    * rides through both).
     */
   def ingestIntoIvfIndexPQR(newVectors: DataFrame, dir: String,
       batchId: Long): Unit = {
-    require(batchId >= 1, s"batch 0 is the build (got $batchId)")
     val spark = newVectors.sparkSession
     val cents = spark.read.parquet(s"$dir/centroids")
     val meta = spark.read.parquet(s"$dir/meta").head()
@@ -1460,7 +1281,6 @@ object Similarity {
     val cbRows = spark.read.parquet(s"$dir/codebooks")
     require(cbRows.count() == mSub.toLong * nCodes,
       s"codebook rows != m_sub×n_codes ($mSub×$nCodes) at $dir")
-    val e = Compaction.currentEpoch(spark, dir)
     val centsD = cents.select(col("cent_id"),
       expr("transform(cvec, x -> CAST(x AS DOUBLE))").as("cv"))
     val resid = narrowBestCell(newVectors, cents, "vec_id", "embedding")
@@ -1474,22 +1294,16 @@ object Similarity {
     val sub = resid.select(col("vec_id"),
       explode(expr(s"sequence(0, ${mSub - 1})")).as("m"),
       expr(s"slice(rv, m * $subDim + 1, $subDim)").as("sv"))
-    pqAssign(sub, cbRows)
-      .groupBy(col("vec_id"))
-      .agg(sort_array(collect_list(struct(col("m"), col("code")))).as("e"))
-      .select(col("vec_id"),
-        expr("transform(e, x -> CAST(x.code AS INT))").as("codes"))
-      .join(resid.select(col("vec_id"), col("cell"), col("n2x")), Seq("vec_id"))
-      .select(col("vec_id"), col("codes"), col("n2x"),
-        col("cell").cast("int").as("cell"))
-      .hint("rebalance", col("cell")) // cell-packed files (see Retrieval.writeBm25Index)
-      .write.mode("overwrite").partitionBy("cell")
-      .parquet(s"${Compaction.epochPath(dir, "codes", e)}/batch=$batchId")
-    newVectors.select(col("vec_id"), col("embedding"))
-      .sortWithinPartitions(col("vec_id"))
-      .write.mode("overwrite")
-      .parquet(s"${Compaction.epochPath(dir, "vectors", e)}/batch=$batchId")
-    spark.catalog.refreshByPath(dir)
+    Compaction.ingest(spark, dir, batchId,
+      PqCodes -> pqAssign(sub, cbRows)
+        .groupBy(col("vec_id"))
+        .agg(sort_array(collect_list(struct(col("m"), col("code")))).as("e"))
+        .select(col("vec_id"),
+          expr("transform(e, x -> CAST(x.code AS INT))").as("codes"))
+        .join(resid.select(col("vec_id"), col("cell"), col("n2x")), Seq("vec_id"))
+        .select(col("vec_id"), col("codes"), col("n2x"),
+          col("cell").cast("int").as("cell")),
+      PqVectors -> newVectors.select(col("vec_id"), col("embedding")))
   }
 
   /** Probe a [[writeIvfIndexPQR]] index — [[ivfTopKAgainstIndexPQ]]'s
@@ -1507,8 +1321,8 @@ object Similarity {
     val meta = spark.read.parquet(s"$dir/meta").head()
     val (mSub, nCodes, subDim) =
       (meta.getAs[Int]("m_sub"), meta.getAs[Int]("n_codes"), meta.getAs[Int]("sub_dim"))
-    val epoch = Compaction.currentEpoch(spark, dir)
-    val codes = spark.read.parquet(Compaction.epochPath(dir, "codes", epoch))
+    val store = Compaction.snapshot(spark, dir)
+    val codes = store("codes")
     val cbRows = spark.read.parquet(s"$dir/codebooks")
     val cbFp = artifactFingerprint(spark, s"$dir/codebooks")
     if (!cbGridOk.contains((dir, mSub, nCodes, cbFp))) {
@@ -1554,7 +1368,7 @@ object Similarity {
       .persistScoped() // feeds the id fetch AND the exact-rerank join
     val idsDf = short.select(col("vec_id")).distinct()
     val capped = idsDf.limit(inListMax + 1).collect()
-    val vecStore = spark.read.parquet(Compaction.epochPath(dir, "vectors", epoch))
+    val vecStore = store("vectors")
     val raw =
       if (capped.length <= inListMax)
         vecStore.filter(col("vec_id").isin(capped.map(_.getLong(0)).toSeq: _*))

@@ -59,15 +59,19 @@ object Sketches {
   // ===== stored sketch lifecycle ==========================================
   // CountMin is LINEAR: the sketch of a union is the cell-wise SUM of the
   // parts' sketches. That makes the stored form trivially incremental —
-  // each producer batch writes ITS OWN sketch under `cells/batch=<id>`
-  // (overwrite-own-partition, so a crash-replayed batch converges to
-  // identical contents — the index families' replay contract), and a
-  // probe sums cells across batches before taking the per-key min. A
-  // store with any batch layout estimates EXACTLY what a one-shot sketch
-  // of the union would — the property the gate row pins.
+  // each producer batch writes ITS OWN sketch as one batch of the
+  // [[Compaction]] store's `cells` view, and a probe sums cells across
+  // batches before taking the per-key min. A store with any batch layout
+  // estimates EXACTLY what a one-shot sketch of the union would — the
+  // property the gate row pins.
 
-  /** Build a stored CountMin sketch at `dir`: `cells/batch=0` + one meta
-    * row (depth, width) probes must replay with.
+  /** The sketch store's one view; a compacted sketch is ≤ d·w rows, so
+    * one file is the whole point.
+    */
+  private val Cells = Compaction.View("cells", rewriteLayout = _.coalesce(1))
+
+  /** Build a stored CountMin sketch at `dir`: the `cells` view's batch 0 +
+    * one meta row (depth, width) probes must replay with.
     */
   def writeCountMin(df: DataFrame, key: Column, depth: Int, width: Int,
       dir: String): Unit = {
@@ -75,83 +79,61 @@ object Sketches {
     import spark.implicits._
     Seq((depth, width)).toDF("depth", "width")
       .write.mode("overwrite").parquet(s"$dir/meta")
-    countMin(df, key, depth, width)
-      .write.mode("overwrite").parquet(s"$dir/cells/batch=0")
-    spark.catalog.refreshByPath(dir)
+    Compaction.build(spark, dir, Cells -> countMin(df, key, depth, width))
   }
 
-  /** Replay-safe incremental ingestion: the batch's own sketch OVERWRITES
-    * `cells/batch=<id>` — linearity makes the summed store identical to a
-    * from-scratch sketch of the union, and a replayed batch rewrites the
-    * same cells. Batches must be whole-unit (a row lands in exactly one
-    * batch ever), the usual producer contract.
+  /** Replay-safe incremental ingestion ([[Compaction.ingest]]) of the
+    * batch's own sketch — linearity makes the summed store identical to a
+    * from-scratch sketch of the union. Batches must be whole-unit (a row
+    * lands in exactly one batch ever), the usual producer contract.
     */
   def ingestIntoCountMin(batch: DataFrame, key: Column, dir: String,
       batchId: Long): Unit = {
-    require(batchId >= 1, s"batch 0 is the build (got $batchId)")
     val spark = batch.sparkSession
-    val e = Compaction.currentEpoch(spark, dir)
     val m = spark.read.parquet(s"$dir/meta").head()
-    countMin(batch, key, m.getAs[Int]("depth"), m.getAs[Int]("width"))
-      .write.mode("overwrite")
-      .parquet(s"${Compaction.epochPath(dir, "cells", e)}/batch=$batchId")
-    spark.catalog.refreshByPath(dir)
+    Compaction.ingest(spark, dir, batchId,
+      Cells -> countMin(batch, key, m.getAs[Int]("depth"), m.getAs[Int]("width")))
   }
 
   /** Point-query a stored sketch: cells SUM across batch partitions
     * (linearity), then the per-key min — identical estimates to a
-    * one-shot [[countMin]] over everything ever ingested. Epoch-aware:
-    * probes resolve the `EPOCH` pointer first (the versioned-index read
-    * contract), so a concurrent [[compactCountMin]] is invisible.
+    * one-shot [[countMin]] over everything ever ingested. An
+    * epoch-resolved read ([[Compaction.snapshot]]), so a concurrent
+    * [[compactCountMin]] is invisible.
     */
   def countMinEstimateAgainstStore(dir: String, keys: DataFrame,
       key: Column): DataFrame = {
     val spark = keys.sparkSession
-    val e = Compaction.currentEpoch(spark, dir)
     val m = spark.read.parquet(s"$dir/meta").head()
-    val cells = spark.read.parquet(Compaction.epochPath(dir, "cells", e))
+    val cells = Compaction.snapshot(spark, dir)(Cells.name)
       .groupBy(col("row"), col("bucket"))
       .agg(sum(col("c")).as("c"))
     countMinEstimate(cells, keys, key,
       m.getAs[Int]("depth"), m.getAs[Int]("width"))
   }
 
-  /** Fold every batch's cells into ONE summed `batch=0` under the next
-    * epoch (atomic pointer swap, old epoch deleted after) — the missing
-    * maintenance op of the sketch store: probes SUM cells across every
-    * `batch=N` directory, so an ever-ingesting store's probe cost grows
-    * with batch count forever without this. CountMin LINEARITY makes the
-    * fold trivially exact: the compacted store's summed cells are
-    * bit-identical to the uncompacted store's (the same integer sums,
-    * associativity) — probe-identical by construction, spec-pinned.
-    * Replay horizon: like every index compaction, run only past the
-    * producer's committed batches.
+  /** Fold every batch's cells into ONE summed batch of the next epoch
+    * ([[Compaction.rewrite]]) — the maintenance op of the sketch store:
+    * probes SUM cells across every batch directory, so an ever-ingesting
+    * store's probe cost grows with batch count forever without this.
+    * CountMin LINEARITY makes the fold trivially exact: the compacted
+    * store's summed cells are bit-identical to the uncompacted store's
+    * (the same integer sums, associativity) — probe-identical by
+    * construction, spec-pinned.
     */
   def compactCountMin(spark: org.apache.spark.sql.SparkSession,
-      dir: String): Int = {
-    val e = Compaction.currentEpoch(spark, dir)
-    spark.read.parquet(Compaction.epochPath(dir, "cells", e))
-      .groupBy(col("row"), col("bucket"))
-      .agg(sum(col("c")).as("c"))
-      .coalesce(1) // ≤ d·w rows — one file is the whole point
-      .write.mode("overwrite")
-      .parquet(s"${Compaction.epochPath(dir, "cells", e + 1)}/batch=0")
-    Compaction.advanceEpoch(spark, dir, e + 1)
-    Compaction.deleteDir(spark, Compaction.epochPath(dir, "cells", e))
-    spark.catalog.refreshByPath(dir)
-    e + 1
-  }
+      dir: String): Int =
+    Compaction.rewrite(spark, dir, Cells)(cur => Seq(
+      cur(Cells.name).groupBy(col("row"), col("bucket"))
+        .agg(sum(col("c")).as("c"))))
 
-  /** Auto-compaction trigger — [[Similarity.compactIvfIndexIfNeeded]]'s
-    * pattern on the sketch store: compact when the current epoch holds
-    * more than `maxBatches` sealed batch directories. Consult AFTER the
-    * producer's checkpoint commit (the [[Compaction.batchCount]] contract).
+  /** Auto-compaction trigger on the sketch store
+    * ([[Compaction.compactIfNeeded]]).
     */
   def compactCountMinIfNeeded(spark: org.apache.spark.sql.SparkSession,
       dir: String, maxBatches: Int): Option[Int] =
-    if (Compaction.batchCount(spark, dir, "cells") > maxBatches)
-      Some(compactCountMin(spark, dir))
-    else None
+    Compaction.compactIfNeeded(spark, dir, Cells.name, maxBatches)(
+      compactCountMin(spark, dir))
 
   /** Point-query a [[countMin]] sketch for a set of keys: estimate =
     * min over the d rows of the key's bucket counters (absent cells are

@@ -1553,11 +1553,11 @@ object Pipeline {
 
   // ===== q146 incremental ANN-index ingestion ============================
   // The ingestion companion of q145 (and q74/q83's similarity sibling):
-  // the index is built on the INITIAL corpus slice and each later batch
-  // is appended — assignment of the batch against the frozen stored
-  // centroids, append to the cell-partitioned lists. Cost per ingest is
-  // ∝ batch; the corpus assignment is never recomputed. Probing
-  // build+append must equal probing a from-scratch build over the union:
+  // the versioned index is built on the INITIAL corpus slice and the rest
+  // is ingested as batch 1 — assignment of the batch against the frozen
+  // stored centroids, written as its own cell-partitioned batch. Cost per
+  // ingest is ∝ batch; the corpus assignment is never recomputed. Probing
+  // build+ingest must equal probing a from-scratch build over the union:
   // the initial slice deliberately contains the whole centroid id range
   // (vec_id < IvfCells), so the frozen quantizer IS the full-corpus
   // quantizer and q44's from-scratch oracle applies verbatim.
@@ -1566,15 +1566,15 @@ object Pipeline {
     val e = graft.Fanout(t.embeddings)
     val queries = e.filter(col("vec_id") % QueryMod === 0)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_vec"))
-    // the build+append sequence is non-idempotent — cachedIndexDir's
-    // temp-dir + atomic-rename makes the pair all-or-nothing
-    val dir = cachedIndexDir(t.dir, s"ivf_inc_v3_$IvfCells") { d =>
+    // cachedIndexDir's temp-dir + atomic-rename makes the build+ingest
+    // pair all-or-nothing
+    val dir = cachedIndexDir(t.dir, s"ivf_inc_v4_$IvfCells") { d =>
       // initial slice keeps vec_id < IvfCells so the frozen centroids
       // equal the full-corpus centroids; the batch is everything else
       val initial = e.filter(col("vec_id") < IvfCells || col("vec_id") % 10 =!= 7)
       val batch = e.filter(col("vec_id") >= IvfCells && col("vec_id") % 10 === 7)
-      Similarity.writeIvfIndex(initial, d, IvfCells)
-      Similarity.appendToIvfIndex(batch, d)
+      Similarity.writeIvfIndexVersioned(initial, d, IvfCells)
+      Similarity.ingestIntoIvfIndex(batch, d, 1L)
     }
     Similarity.ivfTopKAgainstIndex(queries, dir, IvfProbe, TopK)
   }
@@ -7223,21 +7223,22 @@ object Pipeline {
 
   // ===== q155 incremental BM25-index ingestion ===========================
   // The ingestion companion of q154 (and q146's lexical sibling): the
-  // index is built on the INITIAL corpus slice and the remaining docs
-  // are appended — postings to their bucket partitions, the batch's
-  // stats row beside the build's. Unlike the IVF case there is no frozen
-  // quantizer: df is counted from the postings and stats rows sum, so
-  // build+append equals a from-scratch build over the union EXACTLY and
-  // q152's oracle applies verbatim. Cost per ingest ∝ batch.
+  // versioned index is built on the INITIAL corpus slice and the
+  // remaining docs are ingested as batch 1 — postings to their own bucket
+  // partitions, the batch's stats row beside the build's. Unlike the IVF
+  // case there is no frozen quantizer: df is counted from the postings
+  // and stats rows sum, so build+ingest equals a from-scratch build over
+  // the union EXACTLY and q152's oracle applies verbatim. Cost per ingest
+  // ∝ batch.
 
   private def q155(t: Tables): DataFrame = {
-    // non-idempotent build+append, made all-or-nothing by the atomic rename
-    val dir = cachedIndexDir(t.dir, s"bm25_inc_v3_$BmBuckets") { d =>
+    // build+ingest, made all-or-nothing by the atomic rename
+    val dir = cachedIndexDir(t.dir, s"bm25_inc_v4_$BmBuckets") { d =>
       val tf = bigramTf(t).persistScoped()
-      Retrieval.writeBm25Index(tf.filter(col("id") % 10 =!= 7), d, BmBuckets)
-      Retrieval.appendToBm25Index(tf.filter(col("id") % 10 === 7), d)
+      Retrieval.writeBm25IndexVersioned(tf.filter(col("id") % 10 =!= 7), d, BmBuckets)
+      Retrieval.ingestIntoBm25Index(tf.filter(col("id") % 10 === 7), d, 1L)
     }
-    // index-derived seed queries (the q154 rationale; build+append indexes
+    // index-derived seed queries (the q154 rationale; build+ingest indexes
     // the full corpus, so df/n_docs equal the from-scratch derivation's)
     Retrieval.bm25AgainstIndex(
       Retrieval.seedQueriesAgainstIndex(bm25Seeds(t), dir, BmQTerms),

@@ -604,8 +604,8 @@ object EventStreams {
     * layout batch N+1 (batch 0 is the offline build). The producer's
     * maintenance tick consults
     * [[graft.operators.Dedup.compactCorpusIndexIfNeeded]] AFTER its
-    * checkpoint commits (the replay-horizon contract on
-    * [[graft.operators.Compaction.batchCount]]).
+    * checkpoint commits (the [[graft.operators.Compaction]] store's
+    * replay-horizon contract).
     */
   def corpusIndexIngest(indexDir: String, n: Int = 3, numHashes: Int = 64,
       bands: Int = 16)
@@ -1129,8 +1129,9 @@ object EventStreams {
     * (1) deduplicated WITHIN the batch (exact + MinHash-LSH near-dup,
     * keep-lowest-id), (2) deduplicated AGAINST the stored corpus index,
     * (3) written to `outDir/batch=<id>` (idempotent overwrite), and
-    * (4) written into the index under `batch=<id>` partitions so later
-    * batches see it. Per-batch cost is proportional to the batch (index
+    * (4) written into the index as its own [[graft.operators.Compaction]]
+    * store batch so later batches see it (the stream's first batch is the
+    * store's build, batch 0). Per-batch cost is proportional to the batch (index
     * probes are partition-pruned scans); the corpus is never recomputed.
     *
     * REPLAY SAFETY — why the index is batch-versioned: the probe reads
@@ -1152,38 +1153,31 @@ object EventStreams {
       // concurrent batch query from draining them mid-flight.
       import org.apache.spark.sql.functions.{col, md5}
       import graft.CacheScope.ScopedPersist
+      import graft.operators.Compaction
       val spark = batch.sparkSession
       val docs = batch.select(col("id"), col("text"))
       val withinBatch = graft.operators.Dedup
         .dedupCorpus(docs, n, numHashes, bands, threshold)
         .select(col("id"), col("text"))
-      val fs = new org.apache.hadoop.fs.Path(indexDir)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      def priorBatches(view: String): Boolean = {
-        val p = new org.apache.hadoop.fs.Path(s"$indexDir/$view")
-        fs.exists(p) && fs.listStatus(p).exists { st =>
-          val nm = st.getPath.getName
-          nm.startsWith("batch=") && nm.stripPrefix("batch=").toLong < batchId
-        }
-      }
-      val kept = (if (priorBatches("hashes"))
+      val prior = Compaction.batchIds(spark, indexDir, "hashes").exists(_ < batchId)
+      val kept = (if (prior) {
+        val store = Compaction.snapshot(spark, indexDir)
         graft.operators.Dedup.dedupAgainstParts(withinBatch,
-          spark.read.parquet(s"$indexDir/hashes").where(col("batch") < batchId),
-          spark.read.parquet(s"$indexDir/bands").where(col("batch") < batchId),
-          spark.read.parquet(s"$indexDir/shingles").where(col("batch") < batchId),
+          store("hashes").where(col("batch") < batchId),
+          store("bands").where(col("batch") < batchId),
+          store("shingles").where(col("batch") < batchId),
           n, numHashes, bands, threshold)
           .select(col("id"), col("text"))
-        else withinBatch)
+      } else withinBatch)
         .persistScoped() // 4 consumers below; released at scope exit
       kept.write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-      // this batch's index partitions — overwrite, so replays converge
-      kept.select(md5(col("text")).as("h"))
-        .write.mode("overwrite").parquet(s"$indexDir/hashes/batch=$batchId")
-      graft.operators.Dedup.batchBandKeys(kept, n, numHashes, bands)
-        .write.mode("overwrite").partitionBy("band")
-        .parquet(s"$indexDir/bands/batch=$batchId")
-      graft.operators.Dedup.batchShingleArrays(kept, n)
-        .write.mode("overwrite").parquet(s"$indexDir/shingles/batch=$batchId")
+      // this batch's index batch — overwrite, so replays converge
+      Compaction.writeBatch(spark, indexDir, batchId,
+        Compaction.View("hashes") -> kept.select(md5(col("text")).as("h")),
+        Compaction.View("bands", Some("band")) ->
+          graft.operators.Dedup.batchBandKeys(kept, n, numHashes, bands),
+        Compaction.View("shingles") ->
+          graft.operators.Dedup.batchShingleArrays(kept, n))
     }
 
   /** Read the current state of a [[streamingMerge]] table. */

@@ -500,10 +500,10 @@ class PlanShapeSpec extends AnyFunSuite {
 
   test("q146 build+append index probe: lists scan keeps the dynamic cell pruning") {
     // the q145 pin covers the pure-build index; the incremental path must
-    // not lose the probe economics — after appendToIvfIndex extends the
-    // cell partitions, the probe's lists scan still has to carry the
+    // not lose the probe economics — after ingestIntoIvfIndex adds batch
+    // 1's cell partitions, the probe's lists scan still has to carry the
     // dynamicpruning expression on `cell` (probe cost ∝ batch, only
-    // probed cells read, across both build- and append-written files)
+    // probed cells read, across both build- and ingest-written files)
     val df = graft.queries.Pipeline.defs("q146_ann_index_append")(
       spark, "/root/testdata/sf0.001")
     try {
@@ -662,6 +662,47 @@ class PlanShapeSpec extends AnyFunSuite {
     val (j2, j8) = (jobs(2), jobs(8))
     assert(j2 == j8, s"rounds = 2 ran $j2 jobs, rounds = 8 ran $j8")
     assert(j8 <= 3, s"the trainer ran $j8 jobs")
+  }
+
+  test("store rewrites: compaction jobs hold, deletion drops the emptiness probe, one file per cell") {
+    // Pinned against the counts before compaction and deletion shared one
+    // rewrite (same setup, local[4]): compactIvfIndex 3 jobs,
+    // deleteFromIvfIndex of 10 ids 7 jobs, compactBm25Index 6 jobs,
+    // deleteFromBm25Index of 10 ids 9 jobs, 1 file per cell directory.
+    // Emptiness is now read off the written output, so a delete no longer
+    // runs the anti-join lineage a second time as a probe.
+    import graft.operators.{Retrieval, Similarity}
+    val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+      .select(col("vec_id"), col("embedding"))
+    val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    val toks = docs.select(col("doc_id").as("id"),
+      explode(split(lower(col("text")), "\\s+")).as("term"))
+    val terms = toks.groupBy(col("id"), col("term")).agg(count(lit(1)).as("tf"))
+      .join(toks.groupBy(col("id")).agg(count(lit(1)).as("dl")), "id")
+    def jobs(body: => Int): Long = Counters.track(spark)(body)._2.jobs
+    val ivf = Files.createTempDirectory("ivf-jobs").toString
+    val bm25 = Files.createTempDirectory("bm25-jobs").toString
+    try {
+      Similarity.writeIvfIndexVersioned(emb.filter(col("vec_id") % 2 === 0), ivf, 4)
+      Similarity.ingestIntoIvfIndex(emb.filter(col("vec_id") % 2 === 1), ivf, 1L)
+      val compactIvf = jobs(Similarity.compactIvfIndex(spark, ivf))
+      val cells = new java.io.File(s"$ivf/lists_e1/batch=0").listFiles()
+        .filter(_.getName.startsWith("cell="))
+      assert(cells.nonEmpty)
+      for (c <- cells)
+        assert(c.listFiles().count(_.getName.endsWith(".parquet")) == 1, c)
+      val deleteIvf = jobs(Similarity.deleteFromIvfIndex(spark, ivf,
+        emb.filter(col("vec_id") < 10)))
+      Retrieval.writeBm25IndexVersioned(terms.filter(col("id") % 2 === 0), bm25, 16)
+      Retrieval.ingestIntoBm25Index(terms.filter(col("id") % 2 === 1), bm25, 1L)
+      val compactBm25 = jobs(Retrieval.compactBm25Index(spark, bm25))
+      val deleteBm25 = jobs(Retrieval.deleteFromBm25Index(spark, bm25,
+        docs.filter(col("doc_id") < 10).select(col("doc_id").as("id"))))
+      assert(compactIvf <= 3, s"compactIvfIndex ran $compactIvf jobs")
+      assert(deleteIvf < 7, s"deleteFromIvfIndex ran $deleteIvf jobs")
+      assert(compactBm25 <= 6, s"compactBm25Index ran $compactBm25 jobs")
+      assert(deleteBm25 < 9, s"deleteFromBm25Index ran $deleteBm25 jobs")
+    } finally CacheScope.drain()
   }
 
   test("q44 IVF top-k: no exchange ever carries the corpus embeddings") {

@@ -2,6 +2,7 @@ package graft.operators
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -100,6 +101,65 @@ class CompactionSpec extends AnyFunSuite {
       assert(Compaction.batchCount(spark, dir, "lists") == 1)
       assert(probe == before)
     } finally graft.CacheScope.drain()
+  }
+
+  test("a store emptied by deletion stays readable through compaction and ingests again") {
+    // every family with a delete: deleting every id, then compacting the
+    // emptied store, must leave it probe-able (0 rows) and ingestible
+    import spark.implicits._
+    val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+      .select($"vec_id", $"embedding")
+    val back = emb.filter($"vec_id" < 5) // re-ingested after the emptying
+    val queries = back.select(($"vec_id" + 1000000L).as("q_id"), $"embedding".as("q_vec"))
+    val terms = Seq((1L, "a", 2L, 3L), (1L, "b", 1L, 3L), (2L, "a", 1L, 1L))
+      .toDF("id", "term", "tf", "dl")
+    val docs = Seq((1L, "alpha beta gamma delta"), (2L, "one two three four"))
+      .toDF("id", "text")
+    val copy = Seq((100L, "alpha beta gamma delta")).toDF("id", "text")
+    val fps = Seq((1L, 5L, 7L), (2L, 11L, 13L)).toDF("id", "ah_hi", "ah_lo")
+    final case class Family(name: String, build: String => Unit,
+        ids: DataFrame, delete: (String, DataFrame) => Int,
+        compact: String => Int, ingest: String => Unit, probe: String => Long)
+    val families = Seq(
+      Family("ivf", Similarity.writeIvfIndexVersioned(emb, _, 4), emb,
+        Similarity.deleteFromIvfIndex(spark, _, _),
+        Similarity.compactIvfIndex(spark, _),
+        Similarity.ingestIntoIvfIndex(back, _, 1L),
+        Similarity.ivfTopKAgainstIndex(queries, _, 2, 3).count()),
+      Family("pq", Similarity.writeIvfIndexPQ(emb, _, 4, 8, 16), emb,
+        Similarity.deleteFromIvfIndexPQ(spark, _, _),
+        Similarity.compactIvfIndexPQ(spark, _),
+        Similarity.ingestIntoIvfIndexPQ(back, _, 1L),
+        Similarity.ivfTopKAgainstIndexPQ(queries, _, 2, 3).count()),
+      Family("bm25", Retrieval.writeBm25IndexVersioned(terms, _, 4), terms,
+        Retrieval.deleteFromBm25Index(spark, _, _),
+        Retrieval.compactBm25Index(spark, _),
+        Retrieval.ingestIntoBm25Index(terms.filter($"id" === 1L), _, 1L),
+        Retrieval.bm25AgainstIndex(Seq((10L, "a")).toDF("q_id", "term"), _, 5).count()),
+      Family("corpus", Dedup.writeCorpusIndexVersioned(docs, _, 3, 16, 8), docs,
+        Dedup.deleteFromCorpusIndex(spark, _, _),
+        Dedup.compactCorpusIndex(spark, _),
+        Dedup.ingestIntoCorpusIndex(docs.filter($"id" === 1L), _, 1L, 3, 16, 8),
+        dir => 1L - Dedup.dedupAgainstIndex(copy, dir, 3, 16, 8).count()),
+      Family("ahash", Dedup.writeAHashIndex(fps, _), fps,
+        Dedup.deleteFromAHashIndex(spark, _, _),
+        Dedup.compactAHashIndex(spark, _),
+        Dedup.ingestIntoAHashIndex(fps.filter($"id" === 1L), _, 1L),
+        Dedup.ahashAgainstIndex(Seq((100L, 5L, 7L)).toDF("id", "ah_hi", "ah_lo"), _)
+          .count()))
+    for (f <- families) {
+      val dir = Files.createTempDirectory(s"emptied-${f.name}").toString
+      try {
+        f.build(dir)
+        assert(f.probe(dir) > 0, f.name)
+        assert(f.delete(dir, f.ids) == 1, f.name)
+        assert(f.probe(dir) == 0, f.name)
+        assert(f.compact(dir) == 2, f.name)
+        assert(f.probe(dir) == 0, f.name)
+        f.ingest(dir)
+        assert(f.probe(dir) > 0, f.name)
+      } finally graft.CacheScope.drain()
+    }
   }
 
   test("z_value16 interleaves bits exactly (a even, b odd)") {

@@ -661,21 +661,6 @@ class DedupSpec extends AnyFunSuite {
     } finally graft.CacheScope.drain()
   }
 
-  test("appendToCorpusIndex refuses a compacted (epoch > 0) index") {
-    val docs = Seq((1L, "alpha beta gamma delta"), (2L, "one two three four"))
-      .toDF("id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("dedup-app").toString
-    try {
-      Dedup.writeCorpusIndexVersioned(docs, dir, 3, 16, 8)
-      assert(Dedup.compactCorpusIndex(spark, dir) == 1)
-      val e = intercept[IllegalArgumentException] {
-        Dedup.appendToCorpusIndex(Seq((3L, "five six seven eight"))
-          .toDF("id", "text"), dir, 3, 16, 8)
-      }
-      assert(e.getMessage.contains("ingestIntoCorpusIndex"))
-    } finally graft.CacheScope.drain()
-  }
-
   test("SNM second pass catches a near-dup the text-order pass sorts apart") {
     // P and Q share 5 of P's 6 shingles (J = 5/6) but P leads with 'zzz'
     // and Q with 'alpha' — in raw text order 10 filler docs sit between

@@ -103,15 +103,15 @@ class RetrievalSpec extends AnyFunSuite {
 
   test("append extends the index EXACTLY to the from-scratch union build") {
     // no frozen quantizer on the lexical side: df counts postings and
-    // stats rows sum, so build+append must be indistinguishable from one
+    // stats rows sum, so build+ingest must be indistinguishable from one
     // build over the union — including df and avgdl shifts the batch causes
     val batch = Seq((4L, "a", 1L, 2L), (4L, "c", 1L, 2L)).toDF("id", "term", "tf", "dl")
     val union = terms.unionByName(batch)
     val queries = Seq((10L, "a"), (10L, "c"), (11L, "b")).toDF("q_id", "term")
     val dir = java.nio.file.Files.createTempDirectory("bm25-inc").toString
     try {
-      Retrieval.writeBm25Index(terms, dir, 8)
-      Retrieval.appendToBm25Index(batch, dir)
+      Retrieval.writeBm25IndexVersioned(terms, dir, 8)
+      Retrieval.ingestIntoBm25Index(batch, dir, 1L)
       val probed = Retrieval.bm25AgainstIndex(queries, dir, 10)
         .as[(Long, Long, Double, Long)].collect().toSet
       val fromScratch = Retrieval.bm25TopK(union, queries, 10)
@@ -207,23 +207,6 @@ class RetrievalSpec extends AnyFunSuite {
       // idempotent: re-running the same delete is a no-op rewrite
       assert(Retrieval.deleteFromBm25Index(spark, dir, del) == 2)
       assert(probe == after)
-    } finally graft.CacheScope.drain()
-  }
-
-  test("appendToBm25Index refuses a compacted (epoch > 0) index") {
-    val dir = java.nio.file.Files.createTempDirectory("bm25-app-guard").toString
-    val b1 = Seq((4L, "a", 1L, 2L), (4L, "c", 1L, 2L)).toDF("id", "term", "tf", "dl")
-    try {
-      Retrieval.writeBm25Index(terms, dir, 8)
-      Retrieval.appendToBm25Index(b1, dir) // epoch 0: fine
-      assert(Retrieval.compactBm25Index(spark, dir) == 1)
-      // post-compaction the live postings are batch-versioned under
-      // lists_e1; a flat append would land in the superseded path and
-      // vanish from every probe (which resolves the EPOCH pointer first)
-      val e = intercept[IllegalArgumentException] {
-        Retrieval.appendToBm25Index(b1, dir)
-      }
-      assert(e.getMessage.contains("ingestIntoBm25Index"))
     } finally graft.CacheScope.drain()
   }
 

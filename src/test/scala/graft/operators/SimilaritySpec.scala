@@ -243,14 +243,14 @@ class SimilaritySpec extends AnyFunSuite {
       assert(sorted(Similarity.ivfTopKAgainstIndex(queries, dir, 2, 10))
         .toSeq == fresh.toSeq)
       // incremental ingestion: build on a slice that contains the whole
-      // centroid id range, append the rest — probing build+append must
+      // centroid id range, ingest the rest — probing build+ingest must
       // equal probing the from-scratch full build (frozen quantizer ==
       // full-corpus quantizer by construction)
       val dir2 = java.nio.file.Files.createTempDirectory("ivfidx2").toString
-      Similarity.writeIvfIndex(
+      Similarity.writeIvfIndexVersioned(
         emb.filter($"vec_id" < 16 || $"vec_id" % 3 =!= 1), dir2, 16)
-      Similarity.appendToIvfIndex(
-        emb.filter($"vec_id" >= 16 && $"vec_id" % 3 === 1), dir2)
+      Similarity.ingestIntoIvfIndex(
+        emb.filter($"vec_id" >= 16 && $"vec_id" % 3 === 1), dir2, 1L)
       assert(sorted(Similarity.ivfTopKAgainstIndex(queries, dir2, 2, 10))
         .toSeq == fresh.toSeq)
     } finally graft.CacheScope.drain()
@@ -749,23 +749,6 @@ class SimilaritySpec extends AnyFunSuite {
       Similarity.pqCodebooks(tiny, mSub = 2, nCodes = 16, iters = 0, dim = 8)
     }
     assert(e.getMessage.contains("nCodes"))
-  }
-
-  test("appendToIvfIndex refuses a compacted (epoch > 0) index") {
-    val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-      .select($"vec_id", $"embedding")
-    val dir = java.nio.file.Files.createTempDirectory("ivf-app-guard").toString
-    try {
-      Similarity.writeIvfIndex(emb, dir, 8)
-      Similarity.appendToIvfIndex(emb.limit(1), dir) // epoch 0: fine
-      assert(Similarity.compactIvfIndex(spark, dir) == 1)
-      // post-compaction the live lists are batch-versioned under lists_e1;
-      // a flat append would land in the superseded epoch-0 path and vanish
-      val e = intercept[IllegalArgumentException] {
-        Similarity.appendToIvfIndex(emb.limit(1), dir)
-      }
-      assert(e.getMessage.contains("ingestIntoIvfIndex"))
-    } finally graft.CacheScope.drain()
   }
 
   test("deleteFromIvfIndex: deleting EVERY vector leaves a readable, empty-probing index") {
