@@ -13,11 +13,15 @@ import org.apache.spark.sql.SparkSession
 object Counters {
 
   /** `jobs` counts the Spark jobs started in the scope — the per-call job
-    * contract the iterative operators are pinned to.
+    * contract the iterative operators are pinned to. `taskRunMs` sums the
+    * executor run time of the scope's tasks: set against the wall time it
+    * tells scheduling overhead (many jobs, little task time) from executor
+    * compute.
     */
   final case class Snapshot(
       jobs: Long,
       tasks: Long,
+      taskRunMs: Long,
       inputRecords: Long,
       inputBytes: Long,
       shuffleReadBytes: Long,
@@ -82,6 +86,7 @@ object Counters {
       val tm = e.taskMetrics
       if (tm != null) {
         m("tasks") += 1
+        m("taskRunMs") += tm.executorRunTime
         m("inputRecords") += tm.inputMetrics.recordsRead
         m("inputBytes") += tm.inputMetrics.bytesRead
         m("shuffleReadBytes") += tm.shuffleReadMetrics.totalBytesRead
@@ -91,9 +96,9 @@ object Counters {
       }
     }
     def snapshot: Snapshot = synchronized {
-      Snapshot(m("jobs"), m("tasks"), m("inputRecords"), m("inputBytes"),
-        m("shuffleReadBytes"), m("shuffleWriteBytes"), m("spilledBytes"),
-        m("outputRecords"))
+      Snapshot(m("jobs"), m("tasks"), m("taskRunMs"), m("inputRecords"),
+        m("inputBytes"), m("shuffleReadBytes"), m("shuffleWriteBytes"),
+        m("spilledBytes"), m("outputRecords"))
     }
   }
 }

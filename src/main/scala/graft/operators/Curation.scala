@@ -143,6 +143,12 @@ object Curation {
     * domain's last is exactly `budget` tokens BY CONSTRUCTION
     * ([[packManifest]]'s invariant).
     *
+    * Bins are local to the frame packed: bins are contiguous token ranges,
+    * so packing is inherently a batch decision. Over a stream, each
+    * micro-batch packs its own bins, final the moment it commits, and
+    * only each batch's LAST bin per domain may be short; a trainer
+    * consumes whole shard files, never cross-batch splices.
+    *
     * 100 TB design: the manifest side is the distributed prefix scan;
     * the slice join is one equi-join on (domain, id); and the per-bin
     * assembly aggregates AT MOST `budget` tokens of state per group

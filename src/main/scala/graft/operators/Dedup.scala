@@ -112,7 +112,7 @@ object Dedup {
   /** Sorted distinct-shingle arrays (id, sh, n_sh) for exact-Jaccard
     * verification with the one-pass merge kernel.
     */
-  private def shingleArrays(docs: DataFrame, n: Int): DataFrame =
+  private[graft] def shingleArrays(docs: DataFrame, n: Int): DataFrame =
     TextOps.withShingles(docs, col("text"), n, "shingles")
       .withColumn("n_sh", size(col("shingles")))
       .filter(col("n_sh") > 0)
@@ -627,32 +627,46 @@ object Dedup {
           .as("dup_frac"))
   }
 
-  /** The (band, key, id) view of a doc batch — the banded half of the
-    * index layout, for callers maintaining a batch-partitioned index
-    * (graft.streaming.EventStreams.dedupIngest).
+  /** Batch `batchId` of the three-view corpus index (hashes with doc ids,
+    * band keys, shingles) for a stream whose first micro-batch is the
+    * store's build: batch 0 builds, later batches overwrite their own
+    * directories ([[Compaction]]'s replay-safe ingest). The views are the
+    * ones [[writeCorpusIndexVersioned]] writes, so a stream-built index
+    * compacts, probes and deletes like a built one.
     */
-  private[graft] def batchBandKeys(docs: DataFrame, n: Int, numHashes: Int,
-      bands: Int): DataFrame =
-    bandKeys(lshSignatures(docs, n, numHashes), numHashes, bands)
+  private[graft] def writeCorpusIndexBatch(docs: DataFrame, dir: String,
+      batchId: Long, n: Int, numHashes: Int, bands: Int): Unit =
+    Compaction.writeBatch(docs.sparkSession, dir, batchId,
+      corpusViews(docs, n, numHashes, bands, None): _*)
 
-  /** The (id, sh, n_sh) shingle view of a doc batch (same callers). */
-  private[graft] def batchShingleArrays(docs: DataFrame, n: Int): DataFrame =
-    shingleArrays(docs, n)
+  /** The store batches before `beforeBatch` of a versioned view (all of
+    * it when None) — the pre-batch state a replayed batch must probe.
+    */
+  private def priorBatches(view: DataFrame,
+      beforeBatch: Option[Long]): DataFrame = beforeBatch match {
+    case Some(b) => view.filter(col("batch").cast("long") < b)
+    case None => view
+  }
 
   /** [[dedupAgainst]] against a stored [[writeCorpusIndex]] — identical
     * output, corpus-side compute replaced by three parquet scans.
+    * `beforeBatch` restricts the index side to batches < b (versioned
+    * layout only), so a crash-replayed batch probes exactly what its
+    * first attempt probed, even after its own index batch landed.
     */
   def dedupAgainstIndex(newDocs: DataFrame, dir: String,
       n: Int = 3, numHashes: Int = 64, bands: Int = 16,
-      threshold: Double = 0.8): DataFrame = {
+      threshold: Double = 0.8, beforeBatch: Option[Long] = None): DataFrame = {
     // an epoch-resolved read of the flat or versioned layout. Columns are
     // selected explicitly: the versioned views carry `batch` (and hashes
     // an `id`) the probe's joins must not capture.
     val store = Compaction.snapshot(newDocs.sparkSession, dir)
     dedupAgainstParts(newDocs,
-      store("hashes").select(col("h")),
-      store("bands").select(col("id"), col("band"), col("key")),
-      store("shingles").select(col("id"), col("sh"), col("n_sh")),
+      priorBatches(store("hashes"), beforeBatch).select(col("h")),
+      priorBatches(store("bands"), beforeBatch)
+        .select(col("id"), col("band"), col("key")),
+      priorBatches(store("shingles"), beforeBatch)
+        .select(col("id"), col("sh"), col("n_sh")),
       n, numHashes, bands, threshold)
   }
 
@@ -695,17 +709,13 @@ object Dedup {
       n: Int = 3, numHashes: Int = 64, bands: Int = 16,
       threshold: Double = 0.8, beforeBatch: Option[Long] = None): DataFrame = {
     val store = Compaction.snapshot(newDocs.sparkSession, dir)
-    def pre(df: DataFrame): DataFrame = beforeBatch match {
-      case Some(b) => df.filter(col("batch").cast("long") < b)
-      case None => df
-    }
     val nd = newDocs.persistScoped()
     val within = minhashLshPairs(nd, n, numHashes, bands, threshold)
       .select(col("id_a"), col("id_b"))
     val bandedNew = bandKeys(lshSignatures(nd, n, numHashes), numHashes, bands)
-    val exBands = pre(store("bands"))
+    val exBands = priorBatches(store("bands"), beforeBatch)
       .select(col("id"), col("band"), col("key"))
-    val exShingles = pre(store("shingles"))
+    val exShingles = priorBatches(store("shingles"), beforeBatch)
       .select(col("id"), col("sh"), col("n_sh"))
     val cand = bandedNew.as("x")
       .join(exBands.as("y"),

@@ -112,7 +112,10 @@ object Expectations {
     * (its inherent cost) unioned beneath. Output: one row per rule —
     * (rule, violations, pass) — single-table rules first in declaration
     * order, then the FK rules (the driver gate sorts rows anyway).
-    * `refs` maps each FK rule's `refName` to its reference table.
+    * `refs` maps each FK rule's `refName` to its reference table. Run
+    * per micro-batch, the reports are the monitoring series a pipeline
+    * alerts on: the offline contract (q161) and the online monitor are
+    * one rule set.
     */
   def check(df: DataFrame, rules: Seq[Rule],
       refs: Map[String, DataFrame] = Map.empty): DataFrame = {

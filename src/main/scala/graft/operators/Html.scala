@@ -173,6 +173,15 @@ object Html {
         col("__b.block_idx").cast("long").as("block_idx"),
         col("block_text"))): _*)
 
+  /** The block table of (id, html) pages: (id, block_type, block_idx,
+    * block_text), one row per non-empty block ([[extractBlocks]] with the
+    * page's other columns dropped) — what downstream taggers and dedup
+    * consume without ever re-parsing markup (the q244 → q245 split).
+    */
+  def blockTable(pages: DataFrame, id: Column, html: Column): DataFrame =
+    extractBlocks(pages.select(id, html), html)
+      .select(id, col("block_type"), col("block_idx"), col("block_text"))
+
   /** BLOCK SIGNALS — the link-density boilerplate heuristic every
     * published extractor runs (jusText / trafilatura / resiliparse:
     * a block whose text is mostly anchor text is navigation chrome
@@ -341,6 +350,23 @@ object Html {
         cleanBlock(regexp_extract(m, "(?is)^<a\\b[^>]*>(.*?)</a>$", 1))
           .as("anchor_text"))): _*)
   }
+
+  /** The outlink table of fetched pages, resolved against each page's own
+    * base URL: (id, link_idx, href, anchor_text, url_resolved, url_canon)
+    * — [[extractLinks]] + [[Url.resolve]] + [[Url.canonicalize]], the
+    * crawl-frontier expansion step (q260). Non-crawlable hrefs (mailto:,
+    * javascript:, href-less anchors) keep their rows with a null
+    * resolution, so the frontier scheduler and the link-graph builder read
+    * one table. All three URL stages are 1-node native kernel
+    * expressions, so the plan is scan → generator → projections: zero
+    * joins, zero shuffles.
+    */
+  def resolvedLinks(pages: DataFrame, id: Column, base: Column,
+      html: Column): DataFrame =
+    extractLinks(pages, html)
+      .select(id, col("link_idx"), col("href"), col("anchor_text"),
+        Url.resolve(base, col("href")).as("url_resolved"))
+      .withColumn("url_canon", Url.canonicalize(col("url_resolved")))
 
   /** Deterministic LINK-PAGE fixture ([[withHtmlColumn]]'s discipline
     * for the outlink surface): nine `<a>` anchors, one per

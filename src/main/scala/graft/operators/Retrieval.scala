@@ -113,6 +113,27 @@ object Retrieval {
         col("s.score").as("score"), (col("pos") + 1).cast("long").as("rnk"))
   }
 
+  /** HYBRID retrieval against two stored indexes — the q158 composition
+    * in its serving form: (q_id, terms, q_vec) queries probe the BM25
+    * posting index (bucket-pruned, [[bm25AgainstIndex]]) and the IVF
+    * vector index (cell-pruned, [[Similarity.ivfTopKAgainstIndex]]), and
+    * [[rrfFuse2]] fuses the two top-k lists. Both indexes are read-only
+    * here; the cost is the two pruned probes, the fusion is free.
+    *
+    * @return (q_id, doc_id, score, rnk)
+    */
+  def hybridTopKAgainstIndexes(queries: DataFrame, bm25Dir: String,
+      ivfDir: String, nProbe: Int, k: Int, rrfK: Int = 60): DataFrame = {
+    val lex = bm25AgainstIndex(
+        queries.select(col("q_id"), explode(col("terms")).as("term")),
+        bm25Dir, k)
+      .select(col("q_id"), col("doc_id"), col("rnk"))
+    val vec = Similarity.ivfTopKAgainstIndex(
+        queries.select(col("q_id"), col("q_vec")), ivfDir, nProbe, k)
+      .select(col("q_id"), col("vec_id").as("doc_id"), col("rnk"))
+    rrfFuse2(lex, vec, k, rrfK)
+  }
+
   /** Hard-negative mining for retrieval/contrastive training (the
     * DPR/Karpukhin-style "BM25 hard negatives" recipe, with the standard
     * near-duplicate guard): a hard negative for a query is a document that
@@ -251,9 +272,9 @@ object Retrieval {
     pos.unionAll(neg)
   }
 
-  /** [[trainingPairs]] against a STORED BM25 index — the serving form the
-    * streaming export sink runs ([[hardNegativesAgainstIndex]] + the same
-    * one-positive-per-seed union).
+  /** [[trainingPairs]] against a STORED BM25 index — the serving form
+    * [[trainingPairsForSeeds]] runs ([[hardNegativesAgainstIndex]] + the
+    * same one-positive-per-seed union).
     */
   def trainingPairsAgainstIndex(queries: DataFrame, dir: String,
       shingled: DataFrame, k: Int, slack: Int, jaccardT: Double,
@@ -267,6 +288,34 @@ object Retrieval {
       .select(col("q_id").as("seed_id"), col("q_id").as("doc_id"),
         lit(1L).as("label"), lit(0L).as("rnk"))
     pos.unionAll(neg)
+  }
+
+  /** Contrastive training-pair export for (id, text) SEED documents
+    * against frozen stored artifacts — the serving form of the offline
+    * [[trainingPairs]] miner (q199): query terms derive against the
+    * stored BM25 index (seed-local tf, stored idf —
+    * [[seedQueriesAgainstIndex]]), and hard negatives come from the
+    * index's bucket-pruned probe with the same near-dup false-negative
+    * guard. Candidate shingles come from the stored (id, sh, n_sh)
+    * shingle view at `shingleDir` (e.g. a dedup index's `shingles/`),
+    * seed shingles from the seeds' own text; a seed already in the store
+    * uses its fresh text. Every artifact is frozen, so a seed's pairs never
+    * depend on the other seeds it arrives with.
+    *
+    * @return (seed_id, doc_id, label, rnk)
+    */
+  def trainingPairsForSeeds(seeds: DataFrame, bm25Dir: String,
+      shingleDir: String, qTerms: Int, k: Int, slack: Int, jaccardT: Double,
+      k1: Double = 1.2, b: Double = 0.75): DataFrame = {
+    val s = seeds.select(col("id"), col("text"))
+    val queries = seedQueriesAgainstIndex(s, bm25Dir, qTerms)
+    val seedSh = Dedup.shingleArrays(s, 3)
+      .select(col("id"), col("sh").as("ss"))
+    val stored = s.sparkSession.read.parquet(shingleDir)
+      .select(col("id"), col("sh").as("ss"))
+      .join(s.select(col("id")), Seq("id"), "left_anti")
+    trainingPairsAgainstIndex(queries, bm25Dir, stored.unionAll(seedSh), k,
+      slack, jaccardT, k1, b)
   }
 
   /** Seed-query derivation against a STORED index — the serving half of
@@ -471,7 +520,11 @@ object Retrieval {
     * the stats). df needs no stored fix-up: probes derive it from the
     * pruned postings themselves, which post-delete ARE the surviving
     * corpus. A post-delete probe is bit-identical to probing an index
-    * built from the surviving corpus (spec-pinned).
+    * built from the surviving corpus (spec-pinned). Each delete is an
+    * index-sized rewrite (the compaction cost envelope), so a stream of
+    * deletion requests runs it per trigger window, not per request
+    * (erasure obligations allow days, not milliseconds); a replayed
+    * window rewrites to the same contents.
     *
     * @param ids one column `id`; absent ids are ignored (idempotent)
     * @return the new epoch number

@@ -192,7 +192,9 @@ object TextOps {
     * The tagger table carries EVERY input row — a zero-token document
     * fails repetition (Gopher's ≥1-token contract), quality
     * (undefined ratio → false) and doclen (below any minWords ≥ 1),
-    * and says so in `reasons`, never a silent drop. Line rules — all
+    * and says so in `reasons`, never a silent drop; a downstream mixer
+    * re-run with different rules therefore needs no re-tagging (Dolma's
+    * tagger/mixer split). Line rules — all
     * comparisons keep-iff-≤ (Rae et al. drop only when the fraction
     * EXCEEDS the threshold): n_bullet·10⁴ ≤ bulletTau·n_lines AND
     * n_ellipsis·10⁴ ≤ ellipsisTau·n_lines AND
@@ -582,6 +584,34 @@ object TextOps {
     words.select(col("w"),
       graft.functions.wordpiece_encode(col("w"), vocab).as("toks"))
 
+  /** Per-doc WordPiece counts (id, n_tokens, n_unk) of a corpus under a
+    * stored vocabulary ([[loadWordPieceVocab]]): each distinct
+    * lowercased whitespace word tokenizes once ([[wordPieceTokens]]), the
+    * counts join back onto the exploded docs and sum per doc. An
+    * unsegmentable word counts as ONE `[UNK]` token and is tallied in
+    * n_unk: a rising n_unk is the drift signal that triggers a
+    * retrain-and-swap, never an in-stream vocabulary update. EVERY input
+    * doc gets a row — a doc with no words (empty or whitespace text)
+    * reports (id, 0, 0) rather than a silent gap.
+    */
+  def wordPieceDocCounts(docs: DataFrame, id: Column, text: Column,
+      vocab: Seq[String]): DataFrame = {
+    val dw = docs.select(id.as("id"), text.as("__t"))
+      .select(col("id"), explode(expr(
+        "filter(split(lower(__t), '\\\\s+'), x -> length(x) > 0)")).as("w"))
+    val wt = wordPieceTokens(dw.select(col("w")).distinct(), vocab)
+      .select(col("w"), size(col("toks")).cast("long").as("nt"),
+        when(element_at(col("toks"), 1) === lit("[UNK]"), 1L).otherwise(0L)
+          .as("unk"))
+    val perDoc = dw.join(wt, Seq("w"))
+      .groupBy(col("id")).agg(sum(col("nt")).as("nt"),
+        sum(col("unk")).as("unk"))
+    docs.select(id.as("id"))
+      .join(perDoc, Seq("id"), "left")
+      .select(col("id"), coalesce(col("nt"), lit(0L)).as("n_tokens"),
+        coalesce(col("unk"), lit(0L)).as("n_unk"))
+  }
+
   /** Invert a WordPiece token array back to its source word: the first
     * piece verbatim, every continuation piece with its `##` marker
     * stripped, concatenated — the standard WordPiece detokenization. An
@@ -846,6 +876,53 @@ object TextOps {
       .groupBy(col("id")).agg(sum(col("nt")).as("n_tokens"))
   }
 
+  /** (source, doc_id, toks) per doc of a (source, doc_id, text) frame
+    * under byte-level `merges` — the corpus tokenize shared by every
+    * byte-BPE packing tail (q218/q222/q226/q230/q238/q251) and the shard
+    * export sinks. Tokens are in document order.
+    */
+  def byteTokDocs(docs: DataFrame,
+      merges: Seq[(String, String)]): DataFrame =
+    byteTokDocsFromWords(byteTokWords(docs), merges)
+
+  /** The persisted one-regex-pass pre-token frame (source, doc_id, ws) of
+    * a (source, doc_id, text) frame — built once per query and shared
+    * between the in-query BPE trainer ([[bpeMergesByteLevelFromPretokens]],
+    * whose only jobs are the word-count aggregate it collects) and the
+    * packing tokenize ([[byteTokDocsFromWords]]). It persists by the q245
+    * persist-boundary rule: the byte-level token regex is expensive per
+    * row and feeds BOTH the distinct-word vocab and the per-doc rejoin, so
+    * unpersisted the regex pass ran twice per execution (at sf0.1 the
+    * packing tail carried ~45 task-seconds, a large share of it the
+    * duplicated pre-tokenize).
+    */
+  def byteTokWords(docs: DataFrame): DataFrame = {
+    import graft.CacheScope.ScopedPersist
+    docs.select(col("source"), col("doc_id"),
+      regexp_extract_all(lower(col("text")),
+        lit(byteLevelTokenPattern), lit(0)).as("ws"))
+      .persistScoped()
+  }
+
+  /** [[byteTokDocs]] over a [[byteTokWords]] frame: each distinct
+    * pre-token encodes once, then joins back and reassembles per doc in
+    * position order.
+    */
+  def byteTokDocsFromWords(words: DataFrame,
+      merges: Seq[(String, String)]): DataFrame = {
+    val dw = words.select(col("source"), col("doc_id"),
+      posexplode(col("ws")).as(Seq("pos", "w")))
+    val wt = dw.select(col("w")).distinct()
+      .select(col("w"),
+        graft.functions.bpe_encode(col("w"), merges, byteLevel = true)
+          .as("toks"))
+    dw.join(wt, Seq("w"))
+      .groupBy(col("source"), col("doc_id"))
+      .agg(expr(
+        "flatten(transform(sort_array(collect_list(struct(pos, toks))), x -> x.toks))")
+        .as("toks"))
+  }
+
   /** CCNet's head/middle/tail partition (Wenzek et al. 2019 §4.3 — the
     * published pipeline doesn't FILTER on perplexity, it BUCKETS: the
     * corpus splits per group into the best/middle/worst thirds and
@@ -974,6 +1051,8 @@ object TextOps {
   /** Bucket documents against a stored [[writePplBoundaries]] artifact:
     * score with the (also stored) reference LM, compare against the
     * frozen group boundaries — [[perplexityPartition]]'s serving form.
+    * Both artifacts stay frozen: recomputing terciles per serving batch
+    * would make a doc's bucket depend on its batch-mates.
     * A doc whose group has no stored boundary row gets a null bucket
     * (fail-visible: an unknown group is a contract violation to surface,
     * not a silent 'tail').
@@ -1196,6 +1275,8 @@ object TextOps {
   /** Score documents against a [[writeLmModel]] artifact: load the two
     * bounded tables (they broadcast — per-batch serving cost is the
     * batch's explode + partial agg, the model never retrains or shifts).
+    * The online form of the q175/q176 filter: the model never adapts to
+    * the stream it filters, so a replayed batch re-derives its scores.
     */
   def lmScoreAgainstModel(docs: DataFrame, id: Column, text: Column,
       dir: String, lambda: Double, pplThreshold: Double): DataFrame = {
@@ -1305,7 +1386,8 @@ object TextOps {
   /** Kneser-Ney scoring against a [[writeLmModel]] artifact — the KN
     * model IS the same (vocab, bigrams) parquet pair (the discount
     * statistics derive from the pruned tables at load), so one stored
-    * artifact serves both smoothings.
+    * artifact serves both smoothings and a serving stream can switch
+    * add-one → KN without retraining or re-shipping a model.
     */
   def knScoreAgainstModel(docs: DataFrame, id: Column, text: Column,
       dir: String, pplThreshold: Double): DataFrame = {
@@ -1907,7 +1989,11 @@ object TextOps {
   }
 
   /** Classify documents with a stored langid artifact: the K-row model
-    * loads driver-side and rides into [[langIdScore]] as expression data.
+    * loads driver-side and rides into [[langIdScore]] as expression data
+    * (one narrow zero-shuffle map, no join). The model never adapts to
+    * the stream it serves: drift ([[langIdDriftReport]]) triggers a
+    * retrain-and-swap. Docs whose normalized text has no char bigram are
+    * dropped (nothing to classify), online as offline.
     */
   def langIdScoreAgainstModel(docs: DataFrame, id: Column, text: Column,
       dir: String): DataFrame =
@@ -2074,7 +2160,9 @@ object TextOps {
 
   /** Score documents with a stored [[writeLinearModel]] artifact: the
     * one-row model loads driver-side (it is driver-sized by construction)
-    * and rides into [[hashedLinearScore]] as expression data.
+    * and rides into [[hashedLinearScore]] as expression data, so scoring
+    * stays a zero-shuffle narrow map. The model never retrains online:
+    * quality drift is a retrain-and-swap, not an in-stream update.
     */
   def hashedLinearScoreAgainstModel(docs: DataFrame, id: Column,
       text: Column, dir: String, threshold: Double): DataFrame = {

@@ -201,6 +201,23 @@ object Unigram {
     words.withColumn("toks", graft.functions.unigram_encode(
       col("w"), model, maxPieceLen, UnkScoreMicro))
 
+  /** Per-doc token counts (`id`, n_tokens) of a corpus under a trained
+    * model ([[loadModel]]): per-WORD tokenization once over the corpus's
+    * [[wordTable]], then one join from the exploded docs — never a per-doc
+    * re-tokenize. The id column keeps its input name. Unknown characters
+    * segment at the unk floor, so a model serving unseen text never
+    * fails. A doc with no words has no row.
+    */
+  def docTokenCounts(docs: DataFrame, id: Column, text: Column,
+      model: Seq[(String, Long)]): DataFrame = {
+    val wordToks = tokenize(wordTable(docs, text), model)
+      .select(col("w"), size(col("toks")).cast("long").as("nt"))
+    docs.select(id, explode(filter(split(lower(text), """\s+"""),
+        x => length(x) > 0)).as("w"))
+      .join(wordToks, Seq("w"))
+      .groupBy(id).agg(sum(col("nt")).as("n_tokens"))
+  }
+
   /** Frozen (piece → id) vocabulary of a trained unigram model: ids
     * follow the stored piece order ([[loadModel]] is piece-sorted), so
     * the map is reproducible from the artifact alone. A piece the model

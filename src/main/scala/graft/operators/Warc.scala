@@ -140,6 +140,18 @@ object Warc {
         when(col("malformed"), lit(null)).otherwise(col("__body")))
       .drop(parseTemps: _*)
 
+  /** Container files → the typed field table (id, warc_version, url,
+    * status, content_type, html, malformed), one row per record
+    * ([[records]] + [[parseFields]] with the raw record dropped) — the
+    * crawl front door ahead of [[Html.blockTable]]. Quarantined records
+    * keep their rows (null fields + flag), so a malformed-rate monitor
+    * reads the same table the extractor consumes.
+    */
+  def fieldTable(files: DataFrame, id: Column, fileCol: String): DataFrame =
+    parseFields(records(files.select(id, col(fileCol)), fileCol), col("rec"))
+      .select(id, col("warc_version"), col("url"), col("status"),
+        col("content_type"), col("html"), col("malformed"))
+
   /** Byte-true twin of [[parseFields]] over a BINARY record column,
     * with CHARSET-AWARE payload decode: the record is viewed through
     * ISO-8859-1 (byte-transparent — every byte maps to exactly one

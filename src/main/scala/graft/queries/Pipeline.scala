@@ -77,46 +77,6 @@ object Pipeline {
     base
   }
 
-  /** (source, doc_id, toks) per doc under `merges` — the corpus tokenize
-    * shared by every byte-BPE packing tail (q218/q222/q230/q238/q251 and
-    * the id-shard family). The pre-token ARRAY persists once: the q245
-    * persist-boundary rule — the byte-level token regex is expensive per
-    * row and feeds BOTH the distinct-word vocab and the per-doc rejoin,
-    * so unpersisted the full-corpus regex pass ran TWICE per execution
-    * (round-16 FlagDiag: the tail carried ~45 task-seconds at sf0.1, the
-    * duplicated pre-tokenize a large share).
-    */
-  private def byteTokDocs(docs: DataFrame,
-      merges: Seq[(String, String)]): DataFrame =
-    byteTokDocsFromWords(byteTokWords(docs), merges)
-
-  /** The persisted one-regex-pass pre-token frame (source, doc_id, ws) —
-    * built ONCE per query and shared between the in-query BPE trainer
-    * ([[TextOps.bpeMergesByteLevelFromPretokens]], whose only jobs are
-    * the word-count aggregate it collects; its merge rounds run in driver
-    * memory) and the packing tokenize ([[byteTokDocsFromWords]]).
-    */
-  private def byteTokWords(docs: DataFrame): DataFrame =
-    docs.select(col("source"), col("doc_id"),
-      regexp_extract_all(lower(col("text")),
-        lit(TextOps.byteLevelTokenPattern), lit(0)).as("ws"))
-      .persistScoped()
-
-  private def byteTokDocsFromWords(words: DataFrame,
-      merges: Seq[(String, String)]): DataFrame = {
-    val dw = words.select(col("source"), col("doc_id"),
-      posexplode(col("ws")).as(Seq("pos", "w")))
-    val wt = dw.select(col("w")).distinct()
-      .select(col("w"),
-        graft.functions.bpe_encode(col("w"), merges, byteLevel = true)
-          .as("toks"))
-    dw.join(wt, Seq("w"))
-      .groupBy(col("source"), col("doc_id"))
-      .agg(expr(
-        "flatten(transform(sort_array(collect_list(struct(pos, toks))), x -> x.toks))")
-        .as("toks"))
-  }
-
   // ===== shared SQL fragments (must mirror the Scala operators exactly) ====
 
   /** DuckDB mirror of TextOps.shingles over a `words` list column. */
@@ -3666,18 +3626,13 @@ object Pipeline {
       col("doc_id"), "html")
 
   private def q260(t: Tables): DataFrame = {
-    val links = Html.extractLinks(linkPages(t), col("html"))
     // resolve/canonicalize are 1-node native kernel expressions
     // (NativeKernels.urlResolve/urlCanonicalize) — composing them is
     // substitution-safe; their earlier regexp-chain Column forms
     // multiplied into five-figure-node projections under pushdown
     // alias substitution (8+ min at sf0.01 — SCALE.md house rule)
-    links.select(col("doc_id"), col("link_idx"), col("href"),
-        col("anchor_text"),
-        graft.operators.Url.resolve(messyUrl(col("doc_id")), col("href"))
-          .as("url_resolved"))
-      .withColumn("url_canon",
-        graft.operators.Url.canonicalize(col("url_resolved")))
+    Html.resolvedLinks(linkPages(t), col("doc_id"),
+      messyUrl(col("doc_id")), col("html"))
   }
 
   private lazy val q260Sql =
@@ -4158,7 +4113,7 @@ object Pipeline {
     }
     val merges = TextOps.loadBpeMerges(spark, bpeDir)
     // tokenize the VOCAB once (the q157/q183 cost shape), flatten per doc
-    val dt = byteTokDocs(graft.Fanout(t.documents), merges)
+    val dt = TextOps.byteTokDocs(graft.Fanout(t.documents), merges)
     graft.operators.Curation.packShards(dt, col("source"), col("doc_id"),
       col("toks"), PackBudget, partitions = 32)
       .select(col("domain").as("source"), col("bin"), col("n_tokens"),
@@ -4334,7 +4289,7 @@ object Pipeline {
         TextOps.bpeVocabIdsByteLevel(merges), d)
     }
     val vocab = TextOps.loadBpeVocabIds(spark, vocabDir)
-    val dt = byteTokDocs(graft.Fanout(t.documents), merges)
+    val dt = TextOps.byteTokDocs(graft.Fanout(t.documents), merges)
     val packed = eos match {
       case None =>
         graft.operators.Curation.packShardIds(dt, col("source"),
@@ -5318,10 +5273,7 @@ object Pipeline {
     val withHtml = Html.withHtmlColumn(
       graft.Fanout(t.documents).select(col("doc_id"), col("text")),
       col("text"), "html")
-    Html.extractBlocks(withHtml.select(col("doc_id"), col("html")),
-      col("html"))
-      .select(col("doc_id"), col("block_type"), col("block_idx"),
-        col("block_text"))
+    Html.blockTable(withHtml, col("doc_id"), col("html"))
   }
 
   /** HTML synthesis + extraction replay CTEs (prefix ht_), ending in
@@ -5642,12 +5594,12 @@ object Pipeline {
     // ONE regex pass feeds trainer AND packing tokenize (guide §1.2):
     // the pre-token frame persists once; the trainer's word counts and
     // the per-doc rejoin both read it
-    val tokWords = byteTokWords(survivors)
+    val tokWords = TextOps.byteTokWords(survivors)
     val merges = TextOps.bpeMergesByteLevelFromPretokens(
       tokWords.select(explode(col("ws")).as("w")),
       BpeRounds, requireFull = true)
     val vocab = TextOps.bpeVocabIdsByteLevel(merges)
-    val dt = byteTokDocsFromWords(tokWords, merges)
+    val dt = TextOps.byteTokDocsFromWords(tokWords, merges)
     graft.operators.Curation.packShardIdsSep(dt, col("source"),
       col("doc_id"), col("toks"), vocab, EosId, PackBudget, partitions = 32)
       .select(col("domain").as("source"), col("bin"), col("n_tokens"),
@@ -5760,11 +5712,11 @@ object Pipeline {
     // ONE regex pass feeds trainer AND packing tokenize (guide §1.2):
     // the pre-token frame persists once; the trainer's word counts and
     // the per-doc rejoin both read it
-    val tokWords = byteTokWords(survivors)
+    val tokWords = TextOps.byteTokWords(survivors)
     val merges = TextOps.bpeMergesByteLevelFromPretokens(
       tokWords.select(explode(col("ws")).as("w")),
       BpeRounds, requireFull = true)
-    val dt = byteTokDocsFromWords(tokWords, merges)
+    val dt = TextOps.byteTokDocsFromWords(tokWords, merges)
     graft.operators.Curation.packShards(dt, col("source"), col("doc_id"),
       col("toks"), PackBudget, partitions = 32)
       .select(col("domain").as("source"), col("bin"), col("n_tokens"),
@@ -5848,12 +5800,12 @@ object Pipeline {
     // ONE regex pass feeds trainer AND packing tokenize (guide §1.2):
     // the pre-token frame persists once; the trainer's word counts and
     // the per-doc rejoin both read it
-    val tokWords = byteTokWords(survivors)
+    val tokWords = TextOps.byteTokWords(survivors)
     val merges = TextOps.bpeMergesByteLevelFromPretokens(
       tokWords.select(explode(col("ws")).as("w")),
       BpeRounds, requireFull = true)
     val vocab = TextOps.bpeVocabIdsByteLevel(merges)
-    val dt = byteTokDocsFromWords(tokWords, merges)
+    val dt = TextOps.byteTokDocsFromWords(tokWords, merges)
     graft.operators.Curation.packShardIds(dt, col("source"), col("doc_id"),
       col("toks"), vocab, PackBudget, partitions = 32)
       .select(col("domain").as("source"), col("bin"), col("n_tokens"),
@@ -5999,12 +5951,12 @@ object Pipeline {
     // ONE regex pass feeds trainer AND packing tokenize (guide §1.2):
     // the pre-token frame persists once; the trainer's word counts and
     // the per-doc rejoin both read it
-    val tokWords = byteTokWords(survivors)
+    val tokWords = TextOps.byteTokWords(survivors)
     val merges = TextOps.bpeMergesByteLevelFromPretokens(
       tokWords.select(explode(col("ws")).as("w")),
       BpeRounds, requireFull = true)
     val vocab = TextOps.bpeVocabIdsByteLevel(merges)
-    val dt = byteTokDocsFromWords(tokWords, merges)
+    val dt = TextOps.byteTokDocsFromWords(tokWords, merges)
     graft.operators.Curation.packShardIdsSep(dt, col("source"),
       col("doc_id"), col("toks"), vocab, EosId, PackBudget, partitions = 32)
       .select(col("domain").as("source"), col("bin"), col("n_tokens"),
@@ -6148,17 +6100,9 @@ object Pipeline {
         Unigram.trainPieces(graft.Fanout(t.documents), col("text"),
           UniSeedTopK, UniRounds), d)
     }
-    // per-WORD token counts once (vocab-table-sized), then one join from
-    // the corpus's exploded words — never a per-doc re-tokenize
-    val wordToks = Unigram.tokenize(
-      Unigram.wordTable(graft.Fanout(t.documents), col("text")),
-      Unigram.loadModel(spark, uniDir))
-      .select(col("w"), size(col("toks")).cast("long").as("nt"))
-    val uni = graft.Fanout(t.documents)
-      .select(col("doc_id"), explode(expr(
-        "filter(split(lower(text), '\\\\s+'), x -> length(x) > 0)")).as("w"))
-      .join(wordToks, Seq("w"))
-      .groupBy(col("doc_id")).agg(sum(col("nt")).as("uni_tok"))
+    val uni = Unigram.docTokenCounts(graft.Fanout(t.documents),
+        col("doc_id"), col("text"), Unigram.loadModel(spark, uniDir))
+      .withColumnRenamed("n_tokens", "uni_tok")
     t.documents
       .select(col("doc_id"), col("lang"),
         TextOps.wsTokenCount(col("text")).cast("long").as("ws_tok"))

@@ -2,7 +2,7 @@ package graft.streaming
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
@@ -19,8 +19,31 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * nothing accumulates on the driver. At 100 TB/day the windowed counts
   * shuffle only (window, event_type) partial aggregates, and sessionization
   * state is one small case class per active user.
+  *
+  * Sinks. Every `foreachBatch` sink here but [[streamingMerge]] (a keyed
+  * upsert with its own versioned layout) is built on two combinators over
+  * the batch operators: [[outputSink]] runs an operator on the micro-batch
+  * and writes its output, [[storeSink]] runs a store operation. Both keep
+  * one contract:
+  *  - a sink overwrites only its own `batch=<id>` directory, so a batch
+  *    replayed after a crash between the sink write and the checkpoint
+  *    commit replaces its first attempt instead of appending a duplicate;
+  *  - models, indexes and other artifacts a sink reads are read-only to
+  *    it, so a replay reads what the first attempt read and re-derives
+  *    identical output;
+  *  - store batch 0 is the offline build, so stream batch N writes store
+  *    batch N + 1, stable across replays, which re-deliver the same N (a
+  *    store the stream builds itself, [[dedupIngest]]'s, has no offline
+  *    build: its stream batch N is store batch N);
+  *  - each batch runs in its own [[graft.CacheScope]] scope, which
+  *    releases what the batch's operators persisted when the batch ends,
+  *    even if a write throws, and keeps a concurrent query from draining
+  *    it mid-batch.
   */
 object EventStreams {
+
+  /** A `foreachBatch` function: (micro-batch, stream batch id). */
+  type Sink = (Dataset[Row], Long) => Unit
 
   /** Tumbling event-time counts with late-data handling — the streaming
     * twin of q21_tumbling_window. Append-mode-capable: the watermark closes
@@ -244,26 +267,12 @@ object EventStreams {
     events.join(org.apache.spark.sql.functions.broadcast(dim),
       col(eventKey) === col(dimKey), "left")
 
-  /** foreachBatch writer that stays exactly-once on a sink WITHOUT a
-    * transaction log (the JDBC/object-store/custom-sink case the built-in
-    * file sink's log doesn't cover): each micro-batch lands in a
-    * deterministic `batch=<id>` location with overwrite semantics, so a
-    * replayed batch — after a crash between the sink write and the
-    * checkpoint commit — overwrites its own previous attempt instead of
-    * appending a duplicate. The (batchId → same location, idempotent
-    * write) pair is the general recipe; swap the parquet write for a
-    * keyed MERGE/upsert on sinks with primary keys.
-    */
-  def idempotentBatchWriter(outDir: String): (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], Long) => Unit =
-    (batch, batchId) =>
-      batch.write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-
   /** CDC-style streaming MERGE: each micro-batch upserts into a keyed
     * parquet table ([[graft.operators.Merge.upsert]] semantics — latest
     * write per key wins; within a batch, the row with the highest `seqCol`
     * per key is taken first so replayed/out-of-order batch contents
     * resolve deterministically). Restart safety comes from the same
-    * batchId idempotence as [[idempotentBatchWriter]]: a replayed batch
+    * batchId idempotence as [[outputSink]]: a replayed batch
     * re-derives the same table version (the write goes to a
     * `version=batchId` dir, and readers take the max version).
     *
@@ -274,8 +283,7 @@ object EventStreams {
     * partition the table and merge only touched partitions (dynamic
     * partition overwrite, pinned in EngineInfraSpec).
     */
-  def streamingMerge(tableDir: String, key: String, seqCol: String)
-      : (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], Long) => Unit =
+  def streamingMerge(tableDir: String, key: String, seqCol: String): Sink =
     (batch, batchId) => {
       import org.apache.spark.sql.functions._
       val spark = batch.sparkSession
@@ -315,272 +323,66 @@ object EventStreams {
       merged.write.mode("overwrite").parquet(s"$tableDir/version=$batchId")
     }
 
-  /** Streaming ANN retrieval — the online serving loop for a stored
-    * [[graft.operators.Similarity.writeIvfIndex]] index as a foreachBatch
-    * sink: each micro-batch of (q_id, q_vec) query vectors probes the
-    * stored centroids + cell-partitioned inverted lists
-    * ([[graft.operators.Similarity.ivfTopKAgainstIndex]] — broadcast
-    * batch × tiny centroids, dynamic-partition-pruned lists scan) and
-    * writes per-query top-k to `outDir/batch=<id>` (idempotent
-    * overwrite — a replayed batch probes a read-only index and re-derives
-    * identical results). Per-batch cost ∝ batch; the index is shared with
-    * the batch path, so offline build / online probe is ONE codebase.
+  /** Runs `body` on each micro-batch in its own [[graft.CacheScope]] scope
+    * (the per-batch release in the object doc).
     */
-  def annProbeIngest(indexDir: String, outDir: String, nProbe: Int, k: Int)
-      : (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], Long) => Unit =
-    (batch, batchId) => graft.CacheScope.scoped {
-      graft.operators.Similarity
-        .ivfTopKAgainstIndex(batch.toDF(), indexDir, nProbe, k)
-        .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-    }
+  private def perBatch(body: (DataFrame, Long) => Unit): Sink =
+    (batch, batchId) => graft.CacheScope.scoped(body(batch.toDF(), batchId))
 
-  /** Streaming ANN index ingestion — the replay-safe producer loop for a
-    * [[graft.operators.Similarity.writeIvfIndexVersioned]] index as a
-    * foreachBatch sink: each micro-batch of (vec_id, embedding) vectors is
-    * assigned against the frozen stored centroids and OVERWRITES its own
-    * `lists/batch=<id>` partition
-    * ([[graft.operators.Similarity.ingestIntoIvfIndex]]), so a
-    * crash-replayed batch converges to identical index contents instead
-    * of duplicating its vectors — the same batch-versioned idempotence as
-    * [[dedupIngest]]'s index writes. Streaming batchIds start at 0 but
-    * batch 0 of the layout is the offline build, so the sink writes
-    * streaming batch N to `batch=N+1` (stable across replays, which
-    * re-deliver the same N). Per-batch cost ∝ batch; probes
-    * ([[annProbeIngest]] / the batch path) see each batch as soon as its
-    * partition lands.
+  /** The one `outDir/batch=<id>` write every output sink makes. */
+  private def overwriteBatch(df: DataFrame, outDir: String,
+      batchId: Long): Unit =
+    df.write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
+
+  /** Output sink: runs `op` on each micro-batch and overwrites
+    * `outDir/batch=<id>` with the result. `outputSink(dir)(identity)` is
+    * the exactly-once writer for a sink without a transaction log (the
+    * JDBC, object-store or custom-sink case the built-in file sink's log
+    * does not cover); on a sink with primary keys, swap the overwrite for
+    * a keyed upsert ([[streamingMerge]]).
     */
-  def annIngest(indexDir: String)
-      : (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], Long) => Unit =
-    (batch, batchId) => graft.CacheScope.scoped {
-      graft.operators.Similarity
-        .ingestIntoIvfIndex(batch.toDF(), indexDir, batchId + 1)
-    }
+  def outputSink(outDir: String)(op: DataFrame => DataFrame): Sink =
+    perBatch((batch, batchId) => overwriteBatch(op(batch), outDir, batchId))
 
-  /** Streaming PQ-ANN serving — [[annProbeIngest]] over the COMPRESSED
-    * index: each micro-batch of (q_id, q_vec) queries probes a stored
-    * [[graft.operators.Similarity.writeIvfIndexPQ]] index (cell-pruned
-    * codes scan + ADC + bounded exact re-rank) and writes per-query top-k
-    * to `outDir/batch=<id>` (idempotent overwrite over a read-only
-    * index). The serving path this layout exists for: the scanned codes
-    * are ~dim·4/M smaller than raw lists, so the per-batch probe stays
-    * memory-resident at corpus sizes where raw lists spill.
+  /** Store sink: runs `op(batch, storeBatch)` on each micro-batch, where
+    * stream batch N is store batch N + 1 (store batch 0 is the offline
+    * build). A replay re-delivers the same N, so it overwrites the same
+    * store batch ([[graft.operators.Compaction]]'s replay-safe ingest).
     */
-  def pqProbeIngest(indexDir: String, outDir: String, nProbe: Int, k: Int,
-      shortlist: Int = 50)
-      : (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], Long) => Unit =
-    (batch, batchId) => graft.CacheScope.scoped {
-      graft.operators.Similarity
-        .ivfTopKAgainstIndexPQ(batch.toDF(), indexDir, nProbe, k, shortlist)
-        .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-    }
+  def storeSink(op: (DataFrame, Long) => Unit): Sink =
+    perBatch((batch, batchId) => op(batch, batchId + 1))
 
-  /** Streaming PQ-ANN index ingestion — [[annIngest]] over the compressed
-    * layout: each micro-batch encodes against the FROZEN stored
-    * centroids + codebooks and OVERWRITES its own codes/vectors batch
-    * partitions ([[graft.operators.Similarity.ingestIntoIvfIndexPQ]]) —
-    * replay-safe for the same reason, with the same batch-numbering
-    * shift (streaming batch N → layout batch N+1; batch 0 is the build).
+  /** Streaming vector ingestion into a
+    * [[graft.operators.Similarity.writeIvfIndexVersioned]] index
+    * ([[graft.operators.Similarity.ingestIntoIvfIndex]]).
     */
-  def pqIngest(indexDir: String)
-      : (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], Long) => Unit =
-    (batch, batchId) => graft.CacheScope.scoped {
-      graft.operators.Similarity
-        .ingestIntoIvfIndexPQ(batch.toDF(), indexDir, batchId + 1)
-    }
+  def annIngest(indexDir: String): Sink =
+    storeSink(graft.operators.Similarity.ingestIntoIvfIndex(_, indexDir, _))
 
-  /** [[pqProbeIngest]] over the RESIDUAL layout
-    * ([[graft.operators.Similarity.writeIvfIndexPQR]]) — same serving
-    * contract, residual ADC + exact stored norms underneath.
+  /** Streaming posting ingestion into a
+    * [[graft.operators.Retrieval.writeBm25IndexVersioned]] index
+    * ([[graft.operators.Retrieval.ingestIntoBm25Index]]).
     */
-  def pqrProbeIngest(indexDir: String, outDir: String, nProbe: Int, k: Int,
-      shortlist: Int = 50)
-      : (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], Long) => Unit =
-    (batch, batchId) => graft.CacheScope.scoped {
-      graft.operators.Similarity
-        .ivfTopKAgainstIndexPQR(batch.toDF(), indexDir, nProbe, k, shortlist)
-        .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-    }
+  def bm25Ingest(indexDir: String): Sink =
+    storeSink(graft.operators.Retrieval.ingestIntoBm25Index(_, indexDir, _))
 
-  /** [[pqIngest]] over the residual layout — frozen centroids + frozen
-    * residual codebooks, exact norms at encode time, replay-convergent
-    * own-partition overwrites
-    * ([[graft.operators.Similarity.ingestIntoIvfIndexPQR]]).
-    */
-  def pqrIngest(indexDir: String)
-      : (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], Long) => Unit =
-    (batch, batchId) => graft.CacheScope.scoped {
-      graft.operators.Similarity
-        .ingestIntoIvfIndexPQR(batch.toDF(), indexDir, batchId + 1)
-    }
-
-  /** [[pqProbeIngest]] over the SQ8 layout — per-dim affine
-    * reconstruction in place of the codebook LUT, same read-only
-    * idempotent serving contract
-    * ([[graft.operators.Similarity.ivfTopKAgainstIndexSQ]]).
-    */
-  def sqProbeIngest(indexDir: String, outDir: String, nProbe: Int, k: Int,
-      shortlist: Int = 50)
-      : (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], Long) => Unit =
-    (batch, batchId) => graft.CacheScope.scoped {
-      graft.operators.Similarity
-        .ivfTopKAgainstIndexSQ(batch.toDF(), indexDir, nProbe, k, shortlist)
-        .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-    }
-
-  /** [[pqIngest]] over the SQ8 layout — frozen centroids + frozen
-    * quantizer stats, replay-convergent own-partition overwrites
-    * ([[graft.operators.Similarity.ingestIntoIvfIndexSQ]]).
-    */
-  def sqIngest(indexDir: String)
-      : (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], Long) => Unit =
-    (batch, batchId) => graft.CacheScope.scoped {
-      graft.operators.Similarity
-        .ingestIntoIvfIndexSQ(batch.toDF(), indexDir, batchId + 1)
-    }
-
-  /** Streaming BM25 retrieval — [[annProbeIngest]]'s lexical twin: each
-    * micro-batch of (q_id, term) query bags probes a stored
-    * [[graft.operators.Retrieval.writeBm25Index]] posting index
-    * (broadcast batch, bucket-directory-pruned lists scan) and writes
-    * per-query top-k to `outDir/batch=<id>` (idempotent overwrite — a
-    * replayed batch probes a read-only index and re-derives identical
-    * results). Per-batch cost ∝ Σ df(batch's terms); offline build /
-    * online probe is ONE codebase.
-    */
-  def bm25ProbeIngest(indexDir: String, outDir: String, k: Int)
-      : (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], Long) => Unit =
-    (batch, batchId) => graft.CacheScope.scoped {
-      graft.operators.Retrieval
-        .bm25AgainstIndex(batch.toDF(), indexDir, k)
-        .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-    }
-
-  /** Streaming quality filtering against a STORED LM
-    * ([[graft.operators.TextOps.writeLmModel]]): each micro-batch of
-    * (doc_id, text) documents is perplexity-scored against the frozen
-    * model artifact and its per-doc report (id, n_bigrams, h, ppl, keep)
-    * written to `outDir/batch=<id>` (idempotent overwrite — the model is
-    * read-only to the serving path, so a replayed batch re-derives
-    * identical scores). The online form of the q175/q176 filter: the
-    * model never adapts to the stream it is filtering, per-batch cost is
-    * the batch's own explode + broadcast joins.
-    */
-  def lmScoreIngest(modelDir: String, outDir: String, lambda: Double,
-      pplThreshold: Double)
-      : (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], Long) => Unit =
-    (batch, batchId) => graft.CacheScope.scoped {
-      import org.apache.spark.sql.functions.col
-      graft.operators.TextOps.lmScoreAgainstModel(batch.toDF(),
-          col("doc_id"), col("text"), modelDir, lambda, pplThreshold)
-        .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-    }
-
-  /** Streaming quality-classifier serving — [[lmScoreIngest]]'s sibling
-    * over a stored [[graft.operators.TextOps.writeLinearModel]] artifact
-    * (the q179 trained model): each micro-batch of (doc_id, text) scores
-    * against the FROZEN one-row model (loaded driver-side, riding as
-    * expression data — scoring stays a zero-shuffle narrow map) and
-    * writes its keep/drop report under `batch=<id>` — overwrite mode, so
-    * a crash-replayed batch re-derives the identical report
-    * (idempotent). The model never retrains online: quality drift is a
-    * retrain-and-swap, not an in-stream update.
-    */
-  def clsScoreIngest(modelDir: String, outDir: String, threshold: Double)
-      : (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], Long) => Unit =
-    (batch, batchId) => graft.CacheScope.scoped {
-      import org.apache.spark.sql.functions.col
-      graft.operators.TextOps.hashedLinearScoreAgainstModel(batch.toDF(),
-          col("doc_id"), col("text"), modelDir, threshold)
-        .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-    }
-
-  /** Streaming kNN-label serving —
-    * [[graft.operators.Graph.labelPropagation]]'s online twin
-    * ([[clsScoreIngest]]'s shape over a vector stream): each micro-batch
-    * of (q_id, q_vec) vectors classifies against a FROZEN labeling
-    * artifact + stored ANN index
-    * ([[graft.operators.Graph.knnClassifyAgainstIndex]] — cell-pruned
-    * probe, one bounded hash join, struct-max plurality) and writes its
-    * (q_id, label, votes) report under `batch=<id>` — overwrite mode, so
-    * a crash-replayed batch re-derives the identical report over the
-    * read-only index + labeling (idempotent). Labels never update
-    * online: label drift is a relabel-and-swap, the stored-model
-    * discipline of [[lmScoreIngest]]/[[clsScoreIngest]].
-    */
-  def knnLabelIngest(indexDir: String, labelsDir: String, outDir: String,
-      nProbe: Int, k: Int)
-      : (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], Long) => Unit =
-    (batch, batchId) => graft.CacheScope.scoped {
-      graft.operators.Graph
-        .knnClassifyAgainstIndex(batch.toDF(), indexDir, labelsDir, nProbe, k)
-        .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-    }
-
-  /** Streaming head/middle/tail bucketing —
-    * [[graft.operators.TextOps.perplexityPartition]]'s serving form
-    * ([[lmScoreIngest]]'s sibling with a second frozen artifact): each
-    * micro-batch of (id, text, group) documents scores against the
-    * stored reference LM and buckets against the stored tercile
-    * boundaries ([[graft.operators.TextOps.pplBucketAgainstBoundaries]])
-    * — both artifacts frozen (recomputing terciles per batch would make
-    * a doc's bucket depend on its batch-mates), reports under
-    * `batch=<id>`, overwrite mode, replay-idempotent.
-    */
-  def pplBucketIngest(lmDir: String, boundsDir: String, outDir: String,
-      lambda: Double)
-      : (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], Long) => Unit =
-    (batch, batchId) => graft.CacheScope.scoped {
-      import org.apache.spark.sql.functions.col
-      graft.operators.TextOps.pplBucketAgainstBoundaries(batch.toDF(),
-          col("id"), col("text"), col("group"), lmDir, boundsDir, lambda)
-        .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-    }
-
-  /** Streaming CountMin maintenance — the sketch the telemetry loop keeps
-    * when exact per-key aggregation is too wide: each micro-batch's OWN
-    * d×w sketch overwrites `cells/batch=<id>`
-    * ([[graft.operators.Sketches.ingestIntoCountMin]]); CountMin's
-    * LINEARITY means the store's cell-wise sum always equals a one-shot
-    * sketch of everything ever ingested, so probes
-    * ([[graft.operators.Sketches.countMinEstimateAgainstStore]]) need no
-    * coordination with producers and a crash-replayed batch converges to
-    * identical cells (the index families' replay contract). Same batch
-    * numbering shift as [[annIngest]]: streaming batch N lands in layout
-    * batch N+1 (batch 0 is the offline build).
-    */
-  def countMinIngest(dir: String, keyCol: String)
-      : (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], Long) => Unit =
-    (batch, batchId) => graft.CacheScope.scoped {
-      graft.operators.Sketches.ingestIntoCountMin(batch.toDF(),
-        org.apache.spark.sql.functions.col(keyCol), dir, batchId + 1)
-    }
-
-  /** The full ONLINE curation gate — the round-7–10 quality surface as
-    * ONE foreachBatch sink, the streaming twin of q188's offline
-    * composition with every model FROZEN (the stored-artifact
-    * discipline): each micro-batch of (id, text) documents passes the
-    * Gopher repetition filter (stateless), the stored reference-LM
-    * perplexity gate, and the stored trained-classifier gate, then the
-    * survivors run the replay-safe dedup-index stage ([[dedupIngest]]'s
-    * body verbatim: within-batch dedup, dedup against all PRIOR batches
-    * of the stored index, extend the index, write the kept docs under
-    * `outDir/batch=<id>`). Filters are narrow maps over the batch;
-    * models never retrain online (drift is a retrain-and-swap); the
-    * whole sink is replay-idempotent because every stage either is a
-    * pure function of the batch or overwrites its own batch partition.
+  /** The full ONLINE curation gate — the streaming twin of q188's offline
+    * composition with every model frozen: each micro-batch of (id, text)
+    * documents passes the Gopher repetition filter (stateless), the
+    * stored reference-LM perplexity gate and the stored trained-classifier
+    * gate, then the survivors run [[dedupIngest]]. Filters are narrow maps
+    * over the batch; every stage is a pure function of the batch or
+    * overwrites its own batch, so the whole sink is replay-idempotent.
     */
   def curationIngest(lmDir: String, clsDir: String, indexDir: String,
       outDir: String,
       maxTopTokFrac: Double, maxTopBigramFrac: Double, minTtr: Double,
       lambda: Double, pplThreshold: Double, clsThreshold: Double,
       n: Int = 3, numHashes: Int = 64, bands: Int = 16,
-      threshold: Double = 0.8)
-      : (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], Long) => Unit =
-    (batch, batchId) => graft.CacheScope.scoped {
-      import org.apache.spark.sql.functions.col
-      val docs = batch.toDF().select(col("id"), col("text"))
-      def keep(scored: org.apache.spark.sql.DataFrame)
-          : org.apache.spark.sql.DataFrame =
+      threshold: Double = 0.8): Sink =
+    perBatch { (batch, batchId) =>
+      val docs = batch.select(col("id"), col("text"))
+      def keep(scored: DataFrame): DataFrame =
         scored.filter(col("keep")).select(col("id"))
       val f1 = docs.join(keep(graft.operators.TextOps.repetitionFilter(
         docs, col("id"), col("text"),
@@ -595,241 +397,21 @@ object EventStreams {
         f3, batchId)
     }
 
-  /** Streaming dedup-index ingestion — [[bm25Ingest]]'s dedup sibling
-    * over a [[graft.operators.Dedup.writeCorpusIndexVersioned]] index:
-    * each micro-batch of (id, text) documents OVERWRITES its own batch
-    * partitions of the three views (hashes/bands/shingles), so a
-    * crash-replayed batch converges to identical index contents. Same
-    * batch-numbering shift as [[annIngest]]: streaming batch N lands in
-    * layout batch N+1 (batch 0 is the offline build). The producer's
-    * maintenance tick consults
-    * [[graft.operators.Dedup.compactCorpusIndexIfNeeded]] AFTER its
-    * checkpoint commits (the [[graft.operators.Compaction]] store's
-    * replay-horizon contract).
-    */
-  def corpusIndexIngest(indexDir: String, n: Int = 3, numHashes: Int = 64,
-      bands: Int = 16)
-      : (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], Long) => Unit =
-    (batch, batchId) => graft.CacheScope.scoped {
-      graft.operators.Dedup.ingestIntoCorpusIndex(batch.toDF(), indexDir,
-        batchId + 1, n, numHashes, bands)
-    }
-
-  /** Streaming BM25 index ingestion — [[annIngest]]'s lexical twin over a
-    * [[graft.operators.Retrieval.writeBm25IndexVersioned]] index: each
-    * micro-batch of (id, term, tf, dl) postings OVERWRITES its own
-    * `lists/batch=<id>` and `stats/batch=<id>` partitions
-    * ([[graft.operators.Retrieval.ingestIntoBm25Index]]), so a
-    * crash-replayed batch converges to identical index contents. Same
-    * batch-numbering shift as [[annIngest]]: streaming batch N lands in
-    * layout batch N+1 (batch 0 is the offline build). df and corpus stats
-    * need no freezing — probes derive both from the postings, so later
-    * probes see every ingested batch exactly.
-    */
-  def bm25Ingest(indexDir: String)
-      : (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], Long) => Unit =
-    (batch, batchId) => graft.CacheScope.scoped {
-      graft.operators.Retrieval
-        .ingestIntoBm25Index(batch.toDF(), indexDir, batchId + 1)
-    }
-
-  /** Streaming right-to-be-forgotten — DELETION REQUESTS as a stream:
-    * each micro-batch of doc ids (one column `id`) is physically deleted
-    * from the stored BM25 index
-    * ([[graft.operators.Retrieval.deleteFromBm25Index]]: anti-join
-    * rewrite + exact stats recount under the atomic epoch swap). No
-    * batch versioning is needed for replay safety here: deletion is
-    * IDEMPOTENT — a crash-replayed batch anti-joins ids that are
-    * already gone and rewrites the index to the same contents (the
-    * spec-pinned no-op rewrite). Each delete is an index-sized rewrite
-    * (the compaction cost envelope), so production pipelines batch
-    * requests with a coarse trigger (GDPR allows erasure within days,
-    * not milliseconds) — one rewrite per window, not per request.
-    */
-  def bm25DeleteIngest(indexDir: String)
-      : (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], Long) => Unit =
-    (batch, _) => graft.CacheScope.scoped {
-      graft.operators.Retrieval
-        .deleteFromBm25Index(batch.sparkSession, indexDir, batch.toDF())
-    }
-
-  /** [[bm25DeleteIngest]] for the vector side: micro-batches of vec ids
-    * (one column `vec_id`) delete from a stored IVF index
-    * ([[graft.operators.Similarity.deleteFromIvfIndex]]). Same
-    * idempotent-replay and batch-the-requests contract.
-    */
-  def annDeleteIngest(indexDir: String)
-      : (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], Long) => Unit =
-    (batch, _) => graft.CacheScope.scoped {
-      graft.operators.Similarity
-        .deleteFromIvfIndex(batch.sparkSession, indexDir, batch.toDF())
-    }
-
-  /** Streaming HYBRID retrieval — both stored indexes behind one sink:
-    * each micro-batch of (q_id, terms, q_vec) queries probes the BM25
-    * posting index (bucket-pruned) AND the IVF vector index (cell-pruned),
-    * fuses the two top-k lists with reciprocal rank fusion
-    * ([[graft.operators.Retrieval.rrfFuse2]]) and writes per-query fused
-    * top-k to `outDir/batch=<id>` (idempotent overwrite; both indexes are
-    * read-only to the serving path, so replays re-derive identical
-    * results). The q158 composition as an online service — per-batch cost
-    * is the two pruned probes; the fusion is free.
-    */
-  def hybridProbeIngest(bm25Dir: String, ivfDir: String, outDir: String,
-      nProbe: Int, k: Int, rrfK: Int = 60)
-      : (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], Long) => Unit =
-    (batch, batchId) => graft.CacheScope.scoped {
-      import org.apache.spark.sql.functions.{col, explode}
-      val b = batch.toDF()
-      val lex = graft.operators.Retrieval.bm25AgainstIndex(
-          b.select(col("q_id"), explode(col("terms")).as("term")), bm25Dir, k)
-        .select(col("q_id"), col("doc_id"), col("rnk"))
-      val vec = graft.operators.Similarity.ivfTopKAgainstIndex(
-          b.select(col("q_id"), col("q_vec")), ivfDir, nProbe, k)
-        .select(col("q_id"), col("vec_id").as("doc_id"), col("rnk"))
-      graft.operators.Retrieval.rrfFuse2(lex, vec, k, rrfK)
-        .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-    }
-
-  /** Streaming data-quality gate — [[graft.operators.Expectations]] as a
-    * foreachBatch sink: every micro-batch is checked against the contract
-    * rules in ONE aggregation pass and its per-rule report written to
-    * `outDir/batch=<id>` (idempotent overwrite — a replayed batch
-    * re-derives the identical report). The per-batch reports are the
-    * monitoring series a pipeline alerts on; the batch path (q161) is the
-    * same rule compiler, so offline contract and online monitor are ONE
-    * rule set.
-    */
-  def expectationsIngest(rules: Seq[graft.operators.Expectations.Rule],
-      outDir: String)
-      : (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], Long) => Unit =
-    (batch, batchId) => graft.CacheScope.scoped {
-      graft.operators.Expectations.check(batch.toDF(), rules)
-        .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-    }
-
-  /** Streaming unigram tokenization — the serving twin of the stored
-    * unigram-LM tokenizer artifact (q204): each micro-batch of (id, text)
-    * documents tokenizes its words through the FROZEN stored piece table
-    * ([[graft.operators.Unigram.loadModel]] once per batch — a bounded
-    * model read, the lmScoreIngest pattern) and writes per-doc
-    * (id, n_tokens) under `batch=<id>` — overwrite mode,
-    * replay-idempotent. Unknown characters segment at the unk floor, so
-    * serving never fails on unseen text.
-    */
-  def unigramTokenizeIngest(modelDir: String, outDir: String)
-      : (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], Long) => Unit =
-    (batch, batchId) => graft.CacheScope.scoped {
-      import org.apache.spark.sql.functions.{col, explode, expr, size, sum}
-      val spark = batch.sparkSession
-      val model = graft.operators.Unigram.loadModel(spark, modelDir)
-      // per-WORD tokenization once (distinct words of the batch), then one
-      // join from the exploded docs — the q205 cost shape at batch scale
-      val words = batch.select(explode(expr(
-        "filter(split(lower(text), '\\\\s+'), x -> length(x) > 0)")).as("w"))
-        .distinct()
-      val wt = graft.operators.Unigram.tokenize(words, model)
-        .select(col("w"), size(col("toks")).cast("long").as("nt"))
-      batch.select(col("id"), explode(expr(
-        "filter(split(lower(text), '\\\\s+'), x -> length(x) > 0)")).as("w"))
-        .join(wt, Seq("w"))
-        .groupBy(col("id")).agg(sum(col("nt")).as("n_tokens"))
-        .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-    }
-
-  /** Streaming packed-shard export — q218's online form: each
-    * micro-batch of (id, text) documents tokenizes against the FROZEN
-    * stored byte-level BPE artifact (the q181 model) and packs into
-    * budget-sized bins WITHIN THE BATCH, written under `batch=<id>`.
-    * Packing is inherently a batch decision (bins are contiguous token
-    * ranges), so the streaming contract is per-batch bins — each batch's
-    * shards are final the moment it commits, trainers consume closed
-    * batches; only each batch's LAST bin per source may be short.
-    * Replay-idempotent: tokenization and packing are pure functions of
-    * the batch + the frozen model.
-    */
-  def packShardsIngest(bpeModelDir: String, outDir: String, budget: Long)
-      : (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], Long) => Unit =
-    (batch, batchId) => graft.CacheScope.scoped {
-      import org.apache.spark.sql.functions._
-      val spark = batch.sparkSession
-      val merges = graft.operators.TextOps.loadBpeMerges(spark, bpeModelDir)
-      val dw = batch.toDF().select(col("source"), col("id"),
-        posexplode(regexp_extract_all(lower(col("text")),
-          lit(graft.operators.TextOps.byteLevelTokenPattern), lit(0)))
-          .as(Seq("pos", "w")))
-      val wt = dw.select(col("w")).distinct()
-        .select(col("w"),
-          graft.functions.bpe_encode(col("w"), merges, byteLevel = true)
-            .as("toks"))
-      val dt = dw.join(wt, Seq("w"))
-        .groupBy(col("source"), col("id"))
-        .agg(expr(
-          "flatten(transform(sort_array(collect_list(struct(pos, toks))), x -> x.toks))")
-          .as("toks"))
-      graft.operators.Curation.packShards(dt, col("source"), col("id"),
-        col("toks"), budget, partitions = 32)
-        .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-    }
-
-  /** Streaming TOKEN-ID shard export — [[packShardsIngest]]'s
-    * loader-facing twin (the q226 artifact online): each micro-batch
-    * tokenizes through the FROZEN stored BPE model, maps pieces through
-    * the FROZEN stored (piece → id) vocabulary
-    * ([[graft.operators.TextOps.loadBpeVocabIds]] — OOV raises), packs
-    * with [[graft.operators.Curation.packShardIds]] and writes the
-    * per-(source, bin) INT id arrays + decimal-stream md5 under
-    * `batch=<id>` — overwrite mode, replay-idempotent. Bins are
-    * batch-local (shard assembly is per-export-unit by design — a
-    * trainer consumes whole shard files, never cross-batch splices).
-    */
-  def packShardIdsIngest(bpeModelDir: String, vocabIdsDir: String,
-      outDir: String, budget: Long)
-      : (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], Long) => Unit =
-    (batch, batchId) => graft.CacheScope.scoped {
-      import org.apache.spark.sql.functions._
-      val spark = batch.sparkSession
-      val merges = graft.operators.TextOps.loadBpeMerges(spark, bpeModelDir)
-      val vocab = graft.operators.TextOps.loadBpeVocabIds(spark, vocabIdsDir)
-      val dw = batch.toDF().select(col("source"), col("id"),
-        posexplode(regexp_extract_all(lower(col("text")),
-          lit(graft.operators.TextOps.byteLevelTokenPattern), lit(0)))
-          .as(Seq("pos", "w")))
-      val wt = dw.select(col("w")).distinct()
-        .select(col("w"),
-          graft.functions.bpe_encode(col("w"), merges, byteLevel = true)
-            .as("toks"))
-      val dt = dw.join(wt, Seq("w"))
-        .groupBy(col("source"), col("id"))
-        .agg(expr(
-          "flatten(transform(sort_array(collect_list(struct(pos, toks))), x -> x.toks))")
-          .as("toks"))
-      graft.operators.Curation.packShardIds(dt, col("source"), col("id"),
-        col("toks"), vocab, budget, partitions = 32)
-        .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-    }
-
   /** Streaming incremental clustering — q219's maintained CC labels kept
-    * fresh online (the [[dedupIngest]] companion): each micro-batch of
-    * (id, text) documents (1) derives its verified near-dup pairs —
-    * within itself plus against batches < b of the stored corpus index
-    * ([[graft.operators.Dedup.nearDupPairsAgainstIndex]]), (2) extends
-    * the corpus index with its own views, and (3) ingests ids + pairs
-    * into the CC label store (quotient-graph CC + remap merge events).
-    * Replay-convergent END TO END: pair derivation and the label ingest
-    * both resolve against the PRE-batch state, and every write
-    * overwrites its own batch partition. Downstream leakage-safe ops
-    * (split/contrastive batches/rep selection) read
+    * fresh online: each micro-batch of (id, text) documents (1) derives
+    * its verified near-dup pairs, within itself and against the store
+    * batches before its own
+    * ([[graft.operators.Dedup.nearDupPairsAgainstIndex]]), (2) ingests
+    * its own views into the corpus index, and (3) ingests ids + pairs
+    * into the CC label store. Pair derivation and the label ingest both
+    * resolve against the pre-batch state, so a replay converges.
+    * Downstream leakage-safe ops read
     * [[graft.operators.Dedup.ccLabelsResolved]] at any point and see a
     * labeling consistent with everything ingested so far.
     */
   def ccLabelIngest(indexDir: String, ccDir: String, n: Int = 3,
-      numHashes: Int = 64, bands: Int = 16, threshold: Double = 0.8)
-      : (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], Long) => Unit =
-    (batch, batchId) => graft.CacheScope.scoped {
-      import org.apache.spark.sql.functions.col
-      val b = batchId + 1
-      val docs = batch.toDF()
+      numHashes: Int = 64, bands: Int = 16, threshold: Double = 0.8): Sink =
+    storeSink { (docs, b) =>
       // eager checkpoint: the pair plan scans the index views the corpus
       // ingest below is about to extend; beforeBatch already excludes the
       // batch's own rows, but materializing first also spares the cc
@@ -843,39 +425,30 @@ object EventStreams {
         pairs, ccDir, b)
     }
 
-  /** Streaming IMAGE dedup-on-arrival — [[dedupIngest]]'s image twin over
-    * the stored aHash index: each micro-batch of (id, media) images is
-    * fingerprinted ONCE (real decode,
-    * [[graft.operators.Multimodal.decodeImageAHash]]), deduplicated
-    * within the batch (drop any image whose fingerprint matches a LOWER
-    * id within the store's frozen hamming radius), probed against
-    * strictly OLDER store batches (`beforeBatch` — a crash-replayed
-    * batch probes exactly what the first attempt probed, its own
-    * half-written entries invisible), and reported under
-    * `outDir/batch=<id>` as (id, ah_hi, ah_lo, n_store_dups, kept).
-    * Kept fingerprints ingest into the store under batch=<id+1>
-    * (batch 0 is the build); undecodable payloads report null
-    * fingerprints and kept = false (quarantine, never silently
-    * indexed). Band geometry comes from the store's frozen `params/`,
-    * so the stream cannot drift from the build. Overwrite mode
-    * everywhere — replay-idempotent.
+  /** Streaming IMAGE dedup-on-arrival over the stored aHash index: each
+    * micro-batch of (id, media) images is fingerprinted ONCE (real
+    * decode, [[graft.operators.Multimodal.decodeImageAHash]]),
+    * deduplicated within the batch (drop any image whose fingerprint
+    * matches a LOWER id within the store's frozen hamming radius), probed
+    * against the store batches before its own, and reported under
+    * `outDir/batch=<id>` as (id, ah_hi, ah_lo, n_store_dups, kept). Kept
+    * fingerprints ingest into the store. Undecodable payloads report null
+    * fingerprints and kept = false (quarantine, never silently indexed).
+    * Band geometry comes from the store's frozen `params/`, so the stream
+    * cannot drift from the build.
     */
-  def imageAHashIngest(indexDir: String, outDir: String)
-      : (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], Long) => Unit =
-    (batch, batchId) => graft.CacheScope.scoped {
-      import org.apache.spark.sql.functions.{coalesce, col, count, lit}
+  def imageAHashIngest(indexDir: String, outDir: String): Sink =
+    (batch, batchId) => storeSink { (images, b) =>
       import graft.CacheScope.ScopedPersist
-      val spark = batch.sparkSession
-      val b = batchId + 1
-      val (maxHamming, _) = graft.operators.Dedup.ahashParams(spark, indexDir)
+      val (maxHamming, _) =
+        graft.operators.Dedup.ahashParams(images.sparkSession, indexDir)
       val fps = graft.operators.Multimodal.decodeImageAHash(
-          batch.select(col("id"), col("media")), "media")
+          images.select(col("id"), col("media")), "media")
         .select(col("id"), col("ah_hi"), col("ah_lo"))
         .persistScoped() // within-batch pairs + probe + report + ingest
       // within-batch: drop any image matching a lower id (keep-lowest)
       val withinDrops = graft.operators.Dedup.ahashPairs(fps, maxHamming)
         .select(col("id_b").as("id")).distinct()
-      // store matches per probe, strictly older batches only
       val storeDups = graft.operators.Dedup
         .ahashAgainstIndex(fps, indexDir, beforeBatch = Some(b))
         .groupBy(col("id")).agg(count(lit(1)).as("n_store_dups"))
@@ -887,297 +460,49 @@ object EventStreams {
           (col("ah_hi").isNotNull && col("__wd").isNull &&
             coalesce(col("n_store_dups"), lit(0L)) === 0).as("kept"))
         .persistScoped()
-      report.write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
+      overwriteBatch(report, outDir, batchId)
       graft.operators.Dedup.ingestIntoAHashIndex(
         report.filter(col("kept")).select(col("id"), col("ah_hi"), col("ah_lo")),
         indexDir, b)
-    }
+    }(batch, batchId)
 
-  /** Streaming Kneser-Ney quality filtering — [[lmScoreIngest]]'s sibling
-    * with the PRODUCTION smoothing
-    * ([[graft.operators.TextOps.knScoreAgainstModel]]): the SAME stored
-    * LM artifact serves both smoothings (the discount statistics derive
-    * from the pruned tables at load), so an operator can switch add-one →
-    * KN online without retraining or re-shipping a model. Per-batch
-    * report under `batch=<id>`, overwrite mode, replay-idempotent;
-    * the model never adapts to the stream it filters.
-    */
-  def knScoreIngest(modelDir: String, outDir: String, pplThreshold: Double)
-      : (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], Long) => Unit =
-    (batch, batchId) => graft.CacheScope.scoped {
-      import org.apache.spark.sql.functions.col
-      graft.operators.TextOps.knScoreAgainstModel(batch.toDF(),
-          col("doc_id"), col("text"), modelDir, pplThreshold)
-        .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-    }
-
-  /** Streaming language identification — the serving twin of the TRAINED
-    * multiclass langid model
-    * ([[graft.operators.TextOps.langIdScoreAgainstModel]], CCNet stage
-    * 0): each micro-batch classifies against the FROZEN stored artifact
-    * (K bounded rows shipped as expression data — one narrow zero-shuffle
-    * map per batch, no join) and writes per-doc (id, pred_lang, score)
-    * under `batch=<id>` — overwrite mode, replay-idempotent. The model
-    * never adapts to the stream (drift triggers a retrain-and-swap, the
-    * stored-artifact discipline); docs whose normalized text has no
-    * char bigram are dropped (nothing to classify), matching offline.
-    */
-  def langIdIngest(modelDir: String, outDir: String)
-      : (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], Long) => Unit =
-    (batch, batchId) => graft.CacheScope.scoped {
-      import org.apache.spark.sql.functions.col
-      graft.operators.TextOps.langIdScoreAgainstModel(batch.toDF(),
-          col("id"), col("text"), modelDir)
-        .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-    }
-
-  /** Streaming TAGGER table — the crawler's arrival-time filter
-    * ([[graft.operators.TextOps.taggerTable]] as a foreachBatch sink):
-    * each micro-batch of (id, text) documents is tagged by all four
-    * safety/quality taggers in one narrow zero-shuffle pass and the full
-    * attribute table (keeps + mixer decision + reasons) lands under
-    * `batch=<id>` — overwrite mode, replay-idempotent. The table carries
-    * EVERY batch row (drops are decisions with reasons, never silent),
-    * so a downstream mixer re-run with different rules needs no
-    * re-tagging — exactly Dolma's tagger/mixer split.
-    */
-  def taggerIngest(outDir: String, blocklist: Seq[String], blockTau: Long,
-      piiMax: Long, maxTopTokFrac: Double, maxTopBigramFrac: Double,
-      minTtr: Double, minStopwordRatio: Double,
-      gopher: graft.operators.TextOps.GopherRules =
-        graft.operators.TextOps.GopherRules())
-      : (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], Long) => Unit =
-    (batch, batchId) => graft.CacheScope.scoped {
-      import org.apache.spark.sql.functions.col
-      graft.operators.TextOps.taggerTable(batch.toDF(),
-          col("id"), col("text"), blocklist, blockTau, piiMax,
-          maxTopTokFrac, maxTopBigramFrac, minTtr, minStopwordRatio, gopher)
-        .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-    }
-
-  /** Streaming HTML EXTRACTION — the crawler's arrival-time entry point
-    * ([[graft.operators.Html.extractBlocks]] as a foreachBatch sink):
-    * each micro-batch of (id, html) pages is segmented by the
-    * deterministic extractor in one narrow zero-shuffle pass and the
-    * block table (id, block_type, block_idx, block_text) lands under
-    * `batch=<id>` — overwrite mode, replay-idempotent. Downstream
-    * taggers/dedup consume the extracted text without ever re-parsing
-    * markup — exactly the batch pipeline's q244 → q245 split.
-    */
-  def htmlExtractIngest(outDir: String)
-      : (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], Long) => Unit =
-    (batch, batchId) => graft.CacheScope.scoped {
-      import org.apache.spark.sql.functions.col
-      graft.operators.Html.extractBlocks(
-          batch.toDF().select(col("id"), col("html")), col("html"))
-        .select(col("id"), col("block_type"), col("block_idx"),
-          col("block_text"))
-        .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-    }
-
-  /** Streaming WARC INGESTION — the crawl front door one container
-    * ahead of [[htmlExtractIngest]]
-    * ([[graft.operators.Warc.parseFields]] as a foreachBatch sink):
-    * each micro-batch of (file_id, warc) container files splits into
-    * records by exact Content-Length framing and the typed field table
-    * (file_id, warc_version, url, status, content_type, html,
-    * malformed) lands under `batch=<id>` — overwrite mode,
-    * replay-idempotent. Quarantined records ARRIVE as rows (null
-    * fields + flag), so a malformed-rate monitor reads the same table
-    * the extractor consumes — no separate error stream to lose.
-    */
-  def warcIngest(outDir: String)
-      : (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], Long) => Unit =
-    (batch, batchId) => graft.CacheScope.scoped {
-      import org.apache.spark.sql.functions.col
-      graft.operators.Warc.parseFields(
-          graft.operators.Warc.records(
-            batch.toDF().select(col("file_id"), col("warc")), "warc"),
-          col("rec"))
-        .select(col("file_id"), col("warc_version"), col("url"),
-          col("status"), col("content_type"), col("html"),
-          col("malformed"))
-        .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-    }
-
-  /** Streaming OUTLINK HARVEST — the crawl-frontier expansion loop as
-    * a sink ([[graft.operators.Html.extractLinks]] +
-    * [[graft.operators.Url.resolve]]/[[graft.operators.Url.canonicalize]]
-    * as foreachBatch): each micro-batch of (id, url, html) fetched
-    * pages yields its anchor table resolved against each page's OWN
-    * base URL — (id, link_idx, href, anchor_text, url_resolved,
-    * url_canon) under `batch=<id>`, overwrite mode, replay-idempotent.
-    * Non-crawlable hrefs (mailto:/javascript:, href-less anchors)
-    * ARRIVE as rows with null resolution — the frontier scheduler and
-    * the link-graph builder read the same table. All three URL stages
-    * are 1-node native kernel expressions, so the batch plan is scan →
-    * generator → projections: zero joins, zero shuffles per batch.
-    */
-  def outlinkIngest(outDir: String)
-      : (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], Long) => Unit =
-    (batch, batchId) => graft.CacheScope.scoped {
-      import org.apache.spark.sql.functions.col
-      graft.operators.Html.extractLinks(
-          batch.toDF().select(col("id"), col("url"), col("html")),
-          col("html"))
-        .select(col("id"), col("link_idx"), col("href"), col("anchor_text"),
-          graft.operators.Url.resolve(col("url"), col("href"))
-            .as("url_resolved"))
-        .withColumn("url_canon",
-          graft.operators.Url.canonicalize(col("url_resolved")))
-        .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-    }
-
-  /** Streaming language-ID DRIFT monitoring — [[langIdIngest]]'s
-    * watchdog: each micro-batch classifies under the FROZEN model and
-    * writes its [[graft.operators.TextOps.langIdDriftReport]] against
-    * the stored reference distribution under `batch=<id>` (overwrite,
-    * replay-idempotent). The jsd column is the retrain-trigger signal —
-    * an operator alerts on it; the model and reference never adapt to
-    * the stream they monitor.
-    */
-  def langIdDriftIngest(modelDir: String, refDir: String, outDir: String)
-      : (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], Long) => Unit =
-    (batch, batchId) => graft.CacheScope.scoped {
-      import org.apache.spark.sql.functions.col
-      graft.operators.TextOps.langIdDriftReport(batch.toDF(),
-          col("id"), col("text"), modelDir, refDir)
-        .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-    }
-
-  /** Streaming WordPiece tokenization — [[unigramTokenizeIngest]]'s
-    * sibling over a stored
-    * [[graft.operators.TextOps.writeWordPieceModel]] artifact: each
-    * micro-batch tokenizes its DISTINCT words through the frozen
-    * vocabulary (greedy longest-match-first as expression data — one
-    * bounded model read per batch) and writes per-doc
-    * (id, n_tokens, n_unk) under `batch=<id>` — overwrite mode,
-    * replay-idempotent. Unsegmentable words count as ONE `[UNK]` token
-    * and are tallied separately: a rising n_unk is the drift signal that
-    * triggers a retrain-and-swap, never an in-stream vocab update.
-    * EVERY ingested doc gets a row — a doc with no extractable words
-    * (empty/whitespace text) reports (id, 0, 0) rather than a silent gap
-    * (the per-doc aggregate left-joins back to the batch's id set).
-    */
-  def wordPieceTokenizeIngest(modelDir: String, outDir: String)
-      : (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], Long) => Unit =
-    (batch, batchId) => graft.CacheScope.scoped {
-      import org.apache.spark.sql.functions.{col, explode, expr, size, sum, when, lit, element_at, coalesce}
-      val spark = batch.sparkSession
-      val vocab = graft.operators.TextOps.loadWordPieceVocab(spark, modelDir)
-      val words = batch.select(explode(expr(
-        "filter(split(lower(text), '\\\\s+'), x -> length(x) > 0)")).as("w"))
-        .distinct()
-      val wt = graft.operators.TextOps.wordPieceTokens(words, vocab)
-        .select(col("w"), size(col("toks")).cast("long").as("nt"),
-          when(element_at(col("toks"), 1) === lit("[UNK]"), 1L).otherwise(0L)
-            .as("unk"))
-      val perDoc = batch.select(col("id"), explode(expr(
-        "filter(split(lower(text), '\\\\s+'), x -> length(x) > 0)")).as("w"))
-        .join(wt, Seq("w"))
-        .groupBy(col("id")).agg(sum(col("nt")).as("nt"),
-          sum(col("unk")).as("unk"))
-      batch.select(col("id"))
-        .join(perDoc, Seq("id"), "left")
-        .select(col("id"), coalesce(col("nt"), lit(0L)).as("n_tokens"),
-          coalesce(col("unk"), lit(0L)).as("n_unk"))
-        .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-    }
-
-  /** Streaming contrastive training-pair export — the serving twin of the
-    * offline [[graft.operators.Retrieval.trainingPairs]] miner (q199):
-    * each micro-batch of (id, text) SEED documents derives its query
-    * terms against the FROZEN stored BM25 index (batch-local tf, stored
-    * idf — [[graft.operators.Retrieval.seedQueriesAgainstIndex]]), mines
-    * hard negatives through the index's bucket-DPP probe with the same
-    * near-dup false-negative guard (candidate shingles from the FROZEN
-    * stored shingle view; seed shingles computed from the batch's own
-    * text), and writes (seed_id, doc_id, label, rnk) under
-    * `batch=<id>` — overwrite mode, replay-idempotent. Every model is
-    * frozen (the stored-artifact discipline), so a seed's pairs never
-    * depend on its batch-mates; serving ≡ offline is spec-pinned.
-    *
-    * @param bm25Dir    stored BM25 index ([[graft.operators.Retrieval.writeBm25IndexVersioned]])
-    * @param shingleDir stored (id, sh, n_sh) shingle view — e.g. a dedup
-    *                   index's `shingles/` epoch path
-    */
-  def trainingPairIngest(bm25Dir: String, shingleDir: String, outDir: String,
-      qTerms: Int, k: Int, slack: Int, jaccardT: Double,
-      k1: Double = 1.2, b: Double = 0.75)
-      : (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], Long) => Unit =
-    (batch, batchId) => graft.CacheScope.scoped {
-      import org.apache.spark.sql.functions.col
-      val spark = batch.sparkSession
-      val seeds = batch.select(col("id"), col("text"))
-      val queries = graft.operators.Retrieval
-        .seedQueriesAgainstIndex(seeds, bm25Dir, qTerms)
-      // shingles: stored corpus view for candidates, batch text for the
-      // seeds themselves (anti-join keeps one row per id — a seed already
-      // in the store serves from its fresh batch text)
-      val seedSh = graft.operators.Dedup.batchShingleArrays(seeds, 3)
-        .select(col("id"), col("sh").as("ss"))
-      val stored = spark.read.parquet(shingleDir)
-        .select(col("id"), col("sh").as("ss"))
-        .join(seeds.select(col("id")), Seq("id"), "left_anti")
-      graft.operators.Retrieval.trainingPairsAgainstIndex(queries, bm25Dir,
-          stored.unionAll(seedSh), k, slack, jaccardT, k1, b)
-        .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-    }
-
-  /** Streaming ingestion dedup — the production corpus-ingest loop as a
-    * foreachBatch sink: each micro-batch of (id, text) documents is
-    * (1) deduplicated WITHIN the batch (exact + MinHash-LSH near-dup,
-    * keep-lowest-id), (2) deduplicated AGAINST the stored corpus index,
-    * (3) written to `outDir/batch=<id>` (idempotent overwrite), and
-    * (4) written into the index as its own [[graft.operators.Compaction]]
-    * store batch so later batches see it (the stream's first batch is the
-    * store's build, batch 0). Per-batch cost is proportional to the batch (index
+  /** Streaming ingestion dedup — the production corpus-ingest loop: each
+    * micro-batch of (id, text) documents is (1) deduplicated WITHIN the
+    * batch (exact + MinHash-LSH near-dup, keep-lowest-id), (2)
+    * deduplicated against the corpus index's batches before its own, (3)
+    * written to `outDir/batch=<id>`, and (4) written into the index as its
+    * own store batch so later batches see it
+    * ([[graft.operators.Dedup.writeCorpusIndexBatch]]). This sink's first
+    * stream batch IS the store's build, so stream batch N is store batch
+    * N, not N + 1. Per-batch cost is proportional to the batch (index
     * probes are partition-pruned scans); the corpus is never recomputed.
     *
-    * REPLAY SAFETY — why the index is batch-versioned: the probe reads
-    * only index partitions with `batch < batchId`, and the write
-    * overwrites this batch's own partitions. A replayed batch therefore
-    * probes exactly what the first attempt probed (its own half-written
-    * entries are invisible) and re-derives the identical kept set; an
-    * unversioned append-then-probe loop would see its own first-attempt
-    * entries on replay and drop the whole batch as duplicates.
+    * Why the index is batch-versioned: a replayed batch probes exactly
+    * what the first attempt probed (its own half-written entries are
+    * invisible) and re-derives the identical kept set; an unversioned
+    * append-then-probe loop would see its own first-attempt entries on
+    * replay and drop the whole batch as duplicates.
     */
   def dedupIngest(indexDir: String, outDir: String, n: Int = 3,
-      numHashes: Int = 64, bands: Int = 16, threshold: Double = 0.8)
-      : (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], Long) => Unit =
-    (batch, batchId) => graft.CacheScope.scoped {
-      // CacheScope.scoped: the inner dedup operators persistScoped their
-      // shingle corpora / inverted indexes; scoping them to the batch body
-      // (which materializes everything via the writes below) releases
-      // them per micro-batch even if a write throws, and keeps a
-      // concurrent batch query from draining them mid-flight.
-      import org.apache.spark.sql.functions.{col, md5}
+      numHashes: Int = 64, bands: Int = 16, threshold: Double = 0.8): Sink =
+    perBatch { (batch, batchId) =>
       import graft.CacheScope.ScopedPersist
-      import graft.operators.Compaction
-      val spark = batch.sparkSession
-      val docs = batch.select(col("id"), col("text"))
-      val withinBatch = graft.operators.Dedup
-        .dedupCorpus(docs, n, numHashes, bands, threshold)
+      import graft.operators.{Compaction, Dedup}
+      val withinBatch = Dedup
+        .dedupCorpus(batch.select(col("id"), col("text")), n, numHashes,
+          bands, threshold)
         .select(col("id"), col("text"))
-      val prior = Compaction.batchIds(spark, indexDir, "hashes").exists(_ < batchId)
-      val kept = (if (prior) {
-        val store = Compaction.snapshot(spark, indexDir)
-        graft.operators.Dedup.dedupAgainstParts(withinBatch,
-          store("hashes").where(col("batch") < batchId),
-          store("bands").where(col("batch") < batchId),
-          store("shingles").where(col("batch") < batchId),
-          n, numHashes, bands, threshold)
-          .select(col("id"), col("text"))
-      } else withinBatch)
-        .persistScoped() // 4 consumers below; released at scope exit
-      kept.write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-      // this batch's index batch — overwrite, so replays converge
-      Compaction.writeBatch(spark, indexDir, batchId,
-        Compaction.View("hashes") -> kept.select(md5(col("text")).as("h")),
-        Compaction.View("bands", Some("band")) ->
-          graft.operators.Dedup.batchBandKeys(kept, n, numHashes, bands),
-        Compaction.View("shingles") ->
-          graft.operators.Dedup.batchShingleArrays(kept, n))
+      val prior = Compaction.batchIds(batch.sparkSession, indexDir, "hashes")
+        .exists(_ < batchId)
+      val kept = (if (prior)
+          Dedup.dedupAgainstIndex(withinBatch, indexDir, n, numHashes, bands,
+            threshold, beforeBatch = Some(batchId))
+            .select(col("id"), col("text"))
+        else withinBatch)
+        .persistScoped() // the output and three index views
+      overwriteBatch(kept, outDir, batchId)
+      Dedup.writeCorpusIndexBatch(kept, indexDir, batchId, n, numHashes,
+        bands)
     }
 
   /** Read the current state of a [[streamingMerge]] table. */

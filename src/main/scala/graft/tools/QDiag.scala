@@ -1,13 +1,15 @@
 package graft.tools
 
-import graft.Engine
+import graft.{Counters, Engine}
 
-/** Generic per-query diagnostic (round-17 optimization instrumentation,
-  * read-only — never on a query path): runs the named queries with the
-  * bench's count() action and prints wall time, job count and summed task
-  * time per rep, so a slow row can be attributed to scheduling overhead
-  * (many jobs, little task time) vs executor compute (task time ≈ wall ×
-  * cores) vs stragglers (wall ≫ task time / cores).
+/** Per-query diagnostic (read-only — never on a query path): runs the
+  * named queries with the bench's count() action and prints wall time, job
+  * count and summed task time per rep ([[Counters.track]]), so a slow row
+  * can be attributed to scheduling overhead (many jobs, little task time)
+  * vs executor compute (task time ≈ wall × cores) vs stragglers (wall ≫
+  * task time / cores). Whole-query attribution of the composed rows (e.g.
+  * `QDiag q238,q150`); the stage-level findings behind their last
+  * optimizations are in OPTIMIZATION_r17.md.
   *
   * Usage: sbt "runMain graft.tools.QDiag <q1,q2,...> [reps]" with
   * SPARK_GRAFT_SF_DIR selecting the data directory (default sf0.1).
@@ -19,17 +21,6 @@ object QDiag {
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = Engine.session(appName = "qdiag")
     spark.sparkContext.setLogLevel("ERROR")
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val taskMs = new java.util.concurrent.atomic.AtomicLong
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          jobs.incrementAndGet()
-        override def onStageCompleted(
-            e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
-          taskMs.addAndGet(e.stageInfo.taskMetrics.executorRunTime)
-      })
     val wanted = args(0).split(',').map(_.trim).filter(_.nonEmpty)
     for (prefix <- wanted) {
       val hits =
@@ -37,12 +28,11 @@ object QDiag {
       require(hits.nonEmpty, s"no query matches prefix $prefix")
       for (name <- hits; rep <- 1 to reps) {
         val fn = graft.SparkEntry.queries(name)
-        val (j0, m0) = (jobs.get, taskMs.get)
         val t0 = System.nanoTime()
-        val n = fn(spark, dir).count()
+        val (n, c) = Counters.track(spark)(fn(spark, dir).count())
         val dt = (System.nanoTime() - t0) / 1e9
         println(f"[qdiag] $name%-34s rep$rep $dt%8.3f s" +
-          f"  jobs=${jobs.get - j0}%3d taskTime=${(taskMs.get - m0) / 1e3}%8.2f s  rows=$n")
+          f"  jobs=${c.jobs}%3d taskTime=${c.taskRunMs / 1e3}%8.2f s  rows=$n")
         graft.CacheScope.drain()
         spark.catalog.clearCache()
       }

@@ -705,6 +705,45 @@ class PlanShapeSpec extends AnyFunSuite {
     } finally CacheScope.drain()
   }
 
+  test("streaming sinks: outputSink and storeSink add no job to the operator they run") {
+    // A sink call runs exactly the jobs of its operator called directly on
+    // the same batch: the combinators add a CacheScope scope and the store
+    // batch shift, never a Spark job. The one sink whose plan changed with
+    // the combinators is dedupIngest, whose corpus index now goes through
+    // Dedup's views: on sf0.01 documents in two 250-doc batches
+    // (local[4]) it ran 20 and 31 jobs per call before, 21 and 32 now;
+    // the added job is the band view's rebalance, which packs each band=
+    // directory into one file instead of four.
+    import graft.operators.{Retrieval, Similarity}
+    import graft.streaming.EventStreams
+    def jobs(body: => Unit): Long = Counters.track(spark)(body)._2.jobs
+    val t = Tables(spark, "/root/testdata/sf0.001")
+    val emb = t.embeddings.select(col("vec_id"), col("embedding"))
+    val terms = t.documents.select(col("doc_id").as("id"),
+        explode(split(lower(col("text")), "\\s+")).as("term"))
+      .groupBy(col("id"), col("term")).agg(count(lit(1)).as("tf"))
+      .withColumn("dl", lit(1L))
+    val Seq(ivfA, ivfB, bmA, bmB, out) =
+      Seq("ivfA", "ivfB", "bmA", "bmB", "out").map(Files.createTempDirectory(_).toString)
+    try {
+      for (d <- Seq(ivfA, ivfB))
+        Similarity.writeIvfIndexVersioned(emb.filter(col("vec_id") % 2 === 0), d, 4)
+      val vecs = emb.filter(col("vec_id") % 2 === 1)
+      assert(jobs(EventStreams.annIngest(ivfA)(vecs, 0)) ==
+        jobs(Similarity.ingestIntoIvfIndex(vecs, ivfB, 1)))
+      for (d <- Seq(bmA, bmB))
+        Retrieval.writeBm25IndexVersioned(terms.filter(col("id") % 2 === 0), d, 16)
+      val postings = terms.filter(col("id") % 2 === 1)
+      assert(jobs(EventStreams.bm25Ingest(bmA)(postings, 0)) ==
+        jobs(Retrieval.ingestIntoBm25Index(postings, bmB, 1)))
+      val queries = emb.filter(col("vec_id") % 50 === 0)
+        .select(col("vec_id").as("q_id"), col("embedding").as("q_vec"))
+      def op(q: DataFrame) = Similarity.ivfTopKAgainstIndex(q, ivfB, 2, 10)
+      assert(jobs(EventStreams.outputSink(out)(op)(queries, 0)) ==
+        jobs(op(queries).write.mode("overwrite").parquet(s"$out/batch=0")))
+    } finally CacheScope.drain()
+  }
+
   test("q44 IVF top-k: no exchange ever carries the corpus embeddings") {
     // corpus-side narrowness in the probe path: the inverted-list side is
     // assigned narrowly and joined via broadcast of the probe batch, and

@@ -73,7 +73,7 @@ class CheckpointRecoverySpec extends AnyFunSuite {
           org.apache.spark.sql.types.StructField("id", org.apache.spark.sql.types.LongType))))
         .parquet(in)
         .writeStream
-        .foreachBatch(EventStreams.idempotentBatchWriter(out))
+        .foreachBatch(EventStreams.outputSink(out)(identity))
         .option("checkpointLocation", chk)
         .start()
       q.processAllAvailable()

@@ -2,6 +2,7 @@ package graft.streaming
 
 import java.sql.Timestamp
 
+import org.apache.spark.sql.{DataFrame, Encoder, Encoders, Row}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -309,6 +310,733 @@ class EventStreamsSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
+  // ===== sinks ============================================================
+  // Every sink is one of EventStreams' two combinators over a batch
+  // operator, so the sink contract is checked once per kind, over a table
+  // of cases: checkOutputSink for output sinks, checkStoreSink for store
+  // sinks. Each case registers as its own test; a case with assertions of
+  // its own runs the contract first, then those.
+
+  private def tmp(prefix: String): String =
+    java.nio.file.Files.createTempDirectory(prefix).toString
+
+  /** The sf0.001 harness tables (TESTDATA.md). */
+  private def tables = graft.Tables(spark, "/root/testdata/sf0.001")
+
+  private def docs = tables.documents
+
+  private def emb = tables.embeddings
+
+  /** Rows of `df` as a sorted multiset of strings, arrays and binaries
+    * compared by value.
+    */
+  private def rowsOf(df: DataFrame): Seq[String] = {
+    def norm(v: Any): Any = v match {
+      case b: Array[Byte] => b.toSeq
+      case s: scala.collection.Seq[_] => s.map(norm)
+      case r: Row => r.toSeq.map(norm)
+      case x => x
+    }
+    df.collect().map(norm(_).toString).sorted.toSeq
+  }
+
+  /** The rows of `df` in order, split into two micro-batches. */
+  private def halves(df: DataFrame): Seq[DataFrame] = {
+    val rows = df.collect().toSeq
+    val (a, b) = rows.splitAt(rows.length / 2)
+    Seq(a, b).map(r => spark.createDataFrame(java.util.Arrays.asList(r: _*),
+      df.schema))
+  }
+
+  /** `df`'s rows as one driver-local micro-batch. */
+  private def local(df: DataFrame): DataFrame =
+    spark.createDataFrame(java.util.Arrays.asList(df.collect(): _*), df.schema)
+
+  /** Streams `batches` through `sink` as micro-batches 0, 1, … of one
+    * MemoryStream query.
+    */
+  private def streamThrough(sink: EventStreams.Sink,
+      batches: Seq[DataFrame]): Unit = {
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    implicit val enc: Encoder[Row] = Encoders.row(batches.head.schema)
+    val input = MemoryStream[Row]
+    val q = input.toDF().writeStream.foreachBatch(sink)
+      .outputMode("update").start()
+    try batches.foreach { b =>
+      input.addData(b.collect().toSeq); q.processAllAvailable()
+    } finally q.stop()
+  }
+
+  /** The output-sink contract: the streamed batches equal `op` over their
+    * union (over each batch when the output is batch-local), and
+    * re-delivering the last batch leaves the output identical.
+    *
+    * @return the sink's output directory
+    */
+  private def checkOutputSink(batches: Seq[DataFrame],
+      op: DataFrame => DataFrame, batchLocal: Boolean = false): String = {
+    val out = tmp("sink-out")
+    val sink = EventStreams.outputSink(out)(op)
+    try {
+      streamThrough(sink, batches)
+      val expected =
+        if (batchLocal) batches.indices.map(i => s"$out/batch=$i" -> op(batches(i)))
+        else Seq(out -> op(batches.reduce(_ union _)))
+      val want = expected.map { case (p, df) => (p, df.columns, rowsOf(df)) }
+      def check(): Unit = want.foreach { case (p, cols, rows) =>
+        assert(rows.nonEmpty, p)
+        assert(rowsOf(spark.read.parquet(p).select(cols.map(col).toIndexedSeq: _*))
+          == rows, p)
+      }
+      check()
+      sink(batches.last, batches.size - 1L)
+      check()
+      out
+    } finally graft.CacheScope.drain()
+  }
+
+  /** Every view and artifact of the stores under `dirs`, epoch suffixes
+    * dropped (a replayed deletion rewrites into the next epoch).
+    */
+  private def storeContents(dirs: Seq[String]): Map[String, Seq[String]] =
+    dirs.flatMap { d =>
+      new java.io.File(d).listFiles().toSeq
+        .filter(f => f.isDirectory && !f.getName.startsWith("."))
+        .map(f => s"$d/${f.getName.replaceAll("_e[0-9]+$", "")}" ->
+          rowsOf(spark.read.parquet(f.getPath)))
+    }.toMap
+
+  /** The store-sink contract: after the build and the streamed batches,
+    * `probe` equals `scratch` (the same probe over a from-scratch build),
+    * and re-delivering the last batch leaves the stores under `dirs`
+    * identical.
+    */
+  private def checkStoreSink(dirs: Seq[String], sink: EventStreams.Sink,
+      batches: Seq[DataFrame], probe: () => DataFrame,
+      scratch: () => DataFrame): Unit =
+    try {
+      streamThrough(sink, batches)
+      val want = rowsOf(scratch())
+      assert(want.nonEmpty)
+      assert(rowsOf(probe()) == want)
+      val before = storeContents(dirs)
+      sink(batches.last, batches.size - 1L)
+      assert(storeContents(dirs) == before, "replayed batch changed the store")
+      assert(rowsOf(probe()) == want)
+    } finally graft.CacheScope.drain()
+
+  /** Unigram tf with dl attached over the sf0.001 documents — the
+    * [[graft.operators.Retrieval]] input shape.
+    */
+  private def docTf =
+    docs.select(col("doc_id").as("id"),
+        expr("filter(split(lower(text), '\\\\s+'), x -> length(x) > 0)").as("ws"))
+      .filter(size(col("ws")) >= 1)
+      .select(col("id"), size(col("ws")).cast("long").as("dl"),
+        explode(col("ws")).as("term"))
+      .groupBy(col("id"), col("dl"), col("term")).agg(count(lit(1)).as("tf"))
+
+  /** Probe vectors (q_id, q_vec): every 50th embedding. */
+  private def vecQueries =
+    emb.filter(col("vec_id") % 50 === 0)
+      .select(col("vec_id").as("q_id"), col("embedding").as("q_vec"))
+
+  private def lmModel(dir: String, id: String): String = {
+    graft.operators.TextOps.writeLmModel(docs.filter(col("doc_id") % 10 === 0)
+      .select(col("doc_id").as(id), col("text")),
+      col(id), col("text"), 500, 1000, dir)
+    dir
+  }
+
+  private def langIdModel(dir: String): String = {
+    graft.operators.TextOps.writeLangIdModel(spark,
+      graft.operators.TextOps.trainHashedLangId(
+        docs.select(col("doc_id").as("id"), col("text"), col("lang")),
+        col("id"), col("text"), col("lang"), dim = 128, iters = 4), dir)
+    dir
+  }
+
+  /** (name, batch-local output, artifacts + micro-batches + operator). */
+  private val outputSinks: Seq[(String, Boolean, () => (Seq[DataFrame], DataFrame => DataFrame))] = Seq(
+    ("annProbeIngest: streamed query batches probe the stored index; replay is idempotent", false, () => {
+      val idx = tmp("annprobe")
+      graft.operators.Similarity.writeIvfIndex(emb, idx, 16)
+      (halves(vecQueries),
+        graft.operators.Similarity.ivfTopKAgainstIndex(_, idx, 2, 10))
+    }),
+    ("bm25ProbeIngest: streamed query bags probe the stored index; replay is idempotent", false, () => {
+      val idx = tmp("bm25probe")
+      graft.operators.Retrieval.writeBm25Index(docTf, idx, 16)
+      import spark.implicits._
+      (halves(Seq((0L, "the"), (0L, "data"), (1L, "table"), (1L, "query"))
+        .toDF("q_id", "term")),
+        graft.operators.Retrieval.bm25AgainstIndex(_, idx, 5))
+    }),
+    ("lmScoreIngest: streamed docs score against the stored LM; serving ≡ offline", false, () => {
+      val model = lmModel(tmp("lmscore"), "doc_id")
+      (halves(docs.filter(col("doc_id") % 10 =!= 0).select(col("doc_id"), col("text"))),
+        graft.operators.TextOps.lmScoreAgainstModel(_, col("doc_id"),
+          col("text"), model, 0.7, 40.0))
+    }),
+    ("clsScoreIngest: streamed docs score against the stored classifier; serving ≡ offline", false, () => {
+      val model = tmp("clsscore")
+      val d = docs.select(col("doc_id"), col("text"))
+      val label = array_contains(split(lower(col("text")), """\s+"""), "dup")
+      graft.operators.TextOps.writeLinearModel(spark,
+        graft.operators.TextOps.trainHashedLinear(d, col("doc_id"),
+          col("text"), label.cast("int"), 64, 8, 1L, 2L),
+        model)
+      (halves(d), graft.operators.TextOps.hashedLinearScoreAgainstModel(_,
+        col("doc_id"), col("text"), model, 0.5))
+    }),
+    ("knnLabelIngest: streamed vectors classify against the frozen labeling; serving ≡ offline; replay idempotent", false, () => {
+      val idx = tmp("knnlabel"); val lbl = s"$idx-labels"
+      val e = emb.select(col("vec_id"), col("embedding"))
+      graft.operators.Similarity.writeIvfIndexVersioned(e, idx, 8)
+      // the frozen labeling artifact: the offline LP output written once
+      graft.operators.Graph.labelPropagation(
+          graft.operators.Similarity.lshTopK(
+            e.select(col("vec_id").as("q_id"), col("embedding").as("q_vec")),
+            e, 64, 5, 5)
+            .select(least(col("q_id"), col("vec_id")).as("id_a"),
+              greatest(col("q_id"), col("vec_id")).as("id_b")).distinct(),
+          emb.select(col("vec_id").as("id"),
+            when(col("vec_id") % 4 === 0, col("label")).cast("long")
+              .as("seed_label")),
+          iters = 3)
+        .select(col("id"), col("label")).write.parquet(lbl)
+      (halves(vecQueries),
+        graft.operators.Graph.knnClassifyAgainstIndex(_, idx, lbl, 4, 10))
+    }),
+    ("langIdIngest: streamed docs classify against the frozen stored model; serving ≡ offline; replay idempotent", false, () => {
+      val model = langIdModel(tmp("langid-ing"))
+      (halves(docs.filter(col("doc_id") < 40)
+        .select(col("doc_id").as("id"), col("text"))),
+        graft.operators.TextOps.langIdScoreAgainstModel(_, col("id"),
+          col("text"), model))
+    }),
+    ("langIdDriftIngest: per-batch drift report against the frozen reference; serving ≡ offline; replay idempotent", true, () => {
+      val model = langIdModel(tmp("liddrift-ing")); val ref = s"$model-ref"
+      graft.operators.TextOps.writeLangIdReference(
+        docs.select(col("doc_id").as("id"), col("text")), col("id"),
+        col("text"), model, ref)
+      (Seq(local(docs.filter(col("doc_id") < 30)
+        .select(col("doc_id").as("id"), col("text")))),
+        graft.operators.TextOps.langIdDriftReport(_, col("id"), col("text"),
+          model, ref))
+    }))
+
+  for ((name, batchLocal, setup) <- outputSinks) test(name) {
+    val (batches, op) = setup()
+    checkOutputSink(batches, op, batchLocal)
+  }
+
+  test("hybridProbeIngest: streamed queries probe BOTH indexes; fusion equals offline") {
+    import spark.implicits._
+    val bm = tmp("hybrid-bm25"); val ivf = tmp("hybrid-ivf")
+    graft.operators.Retrieval.writeBm25Index(docTf, bm, 16)
+    graft.operators.Similarity.writeIvfIndex(emb, ivf, 16)
+    // queries: hand term bags + each seed's own embedding as the vector
+    val q = local(emb.filter($"vec_id" < 2)
+      .select($"vec_id".as("q_id"),
+        when($"vec_id" === 0, array(lit("the"), lit("data")))
+          .otherwise(array(lit("table"), lit("query"))).as("terms"),
+        $"embedding".as("q_vec")))
+    val out = checkOutputSink(halves(q),
+      graft.operators.Retrieval.hybridTopKAgainstIndexes(_, bm, ivf, 2, 5))
+    // offline: RRF over the two single-index probes, composed here
+    val offline = graft.operators.Retrieval.rrfFuse2(
+        graft.operators.Retrieval.bm25AgainstIndex(
+          q.select($"q_id", explode($"terms").as("term")), bm, 5)
+          .select($"q_id", $"doc_id", $"rnk"),
+        graft.operators.Similarity.ivfTopKAgainstIndex(
+          q.select($"q_id", $"q_vec"), ivf, 2, 5)
+          .select($"q_id", $"vec_id".as("doc_id"), $"rnk"),
+        5)
+      .as[(Long, Long, Double, Long)].collect().toSet
+    val streamed = spark.read.parquet(out)
+      .select("q_id", "doc_id", "score", "rnk")
+      .as[(Long, Long, Double, Long)].collect().toSet
+    assert(streamed.nonEmpty && streamed == offline)
+  }
+
+  test("unigramTokenizeIngest: streamed docs tokenize against the stored model; serving ≡ offline; replay idempotent") {
+    import spark.implicits._
+    val model = tmp("unitok")
+    val d = docs.select($"doc_id".as("id"), $"text")
+    graft.operators.Unigram.writeModel(spark,
+      graft.operators.Unigram.trainPieces(d, $"text", 100, 2), model)
+    val m = graft.operators.Unigram.loadModel(spark, model)
+    val out = checkOutputSink(halves(d.filter($"id" < 40)),
+      graft.operators.Unigram.docTokenCounts(_, col("id"), col("text"), m))
+    // offline: per-word tokenization of the same docs with the model
+    val words = d.filter($"id" < 40)
+      .select($"id", explode(expr(
+        "filter(split(lower(text), '\\\\s+'), x -> length(x) > 0)")).as("w"))
+    val wt = graft.operators.Unigram.tokenize(words.select($"w").distinct(), m)
+      .select($"w", size($"toks").cast("long").as("nt"))
+    val offline = words.join(wt, Seq("w"))
+      .groupBy($"id").agg(sum($"nt").as("n_tokens"))
+      .as[(Long, Long)].collect().toSet
+    val streamed = spark.read.parquet(out).select("id", "n_tokens")
+      .as[(Long, Long)].collect().toSet
+    assert(streamed.nonEmpty && streamed == offline)
+  }
+
+  test("knScoreIngest: KN serving over the SAME stored LM artifact; serving ≡ offline; replay idempotent") {
+    // ONE artifact, two smoothings: this is writeLmModel's output serving KN
+    val model = lmModel(tmp("knscore"), "doc_id")
+    val rows = docs.filter(col("doc_id") % 10 =!= 0).select(col("doc_id"), col("text"))
+    checkOutputSink(halves(rows), graft.operators.TextOps.knScoreAgainstModel(_,
+      col("doc_id"), col("text"), model, 40.0))
+    def ppl(df: DataFrame) = df.select(col("id"), col("ppl")).collect().toSet
+    assert(ppl(graft.operators.TextOps.lmScoreAgainstModel(rows, col("doc_id"),
+        col("text"), model, 0.7, 40.0)) !=
+      ppl(graft.operators.TextOps.knScoreAgainstModel(rows, col("doc_id"),
+        col("text"), model, 40.0)),
+      "KN must not degenerate into the add-one smoothing")
+  }
+
+  test("pplBucketIngest: streamed docs bucket against frozen boundaries; unknown group fails visible") {
+    import spark.implicits._
+    val lm = lmModel(tmp("pplbkt"), "id"); val bounds = s"$lm-bounds"
+    val d = docs.select(col("doc_id").as("id"), col("text"),
+      col("source").as("group"))
+    graft.operators.TextOps.writePplBoundaries(d, col("id"), col("text"),
+      col("group"), col("id") % 10 === 0, 500, 1000, 0.7, bounds)
+    def op(b: DataFrame) = graft.operators.TextOps.pplBucketAgainstBoundaries(
+      b, col("id"), col("text"), col("group"), lm, bounds, 0.7)
+    val out = checkOutputSink(halves(d), op)
+    // serving over frozen artifacts ≡ the fresh offline partition
+    val streamed = spark.read.parquet(out).select("id", "group", "ppl", "bucket")
+    assert(rowsOf(streamed) == rowsOf(graft.operators.TextOps.perplexityPartition(
+      d, col("id"), col("text"), col("group"), col("id") % 10 === 0, 500,
+      1000, 0.7)))
+    assert(streamed.select("bucket").as[String].collect().toSet
+      .subsetOf(Set("head", "middle", "tail")))
+    // a group absent from the stored boundaries buckets to NULL
+    EventStreams.outputSink(out)(op)(Seq((900001L, d.head().getString(1),
+      "no-such-source")).toDF("id", "text", "group"), 99)
+    val unknown = spark.read.parquet(s"$out/batch=99").select("bucket").collect()
+    assert(unknown.length == 1 && unknown.head.isNullAt(0))
+  }
+
+  test("expectationsIngest: per-batch quality reports; replay re-derives identically") {
+    import spark.implicits._
+    import graft.operators.Expectations._
+    val rules = Seq(NotNull("id"), InRange("v", 0.0, 1.0), Unique(Seq("id")))
+    val clean = Seq((Option(1L), 0.5), (Option(2L), 0.7)).toDF("id", "v")
+    val dirty = Seq((Option.empty[Long], 0.5), (Some(3L), 1.5), (Some(3L), 0.2))
+      .toDF("id", "v")
+    val out = checkOutputSink(Seq(clean, dirty), check(_, rules),
+      batchLocal = true)
+    def report(b: Int) = spark.read.parquet(s"$out/batch=$b")
+      .as[(String, Long, Boolean)].collect().map(r => r._1 -> ((r._2, r._3))).toMap
+    assert(report(0).values.forall(_ == ((0L, true))))
+    val d = report(1)
+    assert(d("not_null(id)") == ((1L, false)))
+    assert(d("in_range(v)") == ((1L, false)))
+    assert(d("unique(id)") == ((1L, false)))
+  }
+
+  test("taggerIngest: per-batch tagger table ≡ offline; every row lands; replay idempotent") {
+    import spark.implicits._
+    val b0 = Seq(
+      (1L, "the cat of the house is in the garden today"),
+      (2L, "bad bad bad the cat is here today ok"),
+      (3L, "")).toDF("id", "text")
+    val out = checkOutputSink(Seq(b0), graft.operators.TextOps.taggerTable(_,
+      col("id"), col("text"), Seq("bad"), 1000L, 2L, 0.35, 0.3, 0.2, 0.02))
+    val r0 = spark.read.parquet(s"$out/batch=0")
+      .select($"id", $"kept", $"reasons")
+      .as[(Long, Boolean, String)].collect().map(r => r._1 -> ((r._2, r._3))).toMap
+    assert(r0.keySet == Set(1L, 2L, 3L), "every batch row lands, drops included")
+    assert(r0(3L) == ((false, "repetition,quality,doclen")))
+  }
+
+  test("htmlExtractIngest: per-batch block table ≡ offline extractor; replay idempotent") {
+    import spark.implicits._
+    val b0 = Seq(
+      (1L, "<html><body><h1>a &amp; b</h1><p>one two</p></body></html>"),
+      (2L, "<nav>x</nav><script>drop()</script><p>kept</p>")).toDF("id", "html")
+    val out = checkOutputSink(Seq(b0),
+      graft.operators.Html.blockTable(_, col("id"), col("html")))
+    val r0 = spark.read.parquet(s"$out/batch=0")
+      .select($"id", $"block_type", $"block_idx", $"block_text")
+      .as[(Long, String, Long, String)].collect().toSet
+    val offline = graft.operators.Html.extractBlocks(b0, col("html"))
+      .select($"id", $"block_type", $"block_idx", $"block_text")
+      .as[(Long, String, Long, String)].collect().toSet
+    assert(r0 == offline && r0.nonEmpty)
+    assert(r0.contains((1L, "h1", 0L, "a & b")))
+    assert(r0.contains((2L, "nav", 0L, "x")))
+    assert(!r0.exists(_._4.contains("drop")), "script content never leaks")
+  }
+
+  test("warcIngest: per-batch field table ≡ offline parse; quarantine arrives as rows; replay idempotent") {
+    import spark.implicits._
+    import graft.operators.Warc
+    val recs = Warc.withWarcRecord(
+      Seq((1L, "s", "<p>one</p>"), (2L, "s", "<p>two</p>"),
+        (23L, "s", "<p>bad</p>")).toDF("doc_id", "source", "html"),
+      $"doc_id", $"source", $"html", "rec", malformEvery = 23)
+    val b0 = local(Warc.withWarcFiles(recs, $"doc_id", $"rec", docsPerFile = 2))
+    val out = checkOutputSink(Seq(b0), Warc.fieldTable(_, col("file_id"), "warc"))
+    val r0 = spark.read.parquet(s"$out/batch=0")
+      .select($"url", $"malformed")
+      .as[(Option[String], Boolean)].collect().toSet
+    val offline = Warc.parseFields(Warc.records(b0, "warc"), $"rec")
+      .select($"url", $"malformed")
+      .as[(Option[String], Boolean)].collect().toSet
+    assert(r0 == offline && r0.size == 3)
+    assert(r0.contains((Some("http://example.com/s/1"), false)))
+    assert(r0.contains((None, true)), "the corrupted record arrives quarantined")
+  }
+
+  test("outlinkIngest: per-batch anchor table resolved against each page's own base; non-crawlable hrefs arrive null; replay idempotent") {
+    import spark.implicits._
+    val b0 = Seq(
+      (1L, "http://a.com/d/p",
+        "<p><a href=\"next/2\">more</a> <a href=\"mailto:x@y.z\">mail</a></p>"),
+      (2L, "HTTPS://B.net:443/x?q=1",
+        "<ul><li><a href='/r'>root &amp; rel</a></li></ul>" +
+          "<script>var s='<a href=\"http://ghost/\">g</a>';</script>"))
+      .toDF("id", "url", "html")
+    val out = checkOutputSink(Seq(b0), graft.operators.Html.resolvedLinks(_,
+      col("id"), col("url"), col("html")))
+    assert(spark.read.parquet(s"$out/batch=0")
+      .select($"id", $"link_idx", $"href", $"anchor_text", $"url_resolved",
+        $"url_canon")
+      .as[(Long, Long, Option[String], String, Option[String], Option[String])]
+      .collect().toSet == Set(
+        (1L, 0L, Some("next/2"), "more",
+          Some("http://a.com/d/next/2"), Some("http://a.com/d/next/2")),
+        (1L, 1L, Some("mailto:x@y.z"), "mail", None, None), // not crawlable — data
+        (2L, 0L, Some("/r"), "root & rel",
+          Some("https://b.net:443/r"), Some("https://b.net/r"))))
+  }
+
+  test("wordPieceTokenizeIngest: streamed docs tokenize against the stored vocab; serving ≡ offline; replay idempotent") {
+    import spark.implicits._
+    val model = tmp("wptok")
+    val d = docs.select(col("doc_id").as("id"), col("text"))
+    graft.operators.TextOps.writeWordPieceModel(
+      graft.operators.TextOps.wordPieceWordTable(d, col("text")),
+      graft.operators.TextOps.wordPieceMerges(d, col("text"), 3), model)
+    def op(b: DataFrame) = graft.operators.TextOps.wordPieceDocCounts(b,
+      col("id"), col("text"), graft.operators.TextOps.loadWordPieceVocab(spark, model))
+    val out = checkOutputSink(halves(d.filter(col("id") < 40)), op)
+    def streamed() = spark.read.parquet(out).select("id", "n_tokens", "n_unk")
+      .as[(Long, Long, Long)].collect().toSet
+    // offline: per-word WordPiece segmentation of the same docs, with the
+    // [UNK] tally summed per doc
+    val words = d.filter($"id" < 40)
+      .select($"id", explode(expr(
+        "filter(split(lower(text), '\\\\s+'), x -> length(x) > 0)")).as("w"))
+    val wtoks = graft.operators.TextOps.wordPieceTokens(
+        words.select($"w").distinct(),
+        graft.operators.TextOps.loadWordPieceVocab(spark, model))
+      .select($"w", size($"toks").cast("long").as("nt"),
+        when(element_at($"toks", 1) === "[UNK]", 1L).otherwise(0L).as("unk"))
+    val offline = words.join(wtoks, Seq("w"))
+      .groupBy($"id").agg(sum($"nt").as("n_tokens"), sum($"unk").as("n_unk"))
+      .as[(Long, Long, Long)].collect().toSet
+    val s1 = streamed()
+    assert(s1.nonEmpty && s1 == offline)
+    // the vocab was trained on the full corpus word table, so the served
+    // slice segments without UNK (the drift signal stays 0)
+    assert(s1.forall(_._3 == 0L))
+    // EVERY ingested doc reports — a doc with no extractable words gets
+    // (id, 0, 0) rather than a silent per-doc gap
+    EventStreams.outputSink(out)(op)(Seq((9001L, ""), (9002L, "   \t  "),
+      (9003L, "real words here")).toDF("id", "text"), 1)
+    val withEmpty = streamed()
+    assert(withEmpty.contains((9001L, 0L, 0L)))
+    assert(withEmpty.contains((9002L, 0L, 0L)))
+    assert(withEmpty.exists(r => r._1 == 9003L && r._2 > 0L))
+  }
+
+  /** A frozen byte-level BPE model over the sf0.001 documents, and the
+    * (source, doc_id, text) docs with doc_id < `below`.
+    */
+  private def shardFixture(below: Int): (Seq[(String, String)], DataFrame) = {
+    val model = tmp("shards")
+    val d = docs.select(col("source"), col("doc_id"), col("text"))
+    graft.operators.TextOps.writeBpeModel(
+      graft.operators.TextOps.bpeMergesByteLevel(d, col("text"), 4), model)
+    (graft.operators.TextOps.loadBpeMerges(spark, model),
+      local(d.filter(col("doc_id") < below)))
+  }
+
+  test("packShardsIngest: per-batch shards against the frozen tokenizer ≡ offline; replay idempotent") {
+    // bins are batch-local by design, so each batch compares on its own
+    val (merges, rows) = shardFixture(40)
+    checkOutputSink(halves(rows), b => graft.operators.Curation.packShards(
+      graft.operators.TextOps.byteTokDocs(b, merges), col("source"),
+      col("doc_id"), col("toks"), 50L, partitions = 32), batchLocal = true)
+  }
+
+  test("packShardIdsIngest: per-batch TOKEN-ID shards against the frozen tokenizer + vocab ≡ offline; ids ≡ the string shards mapped; replay idempotent") {
+    import spark.implicits._
+    val (merges, rows) = shardFixture(30)
+    val vdir = tmp("idshards-vocab")
+    graft.operators.TextOps.writeBpeVocabIds(spark,
+      graft.operators.TextOps.bpeVocabIdsByteLevel(merges), vdir)
+    val vocab = graft.operators.TextOps.loadBpeVocabIds(spark, vdir)
+    val out = checkOutputSink(Seq(rows), b => graft.operators.Curation.packShardIds(
+      graft.operators.TextOps.byteTokDocs(b, merges), col("source"),
+      col("doc_id"), col("toks"), vocab, 50L, partitions = 32), batchLocal = true)
+    val s0 = spark.read.parquet(s"$out/batch=0")
+      .select("domain", "bin", "n_tokens", "token_ids")
+      .as[(String, Long, Long, Seq[Long])].collect().toSet
+    // the id arrays ARE the string shards mapped through the vocab: same
+    // bins, same lengths, ids within the vocab's range
+    val strShards = graft.operators.Curation.packShards(
+        graft.operators.TextOps.byteTokDocs(rows, merges), col("source"),
+        col("doc_id"), col("toks"), 50L, 8)
+      .select($"domain", $"bin", $"n_tokens")
+      .as[(String, Long, Long)].collect().toSet
+    assert(s0.map(r => (r._1, r._2, r._3)) == strShards)
+    assert(s0.forall(_._4.forall(i => i >= 0 && i < 256L + merges.length)))
+  }
+
+  test("trainingPairIngest: streamed seeds export pairs against frozen artifacts; serving ≡ offline; replay idempotent") {
+    import spark.implicits._
+    val idx = tmp("tpairs"); val shs = s"$idx-shingles"
+    val d = docs.select(col("doc_id").as("id"), col("text"))
+    val tf = d
+      .select($"id", expr(
+        "filter(split(lower(text), '\\\\s+'), x -> length(x) > 0)").as("ws"))
+      .filter(size($"ws") >= 2)
+      .select($"id", (size($"ws") - 1).cast("long").as("dl"),
+        explode(expr(
+          "transform(sequence(1, size(ws) - 1, 1), i -> concat(ws[i - 1], ' ', ws[i]))"))
+          .as("term"))
+      .groupBy($"id", $"dl", $"term").agg(count(lit(1)).as("tf"))
+    graft.operators.Retrieval.writeBm25IndexVersioned(tf, idx, 8)
+    val shingled = graft.operators.Dedup.shingleArrays(d, 3)
+    shingled.write.parquet(shs) // the frozen corpus shingle view
+    val seeds = local(d.filter($"id".isin(0L, 1L, 8L)).orderBy($"id"))
+    // query-derivation parity: stored-idf derivation equals the
+    // corpus-side recipe (independent replay, the bm25SeedQueries shape)
+    val qIdx = graft.operators.Retrieval
+      .seedQueriesAgainstIndex(seeds, idx, 3)
+      .as[(Long, String)].collect().toSet
+    val dfs = tf.groupBy($"term").agg(count(lit(1)).as("df"))
+    val nd = tf.agg(count_distinct($"id").as("n_docs"))
+    val qOff = tf.filter($"id".isin(0L, 1L, 8L))
+      .join(dfs, "term").crossJoin(broadcast(nd))
+      .select($"id".as("q_id"), $"term",
+        ($"tf".cast("double") * log($"n_docs".cast("double") / $"df")).as("w"))
+      .groupBy($"q_id")
+      .agg(slice(sort_array(collect_list(struct(
+        (-$"w").as("nw"), $"term".as("t")))), 1, 3).as("v"))
+      .select($"q_id", explode($"v.t").as("term"))
+      .as[(Long, String)].collect().toSet
+    assert(qIdx.nonEmpty && qIdx == qOff)
+    val b0 = local(seeds.filter($"id" < 8L)); val b1 = local(seeds.filter($"id" === 8L))
+    val out = checkOutputSink(Seq(b0, b1), graft.operators.Retrieval
+      .trainingPairsForSeeds(_, idx, shs, 3, 5, 10, 0.3))
+    // serving ≡ the offline corpus-side miner
+    val streamed = spark.read.parquet(out)
+      .select("seed_id", "doc_id", "label", "rnk")
+      .as[(Long, Long, Long, Long)].collect().toSet
+    assert(streamed == graft.operators.Retrieval.trainingPairs(tf,
+        graft.operators.Retrieval.seedQueriesAgainstIndex(seeds, idx, 3),
+        shingled.select($"id", $"sh".as("ss")), 5, 10, 0.3)
+      .as[(Long, Long, Long, Long)].collect().toSet)
+    // positives present: one per seed at rank 0
+    assert(Seq(0L, 1L, 8L).forall(i => streamed.contains((i, i, 1L, 0L))))
+  }
+
+  /** A compressed IVF family as a store sink and a serving sink: build on
+    * the `buildIds` slice, stream the rest through `ingest`, and probe
+    * against a from-scratch `build` of everything; then serve `probe` over
+    * the stream-built index.
+    */
+  private def ivfStoreCase(name: String,
+      build: (DataFrame, String) => Unit,
+      ingest: (DataFrame, String, Long) => Unit,
+      probe: (DataFrame, String) => DataFrame,
+      buildIds: org.apache.spark.sql.Column): Unit = test(name) {
+    val e = emb.select(col("vec_id"), col("embedding"))
+    val idx = tmp("ivf-store"); val full = tmp("ivf-store-full")
+    // the build slice holds every id the frozen artifacts train from, so
+    // they equal their full-corpus versions
+    build(e.filter(buildIds), idx)
+    build(e, full)
+    checkStoreSink(Seq(idx), EventStreams.storeSink(ingest(_, idx, _)),
+      Seq(local(e.filter(!buildIds))), () => probe(vecQueries, idx),
+      () => probe(vecQueries, full))
+    // serving over the stream-built index ≡ the offline probe
+    checkOutputSink(Seq(local(vecQueries)), probe(_, idx))
+  }
+
+  test("annIngest: streamed vectors extend a versioned index; replay leaves it identical") {
+    val e = emb.select(col("vec_id"), col("embedding"))
+    val idx = tmp("anningest"); val full = tmp("anningest-full")
+    // build on a slice containing the whole centroid id range (frozen
+    // quantizer == full-corpus quantizer); stream the rest in two batches
+    val late = col("vec_id") >= 16 && col("vec_id") % 3 === 1
+    graft.operators.Similarity.writeIvfIndexVersioned(e.filter(!late), idx, 16)
+    graft.operators.Similarity.writeIvfIndexVersioned(e, full, 16)
+    checkStoreSink(Seq(idx), EventStreams.annIngest(idx), halves(e.filter(late)),
+      () => graft.operators.Similarity.ivfTopKAgainstIndex(vecQueries, idx, 2, 10),
+      () => graft.operators.Similarity.ivfTopKAgainstIndex(vecQueries, full, 2, 10))
+  }
+
+  ivfStoreCase("pqIngest + pqProbeIngest: streamed vectors extend the compressed index; serving ≡ offline",
+    // training-free codebooks: the centroid and codebook ids are < 16
+    graft.operators.Similarity.writeIvfIndexPQ(_, _, 16, 8, 16, trainIters = 0),
+    graft.operators.Similarity.ingestIntoIvfIndexPQ(_, _, _),
+    graft.operators.Similarity.ivfTopKAgainstIndexPQ(_, _, 2, 10),
+    col("vec_id") < 16 || col("vec_id") % 3 =!= 1)
+
+  ivfStoreCase("pqrIngest + pqrProbeIngest: streamed vectors extend the RESIDUAL index; serving ≡ offline",
+    // centroid ids < 16, residual-codebook init ids: the first 16
+    // NON-centroid ids, 16..31
+    graft.operators.Similarity.writeIvfIndexPQR(_, _, 16, 8, 16),
+    graft.operators.Similarity.ingestIntoIvfIndexPQR(_, _, _),
+    graft.operators.Similarity.ivfTopKAgainstIndexPQR(_, _, 2, 10),
+    col("vec_id") < 32 || col("vec_id") % 3 =!= 1)
+
+  test("sqIngest + sqProbeIngest: streamed vectors extend the SQ8 index; serving ≡ offline") {
+    val e = emb.select(col("vec_id"), col("embedding"))
+    val idx = tmp("sqingest"); val idx2 = tmp("sqingest-offline")
+    // SQ8 stats are per-dim min/max, so build+stream ≡ build+offline-ingest
+    // over the SAME frozen quantizer (not ≡ a from-scratch union build —
+    // a batch CAN extend a dim's range; it clamps, the FAISS behavior)
+    val initial = e.filter(col("vec_id") % 3 =!= 1)
+    val late = local(e.filter(col("vec_id") % 3 === 1))
+    graft.operators.Similarity.writeIvfIndexSQ(initial, idx, 16)
+    graft.operators.Similarity.writeIvfIndexSQ(initial, idx2, 16)
+    graft.operators.Similarity.ingestIntoIvfIndexSQ(late, idx2, 1L)
+    checkStoreSink(Seq(idx), EventStreams.storeSink(
+        graft.operators.Similarity.ingestIntoIvfIndexSQ(_, idx, _)), Seq(late),
+      () => graft.operators.Similarity.ivfTopKAgainstIndexSQ(vecQueries, idx, 2, 10),
+      () => graft.operators.Similarity.ivfTopKAgainstIndexSQ(vecQueries, idx2, 2, 10))
+    checkOutputSink(Seq(local(vecQueries)),
+      graft.operators.Similarity.ivfTopKAgainstIndexSQ(_, idx, 2, 10))
+  }
+
+  test("bm25Ingest: streamed postings extend a versioned index; replay leaves it identical") {
+    import spark.implicits._
+    val idx = tmp("bm25ingest")
+    val tf = docTf
+    // build on a doc slice, stream the rest's postings in two
+    // DOCUMENT-ATOMIC batches (the ingest contract: a doc's postings
+    // arrive together — splitting rows mid-doc would double-count the
+    // doc in the summed stats)
+    graft.operators.Retrieval.writeBm25IndexVersioned(tf.filter($"id" % 3 =!= 1), idx, 16)
+    def late(m: Int) = local(tf.filter($"id" % 6 === m).select($"id", $"term", $"tf", $"dl"))
+    val queries = Seq((0L, "the"), (0L, "data"), (1L, "table")).toDF("q_id", "term")
+    // build+stream probes equal the DIRECT bm25TopK over the full corpus:
+    // df counts postings and stats rows sum, so nothing drifts
+    checkStoreSink(Seq(idx), EventStreams.bm25Ingest(idx), Seq(late(1), late(4)),
+      () => graft.operators.Retrieval.bm25AgainstIndex(queries, idx, 5),
+      () => graft.operators.Retrieval.bm25TopK(tf, queries, 5))
+  }
+
+  test("bm25DeleteIngest: streamed deletion requests erase docs; replay is a no-op") {
+    import spark.implicits._
+    val idx = tmp("bm25del")
+    val tf = docTf
+    graft.operators.Retrieval.writeBm25IndexVersioned(tf, idx, 16)
+    // two erasure windows: doc ids ≡1 (mod 7), then ≡2 (mod 7); deletion is
+    // idempotent, so a replayed window rewrites to identical contents
+    def victims(m: Long) = local(tf.select($"id").distinct().filter($"id" % 7 === m))
+    val queries = Seq((0L, "the"), (0L, "data"), (1L, "table")).toDF("q_id", "term")
+    checkStoreSink(Seq(idx), EventStreams.storeSink((ids, _) =>
+        graft.operators.Retrieval.deleteFromBm25Index(spark, idx, ids)),
+      Seq(victims(1), victims(2)),
+      () => graft.operators.Retrieval.bm25AgainstIndex(queries, idx, 5),
+      () => graft.operators.Retrieval.bm25TopK(
+        tf.filter($"id" % 7 =!= 1 && $"id" % 7 =!= 2), queries, 5))
+    // the bytes are gone from the stored postings
+    assert(Compaction.snapshot(spark, idx)("lists")
+      .filter($"id" % 7 === 1 || $"id" % 7 === 2).count() == 0)
+  }
+
+  test("countMinIngest: streamed batches maintain the stored sketch; store == one-shot sketch (linearity)") {
+    import spark.implicits._
+    import graft.operators.Sketches
+    val dir = tmp("cmingest")
+    val all = (Seq.fill(40)("a") ++ Seq.fill(15)("b") ++ Seq.fill(3)("c"))
+      .zipWithIndex.map { case (k, i) => (i.toLong, k) }
+    val (build, rest) = all.splitAt(10)
+    Sketches.writeCountMin(build.toDF("i", "k"), col("k"), depth = 3, width = 64, dir)
+    val keys = Seq("a", "b", "c", "zz").toDF("k")
+    def est() = Sketches.countMinEstimateAgainstStore(dir, keys, col("k"))
+    // linearity: build + streamed batches == one-shot over everything
+    val oneShot = Sketches.countMinEstimate(
+      Sketches.countMin(all.toDF("i", "k"), col("k"), 3, 64), keys, col("k"), 3, 64)
+    val sink = EventStreams.storeSink(Sketches.ingestIntoCountMin(_, col("k"), dir, _))
+    checkStoreSink(Seq(dir), sink, halves(rest.toDF("i", "k")), () => est(),
+      () => oneShot)
+    val e = est().as[(String, Long)].collect().toMap
+    assert(e("a") >= 40L && e("b") >= 15L && e("c") >= 3L)
+    // maintenance tick AFTER the producer's commit (the
+    // Compaction.batchCount consult contract): 3 batch dirs > 2 → fold to
+    // one epoch-1 batch; probes unchanged, and the NEXT streamed batch
+    // keeps landing in the new epoch
+    assert(Sketches.compactCountMinIfNeeded(spark, dir, maxBatches = 2).contains(1))
+    assert(Compaction.batchCount(spark, dir, "cells") == 1)
+    assert(rowsOf(est()) == rowsOf(oneShot))
+    sink(Seq((9001L, "c"), (9002L, "c")).toDF("i", "k"), 2L)
+    assert(est().as[(String, Long)].collect().toMap.apply("c") ==
+      oneShot.as[(String, Long)].collect().toMap.apply("c") + 2L)
+  }
+
+  test("corpusIndexIngest: streamed docs extend the dedup index; replay leaves it identical") {
+    import spark.implicits._
+    val idx = tmp("corpus-ing")
+    val d = docs.select($"doc_id".as("id"), $"text")
+    val existing = d.filter($"id" % 10 =!= 7)
+    val probeDocs = d.filter($"id" % 10 === 7)
+    def probe() = graft.operators.Dedup
+      .dedupAgainstIndex(probeDocs, idx, 3, 16, 8, 0.8).select("id")
+    // offline build on the initial slice; stream the late slice in;
+    // build+stream ≡ the direct cross-corpus dedup
+    graft.operators.Dedup.writeCorpusIndexVersioned(
+      existing.filter($"id" % 10 =!= 5), idx, 3, 16, 8)
+    checkStoreSink(Seq(idx), EventStreams.storeSink(
+        graft.operators.Dedup.ingestIntoCorpusIndex(_, idx, _, 3, 16, 8)),
+      Seq(local(existing.filter($"id" % 10 === 5))), () => probe(),
+      () => graft.operators.Dedup.dedupAgainst(probeDocs, existing, 3, 16, 8, 0.8)
+        .select("id"))
+    // maintenance tick: threshold consulted after commit, probe unchanged
+    val p1 = rowsOf(probe())
+    assert(graft.operators.Dedup.compactCorpusIndexIfNeeded(spark, idx, 1).contains(1))
+    assert(rowsOf(probe()) == p1)
+  }
+
+  test("ccLabelIngest: streamed docs maintain the clustering; final ≡ from-scratch; replay idempotent") {
+    import spark.implicits._
+    val idx = tmp("cclabel"); val cc = s"$idx-cc"
+    val d = docs.select($"doc_id".as("id"), $"text")
+    val initial = d.filter($"id" % 3 =!= 1)
+    graft.operators.Dedup.writeCorpusIndexVersioned(initial, idx)
+    graft.operators.Dedup.writeCcLabels(initial.select($"id"),
+      graft.operators.Dedup.minhashLshPairs(initial, 3, 64, 16, 0.8)
+        .select($"id_a", $"id_b"), cc)
+    // every pair (a, b) surfaces when the LATER doc's batch processes
+    // (within-batch, or cross against the index holding the earlier one),
+    // so the maintained labeling must equal the from-scratch clustering
+    val labels = graft.operators.Dedup.connectedComponents(
+        graft.operators.Dedup.minhashLshPairs(d, 3, 64, 16, 0.8)
+          .select($"id_a", $"id_b"))
+      .withColumnRenamed("id", "lid")
+    val scratch = d.select($"id").join(labels, $"id" === $"lid", "left")
+      .select($"id", coalesce($"comp", $"id").as("comp"))
+    checkStoreSink(Seq(idx, cc), EventStreams.ccLabelIngest(idx, cc),
+      halves(d.filter($"id" % 3 === 1)),
+      () => graft.operators.Dedup.ccLabelsResolved(spark, cc), () => scratch)
+    // the fixture must actually exercise a cross-batch merge
+    assert(scratch.as[(Long, Long)].collect()
+      .exists { case (id, comp) => id % 3 == 1 && comp != id },
+      "fixture has no near-dup touching the streamed slice")
+  }
+
   test("dedupIngest: batches dedup within themselves, against the index, and extend it") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
@@ -341,367 +1069,6 @@ class EventStreamsSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
-  test("annProbeIngest: streamed query batches probe the stored index; replay is idempotent") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    val base = java.nio.file.Files.createTempDirectory("annprobe").toString
-    val idx = s"$base/index"; val out = s"$base/out"
-    graft.operators.Similarity.writeIvfIndex(emb, idx, 16)
-    // queries as a stream of (q_id, q_vec): two micro-batches
-    val probeRows = emb.filter($"vec_id" % 50 === 0)
-      .select($"vec_id".as("q_id"), $"embedding".as("q_vec"))
-      .as[(Long, Array[Float])].collect().toSeq
-    val (b0, b1) = probeRows.splitAt(probeRows.size / 2)
-    val input = MemoryStream[(Long, Array[Float])]
-    val q = input.toDF().toDF("q_id", "q_vec")
-      .writeStream.foreachBatch(EventStreams.annProbeIngest(idx, out, 2, 10))
-      .outputMode("update").start()
-    try {
-      input.addData(b0); q.processAllAvailable()
-      input.addData(b1); q.processAllAvailable()
-      // union of streamed batches == one offline probe of the same queries
-      val streamed = spark.read.parquet(out)
-        .select("q_id", "vec_id", "score", "rnk")
-        .as[(Long, Long, Double, Long)].collect().toSet
-      val offline = graft.operators.Similarity.ivfTopKAgainstIndex(
-          probeRows.toDF("q_id", "q_vec"), idx, 2, 10)
-        .as[(Long, Long, Double, Long)].collect().toSet
-      assert(streamed.nonEmpty && streamed == offline)
-      // replayed batch (same batchId dir) re-derives identical results
-      val sink = EventStreams.annProbeIngest(idx, out, 2, 10)
-      sink(b1.toDF("q_id", "q_vec"), 1)
-      val replayed = spark.read.parquet(out)
-        .select("q_id", "vec_id", "score", "rnk")
-        .as[(Long, Long, Double, Long)].collect().toSet
-      assert(replayed == offline)
-    } finally { q.stop(); graft.CacheScope.drain() }
-  }
-
-  test("annIngest: streamed vectors extend a versioned index; replay leaves it identical") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    val base = java.nio.file.Files.createTempDirectory("anningest").toString
-    val idx = s"$base/index"
-    // build on a slice containing the whole centroid id range (frozen
-    // quantizer == full-corpus quantizer, as in the append test), stream
-    // the rest in two micro-batches
-    graft.operators.Similarity.writeIvfIndexVersioned(
-      emb.filter($"vec_id" < 16 || $"vec_id" % 3 =!= 1), idx, 16)
-    val late = emb.filter($"vec_id" >= 16 && $"vec_id" % 3 === 1)
-      .select($"vec_id", $"embedding").as[(Long, Array[Float])].collect().toSeq
-    val (b0, b1) = late.splitAt(late.size / 2)
-    val input = MemoryStream[(Long, Array[Float])]
-    val q = input.toDF().toDF("vec_id", "embedding")
-      .writeStream.foreachBatch(EventStreams.annIngest(idx))
-      .outputMode("update").start()
-    try {
-      input.addData(b0); q.processAllAvailable()
-      input.addData(b1); q.processAllAvailable()
-      // probing build+stream equals probing a from-scratch build of the
-      // full corpus (frozen-quantizer equivalence, now through the
-      // versioned layout — ivfTopKAgainstIndex reads batch=* unchanged)
-      val queries = emb.filter($"vec_id" % 50 === 0)
-        .select($"vec_id".as("q_id"), $"embedding".as("q_vec"))
-      def sorted(df: org.apache.spark.sql.DataFrame) =
-        df.select("q_id", "vec_id", "score", "rnk")
-          .as[(Long, Long, Double, Long)].collect().sortBy(r => (r._1, r._4)).toSeq
-      val full = java.nio.file.Files.createTempDirectory("anningestfull").toString
-      graft.operators.Similarity.writeIvfIndexVersioned(emb, full, 16)
-      assert(sorted(graft.operators.Similarity.ivfTopKAgainstIndex(queries, idx, 2, 10))
-        == sorted(graft.operators.Similarity.ivfTopKAgainstIndex(queries, full, 2, 10)))
-      // crash-replay: re-delivering streaming batch 1 overwrites its own
-      // batch partition — index contents must be IDENTICAL, not doubled
-      def contents(): Set[(Long, Long, Int)] =
-        spark.read.parquet(s"$idx/lists")
-          .select($"vec_id", $"batch".cast("long"), $"cell")
-          .as[(Long, Long, Int)].collect().toSet
-      val before = contents()
-      val sink = EventStreams.annIngest(idx)
-      sink(b1.toDF("vec_id", "embedding"), 1)
-      assert(contents() == before, "replayed batch changed the index")
-    } finally { q.stop(); graft.CacheScope.drain() }
-  }
-
-  test("pqIngest + pqProbeIngest: streamed vectors extend the compressed index; serving ≡ offline") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-      .select($"vec_id", $"embedding")
-    val base = java.nio.file.Files.createTempDirectory("pqingest").toString
-    val idx = s"$base/index"; val out = s"$base/out"
-    // build on a slice containing the centroid AND codebook id ranges
-    // (both frozen artifacts equal their full-corpus versions), stream
-    // the rest; training-free codebooks → build+stream must EQUAL a
-    // from-scratch build over the union
-    graft.operators.Similarity.writeIvfIndexPQ(
-      emb.filter($"vec_id" < 16 || $"vec_id" % 3 =!= 1), idx, 16, 8, 16,
-      trainIters = 0)
-    val late = emb.filter($"vec_id" >= 16 && $"vec_id" % 3 === 1)
-      .as[(Long, Array[Float])].collect().toSeq
-    val input = MemoryStream[(Long, Array[Float])]
-    val q = input.toDF().toDF("vec_id", "embedding")
-      .writeStream.foreachBatch(EventStreams.pqIngest(idx))
-      .outputMode("update").start()
-    try {
-      input.addData(late); q.processAllAvailable()
-      val queries = emb.filter($"vec_id" % 50 === 0)
-        .select($"vec_id".as("q_id"), $"embedding".as("q_vec"))
-      def sorted(df: org.apache.spark.sql.DataFrame) =
-        df.select("q_id", "vec_id", "score", "rnk")
-          .as[(Long, Long, Double, Long)].collect().sortBy(r => (r._1, r._4)).toSeq
-      val full = java.nio.file.Files.createTempDirectory("pqingestfull").toString
-      graft.operators.Similarity.writeIvfIndexPQ(emb, full, 16, 8, 16,
-        trainIters = 0)
-      val offline = sorted(
-        graft.operators.Similarity.ivfTopKAgainstIndexPQ(queries, full, 2, 10))
-      assert(sorted(
-        graft.operators.Similarity.ivfTopKAgainstIndexPQ(queries, idx, 2, 10))
-        == offline)
-      // serving sink: idempotent per-batch output equal to the offline probe
-      val qrows = queries.as[(Long, Array[Float])].collect().toSeq
-      val sink = EventStreams.pqProbeIngest(idx, out, 2, 10)
-      sink(qrows.toDF("q_id", "q_vec"), 0)
-      sink(qrows.toDF("q_id", "q_vec"), 0) // replay
-      assert(sorted(spark.read.parquet(s"$out/batch=0")) == offline)
-    } finally { q.stop(); graft.CacheScope.drain() }
-  }
-
-  test("pqrIngest + pqrProbeIngest: streamed vectors extend the RESIDUAL index; serving ≡ offline") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-      .select($"vec_id", $"embedding")
-    val base = java.nio.file.Files.createTempDirectory("pqringest").toString
-    val idx = s"$base/index"; val out = s"$base/out"
-    // the build slice must contain the centroid ids (< 16) AND the
-    // residual-codebook init ids (the first 16 NON-centroid ids, 16..31)
-    // so both frozen artifacts equal their full-corpus versions; then
-    // build+stream must EQUAL a from-scratch build over the union
-    graft.operators.Similarity.writeIvfIndexPQR(
-      emb.filter($"vec_id" < 32 || $"vec_id" % 3 =!= 1), idx, 16, 8, 16)
-    val late = emb.filter($"vec_id" >= 32 && $"vec_id" % 3 === 1)
-      .as[(Long, Array[Float])].collect().toSeq
-    val input = MemoryStream[(Long, Array[Float])]
-    val q = input.toDF().toDF("vec_id", "embedding")
-      .writeStream.foreachBatch(EventStreams.pqrIngest(idx))
-      .outputMode("update").start()
-    try {
-      input.addData(late); q.processAllAvailable()
-      val queries = emb.filter($"vec_id" % 50 === 0)
-        .select($"vec_id".as("q_id"), $"embedding".as("q_vec"))
-      def sorted(df: org.apache.spark.sql.DataFrame) =
-        df.select("q_id", "vec_id", "score", "rnk")
-          .as[(Long, Long, Double, Long)].collect().sortBy(r => (r._1, r._4)).toSeq
-      val full = java.nio.file.Files.createTempDirectory("pqringestfull").toString
-      graft.operators.Similarity.writeIvfIndexPQR(emb, full, 16, 8, 16)
-      val offline = sorted(
-        graft.operators.Similarity.ivfTopKAgainstIndexPQR(queries, full, 2, 10))
-      assert(sorted(
-        graft.operators.Similarity.ivfTopKAgainstIndexPQR(queries, idx, 2, 10))
-        == offline)
-      val qrows = queries.as[(Long, Array[Float])].collect().toSeq
-      val sink = EventStreams.pqrProbeIngest(idx, out, 2, 10)
-      sink(qrows.toDF("q_id", "q_vec"), 0)
-      sink(qrows.toDF("q_id", "q_vec"), 0) // replay
-      assert(sorted(spark.read.parquet(s"$out/batch=0")) == offline)
-    } finally { q.stop(); graft.CacheScope.drain() }
-  }
-
-  test("packShardsIngest: per-batch shards against the frozen tokenizer ≡ offline; replay idempotent") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val base = java.nio.file.Files.createTempDirectory("shards").toString
-    val model = s"$base/model"; val out = s"$base/out"
-    val docs = graft.Tables(spark, "/root/testdata/sf0.001").documents
-      .select($"source", $"doc_id".as("id"), $"text")
-    graft.operators.TextOps.writeBpeModel(
-      graft.operators.TextOps.bpeMergesByteLevel(docs, $"text", 4), model)
-    val rows = docs.filter($"id" < 40)
-      .as[(String, Long, String)].collect().toSeq
-    val (b0, b1) = rows.splitAt(rows.length / 2)
-    val input = MemoryStream[(String, Long, String)]
-    val q = input.toDF().toDF("source", "id", "text")
-      .writeStream
-      .foreachBatch(EventStreams.packShardsIngest(model, out, budget = 50L))
-      .outputMode("update").start()
-    try {
-      input.addData(b0); q.processAllAvailable()
-      input.addData(b1); q.processAllAvailable()
-      // offline: the same per-batch tokenize+pack over batch 1's docs
-      val merges = graft.operators.TextOps.loadBpeMerges(spark, model)
-      val dw = b1.toDF("source", "id", "text").select($"source", $"id",
-        posexplode(regexp_extract_all(lower($"text"),
-          lit(graft.operators.TextOps.byteLevelTokenPattern), lit(0)))
-          .as(Seq("pos", "w")))
-      val wt = dw.select($"w").distinct()
-        .select($"w", graft.functions.bpe_encode($"w", merges,
-          byteLevel = true).as("toks"))
-      val dt = dw.join(wt, Seq("w")).groupBy($"source", $"id")
-        .agg(expr(
-          "flatten(transform(sort_array(collect_list(struct(pos, toks))), x -> x.toks))")
-          .as("toks"))
-      val offline = graft.operators.Curation.packShards(dt, $"source", $"id",
-          $"toks", 50L, 8)
-        .as[(String, Long, Long, String)].collect().toSet
-      def streamedB1() = spark.read.parquet(s"$out/batch=1")
-        .as[(String, Long, Long, String)].collect().toSet
-      assert(streamedB1() == offline && offline.nonEmpty)
-      // replay re-derives identical shards
-      val sink = EventStreams.packShardsIngest(model, out, 50L)
-      sink(b1.toDF("source", "id", "text"), 1)
-      assert(streamedB1() == offline)
-    } finally { q.stop(); graft.CacheScope.drain() }
-  }
-
-  test("packShardIdsIngest: per-batch TOKEN-ID shards against the frozen tokenizer + vocab ≡ offline; ids ≡ the string shards mapped; replay idempotent") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val base = java.nio.file.Files.createTempDirectory("idshards").toString
-    val model = s"$base/model"; val vdir = s"$base/vocab"; val out = s"$base/out"
-    val docs = graft.Tables(spark, "/root/testdata/sf0.001").documents
-      .select($"source", $"doc_id".as("id"), $"text")
-    graft.operators.TextOps.writeBpeModel(
-      graft.operators.TextOps.bpeMergesByteLevel(docs, $"text", 4), model)
-    val merges = graft.operators.TextOps.loadBpeMerges(spark, model)
-    graft.operators.TextOps.writeBpeVocabIds(spark,
-      graft.operators.TextOps.bpeVocabIdsByteLevel(merges), vdir)
-    val vocab = graft.operators.TextOps.loadBpeVocabIds(spark, vdir)
-    val rows = docs.filter($"id" < 30)
-      .as[(String, Long, String)].collect().toSeq
-    val input = MemoryStream[(String, Long, String)]
-    val q = input.toDF().toDF("source", "id", "text")
-      .writeStream
-      .foreachBatch(EventStreams.packShardIdsIngest(model, vdir, out,
-        budget = 50L))
-      .outputMode("update").start()
-    try {
-      input.addData(rows); q.processAllAvailable()
-      def streamed() = spark.read.parquet(s"$out/batch=0")
-        .select("domain", "bin", "n_tokens", "token_ids", "stream_md5")
-        .as[(String, Long, Long, Seq[Long], String)].collect().toSet
-      // offline twin over the same batch
-      val dw = rows.toDF("source", "id", "text").select($"source", $"id",
-        posexplode(regexp_extract_all(lower($"text"),
-          lit(graft.operators.TextOps.byteLevelTokenPattern), lit(0)))
-          .as(Seq("pos", "w")))
-      val wt = dw.select($"w").distinct()
-        .select($"w", graft.functions.bpe_encode($"w", merges,
-          byteLevel = true).as("toks"))
-      val dt = dw.join(wt, Seq("w")).groupBy($"source", $"id")
-        .agg(expr(
-          "flatten(transform(sort_array(collect_list(struct(pos, toks))), x -> x.toks))")
-          .as("toks"))
-      val offline = graft.operators.Curation.packShardIds(dt, $"source",
-          $"id", $"toks", vocab, 50L, 8)
-        .as[(String, Long, Long, Seq[Long], String)].collect().toSet
-      val s0 = streamed()
-      assert(s0 == offline && offline.nonEmpty)
-      // the id arrays ARE the string shards mapped through the vocab:
-      // same bins, same lengths, ids within the vocab's range
-      val strShards = graft.operators.Curation.packShards(dt, $"source",
-          $"id", $"toks", 50L, 8)
-        .select($"domain", $"bin", $"n_tokens")
-        .as[(String, Long, Long)].collect().toSet
-      assert(s0.map(r => (r._1, r._2, r._3)) == strShards)
-      assert(s0.forall(_._4.forall(i => i >= 0 && i < 256L + merges.length)))
-      // replay re-derives identical shards
-      val sink = EventStreams.packShardIdsIngest(model, vdir, out, 50L)
-      sink(rows.toDF("source", "id", "text"), 0)
-      assert(streamed() == offline)
-    } finally { q.stop(); graft.CacheScope.drain() }
-  }
-
-  test("ccLabelIngest: streamed docs maintain the clustering; final ≡ from-scratch; replay idempotent") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val base = java.nio.file.Files.createTempDirectory("cclabel").toString
-    val idx = s"$base/index"; val cc = s"$base/cc"
-    val docs = graft.Tables(spark, "/root/testdata/sf0.001").documents
-      .select($"doc_id".as("id"), $"text")
-    val initial = docs.filter($"id" % 3 =!= 1)
-    val late = docs.filter($"id" % 3 === 1)
-      .as[(Long, String)].collect().toSeq
-    graft.operators.Dedup.writeCorpusIndexVersioned(initial, idx)
-    graft.operators.Dedup.writeCcLabels(initial.select($"id"),
-      graft.operators.Dedup.minhashLshPairs(initial, 3, 64, 16, 0.8)
-        .select($"id_a", $"id_b"), cc)
-    val (b0, b1) = late.splitAt(late.length / 2)
-    val input = MemoryStream[(Long, String)]
-    val q = input.toDF().toDF("id", "text")
-      .writeStream.foreachBatch(EventStreams.ccLabelIngest(idx, cc))
-      .outputMode("update").start()
-    try {
-      input.addData(b0); q.processAllAvailable()
-      input.addData(b1); q.processAllAvailable()
-      def resolved() = graft.operators.Dedup.ccLabelsResolved(spark, cc)
-        .as[(Long, Long)].collect().toMap
-      // every pair (a, b) surfaces when the LATER doc's batch processes
-      // (within-batch, or cross against the index holding the earlier
-      // one), so the maintained labeling must equal the from-scratch
-      // clustering of the full corpus
-      val scratch = {
-        val labels = graft.operators.Dedup.connectedComponents(
-          graft.operators.Dedup.minhashLshPairs(docs, 3, 64, 16, 0.8)
-            .select($"id_a", $"id_b"))
-          .withColumnRenamed("id", "lid")
-        docs.select($"id").join(labels, $"id" === $"lid", "left")
-          .select($"id", coalesce($"comp", $"id").as("comp"))
-          .as[(Long, Long)].collect().toMap
-      }
-      val r = resolved()
-      assert(r == scratch && r.nonEmpty)
-      // the fixture must actually exercise a cross-batch merge
-      assert(scratch.exists { case (id, comp) => id % 3 == 1 && comp != id },
-        "fixture has no near-dup touching the streamed slice")
-      // crash-replay of the LAST batch converges to identical labels
-      val sink = EventStreams.ccLabelIngest(idx, cc)
-      sink(b1.toDF("id", "text"), 1)
-      assert(resolved() == r)
-    } finally { q.stop(); graft.CacheScope.drain() }
-  }
-
-  test("sqIngest + sqProbeIngest: streamed vectors extend the SQ8 index; serving ≡ offline") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-      .select($"vec_id", $"embedding")
-    val base = java.nio.file.Files.createTempDirectory("sqingest").toString
-    val idx = s"$base/index"; val idx2 = s"$base/index2"; val out = s"$base/out"
-    // SQ8 stats are per-dim min/max, so build+stream ≡ build+offline-ingest
-    // over the SAME frozen quantizer (not ≡ a from-scratch union build —
-    // a batch CAN extend a dim's range; it clamps, the FAISS behavior)
-    val initial = emb.filter($"vec_id" % 3 =!= 1)
-    val late = emb.filter($"vec_id" % 3 === 1)
-    graft.operators.Similarity.writeIvfIndexSQ(initial, idx, 16)
-    graft.operators.Similarity.writeIvfIndexSQ(initial, idx2, 16)
-    graft.operators.Similarity.ingestIntoIvfIndexSQ(late, idx2, 1L)
-    val input = MemoryStream[(Long, Array[Float])]
-    val q = input.toDF().toDF("vec_id", "embedding")
-      .writeStream.foreachBatch(EventStreams.sqIngest(idx))
-      .outputMode("update").start()
-    try {
-      input.addData(late.as[(Long, Array[Float])].collect().toSeq)
-      q.processAllAvailable()
-      val queries = emb.filter($"vec_id" % 50 === 0)
-        .select($"vec_id".as("q_id"), $"embedding".as("q_vec"))
-      def sorted(df: org.apache.spark.sql.DataFrame) =
-        df.select("q_id", "vec_id", "score", "rnk")
-          .as[(Long, Long, Double, Long)].collect().sortBy(r => (r._1, r._4)).toSeq
-      val offline = sorted(
-        graft.operators.Similarity.ivfTopKAgainstIndexSQ(queries, idx2, 2, 10))
-      assert(sorted(
-        graft.operators.Similarity.ivfTopKAgainstIndexSQ(queries, idx, 2, 10))
-        == offline && offline.nonEmpty)
-      val qrows = queries.as[(Long, Array[Float])].collect().toSeq
-      val sink = EventStreams.sqProbeIngest(idx, out, 2, 10)
-      sink(qrows.toDF("q_id", "q_vec"), 0)
-      sink(qrows.toDF("q_id", "q_vec"), 0) // replay
-      assert(sorted(spark.read.parquet(s"$out/batch=0")) == offline)
-    } finally { q.stop(); graft.CacheScope.drain() }
-  }
-
   test("dedupIngest replay: a re-delivered batch re-derives the same kept set") {
     import spark.implicits._
     val base = java.nio.file.Files.createTempDirectory("dedupingest2").toString
@@ -721,106 +1088,29 @@ class EventStreamsSpec extends AnyFunSuite {
     assert(second == first)
   }
 
-  test("taggerIngest: per-batch tagger table ≡ offline; every row lands; replay idempotent") {
+  test("dedupIngest: the stream-built index packs its band directories and deletes by doc id") {
+    // the sink writes the corpus index through Dedup's own views: band
+    // keys rebalance into at most 2 files per band= directory (the IVF
+    // pin's bound), and the hashes view carries the doc id that
+    // deleteFromCorpusIndex erases by
     import spark.implicits._
-    val out = java.nio.file.Files.createTempDirectory("taggeringest").toString
-    val sink = EventStreams.taggerIngest(out, Seq("bad"), 1000L, 2L,
-      0.35, 0.3, 0.2, 0.02)
-    val b0 = Seq(
-      (1L, "the cat of the house is in the garden today"),
-      (2L, "bad bad bad the cat is here today ok"),
-      (3L, "")).toDF("id", "text")
-    sink(b0, 0L)
-    def rows(b: Long) = spark.read.parquet(s"$out/batch=$b")
-      .select($"id", $"kept", $"reasons")
-      .as[(Long, Boolean, String)].collect().map(r => r._1 -> ((r._2, r._3))).toMap
-    val r0 = rows(0L)
-    val offline = graft.operators.TextOps.taggerTable(b0, $"id", $"text",
-        Seq("bad"), 1000L, 2L, 0.35, 0.3, 0.2, 0.02)
-      .select($"id", $"kept", $"reasons")
-      .as[(Long, Boolean, String)].collect().map(r => r._1 -> ((r._2, r._3))).toMap
-    assert(r0 == offline, "streaming report must equal the offline tagger table")
-    assert(r0.keySet == Set(1L, 2L, 3L), "every batch row lands, drops included")
-    assert(r0(3L) == ((false, "repetition,quality,doclen")))
-    sink(b0, 0L) // replay
-    assert(rows(0L) == r0)
-  }
-
-  test("htmlExtractIngest: per-batch block table ≡ offline extractor; replay idempotent") {
-    import spark.implicits._
-    val out = java.nio.file.Files.createTempDirectory("htmlingest").toString
-    val sink = EventStreams.htmlExtractIngest(out)
-    val b0 = Seq(
-      (1L, "<html><body><h1>a &amp; b</h1><p>one two</p></body></html>"),
-      (2L, "<nav>x</nav><script>drop()</script><p>kept</p>")).toDF("id", "html")
-    sink(b0, 0L)
-    def rows() = spark.read.parquet(s"$out/batch=0")
-      .select($"id", $"block_type", $"block_idx", $"block_text")
-      .as[(Long, String, Long, String)].collect().toSet
-    val r0 = rows()
-    val offline = graft.operators.Html.extractBlocks(b0,
-        org.apache.spark.sql.functions.col("html"))
-      .select($"id", $"block_type", $"block_idx", $"block_text")
-      .as[(Long, String, Long, String)].collect().toSet
-    assert(r0 == offline && r0.nonEmpty)
-    assert(r0.contains((1L, "h1", 0L, "a & b")))
-    assert(r0.contains((2L, "nav", 0L, "x")))
-    assert(!r0.exists(_._4.contains("drop")), "script content never leaks")
-    sink(b0, 0L) // replay
-    assert(rows() == r0)
-  }
-
-  test("warcIngest: per-batch field table ≡ offline parse; quarantine arrives as rows; replay idempotent") {
-    import spark.implicits._
-    import graft.operators.Warc
-    val out = java.nio.file.Files.createTempDirectory("warcingest").toString
-    val sink = EventStreams.warcIngest(out)
-    val recs = Warc.withWarcRecord(
-      Seq((1L, "s", "<p>one</p>"), (2L, "s", "<p>two</p>"),
-        (23L, "s", "<p>bad</p>")).toDF("doc_id", "source", "html"),
-      $"doc_id", $"source", $"html", "rec", malformEvery = 23)
-    val b0 = Warc.withWarcFiles(recs, $"doc_id", $"rec", docsPerFile = 2)
-    sink(b0, 0L)
-    def rows() = spark.read.parquet(s"$out/batch=0")
-      .select($"url", $"malformed")
-      .as[(Option[String], Boolean)].collect().toSet
-    val r0 = rows()
-    val offline = Warc.parseFields(Warc.records(b0, "warc"), $"rec")
-      .select($"url", $"malformed")
-      .as[(Option[String], Boolean)].collect().toSet
-    assert(r0 == offline && r0.size == 3)
-    assert(r0.contains((Some("http://example.com/s/1"), false)))
-    assert(r0.contains((None, true)), "the corrupted record arrives quarantined")
-    sink(b0, 0L) // replay
-    assert(rows() == r0)
-  }
-
-  test("outlinkIngest: per-batch anchor table resolved against each page's own base; non-crawlable hrefs arrive null; replay idempotent") {
-    import spark.implicits._
-    val out = java.nio.file.Files.createTempDirectory("linkingest").toString
-    val sink = EventStreams.outlinkIngest(out)
-    val b0 = Seq(
-      (1L, "http://a.com/d/p",
-        "<p><a href=\"next/2\">more</a> <a href=\"mailto:x@y.z\">mail</a></p>"),
-      (2L, "HTTPS://B.net:443/x?q=1",
-        "<ul><li><a href='/r'>root &amp; rel</a></li></ul>" +
-          "<script>var s='<a href=\"http://ghost/\">g</a>';</script>"))
-      .toDF("id", "url", "html")
-    sink(b0, 0L)
-    def rows() = spark.read.parquet(s"$out/batch=0")
-      .select($"id", $"link_idx", $"href", $"anchor_text", $"url_resolved",
-        $"url_canon")
-      .as[(Long, Long, Option[String], String, Option[String], Option[String])]
-      .collect().toSet
-    val r0 = rows()
-    assert(r0 == Set(
-      (1L, 0L, Some("next/2"), "more",
-        Some("http://a.com/d/next/2"), Some("http://a.com/d/next/2")),
-      (1L, 1L, Some("mailto:x@y.z"), "mail", None, None), // not crawlable — data
-      (2L, 0L, Some("/r"), "root & rel",
-        Some("https://b.net:443/r"), Some("https://b.net/r"))))
-    sink(b0, 0L) // replay
-    assert(rows() == r0)
+    val idx = tmp("dedup-views"); val out = tmp("dedup-views-out")
+    val d = docs.select($"doc_id".as("id"), $"text")
+    try {
+      streamThrough(EventStreams.dedupIngest(idx, out), halves(d))
+      val bandDirs = new java.io.File(s"$idx/bands").listFiles()
+        .filter(_.getName.startsWith("batch="))
+        .flatMap(_.listFiles().filter(_.getName.startsWith("band=")))
+      assert(bandDirs.length == 2 * 16)
+      for (b <- bandDirs)
+        assert(b.listFiles().count(_.getName.endsWith(".parquet")) <= 2, b)
+      val victim = spark.read.parquet(out).select("id").as[Long].collect().min
+      def stored(view: String) = Compaction.snapshot(spark, idx)(view)
+        .filter($"id" === victim).count()
+      assert(Seq("hashes", "bands", "shingles").forall(stored(_) > 0))
+      graft.operators.Dedup.deleteFromCorpusIndex(spark, idx, Seq(victim).toDF("id"))
+      assert(Seq("hashes", "bands", "shingles").forall(stored(_) == 0))
+    } finally graft.CacheScope.drain()
   }
 
   test("imageAHashIngest: dedup-on-arrival vs store and within batch; undecodables quarantined; replay idempotent") {
@@ -861,390 +1151,6 @@ class EventStreamsSpec extends AnyFunSuite {
     // its own first-attempt entries — identical report
     sink(b0, 0L)
     assert(report(0L) == r0)
-  }
-
-  /** Unigram tf with dl attached over the sf0.001 documents — the
-    * [[graft.operators.Retrieval]] input shape for the streaming twins.
-    */
-  private def docTf = {
-    val docs = graft.Tables(spark, "/root/testdata/sf0.001").documents
-    docs.select(col("doc_id").as("id"),
-        expr("filter(split(lower(text), '\\\\s+'), x -> length(x) > 0)").as("ws"))
-      .filter(size(col("ws")) >= 1)
-      .select(col("id"), size(col("ws")).cast("long").as("dl"),
-        explode(col("ws")).as("term"))
-      .groupBy(col("id"), col("dl"), col("term")).agg(count(lit(1)).as("tf"))
-  }
-
-  test("bm25ProbeIngest: streamed query bags probe the stored index; replay is idempotent") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val base = java.nio.file.Files.createTempDirectory("bm25probe").toString
-    val idx = s"$base/index"; val out = s"$base/out"
-    val tf = docTf
-    graft.operators.Retrieval.writeBm25Index(tf, idx, 16)
-    val probeRows = Seq((0L, "the"), (0L, "data"), (1L, "table"), (1L, "query"))
-    val (b0, b1) = probeRows.splitAt(2)
-    val input = MemoryStream[(Long, String)]
-    val q = input.toDF().toDF("q_id", "term")
-      .writeStream.foreachBatch(EventStreams.bm25ProbeIngest(idx, out, 5))
-      .outputMode("update").start()
-    try {
-      input.addData(b0); q.processAllAvailable()
-      input.addData(b1); q.processAllAvailable()
-      // union of streamed batches == one offline probe of the same queries
-      val streamed = spark.read.parquet(out)
-        .select("q_id", "doc_id", "score", "rnk")
-        .as[(Long, Long, Double, Long)].collect().toSet
-      val offline = graft.operators.Retrieval.bm25AgainstIndex(
-          probeRows.toDF("q_id", "term"), idx, 5)
-        .as[(Long, Long, Double, Long)].collect().toSet
-      assert(streamed.nonEmpty && streamed == offline)
-      // replayed batch (same batchId dir) re-derives identical results
-      val sink = EventStreams.bm25ProbeIngest(idx, out, 5)
-      sink(b1.toDF("q_id", "term"), 1)
-      val replayed = spark.read.parquet(out)
-        .select("q_id", "doc_id", "score", "rnk")
-        .as[(Long, Long, Double, Long)].collect().toSet
-      assert(replayed == offline)
-    } finally { q.stop(); graft.CacheScope.drain() }
-  }
-
-  test("expectationsIngest: per-batch quality reports; replay re-derives identically") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    import graft.operators.Expectations._
-    val out = java.nio.file.Files.createTempDirectory("expingest").toString
-    val rules = Seq(NotNull("id"), InRange("v", 0.0, 1.0), Unique(Seq("id")))
-    val input = MemoryStream[(Option[Long], Double)]
-    val q = input.toDF().toDF("id", "v")
-      .writeStream.foreachBatch(EventStreams.expectationsIngest(rules, out))
-      .outputMode("update").start()
-    try {
-      input.addData(Seq((Some(1L), 0.5), (Some(2L), 0.7)))  // clean batch
-      q.processAllAvailable()
-      input.addData(Seq((None, 0.5), (Some(3L), 1.5), (Some(3L), 0.2))) // dirty
-      q.processAllAvailable()
-      def report(b: Int) = spark.read.parquet(s"$out/batch=$b")
-        .as[(String, Long, Boolean)].collect().map(r => r._1 -> ((r._2, r._3))).toMap
-      val clean = report(0)
-      assert(clean.values.forall(_ == ((0L, true))))
-      val dirty = report(1)
-      assert(dirty("not_null(id)") == ((1L, false)))
-      assert(dirty("in_range(v)") == ((1L, false)))
-      assert(dirty("unique(id)") == ((1L, false)))
-      // replayed batch overwrites its own report identically
-      val sink = EventStreams.expectationsIngest(rules, out)
-      sink(Seq((Option.empty[Long], 0.5), (Some(3L), 1.5), (Some(3L), 0.2))
-        .toDF("id", "v"), 1)
-      assert(report(1) == dirty)
-    } finally { q.stop(); graft.CacheScope.drain() }
-  }
-
-  test("hybridProbeIngest: streamed queries probe BOTH indexes; fusion equals offline") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val base = java.nio.file.Files.createTempDirectory("hybridprobe").toString
-    val bm = s"$base/bm25"; val ivf = s"$base/ivf"; val out = s"$base/out"
-    graft.operators.Retrieval.writeBm25Index(docTf, bm, 16)
-    val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    graft.operators.Similarity.writeIvfIndex(emb, ivf, 16)
-    // queries: hand term bags + each seed's own embedding as the vector
-    val seedVecs = emb.filter($"vec_id" < 2)
-      .select($"vec_id", $"embedding")
-      .as[(Long, Array[Float])].collect().toMap
-    val probeRows = Seq(
-      (0L, Seq("the", "data"), seedVecs(0L)),
-      (1L, Seq("table", "query"), seedVecs(1L)))
-    val input = MemoryStream[(Long, Seq[String], Array[Float])]
-    val q = input.toDF().toDF("q_id", "terms", "q_vec")
-      .writeStream.foreachBatch(EventStreams.hybridProbeIngest(bm, ivf, out, 2, 5))
-      .outputMode("update").start()
-    try {
-      input.addData(probeRows.take(1)); q.processAllAvailable()
-      input.addData(probeRows.drop(1)); q.processAllAvailable()
-      val streamed = spark.read.parquet(out)
-        .select("q_id", "doc_id", "score", "rnk")
-        .as[(Long, Long, Double, Long)].collect().toSet
-      val offline = graft.operators.Retrieval.rrfFuse2(
-          graft.operators.Retrieval.bm25AgainstIndex(
-            probeRows.toDF("q_id", "terms", "q_vec")
-              .select($"q_id", explode($"terms").as("term")), bm, 5)
-            .select($"q_id", $"doc_id", $"rnk"),
-          graft.operators.Similarity.ivfTopKAgainstIndex(
-            probeRows.toDF("q_id", "terms", "q_vec")
-              .select($"q_id", $"q_vec"), ivf, 2, 5)
-            .select($"q_id", $"vec_id".as("doc_id"), $"rnk"),
-          5)
-        .as[(Long, Long, Double, Long)].collect().toSet
-      assert(streamed.nonEmpty && streamed == offline)
-      // replayed batch re-derives identical results (read-only indexes)
-      val sink = EventStreams.hybridProbeIngest(bm, ivf, out, 2, 5)
-      sink(probeRows.drop(1).toDF("q_id", "terms", "q_vec"), 1)
-      val replayed = spark.read.parquet(out)
-        .select("q_id", "doc_id", "score", "rnk")
-        .as[(Long, Long, Double, Long)].collect().toSet
-      assert(replayed == offline)
-    } finally { q.stop(); graft.CacheScope.drain() }
-  }
-
-  test("bm25Ingest: streamed postings extend a versioned index; replay leaves it identical") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val base = java.nio.file.Files.createTempDirectory("bm25ingest").toString
-    val idx = s"$base/index"
-    val tf = docTf
-    // build on a doc slice, stream the rest's postings in two
-    // DOCUMENT-ATOMIC batches (the ingest contract: a doc's postings
-    // arrive together — splitting rows mid-doc would double-count the
-    // doc in the summed stats)
-    graft.operators.Retrieval.writeBm25IndexVersioned(
-      tf.filter($"id" % 3 =!= 1), idx, 16)
-    def lateRows(f: org.apache.spark.sql.Column => org.apache.spark.sql.Column) =
-      tf.filter($"id" % 3 === 1).filter(f($"id"))
-        .select($"id", $"term", $"tf", $"dl")
-        .as[(Long, String, Long, Long)].collect().toSeq
-    val b0 = lateRows(_ % 6 === 1)
-    val b1 = lateRows(_ % 6 === 4)
-    val input = MemoryStream[(Long, String, Long, Long)]
-    val q = input.toDF().toDF("id", "term", "tf", "dl")
-      .writeStream.foreachBatch(EventStreams.bm25Ingest(idx))
-      .outputMode("update").start()
-    try {
-      input.addData(b0); q.processAllAvailable()
-      input.addData(b1); q.processAllAvailable()
-      // probing build+stream equals the DIRECT bm25TopK over the full
-      // corpus: df counts postings and stats rows sum, so nothing drifts
-      val queries = Seq((0L, "the"), (0L, "data"), (1L, "table"))
-        .toDF("q_id", "term")
-      val probed = graft.operators.Retrieval.bm25AgainstIndex(queries, idx, 5)
-        .as[(Long, Long, Double, Long)].collect().toSet
-      val direct = graft.operators.Retrieval.bm25TopK(tf, queries, 5)
-        .as[(Long, Long, Double, Long)].collect().toSet
-      assert(probed == direct && probed.nonEmpty)
-      // crash-replay: re-delivering streaming batch 1 overwrites its own
-      // partitions — index contents must be IDENTICAL, not doubled
-      def contents(): Set[(Long, String, Long)] =
-        spark.read.parquet(s"$idx/lists")
-          .select($"id", $"term", $"batch".cast("long"))
-          .as[(Long, String, Long)].collect().toSet
-      val before = contents()
-      val sink = EventStreams.bm25Ingest(idx)
-      sink(b1.toDF("id", "term", "tf", "dl"), 1)
-      assert(contents() == before, "replayed batch changed the index")
-    } finally { q.stop(); graft.CacheScope.drain() }
-  }
-
-  test("knnLabelIngest: streamed vectors classify against the frozen labeling; serving ≡ offline; replay idempotent") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-      .select($"vec_id", $"embedding")
-    val base = java.nio.file.Files.createTempDirectory("knnlabel").toString
-    val idx = s"$base/index"; val lbl = s"$base/labels"; val out = s"$base/out"
-    graft.operators.Similarity.writeIvfIndexVersioned(emb, idx, 8)
-    // the frozen labeling artifact: the offline LP output written once
-    graft.operators.Graph.labelPropagation(
-        graft.operators.Similarity.lshTopK(
-          emb.select($"vec_id".as("q_id"), $"embedding".as("q_vec")),
-          emb, 64, 5, 5)
-          .select(least($"q_id", $"vec_id").as("id_a"),
-            greatest($"q_id", $"vec_id").as("id_b")).distinct(),
-        spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-          .select($"vec_id".as("id"),
-            when($"vec_id" % 4 === 0, $"label").cast("long").as("seed_label")),
-        iters = 3)
-      .select($"id", $"label").write.parquet(lbl)
-    val probeRows = emb.filter($"vec_id" % 50 === 0)
-      .select($"vec_id".as("q_id"), $"embedding".as("q_vec"))
-      .as[(Long, Array[Float])].collect().toSeq
-    val (b0, b1) = probeRows.splitAt(probeRows.size / 2)
-    val input = MemoryStream[(Long, Array[Float])]
-    val q = input.toDF().toDF("q_id", "q_vec")
-      .writeStream.foreachBatch(EventStreams.knnLabelIngest(idx, lbl, out, 4, 10))
-      .outputMode("update").start()
-    try {
-      input.addData(b0); q.processAllAvailable()
-      input.addData(b1); q.processAllAvailable()
-      val streamed = spark.read.parquet(out)
-        .select("q_id", "label", "votes")
-        .as[(Long, Long, Long)].collect().toSet
-      val offline = graft.operators.Graph.knnClassifyAgainstIndex(
-          probeRows.toDF("q_id", "q_vec"), idx, lbl, 4, 10)
-        .as[(Long, Long, Long)].collect().toSet
-      assert(streamed.nonEmpty && streamed == offline)
-      // replayed batch re-derives the identical report (read-only index)
-      val sink = EventStreams.knnLabelIngest(idx, lbl, out, 4, 10)
-      sink(b1.toDF("q_id", "q_vec"), 1)
-      assert(spark.read.parquet(out).select("q_id", "label", "votes")
-        .as[(Long, Long, Long)].collect().toSet == offline)
-    } finally { q.stop(); graft.CacheScope.drain() }
-  }
-
-  test("lmScoreIngest: streamed docs score against the stored LM; serving ≡ offline") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val base = java.nio.file.Files.createTempDirectory("lmscore").toString
-    val model = s"$base/model"; val out = s"$base/out"
-    val docs = graft.Tables(spark, "/root/testdata/sf0.001").documents
-      .select($"doc_id", $"text")
-    // train on the reference slice, stream everything else through
-    graft.operators.TextOps.writeLmModel(docs.filter($"doc_id" % 10 === 0),
-      col("doc_id"), col("text"), 500, 1000, model)
-    val rows = docs.filter($"doc_id" % 10 =!= 0)
-      .as[(Long, String)].collect().toSeq
-    val (b0, b1) = rows.splitAt(rows.length / 2)
-    val input = MemoryStream[(Long, String)]
-    val q = input.toDF().toDF("doc_id", "text")
-      .writeStream.foreachBatch(EventStreams.lmScoreIngest(model, out, 0.7, 40.0))
-      .outputMode("update").start()
-    try {
-      input.addData(b0); q.processAllAvailable()
-      input.addData(b1); q.processAllAvailable()
-      val streamed = spark.read.parquet(out)
-        .select("id", "n_bigrams", "h", "ppl", "keep")
-        .as[(Long, Long, Double, Double, Boolean)].collect().toSet
-      val offline = graft.operators.TextOps.lmScoreAgainstModel(
-          rows.toDF("doc_id", "text"), col("doc_id"), col("text"),
-          model, 0.7, 40.0)
-        .as[(Long, Long, Double, Double, Boolean)].collect().toSet
-      assert(streamed.nonEmpty && streamed == offline)
-      // replayed batch (same batchId dir) re-derives identical scores
-      val sink = EventStreams.lmScoreIngest(model, out, 0.7, 40.0)
-      sink(b1.toDF("doc_id", "text"), 1)
-      assert(spark.read.parquet(out)
-        .select("id", "n_bigrams", "h", "ppl", "keep")
-        .as[(Long, Long, Double, Double, Boolean)].collect().toSet == offline)
-    } finally { q.stop(); graft.CacheScope.drain() }
-  }
-
-  test("clsScoreIngest: streamed docs score against the stored classifier; serving ≡ offline") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val base = java.nio.file.Files.createTempDirectory("clsscore").toString
-    val model = s"$base/model"; val out = s"$base/out"
-    val docs = graft.Tables(spark, "/root/testdata/sf0.001").documents
-      .select($"doc_id", $"text")
-    val label = array_contains(split(lower(col("text")), """\s+"""), "dup")
-    graft.operators.TextOps.writeLinearModel(spark,
-      graft.operators.TextOps.trainHashedLinear(docs, col("doc_id"),
-        col("text"), label.cast("int"), 64, 8, 1L, 2L),
-      model)
-    val rows = docs.as[(Long, String)].collect().toSeq
-    val (b0, b1) = rows.splitAt(rows.length / 2)
-    val input = MemoryStream[(Long, String)]
-    val q = input.toDF().toDF("doc_id", "text")
-      .writeStream.foreachBatch(EventStreams.clsScoreIngest(model, out, 0.5))
-      .outputMode("update").start()
-    try {
-      input.addData(b0); q.processAllAvailable()
-      input.addData(b1); q.processAllAvailable()
-      val streamed = spark.read.parquet(out)
-        .select("id", "n_tokens", "score", "prob", "keep")
-        .as[(Long, Long, Double, Double, Boolean)].collect().toSet
-      val offline = graft.operators.TextOps.hashedLinearScoreAgainstModel(
-          rows.toDF("doc_id", "text"), col("doc_id"), col("text"), model, 0.5)
-        .as[(Long, Long, Double, Double, Boolean)].collect().toSet
-      assert(streamed.nonEmpty && streamed == offline)
-      // replayed batch (same batchId dir) re-derives identical scores
-      val sink = EventStreams.clsScoreIngest(model, out, 0.5)
-      sink(b1.toDF("doc_id", "text"), 1)
-      assert(spark.read.parquet(out)
-        .select("id", "n_tokens", "score", "prob", "keep")
-        .as[(Long, Long, Double, Double, Boolean)].collect().toSet == offline)
-    } finally { q.stop(); graft.CacheScope.drain() }
-  }
-
-  test("pplBucketIngest: streamed docs bucket against frozen boundaries; unknown group fails visible") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val base = java.nio.file.Files.createTempDirectory("pplbkt").toString
-    val lm = s"$base/lm"; val bounds = s"$base/bounds"; val out = s"$base/out"
-    val docs = graft.Tables(spark, "/root/testdata/sf0.001").documents
-      .select($"doc_id".as("id"), $"text", $"source".as("group"))
-    graft.operators.TextOps.writeLmModel(docs.filter($"id" % 10 === 0),
-      col("id"), col("text"), 500, 1000, lm)
-    graft.operators.TextOps.writePplBoundaries(docs, col("id"), col("text"),
-      col("group"), col("id") % 10 === 0, 500, 1000, 0.7, bounds)
-    val rows = docs.as[(Long, String, String)].collect().toSeq
-    val (b0, b1) = rows.splitAt(rows.length / 2)
-    val input = MemoryStream[(Long, String, String)]
-    val q = input.toDF().toDF("id", "text", "group")
-      .writeStream.foreachBatch(EventStreams.pplBucketIngest(lm, bounds, out, 0.7))
-      .outputMode("update").start()
-    try {
-      input.addData(b0); q.processAllAvailable()
-      input.addData(b1); q.processAllAvailable()
-      val streamed = spark.read.parquet(out)
-        .select("id", "group", "ppl", "bucket")
-        .as[(Long, String, Double, String)].collect().toSet
-      // serving over frozen artifacts ≡ the fresh offline partition
-      val offline = graft.operators.TextOps.perplexityPartition(
-          rows.toDF("id", "text", "group"), col("id"), col("text"),
-          col("group"), col("id") % 10 === 0, 500, 1000, 0.7)
-        .as[(Long, String, Double, String)].collect().toSet
-      assert(streamed.nonEmpty && streamed == offline)
-      assert(streamed.map(_._4).subsetOf(Set("head", "middle", "tail")))
-      // a group absent from the stored boundaries buckets to NULL
-      val sink = EventStreams.pplBucketIngest(lm, bounds, out, 0.7)
-      sink(Seq((900001L, b0.head._2, "no-such-source"))
-        .toDF("id", "text", "group"), 99)
-      val unknown = spark.read.parquet(s"$out/batch=99")
-        .select("bucket").collect()
-      assert(unknown.length == 1 && unknown.head.isNullAt(0))
-    } finally { q.stop(); graft.CacheScope.drain() }
-  }
-
-  test("countMinIngest: streamed batches maintain the stored sketch; store == one-shot sketch (linearity)") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("cmingest").toString
-    val all = (Seq.fill(40)("a") ++ Seq.fill(15)("b") ++ Seq.fill(3)("c"))
-      .zipWithIndex.map { case (k, i) => (i.toLong, k) }
-    val (build, rest) = all.splitAt(10)
-    val (s0, s1) = rest.splitAt(rest.length / 2)
-    graft.operators.Sketches.writeCountMin(build.toDF("i", "k"), col("k"),
-      depth = 3, width = 64, dir)
-    val input = MemoryStream[(Long, String)]
-    val q = input.toDF().toDF("i", "k")
-      .writeStream.foreachBatch(EventStreams.countMinIngest(dir, "k"))
-      .outputMode("update").start()
-    try {
-      input.addData(s0); q.processAllAvailable()
-      input.addData(s1); q.processAllAvailable()
-      val est = graft.operators.Sketches.countMinEstimateAgainstStore(dir,
-          Seq("a", "b", "c", "zz").toDF("k"), col("k"))
-        .as[(String, Long)].collect().toMap
-      // linearity: build + 2 streamed batches == one-shot over everything
-      val oneShot = graft.operators.Sketches.countMinEstimate(
-          graft.operators.Sketches.countMin(all.toDF("i", "k"), col("k"), 3, 64),
-          Seq("a", "b", "c", "zz").toDF("k"), col("k"), 3, 64)
-        .as[(String, Long)].collect().toMap
-      assert(est == oneShot)
-      assert(est("a") >= 40L && est("b") >= 15L && est("c") >= 3L)
-      // replayed batch overwrites its own cells: store unchanged
-      val sink = EventStreams.countMinIngest(dir, "k")
-      sink(s1.toDF("i", "k"), 1)
-      val replayed = graft.operators.Sketches.countMinEstimateAgainstStore(
-          dir, Seq("a", "b", "c", "zz").toDF("k"), col("k"))
-        .as[(String, Long)].collect().toMap
-      assert(replayed == oneShot)
-      // maintenance tick AFTER the producer's commit (the
-      // Compaction.batchCount consult contract): 3 batch dirs > 2 →
-      // fold to one epoch-1 batch; probes unchanged, and the NEXT
-      // streamed batch keeps landing in the new epoch
-      assert(graft.operators.Sketches
-        .compactCountMinIfNeeded(spark, dir, maxBatches = 2).contains(1))
-      assert(graft.operators.Compaction.batchCount(spark, dir, "cells") == 1)
-      assert(graft.operators.Sketches.countMinEstimateAgainstStore(dir,
-          Seq("a", "b", "c", "zz").toDF("k"), col("k"))
-        .as[(String, Long)].collect().toMap == oneShot)
-      input.addData(Seq((9001L, "c"), (9002L, "c"))); q.processAllAvailable()
-      val after = graft.operators.Sketches.countMinEstimateAgainstStore(dir,
-          Seq("c").toDF("k"), col("k"))
-        .as[(String, Long)].collect().toMap
-      assert(after("c") == oneShot("c") + 2L)
-    } finally { q.stop(); graft.CacheScope.drain() }
   }
 
   test("curationIngest: the composed online gate — every survivor passes all three filters; cross-batch dup dropped; replay idempotent") {
@@ -1298,356 +1204,6 @@ class EventStreamsSpec extends AnyFunSuite {
       sink(b1.toDF("id", "text"), 1)
       assert(spark.read.parquet(out).select("id")
         .as[Long].collect().toSet == kept)
-    } finally { q.stop(); graft.CacheScope.drain() }
-  }
-
-  test("unigramTokenizeIngest: streamed docs tokenize against the stored model; serving ≡ offline; replay idempotent") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val base = java.nio.file.Files.createTempDirectory("unitok").toString
-    val model = s"$base/model"; val out = s"$base/out"
-    val docs = graft.Tables(spark, "/root/testdata/sf0.001").documents
-      .select($"doc_id".as("id"), $"text")
-    graft.operators.Unigram.writeModel(spark,
-      graft.operators.Unigram.trainPieces(docs, $"text", 100, 2), model)
-    val rows = docs.filter($"id" < 40).as[(Long, String)].collect().toSeq
-    val (b0, b1) = rows.splitAt(rows.length / 2)
-    val input = MemoryStream[(Long, String)]
-    val q = input.toDF().toDF("id", "text")
-      .writeStream
-      .foreachBatch(EventStreams.unigramTokenizeIngest(model, out))
-      .outputMode("update").start()
-    try {
-      input.addData(b0); q.processAllAvailable()
-      input.addData(b1); q.processAllAvailable()
-      def streamed() = spark.read.parquet(out).select("id", "n_tokens")
-        .as[(Long, Long)].collect().toSet
-      // offline: per-word tokenization of the same docs with the model
-      val m = graft.operators.Unigram.loadModel(spark, model)
-      val words = docs.filter($"id" < 40)
-        .select($"id", explode(expr(
-          "filter(split(lower(text), '\\\\s+'), x -> length(x) > 0)")).as("w"))
-      val wt = graft.operators.Unigram.tokenize(
-        words.select($"w").distinct(), m)
-        .select($"w", size($"toks").cast("long").as("nt"))
-      val offline = words.join(wt, Seq("w"))
-        .groupBy($"id").agg(sum($"nt").as("n_tokens"))
-        .as[(Long, Long)].collect().toSet
-      val s1 = streamed()
-      assert(s1.nonEmpty && s1 == offline)
-      val sink = EventStreams.unigramTokenizeIngest(model, out)
-      sink(b1.toDF("id", "text"), 1)
-      assert(streamed() == offline)
-    } finally { q.stop(); graft.CacheScope.drain() }
-  }
-
-  test("knScoreIngest: KN serving over the SAME stored LM artifact; serving ≡ offline; replay idempotent") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val base = java.nio.file.Files.createTempDirectory("knscore").toString
-    val model = s"$base/model"; val out = s"$base/out"
-    val docs = graft.Tables(spark, "/root/testdata/sf0.001").documents
-      .select($"doc_id", $"text")
-    // ONE artifact, two smoothings: this is writeLmModel's output serving KN
-    graft.operators.TextOps.writeLmModel(docs.filter($"doc_id" % 10 === 0),
-      col("doc_id"), col("text"), 500, 1000, model)
-    val rows = docs.filter($"doc_id" % 10 =!= 0)
-      .as[(Long, String)].collect().toSeq
-    val (b0, b1) = rows.splitAt(rows.length / 2)
-    val input = MemoryStream[(Long, String)]
-    val q = input.toDF().toDF("doc_id", "text")
-      .writeStream.foreachBatch(EventStreams.knScoreIngest(model, out, 40.0))
-      .outputMode("update").start()
-    try {
-      input.addData(b0); q.processAllAvailable()
-      input.addData(b1); q.processAllAvailable()
-      def streamed() = spark.read.parquet(out)
-        .select("id", "n_bigrams", "h", "ppl", "keep")
-        .as[(Long, Long, Double, Double, Boolean)].collect().toSet
-      val offline = graft.operators.TextOps.knScoreAgainstModel(
-          rows.toDF("doc_id", "text"), col("doc_id"), col("text"),
-          model, 40.0)
-        .as[(Long, Long, Double, Double, Boolean)].collect().toSet
-      val s1 = streamed()
-      assert(s1.nonEmpty && s1 == offline)
-      // KN scores differ from add-one scores over the identical artifact
-      val addOne = graft.operators.TextOps.lmScoreAgainstModel(
-          rows.toDF("doc_id", "text"), col("doc_id"), col("text"),
-          model, 0.7, 40.0)
-        .as[(Long, Long, Double, Double, Boolean)].collect().toSet
-      assert(addOne.map(r => (r._1, r._4)) != offline.map(r => (r._1, r._4)),
-        "KN must not degenerate into the add-one smoothing")
-      val sink = EventStreams.knScoreIngest(model, out, 40.0)
-      sink(b1.toDF("doc_id", "text"), 1)
-      assert(streamed() == offline)
-    } finally { q.stop(); graft.CacheScope.drain() }
-  }
-
-  test("langIdIngest: streamed docs classify against the frozen stored model; serving ≡ offline; replay idempotent") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val base = java.nio.file.Files.createTempDirectory("langid-ing").toString
-    val model = s"$base/model"; val out = s"$base/out"
-    val docs = graft.Tables(spark, "/root/testdata/sf0.001").documents
-      .select($"doc_id".as("id"), $"text", $"lang")
-    graft.operators.TextOps.writeLangIdModel(spark,
-      graft.operators.TextOps.trainHashedLangId(docs, $"id", $"text",
-        $"lang", dim = 128, iters = 4), model)
-    val rows = docs.filter($"id" < 40).select($"id", $"text")
-      .as[(Long, String)].collect().toSeq
-    val (b0, b1) = rows.splitAt(rows.length / 2)
-    val input = MemoryStream[(Long, String)]
-    val q = input.toDF().toDF("id", "text")
-      .writeStream
-      .foreachBatch(EventStreams.langIdIngest(model, out))
-      .outputMode("update").start()
-    try {
-      input.addData(b0); q.processAllAvailable()
-      input.addData(b1); q.processAllAvailable()
-      def streamed() = spark.read.parquet(out)
-        .select("id", "pred_lang", "score")
-        .as[(Long, String, Double)].collect().toSet
-      val offline = graft.operators.TextOps.langIdScoreAgainstModel(
-          docs.filter($"id" < 40), $"id", $"text", model)
-        .as[(Long, String, Double)].collect().toSet
-      val s1 = streamed()
-      assert(s1.nonEmpty && s1 == offline)
-      // replay converges (overwrite-own-partition)
-      val sink = EventStreams.langIdIngest(model, out)
-      sink(b1.toDF("id", "text"), 1)
-      assert(streamed() == offline)
-    } finally { q.stop(); graft.CacheScope.drain() }
-  }
-
-  test("langIdDriftIngest: per-batch drift report against the frozen reference; serving ≡ offline; replay idempotent") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val base = java.nio.file.Files.createTempDirectory("liddrift-ing").toString
-    val model = s"$base/model"; val ref = s"$base/ref"; val out = s"$base/out"
-    val docs = graft.Tables(spark, "/root/testdata/sf0.001").documents
-      .select($"doc_id".as("id"), $"text", $"lang")
-    graft.operators.TextOps.writeLangIdModel(spark,
-      graft.operators.TextOps.trainHashedLangId(docs, $"id", $"text",
-        $"lang", dim = 128, iters = 4), model)
-    graft.operators.TextOps.writeLangIdReference(docs, $"id", $"text",
-      model, ref)
-    val rows = docs.filter($"id" < 30).select($"id", $"text")
-      .as[(Long, String)].collect().toSeq
-    val input = MemoryStream[(Long, String)]
-    val q = input.toDF().toDF("id", "text")
-      .writeStream
-      .foreachBatch(EventStreams.langIdDriftIngest(model, ref, out))
-      .outputMode("update").start()
-    try {
-      input.addData(rows); q.processAllAvailable()
-      def streamed() = spark.read.parquet(s"$out/batch=0")
-        .select("pred_lang", "n_batch", "n_ref", "batch_p", "ref_p", "jsd")
-        .as[(String, Long, Long, Double, Double, Double)].collect().toSet
-      val offline = graft.operators.TextOps.langIdDriftReport(
-          docs.filter($"id" < 30), $"id", $"text", model, ref)
-        .as[(String, Long, Long, Double, Double, Double)].collect().toSet
-      val s1 = streamed()
-      assert(s1.nonEmpty && s1 == offline)
-      // replay converges
-      val sink = EventStreams.langIdDriftIngest(model, ref, out)
-      sink(rows.toDF("id", "text"), 0)
-      assert(streamed() == offline)
-    } finally { q.stop(); graft.CacheScope.drain() }
-  }
-
-  test("wordPieceTokenizeIngest: streamed docs tokenize against the stored vocab; serving ≡ offline; replay idempotent") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val base = java.nio.file.Files.createTempDirectory("wptok").toString
-    val model = s"$base/model"; val out = s"$base/out"
-    val docs = graft.Tables(spark, "/root/testdata/sf0.001").documents
-      .select($"doc_id".as("id"), $"text")
-    val wt = graft.operators.TextOps.wordPieceWordTable(docs, $"text")
-    graft.operators.TextOps.writeWordPieceModel(wt,
-      graft.operators.TextOps.wordPieceMerges(docs, $"text", 3), model)
-    val rows = docs.filter($"id" < 40).as[(Long, String)].collect().toSeq
-    val (b0, b1) = rows.splitAt(rows.length / 2)
-    val input = MemoryStream[(Long, String)]
-    val q = input.toDF().toDF("id", "text")
-      .writeStream
-      .foreachBatch(EventStreams.wordPieceTokenizeIngest(model, out))
-      .outputMode("update").start()
-    try {
-      input.addData(b0); q.processAllAvailable()
-      input.addData(b1); q.processAllAvailable()
-      def streamed() = spark.read.parquet(out)
-        .select("id", "n_tokens", "n_unk")
-        .as[(Long, Long, Long)].collect().toSet
-      val vocab = graft.operators.TextOps.loadWordPieceVocab(spark, model)
-      val words = docs.filter($"id" < 40)
-        .select($"id", explode(expr(
-          "filter(split(lower(text), '\\\\s+'), x -> length(x) > 0)")).as("w"))
-      val wtoks = graft.operators.TextOps.wordPieceTokens(
-        words.select($"w").distinct(), vocab)
-        .select($"w", size($"toks").cast("long").as("nt"),
-          when(element_at($"toks", 1) === "[UNK]", 1L).otherwise(0L).as("unk"))
-      val offline = words.join(wtoks, Seq("w"))
-        .groupBy($"id").agg(sum($"nt").as("n_tokens"), sum($"unk").as("n_unk"))
-        .as[(Long, Long, Long)].collect().toSet
-      val s1 = streamed()
-      assert(s1.nonEmpty && s1 == offline)
-      // the vocab was trained on the full corpus word table, so the
-      // served slice segments without UNK (the drift signal stays 0)
-      assert(s1.forall(_._3 == 0L))
-      val sink = EventStreams.wordPieceTokenizeIngest(model, out)
-      sink(b1.toDF("id", "text"), 1)
-      assert(streamed() == offline)
-      // EVERY ingested doc reports — a doc with no extractable words gets
-      // (id, 0, 0) rather than a silent per-doc gap
-      sink(Seq((9001L, ""), (9002L, "   \t  "), (9003L, "real words here"))
-        .toDF("id", "text"), 1)
-      val withEmpty = streamed()
-      assert(withEmpty.contains((9001L, 0L, 0L)))
-      assert(withEmpty.contains((9002L, 0L, 0L)))
-      assert(withEmpty.exists(r => r._1 == 9003L && r._2 > 0L))
-    } finally { q.stop(); graft.CacheScope.drain() }
-  }
-
-  test("trainingPairIngest: streamed seeds export pairs against frozen artifacts; serving ≡ offline; replay idempotent") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val base = java.nio.file.Files.createTempDirectory("tpairs").toString
-    val idx = s"$base/bm25"; val shs = s"$base/shingles"; val out = s"$base/out"
-    val docs = graft.Tables(spark, "/root/testdata/sf0.001").documents
-      .select($"doc_id".as("id"), $"text")
-    val tf = docs
-      .select($"id", expr(
-        "filter(split(lower(text), '\\\\s+'), x -> length(x) > 0)").as("ws"))
-      .filter(size($"ws") >= 2)
-      .select($"id", (size($"ws") - 1).cast("long").as("dl"),
-        explode(expr(
-          "transform(sequence(1, size(ws) - 1, 1), i -> concat(ws[i - 1], ' ', ws[i]))"))
-          .as("term"))
-      .groupBy($"id", $"dl", $"term").agg(count(lit(1)).as("tf"))
-    graft.operators.Retrieval.writeBm25IndexVersioned(tf, idx, 8)
-    val shingled = graft.operators.Dedup.batchShingleArrays(docs, 3)
-    shingled.write.parquet(shs) // the frozen corpus shingle view
-    val seeds = docs.filter($"id".isin(0L, 1L, 8L))
-    val seedRows = seeds.as[(Long, String)].collect().toSeq.sortBy(_._1)
-    // query-derivation parity: stored-idf derivation equals the
-    // corpus-side recipe (independent replay, the bm25SeedQueries shape)
-    val qIdx = graft.operators.Retrieval
-      .seedQueriesAgainstIndex(seeds, idx, 3)
-      .as[(Long, String)].collect().toSet
-    val dfs = tf.groupBy($"term").agg(count(lit(1)).as("df"))
-    val nd = tf.agg(count_distinct($"id").as("n_docs"))
-    val qOff = tf.filter($"id".isin(0L, 1L, 8L))
-      .join(dfs, "term").crossJoin(broadcast(nd))
-      .select($"id".as("q_id"), $"term",
-        ($"tf".cast("double") * log($"n_docs".cast("double") / $"df")).as("w"))
-      .groupBy($"q_id")
-      .agg(slice(sort_array(collect_list(struct(
-        (-$"w").as("nw"), $"term".as("t")))), 1, 3).as("v"))
-      .select($"q_id", explode($"v.t").as("term"))
-      .as[(Long, String)].collect().toSet
-    assert(qIdx.nonEmpty && qIdx == qOff)
-    val input = MemoryStream[(Long, String)]
-    val q = input.toDF().toDF("id", "text")
-      .writeStream
-      .foreachBatch(EventStreams.trainingPairIngest(idx, shs, out, 3, 5, 10, 0.3))
-      .outputMode("update").start()
-    try {
-      input.addData(seedRows.take(2)); q.processAllAvailable()
-      input.addData(seedRows.drop(2)); q.processAllAvailable()
-      def streamed() = spark.read.parquet(out)
-        .select("seed_id", "doc_id", "label", "rnk")
-        .as[(Long, Long, Long, Long)].collect().toSet
-      val offline = graft.operators.Retrieval.trainingPairs(tf,
-          graft.operators.Retrieval.seedQueriesAgainstIndex(seeds, idx, 3),
-          shingled.select($"id", $"sh".as("ss")), 5, 10, 0.3)
-        .as[(Long, Long, Long, Long)].collect().toSet
-      val s1 = streamed()
-      assert(s1.nonEmpty && s1 == offline)
-      // positives present: one per seed at rank 0
-      assert(Seq(0L, 1L, 8L).forall(i => s1.contains((i, i, 1L, 0L))))
-      // replayed batch re-derives identically (read-only frozen artifacts)
-      val sink = EventStreams.trainingPairIngest(idx, shs, out, 3, 5, 10, 0.3)
-      sink(seedRows.drop(2).toDF("id", "text"), 1)
-      assert(streamed() == offline)
-    } finally { q.stop(); graft.CacheScope.drain() }
-  }
-
-  test("corpusIndexIngest: streamed docs extend the dedup index; replay leaves it identical") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val idx = java.nio.file.Files.createTempDirectory("corpus-ing").toString
-    val d = graft.Tables(spark, "/root/testdata/sf0.001").documents
-      .select($"doc_id".as("id"), $"text")
-    val existing = d.filter($"id" % 10 =!= 7)
-    val probeDocs = d.filter($"id" % 10 === 7)
-    def probe = graft.operators.Dedup
-      .dedupAgainstIndex(probeDocs, idx, 3, 16, 8, 0.8)
-      .select("id").as[Long].collect().sorted.toSeq
-    // offline build on the initial slice; stream the late slice in
-    graft.operators.Dedup.writeCorpusIndexVersioned(
-      existing.filter($"id" % 10 =!= 5), idx, 3, 16, 8)
-    val late = existing.filter($"id" % 10 === 5)
-      .as[(Long, String)].collect().toSeq
-    val input = MemoryStream[(Long, String)]
-    val q = input.toDF().toDF("id", "text")
-      .writeStream.foreachBatch(EventStreams.corpusIndexIngest(idx, 3, 16, 8))
-      .outputMode("update").start()
-    try {
-      input.addData(late); q.processAllAvailable()
-      val p1 = probe
-      // streamed build+ingest ≡ the direct cross-corpus dedup
-      assert(p1 == graft.operators.Dedup
-        .dedupAgainst(probeDocs, existing, 3, 16, 8, 0.8)
-        .select("id").as[Long].collect().sorted.toSeq)
-      // crash-replay of the streamed batch: identical index contents
-      val sink = EventStreams.corpusIndexIngest(idx, 3, 16, 8)
-      sink(late.toDF("id", "text"), 0)
-      assert(probe == p1)
-      // maintenance tick: threshold consulted after commit, probe unchanged
-      assert(graft.operators.Dedup
-        .compactCorpusIndexIfNeeded(spark, idx, 1).contains(1))
-      assert(probe == p1)
-    } finally { q.stop(); graft.CacheScope.drain() }
-  }
-
-  test("bm25DeleteIngest: streamed deletion requests erase docs; replay is a no-op") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val base = java.nio.file.Files.createTempDirectory("bm25del").toString
-    val idx = s"$base/index"
-    val tf = docTf
-    graft.operators.Retrieval.writeBm25IndexVersioned(tf, idx, 16)
-    // two erasure windows: doc ids ≡1 (mod 7), then ≡2 (mod 7)
-    def victims(m: Long) =
-      tf.select($"id").distinct().filter($"id" % 7 === m)
-        .as[Long].collect().toSeq
-    val input = MemoryStream[Long]
-    val q = input.toDF().toDF("id")
-      .writeStream.foreachBatch(EventStreams.bm25DeleteIngest(idx))
-      .outputMode("update").start()
-    try {
-      input.addData(victims(1)); q.processAllAvailable()
-      input.addData(victims(2)); q.processAllAvailable()
-      // probing the index equals the direct path over the survivors —
-      // df/stats recounted, the deleted docs gone from every score
-      val queries = Seq((0L, "the"), (0L, "data"), (1L, "table"))
-        .toDF("q_id", "term")
-      val probed = graft.operators.Retrieval.bm25AgainstIndex(queries, idx, 5)
-        .as[(Long, Long, Double, Long)].collect().toSet
-      val direct = graft.operators.Retrieval.bm25TopK(
-          tf.filter($"id" % 7 =!= 1 && $"id" % 7 =!= 2), queries, 5)
-        .as[(Long, Long, Double, Long)].collect().toSet
-      assert(probed == direct && probed.nonEmpty)
-      // the bytes are gone from the stored postings
-      val e = Compaction.currentEpoch(spark, idx)
-      val stored = spark.read.parquet(Compaction.epochPath(idx, "lists", e))
-      assert(stored.filter($"id" % 7 === 1 || $"id" % 7 === 2).count() == 0)
-      // crash-replay of the second window: deletion is idempotent, the
-      // index rewrites to identical contents (one epoch further)
-      val sink = EventStreams.bm25DeleteIngest(idx)
-      sink(victims(2).toDF("id"), 1)
-      assert(graft.operators.Retrieval.bm25AgainstIndex(queries, idx, 5)
-        .as[(Long, Long, Double, Long)].collect().toSet == probed)
     } finally { q.stop(); graft.CacheScope.drain() }
   }
 }
