@@ -110,13 +110,14 @@ object Bench {
     // was killed (rc=124) in exactly that window — AFTER the JSON line
     // had printed — which voided the whole artifact. The JVM owns no
     // state worth unwinding here (BENCH_LOCAL.json is already on disk,
-    // /tmp scratch is reused-or-rebuilt by design), so halt(0) makes
+    // the run's artifact cache is deleted below), so halt(0) makes
     // the process exit 0 inside the wrapper's budget with the JSON
     // line as the LAST stdout line (what the driver parses).
     // halt skips shutdown hooks AND buffered-stream draining: flush both
     // std streams explicitly (log4j writes to stderr via console appender,
     // already line-flushed). halt(0) must remain the LAST statement of
     // main — code added after it will silently never run.
+    RunCache.delete() // halt skips the cache's own shutdown hook
     System.out.flush()
     System.err.flush()
     Runtime.getRuntime.halt(0)

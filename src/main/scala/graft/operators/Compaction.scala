@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.StructType
@@ -170,7 +170,7 @@ object Compaction {
     * epoch: the signal [[compactIfNeeded]] thresholds on. Batch
     * directories accrete one per ingest until file listing dominates probe
     * cost (about 2× probe file-open overhead with just two batches at
-    * sf0.1). A flat layout has no batch level and reports 0.
+    * sf0.1).
     */
   def batchCount(spark: SparkSession, dir: String, name: String): Int =
     batchIds(spark, dir, name).size
@@ -274,36 +274,37 @@ object Compaction {
     fs.delete(p, true)
   }
 
-  /** Number of data files under `dir` (the probe-listing cost compaction
-    * exists to cut; ignores hidden `_`/`.` entries and the EPOCH pointer).
-    * Walks plain `listStatus` rather than `listFiles`: a located listing
-    * of the local file system forks a shell per file to read its
-    * permissions, which made every store write measurably slower.
+  /** Data files under `dir`, recursively, ignoring hidden `_`/`.` entries
+    * and the EPOCH pointer; none when `dir` is absent. Walks plain
+    * `listStatus` rather than `listFiles`: a located listing of the local
+    * file system forks a shell per file to read its permissions (400 ms
+    * against 5–13 ms for 65 files), which made every store write and
+    * probe-side fingerprint measurably slower.
     */
-  def dataFileCount(spark: SparkSession, dir: String): Int = {
+  private[operators] def dataFiles(spark: SparkSession,
+      dir: String): Vector[FileStatus] = {
     val p = new Path(dir)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def count(d: Path): Int = fs.listStatus(d).iterator.map { s =>
-      val nm = s.getPath.getName
-      if (nm.startsWith("_") || nm.startsWith(".") || nm.startsWith("EPOCH")) 0
-      else if (s.isDirectory) count(s.getPath)
-      else 1
-    }.sum
-    if (fs.exists(p)) count(p) else 0
+    def walk(d: Path): Iterator[FileStatus] =
+      fs.listStatus(d).iterator.flatMap { s =>
+        val nm = s.getPath.getName
+        if (nm.startsWith("_") || nm.startsWith(".") || nm.startsWith("EPOCH"))
+          Iterator.empty
+        else if (s.isDirectory) walk(s.getPath)
+        else Iterator.single(s)
+      }
+    if (fs.exists(p)) walk(p).toVector else Vector.empty
   }
 
-  /** Total bytes of data files under `dir` (ignores _SUCCESS/_metadata). */
-  def dataBytes(spark: SparkSession, dir: String): Long = {
-    val p = new Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val it = fs.listFiles(p, true)
-    var total = 0L
-    while (it.hasNext) {
-      val f = it.next()
-      if (!f.getPath.getName.startsWith("_")) total += f.getLen
-    }
-    total
-  }
+  /** Number of data files under `dir`: the probe-listing cost compaction
+    * exists to cut.
+    */
+  def dataFileCount(spark: SparkSession, dir: String): Int =
+    dataFiles(spark, dir).size
+
+  /** Total bytes of data files under `dir`. */
+  def dataBytes(spark: SparkSession, dir: String): Long =
+    dataFiles(spark, dir).map(_.getLen).sum
 
   /** Rewrite the parquet dataset at `inDir` into ⌈bytes/targetBytes⌉
     * similarly-sized files at `outDir`; returns the file count chosen.

@@ -458,29 +458,6 @@ object Dedup {
       shingleArrays(existing, n),
       n, numHashes, bands, threshold)
 
-  /** The three derived views of a corpus that [[dedupAgainst]] actually
-    * joins against — exact-text hashes, LSH band keys, shingle arrays —
-    * written to parquet once. At 100 TB this is the production shape: the
-    * index is built (or incrementally ingested, in the versioned layout)
-    * when documents arrive, and each new batch's dedup cost is then
-    * proportional to the BATCH, never the corpus. Band keys are written
-    * partitioned by band so a probe scans only colliding bands.
-    */
-  def writeCorpusIndex(docs: DataFrame, dir: String,
-      n: Int = 3, numHashes: Int = 64, bands: Int = 16): Unit = {
-    docs.select(md5(col("text")).as("h"))
-      .write.mode("overwrite").parquet(s"$dir/hashes")
-    bandKeys(lshSignatures(docs, n, numHashes), numHashes, bands)
-      // band-packed files (see Compaction.View.partitioned). The shuffled
-      // rows are (band, key, id) band keys — index metadata, never the
-      // corpus text.
-      .hint("rebalance", col("band"))
-      .write.mode("overwrite").partitionBy("band").parquet(s"$dir/bands")
-    shingleArrays(docs, n)
-      .write.mode("overwrite").parquet(s"$dir/shingles")
-    docs.sparkSession.catalog.refreshByPath(dir)
-  }
-
   /** Store views of the versioned corpus index (the `hashes` view is
     * shared with the aHash store, whose rows differ but whose write does
     * not).
@@ -501,14 +478,17 @@ object Dedup {
       Shingles -> shingleArrays(docs, n)) ++
       chunks.map { case (w, m) => Chunks -> cdcChunkView(docs, w, m) }
 
-  /** Build the stored dedup index in the BATCH-VERSIONED layout — the
-    * replay-safe sibling of [[writeCorpusIndex]]: the four views are
-    * [[Compaction]] store views, with the build as batch 0. The versioned
-    * `hashes/` view carries the DOC ID beside the text hash —
-    * [[deleteFromCorpusIndex]] needs it to erase a document's hash row
-    * (the flat layout's id-less hashes cannot be deleted by id). Probes
-    * ([[dedupAgainstIndex]]) work unchanged: `batch` reads back as a
-    * partition column the probe simply doesn't select.
+  /** Build the stored dedup index: the derived views of a corpus that
+    * [[dedupAgainst]] actually joins against — `hashes` (doc id, exact-text
+    * hash), `bands` (LSH band keys, partitioned by band so a probe scans
+    * only colliding bands), `shingles` (shingle arrays) and `chunks`
+    * ([[cdcChunkView]]) — as [[Compaction]] store views with the build as
+    * batch 0. At 100 TB this is the production shape: the index is built
+    * (or incrementally ingested) when documents arrive, and each new
+    * batch's dedup cost is then proportional to the BATCH, never the
+    * corpus. The doc id in `hashes` is what lets [[deleteFromCorpusIndex]]
+    * erase a document's hash row. The band view's rebalance shuffles
+    * (band, key, id) band keys — index metadata, never the corpus text.
     */
   def writeCorpusIndexVersioned(docs: DataFrame, dir: String,
       n: Int = 3, numHashes: Int = 64, bands: Int = 16,
@@ -579,24 +559,14 @@ object Dedup {
     * themselves. The [[Compaction.delete]] anti-join rewrite of every
     * view; a post-delete probe is identical to probing an index built
     * from the survivors (spec-pinned — band keys and shingles are
-    * per-document, nothing cross-document to recount). Requires the
-    * versioned layout: the flat [[writeCorpusIndex]] `hashes/` view
-    * carries no doc id to delete by.
+    * per-document, nothing cross-document to recount).
     *
     * @param ids one column `id`; absent ids are ignored (idempotent)
     * @return the new epoch number
     */
   def deleteFromCorpusIndex(spark: org.apache.spark.sql.SparkSession,
-      dir: String, ids: DataFrame): Int = {
-    val views = liveCorpusViews(spark, dir)
-    val del = ids.select(col("id"))
-    Compaction.rewrite(spark, dir, views: _*) { cur =>
-      require(cur(Hashes.name).columns.contains("id"),
-        s"$dir/hashes carries no doc ids (flat writeCorpusIndex layout) — " +
-          "rebuild with writeCorpusIndexVersioned to support deletion")
-      views.map(v => cur(v.name).join(del, Seq("id"), "left_anti"))
-    }
-  }
+      dir: String, ids: DataFrame): Int =
+    Compaction.delete(spark, dir, "id", ids, liveCorpusViews(spark, dir): _*)
 
   /** CDC duplicate-chunk report straight off a stored index's `chunks/`
     * view — [[cdcChunks]]'s q201-shaped output (id, n_chunks, dup_chunks,
@@ -648,18 +618,18 @@ object Dedup {
     case None => view
   }
 
-  /** [[dedupAgainst]] against a stored [[writeCorpusIndex]] — identical
-    * output, corpus-side compute replaced by three parquet scans.
-    * `beforeBatch` restricts the index side to batches < b (versioned
-    * layout only), so a crash-replayed batch probes exactly what its
-    * first attempt probed, even after its own index batch landed.
+  /** [[dedupAgainst]] against a stored [[writeCorpusIndexVersioned]] —
+    * identical output, corpus-side compute replaced by three parquet
+    * scans. `beforeBatch` restricts the index side to batches < b, so a
+    * crash-replayed batch probes exactly what its first attempt probed,
+    * even after its own index batch landed.
     */
   def dedupAgainstIndex(newDocs: DataFrame, dir: String,
       n: Int = 3, numHashes: Int = 64, bands: Int = 16,
       threshold: Double = 0.8, beforeBatch: Option[Long] = None): DataFrame = {
-    // an epoch-resolved read of the flat or versioned layout. Columns are
-    // selected explicitly: the versioned views carry `batch` (and hashes
-    // an `id`) the probe's joins must not capture.
+    // an epoch-resolved read. Columns are selected explicitly: the views
+    // carry `batch` (and hashes an `id`) the probe's joins must not
+    // capture.
     val store = Compaction.snapshot(newDocs.sparkSession, dir)
     dedupAgainstParts(newDocs,
       priorBatches(store("hashes"), beforeBatch).select(col("h")),
@@ -700,8 +670,8 @@ object Dedup {
     * within-batch pairs ([[minhashLshPairs]]) plus (existing, new) cross
     * pairs (band-key candidates verified by exact shingle Jaccard): the
     * EDGE FEED for the incremental clustering ([[ingestIntoCcLabels]]).
-    * `beforeBatch` restricts the index side to batches < b (versioned
-    * layout only) so a crash-replayed batch derives the IDENTICAL pair
+    * `beforeBatch` restricts the index side to batches < b so a
+    * crash-replayed batch derives the IDENTICAL pair
     * set even after its own corpus-index ingest landed — the
     * pre-batch-state contract the CC ingest itself follows.
     */

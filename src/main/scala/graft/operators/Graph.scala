@@ -375,7 +375,7 @@ object Graph {
   /** kNN classification against a FROZEN labeling — [[labelPropagation]]'s
     * serving form: an incoming vector takes the plurality label of its
     * top-k labeled neighbors from a stored
-    * [[Similarity.writeIvfIndex]] index, with EXACTLY the offline
+    * [[Similarity.writeIvfIndexVersioned]] index, with EXACTLY the offline
     * operator's vote semantics (exact integer counts, ties to the
     * SMALLEST label via the negated struct-max, never a window). The
     * labeling is a parquet artifact (id, label) — typically

@@ -1139,7 +1139,7 @@ object Multimodal {
   /** CROSS-MODAL pair dedup — the CLIP/LAION data-cleaning shape: a
     * (caption, image) pair is dropped when EITHER side matches a stored
     * fingerprint — caption md5 against a stored
-    * [[Dedup.writeCorpusIndex]] text index's `hashes/` view, image
+    * [[Dedup.writeCorpusIndexVersioned]] text index's `hashes/` view, image
     * aHash against a stored [[Dedup.writeAHashIndex]] within its frozen
     * hamming radius. Neither modality's operator changes — this is the
     * PAIR-level decision composed over the two existing stores, which

@@ -390,7 +390,7 @@ object Retrieval {
   }
 
   // ===== stored inverted index ============================================
-  // The lexical sibling of Similarity.writeIvfIndex: a production pipeline
+  // The lexical sibling of the stored IVF index: a production pipeline
   // tokenizes the corpus ONCE into a stored posting layout and probes it
   // forever, so per-probe cost must be ∝ the query's term set — never a
   // corpus re-tokenize. Postings are partitioned by a term-hash BUCKET;
@@ -407,29 +407,7 @@ object Retrieval {
   private def termBucket(buckets: Int) =
     pmod(xxhash64(col("term")), lit(buckets.toLong)).cast("int")
 
-  /** Build a stored BM25 index at `dir`: `lists/` = postings partitioned
-    * by term bucket, `stats/` = one (n_docs, tot_dl) summary row,
-    * `meta/` = the bucket count (probes must hash with the same modulus).
-    * Input `terms` as in [[bm25TopK]]: (id, term, tf, dl).
-    */
-  def writeBm25Index(terms: DataFrame, dir: String, buckets: Int): Unit = {
-    val spark = terms.sparkSession
-    writeBm25Meta(spark, dir, buckets)
-    docStats(terms).write.mode("overwrite").parquet(s"$dir/stats")
-    terms.withColumn("bucket", termBucket(buckets))
-      // cluster by bucket before the partitioned write: the narrow write
-      // opened one file per (upstream partition × bucket) — 2,049 files at
-      // sf0.01, paid by EVERY later probe as listing + per-file open cost
-      // (the compacted sibling's 64-file layout probed 2-4× faster); the
-      // AQE rebalance packs each bucket directory to advisory-sized files
-      // at any scale, trading one postings shuffle at build time
-      .hint("rebalance", col("bucket"))
-      .write.mode("overwrite").partitionBy("bucket").parquet(s"$dir/lists")
-    // refresh after an external write (see the Compaction store protocol)
-    spark.catalog.refreshByPath(dir)
-  }
-
-  /** The versioned layout's two store views. */
+  /** The store's two views. */
   private val Bm25Lists = Compaction.View.partitioned("lists", "bucket")
   private val Bm25Stats = Compaction.View("stats")
 
@@ -448,13 +426,11 @@ object Retrieval {
       .agg(count(lit(1)).as("n_docs"),
         coalesce(sum(col("dl")), lit(0L)).as("tot_dl"))
 
-  /** Build a stored BM25 index in the BATCH-VERSIONED layout — the
-    * replay-safe sibling of [[writeBm25Index]]: postings and the summary
-    * row are the [[Compaction]] store's `lists` (bucket-partitioned) and
-    * `stats` views, with the build as batch 0. Probes work unchanged:
-    * `batch` reads back as just another partition column, the probe joins
-    * on (bucket, term), bucket pruning applies across every batch
-    * directory, and stats rows sum across batches.
+  /** Build a stored BM25 index at `dir`: `lists/` = postings partitioned
+    * by term bucket and `stats/` = one (n_docs, tot_dl) summary row, the
+    * [[Compaction]] store's two views with the build as batch 0, plus
+    * `meta/` = the bucket count (probes must hash with the same modulus).
+    * Input `terms` as in [[bm25TopK]]: (id, term, tf, dl).
     */
   def writeBm25IndexVersioned(terms: DataFrame, dir: String,
       buckets: Int): Unit = {
@@ -538,8 +514,8 @@ object Retrieval {
       Seq(survivors, docStats(survivors))
     }
 
-  /** BM25 top-k per query against a stored index ([[writeBm25Index]] or
-    * the versioned layout): the query frame broadcasts into a
+  /** BM25 top-k per query against a stored [[writeBm25IndexVersioned]]
+    * index: the query frame broadcasts into a
     * (bucket, term) join whose dynamic partition pruning opens only the
     * probed buckets; df comes from the pruned postings themselves and
     * corpus stats from the summed summary rows. Identical output to

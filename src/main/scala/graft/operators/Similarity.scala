@@ -32,25 +32,17 @@ object Similarity {
     java.util.concurrent.ConcurrentHashMap.newKeySet[(String, Int, Int, Long)]()
 
   /** Cheap content fingerprint of a small artifact directory: fold of
-    * (path, mtime, length) over its files. A driver-side listing — far
-    * cheaper than the parquet count job the cache exists to skip — that
-    * changes whenever any file is rewritten, added, or removed.
+    * (name, mtime, length) over its data files ([[Compaction.dataFiles]]).
+    * A driver-side listing — far cheaper than the parquet count job the
+    * cache exists to skip — that changes whenever any file is rewritten,
+    * added, or removed.
     */
   private def artifactFingerprint(spark: org.apache.spark.sql.SparkSession,
-      dir: String): Long = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) return 0L
-    val it = fs.listFiles(p, true)
-    var h = 1125899906842597L
-    while (it.hasNext) {
-      val f = it.next()
-      h = h * 31 + f.getPath.getName.hashCode
-      h = h * 31 + f.getModificationTime
-      h = h * 31 + f.getLen
+      dir: String): Long =
+    Compaction.dataFiles(spark, dir).foldLeft(1125899906842597L) { (h, f) =>
+      ((h * 31 + f.getPath.getName.hashCode) * 31 + f.getModificationTime) *
+        31 + f.getLen
     }
-    h
-  }
 
   /** Cosine similarity of two float-array columns, computed in double via
     * the native kernel (graft.functions.CosineFExpr) — bit-identical to the
@@ -335,33 +327,7 @@ object Similarity {
     rankTopK(scored, k)
   }
 
-  /** Build a STORED IVF index: the production retrieval shape — build
-    * once, probe forever (the similarity sibling of
-    * [[Dedup.writeCorpusIndex]]). Two parquet views under `dir`:
-    *
-    *  - `centroids/`: (cent_id, cvec) — the deterministic training-free
-    *    coarse quantizer (first `nCells` corpus vectors), tiny;
-    *  - `lists/`: (vec_id, embedding) PARTITIONED BY `cell` — each
-    *    vector's max-cosine cell assignment, i.e. the inverted lists as
-    *    physical partition directories.
-    *
-    * The cell-partitioned layout is what makes the probe cost ∝ batch:
-    * a probe joins the lists scan on `cell` against a broadcast of the
-    * query batch's probed cells, so dynamic partition pruning opens ONLY
-    * the probed cells' directories — the corpus's other inverted lists
-    * are never read (the same mechanism as the DPP PlanShapeSpec pin).
-    * Build cost is one broadcast-score pass + one partitioned write;
-    * rebuilds are overwrite-idempotent.
-    */
-  def writeIvfIndex(corpus: DataFrame, dir: String, nCells: Int,
-      trainIters: Int = 0, trainSampleMod: Int = 1): Unit = {
-    ivfAssign(corpus, ivfCentroids(corpus, dir, nCells, trainIters, trainSampleMod))
-      .hint("rebalance", col("cell")) // see Compaction.View.partitioned
-      .write.mode("overwrite").partitionBy("cell").parquet(s"$dir/lists")
-    corpus.sparkSession.catalog.refreshByPath(dir)
-  }
-
-  /** The IVF lists view of the versioned layout. */
+  /** The IVF store's lists view. */
   private val IvfLists = Compaction.View.partitioned("lists", "cell")
 
   /** Train (or pick) and store the coarse quantizer. trainIters = 0 →
@@ -388,14 +354,24 @@ object Similarity {
     narrowBestCell(vectors, cents, "vec_id", "embedding")
       .withColumn("cell", col("cell").cast("int"))
 
-  /** Build a stored IVF index in the BATCH-VERSIONED layout — the
-    * replay-safe sibling of [[writeIvfIndex]] for indexes that will be fed
-    * by a (possibly replaying) producer: the inverted lists are the
-    * [[Compaction]] store's `lists` view, `lists/batch=<id>/cell=<c>/`,
-    * with the build as batch 0. Probes ([[ivfTopKAgainstIndex]]) work
-    * unchanged: partition discovery reads `batch` as just another
-    * partition column, the probe joins on `cell`, and cell-directory
-    * pruning applies across every batch directory.
+  /** Build a STORED IVF index: the production retrieval shape — build
+    * once, probe forever (the similarity sibling of
+    * [[Dedup.writeCorpusIndexVersioned]]). Under `dir`:
+    *
+    *  - `centroids/`: (cent_id, cvec) — the coarse quantizer, tiny;
+    *  - `lists/`: the [[Compaction]] store's view of (vec_id, embedding)
+    *    at `lists/batch=<id>/cell=<c>/` — each vector's max-cosine cell
+    *    assignment, i.e. the inverted lists as physical partition
+    *    directories. The build is batch 0; ingests
+    *    ([[ingestIntoIvfIndex]]) add batches.
+    *
+    * The cell-partitioned layout is what makes the probe cost ∝ batch:
+    * a probe joins the lists scan on `cell` against a broadcast of the
+    * query batch's probed cells, so dynamic partition pruning opens ONLY
+    * the probed cells' directories in every batch — the corpus's other
+    * inverted lists are never read (the DPP PlanShapeSpec pin). Build
+    * cost is one broadcast-score pass + one partitioned write; a rebuild
+    * at the same `dir` overwrites batch 0.
     */
   def writeIvfIndexVersioned(corpus: DataFrame, dir: String, nCells: Int,
       trainIters: Int = 0, trainSampleMod: Int = 1): Unit =
@@ -454,10 +430,11 @@ object Similarity {
       dir: String, ids: DataFrame): Int =
     Compaction.delete(spark, dir, "vec_id", ids, IvfLists)
 
-  /** Probe a stored [[writeIvfIndex]]: per-query top-k over the `nProbe`
-    * best cells' inverted lists, identical semantics (and identical
-    * result) to running [[ivfTopK]] against the full corpus with the same
-    * parameters — the index just amortizes the assignment. Per-batch
+  /** Probe a stored [[writeIvfIndexVersioned]] index: per-query top-k
+    * over the `nProbe` best cells' inverted lists, identical semantics
+    * (and identical result) to running [[ivfTopK]] against the full corpus
+    * with the same parameters — the index just amortizes the assignment.
+    * Per-batch
     * cost: one broadcast-score pass of the BATCH against the tiny stored
     * centroids + a partition-pruned scan of the probed cells only.
     */
@@ -919,7 +896,7 @@ object Similarity {
 
   /** Build a PQ-compressed stored IVF index (IVFADC + refine layout):
     *
-    *  - `centroids/`: the coarse quantizer (as [[writeIvfIndex]]);
+    *  - `centroids/`: the coarse quantizer (as [[writeIvfIndexVersioned]]);
     *  - `codebooks/`: (m, code, cvec) — M per-subspace L2 codebooks,
     *    trained distributed ([[pqCodebooks]]), a tiny model artifact;
     *  - `codes/` PARTITIONED BY `cell`: (vec_id, codes) — the scanned

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.CacheScope.ScopedPersist
 
-import graft.Tables
+import graft.{RunCache, Tables}
 import graft.operators.{Dedup, Graph, Html, Multimodal, Retrieval, Similarity, TextOps, Unigram, Warc}
 
 /** Training-data pipeline queries (SURVEY.md §7.2 step 6): dedup, similarity
@@ -23,59 +23,14 @@ object Pipeline {
 
   private def wrap(f: Tables => DataFrame): Q = (s, dir) => f(Tables(s, dir))
 
-  // ===== stored-index fixture cache ========================================
-  // The stored-index gate rows (q83/q145/q146/q154/q155) build an index
-  // once per fixture and probe it on every later call. The cache dir is
-  // CONTENT-addressed — keyed on a fingerprint of the fixture's parquet
-  // files (name, size, mtime), not just its path — so regenerating a
-  // fixture at the same path can never silently reuse a stale index; and
-  // the build is ATOMIC — it writes into a fresh temp dir and renames into
-  // place — so two concurrent twins can't interleave a non-idempotent
-  // build+append sequence (one wins the rename, the loser discards its
-  // temp and probes the winner's complete dir). Dir presence at the final
-  // path IS the completeness marker; no post-hoc marker files.
-
-  /** (name, size, mtime) of every *.parquet under srcDir, md5-folded. */
-  private def fixtureFingerprint(srcDir: String): String = {
-    val files = Option(new java.io.File(srcDir).listFiles())
-      .getOrElse(Array.empty[java.io.File])
-      .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
-    val sig = files.map(f => s"${f.getName}:${f.length}:${f.lastModified}")
-      .mkString("|")
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(sig.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      .take(6).map(b => f"$b%02x").mkString
-  }
-
-  private def deleteRec(p: java.io.File): Unit = {
-    Option(p.listFiles()).getOrElse(Array.empty[java.io.File]).foreach(deleteRec)
-    p.delete()
-  }
-
-  /** Return the cached index dir for (fixture srcDir, tag), running `build`
-    * into a temp dir + atomic rename if absent. `tag` carries the layout
-    * version + parameters — bump it on any format change.
-    */
-  private[queries] def cachedIndexDir(srcDir: String, tag: String)(
-      build: String => Unit): String = {
-    val base = s"${System.getProperty("java.io.tmpdir")}/graft_${tag}_" +
-      fixtureFingerprint(srcDir)
-    val dest = new java.io.File(base)
-    if (dest.isDirectory) return base
-    val tmp = new java.io.File(
-      base + ".tmp-" + java.util.UUID.randomUUID.toString.take(8))
-    build(tmp.getPath)
-    try java.nio.file.Files.move(tmp.toPath, dest.toPath,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    catch {
-      // a concurrent twin won the rename; its dir is complete by
-      // construction (the rename IS the commit point) — discard ours
-      case _: java.nio.file.FileAlreadyExistsException |
-           _: java.nio.file.FileSystemException => deleteRec(tmp)
-    }
-    require(dest.isDirectory, s"index build produced no dir at $base")
-    base
-  }
+  // ===== derived-artifact cache ===========================================
+  // Stored indexes and trained models (q83/q145/q154, the tokenizer and
+  // LM families, …) are built once per fixture and JVM through
+  // [[graft.RunCache.dir]], keyed by (fixture dir, tag), and probed on every
+  // later call. The cache lives as long as the JVM: concurrent callers of
+  // one tag share one build, a build that throws is retried by the next
+  // call, and nothing is reused across processes, so a tag names WHAT is
+  // built (family + parameters) and never carries a format version.
 
   // ===== shared SQL fragments (must mirror the Scala operators exactly) ====
 
@@ -1506,8 +1461,8 @@ object Pipeline {
     val e = graft.Fanout(t.embeddings)
     val queries = e.filter(col("vec_id") % QueryMod === 0)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_vec"))
-    val dir = cachedIndexDir(t.dir, s"ivf_index_v3_$IvfCells")(
-      Similarity.writeIvfIndex(e, _, IvfCells))
+    val dir = RunCache.dir(t.dir, s"ivf_index_$IvfCells")(
+      Similarity.writeIvfIndexVersioned(e, _, IvfCells))
     Similarity.ivfTopKAgainstIndex(queries, dir, IvfProbe, TopK)
   }
 
@@ -1526,9 +1481,8 @@ object Pipeline {
     val e = graft.Fanout(t.embeddings)
     val queries = e.filter(col("vec_id") % QueryMod === 0)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_vec"))
-    // cachedIndexDir's temp-dir + atomic-rename makes the build+ingest
-    // pair all-or-nothing
-    val dir = cachedIndexDir(t.dir, s"ivf_inc_v4_$IvfCells") { d =>
+    // the build+ingest pair is one cached build: all-or-nothing
+    val dir = RunCache.dir(t.dir, s"ivf_inc_$IvfCells") { d =>
       // initial slice keeps vec_id < IvfCells so the frozen centroids
       // equal the full-corpus centroids; the batch is everything else
       val initial = e.filter(col("vec_id") < IvfCells || col("vec_id") % 10 =!= 7)
@@ -1555,7 +1509,7 @@ object Pipeline {
     val e = graft.Fanout(t.embeddings)
     val queries = e.filter(col("vec_id") % QueryMod === 0)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_vec"))
-    val dir = cachedIndexDir(t.dir, s"ivf_compact_v2_$IvfCells") { d =>
+    val dir = RunCache.dir(t.dir, s"ivf_compact_$IvfCells") { d =>
       val initial = e.filter(col("vec_id") < IvfCells || col("vec_id") % 10 =!= 7)
       val batch = e.filter(col("vec_id") >= IvfCells && col("vec_id") % 10 === 7)
       Similarity.writeIvfIndexVersioned(initial, d, IvfCells)
@@ -1586,7 +1540,7 @@ object Pipeline {
     val e = graft.Fanout(t.embeddings)
     val queries = e.filter(col("vec_id") % QueryMod === 0)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_vec"))
-    val dir = cachedIndexDir(t.dir, s"ivf_pq_v3_${IvfCells}_${PqM}_$PqCodes")(
+    val dir = RunCache.dir(t.dir, s"ivf_pq_${IvfCells}_${PqM}_$PqCodes")(
       d => Similarity.writeIvfIndexPQ(e, d, IvfCells, PqM, PqCodes,
         trainIters = 0))
     Similarity.ivfTopKAgainstIndexPQ(queries, dir, IvfProbe, TopK, PqShort)
@@ -1748,7 +1702,7 @@ object Pipeline {
     val e = graft.Fanout(t.embeddings)
     val queries = e.filter(col("vec_id") % QueryMod === 0)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_vec"))
-    val dir = cachedIndexDir(t.dir, s"ivf_pqr_v2_${IvfCells}_${PqM}_$PqCodes")(
+    val dir = RunCache.dir(t.dir, s"ivf_pqr_${IvfCells}_${PqM}_$PqCodes")(
       d => Similarity.writeIvfIndexPQR(e, d, IvfCells, PqM, PqCodes,
         trainIters = 0))
     Similarity.ivfTopKAgainstIndexPQR(queries, dir, IvfProbe, TopK, PqShort)
@@ -1931,11 +1885,11 @@ object Pipeline {
 
   private def q172(t: Tables): DataFrame = {
     val spark = t.documents.sparkSession
-    val dir = cachedIndexDir(t.dir, s"bm25_del_v2_$BmBuckets") { d =>
+    val dir = RunCache.dir(t.dir, s"bm25_del_$BmBuckets") { d =>
       val tf = bigramTf(t).persistScoped() // full corpus: the build input
       Retrieval.writeBm25IndexVersioned(tf, d, BmBuckets)
-      // build+delete is non-idempotent — cachedIndexDir's temp-dir +
-      // atomic-rename makes the pair all-or-nothing
+      // build+delete is non-idempotent — as one cached build the pair
+      // is all-or-nothing
       Retrieval.deleteFromBm25Index(spark, d,
         tf.filter(delDocPred).select(col("id")).distinct())
     }
@@ -1978,7 +1932,7 @@ object Pipeline {
     val delPred = col("vec_id") >= IvfCells && col("vec_id") % 10 === 6
     val queries = e.filter(col("vec_id") % QueryMod === 0)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_vec"))
-    val dir = cachedIndexDir(t.dir, s"ivf_del_v2_$IvfCells") { d =>
+    val dir = RunCache.dir(t.dir, s"ivf_del_$IvfCells") { d =>
       Similarity.writeIvfIndexVersioned(e, d, IvfCells)
       Similarity.deleteFromIvfIndex(e.sparkSession, d,
         e.filter(delPred).select(col("vec_id")))
@@ -2106,18 +2060,14 @@ object Pipeline {
 
   // ===== q176 stored-LM-model scoring ====================================
   // q175's production form: the pruned model TRAINS ONCE into a parquet
-  // artifact (vocab + bigrams — the writeBm25Index/writeIvfIndex
-  // discipline applied to a model) and serving loads-and-broadcasts it.
+  // artifact (vocab + bigrams — the stored BM25/IVF index discipline
+  // applied to a model) and serving loads-and-broadcasts it.
   // Exact integer counts round-trip parquet losslessly, so
   // stored-and-scored must equal freshly-trained — q175's oracle applies
   // verbatim, which is exactly the model-integrity contract.
 
   private def q176(t: Tables): DataFrame = {
-    val dir = cachedIndexDir(t.dir, s"lm_model_v1_${LmMaxV}_$LmMaxB") { d =>
-      TextOps.writeLmModel(
-        graft.Fanout(t.documents.filter(col("doc_id") % 10 === 0)),
-        col("doc_id"), col("text"), LmMaxV, LmMaxB, d)
-    }
+    val dir = lmModelDir(t)
     TextOps.lmScoreAgainstModel(graft.Fanout(t.documents), col("doc_id"),
       col("text"), dir, LmLambda, LmPplThresh)
   }
@@ -2187,10 +2137,10 @@ object Pipeline {
     val d = graft.Fanout(t.documents.select(col("doc_id").as("id"), col("text")))
     val existing = d.filter(col("id") % 10 =!= 7)
     val spark = t.documents.sparkSession
-    // build+ingest+compact+delete is non-idempotent as a sequence —
-    // cachedIndexDir's temp-dir + atomic-rename makes it all-or-nothing
-    val dir = cachedIndexDir(t.dir,
-      s"corpus_lifecycle_v2_3_${MinHashes}_$Bands") { dd =>
+    // build+ingest+compact+delete is non-idempotent as a sequence — as
+    // one cached build it is all-or-nothing
+    val dir = RunCache.dir(t.dir,
+      s"corpus_lifecycle_3_${MinHashes}_$Bands") { dd =>
       Dedup.writeCorpusIndexVersioned(
         existing.filter(col("id") % 10 =!= 5), dd, 3, MinHashes, Bands)
       Dedup.ingestIntoCorpusIndex(
@@ -2242,8 +2192,8 @@ object Pipeline {
   private def q179(t: Tables): DataFrame = {
     val spark = t.documents.sparkSession
     val label = array_contains(split(lower(col("text")), """\s+"""), "dup")
-    val dir = cachedIndexDir(t.dir,
-      s"cls_model_v2_${ClsTrainDim}_${ClsIters}_${ClsLrNum}_$ClsLrDen") { d =>
+    val dir = RunCache.dir(t.dir,
+      s"cls_model_${ClsTrainDim}_${ClsIters}_${ClsLrNum}_$ClsLrDen") { d =>
       TextOps.writeLinearModel(spark,
         TextOps.trainHashedLinear(graft.Fanout(t.documents), col("doc_id"),
           col("text"), label.cast("int"), ClsTrainDim, ClsIters,
@@ -2346,7 +2296,7 @@ object Pipeline {
 
   private def q181(t: Tables): DataFrame = {
     val spark = t.documents.sparkSession
-    val dir = cachedIndexDir(t.dir, s"bpe_model_v1_$BpeRounds") { d =>
+    val dir = RunCache.dir(t.dir, s"bpe_model_$BpeRounds") { d =>
       TextOps.writeBpeModel(
         TextOps.bpeMerges(graft.Fanout(t.documents), col("text"), BpeRounds,
           requireFull = true), d)
@@ -2373,8 +2323,8 @@ object Pipeline {
   private def q182(t: Tables): DataFrame = {
     val spark = t.documents.sparkSession
     val label = array_contains(split(lower(col("text")), """\s+"""), "dup")
-    val dir = cachedIndexDir(t.dir,
-      s"cls_eval_model_v1_${ClsTrainDim}_${ClsIters}_${ClsLrNum}_$ClsLrDen") { d =>
+    val dir = RunCache.dir(t.dir,
+      s"cls_eval_model_${ClsTrainDim}_${ClsIters}_${ClsLrNum}_$ClsLrDen") { d =>
       TextOps.writeLinearModel(spark,
         TextOps.trainHashedLinear(
           graft.Fanout(t.documents.filter(col("doc_id") % 3 =!= 0)),
@@ -2870,8 +2820,8 @@ object Pipeline {
     val d = graft.Fanout(t.documents.select(col("doc_id").as("id"),
       col("text")))
     val spark = t.documents.sparkSession
-    val dir = cachedIndexDir(t.dir,
-      s"cdc_lifecycle_v2_${CdcW}_$CdcM") { dd =>
+    val dir = RunCache.dir(t.dir,
+      s"cdc_lifecycle_${CdcW}_$CdcM") { dd =>
       Dedup.writeCorpusIndexVersioned(d.filter(col("id") % 10 =!= 5), dd,
         3, MinHashes, Bands, CdcW, CdcM)
       Dedup.ingestIntoCorpusIndex(d.filter(col("id") % 10 === 5), dd, 1L,
@@ -3108,11 +3058,7 @@ object Pipeline {
   // contract on the KN serving path.
 
   private def q212(t: Tables): DataFrame = {
-    val dir = cachedIndexDir(t.dir, s"lm_model_v1_${LmMaxV}_$LmMaxB") { d =>
-      TextOps.writeLmModel(
-        graft.Fanout(t.documents.filter(col("doc_id") % 10 === 0)),
-        col("doc_id"), col("text"), LmMaxV, LmMaxB, d)
-    }
+    val dir = lmModelDir(t)
     TextOps.knScoreAgainstModel(graft.Fanout(t.documents), col("doc_id"),
       col("text"), dir, KnPplThresh)
   }
@@ -3203,7 +3149,7 @@ object Pipeline {
        |  (round(exp(h), 4) <= $Kn3PplThresh) AS keep FROM g""".stripMargin
 
   private def q247(t: Tables): DataFrame = {
-    val dir = cachedIndexDir(t.dir, s"lm3_model_v1_${LmMaxV}_$Lm3MaxT") { d =>
+    val dir = RunCache.dir(t.dir, s"lm3_model_${LmMaxV}_$Lm3MaxT") { d =>
       TextOps.writeLm3Model(
         graft.Fanout(t.documents.filter(col("doc_id") % 10 === 0)),
         col("doc_id"), col("text"), LmMaxV, Lm3MaxT, d)
@@ -3232,7 +3178,7 @@ object Pipeline {
       col("text"), col("doc_id") % 10 === 0, LmMaxV, Lm5MaxT, Kn5PplThresh)
 
   private def q255(t: Tables): DataFrame = {
-    val dir = cachedIndexDir(t.dir, s"lm5_model_v1_${LmMaxV}_$Lm5MaxT") { d =>
+    val dir = RunCache.dir(t.dir, s"lm5_model_${LmMaxV}_$Lm5MaxT") { d =>
       TextOps.writeLm5Model(
         graft.Fanout(t.documents.filter(col("doc_id") % 10 === 0)),
         col("doc_id"), col("text"), LmMaxV, Lm5MaxT, d)
@@ -3351,12 +3297,12 @@ object Pipeline {
   private val PairStoreOffset = 1000000L
 
   private def q256(t: Tables): DataFrame = {
-    val textDir = cachedIndexDir(t.dir, "pair_text_idx_v2") { d =>
-      Dedup.writeCorpusIndex(
+    val textDir = RunCache.dir(t.dir, "pair_text_idx") { d =>
+      Dedup.writeCorpusIndexVersioned(
         t.documents.filter(col("doc_id") % 4 === 0)
           .select(col("doc_id").as("id"), col("text")), d)
     }
-    val imgDir = cachedIndexDir(t.dir, s"pair_img_idx_v1_$AHashGroups") { d =>
+    val imgDir = RunCache.dir(t.dir, s"pair_img_idx_$AHashGroups") { d =>
       Dedup.writeAHashIndex(
         Multimodal.decodeImageAHash(
           Multimodal.withImageVariantColumn(
@@ -4057,7 +4003,7 @@ object Pipeline {
     val e = graft.Fanout(t.embeddings)
     val queries = e.filter(col("vec_id") % QueryMod === 0)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_vec"))
-    val dir = cachedIndexDir(t.dir, s"ivf_sq8_v2_$IvfCells")(
+    val dir = RunCache.dir(t.dir, s"ivf_sq8_$IvfCells")(
       d => Similarity.writeIvfIndexSQ(e, d, IvfCells))
     Similarity.ivfTopKAgainstIndexSQ(queries, dir, IvfProbe, TopK, SqShort)
   }
@@ -4076,7 +4022,7 @@ object Pipeline {
 
   private def q219(t: Tables): DataFrame = {
     val spark = t.documents.sparkSession
-    val dir = cachedIndexDir(t.dir, "cc_labels_v1") { d =>
+    val dir = RunCache.dir(t.dir, "cc_labels") { d =>
       val docs = graft.Fanout(
         t.documents.select(col("doc_id").as("id"), col("text")))
       val pairs = Dedup.minhashLshPairs(docs, 3, MinHashes, Bands, CorpusT)
@@ -4106,11 +4052,7 @@ object Pipeline {
 
   private def q218(t: Tables): DataFrame = {
     val spark = t.documents.sparkSession
-    val bpeDir = cachedIndexDir(t.dir, s"bpe_byte_model_v1_$BpeRounds") { d =>
-      TextOps.writeBpeModel(
-        TextOps.bpeMergesByteLevel(graft.Fanout(t.documents), col("text"),
-          BpeRounds, requireFull = true), d)
-    }
+    val bpeDir = bpeByteModelDir(t)
     val merges = TextOps.loadBpeMerges(spark, bpeDir)
     // tokenize the VOCAB once (the q157/q183 cost shape), flatten per doc
     val dt = TextOps.byteTokDocs(graft.Fanout(t.documents), merges)
@@ -4210,8 +4152,8 @@ object Pipeline {
 
   private def q224(t: Tables): DataFrame = {
     val spark = t.documents.sparkSession
-    val dir = cachedIndexDir(t.dir,
-      s"uni_byte_model_v1_${UniSeedTopK}_$UniRounds") { d =>
+    val dir = RunCache.dir(t.dir,
+      s"uni_byte_model_${UniSeedTopK}_$UniRounds") { d =>
       Unigram.writeModel(spark,
         Unigram.trainPiecesFrom(
           Unigram.wordTableByteLevel(graft.Fanout(t.documents), col("text")),
@@ -4242,12 +4184,7 @@ object Pipeline {
 
   private def q225(t: Tables): DataFrame = {
     val spark = t.documents.sparkSession
-    val dir = cachedIndexDir(t.dir, s"wp_model_v1_$WpRounds") { d =>
-      TextOps.writeWordPieceModel(
-        TextOps.wordPieceWordTable(graft.Fanout(t.documents), col("text")),
-        TextOps.wordPieceMerges(graft.Fanout(t.documents), col("text"),
-          WpRounds, requireFull = true), d)
-    }
+    val dir = wpModelDir(t)
     TextOps.wordPieceRoundTrip(graft.Fanout(t.documents), col("doc_id"),
       col("text"), TextOps.loadWordPieceVocab(spark, dir))
       .select(col("id").as("doc_id"), col("n_pretokens"),
@@ -4278,13 +4215,9 @@ object Pipeline {
   private def tokenIdShards(t: Tables, eos: Option[Long],
       interleave: Boolean = false): DataFrame = {
     val spark = t.documents.sparkSession
-    val bpeDir = cachedIndexDir(t.dir, s"bpe_byte_model_v1_$BpeRounds") { d =>
-      TextOps.writeBpeModel(
-        TextOps.bpeMergesByteLevel(graft.Fanout(t.documents), col("text"),
-          BpeRounds, requireFull = true), d)
-    }
+    val bpeDir = bpeByteModelDir(t)
     val merges = TextOps.loadBpeMerges(spark, bpeDir)
-    val vocabDir = cachedIndexDir(t.dir, s"bpe_vocab_ids_v1_$BpeRounds") { d =>
+    val vocabDir = RunCache.dir(t.dir, s"bpe_vocab_ids_$BpeRounds") { d =>
       TextOps.writeBpeVocabIds(spark,
         TextOps.bpeVocabIdsByteLevel(merges), d)
     }
@@ -4412,11 +4345,10 @@ object Pipeline {
 
   private def langIdModelDir(t: Tables, trainAll: Boolean): String = {
     val spark = t.documents.sparkSession
-    // v2: the trainAll artifact gained the gate/ quantile (stored τ)
     val (tag, slice) =
-      if (trainAll) ("langid_model_v2", t.documents)
-      else ("langid_eval_model_v1", t.documents.filter(col("doc_id") % 3 =!= 0))
-    cachedIndexDir(t.dir,
+      if (trainAll) ("langid_model", t.documents)
+      else ("langid_eval_model", t.documents.filter(col("doc_id") % 3 =!= 0))
+    RunCache.dir(t.dir,
       s"${tag}_${LangDim}_${LangIters}_${LangLrNum}_$LangLrDen") { d =>
       TextOps.writeLangIdModel(spark,
         TextOps.trainHashedLangId(graft.Fanout(slice), col("doc_id"),
@@ -4429,6 +4361,52 @@ object Pipeline {
           col("text"), d, LangGateProb, d)
     }
   }
+
+  /** The word-level bigram LM (q176's stored model), trained on the
+    * doc_id % 10 = 0 slice.
+    */
+  private def lmModelDir(t: Tables): String =
+    RunCache.dir(t.dir, s"lm_model_${LmMaxV}_$LmMaxB") { d =>
+      TextOps.writeLmModel(
+        graft.Fanout(t.documents.filter(col("doc_id") % 10 === 0)),
+        col("doc_id"), col("text"), LmMaxV, LmMaxB, d)
+    }
+
+  /** The byte-level BPE merges, trained on the full corpus. */
+  private def bpeByteModelDir(t: Tables): String =
+    RunCache.dir(t.dir, s"bpe_byte_model_$BpeRounds") { d =>
+      TextOps.writeBpeModel(
+        TextOps.bpeMergesByteLevel(graft.Fanout(t.documents), col("text"),
+          BpeRounds, requireFull = true), d)
+    }
+
+  /** The WordPiece vocabulary, trained on the full corpus. */
+  private def wpModelDir(t: Tables): String =
+    RunCache.dir(t.dir, s"wp_model_$WpRounds") { d =>
+      TextOps.writeWordPieceModel(
+        TextOps.wordPieceWordTable(graft.Fanout(t.documents), col("text")),
+        TextOps.wordPieceMerges(graft.Fanout(t.documents), col("text"),
+          WpRounds, requireFull = true), d)
+    }
+
+  /** The word-level Unigram pieces, trained on the full corpus. */
+  private def uniModelDir(t: Tables): String =
+    RunCache.dir(t.dir, s"uni_model_${UniSeedTopK}_$UniRounds") { d =>
+      Unigram.writeModel(t.documents.sparkSession,
+        Unigram.trainPieces(graft.Fanout(t.documents), col("text"),
+          UniSeedTopK, UniRounds), d)
+    }
+
+  /** The langid drift reference: the trainAll model's predictions over
+    * the doc_id % 3 ≠ 0 slice.
+    */
+  private def langIdRefDir(t: Tables): String =
+    RunCache.dir(t.dir,
+      s"langid_ref_${LangDim}_${LangIters}_${LangLrNum}_$LangLrDen") { d =>
+      TextOps.writeLangIdReference(
+        graft.Fanout(t.documents.filter(col("doc_id") % 3 =!= 0)),
+        col("doc_id"), col("text"), langIdModelDir(t, trainAll = true), d)
+    }
 
   private def q227(t: Tables): DataFrame =
     TextOps.langIdScoreAgainstModel(graft.Fanout(t.documents),
@@ -4605,12 +4583,7 @@ object Pipeline {
 
   private def q231(t: Tables): DataFrame = {
     val modelDir = langIdModelDir(t, trainAll = true)
-    val refDir = cachedIndexDir(t.dir,
-      s"langid_ref_v1_${LangDim}_${LangIters}_${LangLrNum}_$LangLrDen") { d =>
-      TextOps.writeLangIdReference(
-        graft.Fanout(t.documents.filter(col("doc_id") % 3 =!= 0)),
-        col("doc_id"), col("text"), modelDir, d)
-    }
+    val refDir = langIdRefDir(t)
     TextOps.langIdDriftReport(
       graft.Fanout(t.documents.filter(col("doc_id") % 3 === 0)),
       col("doc_id"), col("text"), modelDir, refDir)
@@ -4670,12 +4643,7 @@ object Pipeline {
 
   private def q249(t: Tables): DataFrame = {
     val modelDir = langIdModelDir(t, trainAll = true)
-    val refDir = cachedIndexDir(t.dir,
-      s"langid_ref_v1_${LangDim}_${LangIters}_${LangLrNum}_$LangLrDen") { d =>
-      TextOps.writeLangIdReference(
-        graft.Fanout(t.documents.filter(col("doc_id") % 3 =!= 0)),
-        col("doc_id"), col("text"), modelDir, d)
-    }
+    val refDir = langIdRefDir(t)
     val mon = t.documents.filter(col("doc_id") % 3 === 0)
     val inDist = mon.select(expr("(doc_id div 3) % 8").as("batch"),
       col("doc_id"), col("text"))
@@ -4888,7 +4856,7 @@ object Pipeline {
       .select(col("doc_id").as("id"), col("ah_hi"), col("ah_lo"))
 
   private def q236(t: Tables): DataFrame = {
-    val dir = cachedIndexDir(t.dir, s"ahash_idx_v1_$AHashGroups") { d =>
+    val dir = RunCache.dir(t.dir, s"ahash_idx_$AHashGroups") { d =>
       Dedup.writeAHashIndex(ahashFingerprints(t, col("doc_id") % 10 =!= 5), d)
       Dedup.ingestIntoAHashIndex(
         ahashFingerprints(t, col("doc_id") % 10 === 5), d, batchId = 1)
@@ -5198,7 +5166,7 @@ object Pipeline {
 
   private def q242(t: Tables): DataFrame = {
     val spark = t.documents.sparkSession
-    val dir = cachedIndexDir(t.dir, "tagger_attrs_v3") { d =>
+    val dir = RunCache.dir(t.dir, "tagger_attrs") { d =>
       TextOps.taggerTable(graft.Fanout(t.documents), col("doc_id"),
           col("text"), BlockList, BlockTau, TagPiiMax,
           RepMaxTok, RepMaxBigram, RepMinTtr, TagMinStopword, TagGopher)
@@ -5236,7 +5204,7 @@ object Pipeline {
         col("af_lo").as("ah_lo"))
 
   private def q243(t: Tables): DataFrame = {
-    val dir = cachedIndexDir(t.dir, s"ahash_audio_idx_v1_$AudioGroups") { d =>
+    val dir = RunCache.dir(t.dir, s"ahash_audio_idx_$AudioGroups") { d =>
       Dedup.writeAHashIndex(audioFps(t, col("doc_id") % 10 =!= 5), d)
       Dedup.ingestIntoAHashIndex(
         audioFps(t, col("doc_id") % 10 === 5), d, batchId = 1)
@@ -5984,12 +5952,7 @@ object Pipeline {
 
   private def q216(t: Tables): DataFrame = {
     val spark = t.documents.sparkSession
-    val dir = cachedIndexDir(t.dir, s"wp_model_v1_$WpRounds") { d =>
-      TextOps.writeWordPieceModel(
-        TextOps.wordPieceWordTable(graft.Fanout(t.documents), col("text")),
-        TextOps.wordPieceMerges(graft.Fanout(t.documents), col("text"),
-          WpRounds, requireFull = true), d)
-    }
+    val dir = wpModelDir(t)
     val wt = TextOps.wordPieceWordTable(graft.Fanout(t.documents), col("text"))
     TextOps.wordPieceTokens(wt.select(col("w")).distinct(),
       TextOps.loadWordPieceVocab(spark, dir))
@@ -6065,12 +6028,7 @@ object Pipeline {
 
   private def q204(t: Tables): DataFrame = {
     val spark = t.documents.sparkSession
-    val dir = cachedIndexDir(t.dir,
-      s"uni_model_v1_${UniSeedTopK}_$UniRounds") { d =>
-      Unigram.writeModel(spark,
-        Unigram.trainPieces(graft.Fanout(t.documents), col("text"),
-          UniSeedTopK, UniRounds), d)
-    }
+    val dir = uniModelDir(t)
     Unigram.tokenize(
       Unigram.wordTable(graft.Fanout(t.documents), col("text")),
       Unigram.loadModel(spark, dir))
@@ -6086,20 +6044,11 @@ object Pipeline {
 
   private def q205(t: Tables): DataFrame = {
     val spark = t.documents.sparkSession
-    val bpeDir = cachedIndexDir(t.dir, s"bpe_byte_model_v1_$BpeRounds") { d =>
-      TextOps.writeBpeModel(
-        TextOps.bpeMergesByteLevel(graft.Fanout(t.documents), col("text"),
-          BpeRounds, requireFull = true), d)
-    }
+    val bpeDir = bpeByteModelDir(t)
     val bpe = TextOps.bpeTokenCountsByteLevel(graft.Fanout(t.documents),
       col("doc_id"), col("text"), TextOps.loadBpeMerges(spark, bpeDir))
       .select(col("id").as("doc_id"), col("n_tokens").as("bpe_tok"))
-    val uniDir = cachedIndexDir(t.dir,
-      s"uni_model_v1_${UniSeedTopK}_$UniRounds") { d =>
-      Unigram.writeModel(spark,
-        Unigram.trainPieces(graft.Fanout(t.documents), col("text"),
-          UniSeedTopK, UniRounds), d)
-    }
+    val uniDir = uniModelDir(t)
     val uni = Unigram.docTokenCounts(graft.Fanout(t.documents),
         col("doc_id"), col("text"), Unigram.loadModel(spark, uniDir))
       .withColumnRenamed("n_tokens", "uni_tok")
@@ -6551,8 +6500,8 @@ object Pipeline {
         .filter(f(col("doc_id")))
         .select(explode(split(lower(col("text")), "\\s+")).as("token"))
         .filter(length(col("token")) > 0)
-    val dir = cachedIndexDir(t.dir,
-      s"cm_compact_v1_${CmDepth}_$CmWidth") { d =>
+    val dir = RunCache.dir(t.dir,
+      s"cm_compact_${CmDepth}_$CmWidth") { d =>
       graft.operators.Sketches.writeCountMin(
         toksOf(_ % 3 === 0), col("token"), CmDepth, CmWidth, d)
       graft.operators.Sketches.ingestIntoCountMin(
@@ -6587,12 +6536,8 @@ object Pipeline {
   // stored-artifact integrity contract, third instance).
 
   private def q198(t: Tables): DataFrame = {
-    val lmDir = cachedIndexDir(t.dir, s"lm_model_v1_${LmMaxV}_$LmMaxB") { d =>
-      TextOps.writeLmModel(
-        graft.Fanout(t.documents.filter(col("doc_id") % 10 === 0)),
-        col("doc_id"), col("text"), LmMaxV, LmMaxB, d)
-    }
-    val bDir = cachedIndexDir(t.dir, s"ppl_bounds_v1_${LmMaxV}_$LmMaxB") { d =>
+    val lmDir = lmModelDir(t)
+    val bDir = RunCache.dir(t.dir, s"ppl_bounds_${LmMaxV}_$LmMaxB") { d =>
       TextOps.writePplBoundaries(graft.Fanout(t.documents), col("doc_id"),
         col("text"), col("source"), col("doc_id") % 10 === 0, LmMaxV,
         LmMaxB, LmLambda, d)
@@ -6619,7 +6564,7 @@ object Pipeline {
         .filter(f(col("doc_id")))
         .select(explode(split(lower(col("text")), "\\s+")).as("token"))
         .filter(length(col("token")) > 0)
-    val dir = cachedIndexDir(t.dir, s"cm_sketch_v1_${CmDepth}_$CmWidth") { d =>
+    val dir = RunCache.dir(t.dir, s"cm_sketch_${CmDepth}_$CmWidth") { d =>
       graft.operators.Sketches.writeCountMin(
         toksOf(_ % 2 === 0), col("token"), CmDepth, CmWidth, d)
       graft.operators.Sketches.ingestIntoCountMin(
@@ -6644,18 +6589,14 @@ object Pipeline {
   // tokens per whitespace word, per language — a language whose
   // fertility blows up is under-served by the learned vocabulary. The
   // byte-level tokenizer TRAINS ONCE into a stored artifact
-  // (cachedIndexDir + writeBpeModel — the byte-level twin of q181's
+  // (RunCache + writeBpeModel — the byte-level twin of q181's
   // stored word-level model) and the report applies the loaded merges,
   // proving the byte-level artifact round-trips storage too. Exact
   // integer sums; ONE division per language at the end.
 
   private def q196(t: Tables): DataFrame = {
     val spark = t.documents.sparkSession
-    val dir = cachedIndexDir(t.dir, s"bpe_byte_model_v1_$BpeRounds") { d =>
-      TextOps.writeBpeModel(
-        TextOps.bpeMergesByteLevel(graft.Fanout(t.documents), col("text"),
-          BpeRounds, requireFull = true), d)
-    }
+    val dir = bpeByteModelDir(t)
     val merges = TextOps.loadBpeMerges(spark, dir)
     val bpe = TextOps.bpeTokenCountsByteLevel(graft.Fanout(t.documents),
       col("doc_id"), col("text"), merges)
@@ -7143,8 +7084,8 @@ object Pipeline {
   private val BmBuckets = 64
 
   private def q154(t: Tables): DataFrame = {
-    val dir = cachedIndexDir(t.dir, s"bm25_index_v3_$BmBuckets")(
-      Retrieval.writeBm25Index(bigramTf(t), _, BmBuckets))
+    val dir = RunCache.dir(t.dir, s"bm25_index_$BmBuckets")(
+      Retrieval.writeBm25IndexVersioned(bigramTf(t), _, BmBuckets))
     // round-16 optimization: seed queries derive AGAINST THE INDEX
     // (Retrieval.seedQueriesAgainstIndex — seed text tokenized batch-local,
     // df from the bucket-pruned postings, n_docs from the summed stats),
@@ -7176,8 +7117,8 @@ object Pipeline {
   // ∝ batch.
 
   private def q155(t: Tables): DataFrame = {
-    // build+ingest, made all-or-nothing by the atomic rename
-    val dir = cachedIndexDir(t.dir, s"bm25_inc_v4_$BmBuckets") { d =>
+    // build+ingest, all-or-nothing as one cached build
+    val dir = RunCache.dir(t.dir, s"bm25_inc_$BmBuckets") { d =>
       val tf = bigramTf(t).persistScoped()
       Retrieval.writeBm25IndexVersioned(tf.filter(col("id") % 10 =!= 7), d, BmBuckets)
       Retrieval.ingestIntoBm25Index(tf.filter(col("id") % 10 === 7), d, 1L)
@@ -7201,7 +7142,7 @@ object Pipeline {
 
   private def q166(t: Tables): DataFrame = {
     val spark = t.documents.sparkSession
-    val dir = cachedIndexDir(t.dir, s"bm25_compact_v2_$BmBuckets") { d =>
+    val dir = RunCache.dir(t.dir, s"bm25_compact_$BmBuckets") { d =>
       val tf = bigramTf(t).persistScoped()
       Retrieval.writeBm25IndexVersioned(tf.filter(col("id") % 10 =!= 7), d, BmBuckets)
       Retrieval.ingestIntoBm25Index(tf.filter(col("id") % 10 === 7), d, 1L)
@@ -8115,19 +8056,19 @@ object Pipeline {
 
   // ===== q83 stored-index incremental dedup ==============================
   // Same contract and oracle as q74, but the corpus side is a STORED
-  // index: writeCorpusIndex persists the three derived views (text
-  // hashes, LSH band keys partitioned by band, shingle arrays) to
-  // parquet, and the probe joins the batch against those scans — the
-  // production ingestion shape where a batch's dedup cost is
-  // proportional to the BATCH, never the corpus. The build is
-  // idempotent: it runs once per (sf dir, params, format version) and
-  // later invocations probe the existing index — exactly the
-  // ingestion-time cost model the operator exists to demonstrate.
+  // index: writeCorpusIndexVersioned persists the derived views (text
+  // hashes, LSH band keys partitioned by band, shingle arrays, CDC
+  // chunks) to parquet, and the probe joins the batch against the first
+  // three — the production ingestion shape where a batch's dedup cost is
+  // proportional to the BATCH, never the corpus. The build runs once per
+  // (sf dir, params) and JVM, and later invocations probe the existing
+  // index — exactly the ingestion-time cost model the operator exists to
+  // demonstrate.
 
   private def q83(t: Tables): DataFrame = {
     val d = graft.Fanout(t.documents.select(col("doc_id").as("id"), col("text")))
-    val dir = cachedIndexDir(t.dir, s"corpus_index_v3_3_${MinHashes}_$Bands")(
-      dd => Dedup.writeCorpusIndex(d.filter(col("id") % 10 =!= 7), dd,
+    val dir = RunCache.dir(t.dir, s"corpus_index_3_${MinHashes}_$Bands")(
+      dd => Dedup.writeCorpusIndexVersioned(d.filter(col("id") % 10 =!= 7), dd,
         3, MinHashes, Bands))
     Dedup.dedupAgainstIndex(d.filter(col("id") % 10 === 7), dir,
       3, MinHashes, Bands, CorpusT)

@@ -4,14 +4,14 @@ import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.Tables
+import graft.{RunCache, Tables}
 
 /** Text/CSV/JSON source-format parity. The reference's primary input is
   * line-oriented text through MRInput (tez-mapreduce/.../input/MRInput.java:84;
   * WordCount.java:140-195 reads TextInputFormat), with any other format a
   * pluggable InputFormat away. The harness publishes parquet only, so each
-  * non-parquet format is materialized ONCE per scale-factor directory
-  * (write-once, _SUCCESS-guarded) as a faithful derivation of the parquet
+  * non-parquet format is materialized ONCE per scale-factor directory and
+  * JVM ([[graft.RunCache]]) as a faithful derivation of the parquet
   * table, and every read then goes through the real Spark file source —
   * schema application, split planning, and (for CSV/JSON) per-format parsing
   * are all exercised, and the DuckDB oracle checks the round-trip by
@@ -24,27 +24,9 @@ import graft.Tables
   */
 object FileFormats {
 
-  private def root(sfDir: String): String =
-    s"${sys.props("java.io.tmpdir")}/graft_derived/${sfDir.replaceAll("[^A-Za-z0-9._-]", "_")}"
-
-  /** Write-once materialization guarded by the sink's _SUCCESS marker.
-    * The cache key embeds the SOURCE parquet's (length, mtime) fingerprint
-    * so a regenerated test dataset can never be served a stale derivation
-    * from an earlier run on the same machine.
-    */
-  private def ensure(name: String, sfDir: String, sourceTable: String)(
-      build: String => Unit): String =
-    synchronized {
-      val src = new java.io.File(s"$sfDir/$sourceTable.parquet")
-      val fp = s"${src.length()}_${src.lastModified()}"
-      val path = s"${root(sfDir)}/${name}_$fp"
-      if (!new java.io.File(s"$path/_SUCCESS").exists()) build(path)
-      path
-    }
-
   /** nation as '|'-joined text lines — the TextInputFormat shape. */
   def nationTextPath(t: Tables): String =
-    ensure("nation_text", t.dir, "nation") { p =>
+    RunCache.dir(t.dir, "nation_text") { p =>
       t.nation
         .select(concat_ws("|",
           col("n_nationkey"), col("n_name"), col("n_regionkey")))
@@ -62,7 +44,7 @@ object FileFormats {
     * inference would be an extra full scan at 100 TB).
     */
   def customerCsv(t: Tables): DataFrame = {
-    val p = ensure("customer_csv", t.dir, "customer") { path =>
+    val p = RunCache.dir(t.dir, "customer_csv") { path =>
       t.customer.write.mode(SaveMode.Overwrite).option("header", "true").csv(path)
     }
     t.spark.read.schema(customerCsvSchema).option("header", "true").csv(p)
@@ -80,7 +62,7 @@ object FileFormats {
     * µs values — the other five columns round-trip exactly).
     */
   def ordersJson(t: Tables): DataFrame = {
-    val p = ensure("orders_json", t.dir, "orders") { path =>
+    val p = RunCache.dir(t.dir, "orders_json") { path =>
       t.orders
         .select(col("o_orderkey"), col("o_custkey"), col("o_orderstatus"),
           col("o_totalprice"), col("o_orderpriority"))

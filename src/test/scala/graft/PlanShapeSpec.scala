@@ -616,7 +616,7 @@ class PlanShapeSpec extends AnyFunSuite {
     }
     spark.listenerManager.register(listener)
     try {
-      graft.operators.Similarity.writeIvfIndex(emb, d1, 16)
+      graft.operators.Similarity.writeIvfIndexVersioned(emb, d1, 16)
       graft.operators.Similarity.writeIvfIndexVersioned(
         emb.filter(col("vec_id") % 2 === 0), d2, 16)
       graft.operators.Similarity.ingestIntoIvfIndex(
@@ -643,7 +643,7 @@ class PlanShapeSpec extends AnyFunSuite {
         s"a join or aggregate exchange carries the corpus vectors:\n$p")
       assert(rebalance.size == (if (writesLists(p)) 1 else 0), p)
     }
-    val cellDirs = Seq(s"$d1/lists", s"$d2/lists/batch=0", s"$d2/lists/batch=1")
+    val cellDirs = Seq(s"$d1/lists/batch=0", s"$d2/lists/batch=0", s"$d2/lists/batch=1")
       .flatMap(d => new java.io.File(d).listFiles().filter(_.getName.startsWith("cell=")))
     assert(cellDirs.nonEmpty)
     for (c <- cellDirs) {

@@ -294,7 +294,7 @@ class CurationSpec extends AnyFunSuite {
     val existing = d.filter(col("id") % 3 =!= 0)
     val batch = d.filter(col("id") % 3 === 0)
     val dir = java.nio.file.Files.createTempDirectory("graft_dedup_idx").toString
-    Dedup.writeCorpusIndex(existing, dir, 3, 64, 16)
+    Dedup.writeCorpusIndexVersioned(existing, dir, 3, 64, 16)
     val direct = Dedup.dedupAgainst(batch, existing, 3, 64, 16, 0.8)
       .select("id").as[Long].collect().toSet
     val indexed = Dedup.dedupAgainstIndex(batch, dir, 3, 64, 16, 0.8)

@@ -648,19 +648,6 @@ class DedupSpec extends AnyFunSuite {
     } finally graft.CacheScope.drain()
   }
 
-  test("deleteFromCorpusIndex refuses the flat (id-less hashes) layout") {
-    val docs = Seq((1L, "alpha beta gamma delta"), (2L, "one two three four"))
-      .toDF("id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("dedup-flat").toString
-    try {
-      Dedup.writeCorpusIndex(docs, dir, 3, 16, 8)
-      val e = intercept[IllegalArgumentException] {
-        Dedup.deleteFromCorpusIndex(spark, dir, Seq(1L).toDF("id"))
-      }
-      assert(e.getMessage.contains("writeCorpusIndexVersioned"))
-    } finally graft.CacheScope.drain()
-  }
-
   test("SNM second pass catches a near-dup the text-order pass sorts apart") {
     // P and Q share 5 of P's 6 shingles (J = 5/6) but P leads with 'zzz'
     // and Q with 'alpha' — in raw text order 10 filler docs sit between

@@ -90,11 +90,11 @@ class RetrievalSpec extends AnyFunSuite {
     try {
       val direct = Retrieval.bm25TopK(tf, queries, 5, excludeSelf = true)
         .as[(Long, Long, Double, Long)].collect().toSet
-      Retrieval.writeBm25Index(tf, dir, 16)
+      Retrieval.writeBm25IndexVersioned(tf, dir, 16)
       val probed = Retrieval.bm25AgainstIndex(queries, dir, 5, excludeSelf = true)
         .as[(Long, Long, Double, Long)].collect().toSet
       assert(probed == direct && direct.nonEmpty)
-      Retrieval.writeBm25Index(tf, dir, 16) // overwrite-mode rebuild
+      Retrieval.writeBm25IndexVersioned(tf, dir, 16) // overwrite-mode rebuild
       val again = Retrieval.bm25AgainstIndex(queries, dir, 5, excludeSelf = true)
         .as[(Long, Long, Double, Long)].collect().toSet
       assert(again == direct)

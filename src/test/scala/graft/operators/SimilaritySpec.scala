@@ -232,14 +232,14 @@ class SimilaritySpec extends AnyFunSuite {
       .select($"vec_id".as("q_id"), $"embedding".as("q_vec"))
     val dir = java.nio.file.Files.createTempDirectory("ivfidx").toString
     try {
-      Similarity.writeIvfIndex(emb, dir, 16)
+      Similarity.writeIvfIndexVersioned(emb, dir, 16)
       def sorted(df: org.apache.spark.sql.DataFrame) =
         df.as[(Long, Long, Double, Long)].collect().sortBy(r => (r._1, r._4))
       val stored = sorted(Similarity.ivfTopKAgainstIndex(queries, dir, 2, 10))
       val fresh = sorted(Similarity.ivfTopK(queries, emb, 16, 2, 10))
       assert(stored.nonEmpty && stored.toSeq == fresh.toSeq)
       // overwrite-idempotent rebuild
-      Similarity.writeIvfIndex(emb, dir, 16)
+      Similarity.writeIvfIndexVersioned(emb, dir, 16)
       assert(sorted(Similarity.ivfTopKAgainstIndex(queries, dir, 2, 10))
         .toSeq == fresh.toSeq)
       // incremental ingestion: build on a slice that contains the whole
@@ -280,7 +280,7 @@ class SimilaritySpec extends AnyFunSuite {
           approx.getOrElse(q, Set.empty).count(e).toDouble / e.size
         }.sum / exact.size
       Similarity.writeIvfIndexPQ(emb, dir, 16, mSub = 8, nCodes = 16)
-      Similarity.writeIvfIndex(emb, dirRaw, 16)
+      Similarity.writeIvfIndexVersioned(emb, dirRaw, 16)
       val pq = recall(topSet(Similarity.ivfTopKAgainstIndexPQ(queries, dir, 2, 10)))
       val raw = recall(topSet(Similarity.ivfTopKAgainstIndex(queries, dirRaw, 2, 10)))
       assert(pq >= 0.28, s"PQ recall $pq (raw-list probe measured ~0.305)")
@@ -781,7 +781,7 @@ class SimilaritySpec extends AnyFunSuite {
     // the measurement (float partial-sum order can nudge centroids) and
     // pin the improvement — the reason the trained variant exists. The
     // stored-index path accepts either quantizer: both sides here go
-    // through writeIvfIndex + ivfTopKAgainstIndex.
+    // through writeIvfIndexVersioned + ivfTopKAgainstIndex.
     val emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
     val queries = emb.filter(col("vec_id") % 25 === 0)
       .select($"vec_id".as("q_id"), $"embedding".as("q_vec"))
@@ -797,8 +797,8 @@ class SimilaritySpec extends AnyFunSuite {
         }.sum / exact.size
       val d0 = java.nio.file.Files.createTempDirectory("ivf-untrained").toString
       val d1 = java.nio.file.Files.createTempDirectory("ivf-trained").toString
-      Similarity.writeIvfIndex(corpus, d0, 16)
-      Similarity.writeIvfIndex(corpus, d1, 16, trainIters = 5)
+      Similarity.writeIvfIndexVersioned(corpus, d0, 16)
+      Similarity.writeIvfIndexVersioned(corpus, d1, 16, trainIters = 5)
       val untrained = recall(topSet(Similarity.ivfTopKAgainstIndex(queries, d0, 2, 10)))
       val trained = recall(topSet(Similarity.ivfTopKAgainstIndex(queries, d1, 2, 10)))
       assert(trained >= 0.40, s"trained recall $trained (measured 0.45)")
@@ -811,7 +811,7 @@ class SimilaritySpec extends AnyFunSuite {
       // noise shows; at production scale the sample is still millions of
       // points per cell and the gap vanishes). Pin slightly below.
       val d2 = java.nio.file.Files.createTempDirectory("ivf-sampled").toString
-      Similarity.writeIvfIndex(corpus, d2, 16, trainIters = 5, trainSampleMod = 2)
+      Similarity.writeIvfIndexVersioned(corpus, d2, 16, trainIters = 5, trainSampleMod = 2)
       val sampled = recall(topSet(Similarity.ivfTopKAgainstIndex(queries, d2, 2, 10)))
       assert(sampled >= 0.37, s"sample-trained recall $sampled (measured 0.395)")
       assert(sampled > untrained,

@@ -460,13 +460,13 @@ class EventStreamsSpec extends AnyFunSuite {
   private val outputSinks: Seq[(String, Boolean, () => (Seq[DataFrame], DataFrame => DataFrame))] = Seq(
     ("annProbeIngest: streamed query batches probe the stored index; replay is idempotent", false, () => {
       val idx = tmp("annprobe")
-      graft.operators.Similarity.writeIvfIndex(emb, idx, 16)
+      graft.operators.Similarity.writeIvfIndexVersioned(emb, idx, 16)
       (halves(vecQueries),
         graft.operators.Similarity.ivfTopKAgainstIndex(_, idx, 2, 10))
     }),
     ("bm25ProbeIngest: streamed query bags probe the stored index; replay is idempotent", false, () => {
       val idx = tmp("bm25probe")
-      graft.operators.Retrieval.writeBm25Index(docTf, idx, 16)
+      graft.operators.Retrieval.writeBm25IndexVersioned(docTf, idx, 16)
       import spark.implicits._
       (halves(Seq((0L, "the"), (0L, "data"), (1L, "table"), (1L, "query"))
         .toDF("q_id", "term")),
@@ -534,8 +534,8 @@ class EventStreamsSpec extends AnyFunSuite {
   test("hybridProbeIngest: streamed queries probe BOTH indexes; fusion equals offline") {
     import spark.implicits._
     val bm = tmp("hybrid-bm25"); val ivf = tmp("hybrid-ivf")
-    graft.operators.Retrieval.writeBm25Index(docTf, bm, 16)
-    graft.operators.Similarity.writeIvfIndex(emb, ivf, 16)
+    graft.operators.Retrieval.writeBm25IndexVersioned(docTf, bm, 16)
+    graft.operators.Similarity.writeIvfIndexVersioned(emb, ivf, 16)
     // queries: hand term bags + each seed's own embedding as the vector
     val q = local(emb.filter($"vec_id" < 2)
       .select($"vec_id".as("q_id"),
