@@ -45,29 +45,15 @@ object Bench {
       }
       spark.catalog.clearCache()
     }
-    def timed(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
-      val t0 = System.nanoTime()
-      try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
-      val t = (System.nanoTime() - t0) / 1e9
+    val (results, failed) = timeQueries(selected.toSeq.sortBy(_._1).map {
+      case (name, fn) => name -> (() => { fn(spark, sfDir).count(); () })
+    }) { () =>
       // operators that persist reused subplans (minhash/jaccard) would
       // otherwise accumulate cached blocks across queries and skew later
       // timings with eviction/GC pressure; drain() also empties the
       // CacheScope registry so it can't grow across the suite
       CacheScope.drain()
       spark.catalog.clearCache()
-      t
-    }
-    val results = selected.toSeq.sortBy(_._1).map { case (name, fn) =>
-      // best of three passes: single-shot timings on this box are polluted
-      // by sporadic multi-second host stalls (measured on trivial queries
-      // too — BENCH_LOCAL.md); min-of-3 reports the engine's actual
-      // steady-state cost with two chances to dodge a stall
-      var dt = (1 to 3).map(_ => timed(fn)).min
-      // stalls occasionally SPAN all three reps (a 0.7s query once
-      // recorded 22s); any query still over 2s gets two more chances so a
-      // sustained stall can't masquerade as engine cost
-      if (dt > 2.0) dt = math.min(dt, (1 to 2).map(_ => timed(fn)).min)
-      name -> dt
     }
     val all = results ++
       (if (only.isEmpty) bucketedComparison(spark, sfDir) else Nil)
@@ -80,13 +66,14 @@ object Bench {
     val qs = all.map { case (k, v) => s"\"" + k + "\":" + ms(v) }
       .mkString("{", ",", "}")
     val total = if (all.nonEmpty) all.map(_._2).sum else 0.0
+    val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     val loadEnd = osBean.getSystemLoadAverage
     // contamination self-label as a FIELD, not just prose: load_start > 1
     // means external load polluted the timings, and a record that says so
     // in-band can't be mistaken for (or committed as) an idle run
     val contaminated = loadStart > 1.0
     val line =
-      s"""{"queries":$qs,"sf":"$sfDir","load_start":${ms(loadStart)},"load_end":${ms(loadEnd)},"contaminated":$contaminated,"unit":"sec","metric":"total","value":${ms(total)}}"""
+      s"""{"queries":$qs,"failed":$failedJson,"sf":"$sfDir","load_start":${ms(loadStart)},"load_end":${ms(loadEnd)},"contaminated":$contaminated,"unit":"sec","metric":"total","value":${ms(total)}}"""
     println(line)
     // The full one-line record above is ~8KB (264 per-query entries) while
     // the driver stores only the final ~2KB of stdout — BENCH_r13..r16 all
@@ -98,7 +85,7 @@ object Bench {
     // BENCH_LOCAL.json (pointed to by "detail"). The full line stays
     // printed first so a truncated capture still shows the final rows.
     val compact =
-      s"""{"sf":"$sfDir","cpus":$cpus,"n_queries":${all.size},"load_start":${ms(loadStart)},"load_end":${ms(loadEnd)},"contaminated":$contaminated,"detail":"BENCH_LOCAL.json","unit":"sec","metric":"total","value":${ms(total)}}"""
+      s"""{"sf":"$sfDir","cpus":$cpus,"n_queries":${all.size},"failed":$failedJson,"load_start":${ms(loadStart)},"load_end":${ms(loadEnd)},"contaminated":$contaminated,"detail":"BENCH_LOCAL.json","unit":"sec","metric":"total","value":${ms(total)}}"""
     println(compact)
     // also persist to a file: the harness stores only the final ~2KB of
     // stdout, which has tail-truncated the per-query map two rounds in a
@@ -121,6 +108,39 @@ object Bench {
     System.out.flush()
     System.err.flush()
     Runtime.getRuntime.halt(0)
+  }
+
+  /** Time each query as the best of three passes (five when the best of
+    * three is over 2 s). Single-shot timings on this box are polluted by
+    * sporadic multi-second host stalls, measured on trivial queries too
+    * (BENCH_LOCAL.md); min-of-3 reports the engine's steady-state cost with
+    * two chances to dodge a stall, and the two extra passes keep a stall
+    * that spans all three (a 0.7 s query once recorded 22 s) from
+    * masquerading as engine cost.
+    *
+    * A query that throws in any pass is failed: it is returned by name,
+    * with no time, so it can never count as a fast row. `cleanup` runs
+    * after every pass, outside the timed region.
+    *
+    * @return (name, seconds) of the queries that ran, and the failed names
+    */
+  private[graft] def timeQueries(queries: Seq[(String, () => Unit)])(
+      cleanup: () => Unit): (Seq[(String, Double)], Seq[String]) = {
+    def pass(run: () => Unit): Option[Double] = {
+      val t0 = System.nanoTime()
+      val t =
+        try { run(); Some((System.nanoTime() - t0) / 1e9) }
+        catch { case _: Throwable => None }
+      cleanup()
+      t
+    }
+    val timed = queries.map { case (name, run) =>
+      var ts = (1 to 3).map(_ => pass(run))
+      if (ts.forall(_.exists(_ > 2.0))) ts ++= (1 to 2).map(_ => pass(run))
+      name -> (if (ts.forall(_.isDefined)) Some(ts.flatten.min) else None)
+    }
+    (timed.collect { case (n, Some(t)) => n -> t },
+      timed.collect { case (n, None) => n })
   }
 
   /** Measured bucketed-vs-shuffled join rows — the repeated-workload story

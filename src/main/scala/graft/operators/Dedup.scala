@@ -598,11 +598,12 @@ object Dedup {
   }
 
   /** Batch `batchId` of the three-view corpus index (hashes with doc ids,
-    * band keys, shingles) for a stream whose first micro-batch is the
-    * store's build: batch 0 builds, later batches overwrite their own
-    * directories ([[Compaction]]'s replay-safe ingest). The views are the
-    * ones [[writeCorpusIndexVersioned]] writes, so a stream-built index
-    * compacts, probes and deletes like a built one.
+    * band keys, shingles): the build (batch 0) of a store whose probes
+    * never read the CDC chunk view, and every batch of a stream whose
+    * first micro-batch is the store's build — later batches overwrite
+    * their own directories ([[Compaction]]'s replay-safe ingest). The
+    * views are the ones [[writeCorpusIndexVersioned]] writes, so such a
+    * store compacts, probes and deletes like a built one.
     */
   private[graft] def writeCorpusIndexBatch(docs: DataFrame, dir: String,
       batchId: Long, n: Int, numHashes: Int, bands: Int): Unit =

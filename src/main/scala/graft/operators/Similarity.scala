@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.CacheScope.ScopedPersist
@@ -19,30 +19,6 @@ import graft.CacheScope.ScopedPersist
   */
 object Similarity {
 
-  /** Stored-PQ codebook grids already validated this session, keyed by
-    * (dir, m_sub, n_codes, artifact fingerprint) — spares every probe
-    * after the first its stride-guard count job. The fingerprint (file
-    * names + mtimes + lengths of `codebooks/`, one driver-side listing)
-    * ties the cache entry to the on-disk artifact: an out-of-process
-    * rebuild or partial corruption at the same dir re-keys and
-    * re-validates, instead of riding a stale same-JVM pass. Same-JVM
-    * rebuilds additionally invalidate via [[writeIvfIndexPQ]].
-    */
-  private val cbGridOk =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[(String, Int, Int, Long)]()
-
-  /** Cheap content fingerprint of a small artifact directory: fold of
-    * (name, mtime, length) over its data files ([[Compaction.dataFiles]]).
-    * A driver-side listing — far cheaper than the parquet count job the
-    * cache exists to skip — that changes whenever any file is rewritten,
-    * added, or removed.
-    */
-  private def artifactFingerprint(spark: org.apache.spark.sql.SparkSession,
-      dir: String): Long =
-    Compaction.dataFiles(spark, dir).foldLeft(1125899906842597L) { (h, f) =>
-      ((h * 31 + f.getPath.getName.hashCode) * 31 + f.getModificationTime) *
-        31 + f.getLen
-    }
 
   /** Cosine similarity of two float-array columns, computed in double via
     * the native kernel (graft.functions.CosineFExpr) — bit-identical to the
@@ -68,6 +44,16 @@ object Similarity {
       .select(col("q_id"), posexplode(col("top")).as(Seq("pos", "s")))
       .select(col("q_id"), col("s.id").as("vec_id"), col("s.score").as("score"),
         (col("pos") + 1).cast("long").as("rnk"))
+
+  /** Per-query top-k of the candidate vectors `lists` that share `key`
+    * with a broadcast `probes` row, by exact rounded cosine; a query never
+    * ranks its own vector.
+    */
+  private def exactTopK(lists: DataFrame, probes: DataFrame, key: String,
+      k: Int): DataFrame =
+    rankTopK(lists.join(broadcast(probes), Seq(key))
+      .filter(col("q_id") =!= col("vec_id"))
+      .withColumn("score", round(cosine(col("q_vec"), col("embedding")), 4)), k)
 
   /** Exact top-k neighbors for each query vector (brute force): broadcast
     * the (small) query set against the full corpus, rank per query.
@@ -153,11 +139,8 @@ object Similarity {
   def lshTopK(queries: DataFrame, corpus: DataFrame, dim: Int, k: Int,
       planes: Int = LshPlanes): DataFrame = {
     val qb = queries.withColumn("bucket", lshBucket(col("q_vec"), dim, planes))
-    val cb = corpus.withColumn("bucket", lshBucket(col("embedding"), dim, planes))
-    val scored = cb.join(broadcast(qb), Seq("bucket"))
-      .filter(col("q_id") =!= col("vec_id"))
-      .withColumn("score", round(cosine(col("q_vec"), col("embedding")), 4))
-    rankTopK(scored, k)
+    exactTopK(corpus.withColumn("bucket", lshBucket(col("embedding"), dim, planes)),
+      qb, "bucket", k)
   }
 
   /** Multi-probe sign-LSH top-k: each query additionally probes every
@@ -179,11 +162,8 @@ object Similarity {
       .withColumn("__b0", lshBucket(col("q_vec"), dim, planes))
       .withColumn("bucket", explode(probes))
       .drop("__b0")
-    val cb = corpus.withColumn("bucket", lshBucket(col("embedding"), dim, planes))
-    val scored = cb.join(broadcast(qb), Seq("bucket"))
-      .filter(col("q_id") =!= col("vec_id"))
-      .withColumn("score", round(cosine(col("q_vec"), col("embedding")), 4))
-    rankTopK(scored, k)
+    exactTopK(corpus.withColumn("bucket", lshBucket(col("embedding"), dim, planes)),
+      qb, "bucket", k)
   }
 
   /** IVF (inverted-file) approximate top-k — the second scale path besides
@@ -215,11 +195,10 @@ object Similarity {
     * Per iteration, Spark-shaped: (1) assignment is the
     * [[narrowBestCell]] fold over the broadcast centroid array (narrow,
     * |corpus|·nCells ops, zero shuffle — the corpus never exchanges);
-    * (2) the new centroid = member mean, computed by posexploding to
-    * (cell, pos, x) and hash-aggregating avg — partial aggregation
-    * collapses each task to ≤ nCells·dim partial sums before the
-    * exchange, so the shuffle carries centroids, not the corpus; (3) the
-    * ≤ nCells·dim result folds back to arrays and localCheckpoints
+    * (2) the new centroid = member mean ([[memberMeans]]) — partial
+    * aggregation collapses each task to ≤ nCells·dim partial sums before
+    * the exchange, so the shuffle carries centroids, not the corpus; (3)
+    * the ≤ nCells·dim result folds back to arrays and localCheckpoints
     * (centroid frames are tiny; truncating lineage keeps iteration N's
     * plan from replaying iterations 1..N-1). A cell that loses all
     * members keeps its previous centroid (standard Lloyd's). Cosine
@@ -254,22 +233,31 @@ object Similarity {
         pmod(xxhash64(col("vec_id")), lit(trainSampleMod.toLong)) === 0L)
     var cents = centroidsOf(corpus, nCells).localCheckpoint()
     for (_ <- 1 to iters) {
-      val means = narrowBestCell(train, cents, "vec_id", "embedding")
-        .select(col("cell"), posexplode(col("embedding")).as(Seq("pos", "x")))
-        .groupBy(col("cell"), col("pos"))
-        .agg(avg(col("x")).as("m"))
-        .groupBy(col("cell"))
-        .agg(array_sort(collect_list(struct(col("pos"), col("m")))).as("pm"))
-        .select(col("cell").as("cent_id"),
-          transform(col("pm"), p => p("m").cast("float")).as("mvec"))
-      cents = cents.as("c")
-        .join(means.as("m"), col("c.cent_id") === col("m.cent_id"), "left")
-        .select(col("c.cent_id").as("cent_id"),
-          coalesce(col("m.mvec"), col("c.cvec")).as("cvec"))
+      cents = cents.join(memberMeans(narrowBestCell(train, cents, "vec_id",
+          "embedding"), Seq("cell"), "embedding"), col("cent_id") === col("cell"),
+          "left")
+        .select(col("cent_id"), coalesce(col("mvec"), col("cvec")).as("cvec"))
         .localCheckpoint()
     }
     cents
   }
+
+  /** The Lloyd mean update shared by the coarse quantizer and the PQ
+    * codebooks: the member mean `mvec` (float) of array column `vec` per
+    * `keys` group of `assigned`. Posexploded to (keys, pos, x) and
+    * hash-aggregated: partial aggregation collapses each task to
+    * groups·dim partial sums before the exchange, so the shuffle carries
+    * centroids, never the corpus.
+    */
+  private def memberMeans(assigned: DataFrame, keys: Seq[String],
+      vec: String): DataFrame =
+    assigned.select(keys.map(col) :+ posexplode(col(vec)).as(Seq("pos", "x")): _*)
+      .groupBy((keys :+ "pos").map(col): _*)
+      .agg(avg(col("x")).as("v"))
+      .groupBy(keys.map(col): _*)
+      .agg(array_sort(collect_list(struct(col("pos"), col("v")))).as("pm"))
+      .select(keys.map(col) :+ transform(col("pm"), p => p("v").cast("float"))
+        .as("mvec"): _*)
 
   /** Single-best-cell assignment as a ZERO-SHUFFLE narrow map: the
     * centroids collapse to ONE broadcast row holding a cent_id-sorted
@@ -320,135 +308,7 @@ object Similarity {
       k: Int): DataFrame = {
     val cents = centroidsOf(corpus, nCells)
     val lists = narrowBestCell(corpus, cents, "vec_id", "embedding")
-    val probes = bestCells(queries, cents, "q_id", "q_vec", nProbe)
-    val scored = lists.join(broadcast(probes), Seq("cell"))
-      .filter(col("q_id") =!= col("vec_id"))
-      .withColumn("score", round(cosine(col("q_vec"), col("embedding")), 4))
-    rankTopK(scored, k)
-  }
-
-  /** The IVF store's lists view. */
-  private val IvfLists = Compaction.View.partitioned("lists", "cell")
-
-  /** Train (or pick) and store the coarse quantizer. trainIters = 0 →
-    * deterministic training-free quantizer (the gate's oracle-reproducible
-    * default); > 0 → k-means-trained centroids ([[centroidsKMeans]],
-    * optionally sample-trained via trainSampleMod) for recall. Probes
-    * don't care which built the index: the stored layout is identical.
-    */
-  private def ivfCentroids(corpus: DataFrame, dir: String, nCells: Int,
-      trainIters: Int, trainSampleMod: Int): DataFrame = {
-    val cents =
-      if (trainIters > 0) centroidsKMeans(corpus, nCells, trainIters, trainSampleMod)
-      else centroidsOf(corpus, nCells)
-    cents.write.mode("overwrite").parquet(s"$dir/centroids")
-    cents
-  }
-
-  /** (vec_id, embedding, cell) against stored centroids. cell as int:
-    * parquet partition-column inference reads the directory values back as
-    * ints, so writing ints keeps the probe join key cast-free (a cast on
-    * the partition column can defeat static pruning).
-    */
-  private def ivfAssign(vectors: DataFrame, cents: DataFrame): DataFrame =
-    narrowBestCell(vectors, cents, "vec_id", "embedding")
-      .withColumn("cell", col("cell").cast("int"))
-
-  /** Build a STORED IVF index: the production retrieval shape — build
-    * once, probe forever (the similarity sibling of
-    * [[Dedup.writeCorpusIndexVersioned]]). Under `dir`:
-    *
-    *  - `centroids/`: (cent_id, cvec) — the coarse quantizer, tiny;
-    *  - `lists/`: the [[Compaction]] store's view of (vec_id, embedding)
-    *    at `lists/batch=<id>/cell=<c>/` — each vector's max-cosine cell
-    *    assignment, i.e. the inverted lists as physical partition
-    *    directories. The build is batch 0; ingests
-    *    ([[ingestIntoIvfIndex]]) add batches.
-    *
-    * The cell-partitioned layout is what makes the probe cost ∝ batch:
-    * a probe joins the lists scan on `cell` against a broadcast of the
-    * query batch's probed cells, so dynamic partition pruning opens ONLY
-    * the probed cells' directories in every batch — the corpus's other
-    * inverted lists are never read (the DPP PlanShapeSpec pin). Build
-    * cost is one broadcast-score pass + one partitioned write; a rebuild
-    * at the same `dir` overwrites batch 0.
-    */
-  def writeIvfIndexVersioned(corpus: DataFrame, dir: String, nCells: Int,
-      trainIters: Int = 0, trainSampleMod: Int = 1): Unit =
-    Compaction.build(corpus.sparkSession, dir, IvfLists -> ivfAssign(corpus,
-      ivfCentroids(corpus, dir, nCells, trainIters, trainSampleMod)))
-
-  /** Replay-safe incremental ingestion into a [[writeIvfIndexVersioned]]
-    * index ([[Compaction.ingest]]): the batch assigns against the FROZEN
-    * stored centroids (broadcast, narrow) — ingested vectors never become
-    * centroids, so probes against build+ingest equal probes against a
-    * from-scratch build over the union whenever the build corpus contained
-    * the centroid id range (spec-pinned). Per-ingest cost stays ∝ batch.
-    */
-  def ingestIntoIvfIndex(newVectors: DataFrame, dir: String,
-      batchId: Long): Unit = {
-    val spark = newVectors.sparkSession
-    Compaction.ingest(spark, dir, batchId, IvfLists ->
-      ivfAssign(newVectors, spark.read.parquet(s"$dir/centroids")))
-  }
-
-  /** Compact a batch-versioned IVF index ([[Compaction.compact]]): one
-    * file per cell directory, probe results identical pre/post
-    * (spec-pinned). This is the maintenance op that stops per-ingest
-    * batch directories from accreting until file listing dominates probe
-    * cost.
-    *
-    * @return the new epoch number
-    */
-  def compactIvfIndex(spark: org.apache.spark.sql.SparkSession,
-      dir: String): Int =
-    Compaction.compact(spark, dir, IvfLists)
-
-  /** Run [[compactIvfIndex]] only when the live epoch holds more than
-    * `maxBatches` sealed batch directories ([[Compaction.compactIfNeeded]]).
-    *
-    * @return the new epoch, or None when under threshold (no-op)
-    */
-  def compactIvfIndexIfNeeded(spark: org.apache.spark.sql.SparkSession,
-      dir: String, maxBatches: Int): Option[Int] =
-    Compaction.compactIfNeeded(spark, dir, "lists", maxBatches)(
-      compactIvfIndex(spark, dir))
-
-  /** Physically DELETE vectors from a stored IVF index — the
-    * right-to-be-forgotten maintenance op ([[Compaction.delete]]).
-    * Centroids stay FROZEN (deletion is not retraining), so a post-delete
-    * probe is bit-identical to probing an index built from the surviving
-    * corpus under the same quantizer (spec-pinned). Cost: one index-sized
-    * filter-rewrite — the compaction envelope.
-    *
-    * @param ids one column `vec_id`; ids absent from the index are
-    *            ignored (idempotent: re-running a delete is a no-op
-    *            rewrite)
-    * @return the new epoch number
-    */
-  def deleteFromIvfIndex(spark: org.apache.spark.sql.SparkSession,
-      dir: String, ids: DataFrame): Int =
-    Compaction.delete(spark, dir, "vec_id", ids, IvfLists)
-
-  /** Probe a stored [[writeIvfIndexVersioned]] index: per-query top-k
-    * over the `nProbe` best cells' inverted lists, identical semantics
-    * (and identical result) to running [[ivfTopK]] against the full corpus
-    * with the same parameters — the index just amortizes the assignment.
-    * Per-batch
-    * cost: one broadcast-score pass of the BATCH against the tiny stored
-    * centroids + a partition-pruned scan of the probed cells only.
-    */
-  def ivfTopKAgainstIndex(queries: DataFrame, dir: String, nProbe: Int,
-      k: Int): DataFrame = {
-    val spark = queries.sparkSession
-    val cents = spark.read.parquet(s"$dir/centroids")
-    val lists = Compaction.snapshot(spark, dir)("lists")
-    val probes = bestCells(queries, cents, "q_id", "q_vec", nProbe)
-      .withColumn("cell", col("cell").cast("int"))
-    val scored = lists.join(broadcast(probes), Seq("cell"))
-      .filter(col("q_id") =!= col("vec_id"))
-      .withColumn("score", round(cosine(col("q_vec"), col("embedding")), 4))
-    rankTopK(scored, k)
+    exactTopK(lists, bestCells(queries, cents, "q_id", "q_vec", nProbe), "cell", k)
   }
 
   // ===== product quantization (IVFADC + exact refine) =====================
@@ -476,48 +336,61 @@ object Similarity {
       dim: Int): DataFrame = {
     require(dim % mSub == 0, s"dim $dim not divisible by mSub $mSub")
     require(iters >= 0)
-    val subDim = dim / mSub
-    val sub = corpus
-      .select(col("vec_id"), explode(expr(s"sequence(0, ${mSub - 1})")).as("m"),
-        expr(s"slice(embedding, m * $subDim + 1, $subDim)").as("sv"))
-    var cb = corpus.orderBy(col("vec_id")).limit(nCodes)
-      .select(col("vec_id"), col("embedding"))
-      .withColumn("code", org.apache.spark.sql.functions.row_number().over(
+    trainCodebooks(corpus, corpus, "embedding", mSub, nCodes, dim / mSub,
+      iters)._2
+  }
+
+  /** The `mSub` subspace indexes of a vector, exploded to rows `m`. */
+  private def subspaces(mSub: Int): Column =
+    explode(expr(s"sequence(0, ${mSub - 1})")).as("m")
+
+  /** Subvector `m` of array column `vec`. */
+  private def subvector(vec: String, subDim: Int): Column =
+    expr(s"slice($vec, m * $subDim + 1, $subDim)")
+
+  /** (vec_id, m, sv): every subvector of column `vec` of `df`. */
+  private def subvectors(df: DataFrame, vec: String, mSub: Int,
+      subDim: Int): DataFrame =
+    df.select(col("vec_id"), subspaces(mSub), subvector(vec, subDim).as("sv"))
+
+  /** The codebook training shared by raw and RESIDUAL PQ: the subvectors
+    * of column `vec` of `train`, codebooks initialised from the nCodes
+    * smallest-id rows of `init`, then `iters` [[pqLloyd]] rounds.
+    *
+    * @return (the training subvectors, the (m, code, cvec) codebooks)
+    */
+  private def trainCodebooks(train: DataFrame, init: DataFrame, vec: String,
+      mSub: Int, nCodes: Int, subDim: Int, iters: Int): (DataFrame, DataFrame) = {
+    val sub = subvectors(train, vec, mSub, subDim)
+    val cb0 = init.orderBy(col("vec_id")).limit(nCodes)
+      .select(col("vec_id"), col(vec))
+      .withColumn("code", row_number().over(
         org.apache.spark.sql.expressions.Window.orderBy(col("vec_id"))) - 1)
       // the window runs over nCodes rows (the init set) — never the corpus
-      .select(explode(expr(s"sequence(0, ${mSub - 1})")).as("m"), col("code"),
-        expr(s"slice(embedding, m * $subDim + 1, $subDim)").as("cvec"))
+      .select(subspaces(mSub), col("code"), subvector(vec, subDim).as("cvec"))
       .localCheckpoint()
-    // a corpus smaller than nCodes would silently yield fewer codebook
+    // an init set smaller than nCodes would silently yield fewer codebook
     // rows while meta records n_codes = nCodes — and the probe's ADC LUT
     // is indexed with stride nCodes (lut[m·nCodes + code]), so a short
     // codebook reads past the LUT array's end into arbitrary bytes
     // (silently wrong scores). Fail loudly at train time instead; the
     // count is on the localCheckpointed frame — one cheap cached action.
-    val initRows = cb.count()
+    val initRows = cb0.count()
     require(initRows == mSub.toLong * nCodes,
-      s"PQ codebook init needs >= $nCodes corpus vectors; got " +
+      s"PQ codebook init needs >= $nCodes vectors; got " +
         s"${initRows / mSub} (corpus smaller than nCodes)")
-    pqLloyd(sub, cb, iters)
+    (sub, pqLloyd(sub, cb0, iters))
   }
 
-  /** The per-subspace Lloyd loop shared by raw and RESIDUAL codebook
-    * training: assign via [[pqAssign]], re-center to member means (a code
-    * that loses all members keeps its previous entry), localCheckpoint
-    * per round.
+  /** The per-subspace Lloyd loop of [[trainCodebooks]]: assign via
+    * [[pqAssign]], re-center to member means (a code that loses all
+    * members keeps its previous entry), localCheckpoint per round.
     */
   private def pqLloyd(sub: DataFrame, cb0: DataFrame, iters: Int): DataFrame = {
     var cb = cb0
     for (_ <- 1 to iters) {
-      val means = pqAssign(sub, cb)
-        .select(col("m"), col("code"), posexplode(col("sv")).as(Seq("pos", "x")))
-        .groupBy(col("m"), col("code"), col("pos"))
-        .agg(avg(col("x")).as("v"))
-        .groupBy(col("m"), col("code"))
-        .agg(array_sort(collect_list(struct(col("pos"), col("v")))).as("pm"))
-        .select(col("m"), col("code"),
-          transform(col("pm"), p => p("v").cast("float")).as("mvec"))
-      cb = cb.join(means, Seq("m", "code"), "left")
+      cb = cb.join(memberMeans(pqAssign(sub, cb), Seq("m", "code"), "sv"),
+          Seq("m", "code"), "left")
         .select(col("m"), col("code"),
           coalesce(col("mvec"), col("cvec")).as("cvec"))
         .localCheckpoint()
@@ -543,6 +416,90 @@ object Similarity {
           struct(c.getField("code").as("code"), d.as("d"))).otherwise(acc)
       }))
       .select(col("vec_id"), col("m"), col("sv"), col("__best.code").as("code"))
+  }
+
+  /** The embedding width of a corpus, checked divisible into `mSub`
+    * subspaces; returns the subspace width. One head() job.
+    */
+  private def subDimOf(corpus: DataFrame, mSub: Int): Int = {
+    val dim = corpus.select(size(col("embedding"))).head().getInt(0)
+    require(dim % mSub == 0, s"dim $dim not divisible by mSub $mSub")
+    dim / mSub
+  }
+
+  /** (cent_id, cv): the centroids with their vectors in double. */
+  private def centroidDoubles(cents: DataFrame): DataFrame =
+    cents.select(col("cent_id"),
+      expr("transform(cvec, x -> CAST(x AS DOUBLE))").as("cv"))
+
+  /** (q_id, q_vec, qv): the query batch with its vector in double,
+    * persisted — it feeds the approximate scoring AND the exact re-rank.
+    */
+  private def queryDoubles(queries: DataFrame): DataFrame =
+    queries.select(col("q_id"), col("q_vec"),
+      expr("transform(q_vec, x -> CAST(x AS DOUBLE))").as("qv"))
+      .persistScoped()
+
+  /** The residual chain, shared by [[pqResidualTopK]], the residual build
+    * and its ingest: (vec_id, cell, rv, n2x) — each assigned vector's
+    * residual against its cell's centroid, in double, and its EXACT
+    * squared norm (the FAISS stored-norm column cosine ADC divides by).
+    */
+  private def residuals(assigned: DataFrame, cents: DataFrame): DataFrame =
+    assigned
+      .join(broadcast(centroidDoubles(cents)), col("cell") === col("cent_id"))
+      .select(col("vec_id"), col("cell"),
+        expr("zip_with(embedding, cv, (a, b) -> CAST(a AS DOUBLE) - b)")
+          .as("rv"),
+        expr("""aggregate(embedding, 0D,
+               (a, x) -> a + CAST(x AS DOUBLE) * CAST(x AS DOUBLE))""")
+          .as("n2x"))
+
+  /** Residual codebook training over an assigned corpus. The residuals
+    * persist: they feed the codebooks, the encoding and the norm join.
+    * Codebook init: the first nCodes NON-CENTROID residuals — a vector in
+    * the training-free centroid set is its own cell, so its residual is
+    * the zero vector and an all-zero codebook would make every ADC term
+    * vanish (measured: recall collapsed to 0.06 before this guard).
+    * `iters` Lloyd rounds; 0 = the training-free oracle-replayable form
+    * the gate runs (trained means fold floats in partition order).
+    *
+    * @return (residuals, their subvectors, the codebooks)
+    */
+  private def trainResidual(assigned: DataFrame, cents: DataFrame,
+      nCells: Int, mSub: Int, nCodes: Int, subDim: Int,
+      iters: Int): (DataFrame, DataFrame, DataFrame) = {
+    val resid = residuals(assigned, cents).persistScoped()
+    val (sub, cb) = trainCodebooks(resid, resid.filter(col("vec_id") >= nCells),
+      "rv", mSub, nCodes, subDim, iters)
+    (resid, sub, cb)
+  }
+
+  /** (vec_id, codes, cell, n2x): each vector's residual codes (its
+    * subvectors' nearest codes, in m order) beside its cell and norm.
+    */
+  private def residualCodes(sub: DataFrame, cb: DataFrame,
+      resid: DataFrame): DataFrame =
+    pqAssign(sub, cb)
+      .groupBy(col("vec_id"))
+      .agg(sort_array(collect_list(struct(col("m"), col("code")))).as("e"))
+      .select(col("vec_id"),
+        expr("transform(e, x -> CAST(x.code AS INT))").as("codes"))
+      .join(resid.select(col("vec_id"), col("cell"), col("n2x")), Seq("vec_id"))
+
+  /** The direct operators' exact re-rank: the top `shortlist` of the
+    * approximate `scored` rows per query, re-scored by the exact rounded
+    * cosine against the corpus `lists`, then the top k.
+    */
+  private def exactRerank(scored: DataFrame, q0: DataFrame, lists: DataFrame,
+      shortlist: Int, k: Int): DataFrame = {
+    val sl = rankTopK(scored, shortlist).select(col("q_id"), col("vec_id"))
+    val rs = sl
+      .join(broadcast(q0.select(col("q_id"), col("q_vec"))), Seq("q_id"))
+      .join(lists.select(col("vec_id"), col("embedding")), Seq("vec_id"))
+      .select(col("q_id"), col("vec_id"),
+        round(cosine(col("q_vec"), col("embedding")), 4).as("score"))
+    rankTopK(rs, k)
   }
 
   /** RESIDUAL IVF-PQ top-k (IVFADC proper, Jégou et al. 2011 §III): PQ
@@ -576,48 +533,15 @@ object Similarity {
   def pqResidualTopK(queries: DataFrame, corpus: DataFrame, nCells: Int,
       mSub: Int, nCodes: Int, nProbe: Int, k: Int,
       shortlist: Int = 50, trainIters: Int = 0): DataFrame = {
-    val dim = corpus.select(size(col("embedding"))).head().getInt(0)
-    require(dim % mSub == 0, s"dim $dim not divisible by mSub $mSub")
-    val subDim = dim / mSub
+    val subDim = subDimOf(corpus, mSub)
     val cents = centroidsOf(corpus, nCells)
-    val centsD = cents.select(col("cent_id"),
-      expr("transform(cvec, x -> CAST(x AS DOUBLE))").as("cv"))
     val lists = narrowBestCell(corpus, cents, "vec_id", "embedding")
       .persistScoped() // feeds residuals AND the exact re-rank fetch
-    val resid = lists
-      .join(broadcast(centsD), col("cell") === col("cent_id"))
-      .select(col("vec_id"), col("cell"),
-        expr("zip_with(embedding, cv, (a, b) -> CAST(a AS DOUBLE) - b)")
-          .as("rv"),
-        expr("""aggregate(embedding, 0D,
-               (a, x) -> a + CAST(x AS DOUBLE) * CAST(x AS DOUBLE))""")
-          .as("n2x"))
-      .persistScoped() // feeds codebooks, encoding, and the norm join
-    // codebook init: the first nCodes NON-CENTROID residuals — a vector in
-    // the training-free centroid set is its own cell, so its residual is
-    // the zero vector and an all-zero codebook would make every ADC term
-    // vanish (measured: recall collapsed to 0.06 before this guard)
-    val cb0 = resid.filter(col("vec_id") >= nCells)
-      .orderBy(col("vec_id")).limit(nCodes)
-      .select(col("vec_id"), col("rv"))
-      .withColumn("code", row_number().over(
-        org.apache.spark.sql.expressions.Window.orderBy(col("vec_id"))) - 1)
-      // the window runs over nCodes rows (the init set), never the corpus
-      .select(explode(expr(s"sequence(0, ${mSub - 1})")).as("m"), col("code"),
-        expr(s"slice(rv, m * $subDim + 1, $subDim)").as("cvec"))
-      .localCheckpoint()
-    require(cb0.count() == mSub.toLong * nCodes,
-      s"residual-PQ codebook init needs >= $nCodes corpus vectors")
-    val sub = resid.select(col("vec_id"),
-      explode(expr(s"sequence(0, ${mSub - 1})")).as("m"),
-      expr(s"slice(rv, m * $subDim + 1, $subDim)").as("sv"))
-    // trainIters Lloyd rounds over the residual subvectors (the shared
-    // [[pqLloyd]] loop; 0 = the training-free oracle-replayable form the
-    // gate runs — trained means fold floats in partition order)
-    val cb = pqLloyd(sub, cb0, trainIters)
+    val (resid, sub, cb) =
+      trainResidual(lists, cents, nCells, mSub, nCodes, subDim, trainIters)
     // round-16 optimization: score candidates through the SAME native
     // pq_adc kernel + per-query LUT ARRAY the stored probe uses
-    // ([[ivfTopKAgainstIndexPQR]]). The former shape joined the candidate
+    // ([[IvfCodec.Pqr]]). The former shape joined the candidate
     // set against per-(vec, m) assignments and per-(q, m, code) LUT rows —
     // (candidates × mSub) rows through TWO hash joins and a per-candidate
     // collect_list aggregate (all shuffles); the kernel form collapses
@@ -625,16 +549,9 @@ object Similarity {
     // a narrow fold. Both fold the m-indexed terms ascending from 0D over
     // identical doubles, so scores are bit-identical (the oracle's
     // m-sorted msum replays unchanged).
-    val codes = pqAssign(sub, cb)
-      .groupBy(col("vec_id"))
-      .agg(sort_array(collect_list(struct(col("m"), col("code")))).as("e"))
-      .select(col("vec_id"),
-        expr("transform(e, x -> CAST(x.code AS INT))").as("codes"))
-      .join(resid.select(col("vec_id"), col("cell"), col("n2x")), Seq("vec_id"))
+    val codes = residualCodes(sub, cb, resid)
     val probes = bestCells(queries, cents, "q_id", "q_vec", nProbe)
-    val q0 = queries.select(col("q_id"), col("q_vec"),
-      expr("transform(q_vec, x -> CAST(x AS DOUBLE))").as("qv"))
-      .persistScoped() // feeds LUT, norms, and the re-rank
+    val q0 = queryDoubles(queries) // feeds LUT, norms, and the re-rank
     val luts = q0.crossJoin(broadcast(cb))
       .select(col("q_id"), col("m"), col("code"),
         expr(s"""aggregate(zip_with(slice(qv, m * $subDim + 1, $subDim), cvec,
@@ -646,7 +563,7 @@ object Similarity {
     val qn = q0.select(col("q_id"),
       sqrt(expr("aggregate(qv, 0D, (a, x) -> a + x * x)")).as("qn"))
     val qc = probes.select(col("q_id"), col("cell"))
-      .join(broadcast(centsD), col("cell") === col("cent_id"))
+      .join(broadcast(centroidDoubles(cents)), col("cell") === col("cent_id"))
       .join(q0.select(col("q_id"), col("qv")), Seq("q_id"))
       .select(col("q_id"), col("cell"),
         expr("aggregate(zip_with(qv, cv, (x, y) -> x * y), 0D, (a, v) -> a + v)")
@@ -665,13 +582,7 @@ object Similarity {
         round((col("qc") + graft.functions.pq_adc(col("codes"), col("lut"), nCodes))
           / (col("qn") * sqrt(col("n2x"))), 4)
           .as("score"))
-    val sl = rankTopK(scored, shortlist).select(col("q_id"), col("vec_id"))
-    val rs = sl
-      .join(broadcast(q0.select(col("q_id"), col("q_vec"))), Seq("q_id"))
-      .join(lists.select(col("vec_id"), col("embedding")), Seq("vec_id"))
-      .select(col("q_id"), col("vec_id"),
-        round(cosine(col("q_vec"), col("embedding")), 4).as("score"))
-    rankTopK(rs, k)
+    exactRerank(scored, q0, lists, shortlist, k)
   }
 
   /** IVF-SQ8 top-k — SCALAR quantization, the third member of the
@@ -705,171 +616,264 @@ object Similarity {
     val cents = centroidsOf(corpus, nCells)
     val lists = narrowBestCell(corpus, cents, "vec_id", "embedding")
       .persistScoped() // feeds the stats pass, the candidate join, re-rank
-    val (mnL, stepL) = sq8Lits(sq8Stats(lists))
+    val sq = Sq8Model(Sq8Model.stats(lists))
     val codes = lists.select(col("vec_id"), col("cell"),
-      sq8EncodeCol(col("embedding"), mnL, stepL).as("codes"))
+      sq.encodeCol(col("embedding")).as("codes"))
     val probes = bestCells(queries, cents, "q_id", "q_vec", nProbe)
-    val q0 = queries.select(col("q_id"), col("q_vec"),
-      expr("transform(q_vec, x -> CAST(x AS DOUBLE))").as("qv"))
-      .persistScoped() // feeds the approx scoring and the re-rank
+    val q0 = queryDoubles(queries) // feeds the approx scoring and the re-rank
     val scored = codes
       .join(broadcast(probes.select(col("q_id"), col("cell"))), Seq("cell"))
       .filter(col("q_id") =!= col("vec_id"))
       .join(broadcast(q0.select(col("q_id"), col("qv"))), Seq("q_id"))
       .select(col("q_id"), col("vec_id"),
-        sq8ApproxScore(col("qv"), col("codes"), mnL, stepL).as("score"))
-    val sl = rankTopK(scored, shortlist).select(col("q_id"), col("vec_id"))
-    val rs = sl
-      .join(broadcast(q0.select(col("q_id"), col("q_vec"))), Seq("q_id"))
-      .join(lists.select(col("vec_id"), col("embedding")), Seq("vec_id"))
-      .select(col("q_id"), col("vec_id"),
-        round(cosine(col("q_vec"), col("embedding")), 4).as("score"))
-    rankTopK(rs, k)
+        sq.approxCol(col("qv"), col("codes")).as("score"))
+    exactRerank(scored, q0, lists, shortlist, k)
   }
 
-  /** Per-dim SQ8 quantizer params of a vector frame: (d, mn, step) — dim
-    * rows from ONE map-side-combined aggregate. step = (mx − mn)/255 is
-    * computed HERE (one double division) so build, ingest, direct probe
-    * and oracle all share the identical value.
-    */
-  private def sq8Stats(vectors: DataFrame): DataFrame =
-    vectors.select(posexplode(col("embedding")).as(Seq("d", "x")))
-      .groupBy(col("d"))
-      .agg(min(col("x").cast("double")).as("mn"),
-        ((max(col("x").cast("double")) - min(col("x").cast("double"))) / 255.0)
-          .as("step"))
+  // ===== the stored IVF index ============================================
 
-  /** Collect a [[sq8Stats]] frame into the two expression-data literals
-    * the encode/score columns consume — 2·dim doubles, the bounded
-    * quantizer artifact (the PQ-codebook pattern).
+  /** How a stored IVF index holds and scores its inverted lists — the
+    * codec parameter of the one store. Tez's `IFile` is one row format
+    * with an optional codec, and IVFADC (Jégou et al. 2011) is one
+    * inverted file parameterized by its quantizer. Every codec keeps the
+    * coarse quantizer at `centroids/` and commits through the same
+    * [[Compaction]] store. The codecs differ only in what they train and
+    * store beside `centroids/`, how a batch is encoded into the store's
+    * views, how a probed cell is scored, and whether an exact refine
+    * follows:
+    *
+    *  - [[IvfCodec.Raw]]: the raw vectors in a cell-partitioned `lists`
+    *    view, scored by exact cosine; nothing trained, no refine;
+    *  - [[IvfCodec.Sq8]], [[IvfCodec.Pq]], [[IvfCodec.Pqr]]: a
+    *    cell-partitioned `codes` view beside the vec_id-sorted raw
+    *    `vectors` refine store ([[Compressed]]). A probe shortlists by
+    *    the codec's approximate score and re-ranks the shortlist by
+    *    exact cosine ([[refine]]).
+    *
+    * [[writeIvfIndexVersioned]] is the only def that names a codec; every
+    * other lifecycle def reads it from the store.
     */
-  private def sq8Lits(stats: DataFrame): (Column, Column) = {
-    val rows = stats.orderBy(col("d")).collect()
-    (typedLit(rows.map(_.getDouble(1)).toSeq),
-      typedLit(rows.map(_.getDouble(2)).toSeq))
+  sealed trait IvfCodec {
+    /** Train the codec's model on the build corpus (`assigned` is its
+      * (vec_id, embedding, cell) assignment to `cents`) and store it
+      * beside `centroids/`; None for the raw codec.
+      */
+    private[Similarity] def train(corpus: DataFrame, assigned: DataFrame,
+        cents: DataFrame, dir: String, nCells: Int): Option[Compressed] =
+      this match {
+        case IvfCodec.Raw => None
+        case IvfCodec.Sq8 =>
+          // the assignment feeds the stats pass and the codes write; the
+          // stats feed their write and the driver-side collect
+          val stats = Sq8Model.stats(assigned.persistScoped()).persistScoped()
+          stats.coalesce(1).write.mode("overwrite").parquet(s"$dir/sqstats")
+          Some(Sq8Model(stats))
+        case IvfCodec.Pq(mSub, nCodes, trainIters, permuteDims) =>
+          val subDim = subDimOf(corpus, mSub)
+          val perm = Option.when(permuteDims)(pqDimPermutation(subDim * mSub))
+          val cb = pqCodebooks(corpus.select(col("vec_id"),
+            permuteVec(col("embedding"), perm).as("embedding")),
+            mSub, nCodes, trainIters, subDim * mSub)
+          writePqModel(cb, dir, mSub, nCodes, subDim, perm, residual = false)
+          Some(PqModel(dir, mSub, nCodes, subDim, perm, cb))
+        case IvfCodec.Pqr(mSub, nCodes, trainIters) =>
+          val subDim = subDimOf(corpus, mSub)
+          val (_, _, cb) = trainResidual(assigned.persistScoped(), cents,
+            nCells, mSub, nCodes, subDim, trainIters)
+          writePqModel(cb.select(col("m"), col("code"),
+              expr("transform(cvec, x -> CAST(x AS DOUBLE))").as("cvec")),
+            dir, mSub, nCodes, subDim, None, residual = true)
+          Some(PqrModel(dir, mSub, nCodes, subDim, cb, cents))
+      }
   }
 
-  /** SQ8 encode: code_d = clamp(⌊(x_d − mn_d)/step_d + ½⌋, 0, 255)
-    * (constant dims → 0) — one narrow `transform`, shared by the direct
-    * operator, the stored build, and ingest so encoding cannot drift.
-    */
-  private def sq8EncodeCol(vec: Column, mnL: Column, stepL: Column): Column = {
-    def mAt(i: Column) = element_at(mnL, (i + 1).cast("int"))
-    def sAt(i: Column) = element_at(stepL, (i + 1).cast("int"))
-    transform(vec, (x, i) =>
-      when(sAt(i) > lit(0.0),
-        least(greatest(
-          floor((x.cast("double") - mAt(i)) / sAt(i) + lit(0.5)).cast("int"),
-          lit(0)), lit(255)))
-        .otherwise(lit(0)))
+  object IvfCodec {
+    /** Raw float vectors; trains nothing. */
+    case object Raw extends IvfCodec
+
+    /** Per-dim one-byte scalar quantization ([[sq8TopK]]'s codec): the
+      * 2·dim-double quantizer stats at `sqstats/`. They are frozen at
+      * build: a batch value outside a dim's build-time [mn, mx] clamps to
+      * the range edge (the FAISS SQ behavior), and quantizer drift is a
+      * rebuild-and-swap decision, never an in-stream stats update.
+      */
+    case object Sq8 extends IvfCodec
+
+    /** Product quantization (IVFADC + exact refine): `mSub` per-subspace
+      * L2 codebooks of `nCodes` codes ([[pqCodebooks]], `trainIters`
+      * Lloyd rounds; 0 = the training-free oracle-replayable form) at
+      * `codebooks/`, their grid in `meta/`. A vector stores `mSub` code
+      * ints instead of dim floats: probe list I/O shrinks ~dim·4/mSub
+      * per vector (32× at dim=64, mSub=8). `permuteDims` trains and
+      * encodes in the [[pqDimPermutation]] coordinates (stored in `meta/`
+      * and replayed by ingest and probe); cells and the exact re-rank
+      * stay on the raw vectors, since cosine is permutation-invariant.
+      */
+    final case class Pq(mSub: Int, nCodes: Int, trainIters: Int = 3,
+        permuteDims: Boolean = false) extends IvfCodec
+
+    /** Residual product quantization ([[pqResidualTopK]]'s codec): the
+      * codebooks train on, and the codes encode, the residual x − c(cell),
+      * and each vector's exact norm `n2x` rides beside its codes. The
+      * codebooks are stored as double arrays, so their reader type is
+      * fixed whether trained or training-free.
+      */
+    final case class Pqr(mSub: Int, nCodes: Int, trainIters: Int = 0)
+      extends IvfCodec
   }
 
-  /** SQ8 approx score: round-4 cosine of the query against the
-    * reconstructed vector r_d = mn_d + code_d·step_d (index-ordered
-    * 0-init folds) — shared by the direct operator and the stored probe.
+  /** The IVF store's views: the raw codec's `lists`, or the compressed
+    * codecs' scanned `codes` beside the raw `vectors` refine store.
+    * Ingests sort the vectors within the batch; rewrites (and the build)
+    * sort them globally by vec_id, so the refine fetch's row-group
+    * pruning bites. Rewrites keep every column, so the residual codec's
+    * n2x survives compaction and deletion.
     */
-  private def sq8ApproxScore(qv: Column, codes: Column,
-      mnL: Column, stepL: Column): Column = {
-    def mAt(i: Column) = element_at(mnL, (i + 1).cast("int"))
-    def sAt(i: Column) = element_at(stepL, (i + 1).cast("int"))
-    def fsum(arr: Column) = aggregate(arr, lit(0.0), (a, v) => a + v)
-    val rv = transform(codes, (c, i) => mAt(i) + c * sAt(i))
-    round(fsum(zip_with(qv, rv, (x, y) => x * y)) /
-      (sqrt(fsum(transform(qv, x => x * x))) *
-        sqrt(fsum(transform(rv, x => x * x)))), 4)
+  private val IvfLists = Compaction.View.partitioned("lists", "cell")
+  private val PqCodes = Compaction.View.partitioned("codes", "cell")
+  private val PqVectors = Compaction.View("vectors",
+    ingestLayout = _.sortWithinPartitions(col("vec_id")),
+    rewriteLayout = _.repartitionByRange(col("vec_id"))
+      .sortWithinPartitions(col("vec_id")))
+
+  /** A compressed codec's frozen model, as a built store holds it:
+    * [[IvfCodec.train]] returns it at build, [[storedModel]] reads it
+    * back for ingest and probe.
+    */
+  private sealed trait Compressed {
+    /** The `codes` view frame (vec_id, codes, …, cell) of a batch
+      * assigned to the frozen centroids.
+      */
+    def encode(assigned: DataFrame): DataFrame
+
+    /** The approximate stage of a probe over the `codes` view. */
+    def approx(queries: DataFrame, probes: DataFrame, codes: DataFrame): Approx
   }
 
-  /** Persist an IVF-SQ8 index — the FOURTH stored ANN layout (raw q145,
-    * PQ, residual-PQ): `centroids/`, `sqstats/` (the 2·dim-double
-    * quantizer — the frozen-model artifact of this family), and the PQ
-    * layout's two store views: cell-partitioned 1-byte-per-dim `codes`
-    * and the vec_id-sorted raw `vectors` refine store. Compaction and
-    * deletion are the PQ layout's own ops
-    * ([[compactIvfIndexPQ]]/[[deleteFromIvfIndexPQ]]).
+  /** A compressed probe's approximate stage: the probed cells' candidate
+    * rows carrying the approximate score column named `score`, and the
+    * (q_id, q_vec) frame the exact [[refine]] joins.
     */
-  def writeIvfIndexSQ(corpus: DataFrame, dir: String, nCells: Int): Unit = {
-    val spark = corpus.sparkSession
-    val cents = centroidsOf(corpus, nCells)
-    cents.write.mode("overwrite").parquet(s"$dir/centroids")
-    val lists = narrowBestCell(corpus, cents, "vec_id", "embedding")
-      .persistScoped()
-    val stats = sq8Stats(lists).persistScoped()
-    stats.coalesce(1).write.mode("overwrite").parquet(s"$dir/sqstats")
-    val (mnL, stepL) = sq8Lits(stats)
-    Compaction.build(spark, dir,
-      PqCodes -> lists.select(col("vec_id"),
-        sq8EncodeCol(col("embedding"), mnL, stepL).as("codes"),
-        col("cell").cast("int").as("cell")),
-      PqVectors -> sortedVectors(corpus))
-  }
+  private final case class Approx(scored: DataFrame, score: String, qVecs: DataFrame)
 
-  /** Replay-safe incremental ingestion into a [[writeIvfIndexSQ]] index:
-    * the batch assigns against the FROZEN stored centroids and encodes
-    * against the FROZEN stored quantizer stats (deletion ≠ retraining —
-    * the frozen-quantizer contract of [[ingestIntoIvfIndexPQ]]; a batch
-    * value outside a dim's build-time [mn, mx] clamps to the range edge,
-    * the FAISS SQ behavior — quantizer drift is a rebuild-and-swap
-    * decision, surfaced by monitoring clamp rates, never an in-stream
-    * stats update), then ingests both views ([[Compaction.ingest]]).
+  /** The store's view frames for a batch: `assigned` is its (vec_id,
+    * embedding, cell) assignment to the frozen centroids, `vectors` its
+    * raw (vec_id, embedding) rows, built only for a compressed codec.
+    * Cell as int: parquet partition-column inference reads the directory
+    * values back as ints, so writing ints keeps the probe join key
+    * cast-free (a cast on the partition column can defeat static
+    * pruning).
     */
-  def ingestIntoIvfIndexSQ(newVectors: DataFrame, dir: String,
-      batchId: Long): Unit = {
-    val spark = newVectors.sparkSession
-    val cents = spark.read.parquet(s"$dir/centroids")
-    val (mnL, stepL) = sq8Lits(spark.read.parquet(s"$dir/sqstats"))
-    Compaction.ingest(spark, dir, batchId,
-      PqCodes -> narrowBestCell(newVectors, cents, "vec_id", "embedding")
-        .select(col("vec_id"),
-          sq8EncodeCol(col("embedding"), mnL, stepL).as("codes"),
-          col("cell").cast("int").as("cell")),
-      PqVectors -> newVectors.select(col("vec_id"), col("embedding")))
-  }
+  private def ivfBatch(model: Option[Compressed], assigned: DataFrame,
+      vectors: => DataFrame): Seq[(Compaction.View, DataFrame)] =
+    model.fold(Seq(IvfLists -> assigned.withColumn("cell", col("cell").cast("int"))))(
+      m => Seq(PqCodes -> m.encode(assigned), PqVectors -> vectors))
 
-  /** Probe a [[writeIvfIndexSQ]] index: reconstruct-and-score against the
-    * cell-pruned codes scan (the stored quantizer rides as expression
-    * data), exact re-rank of the bounded shortlist through the refine
-    * store's pushed-down fetch — [[ivfTopKAgainstIndexPQR]]'s probe shape
-    * with per-dim affine reconstruction in place of the codebook LUT.
-    * Identical output to [[sq8TopK]] over the indexed corpus (stored ≡
-    * direct, hash-gated via q215's oracle).
+  /** The compressed probes' exact refine: the top `shortlist` candidates
+    * per query by the approximate `score` (the bounded TopKByScore, every
+    * input a fixed-order double fold rounded to 4 dp, so any engine
+    * replaying the arithmetic ranks the same shortlist) fetch their FULL
+    * vectors from the sorted `vectors` store and are re-ranked with the
+    * exact rounded cosine, the same arithmetic as [[ivfTopK]].
+    *
+    * The fetch is two-path. Up to `inListMax` distinct ids collect
+    * driver-side (the collect is size-guarded by `limit(inListMax + 1)`)
+    * and push down as an In filter, so parquet row-group stats keep the
+    * serving fetch shortlist-local. Past the cap — an offline rerank over
+    * a large query set, where |Q|·shortlist ids would OOM the driver and
+    * make an unplannable In list — the id set semi-joins the store,
+    * distributed, losing only row-group pruning (spec-pinned identical
+    * output on both paths).
     */
-  def ivfTopKAgainstIndexSQ(queries: DataFrame, dir: String, nProbe: Int,
-      k: Int, shortlist: Int = 50,
-      inListMax: Int = DefaultInListMax): DataFrame = {
-    val spark = queries.sparkSession
-    val cents = spark.read.parquet(s"$dir/centroids")
-    val (mnL, stepL) = sq8Lits(spark.read.parquet(s"$dir/sqstats"))
-    val store = Compaction.snapshot(spark, dir)
-    val codes = store("codes")
-    val probes = bestCells(queries, cents, "q_id", "q_vec", nProbe)
-      .withColumn("cell", col("cell").cast("int"))
-    val q0 = queries.select(col("q_id"), col("q_vec"),
-      expr("transform(q_vec, x -> CAST(x AS DOUBLE))").as("qv"))
-      .persistScoped() // feeds the approx scan AND the exact-rerank join
-    val short = codes
-      .join(broadcast(probes.select(col("q_id"), col("cell"))), Seq("cell"))
-      .filter(col("q_id") =!= col("vec_id"))
-      .join(broadcast(q0.select(col("q_id"), col("qv"))), Seq("q_id"))
-      .withColumn("appr", sq8ApproxScore(col("qv"), col("codes"), mnL, stepL))
+  private def refine(a: Approx, vectors: DataFrame, k: Int, shortlist: Int,
+      inListMax: Int): DataFrame = {
+    val short = a.scored
       .groupBy(col("q_id"))
-      .agg(graft.functions.topk_by_score(col("appr"), col("vec_id"), shortlist)
+      .agg(graft.functions.topk_by_score(col(a.score), col("vec_id"), shortlist)
         .as("top"))
       .select(col("q_id"), explode(col("top.id")).as("vec_id"))
-      .persistScoped() // feeds the id fetch AND the exact-rerank join
+      .persistScoped() // feeds the id fetch AND the exact-rerank join —
+      // the pruned approximate scan is the probe's dominant stage; never
+      // run it twice
     val idsDf = short.select(col("vec_id")).distinct()
     val capped = idsDf.limit(inListMax + 1).collect()
-    val vecStore = store("vectors")
     val raw =
       if (capped.length <= inListMax)
-        vecStore.filter(col("vec_id").isin(capped.map(_.getLong(0)).toSeq: _*))
-          .select(col("vec_id"), col("embedding"))
-      else
-        vecStore.join(idsDf, Seq("vec_id"), "left_semi")
-          .select(col("vec_id"), col("embedding"))
-    val rescored = short.join(raw, Seq("vec_id"))
-      .join(broadcast(q0.select(col("q_id"), col("q_vec"))), Seq("q_id"))
+        vectors.filter(col("vec_id").isin(capped.map(_.getLong(0)).toSeq: _*))
+      else vectors.join(idsDf, Seq("vec_id"), "left_semi")
+    val rescored = short.join(raw.select(col("vec_id"), col("embedding")),
+        Seq("vec_id"))
+      .join(broadcast(a.qVecs), Seq("q_id"))
       .withColumn("score", round(cosine(col("q_vec"), col("embedding")), 4))
     rankTopK(rescored, k)
+  }
+
+  /** The SQ8 quantizer as expression data: the per-dim `mn` and `step`
+    * literals, shared by the direct operator, the build, ingest and the
+    * stored probe so encoding and scoring cannot drift.
+    */
+  private final case class Sq8Model(mn: Column, step: Column)
+      extends Compressed {
+    private def mAt(i: Column) = element_at(mn, (i + 1).cast("int"))
+    private def sAt(i: Column) = element_at(step, (i + 1).cast("int"))
+
+    /** code_d = clamp(⌊(x_d − mn_d)/step_d + ½⌋, 0, 255); constant dims
+      * encode to 0. One narrow `transform`.
+      */
+    def encodeCol(vec: Column): Column =
+      transform(vec, (x, i) =>
+        when(sAt(i) > lit(0.0),
+          least(greatest(
+            floor((x.cast("double") - mAt(i)) / sAt(i) + lit(0.5)).cast("int"),
+            lit(0)), lit(255)))
+          .otherwise(lit(0)))
+
+    /** Round-4 cosine of the query against the reconstructed vector
+      * r_d = mn_d + code_d·step_d (index-ordered 0-init folds).
+      */
+    def approxCol(qv: Column, codes: Column): Column = {
+      def fsum(arr: Column) = aggregate(arr, lit(0.0), (a, v) => a + v)
+      val rv = transform(codes, (c, i) => mAt(i) + c * sAt(i))
+      round(fsum(zip_with(qv, rv, (x, y) => x * y)) /
+        (sqrt(fsum(transform(qv, x => x * x))) *
+          sqrt(fsum(transform(rv, x => x * x)))), 4)
+    }
+
+    def encode(assigned: DataFrame): DataFrame =
+      assigned.select(col("vec_id"), encodeCol(col("embedding")).as("codes"),
+        col("cell").cast("int").as("cell"))
+
+    def approx(queries: DataFrame, probes: DataFrame, codes: DataFrame): Approx = {
+      val q0 = queryDoubles(queries)
+      Approx(codes.join(broadcast(probes.select(col("q_id"), col("cell"))), Seq("cell"))
+        .filter(col("q_id") =!= col("vec_id"))
+        .join(broadcast(q0.select(col("q_id"), col("qv"))), Seq("q_id"))
+        .withColumn("appr", approxCol(col("qv"), col("codes"))),
+        "appr", q0.select(col("q_id"), col("q_vec")))
+    }
+  }
+
+  private object Sq8Model {
+    /** Per-dim SQ8 quantizer params of a vector frame: (d, mn, step) — dim
+      * rows from ONE map-side-combined aggregate. step = (mx − mn)/255 is
+      * computed HERE (one double division) so build, ingest, direct probe
+      * and oracle all share the identical value.
+      */
+    def stats(vectors: DataFrame): DataFrame =
+      vectors.select(posexplode(col("embedding")).as(Seq("d", "x")))
+        .groupBy(col("d"))
+        .agg(min(col("x").cast("double")).as("mn"),
+          ((max(col("x").cast("double")) - min(col("x").cast("double"))) / 255.0)
+            .as("step"))
+
+    /** The model of a [[stats]] frame, collected driver-side: 2·dim
+      * doubles, the bounded quantizer artifact.
+      */
+    def apply(stats: DataFrame): Sq8Model = {
+      val rows = stats.orderBy(col("d")).collect()
+      Sq8Model(typedLit(rows.map(_.getDouble(1)).toSeq),
+        typedLit(rows.map(_.getDouble(2)).toSeq))
+    }
   }
 
   /** Deterministic coordinate permutation for PQ subspace slicing — the
@@ -879,484 +883,345 @@ object Similarity {
     * the hurt comes from CORRELATED ADJACENT dims landing in one
     * subspace): dims ordered by the engine-neutral multiplicative hash
     * (d·2654435761) mod 1000003 (ties by d — a total order). Stored in
-    * the index meta, so probes replay it; identity for old indexes.
+    * the index meta, so ingest and probes replay it.
     */
   def pqDimPermutation(dim: Int): Array[Int] =
     (0 until dim).sortBy(d => ((d.toLong * 2654435761L) % 1000003L, d)).toArray
 
-  /** Apply a stored dim permutation to a vector column (null perm =
-    * identity): out(i) = vec(perm(i)+1).
+  /** Apply a dim permutation to a vector column (None = identity):
+    * out(i) = vec(perm(i)+1).
     */
   private def permuteVec(vec: Column, perm: Option[Array[Int]]): Column =
-    perm match {
-      case None => vec
-      case Some(p) =>
-        transform(typedLit(p.toSeq), i => element_at(vec, i + 1))
-    }
+    perm.fold(vec)(p => transform(typedLit(p.toSeq), i => element_at(vec, i + 1)))
 
-  /** Build a PQ-compressed stored IVF index (IVFADC + refine layout):
-    *
-    *  - `centroids/`: the coarse quantizer (as [[writeIvfIndexVersioned]]);
-    *  - `codebooks/`: (m, code, cvec) — M per-subspace L2 codebooks,
-    *    trained distributed ([[pqCodebooks]]), a tiny model artifact;
-    *  - `codes/` PARTITIONED BY `cell`: (vec_id, codes) — the scanned
-    *    index. M ints per vector instead of dim floats: probe list I/O
-    *    shrinks ~dim·4/M per vector (32× at dim=64, M=8);
-    *  - `vectors/`: the raw vectors, range-partitioned and SORTED by
-    *    vec_id so the refine stage's id-list fetch prunes row groups via
-    *    parquet min/max stats — shortlist-local I/O, not a corpus scan;
-    *  - `meta/`: (m_sub, n_codes, sub_dim).
-    *
-    * Cell assignment and encoding run in ONE narrow pass (the codebooks
-    * collect driver-side once — a bounded model artifact, M·nCodes rows —
-    * and ride into [[graft.functions.PqEncodeExpr]] as expression data);
-    * the corpus never shuffles.
+  /** Stored-PQ codebook grids known to match their meta this JVM, keyed
+    * by (dir, m_sub, n_codes, artifact fingerprint). The PQ ADC kernel
+    * indexes lut[m·nCodes + code], so a codebook short of meta's grid
+    * would read past the LUT's end — silently wrong scores, not an
+    * error. [[checkGrid]] is the one check. The build registers the grid
+    * it trained (whose init count [[trainCodebooks]] checked), so ingest
+    * and probe of a store built in this JVM pay no count job. The
+    * fingerprint (file names + mtimes + lengths of `codebooks/`, one
+    * driver-side listing) ties an entry to the on-disk artifact: a
+    * rewrite or partial corruption at the same dir re-keys and
+    * re-validates instead of riding a stale entry.
     */
-  def writeIvfIndexPQ(corpus: DataFrame, dir: String, nCells: Int,
-      mSub: Int, nCodes: Int, trainIters: Int = 3,
-      permuteDims: Boolean = false): Unit = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    val dim = corpus.select(size(col("embedding"))).head().getInt(0)
-    // OPQ-grade knob: codebooks train on (and codes encode) the PERMUTED
-    // coordinates so correlated adjacent dims spread across subspaces;
-    // the perm is stored in meta and replayed by probes/ingest. Coarse
-    // cells and the exact re-rank stay on the RAW vectors (cosine is
-    // permutation-invariant; the raw store is the refine source).
-    val perm = if (permuteDims) Some(pqDimPermutation(dim)) else None
-    val cents = centroidsOf(corpus, nCells)
-    cents.write.mode("overwrite").parquet(s"$dir/centroids")
-    val pqTrain = corpus.select(col("vec_id"),
-      permuteVec(col("embedding"), perm).as("embedding"))
-    val cbDf = pqCodebooks(pqTrain, mSub, nCodes, trainIters, dim)
-    cbDf.write.mode("overwrite").parquet(s"$dir/codebooks")
-    // a rebuild over a previously-probed dir must re-validate its grid
-    cbGridOk.removeIf(_._1 == dir)
-    Seq((mSub, nCodes, dim / mSub, perm.map(_.toSeq).getOrElse(Seq.empty[Int])))
-      .toDF("m_sub", "n_codes", "sub_dim", "perm")
-      .write.mode("overwrite").parquet(s"$dir/meta")
-    val cb = collectCodebooks(cbDf, mSub, nCodes)
-    // batch-versioned from the start: the build is batch 0 of the store,
-    // so replaying producers can ingest with [[ingestIntoIvfIndexPQ]] and
-    // [[compactIvfIndexPQ]] can epoch-swap
-    Compaction.build(spark, dir,
-      PqCodes -> pqEncode(corpus, cents, cb, perm),
-      PqVectors -> sortedVectors(corpus))
+  private val cbGridOk = java.util.concurrent.ConcurrentHashMap
+    .newKeySet[(String, Int, Int, Seq[(String, Long, Long)])]()
+
+  /** The codebook-grid check: `rows` (counted only when the grid is not
+    * known good yet) must fill meta's m_sub × n_codes grid.
+    */
+  private def checkGrid(spark: SparkSession, dir: String, mSub: Int,
+      nCodes: Int)(rows: => Long): Unit = {
+    val key = (dir, mSub, nCodes, Compaction.dataFiles(spark, s"$dir/codebooks")
+      .map(f => (f.getPath.getName, f.getModificationTime, f.getLen)))
+    if (!cbGridOk.contains(key)) {
+      val n = rows
+      require(n == mSub.toLong * nCodes,
+        s"codebook has $n rows, meta says ${mSub * nCodes} " +
+          s"(m_sub=$mSub × n_codes=$nCodes) at $dir — corrupt or mismatched index")
+      cbGridOk.add(key)
+    }
   }
 
-  /** The PQ layouts' (PQ, residual PQ, SQ8) two store views: the scanned
-    * cell-partitioned `codes` and the raw `vectors` refine store. Ingests
-    * sort the vectors within the batch; rewrites (and the build,
-    * [[sortedVectors]]) sort them globally by vec_id, so the refine
-    * fetch's row-group pruning bites. Rewrites keep every column, so the
-    * residual layout's n2x survives compaction and deletion.
+  /** Store a PQ-family model beside `centroids/`: the codebooks and the
+    * `meta/` row (m_sub, n_codes, sub_dim, perm, residual) — the only
+    * writer of `meta/` — and register the trained grid.
     */
-  private val PqCodes = Compaction.View.partitioned("codes", "cell")
-  private val PqVectors = Compaction.View("vectors",
-    ingestLayout = _.sortWithinPartitions(col("vec_id")),
-    rewriteLayout = _.repartitionByRange(col("vec_id"))
-      .sortWithinPartitions(col("vec_id")))
+  private def writePqModel(cb: DataFrame, dir: String, mSub: Int,
+      nCodes: Int, subDim: Int, perm: Option[Array[Int]],
+      residual: Boolean): Unit = {
+    val spark = cb.sparkSession
+    import spark.implicits._
+    cb.write.mode("overwrite").parquet(s"$dir/codebooks")
+    Seq((mSub, nCodes, subDim, perm.map(_.toSeq).getOrElse(Seq.empty[Int]),
+      residual)).toDF("m_sub", "n_codes", "sub_dim", "perm", "residual")
+      .write.mode("overwrite").parquet(s"$dir/meta")
+    cbGridOk.removeIf(_._1 == dir) // a rebuild drops the old grid
+    checkGrid(spark, dir, mSub, nCodes)(mSub.toLong * nCodes)
+  }
 
-  /** The corpus's raw vectors in the globally sorted refine layout. */
-  private def sortedVectors(corpus: DataFrame): DataFrame =
-    PqVectors.rewriteLayout(corpus.select(col("vec_id"), col("embedding")))
-
-  /** (vec_id, codes, cell): cell assignment against the frozen centroids
-    * and PQ encoding against the frozen codebooks, in one narrow pass.
+  /** Per-query ADC lookup tables against the broadcast codebooks: each
+    * `(term, lut, value)` of `terms` is a column over the query row and a
+    * codebook row (m, code, cvec), gathered into the array `lut` in m-
+    * then code-order so lut[m·nCodes + code] indexes it. Beside them, the
+    * query vector and its norm `qn`. Persisted: the tables feed the ADC
+    * scan AND the exact-rerank join.
     */
-  private def pqEncode(vectors: DataFrame, cents: DataFrame,
-      cb: Array[Array[Array[Float]]], perm: Option[Array[Int]]): DataFrame =
-    narrowBestCell(vectors, cents, "vec_id", "embedding")
-      .withColumn("cell", col("cell").cast("int"))
-      .withColumn("codes",
-        graft.functions.pq_encode(permuteVec(col("embedding"), perm), cb))
-      .select(col("vec_id"), col("codes"), col("cell"))
+  private def adcLuts(queries: DataFrame, cbRows: DataFrame,
+      terms: (String, String, Column)*): DataFrame =
+    queries.crossJoin(broadcast(cbRows))
+      .select(Seq(col("q_id"), col("q_vec"), col("m"), col("code")) ++
+        terms.map { case (t, _, v) => v.as(t) }: _*)
+      .groupBy(col("q_id"))
+      .agg(array_sort(collect_list(struct(
+          (Seq("m", "code") ++ terms.map(_._1)).map(col): _*))).as("e"),
+        first(col("q_vec")).as("q_vec"))
+      .select(Seq(col("q_id"), col("q_vec")) ++ terms.map { case (t, lut, _) =>
+          transform(col("e"), x => x.getField(t)).as(lut) } :+
+        sqrt(expr(
+          "aggregate(q_vec, 0D, (a, x) -> a + CAST(x AS DOUBLE) * CAST(x AS DOUBLE))"))
+          .as("qn"): _*)
+      .persistScoped()
 
-  /** Replay-safe incremental ingestion into a [[writeIvfIndexPQ]] index
-    * ([[Compaction.ingest]] of both views): the batch assigns against the
-    * FROZEN stored centroids and encodes against the FROZEN stored
-    * codebooks (both broadcast; the frozen-quantizer contract of
-    * [[ingestIntoIvfIndex]] extended to the code level).
+  /** Product quantization of a store: cell assignment and PQ encoding in
+    * ONE narrow pass — the codebooks collect driver-side once (a bounded
+    * model artifact, M·nCodes rows) and ride into
+    * [[graft.functions.PqEncodeExpr]] as expression data; the corpus
+    * never shuffles.
     */
-  def ingestIntoIvfIndexPQ(newVectors: DataFrame, dir: String,
+  private final case class PqModel(dir: String, mSub: Int, nCodes: Int,
+      subDim: Int, perm: Option[Array[Int]], cbRows: DataFrame)
+      extends Compressed {
+    def encode(assigned: DataFrame): DataFrame = {
+      val rows = cbRows.collect()
+      checkGrid(cbRows.sparkSession, dir, mSub, nCodes)(rows.length)
+      val cb = Array.ofDim[Array[Float]](mSub, nCodes)
+      rows.foreach(r => cb(r.getAs[Int]("m"))(r.getAs[Int]("code")) =
+        r.getAs[scala.collection.Seq[Float]]("cvec").toArray)
+      assigned
+        .withColumn("cell", col("cell").cast("int"))
+        .withColumn("codes",
+          graft.functions.pq_encode(permuteVec(col("embedding"), perm), cb))
+        .select(col("vec_id"), col("codes"), col("cell"))
+    }
+
+    /** ADC: per (m, code), dot(q_m, c_{m,code}) and ‖c_{m,code}‖² in the
+      * PERMUTED coordinates the codes were encoded in (the query norm is
+      * permutation-invariant and stays on q_vec); a candidate's
+      * approximate cosine is two [[graft.functions.PqAdcExpr]] folds over
+      * its codes, Σdot / (‖q‖·√Σn²).
+      */
+    def approx(queries: DataFrame, probes: DataFrame, codes: DataFrame): Approx = {
+      checkGrid(queries.sparkSession, dir, mSub, nCodes)(cbRows.count())
+      val luts = adcLuts(
+        queries.withColumn("__qp", permuteVec(col("q_vec"), perm)), cbRows,
+        ("d", "lut", expr(s"""aggregate(zip_with(slice(__qp, m * $subDim + 1,
+          $subDim), cvec, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)),
+          0D, (a, v) -> a + v)""")),
+        ("n2", "n2lut", expr("""aggregate(cvec, 0D,
+          (a, x) -> a + CAST(x AS DOUBLE) * CAST(x AS DOUBLE))""")))
+      val adc = round(
+        graft.functions.pq_adc(col("codes"), col("lut"), nCodes) /
+          (col("qn") * sqrt(graft.functions.pq_adc(col("codes"), col("n2lut"), nCodes))),
+        4)
+      Approx(codes.join(broadcast(probes.select(col("q_id"), col("cell"))
+          .join(luts, Seq("q_id"))), Seq("cell"))
+        .filter(col("q_id") =!= col("vec_id"))
+        .withColumn("adc", adc),
+        "adc", luts.select(col("q_id"), col("q_vec")))
+    }
+  }
+
+  /** Residual product quantization of a store: the batch's residuals
+    * against the frozen centroids encode against the frozen residual
+    * codebooks, each vector's exact norm computed at encode time.
+    */
+  private final case class PqrModel(dir: String, mSub: Int, nCodes: Int,
+      subDim: Int, cbRows: DataFrame, cents: DataFrame) extends Compressed {
+    def encode(assigned: DataFrame): DataFrame = {
+      checkGrid(cbRows.sparkSession, dir, mSub, nCodes)(cbRows.count())
+      val resid = residuals(assigned, cents)
+      residualCodes(subvectors(resid, "rv", mSub, subDim), cbRows, resid)
+        .select(col("vec_id"), col("codes"), col("n2x"),
+          col("cell").cast("int").as("cell"))
+    }
+
+    /** The residual ADC: ⟨q, x⟩ = ⟨q, c(cell)⟩ + Σ_m lut[m·nCodes +
+      * codes[m]] (the native [[graft.functions.PqAdcExpr]] fold over the
+      * cell-independent residual LUT), normalized by the query norm and
+      * the EXACT stored ‖x‖ — [[pqResidualTopK]]'s arithmetic.
+      */
+    def approx(queries: DataFrame, probes: DataFrame, codes: DataFrame): Approx = {
+      checkGrid(queries.sparkSession, dir, mSub, nCodes)(cbRows.count())
+      val luts = adcLuts(queries, cbRows,
+        ("d", "lut", expr(s"""aggregate(zip_with(slice(q_vec, m * $subDim + 1,
+          $subDim), cvec, (x, y) -> CAST(x AS DOUBLE) * y), 0D, (a, v) -> a + v)""")))
+      val pb = probes
+        .join(broadcast(centroidDoubles(cents)), col("cell") === col("cent_id"))
+        .select(col("q_id"), col("cell"),
+          expr("aggregate(zip_with(q_vec, cv, (x, y) -> CAST(x AS DOUBLE) * y), 0D, (a, v) -> a + v)")
+            .as("qc"))
+        .join(luts, Seq("q_id"))
+      val adc = round(
+        (col("qc") + graft.functions.pq_adc(col("codes"), col("lut"), nCodes)) /
+          (col("qn") * sqrt(col("n2x"))),
+        4)
+      Approx(codes.join(broadcast(pb), Seq("cell"))
+        .filter(col("q_id") =!= col("vec_id"))
+        .withColumn("adc", adc),
+        "adc", luts.select(col("q_id"), col("q_vec")))
+    }
+  }
+
+  /** Whether the store at `dir` holds the frozen artifact `name` beside
+    * its views — a file-system check, no Spark job.
+    */
+  private def hasArtifact(spark: SparkSession, dir: String,
+      name: String): Boolean =
+    Compaction.dataFileCount(spark, s"$dir/$name") > 0
+
+  /** The frozen model of a built store, read back for ingest and probe:
+    * the PQ family's from its `meta/` row and codebooks, SQ8's from its
+    * stats; None (raw) when neither is stored.
+    */
+  private def storedModel(spark: SparkSession, dir: String,
+      cents: DataFrame): Option[Compressed] =
+    if (hasArtifact(spark, dir, "meta")) {
+      val meta = spark.read.parquet(s"$dir/meta").head()
+      val (mSub, nCodes, subDim) =
+        (meta.getAs[Int]("m_sub"), meta.getAs[Int]("n_codes"), meta.getAs[Int]("sub_dim"))
+      val cbRows = spark.read.parquet(s"$dir/codebooks")
+      Some(if (meta.getAs[Boolean]("residual"))
+        PqrModel(dir, mSub, nCodes, subDim, cbRows, cents)
+      else PqModel(dir, mSub, nCodes, subDim,
+        Some(meta.getAs[scala.collection.Seq[Int]]("perm").toArray)
+          .filter(_.nonEmpty), cbRows))
+    } else if (hasArtifact(spark, dir, "sqstats"))
+      Some(Sq8Model(spark.read.parquet(s"$dir/sqstats")))
+    else None
+
+  /** The store's views, from its artifacts alone (no job). */
+  private def ivfViews(spark: SparkSession, dir: String): Seq[Compaction.View] =
+    if (hasArtifact(spark, dir, "meta") || hasArtifact(spark, dir, "sqstats"))
+      Seq(PqCodes, PqVectors) else Seq(IvfLists)
+
+  /** Build a STORED IVF index: the production retrieval shape — build
+    * once, probe forever (the similarity sibling of
+    * [[Dedup.writeCorpusIndexVersioned]]). Under `dir`:
+    *
+    *  - `centroids/`: (cent_id, cvec) — the coarse quantizer, tiny.
+    *    trainIters = 0 → deterministic training-free quantizer (the
+    *    gate's oracle-reproducible default); > 0 → k-means-trained
+    *    centroids ([[centroidsKMeans]], optionally sample-trained via
+    *    trainSampleMod) for recall. Probes don't care which built it;
+    *  - the `codec`'s model beside it ([[IvfCodec]]);
+    *  - the [[Compaction]] store's views at `<view>/batch=<id>/cell=<c>/`:
+    *    each vector's max-cosine cell assignment, i.e. the inverted lists
+    *    as physical partition directories — raw in `lists`, or encoded
+    *    in `codes` beside the raw `vectors` refine store. The build is
+    *    batch 0; ingests ([[ingestIntoIvfIndex]]) add batches.
+    *
+    * The cell-partitioned layout is what makes the probe cost ∝ batch:
+    * a probe joins the lists scan on `cell` against a broadcast of the
+    * query batch's probed cells, so dynamic partition pruning opens ONLY
+    * the probed cells' directories in every batch — the corpus's other
+    * inverted lists are never read (the DPP PlanShapeSpec pins). Raw
+    * build cost is one broadcast-score pass + one partitioned write; a
+    * rebuild at the same `dir` overwrites batch 0 and the codec's model.
+    */
+  def writeIvfIndexVersioned(corpus: DataFrame, dir: String, nCells: Int,
+      trainIters: Int = 0, trainSampleMod: Int = 1,
+      codec: IvfCodec = IvfCodec.Raw): Unit = {
+    val spark = corpus.sparkSession
+    // the store's codec is read from the model it holds: drop any other
+    // codec's model a previous build left here
+    Seq("meta", "sqstats").foreach(a => Compaction.deleteDir(spark, s"$dir/$a"))
+    val cents =
+      if (trainIters > 0) centroidsKMeans(corpus, nCells, trainIters, trainSampleMod)
+      else centroidsOf(corpus, nCells)
+    cents.write.mode("overwrite").parquet(s"$dir/centroids")
+    val assigned = narrowBestCell(corpus, cents, "vec_id", "embedding")
+    Compaction.build(spark, dir, ivfBatch(
+      codec.train(corpus, assigned, cents, dir, nCells), assigned,
+      PqVectors.rewriteLayout(corpus.select(col("vec_id"), col("embedding")))): _*)
+  }
+
+  /** Replay-safe incremental ingestion into a [[writeIvfIndexVersioned]]
+    * index ([[Compaction.ingest]] of every view): the batch assigns
+    * against the FROZEN stored centroids and encodes against the FROZEN
+    * stored codec model — ingested vectors never become centroids or
+    * codes, so probes against build+ingest equal probes against a
+    * from-scratch build over the union whenever the build corpus
+    * contained the centroid and codebook-init id ranges (spec-pinned).
+    * Per-ingest cost stays ∝ batch.
+    */
+  def ingestIntoIvfIndex(newVectors: DataFrame, dir: String,
       batchId: Long): Unit = {
     val spark = newVectors.sparkSession
-    val meta = spark.read.parquet(s"$dir/meta").head()
-    val cb = collectCodebooks(spark.read.parquet(s"$dir/codebooks"),
-      meta.getAs[Int]("m_sub"), meta.getAs[Int]("n_codes"))
-    Compaction.ingest(spark, dir, batchId,
-      PqCodes -> pqEncode(newVectors, spark.read.parquet(s"$dir/centroids"),
-        cb, metaPerm(meta)),
-      PqVectors -> newVectors.select(col("vec_id"), col("embedding")))
+    val cents = spark.read.parquet(s"$dir/centroids")
+    Compaction.ingest(spark, dir, batchId, ivfBatch(storedModel(spark, dir, cents),
+      narrowBestCell(newVectors, cents, "vec_id", "embedding"),
+      newVectors.select(col("vec_id"), col("embedding"))): _*)
   }
 
-  /** Compact a PQ index's batch directories ([[Compaction.compact]] of
-    * both views): codes consolidate to one file per cell, the raw vectors
-    * re-sort globally by vec_id (restoring the tightest row-group pruning
-    * for the refine fetch, which per-batch sorting can only approximate).
-    * Probe results identical pre/post (spec-pinned). SQ8 and residual-PQ
-    * indexes compact through here too.
+  /** Compact a batch-versioned IVF index ([[Compaction.compact]] of every
+    * view): one file per cell directory, and a compressed store's raw
+    * vectors re-sort globally by vec_id (restoring the tightest row-group
+    * pruning for the refine fetch, which per-batch sorting can only
+    * approximate). Probe results identical pre/post (spec-pinned). This
+    * is the maintenance op that stops per-ingest batch directories from
+    * accreting until file listing dominates probe cost.
     *
     * @return the new epoch number
     */
-  def compactIvfIndexPQ(spark: org.apache.spark.sql.SparkSession,
-      dir: String): Int =
-    Compaction.compact(spark, dir, PqCodes, PqVectors)
+  def compactIvfIndex(spark: SparkSession, dir: String): Int =
+    Compaction.compact(spark, dir, ivfViews(spark, dir): _*)
 
-  /** [[compactIvfIndexIfNeeded]] for the PQ layout (thresholds on the
-    * codes store's batch count; codes and vectors always compact
-    * together).
-    */
-  def compactIvfIndexPQIfNeeded(spark: org.apache.spark.sql.SparkSession,
-      dir: String, maxBatches: Int): Option[Int] =
-    Compaction.compactIfNeeded(spark, dir, "codes", maxBatches)(
-      compactIvfIndexPQ(spark, dir))
-
-  /** [[deleteFromIvfIndex]] for the PQ layout: the anti-join rewrite
-    * applied to BOTH views — the deleted vectors' CODES and their RAW
-    * vectors must go (the refine store holds the actual embeddings; a
-    * codes-only delete would leave the data recoverable) — under one
-    * epoch swap. Centroids and codebooks stay frozen.
+  /** Run [[compactIvfIndex]] only when the live epoch holds more than
+    * `maxBatches` sealed batch directories of the scanned view
+    * ([[Compaction.compactIfNeeded]]; a compressed store's views always
+    * compact together).
     *
-    * @param ids one column `vec_id`
+    * @return the new epoch, or None when under threshold (no-op)
+    */
+  def compactIvfIndexIfNeeded(spark: SparkSession, dir: String,
+      maxBatches: Int): Option[Int] =
+    Compaction.compactIfNeeded(spark, dir, ivfViews(spark, dir).head.name,
+      maxBatches)(compactIvfIndex(spark, dir))
+
+  /** Physically DELETE vectors from a stored IVF index — the
+    * right-to-be-forgotten maintenance op ([[Compaction.delete]]): the
+    * anti-join rewrite of every view under one epoch swap, so a
+    * compressed store loses the deleted vectors' codes AND their raw
+    * vectors (a codes-only delete would leave the data recoverable).
+    * Centroids and codec models stay FROZEN (deletion is not
+    * retraining), so a post-delete probe is bit-identical to probing an
+    * index built from the surviving corpus under the same quantizer
+    * (spec-pinned). Cost: one index-sized filter-rewrite — the compaction
+    * envelope.
+    *
+    * @param ids one column `vec_id`; ids absent from the index are
+    *            ignored (idempotent: re-running a delete is a no-op
+    *            rewrite)
     * @return the new epoch number
     */
-  def deleteFromIvfIndexPQ(spark: org.apache.spark.sql.SparkSession,
-      dir: String, ids: DataFrame): Int =
-    Compaction.delete(spark, dir, "vec_id", ids, PqCodes, PqVectors)
+  def deleteFromIvfIndex(spark: SparkSession, dir: String,
+      ids: DataFrame): Int =
+    Compaction.delete(spark, dir, "vec_id", ids, ivfViews(spark, dir): _*)
 
-  /** The stored dim permutation from a meta row — None (identity) for
-    * indexes written before the perm column existed, or with an empty one.
-    */
-  private def metaPerm(meta: org.apache.spark.sql.Row): Option[Array[Int]] =
-    if (!meta.schema.fieldNames.contains("perm")) None
-    else Option(meta.getAs[scala.collection.Seq[Int]]("perm"))
-      .filter(_.nonEmpty).map(_.toArray)
-
-  /** Driver-side codebook materialization: cb(m)(code) = cvec. A bounded
-    * model artifact (M·nCodes rows), the q157-merge-table pattern.
-    */
-  private def collectCodebooks(cbDf: DataFrame, mSub: Int,
-      nCodes: Int): Array[Array[Array[Float]]] = {
-    val out = Array.ofDim[Array[Float]](mSub, nCodes)
-    val rows = cbDf.collect()
-    // the load-time twin of the pqCodebooks init guard: a stored codebook
-    // that disagrees with meta's (m_sub, n_codes) would mis-stride every
-    // ADC LUT — validate the full (m, code) grid is present
-    require(rows.length == mSub * nCodes,
-      s"codebook has ${rows.length} rows, meta says ${mSub * nCodes} " +
-        s"(m_sub=$mSub × n_codes=$nCodes) — corrupt or mismatched index")
-    rows.foreach { r =>
-      out(r.getAs[Int]("m"))(r.getAs[Int]("code")) =
-        r.getAs[scala.collection.Seq[Float]]("cvec").toArray
-    }
-    require(out.forall(_.forall(_ != null)),
-      "codebook rows do not cover the full (m, code) grid")
-    out
-  }
-
-  /** Probe a [[writeIvfIndexPQ]] index: ADC scoring over the pruned codes
-    * scan, exact cosine re-rank of a bounded shortlist.
+  /** Probe a stored [[writeIvfIndexVersioned]] index: per-query top-k
+    * over the `nProbe` best cells' inverted lists. Per batch: one
+    * broadcast-score pass of the BATCH against the tiny stored centroids
+    * and a partition-pruned scan of the probed cells only.
     *
-    *  1. The query batch's probed cells come from the stored coarse
-    *     centroids (as [[ivfTopKAgainstIndex]]); the codes scan is
-    *     dynamically partition-pruned to those cells (plan-pinned).
-    *  2. Each query precomputes its ADC lookup tables against the
-    *     broadcast codebooks — per (m, code): dot(q_m, c_{m,code}) and
-    *     ‖c_{m,code}‖²; M·nCodes rows per query, tiny. A candidate's
-    *     approximate cosine is then two [[graft.functions.PqAdcExpr]]
-    *     folds over its codes: Σdot / (‖q‖·√Σn²).
-    *  3. The top `shortlist` candidates per query (bounded TopKByScore)
-    *     fetch their FULL vectors from the sorted `vectors/` store and are
-    *     re-ranked with the exact rounded cosine, same arithmetic as
-    *     [[ivfTopK]]. The fetch is two-path: up to `inListMax` distinct
-    *     ids collect driver-side and push down as an In filter (row-group
-    *     stats keep serving fetches shortlist-local); past the cap — an
-    *     offline rerank over a large query set, where |Q|·shortlist would
-    *     OOM the driver — the id set semi-joins the store distributed,
-    *     trading row-group pruning for unbounded |Q| (spec-pinned
-    *     identical output on both paths).
-    *
-    * Recall vs the raw-list probe is bounded by the same nProbe cell
-    * choice; the shortlist only loses candidates ADC misranks past
-    * position `shortlist` (spec-pinned floor).
+    *  - Raw codec: identical semantics (and identical result) to running
+    *    [[ivfTopK]] against the full corpus with the same parameters —
+    *    the index just amortizes the assignment.
+    *  - Compressed codecs: the codec's approximate score ranks the
+    *    probed cells' codes, and the top `shortlist` per query are
+    *    re-ranked exactly ([[refine]]; `inListMax` bounds the driver-side
+    *    id fetch). Identical output to [[sq8TopK]] / [[pqResidualTopK]]
+    *    over the indexed corpus (stored ≡ direct, hash-gated by q215's
+    *    and q208's oracles). Recall vs the raw probe is bounded by the
+    *    same nProbe cell choice; the shortlist loses only candidates the
+    *    approximate score misranks past position `shortlist`
+    *    (spec-pinned floor).
     */
-  def ivfTopKAgainstIndexPQ(queries: DataFrame, dir: String, nProbe: Int,
+  def ivfTopKAgainstIndex(queries: DataFrame, dir: String, nProbe: Int,
       k: Int, shortlist: Int = 50,
       inListMax: Int = DefaultInListMax): DataFrame = {
     val spark = queries.sparkSession
     val cents = spark.read.parquet(s"$dir/centroids")
-    val meta = spark.read.parquet(s"$dir/meta").head()
-    val (mSub, nCodes, subDim) =
-      (meta.getAs[Int]("m_sub"), meta.getAs[Int]("n_codes"), meta.getAs[Int]("sub_dim"))
     val store = Compaction.snapshot(spark, dir)
-    val codes = store("codes")
-    val cbRows = spark.read.parquet(s"$dir/codebooks")
-    // stride guard (the collectCodebooks check, probe-side): PqAdcExpr
-    // indexes lut[m·nCodes + code], so a codebook short of meta's grid
-    // would read past the LUT's end — silently wrong scores, not an error.
-    // The count is ONE parquet-metadata job per (dir, grid) per session,
-    // not per probe: codebooks are frozen at build (ingest/compact/delete
-    // never touch them), so the first probe validates and later probes
-    // hit the cache; a same-session rebuild re-keys via (mSub, nCodes)
-    // or is invalidated by [[writeIvfIndexPQ]].
-    val cbFp = artifactFingerprint(spark, s"$dir/codebooks")
-    if (!cbGridOk.contains((dir, mSub, nCodes, cbFp))) {
-      require(cbRows.count() == mSub.toLong * nCodes,
-        s"codebook rows != m_sub×n_codes ($mSub×$nCodes) at $dir — " +
-          "corrupt or mismatched index")
-      cbGridOk.add((dir, mSub, nCodes, cbFp))
-    }
-    // per-query ADC lookup tables, indexed lut[m·nCodes + code]; the LUT
-    // dot-products run in the PERMUTED coordinate space the codes were
-    // encoded in (identity for indexes built without permuteDims) — the
-    // query norm is permutation-invariant and stays on q_vec
-    val luts = queries
-      .withColumn("__qp", permuteVec(col("q_vec"), metaPerm(meta)))
-      .crossJoin(broadcast(cbRows))
-      .select(col("q_id"), col("q_vec"), col("m"), col("code"),
-        expr(s"""aggregate(zip_with(slice(__qp, m * $subDim + 1, $subDim), cvec,
-                 (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)),
-               0D, (a, v) -> a + v)""").as("d"),
-        expr("""aggregate(cvec, 0D,
-               (a, x) -> a + CAST(x AS DOUBLE) * CAST(x AS DOUBLE))""").as("n2"))
-      .groupBy(col("q_id"))
-      .agg(array_sort(collect_list(struct(col("m"), col("code"), col("d"), col("n2")))).as("e"),
-        first(col("q_vec")).as("q_vec"))
-      .select(col("q_id"), col("q_vec"),
-        transform(col("e"), x => x.getField("d")).as("lut"),
-        transform(col("e"), x => x.getField("n2")).as("n2lut"),
-        sqrt(expr(
-          "aggregate(q_vec, 0D, (a, x) -> a + CAST(x AS DOUBLE) * CAST(x AS DOUBLE))"))
-          .as("qn"))
-      .persistScoped() // feeds the ADC scan AND the exact-rerank join
     val probes = bestCells(queries, cents, "q_id", "q_vec", nProbe)
       .withColumn("cell", col("cell").cast("int"))
-      .select(col("q_id"), col("cell"))
-      .join(luts, Seq("q_id"))
-    // rounded to 4 dp before ranking (the house determinism discipline):
-    // every input is a fixed-order double fold, so any engine replaying
-    // the same arithmetic ranks the same shortlist — q168 hash-gates this
-    val adc = round(
-      graft.functions.pq_adc(col("codes"), col("lut"), nCodes) /
-        (col("qn") * sqrt(graft.functions.pq_adc(col("codes"), col("n2lut"), nCodes))),
-      4)
-    val short = codes.join(broadcast(probes), Seq("cell"))
-      .filter(col("q_id") =!= col("vec_id"))
-      .withColumn("adc", adc)
-      .groupBy(col("q_id"))
-      .agg(graft.functions.topk_by_score(col("adc"), col("vec_id"), shortlist).as("top"))
-      .select(col("q_id"), explode(col("top.id")).as("vec_id"))
-      .persistScoped() // feeds the id fetch AND the exact-rerank join —
-      // the pruned ADC scan is the probe's dominant stage; never run it twice
-    val idsDf = short.select(col("vec_id")).distinct()
-    // SERVING path: the id list is bounded (≤ |Q|·shortlist), so it
-    // collects driver-side and pushes down as an In filter — parquet
-    // row-group stats keep the fetch shortlist-local. The collect is
-    // size-GUARDED (limit inListMax+1 on the persisted shortlist): an
-    // OFFLINE rerank over a huge query set would OOM the driver and
-    // produce an unplannable In list, so past the cap the fetch falls back
-    // to a semi-join of the id set against the sorted vectors store —
-    // fully distributed, losing only row-group pruning on that path.
-    val capped = idsDf.limit(inListMax + 1).collect()
-    val vecStore = store("vectors")
-    val raw =
-      if (capped.length <= inListMax)
-        vecStore.filter(col("vec_id").isin(capped.map(_.getLong(0)).toSeq: _*))
-          .select(col("vec_id"), col("embedding"))
-      else
-        vecStore.join(idsDf, Seq("vec_id"), "left_semi")
-          .select(col("vec_id"), col("embedding"))
-    val rescored = short.join(raw, Seq("vec_id"))
-      .join(broadcast(luts.select(col("q_id"), col("q_vec"))), Seq("q_id"))
-      .withColumn("score", round(cosine(col("q_vec"), col("embedding")), 4))
-    rankTopK(rescored, k)
-  }
-
-  /** Build a STORED residual IVF-PQ index ([[pqResidualTopK]]'s layout —
-    * build once, probe forever): `centroids/` (raw float), `codebooks/`
-    * (RESIDUAL-trained, stored as DOUBLE arrays so the reader type is
-    * fixed whether trained or training-free), `meta/`,
-    * `codes/batch=0/cell=…` carrying (vec_id, codes, n2x) — the EXACT
-    * per-vector norm rides beside the codes, the FAISS stored-norm
-    * column cosine ADC needs — and `vectors/batch=0` for the exact
-    * refine. The same store views as [[writeIvfIndexPQ]], so probes
-    * DPP-prune identically.
-    */
-  def writeIvfIndexPQR(corpus: DataFrame, dir: String, nCells: Int,
-      mSub: Int, nCodes: Int, trainIters: Int = 0): Unit = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    val dim = corpus.select(size(col("embedding"))).head().getInt(0)
-    require(dim % mSub == 0, s"dim $dim not divisible by mSub $mSub")
-    val subDim = dim / mSub
-    val cents = centroidsOf(corpus, nCells)
-    cents.write.mode("overwrite").parquet(s"$dir/centroids")
-    val centsD = cents.select(col("cent_id"),
-      expr("transform(cvec, x -> CAST(x AS DOUBLE))").as("cv"))
-    val lists = narrowBestCell(corpus, cents, "vec_id", "embedding")
-      .persistScoped()
-    val resid = lists
-      .join(broadcast(centsD), col("cell") === col("cent_id"))
-      .select(col("vec_id"), col("cell"),
-        expr("zip_with(embedding, cv, (a, b) -> CAST(a AS DOUBLE) - b)")
-          .as("rv"),
-        expr("""aggregate(embedding, 0D,
-               (a, x) -> a + CAST(x AS DOUBLE) * CAST(x AS DOUBLE))""")
-          .as("n2x"))
-      .persistScoped()
-    val cb0 = resid.filter(col("vec_id") >= nCells) // centroid residuals = 0⃗
-      .orderBy(col("vec_id")).limit(nCodes)
-      .select(col("vec_id"), col("rv"))
-      .withColumn("code", row_number().over(
-        org.apache.spark.sql.expressions.Window.orderBy(col("vec_id"))) - 1)
-      .select(explode(expr(s"sequence(0, ${mSub - 1})")).as("m"), col("code"),
-        expr(s"slice(rv, m * $subDim + 1, $subDim)").as("cvec"))
-      .localCheckpoint()
-    require(cb0.count() == mSub.toLong * nCodes,
-      s"residual-PQ codebook init needs >= $nCodes non-centroid vectors")
-    val sub = resid.select(col("vec_id"),
-      explode(expr(s"sequence(0, ${mSub - 1})")).as("m"),
-      expr(s"slice(rv, m * $subDim + 1, $subDim)").as("sv"))
-    val cb = pqLloyd(sub, cb0, trainIters)
-    cb.select(col("m"), col("code"),
-      expr("transform(cvec, x -> CAST(x AS DOUBLE))").as("cvec"))
-      .write.mode("overwrite").parquet(s"$dir/codebooks")
-    cbGridOk.removeIf(_._1 == dir)
-    Seq((mSub, nCodes, subDim)).toDF("m_sub", "n_codes", "sub_dim")
-      .write.mode("overwrite").parquet(s"$dir/meta")
-    val codes = pqAssign(sub, cb)
-      .groupBy(col("vec_id"))
-      .agg(sort_array(collect_list(struct(col("m"), col("code")))).as("e"))
-      .select(col("vec_id"),
-        expr("transform(e, x -> CAST(x.code AS INT))").as("codes"))
-    Compaction.build(spark, dir,
-      PqCodes -> codes.join(resid.select(col("vec_id"), col("cell"), col("n2x")),
-          Seq("vec_id"))
-        .select(col("vec_id"), col("codes"), col("n2x"),
-          col("cell").cast("int").as("cell")),
-      PqVectors -> sortedVectors(corpus))
-  }
-
-  /** Replay-safe incremental ingestion into a [[writeIvfIndexPQR]] index:
-    * the batch assigns against the FROZEN stored centroids, takes its
-    * residuals against them, and encodes against the FROZEN stored
-    * residual codebooks (both broadcast — the quantizer contract of
-    * [[ingestIntoIvfIndexPQ]] at the residual level), computing each
-    * vector's EXACT norm at encode time; then ingests both views
-    * ([[Compaction.ingest]]). Compaction and deletion are the PQ layout's
-    * own ([[compactIvfIndexPQ]]/[[deleteFromIvfIndexPQ]]; the n2x column
-    * rides through both).
-    */
-  def ingestIntoIvfIndexPQR(newVectors: DataFrame, dir: String,
-      batchId: Long): Unit = {
-    val spark = newVectors.sparkSession
-    val cents = spark.read.parquet(s"$dir/centroids")
-    val meta = spark.read.parquet(s"$dir/meta").head()
-    val (mSub, nCodes, subDim) =
-      (meta.getAs[Int]("m_sub"), meta.getAs[Int]("n_codes"), meta.getAs[Int]("sub_dim"))
-    val cbRows = spark.read.parquet(s"$dir/codebooks")
-    require(cbRows.count() == mSub.toLong * nCodes,
-      s"codebook rows != m_sub×n_codes ($mSub×$nCodes) at $dir")
-    val centsD = cents.select(col("cent_id"),
-      expr("transform(cvec, x -> CAST(x AS DOUBLE))").as("cv"))
-    val resid = narrowBestCell(newVectors, cents, "vec_id", "embedding")
-      .join(broadcast(centsD), col("cell") === col("cent_id"))
-      .select(col("vec_id"), col("cell"),
-        expr("zip_with(embedding, cv, (a, b) -> CAST(a AS DOUBLE) - b)")
-          .as("rv"),
-        expr("""aggregate(embedding, 0D,
-               (a, x) -> a + CAST(x AS DOUBLE) * CAST(x AS DOUBLE))""")
-          .as("n2x"))
-    val sub = resid.select(col("vec_id"),
-      explode(expr(s"sequence(0, ${mSub - 1})")).as("m"),
-      expr(s"slice(rv, m * $subDim + 1, $subDim)").as("sv"))
-    Compaction.ingest(spark, dir, batchId,
-      PqCodes -> pqAssign(sub, cbRows)
-        .groupBy(col("vec_id"))
-        .agg(sort_array(collect_list(struct(col("m"), col("code")))).as("e"))
-        .select(col("vec_id"),
-          expr("transform(e, x -> CAST(x.code AS INT))").as("codes"))
-        .join(resid.select(col("vec_id"), col("cell"), col("n2x")), Seq("vec_id"))
-        .select(col("vec_id"), col("codes"), col("n2x"),
-          col("cell").cast("int").as("cell")),
-      PqVectors -> newVectors.select(col("vec_id"), col("embedding")))
-  }
-
-  /** Probe a [[writeIvfIndexPQR]] index — [[ivfTopKAgainstIndexPQ]]'s
-    * probe with the residual decomposition: ADC estimates
-    * ⟨q, x⟩ = ⟨q, c(cell)⟩ + Σ_m lut[m·nCodes + codes[m]] (the native
-    * [[graft.functions.PqAdcExpr]] fold), normalized by the query norm
-    * and the EXACT stored ‖x‖. Identical output to [[pqResidualTopK]]
-    * over the indexed corpus (the stored ≡ direct contract, hash-gated).
-    */
-  def ivfTopKAgainstIndexPQR(queries: DataFrame, dir: String, nProbe: Int,
-      k: Int, shortlist: Int = 50,
-      inListMax: Int = DefaultInListMax): DataFrame = {
-    val spark = queries.sparkSession
-    val cents = spark.read.parquet(s"$dir/centroids")
-    val meta = spark.read.parquet(s"$dir/meta").head()
-    val (mSub, nCodes, subDim) =
-      (meta.getAs[Int]("m_sub"), meta.getAs[Int]("n_codes"), meta.getAs[Int]("sub_dim"))
-    val store = Compaction.snapshot(spark, dir)
-    val codes = store("codes")
-    val cbRows = spark.read.parquet(s"$dir/codebooks")
-    val cbFp = artifactFingerprint(spark, s"$dir/codebooks")
-    if (!cbGridOk.contains((dir, mSub, nCodes, cbFp))) {
-      require(cbRows.count() == mSub.toLong * nCodes,
-        s"codebook rows != m_sub×n_codes ($mSub×$nCodes) at $dir — " +
-          "corrupt or mismatched index")
-      cbGridOk.add((dir, mSub, nCodes, cbFp))
+    storedModel(spark, dir, cents) match {
+      case None => exactTopK(store("lists"), probes, "cell", k)
+      case Some(m) => refine(m.approx(queries, probes, store("codes")),
+        store("vectors"), k, shortlist, inListMax)
     }
-    val luts = queries
-      .crossJoin(broadcast(cbRows))
-      .select(col("q_id"), col("q_vec"), col("m"), col("code"),
-        expr(s"""aggregate(zip_with(slice(q_vec, m * $subDim + 1, $subDim), cvec,
-                 (x, y) -> CAST(x AS DOUBLE) * y), 0D, (a, v) -> a + v)""")
-          .as("d"))
-      .groupBy(col("q_id"))
-      .agg(array_sort(collect_list(struct(col("m"), col("code"), col("d")))).as("e"),
-        first(col("q_vec")).as("q_vec"))
-      .select(col("q_id"), col("q_vec"),
-        transform(col("e"), x => x.getField("d")).as("lut"),
-        sqrt(expr(
-          "aggregate(q_vec, 0D, (a, x) -> a + CAST(x AS DOUBLE) * CAST(x AS DOUBLE))"))
-          .as("qn"))
-      .persistScoped() // feeds the ADC scan AND the exact-rerank join
-    val centsD = cents.select(col("cent_id"),
-      expr("transform(cvec, x -> CAST(x AS DOUBLE))").as("cv"))
-    val probes = bestCells(queries, cents, "q_id", "q_vec", nProbe)
-      .withColumn("cell", col("cell").cast("int"))
-      .join(broadcast(centsD), col("cell") === col("cent_id"))
-      .select(col("q_id"), col("cell"),
-        expr("aggregate(zip_with(q_vec, cv, (x, y) -> CAST(x AS DOUBLE) * y), 0D, (a, v) -> a + v)")
-          .as("qc"))
-      .join(luts, Seq("q_id"))
-    val adc = round(
-      (col("qc") + graft.functions.pq_adc(col("codes"), col("lut"), nCodes)) /
-        (col("qn") * sqrt(col("n2x"))),
-      4)
-    val short = codes.join(broadcast(probes), Seq("cell"))
-      .filter(col("q_id") =!= col("vec_id"))
-      .withColumn("adc", adc)
-      .groupBy(col("q_id"))
-      .agg(graft.functions.topk_by_score(col("adc"), col("vec_id"), shortlist).as("top"))
-      .select(col("q_id"), explode(col("top.id")).as("vec_id"))
-      .persistScoped() // feeds the id fetch AND the exact-rerank join
-    val idsDf = short.select(col("vec_id")).distinct()
-    val capped = idsDf.limit(inListMax + 1).collect()
-    val vecStore = store("vectors")
-    val raw =
-      if (capped.length <= inListMax)
-        vecStore.filter(col("vec_id").isin(capped.map(_.getLong(0)).toSeq: _*))
-          .select(col("vec_id"), col("embedding"))
-      else
-        vecStore.join(idsDf, Seq("vec_id"), "left_semi")
-          .select(col("vec_id"), col("embedding"))
-    val rescored = short.join(raw, Seq("vec_id"))
-      .join(broadcast(luts.select(col("q_id"), col("q_vec"))), Seq("q_id"))
-      .withColumn("score", round(cosine(col("q_vec"), col("embedding")), 4))
-    rankTopK(rescored, k)
   }
 
   /** Pairwise cosine similarity of per-GROUP embedding centroids — the
@@ -1427,15 +1292,7 @@ object Similarity {
     // the centroid broadcast-score pass runs twice
     val lists = narrowBestCell(corpus, cents, "vec_id", "embedding")
       .persistScoped()
-    val drops = lists.as("x")
-      .join(lists.as("y"),
-        col("x.cell") === col("y.cell") && col("x.vec_id") < col("y.vec_id"))
-      .filter(round(cosine(col("x.embedding"), col("y.embedding")), 4)
-        >= threshold)
-      .select(col("y.vec_id").as("drop_id"))
-      .distinct()
-    corpus.join(drops, col("vec_id") === col("drop_id"), "left_anti")
-      .select(col("vec_id"))
+    inCellSurvivors(corpus, lists, threshold)
   }
 
   /** Cross-cell recall variant of [[semanticDedup]]: each vector enters
@@ -1456,15 +1313,7 @@ object Similarity {
     val cents = centroidsOf(corpus, nCells)
     val lists = bestCells(corpus, cents, "vec_id", "embedding", nAssign)
       .persistScoped()
-    val drops = lists.as("x")
-      .join(lists.as("y"),
-        col("x.cell") === col("y.cell") && col("x.vec_id") < col("y.vec_id"))
-      .filter(round(cosine(col("x.embedding"), col("y.embedding")), 4)
-        >= threshold)
-      .select(col("y.vec_id").as("drop_id"))
-      .distinct()
-    corpus.join(drops, col("vec_id") === col("drop_id"), "left_anti")
-      .select(col("vec_id"))
+    inCellSurvivors(corpus, lists, threshold)
   }
 
   /** Scale-capped semantic dedup — [[semanticDedup]] with the cell
@@ -1516,6 +1365,21 @@ object Similarity {
     // whole quantize/split pipeline runs twice
     val cells = cappedCells(corpus, targetCellSize, fanout, nAssign)
       .persistScoped()
+    // survivors = corpus minus exact-collapse drops minus in-cell drops;
+    // the semi-join against the (already persisted) assignment covers the
+    // former — non-representatives never entered a cell
+    inCellSurvivors(
+      corpus.join(cells.select(col("vec_id")), Seq("vec_id"), "left_semi"),
+      cells, threshold)
+  }
+
+  /** The ids of `corpus` that survive in-cell dedup over `cells` (vec_id,
+    * embedding, cell): a vector with rounded cosine ≥ threshold to a
+    * lower-id vector of a cell they share drops. A pair may share several
+    * cells, so the drop set is distinct.
+    */
+  private def inCellSurvivors(corpus: DataFrame, cells: DataFrame,
+      threshold: Double): DataFrame = {
     val drops = cells.as("x")
       .join(cells.as("y"),
         col("x.cell") === col("y.cell") && col("x.vec_id") < col("y.vec_id"))
@@ -1523,11 +1387,7 @@ object Similarity {
         >= threshold)
       .select(col("y.vec_id").as("drop_id"))
       .distinct()
-    // survivors = corpus minus exact-collapse drops minus in-cell drops;
-    // the semi-join against the (already persisted) assignment covers the
-    // former — non-representatives never entered a cell
-    corpus.join(cells.select(col("vec_id")), Seq("vec_id"), "left_semi")
-      .join(drops, col("vec_id") === col("drop_id"), "left_anti")
+    corpus.join(drops, col("vec_id") === col("drop_id"), "left_anti")
       .select(col("vec_id"))
   }
 
@@ -1597,7 +1457,7 @@ object Similarity {
       .unionByName(resplit)
     // -- step 4: id-hash salt for cells the split could not separate -------
     val sizes2 = afterSplit.groupBy(col("cell")).agg(count(lit(1)).as("sz"))
-    val salted = afterSplit
+    afterSplit
       .join(sizes2, Seq("cell"))
       .withColumn("cell",
         when(col("sz") > cap,
@@ -1606,7 +1466,6 @@ object Similarity {
               ceil(col("sz") / lit(targetCellSize.toDouble)).cast("long"))))
           .otherwise(col("cell")))
       .select(col("vec_id"), col("embedding"), col("cell"))
-    salted
   }
 
   /** Embedding near-duplicate pairs: all pairs with cosine ≥ threshold,

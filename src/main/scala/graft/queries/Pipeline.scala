@@ -1541,9 +1541,9 @@ object Pipeline {
     val queries = e.filter(col("vec_id") % QueryMod === 0)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_vec"))
     val dir = RunCache.dir(t.dir, s"ivf_pq_${IvfCells}_${PqM}_$PqCodes")(
-      d => Similarity.writeIvfIndexPQ(e, d, IvfCells, PqM, PqCodes,
-        trainIters = 0))
-    Similarity.ivfTopKAgainstIndexPQ(queries, dir, IvfProbe, TopK, PqShort)
+      d => Similarity.writeIvfIndexVersioned(e, d, IvfCells,
+        codec = Similarity.IvfCodec.Pq(PqM, PqCodes, trainIters = 0)))
+    Similarity.ivfTopKAgainstIndex(queries, dir, IvfProbe, TopK, PqShort)
   }
 
   private val q168Sql = {
@@ -1703,9 +1703,9 @@ object Pipeline {
     val queries = e.filter(col("vec_id") % QueryMod === 0)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_vec"))
     val dir = RunCache.dir(t.dir, s"ivf_pqr_${IvfCells}_${PqM}_$PqCodes")(
-      d => Similarity.writeIvfIndexPQR(e, d, IvfCells, PqM, PqCodes,
-        trainIters = 0))
-    Similarity.ivfTopKAgainstIndexPQR(queries, dir, IvfProbe, TopK, PqShort)
+      d => Similarity.writeIvfIndexVersioned(e, d, IvfCells,
+        codec = Similarity.IvfCodec.Pqr(PqM, PqCodes, trainIters = 0)))
+    Similarity.ivfTopKAgainstIndex(queries, dir, IvfProbe, TopK, PqShort)
   }
 
   // ===== q169 Gopher-style repetition filter =============================
@@ -3298,9 +3298,9 @@ object Pipeline {
 
   private def q256(t: Tables): DataFrame = {
     val textDir = RunCache.dir(t.dir, "pair_text_idx") { d =>
-      Dedup.writeCorpusIndexVersioned(
+      Dedup.writeCorpusIndexBatch(
         t.documents.filter(col("doc_id") % 4 === 0)
-          .select(col("doc_id").as("id"), col("text")), d)
+          .select(col("doc_id").as("id"), col("text")), d, 0L, 3, 64, 16)
     }
     val imgDir = RunCache.dir(t.dir, s"pair_img_idx_$AHashGroups") { d =>
       Dedup.writeAHashIndex(
@@ -3991,11 +3991,11 @@ object Pipeline {
   }
 
   // ===== q217 stored IVF-SQ8 index ========================================
-  // q215's production form: the FOURTH stored ANN layout (raw, PQ,
-  // residual-PQ, SQ8) — quantizer stats (2·dim doubles) frozen beside
-  // cell-partitioned 1-byte codes and the vec_id-sorted refine store;
-  // compaction/deletion are the PQ layout's schema-preserving ops,
-  // SHARED not reimplemented. Stored-and-probed ≡ the direct operator —
+  // q215's production form: the IVF store with the SQ8 codec —
+  // quantizer stats (2·dim doubles) frozen beside cell-partitioned
+  // 1-byte codes and the vec_id-sorted refine store, built, ingested,
+  // compacted, deleted and probed by the same defs as every other
+  // codec. Stored-and-probed ≡ the direct operator —
   // q215's oracle VERBATIM (the q209 contract on the fourth family);
   // the frozen-quantizer ingest lifecycle is spec-pinned.
 
@@ -4004,8 +4004,9 @@ object Pipeline {
     val queries = e.filter(col("vec_id") % QueryMod === 0)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_vec"))
     val dir = RunCache.dir(t.dir, s"ivf_sq8_$IvfCells")(
-      d => Similarity.writeIvfIndexSQ(e, d, IvfCells))
-    Similarity.ivfTopKAgainstIndexSQ(queries, dir, IvfProbe, TopK, SqShort)
+      d => Similarity.writeIvfIndexVersioned(e, d, IvfCells,
+        codec = Similarity.IvfCodec.Sq8))
+    Similarity.ivfTopKAgainstIndex(queries, dir, IvfProbe, TopK, SqShort)
   }
 
   // ===== q219 incremental connected-components labels =====================
@@ -8056,10 +8057,10 @@ object Pipeline {
 
   // ===== q83 stored-index incremental dedup ==============================
   // Same contract and oracle as q74, but the corpus side is a STORED
-  // index: writeCorpusIndexVersioned persists the derived views (text
-  // hashes, LSH band keys partitioned by band, shingle arrays, CDC
-  // chunks) to parquet, and the probe joins the batch against the first
-  // three — the production ingestion shape where a batch's dedup cost is
+  // index: the store's batch 0 holds the three derived views the probe
+  // joins against (text hashes, LSH band keys partitioned by band,
+  // shingle arrays; no CDC chunk view, which only the chunk report
+  // reads) — the production ingestion shape where a batch's dedup cost is
   // proportional to the BATCH, never the corpus. The build runs once per
   // (sf dir, params) and JVM, and later invocations probe the existing
   // index — exactly the ingestion-time cost model the operator exists to
@@ -8068,8 +8069,8 @@ object Pipeline {
   private def q83(t: Tables): DataFrame = {
     val d = graft.Fanout(t.documents.select(col("doc_id").as("id"), col("text")))
     val dir = RunCache.dir(t.dir, s"corpus_index_3_${MinHashes}_$Bands")(
-      dd => Dedup.writeCorpusIndexVersioned(d.filter(col("id") % 10 =!= 7), dd,
-        3, MinHashes, Bands))
+      dd => Dedup.writeCorpusIndexBatch(d.filter(col("id") % 10 =!= 7), dd,
+        0L, 3, MinHashes, Bands))
     Dedup.dedupAgainstIndex(d.filter(col("id") % 10 === 7), dir,
       3, MinHashes, Bands, CorpusT)
       .select(col("id"))

@@ -559,11 +559,12 @@ class PlanShapeSpec extends AnyFunSuite {
       .select(col("vec_id"), col("embedding"))
     val dir = Files.createTempDirectory("ivf-pq-plan").toString
     try {
-      graft.operators.Similarity.writeIvfIndexPQ(emb, dir, 16, 8, 16)
+      graft.operators.Similarity.writeIvfIndexVersioned(emb, dir, 16,
+        codec = graft.operators.Similarity.IvfCodec.Pq(8, 16))
       val queries = emb.filter(col("vec_id") % 50 === 0)
         .select(col("vec_id").as("q_id"), col("embedding").as("q_vec"))
       val p = plan(graft.operators.Similarity
-        .ivfTopKAgainstIndexPQ(queries, dir, 2, 10))
+        .ivfTopKAgainstIndex(queries, dir, 2, 10))
       assert(p.toLowerCase.contains("dynamicpruningexpression(cell"), p)
       assert(p.contains("BroadcastHashJoin"), p)
     } finally CacheScope.drain()
@@ -577,11 +578,12 @@ class PlanShapeSpec extends AnyFunSuite {
       .select(col("vec_id"), col("embedding"))
     val dir = Files.createTempDirectory("ivf-pqr-plan").toString
     try {
-      graft.operators.Similarity.writeIvfIndexPQR(emb, dir, 16, 8, 16)
+      graft.operators.Similarity.writeIvfIndexVersioned(emb, dir, 16,
+        codec = graft.operators.Similarity.IvfCodec.Pqr(8, 16))
       val queries = emb.filter(col("vec_id") % 50 === 0)
         .select(col("vec_id").as("q_id"), col("embedding").as("q_vec"))
       val p = plan(graft.operators.Similarity
-        .ivfTopKAgainstIndexPQR(queries, dir, 2, 10))
+        .ivfTopKAgainstIndex(queries, dir, 2, 10))
       assert(p.toLowerCase.contains("dynamicpruningexpression(cell"), p)
       assert(p.contains("BroadcastHashJoin"), p)
     } finally CacheScope.drain()

@@ -126,11 +126,24 @@ class CompactionSpec extends AnyFunSuite {
         Similarity.compactIvfIndex(spark, _),
         Similarity.ingestIntoIvfIndex(back, _, 1L),
         Similarity.ivfTopKAgainstIndex(queries, _, 2, 3).count()),
-      Family("pq", Similarity.writeIvfIndexPQ(emb, _, 4, 8, 16), emb,
-        Similarity.deleteFromIvfIndexPQ(spark, _, _),
-        Similarity.compactIvfIndexPQ(spark, _),
-        Similarity.ingestIntoIvfIndexPQ(back, _, 1L),
-        Similarity.ivfTopKAgainstIndexPQ(queries, _, 2, 3).count()),
+      Family("pq", Similarity.writeIvfIndexVersioned(emb, _, 4,
+        codec = Similarity.IvfCodec.Pq(8, 16)), emb,
+        Similarity.deleteFromIvfIndex(spark, _, _),
+        Similarity.compactIvfIndex(spark, _),
+        Similarity.ingestIntoIvfIndex(back, _, 1L),
+        Similarity.ivfTopKAgainstIndex(queries, _, 2, 3).count()),
+      Family("sq8", Similarity.writeIvfIndexVersioned(emb, _, 4,
+        codec = Similarity.IvfCodec.Sq8), emb,
+        Similarity.deleteFromIvfIndex(spark, _, _),
+        Similarity.compactIvfIndex(spark, _),
+        Similarity.ingestIntoIvfIndex(back, _, 1L),
+        Similarity.ivfTopKAgainstIndex(queries, _, 2, 3).count()),
+      Family("pqr", Similarity.writeIvfIndexVersioned(emb, _, 4,
+        codec = Similarity.IvfCodec.Pqr(8, 16)), emb,
+        Similarity.deleteFromIvfIndex(spark, _, _),
+        Similarity.compactIvfIndex(spark, _),
+        Similarity.ingestIntoIvfIndex(back, _, 1L),
+        Similarity.ivfTopKAgainstIndex(queries, _, 2, 3).count()),
       Family("bm25", Retrieval.writeBm25IndexVersioned(terms, _, 4), terms,
         Retrieval.deleteFromBm25Index(spark, _, _),
         Retrieval.compactBm25Index(spark, _),

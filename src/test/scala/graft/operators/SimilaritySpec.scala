@@ -279,9 +279,10 @@ class SimilaritySpec extends AnyFunSuite {
         exact.map { case (q, e) =>
           approx.getOrElse(q, Set.empty).count(e).toDouble / e.size
         }.sum / exact.size
-      Similarity.writeIvfIndexPQ(emb, dir, 16, mSub = 8, nCodes = 16)
+      Similarity.writeIvfIndexVersioned(emb, dir, 16,
+        codec = Similarity.IvfCodec.Pq(mSub = 8, nCodes = 16))
       Similarity.writeIvfIndexVersioned(emb, dirRaw, 16)
-      val pq = recall(topSet(Similarity.ivfTopKAgainstIndexPQ(queries, dir, 2, 10)))
+      val pq = recall(topSet(Similarity.ivfTopKAgainstIndex(queries, dir, 2, 10)))
       val raw = recall(topSet(Similarity.ivfTopKAgainstIndex(queries, dirRaw, 2, 10)))
       assert(pq >= 0.28, s"PQ recall $pq (raw-list probe measured ~0.305)")
       assert(pq >= raw - 0.02,
@@ -292,7 +293,7 @@ class SimilaritySpec extends AnyFunSuite {
       assert(codesBytes * 4 < rawBytes,
         s"codes $codesBytes !≪ raw $rawBytes")
       // re-ranked scores are the EXACT rounded cosine (not ADC estimates)
-      val out = Similarity.ivfTopKAgainstIndexPQ(queries, dir, 2, 10)
+      val out = Similarity.ivfTopKAgainstIndex(queries, dir, 2, 10)
         .select("q_id", "vec_id", "score").as[(Long, Long, Double)].collect()
       val byId = emb.as[(Long, Array[Float])].collect().toMap
       def cosD(a: Array[Float], b: Array[Float]): Double = {
@@ -330,10 +331,10 @@ class SimilaritySpec extends AnyFunSuite {
         exact.map { case (q, e) =>
           approx.getOrElse(q, Set.empty).count(e).toDouble / e.size
         }.sum / exact.size
-      Similarity.writeIvfIndexPQ(emb, dir, 16, mSub = 8, nCodes = 16,
-        trainIters = 3)
+      Similarity.writeIvfIndexVersioned(emb, dir, 16,
+        codec = Similarity.IvfCodec.Pq(mSub = 8, nCodes = 16, trainIters = 3))
       val raw = recall(topSet(
-        Similarity.ivfTopKAgainstIndexPQ(queries, dir, 2, 10, shortlist = 10)))
+        Similarity.ivfTopKAgainstIndex(queries, dir, 2, 10, shortlist = 10)))
       val res = recall(topSet(
         Similarity.pqResidualTopK(queries, emb, 16, 8, 16, 2, 10,
           shortlist = 10, trainIters = 3)))
@@ -446,22 +447,24 @@ class SimilaritySpec extends AnyFunSuite {
     val dirFull = java.nio.file.Files.createTempDirectory("ivf-sq-full").toString
     try {
       def probe(d: String = dir) =
-        Similarity.ivfTopKAgainstIndexSQ(queries, d, 2, 10)
+        Similarity.ivfTopKAgainstIndex(queries, d, 2, 10)
           .select("q_id", "vec_id", "score", "rnk")
           .as[(Long, Long, Double, Long)].collect().toSet
       // stored ≡ direct over the same corpus (the gate contract, locally)
-      Similarity.writeIvfIndexSQ(emb, dirFull, 16)
+      Similarity.writeIvfIndexVersioned(emb, dirFull, 16,
+        codec = Similarity.IvfCodec.Sq8)
       val direct = Similarity.sq8TopK(queries, emb, 16, 2, 10)
         .select("q_id", "vec_id", "score", "rnk")
         .as[(Long, Long, Double, Long)].collect().toSet
       assert(probe(dirFull) == direct && direct.nonEmpty)
       // lifecycle: build half, ingest the other half against the FROZEN
       // quantizer (stats stay the build's — the rebuild-and-swap contract)
-      Similarity.writeIvfIndexSQ(emb.filter($"vec_id" % 2 === 0), dir, 16)
+      Similarity.writeIvfIndexVersioned(emb.filter($"vec_id" % 2 === 0), dir, 16,
+        codec = Similarity.IvfCodec.Sq8)
       val statsBefore = spark.read.parquet(s"$dir/sqstats")
         .as[(Int, Double, Double)].collect().toSet
       val buildOnly = probe()
-      Similarity.ingestIntoIvfIndexSQ(emb.filter($"vec_id" % 2 === 1), dir, 1L)
+      Similarity.ingestIntoIvfIndex(emb.filter($"vec_id" % 2 === 1), dir, 1L)
       assert(spark.read.parquet(s"$dir/sqstats")
         .as[(Int, Double, Double)].collect().toSet == statsBefore,
         "ingest must not move the frozen quantizer stats")
@@ -469,14 +472,14 @@ class SimilaritySpec extends AnyFunSuite {
       assert(afterIngest.exists(_._2 % 2 == 1), "ingested vectors invisible")
       assert(afterIngest != buildOnly)
       // replayed ingest converges to the identical index
-      Similarity.ingestIntoIvfIndexSQ(emb.filter($"vec_id" % 2 === 1), dir, 1L)
+      Similarity.ingestIntoIvfIndex(emb.filter($"vec_id" % 2 === 1), dir, 1L)
       assert(probe() == afterIngest)
       // compaction (the PQ layout's shared op) is probe-identical
-      Similarity.compactIvfIndexPQ(spark, dir)
+      Similarity.compactIvfIndex(spark, dir)
       assert(probe() == afterIngest)
       // deletion erases: deleted ids never appear again, bytes gone
       val victims = emb.filter($"vec_id" % 10 === 3).select($"vec_id")
-      Similarity.deleteFromIvfIndexPQ(spark, dir, victims)
+      Similarity.deleteFromIvfIndex(spark, dir, victims)
       val afterDelete = probe()
       assert(!afterDelete.exists(_._2 % 10 == 3), "deleted ids still probed")
       assert(afterDelete.nonEmpty)
@@ -490,25 +493,26 @@ class SimilaritySpec extends AnyFunSuite {
       .select($"vec_id".as("q_id"), $"embedding".as("q_vec"))
     val dir = java.nio.file.Files.createTempDirectory("ivf-pqr-lc").toString
     try {
-      def probe() = Similarity.ivfTopKAgainstIndexPQR(queries, dir, 2, 10)
+      def probe() = Similarity.ivfTopKAgainstIndex(queries, dir, 2, 10)
         .select("q_id", "vec_id", "score", "rnk")
         .as[(Long, Long, Double, Long)].collect().toSet
-      Similarity.writeIvfIndexPQR(emb.filter($"vec_id" % 2 === 0), dir, 16, 8, 16)
+      Similarity.writeIvfIndexVersioned(emb.filter($"vec_id" % 2 === 0), dir, 16,
+        codec = Similarity.IvfCodec.Pqr(8, 16))
       val buildOnly = probe()
-      Similarity.ingestIntoIvfIndexPQR(emb.filter($"vec_id" % 2 === 1), dir, 1L)
+      Similarity.ingestIntoIvfIndex(emb.filter($"vec_id" % 2 === 1), dir, 1L)
       val afterIngest = probe()
       // the ingested half is visible (odd ids can now be retrieved)
       assert(afterIngest.exists(_._2 % 2 == 1), "ingested vectors invisible")
       assert(afterIngest != buildOnly)
       // replayed ingest converges to the identical index
-      Similarity.ingestIntoIvfIndexPQR(emb.filter($"vec_id" % 2 === 1), dir, 1L)
+      Similarity.ingestIntoIvfIndex(emb.filter($"vec_id" % 2 === 1), dir, 1L)
       assert(probe() == afterIngest)
       // compaction is probe-identical (n2x must survive the fold)
-      Similarity.compactIvfIndexPQ(spark, dir)
+      Similarity.compactIvfIndex(spark, dir)
       assert(probe() == afterIngest)
       // deletion erases: deleted ids never appear again
       val victims = emb.filter($"vec_id" % 10 === 3).select($"vec_id")
-      Similarity.deleteFromIvfIndexPQ(spark, dir, victims)
+      Similarity.deleteFromIvfIndex(spark, dir, victims)
       val afterDelete = probe()
       assert(!afterDelete.exists(_._2 % 10 == 3), "deleted ids still probed")
       assert(afterDelete.nonEmpty)
@@ -522,7 +526,7 @@ class SimilaritySpec extends AnyFunSuite {
       .select($"vec_id".as("q_id"), $"embedding".as("q_vec"))
     val dir = java.nio.file.Files.createTempDirectory("ivf-pq-inc").toString
     val dirFull = java.nio.file.Files.createTempDirectory("ivf-pq-full").toString
-    def probe(d: String) = Similarity.ivfTopKAgainstIndexPQ(queries, d, 2, 10)
+    def probe(d: String) = Similarity.ivfTopKAgainstIndex(queries, d, 2, 10)
       .as[(Long, Long, Double, Long)].collect().sortBy(r => (r._1, r._4)).toSeq
     try {
       // build on the initial slice (centroid + codebook id ranges included,
@@ -531,17 +535,19 @@ class SimilaritySpec extends AnyFunSuite {
       // EQUAL a from-scratch build over the union
       val initial = emb.filter($"vec_id" < 16 || $"vec_id" % 3 =!= 1)
       val batch = emb.filter($"vec_id" >= 16 && $"vec_id" % 3 === 1)
-      Similarity.writeIvfIndexPQ(initial, dir, 16, 8, 16, trainIters = 0)
-      Similarity.ingestIntoIvfIndexPQ(batch, dir, 1L)
-      Similarity.writeIvfIndexPQ(emb, dirFull, 16, 8, 16, trainIters = 0)
+      Similarity.writeIvfIndexVersioned(initial, dir, 16,
+        codec = Similarity.IvfCodec.Pq(8, 16, trainIters = 0))
+      Similarity.ingestIntoIvfIndex(batch, dir, 1L)
+      Similarity.writeIvfIndexVersioned(emb, dirFull, 16,
+        codec = Similarity.IvfCodec.Pq(8, 16, trainIters = 0))
       val p1 = probe(dir)
       assert(p1 == probe(dirFull), "build+ingest must equal the from-scratch union build")
       // crash-replay of batch 1: identical contents, identical probe
-      Similarity.ingestIntoIvfIndexPQ(batch, dir, 1L)
+      Similarity.ingestIntoIvfIndex(batch, dir, 1L)
       assert(probe(dir) == p1)
       assert(spark.read.parquet(s"$dir/codes").count() == emb.count())
       // compaction: epoch swap, probe-identical, consolidated batches
-      assert(Similarity.compactIvfIndexPQ(spark, dir) == 1)
+      assert(Similarity.compactIvfIndex(spark, dir) == 1)
       assert(probe(dir) == p1, "probe must be identical across PQ compaction")
       assert(!new java.io.File(s"$dir/codes").exists())
       assert(spark.read.parquet(s"$dir/codes_e1")
@@ -549,7 +555,7 @@ class SimilaritySpec extends AnyFunSuite {
       assert(spark.read.parquet(s"$dir/vectors_e1").count() == emb.count())
       // post-compaction ingest lands in the new epoch and is probed
       val extraId = emb.agg(max($"vec_id")).as[Long].head() + 1
-      Similarity.ingestIntoIvfIndexPQ(
+      Similarity.ingestIntoIvfIndex(
         emb.filter($"vec_id" === 0).select(lit(extraId).as("vec_id"), $"embedding"),
         dir, 2L)
       assert(probe(dir).exists(_._2 == extraId))
@@ -648,17 +654,19 @@ class SimilaritySpec extends AnyFunSuite {
     val dir = java.nio.file.Files.createTempDirectory("pq-del").toString
     val dir2 = java.nio.file.Files.createTempDirectory("pq-del2").toString
     def probe(d: String) =
-      Similarity.ivfTopKAgainstIndexPQ(queries, d, 2, 10, 50)
+      Similarity.ivfTopKAgainstIndex(queries, d, 2, 10, 50)
         .as[(Long, Long, Double, Long)].collect().sortBy(r => (r._1, r._4)).toSeq
     try {
-      Similarity.writeIvfIndexPQ(emb, dir, 16, 8, 16, trainIters = 0)
+      Similarity.writeIvfIndexVersioned(emb, dir, 16,
+        codec = Similarity.IvfCodec.Pq(8, 16, trainIters = 0))
       val delSet = del.as[Long].collect().toSet
       val pre = probe(dir)
       assert(pre.exists(r => delSet(r._2)))
-      assert(Similarity.deleteFromIvfIndexPQ(spark, dir, del) == 1)
+      assert(Similarity.deleteFromIvfIndex(spark, dir, del) == 1)
       val post = probe(dir)
       assert(post.forall(r => !delSet(r._2)) && post != pre)
-      Similarity.writeIvfIndexPQ(survivors, dir2, 16, 8, 16, trainIters = 0)
+      Similarity.writeIvfIndexVersioned(survivors, dir2, 16,
+        codec = Similarity.IvfCodec.Pq(8, 16, trainIters = 0))
       assert(post == probe(dir2), "delete must equal a survivors-only build")
       // BOTH stores erased — the refine store holds the actual embeddings,
       // so a codes-only delete would leave the data recoverable
@@ -681,7 +689,8 @@ class SimilaritySpec extends AnyFunSuite {
       val p = Similarity.pqDimPermutation(64)
       assert(p.sorted.toSeq == (0 until 64) && p.toSeq != (0 until 64),
         "must be a non-identity permutation")
-      Similarity.writeIvfIndexPQ(emb01, dir, 16, 8, 16, permuteDims = true)
+      Similarity.writeIvfIndexVersioned(emb01, dir, 16,
+        codec = Similarity.IvfCodec.Pq(8, 16, permuteDims = true))
       assert(spark.read.parquet(s"$dir/meta").head()
         .getAs[scala.collection.Seq[Int]]("perm").nonEmpty)
       // recall@10 must hold the existing PQ pin (measured ~0.305 both
@@ -691,7 +700,7 @@ class SimilaritySpec extends AnyFunSuite {
         df.select("q_id", "vec_id").as[(Long, Long)].collect()
           .groupBy(_._1).map { case (q, a) => q -> a.map(_._2).toSet }
       val exact = topSet(Similarity.bruteForceTopK(queries01, emb01, 10))
-      val approx = topSet(Similarity.ivfTopKAgainstIndexPQ(queries01, dir, 2, 10))
+      val approx = topSet(Similarity.ivfTopKAgainstIndex(queries01, dir, 2, 10))
       val recall = exact.map { case (q, e) =>
         approx.getOrElse(q, Set.empty).count(e).toDouble / e.size
       }.sum / exact.size
@@ -706,16 +715,16 @@ class SimilaritySpec extends AnyFunSuite {
       .select($"vec_id".as("q_id"), $"embedding".as("q_vec"))
     val dir = java.nio.file.Files.createTempDirectory("pq-perm-inc").toString
     val dirFull = java.nio.file.Files.createTempDirectory("pq-perm-full").toString
-    def probe(d: String) = Similarity.ivfTopKAgainstIndexPQ(queries, d, 2, 10)
+    def probe(d: String) = Similarity.ivfTopKAgainstIndex(queries, d, 2, 10)
       .as[(Long, Long, Double, Long)].collect().sortBy(r => (r._1, r._4)).toSeq
     try {
       val initial = emb.filter($"vec_id" < 16 || $"vec_id" % 3 =!= 1)
       val batch = emb.filter($"vec_id" >= 16 && $"vec_id" % 3 === 1)
-      Similarity.writeIvfIndexPQ(initial, dir, 16, 8, 16, trainIters = 0,
-        permuteDims = true)
-      Similarity.ingestIntoIvfIndexPQ(batch, dir, 1L) // must read the perm
-      Similarity.writeIvfIndexPQ(emb, dirFull, 16, 8, 16, trainIters = 0,
-        permuteDims = true)
+      Similarity.writeIvfIndexVersioned(initial, dir, 16,
+        codec = Similarity.IvfCodec.Pq(8, 16, trainIters = 0, permuteDims = true))
+      Similarity.ingestIntoIvfIndex(batch, dir, 1L) // must read the perm
+      Similarity.writeIvfIndexVersioned(emb, dirFull, 16,
+        codec = Similarity.IvfCodec.Pq(8, 16, trainIters = 0, permuteDims = true))
       assert(probe(dir) == probe(dirFull),
         "ingest must encode with the STORED permutation")
     } finally graft.CacheScope.drain()
@@ -731,9 +740,10 @@ class SimilaritySpec extends AnyFunSuite {
       .select($"vec_id".as("q_id"), $"embedding".as("q_vec"))
     val dir = java.nio.file.Files.createTempDirectory("pq-fallback").toString
     try {
-      Similarity.writeIvfIndexPQ(emb, dir, 16, 8, 16, trainIters = 0)
+      Similarity.writeIvfIndexVersioned(emb, dir, 16,
+        codec = Similarity.IvfCodec.Pq(8, 16, trainIters = 0))
       def probe(cap: Int) =
-        Similarity.ivfTopKAgainstIndexPQ(queries, dir, 2, 10, 50, inListMax = cap)
+        Similarity.ivfTopKAgainstIndex(queries, dir, 2, 10, 50, inListMax = cap)
           .as[(Long, Long, Double, Long)].collect().sortBy(r => (r._1, r._4)).toSeq
       val inPath = probe(Similarity.DefaultInListMax)
       val joinPath = probe(0)

@@ -887,17 +887,19 @@ class EventStreamsSpec extends AnyFunSuite {
 
   ivfStoreCase("pqIngest + pqProbeIngest: streamed vectors extend the compressed index; serving ≡ offline",
     // training-free codebooks: the centroid and codebook ids are < 16
-    graft.operators.Similarity.writeIvfIndexPQ(_, _, 16, 8, 16, trainIters = 0),
-    graft.operators.Similarity.ingestIntoIvfIndexPQ(_, _, _),
-    graft.operators.Similarity.ivfTopKAgainstIndexPQ(_, _, 2, 10),
+    graft.operators.Similarity.writeIvfIndexVersioned(_, _, 16,
+      codec = graft.operators.Similarity.IvfCodec.Pq(8, 16, trainIters = 0)),
+    graft.operators.Similarity.ingestIntoIvfIndex(_, _, _),
+    graft.operators.Similarity.ivfTopKAgainstIndex(_, _, 2, 10),
     col("vec_id") < 16 || col("vec_id") % 3 =!= 1)
 
   ivfStoreCase("pqrIngest + pqrProbeIngest: streamed vectors extend the RESIDUAL index; serving ≡ offline",
     // centroid ids < 16, residual-codebook init ids: the first 16
     // NON-centroid ids, 16..31
-    graft.operators.Similarity.writeIvfIndexPQR(_, _, 16, 8, 16),
-    graft.operators.Similarity.ingestIntoIvfIndexPQR(_, _, _),
-    graft.operators.Similarity.ivfTopKAgainstIndexPQR(_, _, 2, 10),
+    graft.operators.Similarity.writeIvfIndexVersioned(_, _, 16,
+      codec = graft.operators.Similarity.IvfCodec.Pqr(8, 16)),
+    graft.operators.Similarity.ingestIntoIvfIndex(_, _, _),
+    graft.operators.Similarity.ivfTopKAgainstIndex(_, _, 2, 10),
     col("vec_id") < 32 || col("vec_id") % 3 =!= 1)
 
   test("sqIngest + sqProbeIngest: streamed vectors extend the SQ8 index; serving ≡ offline") {
@@ -908,15 +910,17 @@ class EventStreamsSpec extends AnyFunSuite {
     // a batch CAN extend a dim's range; it clamps, the FAISS behavior)
     val initial = e.filter(col("vec_id") % 3 =!= 1)
     val late = local(e.filter(col("vec_id") % 3 === 1))
-    graft.operators.Similarity.writeIvfIndexSQ(initial, idx, 16)
-    graft.operators.Similarity.writeIvfIndexSQ(initial, idx2, 16)
-    graft.operators.Similarity.ingestIntoIvfIndexSQ(late, idx2, 1L)
+    graft.operators.Similarity.writeIvfIndexVersioned(initial, idx, 16,
+      codec = graft.operators.Similarity.IvfCodec.Sq8)
+    graft.operators.Similarity.writeIvfIndexVersioned(initial, idx2, 16,
+      codec = graft.operators.Similarity.IvfCodec.Sq8)
+    graft.operators.Similarity.ingestIntoIvfIndex(late, idx2, 1L)
     checkStoreSink(Seq(idx), EventStreams.storeSink(
-        graft.operators.Similarity.ingestIntoIvfIndexSQ(_, idx, _)), Seq(late),
-      () => graft.operators.Similarity.ivfTopKAgainstIndexSQ(vecQueries, idx, 2, 10),
-      () => graft.operators.Similarity.ivfTopKAgainstIndexSQ(vecQueries, idx2, 2, 10))
+        graft.operators.Similarity.ingestIntoIvfIndex(_, idx, _)), Seq(late),
+      () => graft.operators.Similarity.ivfTopKAgainstIndex(vecQueries, idx, 2, 10),
+      () => graft.operators.Similarity.ivfTopKAgainstIndex(vecQueries, idx2, 2, 10))
     checkOutputSink(Seq(local(vecQueries)),
-      graft.operators.Similarity.ivfTopKAgainstIndexSQ(_, idx, 2, 10))
+      graft.operators.Similarity.ivfTopKAgainstIndex(_, idx, 2, 10))
   }
 
   test("bm25Ingest: streamed postings extend a versioned index; replay leaves it identical") {
