@@ -155,6 +155,43 @@ object Pipeline {
   private val Bands = 16
   private val JaccardT = 0.7
 
+  /** The MinHashes signature expressions over a hashed-shingle list `xs`,
+    * as one DuckDB list (Dedup's hash family, verbatim).
+    */
+  private def minhashSigSql: String =
+    (0 until MinHashes).map { i =>
+      s"list_min(list_transform(xs, x -> (${Dedup.hashA(i)}*x + ${Dedup.hashB(i)}) % ${Dedup.P}))"
+    }.mkString("[", ", ", "]")
+
+  /** MinHash-LSH oracle CTEs over `w(id, words)`: `d` (3-shingles), `h`
+    * (hashed shingles), `sig` (signatures) and `bands` (band keys).
+    */
+  private def lshBandCtesSql: String = {
+    val rows = MinHashes / Bands
+    s"""d AS (SELECT id, ${shinglesSql(3)} AS ss FROM w),
+       |h AS MATERIALIZED (SELECT id, ss, len(ss) AS n_sh,
+       |  list_transform(ss, s -> ${Dedup.SharedHash.hash28Sql("s")}) AS xs FROM d WHERE len(ss) > 0),
+       |sig AS MATERIALIZED (SELECT id, ss, n_sh, $minhashSigSql AS sig FROM h),
+       |bands AS (SELECT id, t.b AS band,
+       |            array_to_string(list_transform(list_slice(sig, t.b*$rows+1, t.b*$rows+$rows), z -> CAST(z AS VARCHAR)), '_') AS key
+       |          FROM sig CROSS JOIN generate_series(0, ${Bands - 1}) AS t(b))""".stripMargin
+  }
+
+  /** [[lshBandCtesSql]] plus `cand`: the band-colliding pairs, id_a < id_b. */
+  private def lshCandCtesSql: String =
+    s"""$lshBandCtesSql,
+       |cand AS (SELECT DISTINCT x.id AS id_a, y.id AS id_b
+       |         FROM bands x JOIN bands y ON x.band = y.band AND x.key = y.key AND x.id < y.id)""".stripMargin
+
+  /** [[lshCandCtesSql]] plus `v`: each candidate pair's shingle overlap `c`
+    * and shingle counts `na`, `nb`.
+    */
+  private def lshPairCtesSql: String =
+    s"""$lshCandCtesSql,
+       |v AS (SELECT c.id_a, c.id_b, len(list_intersect(a.ss, b.ss)) AS c,
+       |        a.n_sh AS na, b.n_sh AS nb
+       |      FROM cand c JOIN sig a ON c.id_a = a.id JOIN sig b ON c.id_b = b.id)""".stripMargin
+
   private def shingledDocs(t: Tables): DataFrame =
     TextOps.withShingles(
       graft.Fanout(t.documents.select(col("doc_id").as("id"), col("text"))),
@@ -165,27 +202,11 @@ object Pipeline {
       graft.Fanout(t.documents.select(col("doc_id").as("id"), col("text"))),
       3, MinHashes, Bands, JaccardT)
 
-  private val q31Sql = {
-    val rows = MinHashes / Bands
-    val sigExprs = (0 until MinHashes).map { i =>
-      s"list_min(list_transform(xs, x -> (${Dedup.hashA(i)}*x + ${Dedup.hashB(i)}) % ${Dedup.P}))"
-    }.mkString("[", ", ", "]")
+  private val q31Sql =
     s"""WITH $wordsCte,
-       |d AS (SELECT id, ${shinglesSql(3)} AS ss FROM w),
-       |h AS MATERIALIZED (SELECT id, ss, len(ss) AS n_sh,
-       |  list_transform(ss, s -> ${Dedup.SharedHash.hash28Sql("s")}) AS xs FROM d WHERE len(ss) > 0),
-       |sig AS MATERIALIZED (SELECT id, ss, n_sh, $sigExprs AS sig FROM h),
-       |bands AS (SELECT id, t.b AS band,
-       |            array_to_string(list_transform(list_slice(sig, t.b*$rows+1, t.b*$rows+$rows), z -> CAST(z AS VARCHAR)), '_') AS key
-       |          FROM sig CROSS JOIN generate_series(0, ${Bands - 1}) AS t(b)),
-       |cand AS (SELECT DISTINCT x.id AS id_a, y.id AS id_b
-       |         FROM bands x JOIN bands y ON x.band = y.band AND x.key = y.key AND x.id < y.id),
-       |v AS (SELECT c.id_a, c.id_b, len(list_intersect(a.ss, b.ss)) AS c,
-       |        a.n_sh AS na, b.n_sh AS nb
-       |      FROM cand c JOIN sig a ON c.id_a = a.id JOIN sig b ON c.id_b = b.id)
+       |$lshPairCtesSql
        |SELECT id_a, id_b, round(CAST(c AS DOUBLE)/(na+nb-c), 4) AS jaccard
        |FROM v WHERE round(CAST(c AS DOUBLE)/(na+nb-c), 4) >= $JaccardT""".stripMargin
-  }
 
   // ===== q61 end-to-end corpus dedup =====================================
   // The full pipeline a training-data run executes: exact dedup (keep min
@@ -201,29 +222,13 @@ object Pipeline {
       3, MinHashes, Bands, CorpusT)
       .select(col("id"))
 
-  private val q61Sql = {
-    val rows = MinHashes / Bands
-    val sigExprs = (0 until MinHashes).map { i =>
-      s"list_min(list_transform(xs, x -> (${Dedup.hashA(i)}*x + ${Dedup.hashB(i)}) % ${Dedup.P}))"
-    }.mkString("[", ", ", "]")
+  private val q61Sql =
     s"""WITH ex AS MATERIALIZED (SELECT min(doc_id) AS id, text FROM documents GROUP BY text),
        |w AS (SELECT id, regexp_split_to_array(lower(text), '\\s+') AS words FROM ex),
-       |d AS (SELECT id, ${shinglesSql(3)} AS ss FROM w),
-       |h AS MATERIALIZED (SELECT id, ss, len(ss) AS n_sh,
-       |  list_transform(ss, s -> ${Dedup.SharedHash.hash28Sql("s")}) AS xs FROM d WHERE len(ss) > 0),
-       |sig AS MATERIALIZED (SELECT id, ss, n_sh, $sigExprs AS sig FROM h),
-       |bands AS (SELECT id, t.b AS band,
-       |            array_to_string(list_transform(list_slice(sig, t.b*$rows+1, t.b*$rows+$rows), z -> CAST(z AS VARCHAR)), '_') AS key
-       |          FROM sig CROSS JOIN generate_series(0, ${Bands - 1}) AS t(b)),
-       |cand AS (SELECT DISTINCT x.id AS id_a, y.id AS id_b
-       |         FROM bands x JOIN bands y ON x.band = y.band AND x.key = y.key AND x.id < y.id),
-       |v AS (SELECT c.id_a, c.id_b, len(list_intersect(a.ss, b.ss)) AS c,
-       |        a.n_sh AS na, b.n_sh AS nb
-       |      FROM cand c JOIN sig a ON c.id_a = a.id JOIN sig b ON c.id_b = b.id),
+       |$lshPairCtesSql,
        |drops AS (SELECT DISTINCT id_b FROM v
        |          WHERE round(CAST(c AS DOUBLE)/(na+nb-c), 4) >= $CorpusT)
        |SELECT id FROM ex WHERE id NOT IN (SELECT id_b FROM drops)""".stripMargin
-  }
 
   // ===== q62 near-dup cluster assignment =================================
   // Transitive closure over the near-dup relation: every doc gets the MIN
@@ -242,21 +247,9 @@ object Pipeline {
       .select(col("id"), coalesce(col("comp"), col("id")).as("comp"))
   }
 
-  private val q62Sql = {
-    val rows = MinHashes / Bands
-    val sigExprs = (0 until MinHashes).map { i =>
-      s"list_min(list_transform(xs, x -> (${Dedup.hashA(i)}*x + ${Dedup.hashB(i)}) % ${Dedup.P}))"
-    }.mkString("[", ", ", "]")
+  private val q62Sql =
     s"""WITH RECURSIVE $wordsCte,
-       |d AS (SELECT id, ${shinglesSql(3)} AS ss FROM w),
-       |h AS MATERIALIZED (SELECT id, ss, len(ss) AS n_sh,
-       |  list_transform(ss, s -> ${Dedup.SharedHash.hash28Sql("s")}) AS xs FROM d WHERE len(ss) > 0),
-       |sig AS MATERIALIZED (SELECT id, ss, n_sh, $sigExprs AS sig FROM h),
-       |bands AS (SELECT id, t.b AS band,
-       |            array_to_string(list_transform(list_slice(sig, t.b*$rows+1, t.b*$rows+$rows), z -> CAST(z AS VARCHAR)), '_') AS key
-       |          FROM sig CROSS JOIN generate_series(0, ${Bands - 1}) AS t(b)),
-       |cand AS (SELECT DISTINCT x.id AS id_a, y.id AS id_b
-       |         FROM bands x JOIN bands y ON x.band = y.band AND x.key = y.key AND x.id < y.id),
+       |$lshCandCtesSql,
        |v AS (SELECT c.id_a, c.id_b FROM cand c
        |      JOIN sig a ON c.id_a = a.id JOIN sig b ON c.id_b = b.id
        |      WHERE round(CAST(len(list_intersect(a.ss, b.ss)) AS DOUBLE)
@@ -269,7 +262,6 @@ object Pipeline {
        |comp AS (SELECT a AS id, least(a, min(b)) AS comp FROM reach GROUP BY a)
        |SELECT doc_id AS id, COALESCE(c.comp, doc_id) AS comp
        |FROM documents LEFT JOIN comp c ON doc_id = c.id""".stripMargin
-  }
 
   // ===== q135 cluster representative selection ===========================
   // The step AFTER clustering: every near-dup cluster (q62's connected
@@ -973,8 +965,12 @@ object Pipeline {
         .select(col("id_a"), col("id_b")),
       iters = PrIters)
 
-  private val q122Sql = {
-    // unrolled iterations: prK = rank table after iteration K
+  /** The PageRank oracle after an undirected edge CTE `und(a, b)`:
+    * both orientations (`dir`), degrees, the uniform start `pr0` and
+    * PrIters unrolled iterations (prK = the rank table after iteration K),
+    * in Graph.pageRankFixedPoint's fixed-point integer arithmetic.
+    */
+  private def pageRankTailSql: String = {
     def iter(prev: String, k: Int): String =
       s"""c$k AS (SELECT dst, sum(pr // deg) AS c
          |        FROM dir JOIN $prev ON dir.src = $prev.id GROUP BY dst),
@@ -982,12 +978,7 @@ object Pipeline {
          |           CAST(floor(0.15 * 1000000000000.0 / nn.n_nodes) AS BIGINT)
          |             + CAST(floor(0.85 * CAST(coalesce(c.c, 0) AS DOUBLE)) AS BIGINT) AS pr
          |         FROM deg CROSS JOIN nn LEFT JOIN c$k c ON deg.id = c.dst)""".stripMargin
-    s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-       |${bucketCtesSql(NearDupPlanes)},
-       |und AS (SELECT x.vec_id AS a, y.vec_id AS b
-       |        FROM b x JOIN b y ON x.bucket = y.bucket AND x.vec_id < y.vec_id
-       |        WHERE round(${cosSql("x.v", "y.v")}, 4) >= $CosT),
-       |dir AS (SELECT a AS src, b AS dst FROM und
+    s"""dir AS (SELECT a AS src, b AS dst FROM und
        |        UNION ALL SELECT b AS src, a AS dst FROM und),
        |deg AS (SELECT src AS id, count(*) AS deg FROM dir GROUP BY src),
        |nn AS (SELECT count(*) AS n_nodes FROM deg),
@@ -997,6 +988,14 @@ object Pipeline {
        |${(1 to PrIters).map(k => iter(s"pr${k - 1}", k)).mkString(",\n")}
        |SELECT id, pr AS pr_scaled FROM pr$PrIters""".stripMargin
   }
+
+  private val q122Sql =
+    s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+       |${bucketCtesSql(NearDupPlanes)},
+       |und AS (SELECT x.vec_id AS a, y.vec_id AS b
+       |        FROM b x JOIN b y ON x.bucket = y.bucket AND x.vec_id < y.vec_id
+       |        WHERE round(${cosSql("x.v", "y.v")}, 4) >= $CosT),
+       |$pageRankTailSql""".stripMargin
 
   // ===== q129 bounded k-core of the near-dup graph =======================
   // Dense-core extraction: after 3 peel rounds at k=3, what survives of
@@ -1419,6 +1418,30 @@ object Pipeline {
   private val IvfCells = 16
   private val IvfProbe = 2
 
+  /** IVF cell assignment as an oracle subquery: each row of `src` keeps
+    * its `n` best `cents` by rounded cosine (cent_id breaks ties), as
+    * (`id`, `vec`, cell) — Similarity's coarse quantizer, verbatim.
+    */
+  private def ivfBestSql(src: String, id: String, vec: String,
+      n: String): String =
+    s"""SELECT $id, $vec, cent_id AS cell FROM (
+       |  SELECT s.*, c.cent_id,
+       |    row_number() OVER (PARTITION BY s.$id
+       |      ORDER BY round(${cosSql(s"s.$vec", "c.cvec")}, 4) DESC, c.cent_id) AS crn
+       |  FROM $src s CROSS JOIN cents c) WHERE crn <= $n""".stripMargin
+
+  /** The IVF probe oracle head: `e` (vectors), `cents` (the first
+    * IvfCells vectors), `q0` (every QueryMod-th vector as a query),
+    * `lists` (each vector's cell) and `probes` (each query's IvfProbe
+    * best cells).
+    */
+  private def ivfProbeCtesSql(materialize: Boolean): String =
+    s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+       |cents AS (SELECT vec_id AS cent_id, v AS cvec FROM e WHERE vec_id < $IvfCells),
+       |q0 AS (SELECT vec_id AS q_id, v AS qv FROM e WHERE vec_id % $QueryMod = 0),
+       |lists AS ${if (materialize) "MATERIALIZED " else ""}(${ivfBestSql("e", "vec_id", "v", "1")}),
+       |probes AS (${ivfBestSql("q0", "q_id", "qv", IvfProbe.toString)})""".stripMargin
+
   private def q44(t: Tables): DataFrame = {
     val e = graft.Fanout(t.embeddings)
     val queries = e.filter(col("vec_id") % QueryMod === 0)
@@ -1426,25 +1449,14 @@ object Pipeline {
     Similarity.ivfTopK(queries, e, IvfCells, IvfProbe, TopK)
   }
 
-  private val q44Sql = {
-    def best(src: String, id: String, vec: String, n: String) =
-      s"""SELECT $id, $vec, cent_id AS cell FROM (
-         |  SELECT s.*, c.cent_id,
-         |    row_number() OVER (PARTITION BY s.$id
-         |      ORDER BY round(${cosSql(s"s.$vec", "c.cvec")}, 4) DESC, c.cent_id) AS crn
-         |  FROM $src s CROSS JOIN cents c) WHERE crn <= $n""".stripMargin
-    s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-       |cents AS (SELECT vec_id AS cent_id, v AS cvec FROM e WHERE vec_id < $IvfCells),
-       |q0 AS (SELECT vec_id AS q_id, v AS qv FROM e WHERE vec_id % $QueryMod = 0),
-       |lists AS (${best("e", "vec_id", "v", "1")}),
-       |probes AS (${best("q0", "q_id", "qv", IvfProbe.toString)}),
+  private val q44Sql =
+    s"""${ivfProbeCtesSql(materialize = false)},
        |s AS (SELECT p.q_id, l.vec_id, round(${cosSql("p.qv", "l.v")}, 4) AS score
        |      FROM probes p JOIN lists l ON p.cell = l.cell AND l.vec_id <> p.q_id),
        |r AS (SELECT q_id, vec_id, score,
        |        CAST(row_number() OVER (PARTITION BY q_id ORDER BY score DESC, vec_id) AS BIGINT) AS rnk
        |      FROM s)
        |SELECT q_id, vec_id, score, rnk FROM r WHERE rnk <= $TopK""".stripMargin
-  }
 
   // ===== q145 stored-ANN-index probe =====================================
   // q44's production form and q83's similarity sibling: the IVF index
@@ -1536,6 +1548,15 @@ object Pipeline {
   private val PqCodes = 16
   private val PqShort = 50
 
+  // fixed-subDim slice folds (1-based inclusive DuckDB slices)
+  private def pqDotSql(a: String, b: String): String =
+    s"list_reduce(list_transform(generate_series(1, ${Dim / PqM}), i -> $a[i]*$b[i]), (p,q) -> p+q)"
+  private def pqL2Sql(a: String, b: String): String =
+    s"list_reduce(list_transform(generate_series(1, ${Dim / PqM}), i -> ($a[i]-$b[i])*($a[i]-$b[i])), (p,q) -> p+q)"
+  // m-ordered double sum (the q152 sorted-fold discipline)
+  private def pqMsumSql(x: String): String =
+    s"list_reduce(list_prepend(CAST(0 AS DOUBLE), list_transform(list_sort(list({'m': m, 'x': $x})), e -> e.x)), (a,b) -> a+b)"
+
   private def q168(t: Tables): DataFrame = {
     val e = graft.Fanout(t.embeddings)
     val queries = e.filter(col("vec_id") % QueryMod === 0)
@@ -1548,25 +1569,7 @@ object Pipeline {
 
   private val q168Sql = {
     val subDim = Dim / PqM
-    // fixed-subDim slice folds (1-based inclusive DuckDB slices)
-    def dot(a: String, b: String) =
-      s"list_reduce(list_transform(generate_series(1, $subDim), i -> $a[i]*$b[i]), (p,q) -> p+q)"
-    def l2(a: String, b: String) =
-      s"list_reduce(list_transform(generate_series(1, $subDim), i -> ($a[i]-$b[i])*($a[i]-$b[i])), (p,q) -> p+q)"
-    // m-ordered double sum (the q152 sorted-fold discipline)
-    def msum(x: String) =
-      s"list_reduce(list_prepend(CAST(0 AS DOUBLE), list_transform(list_sort(list({'m': m, 'x': $x})), e -> e.x)), (a,b) -> a+b)"
-    def best(src: String, id: String, vec: String, n: String) =
-      s"""SELECT $id, $vec, cent_id AS cell FROM (
-         |  SELECT s.*, c.cent_id,
-         |    row_number() OVER (PARTITION BY s.$id
-         |      ORDER BY round(${cosSql(s"s.$vec", "c.cvec")}, 4) DESC, c.cent_id) AS crn
-         |  FROM $src s CROSS JOIN cents c) WHERE crn <= $n""".stripMargin
-    s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-       |cents AS (SELECT vec_id AS cent_id, v AS cvec FROM e WHERE vec_id < $IvfCells),
-       |q0 AS (SELECT vec_id AS q_id, v AS qv FROM e WHERE vec_id % $QueryMod = 0),
-       |lists AS MATERIALIZED (${best("e", "vec_id", "v", "1")}),
-       |probes AS (${best("q0", "q_id", "qv", IvfProbe.toString)}),
+    s"""${ivfProbeCtesSql(materialize = true)},
        |cbb AS (SELECT v, row_number() OVER (ORDER BY vec_id) - 1 AS code
        |        FROM (SELECT * FROM e ORDER BY vec_id LIMIT $PqCodes)),
        |cb AS MATERIALIZED (SELECT t.m, code, v[m*$subDim+1 : m*$subDim+$subDim] AS cvec
@@ -1576,11 +1579,11 @@ object Pipeline {
        |assign AS MATERIALIZED (SELECT vec_id, m, code FROM (
        |    SELECT s.vec_id, s.m, c.code,
        |      row_number() OVER (PARTITION BY s.vec_id, s.m
-       |        ORDER BY ${l2("s.sv", "c.cvec")}, c.code) AS rn
+       |        ORDER BY ${pqL2Sql("s.sv", "c.cvec")}, c.code) AS rn
        |    FROM sub s JOIN cb c ON s.m = c.m) WHERE rn = 1),
        |lut AS MATERIALIZED (SELECT q.q_id, c.m, c.code,
-       |        ${dot(s"q.qv[c.m*$subDim+1 : c.m*$subDim+$subDim]", "c.cvec")} AS ld,
-       |        ${dot("c.cvec", "c.cvec")} AS n2
+       |        ${pqDotSql(s"q.qv[c.m*$subDim+1 : c.m*$subDim+$subDim]", "c.cvec")} AS ld,
+       |        ${pqDotSql("c.cvec", "c.cvec")} AS n2
        |      FROM q0 q CROSS JOIN cb c),
        |qn AS (SELECT q_id, sqrt(list_reduce(list_transform(qv, x -> x*x), (p,q) -> p+q)) AS qn FROM q0),
        |cand AS (SELECT p.q_id, l.vec_id FROM probes p
@@ -1588,7 +1591,7 @@ object Pipeline {
        |contrib AS (SELECT c.q_id, c.vec_id, a.m, t.ld, t.n2
        |            FROM cand c JOIN assign a ON c.vec_id = a.vec_id
        |            JOIN lut t ON t.q_id = c.q_id AND t.m = a.m AND t.code = a.code),
-       |adc AS (SELECT q_id, vec_id, ${msum("ld")} AS num, ${msum("n2")} AS nn
+       |adc AS (SELECT q_id, vec_id, ${pqMsumSql("ld")} AS num, ${pqMsumSql("n2")} AS nn
        |        FROM contrib GROUP BY q_id, vec_id),
        |sc AS (SELECT a.q_id, a.vec_id, round(a.num / (q.qn * sqrt(a.nn)), 4) AS s
        |       FROM adc a JOIN qn q USING (q_id)),
@@ -1624,23 +1627,7 @@ object Pipeline {
 
   private val q208Sql = {
     val subDim = Dim / PqM
-    def dot(a: String, b: String) =
-      s"list_reduce(list_transform(generate_series(1, $subDim), i -> $a[i]*$b[i]), (p,q) -> p+q)"
-    def l2(a: String, b: String) =
-      s"list_reduce(list_transform(generate_series(1, $subDim), i -> ($a[i]-$b[i])*($a[i]-$b[i])), (p,q) -> p+q)"
-    def msum(x: String) =
-      s"list_reduce(list_prepend(CAST(0 AS DOUBLE), list_transform(list_sort(list({'m': m, 'x': $x})), e -> e.x)), (a,b) -> a+b)"
-    def best(src: String, id: String, vec: String, n: String) =
-      s"""SELECT $id, $vec, cent_id AS cell FROM (
-         |  SELECT s.*, c.cent_id,
-         |    row_number() OVER (PARTITION BY s.$id
-         |      ORDER BY round(${cosSql(s"s.$vec", "c.cvec")}, 4) DESC, c.cent_id) AS crn
-         |  FROM $src s CROSS JOIN cents c) WHERE crn <= $n""".stripMargin
-    s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-       |cents AS (SELECT vec_id AS cent_id, v AS cvec FROM e WHERE vec_id < $IvfCells),
-       |q0 AS (SELECT vec_id AS q_id, v AS qv FROM e WHERE vec_id % $QueryMod = 0),
-       |lists AS MATERIALIZED (${best("e", "vec_id", "v", "1")}),
-       |probes AS (${best("q0", "q_id", "qv", IvfProbe.toString)}),
+    s"""${ivfProbeCtesSql(materialize = true)},
        |rs0 AS MATERIALIZED (SELECT l.vec_id, l.cell, l.v,
        |        list_transform(generate_series(1, len(l.v)), i -> l.v[i] - c.cvec[i]) AS rv,
        |        list_reduce(list_transform(l.v, x -> x*x), (p,q) -> p+q) AS n2x
@@ -1655,10 +1642,10 @@ object Pipeline {
        |assign AS MATERIALIZED (SELECT vec_id, m, code FROM (
        |    SELECT s.vec_id, s.m, c.code,
        |      row_number() OVER (PARTITION BY s.vec_id, s.m
-       |        ORDER BY ${l2("s.sv", "c.cvec")}, c.code) AS rn
+       |        ORDER BY ${pqL2Sql("s.sv", "c.cvec")}, c.code) AS rn
        |    FROM sub s JOIN cb c ON s.m = c.m) WHERE rn = 1),
        |lut AS MATERIALIZED (SELECT q.q_id, c.m, c.code,
-       |        ${dot(s"q.qv[c.m*$subDim+1 : c.m*$subDim+$subDim]", "c.cvec")} AS ld
+       |        ${pqDotSql(s"q.qv[c.m*$subDim+1 : c.m*$subDim+$subDim]", "c.cvec")} AS ld
        |      FROM q0 q CROSS JOIN cb c),
        |qn AS (SELECT q_id, sqrt(list_reduce(list_transform(qv, x -> x*x), (p,q) -> p+q)) AS qn FROM q0),
        |qc AS (SELECT p.q_id, p.cell,
@@ -1670,7 +1657,7 @@ object Pipeline {
        |contrib AS (SELECT c.q_id, c.cell, c.vec_id, a.m, t.ld
        |            FROM cand c JOIN assign a ON c.vec_id = a.vec_id
        |            JOIN lut t ON t.q_id = c.q_id AND t.m = a.m AND t.code = a.code),
-       |adc AS (SELECT q_id, cell, vec_id, ${msum("ld")} AS rsum
+       |adc AS (SELECT q_id, cell, vec_id, ${pqMsumSql("ld")} AS rsum
        |        FROM contrib GROUP BY q_id, cell, vec_id),
        |sc AS (SELECT a.q_id, a.vec_id,
        |        round((g.qc + a.rsum) / (q.qn * sqrt(r.n2x)), 4) AS s
@@ -2484,40 +2471,7 @@ object Pipeline {
   }
 
   private lazy val q185Sql =
-    s"""WITH tf AS (SELECT id, dl, term, count(*) AS tf FROM (
-       |    SELECT id, CAST(len(ws) - 1 AS BIGINT) AS dl,
-       |      unnest(list_transform(range(2, len(ws) + 1),
-       |        i -> ws[i - 1] || ' ' || ws[i])) AS term
-       |    FROM (SELECT doc_id AS id, list_filter(
-       |            regexp_split_to_array(lower(text), '\\s+'),
-       |            x -> len(x) > 0) AS ws
-       |          FROM documents)
-       |    WHERE len(ws) >= 2)
-       |  GROUP BY 1, 2, 3),
-       |dfs AS (SELECT term, count(*) AS df FROM tf GROUP BY term),
-       |st AS (SELECT count(*) AS n_docs, sum(dl) AS tot_dl
-       |       FROM (SELECT DISTINCT id, dl FROM tf)),
-       |sw AS (SELECT id AS q_id, term,
-       |    CAST(tf AS DOUBLE) * ln(CAST(n_docs AS DOUBLE) / df) AS w
-       |  FROM tf JOIN dfs USING (term) CROSS JOIN st
-       |  WHERE id IN (${HnSeeds.mkString(", ")})),
-       |qt AS (SELECT q_id, e.t AS term FROM (
-       |    SELECT q_id, list_sort(list({'nw': -w, 't': term}))[1:$BmQTerms] AS v
-       |    FROM sw GROUP BY q_id), unnest(v) AS u(e)),
-       |sc AS (SELECT q.q_id, f.id, f.term,
-       |    ln(${1.0} + (CAST(n_docs AS DOUBLE) - df + ${0.5})
-       |         / (CAST(df AS DOUBLE) + ${0.5}))
-       |      * (CAST(tf AS DOUBLE) * ${BmK1 + 1.0})
-       |      / (CAST(tf AS DOUBLE) + ${BmK1} * (${1.0 - BmB}
-       |           + ${BmB} * CAST(dl AS DOUBLE)
-       |             / (CAST(tot_dl AS DOUBLE) / CAST(n_docs AS DOUBLE)))) AS c
-       |  FROM tf f JOIN qt q USING (term) JOIN dfs USING (term) CROSS JOIN st
-       |  WHERE f.id <> q.q_id),
-       |agg AS (SELECT q_id, id AS doc_id,
-       |    round(list_reduce(list_prepend(CAST(0 AS DOUBLE),
-       |      list_transform(list_sort(list({'t': term, 'c': c})), e -> e.c)),
-       |      (a, b) -> a + b), 4) AS score
-       |  FROM sc GROUP BY q_id, id),
+    s"""WITH ${bigramBm25Sql(s"\n  WHERE id IN (${HnSeeds.mkString(", ")})")},
        |cand AS (SELECT q_id, doc_id, score FROM (
        |    SELECT q_id, doc_id, score, row_number() OVER (PARTITION BY q_id
        |      ORDER BY score DESC, doc_id) AS r0 FROM agg)
@@ -3368,6 +3322,37 @@ object Pipeline {
   private val WarcGzCorruptEveryFile = 5
   private val WarcCharsetEvery = 7 // doc_id % 7 == 3 → iso-8859-1
 
+  /** The WARC-ingest oracle head of q253/q257: the replayed HTML `wr`
+    * per doc, then the SELECT's version, url and status columns (NULL on
+    * every WarcMalformEvery-th, malformed, record).
+    */
+  private def warcHeadSql: String =
+    s"""WITH $htmlCteSql,
+       |wr AS (SELECT d.doc_id, d.source, h.html
+       |  FROM documents d JOIN ht_html h USING (doc_id))
+       |SELECT
+       |  CASE WHEN doc_id % $WarcMalformEvery = 0 THEN 'WARC/9.9'
+       |    ELSE 'WARC/1.0' END AS warc_version,
+       |  CASE WHEN doc_id % $WarcMalformEvery = 0 THEN NULL
+       |    ELSE 'http://example.com/' || source || '/' || doc_id END AS url,
+       |  CASE WHEN doc_id % $WarcMalformEvery = 0 THEN NULL
+       |    ELSE 200 END AS status,""".stripMargin
+
+  /** The messy-URL oracle head of q259/q262: the docs whose gzip WARC
+    * record survives (not malformed, not in a corrupt member, v ≠ 5) and
+    * their URL parts `hb` (host base) and `gs` (path id).
+    */
+  private def messyUrlDocsSql: String =
+    s"""WITH docs AS (SELECT doc_id, doc_id // 3 AS g, doc_id % 6 AS v
+       |  FROM documents
+       |  WHERE doc_id % $WarcMalformEvery <> 0
+       |    AND NOT (doc_id % 16 = 15
+       |      AND (doc_id // 16) % $WarcGzCorruptEveryFile = 0)
+       |    AND doc_id % 6 <> 5),
+       |e AS (SELECT doc_id, v, g,
+       |  'h' || (g % 7) || '.site' || (g % 5) AS hb,
+       |  CAST(g AS VARCHAR) AS gs FROM docs)""".stripMargin
+
   private def q257(t: Tables): DataFrame = {
     val withHtml = Html.withHtmlColumn(
       graft.Fanout(t.documents).select(col("doc_id"), col("source"),
@@ -3391,16 +3376,7 @@ object Pipeline {
   }
 
   private lazy val q257Sql =
-    s"""WITH $htmlCteSql,
-       |wr AS (SELECT d.doc_id, d.source, h.html
-       |  FROM documents d JOIN ht_html h USING (doc_id))
-       |SELECT
-       |  CASE WHEN doc_id % $WarcMalformEvery = 0 THEN 'WARC/9.9'
-       |    ELSE 'WARC/1.0' END AS warc_version,
-       |  CASE WHEN doc_id % $WarcMalformEvery = 0 THEN NULL
-       |    ELSE 'http://example.com/' || source || '/' || doc_id END AS url,
-       |  CASE WHEN doc_id % $WarcMalformEvery = 0 THEN NULL
-       |    ELSE 200 END AS status,
+    s"""$warcHeadSql
        |  CASE WHEN doc_id % $WarcMalformEvery = 0 THEN NULL
        |    WHEN doc_id % $WarcCharsetEvery = 3
        |      THEN 'text/html; charset=iso-8859-1'
@@ -3526,15 +3502,7 @@ object Pipeline {
   }
 
   private lazy val q259Sql =
-    s"""WITH docs AS (SELECT doc_id, doc_id // 3 AS g, doc_id % 6 AS v
-       |  FROM documents
-       |  WHERE doc_id % $WarcMalformEvery <> 0
-       |    AND NOT (doc_id % 16 = 15
-       |      AND (doc_id // 16) % $WarcGzCorruptEveryFile = 0)
-       |    AND doc_id % 6 <> 5),
-       |e AS (SELECT doc_id, v, g,
-       |  'h' || (g % 7) || '.site' || (g % 5) AS hb,
-       |  CAST(g AS VARCHAR) AS gs FROM docs),
+    s"""$messyUrlDocsSql,
        |c AS (SELECT doc_id,
        |  CASE WHEN v = 2 THEN 'http://' || hb || '.com:8080/d/' || gs
        |    WHEN v = 3 THEN 'https://' || hb || '.co.uk/d/' || gs || '?b=2&a=1'
@@ -3689,14 +3657,7 @@ object Pipeline {
     Graph.pageRankFixedPoint(edges, iters = PrIters)
   }
 
-  private lazy val q261Sql = {
-    def iter(prev: String, k: Int): String =
-      s"""c$k AS (SELECT dst, sum(pr // deg) AS c
-         |        FROM dir JOIN $prev ON dir.src = $prev.id GROUP BY dst),
-         |pr$k AS (SELECT deg.id, deg.deg,
-         |           CAST(floor(0.15 * 1000000000000.0 / nn.n_nodes) AS BIGINT)
-         |             + CAST(floor(0.85 * CAST(coalesce(c.c, 0) AS DOUBLE)) AS BIGINT) AS pr
-         |         FROM deg CROSS JOIN nn LEFT JOIN c$k c ON deg.id = c.dst)""".stripMargin
+  private lazy val q261Sql =
     s"""WITH u AS (SELECT doc_id, doc_id // 3 AS g, doc_id % 6 AS v
        |  FROM documents),
        |e AS (SELECT doc_id, v,
@@ -3715,16 +3676,7 @@ object Pipeline {
        |  SELECT src_dom, 'site' || s || '.com' FROM sd WHERE v = 3),
        |und AS (SELECT DISTINCT least(sa, sb) AS a, greatest(sa, sb) AS b
        |  FROM ed WHERE sa <> sb),
-       |dir AS (SELECT a AS src, b AS dst FROM und
-       |        UNION ALL SELECT b AS src, a AS dst FROM und),
-       |deg AS (SELECT src AS id, count(*) AS deg FROM dir GROUP BY src),
-       |nn AS (SELECT count(*) AS n_nodes FROM deg),
-       |pr0 AS (SELECT id, deg,
-       |          CAST(floor(1000000000000.0 / nn.n_nodes) AS BIGINT) AS pr
-       |        FROM deg CROSS JOIN nn),
-       |${(1 to PrIters).map(k => iter(s"pr${k - 1}", k)).mkString(",\n")}
-       |SELECT id, pr AS pr_scaled FROM pr$PrIters""".stripMargin
-  }
+       |$pageRankTailSql""".stripMargin
 
   // ===== q262 payload-digest verify + (URL, digest) record dedup ==========
   // The Common-Crawl index discipline: every WARC record ships a
@@ -3778,15 +3730,7 @@ object Pipeline {
   }
 
   private lazy val q262Sql =
-    s"""WITH docs AS (SELECT doc_id, doc_id // 3 AS g, doc_id % 6 AS v
-       |  FROM documents
-       |  WHERE doc_id % $WarcMalformEvery <> 0
-       |    AND NOT (doc_id % 16 = 15
-       |      AND (doc_id // 16) % $WarcGzCorruptEveryFile = 0)
-       |    AND doc_id % 6 <> 5),
-       |e AS (SELECT doc_id, v, g,
-       |  'h' || (g % 7) || '.site' || (g % 5) AS hb,
-       |  CAST(g AS VARCHAR) AS gs FROM docs),
+    s"""$messyUrlDocsSql,
        |c AS (SELECT doc_id, g,
        |  CASE WHEN v = 2 THEN 'http://' || hb || '.com:8080/d/' || gs
        |    WHEN v = 3 THEN 'https://' || hb || '.co.uk/d/' || gs || '?b=2&a=1'
@@ -4056,39 +4000,13 @@ object Pipeline {
     val bpeDir = bpeByteModelDir(t)
     val merges = TextOps.loadBpeMerges(spark, bpeDir)
     // tokenize the VOCAB once (the q157/q183 cost shape), flatten per doc
-    val dt = TextOps.byteTokDocs(graft.Fanout(t.documents), merges)
-    graft.operators.Curation.packShards(dt, col("source"), col("doc_id"),
-      col("toks"), PackBudget, partitions = 32)
-      .select(col("domain").as("source"), col("bin"), col("n_tokens"),
-        col("stream_md5"))
+    shardTail(TextOps.byteTokDocs(graft.Fanout(t.documents), merges),
+      None, None)
   }
 
   private lazy val q218Sql =
     s"""WITH ${bpeCteChain(BpeRounds, applyLast = true, bpeWc0ByteLevel)},
-       |dwr AS (SELECT source, doc_id,
-       |    regexp_extract_all(lower(text), '${TextOps.byteLevelTokenPattern}') AS ws
-       |  FROM documents),
-       |dw AS (SELECT source, doc_id, ws[i] AS w, i AS pos
-       |  FROM dwr, unnest(generate_series(1, len(ws))) AS t(i)),
-       |dt AS (SELECT source, doc_id, flatten(list(syms ORDER BY pos)) AS toks
-       |  FROM dw JOIN wc$BpeRounds USING (w) GROUP BY 1, 2),
-       |d AS (SELECT source, doc_id, toks,
-       |    CAST(len(toks) AS BIGINT) AS n_tok FROM dt),
-       |c AS (SELECT source, doc_id, toks, n_tok,
-       |    CAST(COALESCE(sum(n_tok) OVER (PARTITION BY source ORDER BY doc_id
-       |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS cum
-       |  FROM d),
-       |m AS (SELECT source, doc_id, t.b AS bin,
-       |    list_slice(toks, greatest(t.b * $PackBudget, cum) - cum + 1,
-       |      least((t.b + 1) * $PackBudget, cum + n_tok) - cum) AS sl,
-       |    CAST(least((t.b + 1) * $PackBudget, cum + n_tok)
-       |      - greatest(t.b * $PackBudget, cum) AS BIGINT) AS span
-       |  FROM c, unnest(generate_series(cum // $PackBudget,
-       |    (cum + n_tok - 1) // $PackBudget)) AS t(b)
-       |  WHERE n_tok > 0)
-       |SELECT source, bin, CAST(sum(span) AS BIGINT) AS n_tokens,
-       |  md5(array_to_string(flatten(list(sl ORDER BY doc_id)), ' ')) AS stream_md5
-       |FROM m GROUP BY 1, 2""".stripMargin
+       |${shardTailSql("documents", ids = false, None, "")}""".stripMargin
 
   // ===== q223 ANN quality evaluation (recall@k, reciprocal rank) =========
   // The index-quality monitor a production ANN deployment runs
@@ -4106,13 +4024,7 @@ object Pipeline {
     Similarity.annEvalReport(queries, e, IvfCells, IvfProbe, TopK)
   }
 
-  private val q223Sql = {
-    def best(src: String, id: String, vec: String, n: String) =
-      s"""SELECT $id, $vec, cent_id AS cell FROM (
-         |  SELECT s.*, c.cent_id,
-         |    row_number() OVER (PARTITION BY s.$id
-         |      ORDER BY round(${cosSql(s"s.$vec", "c.cvec")}, 4) DESC, c.cent_id) AS crn
-         |  FROM $src s CROSS JOIN cents c) WHERE crn <= $n""".stripMargin
+  private val q223Sql =
     s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
        |q0 AS (SELECT vec_id AS q_id, v AS qv FROM e WHERE vec_id % $QueryMod = 0),
        |bt AS (SELECT q_id, vec_id FROM (
@@ -4122,8 +4034,8 @@ object Pipeline {
        |          FROM q0 CROSS JOIN e WHERE vec_id <> q_id))
        |  WHERE rn <= $TopK),
        |cents AS (SELECT vec_id AS cent_id, v AS cvec FROM e WHERE vec_id < $IvfCells),
-       |lists AS (${best("e", "vec_id", "v", "1")}),
-       |probes AS (${best("q0", "q_id", "qv", IvfProbe.toString)}),
+       |lists AS (${ivfBestSql("e", "vec_id", "v", "1")}),
+       |probes AS (${ivfBestSql("q0", "q_id", "qv", IvfProbe.toString)}),
        |sysr AS (SELECT q_id, vec_id, rnk FROM (
        |    SELECT q_id, vec_id,
        |      CAST(row_number() OVER (PARTITION BY q_id ORDER BY score DESC, vec_id) AS BIGINT) AS rnk
@@ -4140,7 +4052,6 @@ object Pipeline {
        |  round(COALESCE(CAST(1 AS DOUBLE) / h.fr, 0), 4) AS rr
        |FROM q0 LEFT JOIN tc ON q0.q_id = tc.q_id
        |  LEFT JOIN h ON q0.q_id = h.q_id""".stripMargin
-  }
 
   // ===== q224 unigram-byte round-trip integrity ===========================
   // q190's encode∘decode ≡ identity gate for the SECOND tokenizer family:
@@ -4223,15 +4134,29 @@ object Pipeline {
         TextOps.bpeVocabIdsByteLevel(merges), d)
     }
     val vocab = TextOps.loadBpeVocabIds(spark, vocabDir)
-    val dt = TextOps.byteTokDocs(graft.Fanout(t.documents), merges)
-    val packed = eos match {
-      case None =>
-        graft.operators.Curation.packShardIds(dt, col("source"),
-          col("doc_id"), col("toks"), vocab, PackBudget, partitions = 32,
+    shardTail(TextOps.byteTokDocs(graft.Fanout(t.documents), merges),
+      Some(vocab), eos, interleave)
+  }
+
+  /** Packs per-doc byte-BPE tokens `dt(source, doc_id, toks)` into
+    * PackBudget shards per source: piece-string streams without a
+    * `vocab` (`packShards`), token-id streams with one (`packShardIds`),
+    * EOS-separated when `eos` is also given (`packShardIdsSep`).
+    */
+  private def shardTail(dt: DataFrame, vocab: Option[Map[String, Long]],
+      eos: Option[Long], interleave: Boolean = false): DataFrame = {
+    import graft.operators.Curation
+    val packed = (vocab, eos) match {
+      case (None, None) =>
+        Curation.packShards(dt, col("source"), col("doc_id"), col("toks"),
+          PackBudget, partitions = 32)
+      case (Some(v), None) =>
+        Curation.packShardIds(dt, col("source"), col("doc_id"),
+          col("toks"), v, PackBudget, partitions = 32,
           interleave = interleave)
-      case Some(e) =>
-        graft.operators.Curation.packShardIdsSep(dt, col("source"),
-          col("doc_id"), col("toks"), vocab, e, PackBudget, partitions = 32,
+      case (Some(v), Some(e)) =>
+        Curation.packShardIdsSep(dt, col("source"), col("doc_id"),
+          col("toks"), v, e, PackBudget, partitions = 32,
           interleave = interleave)
     }
     packed.select(col("domain").as("source"), col("bin"), col("n_tokens"),
@@ -4246,21 +4171,65 @@ object Pipeline {
       if (interleave)
         s"${Dedup.SharedHash.hash28Sql("CAST(doc_id AS VARCHAR)")}, doc_id"
       else "doc_id"
+    s"""WITH ${bpeCteChain(BpeRounds, applyLast = true, bpeWc0ByteLevel)},
+       |${shardTailSql("documents", ids = true, eos, "", ordKey)}""".stripMargin
+  }
+
+  /** The shard tail of the byte-BPE oracles, after a [[bpeCteChain]] of
+    * BpeRounds rounds: the `vparts/v/wi` GPT-2 id layout when `ids`,
+    * tokenize `src(source, doc_id, text)` (`dwr/dw/dt`), append the `eos`
+    * id (`de`) when given, prefix-sum pack into PackBudget bins
+    * (`${p}d/${p}c/${p}m`, in `ordKey` order) and hash each bin's stream of
+    * pieces, or of decimal ids when `ids`. Ends with the final SELECT.
+    */
+  private def shardTailSql(src: String, ids: Boolean, eos: Option[Long],
+      p: String, ordKey: String = "doc_id"): String = {
+    val vocab = if (ids) s"$byteBpeIdVocabCtesSql,\n" else ""
+    val (pieces, wordToks) = if (ids) ("ids", "wi") else ("syms", s"wc$BpeRounds")
+    val de = eos.fold("") { e =>
+      s"""de AS (SELECT source, doc_id,
+         |    list_append(toks, CAST($e AS BIGINT)) AS toks FROM dt),
+         |""".stripMargin
+    }
+    val stream = if (ids)
+      s"""list_transform(flatten(list(sl ORDER BY $ordKey)),
+         |    x -> CAST(x AS VARCHAR))""".stripMargin
+    else s"flatten(list(sl ORDER BY $ordKey))"
+    s"""${vocab}dwr AS (SELECT source, doc_id,
+       |    regexp_extract_all(lower(text), '${TextOps.byteLevelTokenPattern}') AS ws
+       |  FROM $src),
+       |dw AS (SELECT source, doc_id, ws[i] AS w, i AS pos
+       |  FROM dwr, unnest(generate_series(1, len(ws))) AS t(i)),
+       |dt AS (SELECT source, doc_id, flatten(list($pieces ORDER BY pos)) AS toks
+       |  FROM dw JOIN $wordToks USING (w) GROUP BY 1, 2),
+       |$de${p}d AS (SELECT source, doc_id, toks,
+       |    CAST(len(toks) AS BIGINT) AS n_tok FROM ${if (eos.isDefined) "de" else "dt"}),
+       |${p}c AS (SELECT source, doc_id, toks, n_tok,
+       |    CAST(COALESCE(sum(n_tok) OVER (PARTITION BY source ORDER BY $ordKey
+       |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS cum
+       |  FROM ${p}d),
+       |${p}m AS (SELECT source, doc_id, t.b AS bin,
+       |    list_slice(toks, greatest(t.b * $PackBudget, cum) - cum + 1,
+       |      least((t.b + 1) * $PackBudget, cum + n_tok) - cum) AS sl,
+       |    CAST(least((t.b + 1) * $PackBudget, cum + n_tok)
+       |      - greatest(t.b * $PackBudget, cum) AS BIGINT) AS span
+       |  FROM ${p}c, unnest(generate_series(cum // $PackBudget,
+       |    (cum + n_tok - 1) // $PackBudget)) AS t(b)
+       |  WHERE n_tok > 0)
+       |SELECT source, bin, CAST(sum(span) AS BIGINT) AS n_tokens,
+       |  md5(array_to_string($stream, ' ')) AS stream_md5
+       |FROM ${p}m GROUP BY 1, 2""".stripMargin
+  }
+
+  /** The byte-BPE GPT-2 id layout as oracle CTEs over `wc$BpeRounds`:
+    * `v` maps the 256 byte pieces to 0..255 and round i's merge product to
+    * 255 + i (lowest id wins); `wi` is each word's id list.
+    */
+  private def byteBpeIdVocabCtesSql: String = {
     val products = (1 to BpeRounds).map(i =>
       s"SELECT a || b AS piece, CAST(${255 + i} AS BIGINT) AS id FROM p$i")
       .mkString("\n  UNION ALL ")
-    val dCte = eos match {
-      case None =>
-        """d AS (SELECT source, doc_id, toks,
-          |    CAST(len(toks) AS BIGINT) AS n_tok FROM dt),""".stripMargin
-      case Some(e) =>
-        s"""de AS (SELECT source, doc_id,
-           |    list_append(toks, CAST($e AS BIGINT)) AS toks FROM dt),
-           |d AS (SELECT source, doc_id, toks,
-           |    CAST(len(toks) AS BIGINT) AS n_tok FROM de),""".stripMargin
-    }
-    s"""WITH ${bpeCteChain(BpeRounds, applyLast = true, bpeWc0ByteLevel)},
-       |vparts AS (
+    s"""vparts AS (
        |  SELECT lpad(upper(to_hex(i)), 2, '0') AS piece, CAST(i AS BIGINT) AS id
        |  FROM generate_series(0, 255) AS t(i)
        |  UNION ALL $products),
@@ -4270,31 +4239,7 @@ object Pipeline {
        |      SELECT w, syms[j] AS s, j
        |      FROM wc$BpeRounds, unnest(generate_series(1, len(syms))) AS t(j)) u
        |    JOIN v ON u.s = v.piece)
-       |  GROUP BY w),
-       |dwr AS (SELECT source, doc_id,
-       |    regexp_extract_all(lower(text), '${TextOps.byteLevelTokenPattern}') AS ws
-       |  FROM documents),
-       |dw AS (SELECT source, doc_id, ws[i] AS w, i AS pos
-       |  FROM dwr, unnest(generate_series(1, len(ws))) AS t(i)),
-       |dt AS (SELECT source, doc_id, flatten(list(ids ORDER BY pos)) AS toks
-       |  FROM dw JOIN wi USING (w) GROUP BY 1, 2),
-       |$dCte
-       |c AS (SELECT source, doc_id, toks, n_tok,
-       |    CAST(COALESCE(sum(n_tok) OVER (PARTITION BY source ORDER BY $ordKey
-       |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS cum
-       |  FROM d),
-       |m AS (SELECT source, doc_id, t.b AS bin,
-       |    list_slice(toks, greatest(t.b * $PackBudget, cum) - cum + 1,
-       |      least((t.b + 1) * $PackBudget, cum + n_tok) - cum) AS sl,
-       |    CAST(least((t.b + 1) * $PackBudget, cum + n_tok)
-       |      - greatest(t.b * $PackBudget, cum) AS BIGINT) AS span
-       |  FROM c, unnest(generate_series(cum // $PackBudget,
-       |    (cum + n_tok - 1) // $PackBudget)) AS t(b)
-       |  WHERE n_tok > 0)
-       |SELECT source, bin, CAST(sum(span) AS BIGINT) AS n_tokens,
-       |  md5(array_to_string(list_transform(flatten(list(sl ORDER BY $ordKey)),
-       |    x -> CAST(x AS VARCHAR)), ' ')) AS stream_md5
-       |FROM m GROUP BY 1, 2""".stripMargin
+       |  GROUP BY w)""".stripMargin
   }
 
   // ===== q227/q228 TRAINED multiclass language identification ============
@@ -5493,16 +5438,7 @@ object Pipeline {
   }
 
   private lazy val q253Sql =
-    s"""WITH $htmlCteSql,
-       |wr AS (SELECT d.doc_id, d.source, h.html
-       |  FROM documents d JOIN ht_html h USING (doc_id))
-       |SELECT
-       |  CASE WHEN doc_id % $WarcMalformEvery = 0 THEN 'WARC/9.9'
-       |    ELSE 'WARC/1.0' END AS warc_version,
-       |  CASE WHEN doc_id % $WarcMalformEvery = 0 THEN NULL
-       |    ELSE 'http://example.com/' || source || '/' || doc_id END AS url,
-       |  CASE WHEN doc_id % $WarcMalformEvery = 0 THEN NULL
-       |    ELSE 200 END AS status,
+    s"""$warcHeadSql
        |  CASE WHEN doc_id % $WarcMalformEvery = 0 THEN NULL
        |    ELSE 'text/html; charset=utf-8' END AS content_type,
        |  CASE WHEN doc_id % $WarcMalformEvery = 0 THEN NULL
@@ -5555,24 +5491,7 @@ object Pipeline {
       .join(keptIds, Seq("doc_id"), "left_semi")
       .join(langKept, Seq("doc_id"), "left_semi")
       .select(col("doc_id"), col("source"), col("text"))
-    val survivors = docs0.join(Dedup.dedupCorpus(
-        docs0.select(col("doc_id").as("id"), col("text")),
-        3, MinHashes, Bands, CorpusT).select(col("id").as("doc_id")),
-      Seq("doc_id"), "left_semi")
-      .localCheckpoint() // feeds trainer AND tokenization AND packing
-    // ONE regex pass feeds trainer AND packing tokenize (guide §1.2):
-    // the pre-token frame persists once; the trainer's word counts and
-    // the per-doc rejoin both read it
-    val tokWords = TextOps.byteTokWords(survivors)
-    val merges = TextOps.bpeMergesByteLevelFromPretokens(
-      tokWords.select(explode(col("ws")).as("w")),
-      BpeRounds, requireFull = true)
-    val vocab = TextOps.bpeVocabIdsByteLevel(merges)
-    val dt = TextOps.byteTokDocsFromWords(tokWords, merges)
-    graft.operators.Curation.packShardIdsSep(dt, col("source"),
-      col("doc_id"), col("toks"), vocab, EosId, PackBudget, partitions = 32)
-      .select(col("domain").as("source"), col("bin"), col("n_tokens"),
-        col("stream_md5"))
+    survivorShards(docs0, ids = true, Some(EosId))
   }
 
   /** The full-curation oracle chain (tagger → dedup → survivor BPE →
@@ -5580,28 +5499,30 @@ object Pipeline {
     * q238 runs it on `documents`, q251 on the HTML-extracted `ht_src`.
     * `pre` prepends extra CTEs (the ht_ extraction chain for q251).
     */
-  private def fullCurationShardsSql(src: String, pre: String): String = {
-    val rows = MinHashes / Bands
-    val sigExprs = (0 until MinHashes).map { i =>
-      s"list_min(list_transform(xs, x -> (${Dedup.hashA(i)}*x + ${Dedup.hashB(i)}) % ${Dedup.P}))"
-    }.mkString("[", ", ", "]")
-    val products = (1 to BpeRounds).map(i =>
-      s"SELECT a || b AS piece, CAST(${255 + i} AS BIGINT) AS id FROM p$i")
-      .mkString("\n  UNION ALL ")
+  private def fullCurationShardsSql(src: String, pre: String): String =
     s"""WITH $pre${taggerCteFor(src)},
        |${langIdTrainCtes("TRUE")},
        |${langIdGateCtes(src)},
        |din AS MATERIALIZED (SELECT d.doc_id, d.source, d.text
        |  FROM $src d JOIN tg_k USING (doc_id)
        |  JOIN lg_keep USING (doc_id) WHERE tg_k.kept),
-       |x_ex AS MATERIALIZED (SELECT min(doc_id) AS id, text FROM din GROUP BY text),
+       |${survivorShardsSql("din", ids = true, Some(EosId))}""".stripMargin
+
+  /** Exact + MinHash-LSH survivor election over `src(doc_id, source, text)`
+    * as oracle CTEs (`x_ex … x_drops`, Dedup.dedupCorpus's rule), ending in
+    * `out(doc_id, source, text)`: the rows of `src` whose id survives.
+    */
+  private def survivorCtesSql(src: String, out: String = "sv",
+      k: String = "k"): String = {
+    val rows = MinHashes / Bands
+    s"""x_ex AS MATERIALIZED (SELECT min(doc_id) AS id, text FROM $src GROUP BY text),
        |x_h AS MATERIALIZED (SELECT id, ss, len(ss) AS n_sh,
        |    list_transform(ss, s -> ${Dedup.SharedHash.hash28Sql("s")}) AS xs FROM (
        |    SELECT id, ${shinglesSql(3)} AS ss FROM (
        |      SELECT id, regexp_split_to_array(lower(text), '\\s+') AS words
        |      FROM x_ex))
        |  WHERE len(ss) > 0),
-       |x_sig AS MATERIALIZED (SELECT id, ss, n_sh, $sigExprs AS sig FROM x_h),
+       |x_sig AS MATERIALIZED (SELECT id, ss, n_sh, $minhashSigSql AS sig FROM x_h),
        |x_bands AS (SELECT id, t.b AS band,
        |    array_to_string(list_transform(list_slice(sig, t.b*$rows+1, t.b*$rows+$rows),
        |      z -> CAST(z AS VARCHAR)), '_') AS key
@@ -5614,49 +5535,19 @@ object Pipeline {
        |          ON x.band = y.band AND x.key = y.key AND x.id < y.id) c
        |    JOIN x_sig a ON c.id_a = a.id JOIN x_sig b ON c.id_b = b.id)
        |  WHERE round(CAST(c AS DOUBLE)/(na+nb-c), 4) >= $CorpusT),
-       |sv AS MATERIALIZED (SELECT d.doc_id, d.source, d.text FROM din d JOIN (
+       |$out AS MATERIALIZED (SELECT d.doc_id, d.source, d.text FROM $src d JOIN (
        |    SELECT id FROM x_ex WHERE id NOT IN (SELECT id_b FROM x_drops)
-       |  ) k ON d.doc_id = k.id),
-       |${bpeCteChain(BpeRounds, applyLast = true, bpeWc0ByteLevelFrom("sv"))},
-       |vparts AS (
-       |  SELECT lpad(upper(to_hex(i)), 2, '0') AS piece, CAST(i AS BIGINT) AS id
-       |  FROM generate_series(0, 255) AS t(i)
-       |  UNION ALL $products),
-       |v AS MATERIALIZED (SELECT piece, min(id) AS id FROM vparts GROUP BY 1),
-       |wi AS MATERIALIZED (SELECT w, list(id ORDER BY j) AS ids FROM (
-       |    SELECT u.w, u.j, v.id FROM (
-       |      SELECT w, syms[j] AS s, j
-       |      FROM wc$BpeRounds, unnest(generate_series(1, len(syms))) AS t(j)) u
-       |    JOIN v ON u.s = v.piece)
-       |  GROUP BY w),
-       |dwr AS (SELECT source, doc_id,
-       |    regexp_extract_all(lower(text), '${TextOps.byteLevelTokenPattern}') AS ws
-       |  FROM sv),
-       |dw AS (SELECT source, doc_id, ws[i] AS w, i AS pos
-       |  FROM dwr, unnest(generate_series(1, len(ws))) AS t(i)),
-       |dt AS (SELECT source, doc_id, flatten(list(ids ORDER BY pos)) AS toks
-       |  FROM dw JOIN wi USING (w) GROUP BY 1, 2),
-       |de AS (SELECT source, doc_id,
-       |    list_append(toks, CAST($EosId AS BIGINT)) AS toks FROM dt),
-       |pk_d AS (SELECT source, doc_id, toks,
-       |    CAST(len(toks) AS BIGINT) AS n_tok FROM de),
-       |pk_c AS (SELECT source, doc_id, toks, n_tok,
-       |    CAST(COALESCE(sum(n_tok) OVER (PARTITION BY source ORDER BY doc_id
-       |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS cum
-       |  FROM pk_d),
-       |pk_m AS (SELECT source, doc_id, t.b AS bin,
-       |    list_slice(toks, greatest(t.b * $PackBudget, cum) - cum + 1,
-       |      least((t.b + 1) * $PackBudget, cum + n_tok) - cum) AS sl,
-       |    CAST(least((t.b + 1) * $PackBudget, cum + n_tok)
-       |      - greatest(t.b * $PackBudget, cum) AS BIGINT) AS span
-       |  FROM pk_c, unnest(generate_series(cum // $PackBudget,
-       |    (cum + n_tok - 1) // $PackBudget)) AS t(b)
-       |  WHERE n_tok > 0)
-       |SELECT source, bin, CAST(sum(span) AS BIGINT) AS n_tokens,
-       |  md5(array_to_string(list_transform(flatten(list(sl ORDER BY doc_id)),
-       |    x -> CAST(x AS VARCHAR)), ' ')) AS stream_md5
-       |FROM pk_m GROUP BY 1, 2""".stripMargin
+       |  ) $k ON d.doc_id = $k.id)""".stripMargin
   }
+
+  /** The oracle twin of [[survivorShards]]: [[survivorCtesSql]] over `src`,
+    * byte-level BPE trained on the survivors `sv`, then [[shardTailSql]].
+    */
+  private def survivorShardsSql(src: String, ids: Boolean,
+      eos: Option[Long]): String =
+    s"""${survivorCtesSql(src)},
+       |${bpeCteChain(BpeRounds, applyLast = true, bpeWc0ByteLevelFrom("sv"))},
+       |${shardTailSql("sv", ids, eos, "pk_")}""".stripMargin
 
   // ===== q222 dedup → survivor-trained tokenizer → packed shards =========
   // The core production path (dedup, THEN train the tokenizer on the
@@ -5673,6 +5564,16 @@ object Pipeline {
   private def q222(t: Tables): DataFrame = {
     val docs0 = graft.Fanout(t.documents)
       .select(col("doc_id"), col("source"), col("text"))
+    survivorShards(docs0, ids = false, None)
+  }
+
+  /** The survivor shard chain of q222/q230/q238/q251: exact + MinHash-LSH
+    * dedup of `docs0(doc_id, source, text)`, byte-level BPE trained on the
+    * survivors, then [[shardTail]] — with the survivor-trained GPT-2 id
+    * layout when `ids`.
+    */
+  private def survivorShards(docs0: DataFrame, ids: Boolean,
+      eos: Option[Long]): DataFrame = {
     val survivors = docs0.join(Dedup.dedupCorpus(
         docs0.select(col("doc_id").as("id"), col("text")),
         3, MinHashes, Bands, CorpusT).select(col("id").as("doc_id")),
@@ -5685,68 +5586,12 @@ object Pipeline {
     val merges = TextOps.bpeMergesByteLevelFromPretokens(
       tokWords.select(explode(col("ws")).as("w")),
       BpeRounds, requireFull = true)
-    val dt = TextOps.byteTokDocsFromWords(tokWords, merges)
-    graft.operators.Curation.packShards(dt, col("source"), col("doc_id"),
-      col("toks"), PackBudget, partitions = 32)
-      .select(col("domain").as("source"), col("bin"), col("n_tokens"),
-        col("stream_md5"))
+    val vocab = if (ids) Some(TextOps.bpeVocabIdsByteLevel(merges)) else None
+    shardTail(TextOps.byteTokDocsFromWords(tokWords, merges), vocab, eos)
   }
 
-  private lazy val q222Sql = {
-    val rows = MinHashes / Bands
-    val sigExprs = (0 until MinHashes).map { i =>
-      s"list_min(list_transform(xs, x -> (${Dedup.hashA(i)}*x + ${Dedup.hashB(i)}) % ${Dedup.P}))"
-    }.mkString("[", ", ", "]")
-    s"""WITH
-       |x_ex AS MATERIALIZED (SELECT min(doc_id) AS id, text FROM documents GROUP BY text),
-       |x_h AS MATERIALIZED (SELECT id, ss, len(ss) AS n_sh,
-       |    list_transform(ss, s -> ${Dedup.SharedHash.hash28Sql("s")}) AS xs FROM (
-       |    SELECT id, ${shinglesSql(3)} AS ss FROM (
-       |      SELECT id, regexp_split_to_array(lower(text), '\\s+') AS words
-       |      FROM x_ex))
-       |  WHERE len(ss) > 0),
-       |x_sig AS MATERIALIZED (SELECT id, ss, n_sh, $sigExprs AS sig FROM x_h),
-       |x_bands AS (SELECT id, t.b AS band,
-       |    array_to_string(list_transform(list_slice(sig, t.b*$rows+1, t.b*$rows+$rows),
-       |      z -> CAST(z AS VARCHAR)), '_') AS key
-       |  FROM x_sig CROSS JOIN generate_series(0, ${Bands - 1}) AS t(b)),
-       |x_drops AS (SELECT DISTINCT id_b FROM (
-       |    SELECT c.id_a, c.id_b, len(list_intersect(a.ss, b.ss)) AS c,
-       |      a.n_sh AS na, b.n_sh AS nb
-       |    FROM (SELECT DISTINCT x.id AS id_a, y.id AS id_b
-       |          FROM x_bands x JOIN x_bands y
-       |          ON x.band = y.band AND x.key = y.key AND x.id < y.id) c
-       |    JOIN x_sig a ON c.id_a = a.id JOIN x_sig b ON c.id_b = b.id)
-       |  WHERE round(CAST(c AS DOUBLE)/(na+nb-c), 4) >= $CorpusT),
-       |sv AS MATERIALIZED (SELECT d.doc_id, d.source, d.text FROM documents d JOIN (
-       |    SELECT id FROM x_ex WHERE id NOT IN (SELECT id_b FROM x_drops)
-       |  ) k ON d.doc_id = k.id),
-       |${bpeCteChain(BpeRounds, applyLast = true, bpeWc0ByteLevelFrom("sv"))},
-       |dwr AS (SELECT source, doc_id,
-       |    regexp_extract_all(lower(text), '${TextOps.byteLevelTokenPattern}') AS ws
-       |  FROM sv),
-       |dw AS (SELECT source, doc_id, ws[i] AS w, i AS pos
-       |  FROM dwr, unnest(generate_series(1, len(ws))) AS t(i)),
-       |dt AS (SELECT source, doc_id, flatten(list(syms ORDER BY pos)) AS toks
-       |  FROM dw JOIN wc$BpeRounds USING (w) GROUP BY 1, 2),
-       |pk_d AS (SELECT source, doc_id, toks,
-       |    CAST(len(toks) AS BIGINT) AS n_tok FROM dt),
-       |pk_c AS (SELECT source, doc_id, toks, n_tok,
-       |    CAST(COALESCE(sum(n_tok) OVER (PARTITION BY source ORDER BY doc_id
-       |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS cum
-       |  FROM pk_d),
-       |pk_m AS (SELECT source, doc_id, t.b AS bin,
-       |    list_slice(toks, greatest(t.b * $PackBudget, cum) - cum + 1,
-       |      least((t.b + 1) * $PackBudget, cum + n_tok) - cum) AS sl,
-       |    CAST(least((t.b + 1) * $PackBudget, cum + n_tok)
-       |      - greatest(t.b * $PackBudget, cum) AS BIGINT) AS span
-       |  FROM pk_c, unnest(generate_series(cum // $PackBudget,
-       |    (cum + n_tok - 1) // $PackBudget)) AS t(b)
-       |  WHERE n_tok > 0)
-       |SELECT source, bin, CAST(sum(span) AS BIGINT) AS n_tokens,
-       |  md5(array_to_string(flatten(list(sl ORDER BY doc_id)), ' ')) AS stream_md5
-       |FROM pk_m GROUP BY 1, 2""".stripMargin
-  }
+  private lazy val q222Sql =
+    s"WITH\n${survivorShardsSql("documents", ids = false, None)}"
 
   // ===== q230 dedup → survivor tokenizer → TOKEN-ID shards ================
   // q222's composed flagship taken to its literal deliverable: the same
@@ -5761,96 +5606,11 @@ object Pipeline {
   private def q230(t: Tables): DataFrame = {
     val docs0 = graft.Fanout(t.documents)
       .select(col("doc_id"), col("source"), col("text"))
-    val survivors = docs0.join(Dedup.dedupCorpus(
-        docs0.select(col("doc_id").as("id"), col("text")),
-        3, MinHashes, Bands, CorpusT).select(col("id").as("doc_id")),
-      Seq("doc_id"), "left_semi")
-      .localCheckpoint() // feeds trainer AND tokenization AND packing
-    // ONE regex pass feeds trainer AND packing tokenize (guide §1.2):
-    // the pre-token frame persists once; the trainer's word counts and
-    // the per-doc rejoin both read it
-    val tokWords = TextOps.byteTokWords(survivors)
-    val merges = TextOps.bpeMergesByteLevelFromPretokens(
-      tokWords.select(explode(col("ws")).as("w")),
-      BpeRounds, requireFull = true)
-    val vocab = TextOps.bpeVocabIdsByteLevel(merges)
-    val dt = TextOps.byteTokDocsFromWords(tokWords, merges)
-    graft.operators.Curation.packShardIds(dt, col("source"), col("doc_id"),
-      col("toks"), vocab, PackBudget, partitions = 32)
-      .select(col("domain").as("source"), col("bin"), col("n_tokens"),
-        col("stream_md5"))
+    survivorShards(docs0, ids = true, None)
   }
 
-  private lazy val q230Sql = {
-    val rows = MinHashes / Bands
-    val sigExprs = (0 until MinHashes).map { i =>
-      s"list_min(list_transform(xs, x -> (${Dedup.hashA(i)}*x + ${Dedup.hashB(i)}) % ${Dedup.P}))"
-    }.mkString("[", ", ", "]")
-    val products = (1 to BpeRounds).map(i =>
-      s"SELECT a || b AS piece, CAST(${255 + i} AS BIGINT) AS id FROM p$i")
-      .mkString("\n  UNION ALL ")
-    s"""WITH
-       |x_ex AS MATERIALIZED (SELECT min(doc_id) AS id, text FROM documents GROUP BY text),
-       |x_h AS MATERIALIZED (SELECT id, ss, len(ss) AS n_sh,
-       |    list_transform(ss, s -> ${Dedup.SharedHash.hash28Sql("s")}) AS xs FROM (
-       |    SELECT id, ${shinglesSql(3)} AS ss FROM (
-       |      SELECT id, regexp_split_to_array(lower(text), '\\s+') AS words
-       |      FROM x_ex))
-       |  WHERE len(ss) > 0),
-       |x_sig AS MATERIALIZED (SELECT id, ss, n_sh, $sigExprs AS sig FROM x_h),
-       |x_bands AS (SELECT id, t.b AS band,
-       |    array_to_string(list_transform(list_slice(sig, t.b*$rows+1, t.b*$rows+$rows),
-       |      z -> CAST(z AS VARCHAR)), '_') AS key
-       |  FROM x_sig CROSS JOIN generate_series(0, ${Bands - 1}) AS t(b)),
-       |x_drops AS (SELECT DISTINCT id_b FROM (
-       |    SELECT c.id_a, c.id_b, len(list_intersect(a.ss, b.ss)) AS c,
-       |      a.n_sh AS na, b.n_sh AS nb
-       |    FROM (SELECT DISTINCT x.id AS id_a, y.id AS id_b
-       |          FROM x_bands x JOIN x_bands y
-       |          ON x.band = y.band AND x.key = y.key AND x.id < y.id) c
-       |    JOIN x_sig a ON c.id_a = a.id JOIN x_sig b ON c.id_b = b.id)
-       |  WHERE round(CAST(c AS DOUBLE)/(na+nb-c), 4) >= $CorpusT),
-       |sv AS MATERIALIZED (SELECT d.doc_id, d.source, d.text FROM documents d JOIN (
-       |    SELECT id FROM x_ex WHERE id NOT IN (SELECT id_b FROM x_drops)
-       |  ) k ON d.doc_id = k.id),
-       |${bpeCteChain(BpeRounds, applyLast = true, bpeWc0ByteLevelFrom("sv"))},
-       |vparts AS (
-       |  SELECT lpad(upper(to_hex(i)), 2, '0') AS piece, CAST(i AS BIGINT) AS id
-       |  FROM generate_series(0, 255) AS t(i)
-       |  UNION ALL $products),
-       |v AS MATERIALIZED (SELECT piece, min(id) AS id FROM vparts GROUP BY 1),
-       |wi AS MATERIALIZED (SELECT w, list(id ORDER BY j) AS ids FROM (
-       |    SELECT u.w, u.j, v.id FROM (
-       |      SELECT w, syms[j] AS s, j
-       |      FROM wc$BpeRounds, unnest(generate_series(1, len(syms))) AS t(j)) u
-       |    JOIN v ON u.s = v.piece)
-       |  GROUP BY w),
-       |dwr AS (SELECT source, doc_id,
-       |    regexp_extract_all(lower(text), '${TextOps.byteLevelTokenPattern}') AS ws
-       |  FROM sv),
-       |dw AS (SELECT source, doc_id, ws[i] AS w, i AS pos
-       |  FROM dwr, unnest(generate_series(1, len(ws))) AS t(i)),
-       |dt AS (SELECT source, doc_id, flatten(list(ids ORDER BY pos)) AS toks
-       |  FROM dw JOIN wi USING (w) GROUP BY 1, 2),
-       |pk_d AS (SELECT source, doc_id, toks,
-       |    CAST(len(toks) AS BIGINT) AS n_tok FROM dt),
-       |pk_c AS (SELECT source, doc_id, toks, n_tok,
-       |    CAST(COALESCE(sum(n_tok) OVER (PARTITION BY source ORDER BY doc_id
-       |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS cum
-       |  FROM pk_d),
-       |pk_m AS (SELECT source, doc_id, t.b AS bin,
-       |    list_slice(toks, greatest(t.b * $PackBudget, cum) - cum + 1,
-       |      least((t.b + 1) * $PackBudget, cum + n_tok) - cum) AS sl,
-       |    CAST(least((t.b + 1) * $PackBudget, cum + n_tok)
-       |      - greatest(t.b * $PackBudget, cum) AS BIGINT) AS span
-       |  FROM pk_c, unnest(generate_series(cum // $PackBudget,
-       |    (cum + n_tok - 1) // $PackBudget)) AS t(b)
-       |  WHERE n_tok > 0)
-       |SELECT source, bin, CAST(sum(span) AS BIGINT) AS n_tokens,
-       |  md5(array_to_string(list_transform(flatten(list(sl ORDER BY doc_id)),
-       |    x -> CAST(x AS VARCHAR)), ' ')) AS stream_md5
-       |FROM pk_m GROUP BY 1, 2""".stripMargin
-  }
+  private lazy val q230Sql =
+    s"WITH\n${survivorShardsSql("documents", ids = true, None)}"
 
   private lazy val q238Sql = fullCurationShardsSql("documents", "")
 
@@ -5912,24 +5672,7 @@ object Pipeline {
       .filter(col("score") >= langGateTau(t)).select(col("id").as("doc_id"))
     val docs0 = content.join(keptIds, Seq("doc_id"), "left_semi")
       .join(langKept, Seq("doc_id"), "left_semi")
-    val survivors = docs0.join(Dedup.dedupCorpus(
-        docs0.select(col("doc_id").as("id"), col("text")),
-        3, MinHashes, Bands, CorpusT).select(col("id").as("doc_id")),
-      Seq("doc_id"), "left_semi")
-      .localCheckpoint() // feeds trainer AND tokenization AND packing
-    // ONE regex pass feeds trainer AND packing tokenize (guide §1.2):
-    // the pre-token frame persists once; the trainer's word counts and
-    // the per-doc rejoin both read it
-    val tokWords = TextOps.byteTokWords(survivors)
-    val merges = TextOps.bpeMergesByteLevelFromPretokens(
-      tokWords.select(explode(col("ws")).as("w")),
-      BpeRounds, requireFull = true)
-    val vocab = TextOps.bpeVocabIdsByteLevel(merges)
-    val dt = TextOps.byteTokDocsFromWords(tokWords, merges)
-    graft.operators.Curation.packShardIdsSep(dt, col("source"),
-      col("doc_id"), col("toks"), vocab, EosId, PackBudget, partitions = 32)
-      .select(col("domain").as("source"), col("bin"), col("n_tokens"),
-        col("stream_md5"))
+    survivorShards(docs0, ids = true, Some(EosId))
   }
 
   private lazy val q251Sql = fullCurationShardsSql("ht_src",
@@ -5982,20 +5725,10 @@ object Pipeline {
   }
 
   private val q215Sql = {
-    def best(src: String, id: String, vec: String, n: String) =
-      s"""SELECT $id, $vec, cent_id AS cell FROM (
-         |  SELECT s.*, c.cent_id,
-         |    row_number() OVER (PARTITION BY s.$id
-         |      ORDER BY round(${cosSql(s"s.$vec", "c.cvec")}, 4) DESC, c.cent_id) AS crn
-         |  FROM $src s CROSS JOIN cents c) WHERE crn <= $n""".stripMargin
     // 0D-init index-ordered fold — the engine's aggregate(_, 0D, +) exactly
     def fsum(items: String) =
       s"list_reduce(list_prepend(CAST(0 AS DOUBLE), $items), (p,q) -> p+q)"
-    s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-       |cents AS (SELECT vec_id AS cent_id, v AS cvec FROM e WHERE vec_id < $IvfCells),
-       |q0 AS (SELECT vec_id AS q_id, v AS qv FROM e WHERE vec_id % $QueryMod = 0),
-       |lists AS MATERIALIZED (${best("e", "vec_id", "v", "1")}),
-       |probes AS (${best("q0", "q_id", "qv", IvfProbe.toString)}),
+    s"""${ivfProbeCtesSql(materialize = true)},
        |stt AS (SELECT i AS d, min(v[i]) AS mn, (max(v[i]) - min(v[i])) / 255 AS step
        |        FROM e, unnest(generate_series(1, $Dim)) AS t(i) GROUP BY 1),
        |sta AS (SELECT list({'mn': mn, 'step': step} ORDER BY d) AS st FROM stt),
@@ -6165,7 +5898,11 @@ object Pipeline {
   private val LpSeedMod = 4
   private val LpIters = 3
 
-  private def q187(t: Tables): DataFrame = {
+  /** The label-propagation graph of q187/q189: the symmetrized LSH-kNN
+    * edges (id_a < id_b) and every node with its seed label (the true
+    * label on every LpSeedMod-th vector, else null).
+    */
+  private def lpGraph(t: Tables): (DataFrame, DataFrame) = {
     val e = graft.Fanout(t.embeddings)
     val knn = Similarity.lshTopK(
       e.select(col("vec_id").as("q_id"), col("embedding").as("q_vec")),
@@ -6175,6 +5912,11 @@ object Pipeline {
     val nodes = e.select(col("vec_id").as("id"),
       when(col("vec_id") % LpSeedMod === 0, col("label"))
         .cast("long").as("seed_label"))
+    (edges, nodes)
+  }
+
+  private def q187(t: Tables): DataFrame = {
+    val (edges, nodes) = lpGraph(t)
     Graph.labelPropagation(edges, nodes, LpIters)
   }
 
@@ -6241,15 +5983,7 @@ object Pipeline {
   private val LpUnroll = 8
 
   private def q189(t: Tables): DataFrame = {
-    val e = graft.Fanout(t.embeddings)
-    val knn = Similarity.lshTopK(
-      e.select(col("vec_id").as("q_id"), col("embedding").as("q_vec")),
-      e, Dim, KnnK, LpPlanes)
-    val edges = knn.select(least(col("q_id"), col("vec_id")).as("id_a"),
-      greatest(col("q_id"), col("vec_id")).as("id_b")).distinct()
-    val nodes = e.select(col("vec_id").as("id"),
-      when(col("vec_id") % LpSeedMod === 0, col("label"))
-        .cast("long").as("seed_label"))
+    val (edges, nodes) = lpGraph(t)
     // gate safety: the oracle unrolls LpUnroll frozen rounds and relies on
     // over-unroll idempotence, so the MEASURED convergence must stay under
     // the unroll — assert it here (fail-visible with a named knob) rather
@@ -6482,6 +6216,26 @@ object Pipeline {
        |FROM ex JOIN est USING (token)""".stripMargin
   }
 
+  /** The lower-cased whitespace tokens of `docs`' text, as `token`. */
+  private def wsTokens(docs: DataFrame): DataFrame =
+    docs.select(explode(split(lower(col("text")), "\\s+")).as("token"))
+      .filter(length(col("token")) > 0)
+
+  /** The CountMin store report of q197/q229: every corpus token's exact
+    * count beside its estimate probed from the store at `dir`.
+    */
+  private def countMinReport(t: Tables, dir: String): DataFrame = {
+    val exact = wsTokens(graft.Fanout(t.documents)).persistScoped()
+      .groupBy(col("token")).agg(count(lit(1)).as("exact"))
+    graft.operators.Sketches
+      .countMinEstimateAgainstStore(dir, exact.select(col("token")),
+        col("token"))
+      .join(exact, col("key") === col("token"))
+      .select(col("token"), col("exact"), col("est"),
+        (col("est") - col("exact")).as("overcount"),
+        (col("est") >= col("exact")).as("sound"))
+  }
+
   // ===== q229 compacted CountMin store =====================================
   // q197's maintenance closure — the op the sketch store was missing:
   // probes SUM cells across every batch dir forever, so an
@@ -6494,13 +6248,9 @@ object Pipeline {
   // spec-pinned (SketchesSpec).
 
   private def q229(t: Tables): DataFrame = {
-    import graft.CacheScope.ScopedPersist
     val spark = t.documents.sparkSession
-    def toksOf(f: org.apache.spark.sql.Column => org.apache.spark.sql.Column) =
-      graft.Fanout(t.documents)
-        .filter(f(col("doc_id")))
-        .select(explode(split(lower(col("text")), "\\s+")).as("token"))
-        .filter(length(col("token")) > 0)
+    def toksOf(f: Column => Column) =
+      wsTokens(graft.Fanout(t.documents).filter(f(col("doc_id"))))
     val dir = RunCache.dir(t.dir,
       s"cm_compact_${CmDepth}_$CmWidth") { d =>
       graft.operators.Sketches.writeCountMin(
@@ -6513,18 +6263,7 @@ object Pipeline {
       require(graft.operators.Sketches
         .compactCountMinIfNeeded(spark, d, maxBatches = 2).contains(1))
     }
-    val toks = graft.Fanout(t.documents)
-      .select(explode(split(lower(col("text")), "\\s+")).as("token"))
-      .filter(length(col("token")) > 0)
-      .persistScoped()
-    val exact = toks.groupBy(col("token")).agg(count(lit(1)).as("exact"))
-    graft.operators.Sketches
-      .countMinEstimateAgainstStore(dir, exact.select(col("token")),
-        col("token"))
-      .join(exact, col("key") === col("token"))
-      .select(col("token"), col("exact"), col("est"),
-        (col("est") - col("exact")).as("overcount"),
-        (col("est") >= col("exact")).as("sound"))
+    countMinReport(t, dir)
   }
 
   // ===== q198 stored perplexity-partition serving ==========================
@@ -6559,30 +6298,15 @@ object Pipeline {
   // discipline applied to a sketch).
 
   private def q197(t: Tables): DataFrame = {
-    import graft.CacheScope.ScopedPersist
-    def toksOf(f: org.apache.spark.sql.Column => org.apache.spark.sql.Column) =
-      graft.Fanout(t.documents)
-        .filter(f(col("doc_id")))
-        .select(explode(split(lower(col("text")), "\\s+")).as("token"))
-        .filter(length(col("token")) > 0)
+    def toksOf(f: Column => Column) =
+      wsTokens(graft.Fanout(t.documents).filter(f(col("doc_id"))))
     val dir = RunCache.dir(t.dir, s"cm_sketch_${CmDepth}_$CmWidth") { d =>
       graft.operators.Sketches.writeCountMin(
         toksOf(_ % 2 === 0), col("token"), CmDepth, CmWidth, d)
       graft.operators.Sketches.ingestIntoCountMin(
         toksOf(_ % 2 =!= 0), col("token"), d, batchId = 1L)
     }
-    val toks = graft.Fanout(t.documents)
-      .select(explode(split(lower(col("text")), "\\s+")).as("token"))
-      .filter(length(col("token")) > 0)
-      .persistScoped()
-    val exact = toks.groupBy(col("token")).agg(count(lit(1)).as("exact"))
-    graft.operators.Sketches
-      .countMinEstimateAgainstStore(dir, exact.select(col("token")),
-        col("token"))
-      .join(exact, col("key") === col("token"))
-      .select(col("token"), col("exact"), col("est"),
-        (col("est") - col("exact")).as("overcount"),
-        (col("est") >= col("exact")).as("sound"))
+    countMinReport(t, dir)
   }
 
   // ===== q196 tokenizer fertility report ==================================
@@ -6723,11 +6447,7 @@ object Pipeline {
   // lazy: bpeCteChain/bpeWc0ByteLevelFrom/byteLevelTokenPattern and the
   // Bpe/Bm constants are declared later in this file (the q172Sql
   // order-safety lesson)
-  private lazy val q188Sql = {
-    val rows = MinHashes / Bands
-    val sigExprs = (0 until MinHashes).map { i =>
-      s"list_min(list_transform(xs, x -> (${Dedup.hashA(i)}*x + ${Dedup.hashB(i)}) % ${Dedup.P}))"
-    }.mkString("[", ", ", "]")
+  private lazy val q188Sql =
     s"""WITH
        |r_w AS (SELECT doc_id AS id, list_filter(
        |    regexp_split_to_array(lower(text), '\\s+'), x -> len(x) > 0) AS words
@@ -6783,29 +6503,7 @@ object Pipeline {
        |d2 AS MATERIALIZED (SELECT d.doc_id, d.source, d.text FROM d1 d JOIN (
        |    SELECT id FROM p_f WHERE round(exp(-s / m), 4) <= $LmPplThresh
        |  ) k2 ON d.doc_id = k2.id),
-       |x_ex AS MATERIALIZED (SELECT min(doc_id) AS id, text FROM d2 GROUP BY text),
-       |x_h AS MATERIALIZED (SELECT id, ss, len(ss) AS n_sh,
-       |    list_transform(ss, s -> ${Dedup.SharedHash.hash28Sql("s")}) AS xs FROM (
-       |    SELECT id, ${shinglesSql(3)} AS ss FROM (
-       |      SELECT id, regexp_split_to_array(lower(text), '\\s+') AS words
-       |      FROM x_ex))
-       |  WHERE len(ss) > 0),
-       |x_sig AS MATERIALIZED (SELECT id, ss, n_sh, $sigExprs AS sig FROM x_h),
-       |x_bands AS (SELECT id, t.b AS band,
-       |    array_to_string(list_transform(list_slice(sig, t.b*$rows+1, t.b*$rows+$rows),
-       |      z -> CAST(z AS VARCHAR)), '_') AS key
-       |  FROM x_sig CROSS JOIN generate_series(0, ${Bands - 1}) AS t(b)),
-       |x_drops AS (SELECT DISTINCT id_b FROM (
-       |    SELECT c.id_a, c.id_b, len(list_intersect(a.ss, b.ss)) AS c,
-       |      a.n_sh AS na, b.n_sh AS nb
-       |    FROM (SELECT DISTINCT x.id AS id_a, y.id AS id_b
-       |          FROM x_bands x JOIN x_bands y
-       |          ON x.band = y.band AND x.key = y.key AND x.id < y.id) c
-       |    JOIN x_sig a ON c.id_a = a.id JOIN x_sig b ON c.id_b = b.id)
-       |  WHERE round(CAST(c AS DOUBLE)/(na+nb-c), 4) >= $CorpusT),
-       |d3 AS MATERIALIZED (SELECT d.doc_id, d.source, d.text FROM d2 d JOIN (
-       |    SELECT id FROM x_ex WHERE id NOT IN (SELECT id_b FROM x_drops)
-       |  ) k3 ON d.doc_id = k3.id),
+       |${survivorCtesSql("d2", "d3", "k3")},
        |i_d AS MATERIALIZED (SELECT doc_id AS id, (doc_id % 10 = 0) AS is_t, ws FROM (
        |    SELECT doc_id, list_filter(regexp_split_to_array(lower(text), '\\s+'),
        |      x -> len(x) > 0) AS ws FROM d3)
@@ -6878,7 +6576,6 @@ object Pipeline {
        |SELECT source, CAST(floor(cum / $P2PackBudget.0) AS BIGINT) AS bin,
        |  COUNT(*) AS n_docs, CAST(sum(n_tokens) AS BIGINT) AS bin_tokens
        |FROM pk GROUP BY 1, 2""".stripMargin
-  }
 
   // ===== q148 per-document novelty attribution ===========================
   // "How much does each document ADD to the corpus?" — for every doc,
@@ -6924,21 +6621,14 @@ object Pipeline {
   private def q76(t: Tables): DataFrame =
     Similarity.semanticDedup(graft.Fanout(t.embeddings), IvfCells, CosT)
 
-  private val q76Sql = {
-    val best =
-      s"""SELECT vec_id, v, cent_id AS cell FROM (
-         |  SELECT s.*, c.cent_id,
-         |    row_number() OVER (PARTITION BY s.vec_id
-         |      ORDER BY round(${cosSql("s.v", "c.cvec")}, 4) DESC, c.cent_id) AS crn
-         |  FROM e s CROSS JOIN cents c) WHERE crn <= 1""".stripMargin
+  private val q76Sql =
     s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
        |cents AS (SELECT vec_id AS cent_id, v AS cvec FROM e WHERE vec_id < $IvfCells),
-       |lists AS MATERIALIZED ($best),
+       |lists AS MATERIALIZED (${ivfBestSql("e", "vec_id", "v", "1")}),
        |drops AS (SELECT DISTINCT y.vec_id AS drop_id
        |          FROM lists x JOIN lists y ON x.cell = y.cell AND x.vec_id < y.vec_id
        |          WHERE round(${cosSql("x.v", "y.v")}, 4) >= $CosT)
        |SELECT vec_id FROM e WHERE vec_id NOT IN (SELECT drop_id FROM drops)""".stripMargin
-  }
 
   // ===== q151 top-2-cell semantic dedup ==================================
   // q76's cross-cell recall knob ON the gate: every vector enters its
@@ -6955,21 +6645,14 @@ object Pipeline {
     Similarity.semanticDedupMultiCell(
       graft.Fanout(t.embeddings), IvfCells, CosT, nAssign = 2)
 
-  private val q151Sql = {
-    val best2 =
-      s"""SELECT vec_id, v, cent_id AS cell FROM (
-         |  SELECT s.*, c.cent_id,
-         |    row_number() OVER (PARTITION BY s.vec_id
-         |      ORDER BY round(${cosSql("s.v", "c.cvec")}, 4) DESC, c.cent_id) AS crn
-         |  FROM e s CROSS JOIN cents c) WHERE crn <= 2""".stripMargin
+  private val q151Sql =
     s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
        |cents AS (SELECT vec_id AS cent_id, v AS cvec FROM e WHERE vec_id < $IvfCells),
-       |lists AS MATERIALIZED ($best2),
+       |lists AS MATERIALIZED (${ivfBestSql("e", "vec_id", "v", "2")}),
        |drops AS (SELECT DISTINCT y.vec_id AS drop_id
        |          FROM lists x JOIN lists y ON x.cell = y.cell AND x.vec_id < y.vec_id
        |          WHERE round(${cosSql("x.v", "y.v")}, 4) >= $CosT)
        |SELECT vec_id FROM e WHERE vec_id NOT IN (SELECT drop_id FROM drops)""".stripMargin
-  }
 
   // ===== q152 BM25 more-like-this retrieval ==============================
   // Ranked retrieval over the corpus (Retrieval.bm25TopK): each seed
@@ -6990,6 +6673,46 @@ object Pipeline {
   private val BmSeeds = 4 // seed docs: doc_id < BmSeeds (exist at every SF)
   private val BmQTerms = 3
   private val BmTopK = 10
+
+  /** The bigram-BM25 oracle CTEs `tf … agg`: per-doc bigram tf, df, corpus
+    * stats, the seed bags (`sw` rows of the seed docs `seedFilter` keeps,
+    * top BmQTerms by tf·idf in `qt`), per-term scores and each (seed, doc)
+    * score summed in term order.
+    */
+  private def bigramBm25Sql(seedFilter: String): String =
+    s"""tf AS (SELECT id, dl, term, count(*) AS tf FROM (
+       |    SELECT id, CAST(len(ws) - 1 AS BIGINT) AS dl,
+       |      unnest(list_transform(range(2, len(ws) + 1),
+       |        i -> ws[i - 1] || ' ' || ws[i])) AS term
+       |    FROM (SELECT doc_id AS id, list_filter(
+       |            regexp_split_to_array(lower(text), '\\s+'),
+       |            x -> len(x) > 0) AS ws
+       |          FROM documents)
+       |    WHERE len(ws) >= 2)
+       |  GROUP BY 1, 2, 3),
+       |dfs AS (SELECT term, count(*) AS df FROM tf GROUP BY term),
+       |st AS (SELECT count(*) AS n_docs, sum(dl) AS tot_dl
+       |       FROM (SELECT DISTINCT id, dl FROM tf)),
+       |sw AS (SELECT id AS q_id, term,
+       |    CAST(tf AS DOUBLE) * ln(CAST(n_docs AS DOUBLE) / df) AS w
+       |  FROM tf JOIN dfs USING (term) CROSS JOIN st$seedFilter),
+       |qt AS (SELECT q_id, e.t AS term FROM (
+       |    SELECT q_id, list_sort(list({'nw': -w, 't': term}))[1:$BmQTerms] AS v
+       |    FROM sw GROUP BY q_id), unnest(v) AS u(e)),
+       |sc AS (SELECT q.q_id, f.id, f.term,
+       |    ln(${1.0} + (CAST(n_docs AS DOUBLE) - df + ${0.5})
+       |         / (CAST(df AS DOUBLE) + ${0.5}))
+       |      * (CAST(tf AS DOUBLE) * ${BmK1 + 1.0})
+       |      / (CAST(tf AS DOUBLE) + ${BmK1} * (${1.0 - BmB}
+       |           + ${BmB} * CAST(dl AS DOUBLE)
+       |             / (CAST(tot_dl AS DOUBLE) / CAST(n_docs AS DOUBLE)))) AS c
+       |  FROM tf f JOIN qt q USING (term) JOIN dfs USING (term) CROSS JOIN st
+       |  WHERE f.id <> q.q_id),
+       |agg AS (SELECT q_id, id AS doc_id,
+       |    round(list_reduce(list_prepend(CAST(0 AS DOUBLE),
+       |      list_transform(list_sort(list({'t': term, 'c': c})), e -> e.c)),
+       |      (a, b) -> a + b), 4) AS score
+       |  FROM sc GROUP BY q_id, id)""".stripMargin
 
   /** Corpus bigram tf with per-doc length attached: (id, dl, term, tf). */
   private def bigramTf(t: Tables): DataFrame =
@@ -7032,39 +6755,7 @@ object Pipeline {
   }
 
   private val q152Sql =
-    s"""WITH tf AS (SELECT id, dl, term, count(*) AS tf FROM (
-       |    SELECT id, CAST(len(ws) - 1 AS BIGINT) AS dl,
-       |      unnest(list_transform(range(2, len(ws) + 1),
-       |        i -> ws[i - 1] || ' ' || ws[i])) AS term
-       |    FROM (SELECT doc_id AS id, list_filter(
-       |            regexp_split_to_array(lower(text), '\\s+'),
-       |            x -> len(x) > 0) AS ws
-       |          FROM documents)
-       |    WHERE len(ws) >= 2)
-       |  GROUP BY 1, 2, 3),
-       |dfs AS (SELECT term, count(*) AS df FROM tf GROUP BY term),
-       |st AS (SELECT count(*) AS n_docs, sum(dl) AS tot_dl
-       |       FROM (SELECT DISTINCT id, dl FROM tf)),
-       |sw AS (SELECT id AS q_id, term,
-       |    CAST(tf AS DOUBLE) * ln(CAST(n_docs AS DOUBLE) / df) AS w
-       |  FROM tf JOIN dfs USING (term) CROSS JOIN st WHERE id < $BmSeeds),
-       |qt AS (SELECT q_id, e.t AS term FROM (
-       |    SELECT q_id, list_sort(list({'nw': -w, 't': term}))[1:$BmQTerms] AS v
-       |    FROM sw GROUP BY q_id), unnest(v) AS u(e)),
-       |sc AS (SELECT q.q_id, f.id, f.term,
-       |    ln(${1.0} + (CAST(n_docs AS DOUBLE) - df + ${0.5})
-       |         / (CAST(df AS DOUBLE) + ${0.5}))
-       |      * (CAST(tf AS DOUBLE) * ${BmK1 + 1.0})
-       |      / (CAST(tf AS DOUBLE) + ${BmK1} * (${1.0 - BmB}
-       |           + ${BmB} * CAST(dl AS DOUBLE)
-       |             / (CAST(tot_dl AS DOUBLE) / CAST(n_docs AS DOUBLE)))) AS c
-       |  FROM tf f JOIN qt q USING (term) JOIN dfs USING (term) CROSS JOIN st
-       |  WHERE f.id <> q.q_id),
-       |agg AS (SELECT q_id, id AS doc_id,
-       |    round(list_reduce(list_prepend(CAST(0 AS DOUBLE),
-       |      list_transform(list_sort(list({'t': term, 'c': c})), e -> e.c)),
-       |      (a, b) -> a + b), 4) AS score
-       |  FROM sc GROUP BY q_id, id)
+    s"""WITH ${bigramBm25Sql(s" WHERE id < $BmSeeds")}
        |SELECT seed_id, doc_id, score, rnk FROM (
        |  SELECT q_id AS seed_id, doc_id, score,
        |    row_number() OVER (PARTITION BY q_id
@@ -8027,19 +7718,9 @@ object Pipeline {
       .select(col("id"))
   }
 
-  private val q74Sql = {
-    val rows = MinHashes / Bands
-    val sigExprs = (0 until MinHashes).map { i =>
-      s"list_min(list_transform(xs, x -> (${Dedup.hashA(i)}*x + ${Dedup.hashB(i)}) % ${Dedup.P}))"
-    }.mkString("[", ", ", "]")
+  private val q74Sql =
     s"""WITH $wordsCte,
-       |d AS (SELECT id, ${shinglesSql(3)} AS ss FROM w),
-       |h AS MATERIALIZED (SELECT id, ss, len(ss) AS n_sh,
-       |  list_transform(ss, s -> ${Dedup.SharedHash.hash28Sql("s")}) AS xs FROM d WHERE len(ss) > 0),
-       |sig AS MATERIALIZED (SELECT id, ss, n_sh, $sigExprs AS sig FROM h),
-       |bands AS (SELECT id, t.b AS band,
-       |            array_to_string(list_transform(list_slice(sig, t.b*$rows+1, t.b*$rows+$rows), z -> CAST(z AS VARCHAR)), '_') AS key
-       |          FROM sig CROSS JOIN generate_series(0, ${Bands - 1}) AS t(b)),
+       |$lshBandCtesSql,
        |cand AS (SELECT DISTINCT x.id AS id_n, y.id AS id_e
        |         FROM bands x JOIN bands y ON x.band = y.band AND x.key = y.key
        |         WHERE x.id % 10 = 7 AND y.id % 10 <> 7),
@@ -8053,7 +7734,6 @@ object Pipeline {
        |WHERE doc_id % 10 = 7
        |  AND doc_id NOT IN (SELECT id FROM near)
        |  AND doc_id NOT IN (SELECT id FROM exd)""".stripMargin
-  }
 
   // ===== q83 stored-index incremental dedup ==============================
   // Same contract and oracle as q74, but the corpus side is a STORED
@@ -8145,27 +7825,12 @@ object Pipeline {
       .select(col("domain").as("source"), col("rank").as("rnk"), col("id"))
   }
 
-  private val q95Sql = {
-    val rows = MinHashes / Bands
-    val sigExprs = (0 until MinHashes).map { i =>
-      s"list_min(list_transform(xs, x -> (${Dedup.hashA(i)}*x + ${Dedup.hashB(i)}) % ${Dedup.P}))"
-    }.mkString("[", ", ", "]")
+  private val q95Sql =
     s"""WITH f AS MATERIALIZED (SELECT doc_id, text, source FROM documents
        |  WHERE lang = 'en' AND len(regexp_extract_all(text, '\\S+')) >= $PipeMinTok),
        |ex AS MATERIALIZED (SELECT min(doc_id) AS id, text FROM f GROUP BY text),
        |w AS (SELECT id, regexp_split_to_array(lower(text), '\\s+') AS words FROM ex),
-       |d AS (SELECT id, ${shinglesSql(3)} AS ss FROM w),
-       |h AS MATERIALIZED (SELECT id, ss, len(ss) AS n_sh,
-       |  list_transform(ss, s -> ${Dedup.SharedHash.hash28Sql("s")}) AS xs FROM d WHERE len(ss) > 0),
-       |sig AS MATERIALIZED (SELECT id, ss, n_sh, $sigExprs AS sig FROM h),
-       |bands AS (SELECT id, t.b AS band,
-       |            array_to_string(list_transform(list_slice(sig, t.b*$rows+1, t.b*$rows+$rows), z -> CAST(z AS VARCHAR)), '_') AS key
-       |          FROM sig CROSS JOIN generate_series(0, ${Bands - 1}) AS t(b)),
-       |cand AS (SELECT DISTINCT x.id AS id_a, y.id AS id_b
-       |         FROM bands x JOIN bands y ON x.band = y.band AND x.key = y.key AND x.id < y.id),
-       |v AS (SELECT c.id_a, c.id_b, len(list_intersect(a.ss, b.ss)) AS c,
-       |        a.n_sh AS na, b.n_sh AS nb
-       |      FROM cand c JOIN sig a ON c.id_a = a.id JOIN sig b ON c.id_b = b.id),
+       |$lshPairCtesSql,
        |drops AS (SELECT DISTINCT id_b FROM v
        |          WHERE round(CAST(c AS DOUBLE)/(na+nb-c), 4) >= $CorpusT),
        |s AS (SELECT id FROM ex WHERE id NOT IN (SELECT id_b FROM drops)),
@@ -8174,7 +7839,6 @@ object Pipeline {
        |  SELECT source, id, row_number() OVER (PARTITION BY source
        |    ORDER BY ${Dedup.SharedHash.hash28Sql("CAST(id AS VARCHAR)")} DESC, id) AS rnk
        |  FROM k) WHERE rnk <= $PipeCap""".stripMargin
-  }
 
   // ===== q100 corpus report card =========================================
   // The one-pass stats report every pipeline owner runs before and after

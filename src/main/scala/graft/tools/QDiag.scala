@@ -3,7 +3,9 @@ package graft.tools
 import graft.{Counters, Engine}
 
 /** Per-query diagnostic (read-only — never on a query path): runs the
-  * named queries with the bench's count() action and prints wall time, job
+  * named queries with a full-output action — a `noop` write of every
+  * column, so Catalyst cannot prune the scoring columns the way it can
+  * under `count()` — and prints wall time (construction plus action), job
   * count and summed task time per rep ([[Counters.track]]), so a slow row
   * can be attributed to scheduling overhead (many jobs, little task time)
   * vs executor compute (task time ≈ wall × cores) vs stragglers (wall ≫
@@ -29,10 +31,11 @@ object QDiag {
       for (name <- hits; rep <- 1 to reps) {
         val fn = graft.SparkEntry.queries(name)
         val t0 = System.nanoTime()
-        val (n, c) = Counters.track(spark)(fn(spark, dir).count())
+        val (_, c) = Counters.track(spark)(
+          fn(spark, dir).write.format("noop").mode("overwrite").save())
         val dt = (System.nanoTime() - t0) / 1e9
         println(f"[qdiag] $name%-34s rep$rep $dt%8.3f s" +
-          f"  jobs=${c.jobs}%3d taskTime=${c.taskRunMs / 1e3}%8.2f s  rows=$n")
+          f"  jobs=${c.jobs}%3d taskTime=${c.taskRunMs / 1e3}%8.2f s")
         graft.CacheScope.drain()
         spark.catalog.clearCache()
       }
