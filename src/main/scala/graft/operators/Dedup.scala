@@ -583,9 +583,18 @@ object Dedup {
     * documents themselves.
     */
   def cdcReportFromIndex(spark: org.apache.spark.sql.SparkSession,
-      dir: String): DataFrame = {
-    val ch = Compaction.snapshot(spark, dir)("chunks")
-      .select(col("id"), col("chunk_md5"))
+      dir: String): DataFrame =
+    cdcReport(Compaction.snapshot(spark, dir)("chunks")
+      .select(col("id"), col("chunk_md5")))
+
+  /** The CDC duplicate-chunk report of an (id, chunk_md5) frame — other
+    * columns are ignored, and the frame is read twice, so persist a
+    * computed one: per doc, its chunk count, the chunks whose first owner
+    * (lowest id with that chunk, the q81 election at chunk level) is
+    * another doc, and the duplicated fraction. Output: doc_id, n_chunks,
+    * dup_chunks, dup_frac.
+    */
+  private[graft] def cdcReport(ch: DataFrame): DataFrame = {
     val own = ch.groupBy(col("chunk_md5")).agg(min(col("id")).as("owner"))
     ch.join(own, "chunk_md5")
       .groupBy(col("id"))
@@ -1401,8 +1410,7 @@ object Dedup {
                 p -> p IS NOT NULL)
             ELSE CAST(array() AS ARRAY<INT>) END""")
     docs
-      .select(id.as("id"),
-        filter(split(lower(text), """\s+"""), x => length(x) > 0).as("ws"))
+      .select(id.as("id"), TextOps.wordsOf(text).as("ws"))
       .filter(size(col("ws")) > 0)
       .withColumn("hw",
         if (nativeKernel) graft.functions.md5_windows(col("ws"), window)

@@ -26,6 +26,13 @@ object TextOps {
   def wsTokenCount(text: Column): Column =
     size(regexp_extract_all(text, lit("""\S+"""), lit(0)))
 
+  /** The lower-cased whitespace words of `text`, with the empty strings a
+    * leading or doubled separator leaves dropped — the word array of the
+    * LM, classifier, segment and repetition-signal operators.
+    */
+  private[graft] def wordsOf(text: Column): Column =
+    filter(split(lower(text), """\s+"""), x => length(x) > 0)
+
   /** BPE-ish subword token count: letter runs, digit runs, single
     * punctuation — the standard pre-tokenizer split.
     */
@@ -990,8 +997,7 @@ object TextOps {
     import graft.CacheScope.ScopedPersist
     require(vocabSize >= 1)
     val toks = docs.select(group.cast("string").as("g"),
-        explode(filter(split(lower(text), """\s+"""),
-          x => length(x) > 0)).as("w"))
+        explode(wordsOf(text)).as("w"))
       .persistScoped() // feeds the vocab, totals and counts
     val vocab = toks.groupBy(col("w")).agg(count(lit(1)).as("__c"))
       .orderBy(col("__c").desc, col("w")).limit(vocabSize)
@@ -1153,6 +1159,8 @@ object TextOps {
     * H = −(1/m)·Σ ln(λ·p_bi(w₂|w₁) + (1−λ)·p_uni(w₂)), ppl = e^H.
     * High perplexity = far from the reference distribution (gibberish,
     * boilerplate, wrong register) — the filter keeps ppl ≤ threshold.
+    * This is the teaching smoothing (constant-λ add-one interpolation);
+    * [[knPerplexityFilter]] is the production one, over the same model.
     *
     * Smoothing: p_bi = B(w₁w₂)/U(w₁) over the pruned tables (0 when the
     * bigram is unseen/pruned), p_uni = (U(w₂)+1)/(T+V+1) add-one over
@@ -1172,233 +1180,117 @@ object TextOps {
   def lmPerplexityFilter(docs: DataFrame, id: Column, text: Column,
       refFilter: Column, maxV: Int, maxB: Int, lambda: Double,
       pplThreshold: Double): DataFrame = {
-    import graft.CacheScope.ScopedPersist
-    // is_ref evaluates BEFORE projection (it references the caller's doc
-    // columns, which the tokenized frame no longer carries)
-    val base = docs.select(id.as("id"), refFilter.as("is_ref"),
-        filter(split(lower(text), """\s+"""), x => length(x) > 0).as("ws"))
-      .filter(size(col("ws")) >= 2)
-    val pairs = lmPairs(base)
-      .persistScoped() // feeds the reference counts AND the doc scoring
-    val (vocab, bigrams) = lmTrain(base.filter(col("is_ref")),
-      pairs.filter(col("is_ref")), maxV, maxB)
-    lmScore(pairs, vocab, bigrams, lambda, pplThreshold)
+    val (grams, vocab, pruned) =
+      lmNFit(docs, id, text, refFilter, 2, maxV, maxB)
+    lmScore(grams, vocab, pruned, lambda, pplThreshold)
   }
 
-  /** Tokenized ≥2-token docs: (id, ws) plus whatever extra columns ride. */
-  private def lmTokens(docs: DataFrame, id: Column, text: Column): DataFrame =
-    docs.select(id.as("id"),
-        filter(split(lower(text), """\s+"""), x => length(x) > 0).as("ws"))
-      .filter(size(col("ws")) >= 2)
-
-  /** Adjacent-pair explode: (id [, is_ref], w1, w2) — one row per bigram
-    * POSITION (multiplicity preserved for the counts).
+  /** Score per-doc bigrams with the add-one λ interpolation against an
+    * order-2 (vocab, pruned) model — the shared serving core of the
+    * direct and stored-model paths.
     */
-  private def lmPairs(base: DataFrame): DataFrame = {
-    val extra = base.columns.filter(c => c != "id" && c != "ws").map(col)
-    base.select((col("id") +: extra :+
-        explode(transform(sequence(lit(1), size(col("ws")) - 1),
-          i => struct(element_at(col("ws"), i).as("w1"),
-            element_at(col("ws"), i + 1).as("w2")))).as("p")): _*)
-      .select((col("id") +: extra :+ col("p.w1") :+ col("p.w2")): _*)
-  }
-
-  /** Train the pruned model from reference tokens/pairs: (vocab(w, uc),
-    * bigrams(w1, w2, bc)) — both bounded by the deterministic
-    * (count desc, term) top-k.
-    */
-  private def lmTrain(refBase: DataFrame, refPairs: DataFrame,
-      maxV: Int, maxB: Int): (DataFrame, DataFrame) = {
-    import graft.CacheScope.ScopedPersist
-    val vocab = refBase.select(explode(col("ws")).as("w"))
-      .groupBy(col("w")).agg(count(lit(1)).as("uc"))
-      .orderBy(col("uc").desc, col("w")).limit(maxV)
-      .persistScoped() // bounded model artifact: ≤ maxV rows, reused 4×
-    val bigrams = refPairs
-      .join(broadcast(vocab.select(col("w").as("w1"))), Seq("w1"), "left_semi")
-      .join(broadcast(vocab.select(col("w").as("w2"))), Seq("w2"), "left_semi")
-      .groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("bc"))
-      .orderBy(col("bc").desc, col("w1"), col("w2")).limit(maxB)
-    (vocab, bigrams)
-  }
-
-  /** Score per-doc pairs against a (vocab, bigrams) model — the shared
-    * serving core of the direct and stored-model paths.
-    */
-  private def lmScore(pairs: DataFrame, vocab: DataFrame, bigrams: DataFrame,
+  private def lmScore(grams: DataFrame, vocab: DataFrame, pruned: DataFrame,
       lambda: Double, pplThreshold: Double): DataFrame = {
     val vst = vocab.agg(sum(col("uc")).as("tt"), count(lit(1)).as("nv"))
-    val dn = pairs.groupBy(col("id"), col("w1"), col("w2"))
-      .agg(count(lit(1)).as("n"))
-    val scored = dn
-      .join(broadcast(bigrams), Seq("w1", "w2"), "left")
+    lmNPerplexity(grams, 2, pplThreshold)(_
+      .join(broadcast(pruned), Seq("w1", "w2"), "left")
       .join(broadcast(vocab.select(col("w").as("w1"), col("uc").as("u1"))),
         Seq("w1"), "left")
       .join(broadcast(vocab.select(col("w").as("w2"), col("uc").as("u2"))),
         Seq("w2"), "left")
       .crossJoin(broadcast(vst))
       .withColumn("lp", log(
-        lit(lambda) * coalesce(col("bc").cast("double") / col("u1"), lit(0.0))
+        lit(lambda) * coalesce(col("c").cast("double") / col("u1"), lit(0.0))
           + lit(1.0 - lambda)
             * (coalesce(col("u2"), lit(0L)) + 1).cast("double")
-            / (col("tt") + col("nv") + 1).cast("double")))
-    scored.groupBy(col("id"))
-      .agg(sum(col("n")).as("m"),
-        sort_array(collect_list(struct(col("w1"), col("w2"),
-          (col("n").cast("double") * col("lp")).as("v")))).as("ts"))
-      .select(col("id"), col("m").as("n_bigrams"),
-        round(-expr("aggregate(ts, 0D, (a, x) -> a + x.v)") / col("m"), 4)
-          .as("h"))
-      .withColumn("ppl", round(exp(col("h")), 4))
-      .withColumn("keep", col("ppl") <= pplThreshold)
+            / (col("tt") + col("nv") + 1).cast("double"))))
   }
 
-  /** Persist a trained+pruned LM to `dir` (`vocab/`, `bigrams/` parquet) —
-    * the model-artifact sibling of the stored retrieval indexes: train
-    * ONCE on the reference corpus, serve forever. [[lmScoreAgainstModel]]
-    * over the stored model is pinned identical to [[lmPerplexityFilter]]
-    * over the live reference (stored-and-scored ≡ freshly-trained, the
-    * index-integrity contract applied to a model). Exact integer counts
-    * round-trip parquet losslessly, so nothing drifts.
+  /** Persist a trained+pruned order-`order` LM to `dir` — `vocab/` (w, uc)
+    * and `grams/` (w1..wN, c) parquet — the model-artifact sibling of the
+    * stored retrieval indexes: train ONCE on the reference corpus, serve
+    * forever. [[lmScoreAgainstModel]] (order 2) and [[knScoreAgainstModel]]
+    * (any order) over the stored model are pinned identical to
+    * [[lmPerplexityFilter]] / [[knPerplexityFilter]] over the live
+    * reference (stored-and-scored ≡ freshly-trained, the index-integrity
+    * contract applied to a model). Exact integer counts round-trip parquet
+    * losslessly, so nothing drifts; the order is the number of `w`
+    * columns in `grams/`, so the store describes itself.
     */
-  def writeLmModel(docs: DataFrame, id: Column, text: Column,
-      maxV: Int, maxB: Int, dir: String): Unit = {
+  def writeLmModel(docs: DataFrame, id: Column, text: Column, order: Int,
+      maxV: Int, maxT: Int, dir: String): Unit = {
     import graft.CacheScope.ScopedPersist
-    val base = lmTokens(docs, id, text)
-    val pairs = lmPairs(base).persistScoped()
-    val (vocab, bigrams) = lmTrain(base, pairs, maxV, maxB)
+    val base = lmNBase(docs, text, order, id.as("id"))
+    val grams = lmNGrams(base, order).persistScoped()
+    val (vocab, pruned) = lmNTrain(base, grams, order, maxV, maxT)
     vocab.coalesce(1).write.mode("overwrite").parquet(s"$dir/vocab")
-    bigrams.coalesce(1).write.mode("overwrite").parquet(s"$dir/bigrams")
+    pruned.coalesce(1).write.mode("overwrite").parquet(s"$dir/grams")
     docs.sparkSession.catalog.refreshByPath(dir)
   }
 
-  /** Score documents against a [[writeLmModel]] artifact: load the two
-    * bounded tables (they broadcast — per-batch serving cost is the
-    * batch's explode + partial agg, the model never retrains or shifts).
-    * The online form of the q175/q176 filter: the model never adapts to
-    * the stream it filters, so a replayed batch re-derives its scores.
+  /** Score documents with add-one smoothing against an order-2
+    * [[writeLmModel]] artifact: load the two bounded tables (they
+    * broadcast — per-batch serving cost is the batch's explode + partial
+    * agg, the model never retrains or shifts). The online form of the
+    * q175/q176 filter: the model never adapts to the stream it filters,
+    * so a replayed batch re-derives its scores. A store of another order
+    * is refused, naming the order.
     */
   def lmScoreAgainstModel(docs: DataFrame, id: Column, text: Column,
       dir: String, lambda: Double, pplThreshold: Double): DataFrame = {
-    val spark = docs.sparkSession
-    lmScore(lmPairs(lmTokens(docs, id, text)),
-      spark.read.parquet(s"$dir/vocab"),
-      spark.read.parquet(s"$dir/bigrams"), lambda, pplThreshold)
+    val (grams, vocab, pruned, order) = lmNStored(docs, id, text, dir)
+    require(order == 2, s"lmScoreAgainstModel: add-one smoothing serves " +
+      s"order-2 models only; $dir holds an order-$order model")
+    lmScore(grams, vocab, pruned, lambda, pplThreshold)
   }
 
-  /** Interpolated KNESER-NEY bigram LM — the smoothing KenLM ships and
+  /** Interpolated KNESER-NEY n-gram LM — the smoothing KenLM ships and
     * therefore what the published CCNet pipeline actually scores with
-    * (Kneser & Ney 1995; Chen & Goodman 1999's interpolated form).
-    * [[lmPerplexityFilter]] is the teaching smoothing (constant-λ add-one
-    * interpolation); this is the production one. Two ideas it adds:
+    * (Kneser & Ney 1995; Chen & Goodman 1999's interpolated form) — at
+    * any `order` ≥ 2: order 2 is [[lmPerplexityFilter]]'s model under the
+    * production smoothing (the two rows differ ONLY in smoothing), 3 is
+    * the smallest order with the full recursion, 5 is KenLM's PRODUCTION
+    * order (the order CCNet's published filters ship). Two ideas it adds
+    * over the add-one form:
     *
-    *  - ABSOLUTE DISCOUNTING: every seen bigram's count is discounted by
-    *    a fixed D and exactly the freed mass is handed to the fallback —
-    *    the interpolation weight is per-context (D·N1+(w1·)/c(w1·)), not
-    *    a global λ.
-    *  - CONTINUATION PROBABILITY: the fallback asks "after how many
-    *    DISTINCT contexts does w2 appear?" (N1+(·w2)), not "how often?".
+    *  - ABSOLUTE DISCOUNTING: every seen n-gram's count is discounted by
+    *    a fixed D and exactly the freed mass is handed to the level
+    *    below — the interpolation weight is per-context
+    *    (D·N1+(ctx·)/c(ctx·)), not a global λ.
+    *  - CONTINUATION PROBABILITY: every lower level asks "after how many
+    *    DISTINCT contexts does this appear?" (N1+(·w)), not "how often?".
     *    The classic "Francisco" effect: a frequent word welded to one
     *    context ("francisco" after "san") gets low fallback mass, where
     *    a unigram fallback would rank it high everywhere.
     *
-    *   p(w2|w1) = max(c(w1w2) − D, 0)/c(w1·) + D·N1+(w1·)/c(w1·)·pc(w2)
-    *   pc(w2)   = (N1+(·w2) + 1)/(N1+(··) + |V| + 1)  (add-one: OOV > 0)
+    * Same reference slice, pruning (maxV + maxT rows by (count desc,
+    * terms)) and corpus plumbing at every order; docs with fewer than
+    * `order` tokens have no n-gram positions and are dropped.
     *
-    * D is fixed at 3/4 (the standard fixed discount; exact in binary, so
-    * max(c−D,0)/c(w1·) is computed as greatest(4c−3,0)/(4·c(w1·)) over
-    * exact integers). A w1 with no retained context backs off to pc(w2)
-    * alone. ALL model ingredients — c(w1·), both N1+ counts, the type
-    * total — derive from the PRUNED bigram table, so a stored artifact
-    * (the same `vocab/` + `bigrams/` layout [[writeLmModel]] emits)
-    * reproduces serving exactly: stored ≡ fresh BY CONSTRUCTION.
-    *
-    * Determinism: the per-pair probability is a fixed tree of
-    * correctly-rounded IEEE ops over exact integers — two divisions, one
-    * multiply, one add, written identically in the oracle (the q175
-    * discipline) — and the per-doc sum is the q119 sorted fold.
-    *
-    * 100 TB design: identical to q175's — the model is bounded
-    * (maxV + maxB rows; the derived context/continuation tables are
-    * strictly smaller) and BROADCASTS into the scoring joins; the corpus
-    * side is one explode + per-(doc, bigram) partial aggregation.
-    * Output: id, n_bigrams, h, ppl, keep.
+    * Output: id, n_bigrams | n_trigrams | n_grams<order>, h, ppl, keep.
     */
   def knPerplexityFilter(docs: DataFrame, id: Column, text: Column,
-      refFilter: Column, maxV: Int, maxB: Int,
+      refFilter: Column, order: Int, maxV: Int, maxT: Int,
       pplThreshold: Double): DataFrame = {
-    import graft.CacheScope.ScopedPersist
-    val base = docs.select(id.as("id"), refFilter.as("is_ref"),
-        filter(split(lower(text), """\s+"""), x => length(x) > 0).as("ws"))
-      .filter(size(col("ws")) >= 2)
-    val pairs = lmPairs(base).persistScoped()
-    val (vocab, bigrams) = lmTrain(base.filter(col("is_ref")),
-      pairs.filter(col("is_ref")), maxV, maxB)
-    knScore(pairs, vocab, bigrams, pplThreshold)
+    val (grams, vocab, pruned) =
+      lmNFit(docs, id, text, refFilter, order, maxV, maxT)
+    knScoreN(grams, vocab, pruned, order, pplThreshold)
   }
 
-  /** Score per-doc pairs with Kneser-Ney against a (vocab, bigrams) model
-    * — the shared serving core of the direct and stored-model paths. The
-    * discount statistics (c(w1·), N1+(w1·), N1+(·w2), N1+(··)) are
-    * derived HERE from the pruned bigram table: they are exact integers,
-    * so deriving at serving time (instead of storing) keeps the artifact
-    * layout identical to [[writeLmModel]]'s while guaranteeing
-    * stored ≡ fresh.
-    */
-  private def knScore(pairs: DataFrame, vocab: DataFrame, bigrams: DataFrame,
-      pplThreshold: Double): DataFrame = {
-    import graft.CacheScope.ScopedPersist
-    val big = bigrams.persistScoped() // ≤ maxB rows; feeds three derivations
-    val ctx = big.groupBy(col("w1"))
-      .agg(sum(col("bc")).as("c1b"), count(lit(1)).as("n1f"))
-    val cw = big.groupBy(col("w2")).agg(count(lit(1)).as("ncw"))
-    val tot = big.agg(count(lit(1)).as("ntot"))
-      .crossJoin(vocab.agg(count(lit(1)).as("nv")))
-    val dn = pairs.groupBy(col("id"), col("w1"), col("w2"))
-      .agg(count(lit(1)).as("n"))
-    // pc computed once as a column so the discounted and backoff branches
-    // use the identical double (same expression tree as the oracle's)
-    val pcExpr = (coalesce(col("ncw"), lit(0L)) + 1).cast("double") /
-      (col("ntot") + col("nv") + 1).cast("double")
-    val pKn = greatest(lit(4) * coalesce(col("bc"), lit(0L)) - 3, lit(0L))
-        .cast("double") / (lit(4) * col("c1b")).cast("double") +
-      (lit(3) * col("n1f")).cast("double") /
-        (lit(4) * col("c1b")).cast("double") * col("pc")
-    val scored = dn
-      .join(broadcast(big), Seq("w1", "w2"), "left")
-      .join(broadcast(ctx), Seq("w1"), "left")
-      .join(broadcast(cw), Seq("w2"), "left")
-      .crossJoin(broadcast(tot))
-      .withColumn("pc", pcExpr)
-      .withColumn("lp",
-        log(when(col("c1b").isNotNull, pKn).otherwise(col("pc"))))
-    scored.groupBy(col("id"))
-      .agg(sum(col("n")).as("m"),
-        sort_array(collect_list(struct(col("w1"), col("w2"),
-          (col("n").cast("double") * col("lp")).as("v")))).as("ts"))
-      .select(col("id"), col("m").as("n_bigrams"),
-        round(-expr("aggregate(ts, 0D, (a, x) -> a + x.v)") / col("m"), 4)
-          .as("h"))
-      .withColumn("ppl", round(exp(col("h")), 4))
-      .withColumn("keep", col("ppl") <= pplThreshold)
-  }
-
-  /** Kneser-Ney scoring against a [[writeLmModel]] artifact — the KN
-    * model IS the same (vocab, bigrams) parquet pair (the discount
-    * statistics derive from the pruned tables at load), so one stored
+  /** Kneser-Ney scoring against a [[writeLmModel]] artifact of any order,
+    * read from the schema of its `grams/` table. The discount statistics
+    * derive from the pruned table at load (exact integers), so an order-2
     * artifact serves both smoothings and a serving stream can switch
     * add-one → KN without retraining or re-shipping a model.
     */
   def knScoreAgainstModel(docs: DataFrame, id: Column, text: Column,
       dir: String, pplThreshold: Double): DataFrame = {
-    val spark = docs.sparkSession
-    knScore(lmPairs(lmTokens(docs, id, text)),
-      spark.read.parquet(s"$dir/vocab"),
-      spark.read.parquet(s"$dir/bigrams"), pplThreshold)
+    val (grams, vocab, pruned, order) = lmNStored(docs, id, text, dir)
+    knScoreN(grams, vocab, pruned, order, pplThreshold)
   }
 
-  // ===== higher-order interpolated Kneser-Ney (orders 3 and 5) ===========
-  // ONE order-parameterized generator serves both gated orders: the KN
+  // ===== the n-gram LM core (every order, both smoothings) ================
+  // ONE order-parameterized generator serves every order: the KN
   // recursion is structural — raw counts discounted at the top order,
   // CONTINUATION type counts at every lower order (each level's table is
   // the distinct-context count of the level above), add-one continuation
@@ -1407,21 +1299,17 @@ object TextOps {
   // from the same parameter (q246/q254), keeping the two sides from
   // drifting independently.
 
-  /** ≥order-token docs with the token array — the n-gram families'
-    * corpus base.
+  /** ≥order-token docs: `cols` plus the token array `ws` — the n-gram
+    * families' corpus base. `cols` evaluate BEFORE projection (a
+    * reference filter references the caller's doc columns, which the
+    * tokenized frame no longer carries).
     */
-  private def lmNTokens(docs: DataFrame, id: Column, text: Column,
-      order: Int): DataFrame =
-    docs.select(id.as("id"),
-        filter(split(lower(text), """\s+"""), x => length(x) > 0).as("ws"))
+  private def lmNBase(docs: DataFrame, text: Column, order: Int,
+      cols: Column*): DataFrame = {
+    require(order >= 2, s"n-gram LM order must be >= 2, got $order")
+    docs.select(cols :+ wordsOf(text).as("ws"): _*)
       .filter(size(col("ws")) >= order)
-
-  /** [[lmNTokens]] carrying the reference flag (the direct-path split). */
-  private def lmNBase(docs: DataFrame, id: Column, text: Column,
-      refFilter: Column, order: Int): DataFrame =
-    docs.select(id.as("id"), refFilter.as("is_ref"),
-        filter(split(lower(text), """\s+"""), x => length(x) > 0).as("ws"))
-      .filter(size(col("ws")) >= order)
+  }
 
   /** Adjacent n-gram explode: (id [, is_ref], w1..wN) — one row per
     * n-gram POSITION (multiplicity preserved for the counts).
@@ -1437,14 +1325,11 @@ object TextOps {
   }
 
   /** Train the pruned top-order table from reference tokens/grams:
-    * (vocab(w, uc), pruned(w1..wN, countCol)) — both bounded by the
-    * deterministic (count desc, terms) top-k. `countCol` preserves each
-    * order's stored-artifact column name (`tc` at order 3, `c` at 5 —
-    * the [[writeLm3Model]]/[[writeLm5Model]] layouts predate the
-    * unification and stay stable for stored readers).
+    * (vocab(w, uc), pruned(w1..wN, c)) — both bounded by the
+    * deterministic (count desc, terms) top-k.
     */
   private def lmNTrain(refBase: DataFrame, refGrams: DataFrame, order: Int,
-      countCol: String, maxV: Int, maxT: Int): (DataFrame, DataFrame) = {
+      maxV: Int, maxT: Int): (DataFrame, DataFrame) = {
     import graft.CacheScope.ScopedPersist
     val vocab = refBase.select(explode(col("ws")).as("w"))
       .groupBy(col("w")).agg(count(lit(1)).as("uc"))
@@ -1455,15 +1340,69 @@ object TextOps {
         Seq(s"w$k"), "left_semi")
     }
       .groupBy((1 to order).map(k => col(s"w$k")): _*)
-      .agg(count(lit(1)).as(countCol))
-      .orderBy((col(countCol).desc +: (1 to order).map(k => col(s"w$k"))): _*)
+      .agg(count(lit(1)).as("c"))
+      .orderBy((col("c").desc +: (1 to order).map(k => col(s"w$k"))): _*)
       .limit(maxT)
     (vocab, pruned)
   }
 
+  /** The direct path: every doc's n-grams (persisted — they feed the
+    * reference counts AND the doc scoring) and the model trained on the
+    * `refFilter` slice: (grams, vocab, pruned).
+    */
+  private def lmNFit(docs: DataFrame, id: Column, text: Column,
+      refFilter: Column, order: Int, maxV: Int,
+      maxT: Int): (DataFrame, DataFrame, DataFrame) = {
+    import graft.CacheScope.ScopedPersist
+    val base = lmNBase(docs, text, order, id.as("id"), refFilter.as("is_ref"))
+    val grams = lmNGrams(base, order).persistScoped()
+    val (vocab, pruned) = lmNTrain(base.filter(col("is_ref")),
+      grams.filter(col("is_ref")), order, maxV, maxT)
+    (grams, vocab, pruned)
+  }
+
+  /** The stored path: the docs' n-grams, the [[writeLmModel]] artifact's
+    * two tables, and its order (the `w` columns of `grams/`).
+    */
+  private def lmNStored(docs: DataFrame, id: Column, text: Column,
+      dir: String): (DataFrame, DataFrame, DataFrame, Int) = {
+    val spark = docs.sparkSession
+    val vocab = spark.read.parquet(s"$dir/vocab")
+    val pruned = spark.read.parquet(s"$dir/grams")
+    val order = pruned.columns.count(_.matches("w\\d+"))
+    (lmNGrams(lmNBase(docs, text, order, id.as("id")), order), vocab, pruned,
+      order)
+  }
+
+  /** Per-doc perplexity of the n-grams in `grams` — both smoothings'
+    * shared tail. `lp` turns the per-(doc, n-gram) counts (id, w1..wN, n)
+    * into rows carrying the log-probability `lp`; the per-doc sum is the
+    * q119 sorted fold over gram-keyed terms.
+    * Output: id, n_bigrams | n_trigrams | n_grams<order>, h, ppl, keep.
+    */
+  private def lmNPerplexity(grams: DataFrame, order: Int,
+      pplThreshold: Double)(lp: DataFrame => DataFrame): DataFrame = {
+    val ws = (1 to order).map(k => col(s"w$k"))
+    val nOut = order match {
+      case 2 => "n_bigrams"
+      case 3 => "n_trigrams"
+      case n => s"n_grams$n"
+    }
+    lp(grams.groupBy(col("id") +: ws: _*).agg(count(lit(1)).as("n")))
+      .groupBy(col("id"))
+      .agg(sum(col("n")).as("m"),
+        sort_array(collect_list(struct(ws :+
+          (col("n").cast("double") * col("lp")).as("v"): _*))).as("ts"))
+      .select(col("id"), col("m").as(nOut),
+        round(-expr("aggregate(ts, 0D, (a, x) -> a + x.v)") / col("m"), 4)
+          .as("h"))
+      .withColumn("ppl", round(exp(col("h")), 4))
+      .withColumn("keep", col("ppl") <= pplThreshold)
+  }
+
   /** Score per-doc n-grams with interpolated Kneser-Ney against a
     * (vocab, pruned top-order table) model — the shared serving core of
-    * the direct and stored paths at BOTH gated orders (3 and 5):
+    * the direct and stored paths at every order:
     *
     *   p(wN|w1..wN−1)  = max(c(w1..wN) − D, 0)/c(w1..wN−1·)
     *                     + D·N1+(w1..wN−1·)/c(w1..wN−1·) · p_c(level N−1)
@@ -1475,33 +1414,32 @@ object TextOps {
     * pruned top-order table (the Kneser-Ney insight applied at every
     * level: lower orders ask "after how many distinct contexts", never
     * "how often"); a missing context at any level backs off to the level
-    * below. D is fixed at 3/4 (exact in binary), so every
-    * max(x − D, 0)/y is computed as greatest(4x − 3, 0)/(4y) over exact
-    * integers. ALL model ingredients derive from the pruned table, so
-    * the stored artifact reproduces serving exactly: stored ≡ fresh BY
-    * CONSTRUCTION.
+    * below. At order 2 there is no middle level: p_c(w2) is the
+    * continuation unigram of the pruned bigram table itself. D is fixed
+    * at 3/4 (exact in binary), so every max(x − D, 0)/y is computed as
+    * greatest(4x − 3, 0)/(4y) over exact integers. ALL model ingredients
+    * derive from the pruned table at serving time (instead of being
+    * stored), so the stored artifact reproduces serving exactly: stored ≡
+    * fresh BY CONSTRUCTION.
     *
     * Determinism: the per-gram probability is a fixed tree of
     * correctly-rounded IEEE ops over exact integers, written identically
-    * in the oracle (the q175/q211 discipline); the per-doc sum is the
-    * q119 sorted fold over gram-keyed terms.
+    * in the oracle (the q175/q211 discipline); the per-doc sum is
+    * [[lmNPerplexity]]'s sorted fold.
     *
     * 100 TB design: the model is bounded (maxV + maxT rows; every
     * derived context/continuation table strictly smaller) and
     * BROADCASTS into the scoring joins; the corpus side is one explode
     * + per-(doc, n-gram) partial aggregation. Raising the order adds
     * bounded broadcast joins, never a corpus-sized shuffle.
-    *
-    * Output: id, <nOut>, h, ppl, keep.
     */
   private def knScoreN(grams: DataFrame, vocab: DataFrame,
-      pruned: DataFrame, order: Int, countCol: String, nOut: String,
-      pplThreshold: Double): DataFrame = {
+      pruned: DataFrame, order: Int, pplThreshold: Double): DataFrame = {
     import graft.CacheScope.ScopedPersist
     val gN = pruned.persistScoped() // ≤ maxT rows; feeds every derivation
     // raw top order: c(w1..wN−1·) and N1+(w1..wN−1·)
     val ctxTop = gN.groupBy((1 until order).map(k => col(s"w$k")): _*)
-      .agg(sum(col(countCol)).as("cb"), count(lit(1)).as("nf"))
+      .agg(sum(col("c")).as("cb"), count(lit(1)).as("nf"))
     // continuation chain: m_{N−1} from the pruned table, then each m_k
     // from m_{k+1}, keyed by the LAST k words
     val ms: Seq[(Int, DataFrame)] = {
@@ -1519,133 +1457,44 @@ object TextOps {
       k -> m.groupBy(keys.map(i => col(s"w$i")): _*)
         .agg(sum(col(s"n$k")).as(s"n${k}b"), count(lit(1)).as(s"nd$k"))
     }.toMap
-    val m2 = ms.last._2
+    // the bigram-level continuation table: m_2, or the pruned table itself
+    // at order 2
+    val m2 = ms.lastOption.fold(gN)(_._2)
     // continuation unigram: N1+(·wN), N1+(··), |V|
     val cw = m2.groupBy(col(s"w$order")).agg(count(lit(1)).as("ncw"))
     val tot = m2.agg(count(lit(1)).as("ntot"))
       .crossJoin(vocab.agg(count(lit(1)).as("nv")))
-    val dn = grams.groupBy((col("id") +:
-        (1 to order).map(k => col(s"w$k"))): _*)
-      .agg(count(lit(1)).as("n"))
     def disc(num: Column, den: Column, types: Column, lower: Column): Column =
       greatest(lit(4) * coalesce(num, lit(0L)) - 3, lit(0L)).cast("double") /
         (lit(4) * den).cast("double") +
         (lit(3) * types).cast("double") /
           (lit(4) * den).cast("double") * lower
-    var scored = dn
-      .join(broadcast(gN), (1 to order).map(k => s"w$k"), "left")
-      .join(broadcast(ctxTop), (1 until order).map(k => s"w$k"), "left")
-    for ((k, m) <- ms)
+    lmNPerplexity(grams, order, pplThreshold) { dn =>
+      var scored = dn
+        .join(broadcast(gN), (1 to order).map(k => s"w$k"), "left")
+        .join(broadcast(ctxTop), (1 until order).map(k => s"w$k"), "left")
+      for ((k, m) <- ms)
+        scored = scored
+          .join(broadcast(m), ((order - k + 1) to order).map(i => s"w$i"),
+            "left")
+          .join(broadcast(ctxs(k)),
+            ((order - k + 1) until order).map(i => s"w$i"), "left")
       scored = scored
-        .join(broadcast(m), ((order - k + 1) to order).map(i => s"w$i"),
-          "left")
-        .join(broadcast(ctxs(k)),
-          ((order - k + 1) until order).map(i => s"w$i"), "left")
-    scored = scored
-      .join(broadcast(cw), Seq(s"w$order"), "left")
-      .crossJoin(broadcast(tot))
-      // each level materializes as a column so every branch reuses the
-      // identical double (same expression tree as the oracle's)
-      .withColumn("pc1",
-        (coalesce(col("ncw"), lit(0L)) + 1).cast("double") /
-          (col("ntot") + col("nv") + 1).cast("double"))
-    for (k <- 2 until order)
-      scored = scored.withColumn(s"pc$k", when(col(s"n${k}b").isNotNull,
-        disc(col(s"n$k"), col(s"n${k}b"), col(s"nd$k"), col(s"pc${k - 1}")))
-        .otherwise(col(s"pc${k - 1}")))
-    scored = scored.withColumn("lp", log(when(col("cb").isNotNull,
-      disc(col(countCol), col("cb"), col("nf"), col(s"pc${order - 1}")))
-      .otherwise(col(s"pc${order - 1}"))))
-    scored.groupBy(col("id"))
-      .agg(sum(col("n")).as("m"),
-        sort_array(collect_list(struct((1 to order).map(k => col(s"w$k")) :+
-          (col("n").cast("double") * col("lp")).as("v"): _*))).as("ts"))
-      .select(col("id"), col("m").as(nOut),
-        round(-expr("aggregate(ts, 0D, (a, x) -> a + x.v)") / col("m"), 4)
-          .as("h"))
-      .withColumn("ppl", round(exp(col("h")), 4))
-      .withColumn("keep", col("ppl") <= pplThreshold)
-  }
-
-  /** Interpolated TRIGRAM Kneser-Ney — [[knPerplexityFilter]]'s
-    * machinery at order 3 through the unified [[knScoreN]] core (raw
-    * counts at the top order, CONTINUATION counts at every lower
-    * order). Output: id, n_trigrams, h, ppl, keep.
-    */
-  def kn3PerplexityFilter(docs: DataFrame, id: Column, text: Column,
-      refFilter: Column, maxV: Int, maxT: Int,
-      pplThreshold: Double): DataFrame = {
-    import graft.CacheScope.ScopedPersist
-    val base = lmNBase(docs, id, text, refFilter, 3)
-    val triples = lmNGrams(base, 3).persistScoped()
-    val (vocab, trigrams) = lmNTrain(base.filter(col("is_ref")),
-      triples.filter(col("is_ref")), 3, "tc", maxV, maxT)
-    knScoreN(triples, vocab, trigrams, 3, "tc", "n_trigrams", pplThreshold)
-  }
-
-  /** Persist the trigram KN model — `vocab/` + `trigrams/` parquet, the
-    * [[writeLmModel]] artifact family one order up. Discount statistics
-    * derive from the pruned table at load (exact integers), so one
-    * artifact serves fresh-equal.
-    */
-  def writeLm3Model(docs: DataFrame, id: Column, text: Column,
-      maxV: Int, maxT: Int, dir: String): Unit = {
-    import graft.CacheScope.ScopedPersist
-    val base = lmNTokens(docs, id, text, 3)
-    val triples = lmNGrams(base, 3).persistScoped()
-    val (vocab, trigrams) = lmNTrain(base, triples, 3, "tc", maxV, maxT)
-    vocab.coalesce(1).write.mode("overwrite").parquet(s"$dir/vocab")
-    trigrams.coalesce(1).write.mode("overwrite").parquet(s"$dir/trigrams")
-    docs.sparkSession.catalog.refreshByPath(dir)
-  }
-
-  /** Trigram Kneser-Ney scoring against a [[writeLm3Model]] artifact. */
-  def kn3ScoreAgainstModel(docs: DataFrame, id: Column, text: Column,
-      dir: String, pplThreshold: Double): DataFrame = {
-    val spark = docs.sparkSession
-    knScoreN(lmNGrams(lmNTokens(docs, id, text, 3), 3),
-      spark.read.parquet(s"$dir/vocab"),
-      spark.read.parquet(s"$dir/trigrams"), 3, "tc", "n_trigrams",
-      pplThreshold)
-  }
-
-  /** Interpolated 5-GRAM Kneser-Ney — [[knScoreN]] at KenLM's
-    * PRODUCTION order (the order CCNet's published filters ship).
-    * Output: id, n_grams5, h, ppl, keep.
-    */
-  def kn5PerplexityFilter(docs: DataFrame, id: Column, text: Column,
-      refFilter: Column, maxV: Int, maxT: Int,
-      pplThreshold: Double): DataFrame = {
-    import graft.CacheScope.ScopedPersist
-    val base = lmNBase(docs, id, text, refFilter, 5)
-    val grams = lmNGrams(base, 5).persistScoped()
-    val (vocab, g5) = lmNTrain(base.filter(col("is_ref")),
-      grams.filter(col("is_ref")), 5, "c", maxV, maxT)
-    knScoreN(grams, vocab, g5, 5, "c", "n_grams5", pplThreshold)
-  }
-
-  /** Persist the 5-gram KN model — `vocab/` + `ngrams5/` parquet, the
-    * [[writeLm3Model]] family at production order.
-    */
-  def writeLm5Model(docs: DataFrame, id: Column, text: Column,
-      maxV: Int, maxT: Int, dir: String): Unit = {
-    import graft.CacheScope.ScopedPersist
-    val base = lmNTokens(docs, id, text, 5)
-    val grams = lmNGrams(base, 5).persistScoped()
-    val (vocab, g5) = lmNTrain(base, grams, 5, "c", maxV, maxT)
-    vocab.coalesce(1).write.mode("overwrite").parquet(s"$dir/vocab")
-    g5.coalesce(1).write.mode("overwrite").parquet(s"$dir/ngrams5")
-    docs.sparkSession.catalog.refreshByPath(dir)
-  }
-
-  /** 5-gram Kneser-Ney scoring against a [[writeLm5Model]] artifact. */
-  def kn5ScoreAgainstModel(docs: DataFrame, id: Column, text: Column,
-      dir: String, pplThreshold: Double): DataFrame = {
-    val spark = docs.sparkSession
-    knScoreN(lmNGrams(lmNTokens(docs, id, text, 5), 5),
-      spark.read.parquet(s"$dir/vocab"),
-      spark.read.parquet(s"$dir/ngrams5"), 5, "c", "n_grams5",
-      pplThreshold)
+        .join(broadcast(cw), Seq(s"w$order"), "left")
+        .crossJoin(broadcast(tot))
+        // each level materializes as a column so every branch reuses the
+        // identical double (same expression tree as the oracle's)
+        .withColumn("pc1",
+          (coalesce(col("ncw"), lit(0L)) + 1).cast("double") /
+            (col("ntot") + col("nv") + 1).cast("double"))
+      for (k <- 2 until order)
+        scored = scored.withColumn(s"pc$k", when(col(s"n${k}b").isNotNull,
+          disc(col(s"n$k"), col(s"n${k}b"), col(s"nd$k"), col(s"pc${k - 1}")))
+          .otherwise(col(s"pc${k - 1}")))
+      scored.withColumn("lp", log(when(col("cb").isNotNull,
+        disc(col("c"), col("cb"), col("nf"), col(s"pc${order - 1}")))
+        .otherwise(col(s"pc${order - 1}"))))
+    }
   }
 
   /** fastText-style hashed linear quality classifier — the SERVING shape
@@ -1681,8 +1530,7 @@ object TextOps {
       (pmod(Dedup.SharedHash.hash28(f), lit(dim)) + 1).cast("int"))
     def foldW(arr: Column): Column =
       aggregate(arr, lit(0.0), (acc, x) => acc + w(x))
-    val base = docs.select(id.as("id"),
-        filter(split(lower(text), """\s+"""), x => length(x) > 0).as("ws"))
+    val base = docs.select(id.as("id"), wordsOf(text).as("ws"))
       .filter(size(col("ws")) > 0)
       .withColumn("bg", when(size(col("ws")) >= 2,
         transform(sequence(lit(1), size(col("ws")) - 1),
@@ -1747,7 +1595,7 @@ object TextOps {
     import graft.CacheScope.ScopedPersist
     require(iters >= 1 && dim >= 1 && lrNum >= 1 && lrDen >= 1)
     val base = docs.select(id.as("id"), label.cast("int").as("y"),
-        filter(split(lower(text), """\s+"""), x => length(x) > 0).as("ws"))
+        wordsOf(text).as("ws"))
       .filter(size(col("ws")) > 0)
       .withColumn("bg", when(size(col("ws")) >= 2,
         transform(sequence(lit(1), size(col("ws")) - 1),
@@ -2201,8 +2049,7 @@ object TextOps {
     // (lmPerplexityFilter, hashedLinearScore): a leading-whitespace split
     // artifact must not count as a token, and an all-whitespace doc must
     // hit the kernel's empty-array null contract and be dropped
-    val sig = docs.select(id.as("id"),
-        filter(split(lower(text), """\s+"""), x => length(x) > 0).as("__w"))
+    val sig = docs.select(id.as("id"), wordsOf(text).as("__w"))
       .select(col("id"), size(col("__w")).cast("long").as("n_tokens"),
         graft.functions.repetition_signals(col("__w"), 1).as("s1"),
         graft.functions.repetition_signals(col("__w"), 2).as("s2"))
@@ -2249,7 +2096,7 @@ object TextOps {
       source: Column, segLen: Int, minDf: Int, rate: Double): DataFrame = {
     import graft.CacheScope.ScopedPersist
     val base = docs.select(id.as("id"), source.as("source"),
-        filter(split(lower(text), """\s+"""), x => length(x) > 0).as("ws"))
+        wordsOf(text).as("ws"))
       .filter(size(col("ws")) > 0)
     val segs = base
       .select(col("id"), col("source"), col("ws"),
@@ -2309,7 +2156,7 @@ object TextOps {
     import graft.CacheScope.ScopedPersist
     // targetFilter evaluates BEFORE projection (caller-column reference)
     val base = docs.select(id.as("id"), targetFilter.as("is_t"),
-        filter(split(lower(text), """\s+"""), x => length(x) > 0).as("ws"))
+        wordsOf(text).as("ws"))
       .filter(size(col("ws")) > 0)
     val fb = base.select(col("id"), col("is_t"),
         explode(concat(col("ws"), when(size(col("ws")) >= 2, expr(

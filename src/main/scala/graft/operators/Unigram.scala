@@ -212,8 +212,7 @@ object Unigram {
       model: Seq[(String, Long)]): DataFrame = {
     val wordToks = tokenize(wordTable(docs, text), model)
       .select(col("w"), size(col("toks")).cast("long").as("nt"))
-    docs.select(id, explode(filter(split(lower(text), """\s+"""),
-        x => length(x) > 0)).as("w"))
+    docs.select(id, explode(TextOps.wordsOf(text)).as("w"))
       .join(wordToks, Seq("w"))
       .groupBy(id).agg(sum(col("nt")).as("n_tokens"))
   }

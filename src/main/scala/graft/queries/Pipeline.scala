@@ -2047,7 +2047,7 @@ object Pipeline {
 
   // ===== q176 stored-LM-model scoring ====================================
   // q175's production form: the pruned model TRAINS ONCE into a parquet
-  // artifact (vocab + bigrams — the stored BM25/IVF index discipline
+  // artifact (vocab/ + grams/ — the stored BM25/IVF index discipline
   // applied to a model) and serving loads-and-broadcasts it.
   // Exact integer counts round-trip parquet losslessly, so
   // stored-and-scored must equal freshly-trained — q175's oracle applies
@@ -2590,19 +2590,9 @@ object Pipeline {
   private val CdcW = 3
   private val CdcM = 8
 
-  private def q201(t: Tables): DataFrame = {
-    val ch = Dedup.cdcChunks(graft.Fanout(t.documents), col("doc_id"),
-      col("text"), CdcW, CdcM).persistScoped() // feeds owners AND the report
-    val own = ch.groupBy(col("chunk_md5")).agg(min(col("id")).as("owner"))
-    ch.join(own, "chunk_md5")
-      .groupBy(col("id"))
-      .agg(count(lit(1)).as("n_chunks"),
-        sum(when(col("owner") =!= col("id"), 1L).otherwise(0L))
-          .as("dup_chunks"))
-      .select(col("id").as("doc_id"), col("n_chunks"), col("dup_chunks"),
-        round(col("dup_chunks").cast("double") / col("n_chunks"), 4)
-          .as("dup_frac"))
-  }
+  private def q201(t: Tables): DataFrame =
+    Dedup.cdcReport(Dedup.cdcChunks(graft.Fanout(t.documents), col("doc_id"),
+      col("text"), CdcW, CdcM).persistScoped()) // feeds owners AND the report
 
   private val q201Sql =
     s"""WITH w0 AS (SELECT doc_id AS id, list_filter(
@@ -2958,7 +2948,7 @@ object Pipeline {
 
   private def q211(t: Tables): DataFrame =
     TextOps.knPerplexityFilter(graft.Fanout(t.documents), col("doc_id"),
-      col("text"), col("doc_id") % 10 === 0, LmMaxV, LmMaxB, KnPplThresh)
+      col("text"), col("doc_id") % 10 === 0, 2, LmMaxV, LmMaxB, KnPplThresh)
 
   private val q211Sql =
     s"""WITH w0 AS (SELECT doc_id AS id, list_filter(
@@ -3004,7 +2994,7 @@ object Pipeline {
        |  (round(exp(h), 4) <= $KnPplThresh) AS keep FROM g""".stripMargin
 
   // ===== q212 stored-model Kneser-Ney scoring =============================
-  // The KN model IS q176's stored artifact — the same vocab/ + bigrams/
+  // The KN model IS q176's stored artifact — the same vocab/ + grams/
   // parquet pair (discount statistics derive from the pruned tables at
   // load, exact integers, so stored ≡ fresh BY CONSTRUCTION) — proving
   // one artifact serves both smoothings; this row deliberately reuses
@@ -3028,15 +3018,15 @@ object Pipeline {
   // sorted fold over (w1, w2, w3) terms. Same training slice / pruning
   // discipline as q211 so the two rows differ ONLY in model order —
   // an auditable substitution. q247 serves the same scores from the
-  // stored vocab/ + trigrams/ artifact (writeLm3Model — the q176
-  // family layout one order up); oracle = q246's verbatim.
+  // stored vocab/ + grams/ artifact (writeLmModel at order 3 — q176's
+  // layout one order up); oracle = q246's verbatim.
 
   private val Lm3MaxT = 6000
   private val Kn3PplThresh = 30.0
 
   private def q246(t: Tables): DataFrame =
-    TextOps.kn3PerplexityFilter(graft.Fanout(t.documents), col("doc_id"),
-      col("text"), col("doc_id") % 10 === 0, LmMaxV, Lm3MaxT, Kn3PplThresh)
+    TextOps.knPerplexityFilter(graft.Fanout(t.documents), col("doc_id"),
+      col("text"), col("doc_id") % 10 === 0, 3, LmMaxV, Lm3MaxT, Kn3PplThresh)
 
   private val q246Sql =
     s"""WITH w0 AS (SELECT doc_id AS id, list_filter(
@@ -3104,11 +3094,11 @@ object Pipeline {
 
   private def q247(t: Tables): DataFrame = {
     val dir = RunCache.dir(t.dir, s"lm3_model_${LmMaxV}_$Lm3MaxT") { d =>
-      TextOps.writeLm3Model(
+      TextOps.writeLmModel(
         graft.Fanout(t.documents.filter(col("doc_id") % 10 === 0)),
-        col("doc_id"), col("text"), LmMaxV, Lm3MaxT, d)
+        col("doc_id"), col("text"), 3, LmMaxV, Lm3MaxT, d)
     }
-    TextOps.kn3ScoreAgainstModel(graft.Fanout(t.documents), col("doc_id"),
+    TextOps.knScoreAgainstModel(graft.Fanout(t.documents), col("doc_id"),
       col("text"), dir, Kn3PplThresh)
   }
 
@@ -3121,23 +3111,23 @@ object Pipeline {
   // q246, so the three rows q211 → q246 → q254 differ ONLY in model
   // order — an auditable ladder. The oracle's nested backoff CASE is
   // GENERATED by the same recursion the engine computes, one level per
-  // call. q255 serves from the stored vocab/ + ngrams5/ artifact
-  // (writeLm5Model); oracle = q254's verbatim (stored ≡ fresh).
+  // call. q255 serves from the stored vocab/ + grams/ artifact
+  // (writeLmModel at order 5); oracle = q254's verbatim (stored ≡ fresh).
 
   private val Lm5MaxT = 8000
   private val Kn5PplThresh = 30.0
 
   private def q254(t: Tables): DataFrame =
-    TextOps.kn5PerplexityFilter(graft.Fanout(t.documents), col("doc_id"),
-      col("text"), col("doc_id") % 10 === 0, LmMaxV, Lm5MaxT, Kn5PplThresh)
+    TextOps.knPerplexityFilter(graft.Fanout(t.documents), col("doc_id"),
+      col("text"), col("doc_id") % 10 === 0, 5, LmMaxV, Lm5MaxT, Kn5PplThresh)
 
   private def q255(t: Tables): DataFrame = {
     val dir = RunCache.dir(t.dir, s"lm5_model_${LmMaxV}_$Lm5MaxT") { d =>
-      TextOps.writeLm5Model(
+      TextOps.writeLmModel(
         graft.Fanout(t.documents.filter(col("doc_id") % 10 === 0)),
-        col("doc_id"), col("text"), LmMaxV, Lm5MaxT, d)
+        col("doc_id"), col("text"), 5, LmMaxV, Lm5MaxT, d)
     }
-    TextOps.kn5ScoreAgainstModel(graft.Fanout(t.documents), col("doc_id"),
+    TextOps.knScoreAgainstModel(graft.Fanout(t.documents), col("doc_id"),
       col("text"), dir, Kn5PplThresh)
   }
 
@@ -4315,7 +4305,7 @@ object Pipeline {
     RunCache.dir(t.dir, s"lm_model_${LmMaxV}_$LmMaxB") { d =>
       TextOps.writeLmModel(
         graft.Fanout(t.documents.filter(col("doc_id") % 10 === 0)),
-        col("doc_id"), col("text"), LmMaxV, LmMaxB, d)
+        col("doc_id"), col("text"), 2, LmMaxV, LmMaxB, d)
     }
 
   /** The byte-level BPE merges, trained on the full corpus. */
@@ -5845,8 +5835,7 @@ object Pipeline {
   private def q186(t: Tables): DataFrame =
     graft.operators.Curation.temperatureMixtureAlloc(
       graft.Fanout(t.documents).select(col("doc_id"), col("source"),
-        size(filter(split(lower(col("text")), """\s+"""),
-          x => length(x) > 0)).cast("long").as("n_tokens")),
+        size(TextOps.wordsOf(col("text"))).cast("long").as("n_tokens")),
       col("doc_id"), col("source"), col("n_tokens"), MixBudget)
 
   private val q186Sql =
@@ -6421,8 +6410,7 @@ object Pipeline {
       Seq("doc_id"), "left_semi").localCheckpoint()
     val d5 = d4.join(keptIds(graft.operators.Curation.temperatureMixtureAlloc(
       d4.select(col("doc_id"), col("source"),
-        size(filter(split(lower(col("text")), """\s+"""),
-          x => length(x) > 0)).cast("long").as("n_tokens")),
+        size(TextOps.wordsOf(col("text"))).cast("long").as("n_tokens")),
       col("doc_id"), col("source"), col("n_tokens"), P2MixBudget)),
       Seq("doc_id"), "left_semi")
       .localCheckpoint() // feeds BPE training AND tokenization AND packing
@@ -8234,7 +8222,7 @@ object Pipeline {
     "q253_warc_ingest" -> q253Sql,
     "q254_kn5_perplexity" -> q254Sql,
     // stored ≡ fresh by construction: the artifact is the pruned
-    // (vocab, ngrams5) pair and every discount statistic derives from
+    // (vocab/, grams/) pair and every discount statistic derives from
     // it at load — q254's oracle verbatim (the q247 discipline)
     "q255_kn5_stored_scoring" -> q254Sql,
     "q256_pair_dedup" -> q256Sql,

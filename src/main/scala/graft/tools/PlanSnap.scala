@@ -22,8 +22,9 @@ import graft.{Engine, SparkEntry}
   *    [[graft.RunCache]] directory's name are masked.
   *
   * Usage: sbt "runMain graft.tools.PlanSnap <outDir> <suffix> <q1,q2,...>"
-  * with SPARK_GRAFT_SF_DIR selecting the data directory (default sf0.1 —
-  * the driver's bench SF, so plan shapes match what the bench times).
+  * (one query per number, [[QuerySelect]]) with SPARK_GRAFT_SF_DIR
+  * selecting the data directory (default sf0.1 — the benchmark's scale
+  * factor, so plan shapes match what the bench times).
   * Writes `<outDir>/<query>_<suffix>.txt` per query.
   */
 object PlanSnap {
@@ -35,21 +36,16 @@ object PlanSnap {
     val spark = Engine.session(appName = "plansnap")
     spark.sparkContext.setLogLevel("ERROR")
     new java.io.File(outDir).mkdirs()
-    val wanted = list.split(',').map(_.trim).filter(_.nonEmpty)
-    for (prefix <- wanted) {
-      val hits = SparkEntry.queries.keys.filter(_.startsWith(prefix)).toSeq.sorted
-      require(hits.nonEmpty, s"no query matches prefix $prefix")
-      for (name <- hits) {
-        val df = SparkEntry.queries(name)(spark, dir)
-        val out = new StringBuilder("== Physical Plan ==\n")
-        ExplainUtils.processPlan(initial(df.queryExecution.executedPlan),
-          (s: String) => out.append(s))
-        Files.writeString(Paths.get(s"$outDir/${name}_$suffix.txt"),
-          masked(out.toString))
-        println(s"[plansnap] $outDir/${name}_$suffix.txt")
-        graft.CacheScope.drain()
-        spark.catalog.clearCache()
-      }
+    for (name <- QuerySelect(list)) {
+      val df = SparkEntry.queries(name)(spark, dir)
+      val out = new StringBuilder("== Physical Plan ==\n")
+      ExplainUtils.processPlan(initial(df.queryExecution.executedPlan),
+        (s: String) => out.append(s))
+      Files.writeString(Paths.get(s"$outDir/${name}_$suffix.txt"),
+        masked(out.toString))
+      println(s"[plansnap] $outDir/${name}_$suffix.txt")
+      graft.CacheScope.drain()
+      spark.catalog.clearCache()
     }
     spark.stop()
   }

@@ -13,8 +13,9 @@ import graft.{Counters, Engine}
   * `QDiag q238,q150`); the stage-level findings behind their last
   * optimizations are in OPTIMIZATION_r17.md.
   *
-  * Usage: sbt "runMain graft.tools.QDiag <q1,q2,...> [reps]" with
-  * SPARK_GRAFT_SF_DIR selecting the data directory (default sf0.1).
+  * Usage: sbt "runMain graft.tools.QDiag <q1,q2,...> [reps]" (one query
+  * per number, [[QuerySelect]]) with SPARK_GRAFT_SF_DIR selecting the
+  * data directory (default sf0.1).
   */
 object QDiag {
   def main(args: Array[String]): Unit = {
@@ -23,22 +24,16 @@ object QDiag {
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = Engine.session(appName = "qdiag")
     spark.sparkContext.setLogLevel("ERROR")
-    val wanted = args(0).split(',').map(_.trim).filter(_.nonEmpty)
-    for (prefix <- wanted) {
-      val hits =
-        graft.SparkEntry.queries.keys.filter(_.startsWith(prefix)).toSeq.sorted
-      require(hits.nonEmpty, s"no query matches prefix $prefix")
-      for (name <- hits; rep <- 1 to reps) {
-        val fn = graft.SparkEntry.queries(name)
-        val t0 = System.nanoTime()
-        val (_, c) = Counters.track(spark)(
-          fn(spark, dir).write.format("noop").mode("overwrite").save())
-        val dt = (System.nanoTime() - t0) / 1e9
-        println(f"[qdiag] $name%-34s rep$rep $dt%8.3f s" +
-          f"  jobs=${c.jobs}%3d taskTime=${c.taskRunMs / 1e3}%8.2f s")
-        graft.CacheScope.drain()
-        spark.catalog.clearCache()
-      }
+    for (name <- QuerySelect(args(0)); rep <- 1 to reps) {
+      val fn = graft.SparkEntry.queries(name)
+      val t0 = System.nanoTime()
+      val (_, c) = Counters.track(spark)(
+        fn(spark, dir).write.format("noop").mode("overwrite").save())
+      val dt = (System.nanoTime() - t0) / 1e9
+      println(f"[qdiag] $name%-34s rep$rep $dt%8.3f s" +
+        f"  jobs=${c.jobs}%3d taskTime=${c.taskRunMs / 1e3}%8.2f s")
+      graft.CacheScope.drain()
+      spark.catalog.clearCache()
     }
     spark.stop()
   }

@@ -88,8 +88,8 @@ class Kn3Spec extends AnyFunSuite {
   test("kn3PerplexityFilter matches the independent recursion on every branch") {
     try {
       val exp = reference()
-      val out = TextOps.kn3PerplexityFilter(docs, $"id", $"text",
-          $"id" % 2 === 0, MaxV, MaxT, Thresh)
+      val out = TextOps.knPerplexityFilter(docs, $"id", $"text",
+          $"id" % 2 === 0, 3, MaxV, MaxT, Thresh)
         .select($"id", $"n_trigrams", $"h", $"ppl", $"keep")
         .as[(Long, Long, Double, Double, Boolean)].collect()
         .map(r => r._1 -> r).toMap
@@ -110,12 +110,12 @@ class Kn3Spec extends AnyFunSuite {
     try {
       val dir = java.nio.file.Files.createTempDirectory("lm3").toString
       val refDocs = docs.filter($"id" % 2 === 0)
-      TextOps.writeLm3Model(refDocs, $"id", $"text", MaxV, MaxT, dir)
-      val fresh = TextOps.kn3PerplexityFilter(docs, $"id", $"text",
-          $"id" % 2 === 0, MaxV, MaxT, Thresh)
+      TextOps.writeLmModel(refDocs, $"id", $"text", 3, MaxV, MaxT, dir)
+      val fresh = TextOps.knPerplexityFilter(docs, $"id", $"text",
+          $"id" % 2 === 0, 3, MaxV, MaxT, Thresh)
         .select($"id", $"h", $"ppl").as[(Long, Double, Double)]
         .collect().toSet
-      val stored = TextOps.kn3ScoreAgainstModel(docs, $"id", $"text", dir,
+      val stored = TextOps.knScoreAgainstModel(docs, $"id", $"text", dir,
           Thresh)
         .select($"id", $"h", $"ppl").as[(Long, Double, Double)]
         .collect().toSet

@@ -101,8 +101,8 @@ class Kn5Spec extends AnyFunSuite {
   test("kn5PerplexityFilter matches the independent recursion at every backoff level") {
     try {
       val exp = reference()
-      val out = TextOps.kn5PerplexityFilter(docs, $"id", $"text",
-          $"id" % 2 === 0, MaxV, MaxT, Thresh)
+      val out = TextOps.knPerplexityFilter(docs, $"id", $"text",
+          $"id" % 2 === 0, 5, MaxV, MaxT, Thresh)
         .select($"id", $"n_grams5", $"h", $"ppl", $"keep")
         .as[(Long, Long, Double, Double, Boolean)].collect()
         .map(r => r._1 -> r).toMap
@@ -122,12 +122,12 @@ class Kn5Spec extends AnyFunSuite {
     try {
       val dir = java.nio.file.Files.createTempDirectory("lm5").toString
       val refDocs = docs.filter($"id" % 2 === 0)
-      TextOps.writeLm5Model(refDocs, $"id", $"text", MaxV, MaxT, dir)
-      val fresh = TextOps.kn5PerplexityFilter(docs, $"id", $"text",
-          $"id" % 2 === 0, MaxV, MaxT, Thresh)
+      TextOps.writeLmModel(refDocs, $"id", $"text", 5, MaxV, MaxT, dir)
+      val fresh = TextOps.knPerplexityFilter(docs, $"id", $"text",
+          $"id" % 2 === 0, 5, MaxV, MaxT, Thresh)
         .select($"id", $"h", $"ppl").as[(Long, Double, Double)]
         .collect().toSet
-      val stored = TextOps.kn5ScoreAgainstModel(docs, $"id", $"text", dir,
+      val stored = TextOps.knScoreAgainstModel(docs, $"id", $"text", dir,
           Thresh)
         .select($"id", $"h", $"ppl").as[(Long, Double, Double)]
         .collect().toSet

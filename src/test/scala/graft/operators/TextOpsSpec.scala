@@ -318,7 +318,7 @@ class TextOpsSpec extends AnyFunSuite {
     val dir = java.nio.file.Files.createTempDirectory("lm-model").toString
     try {
       TextOps.writeLmModel(docs.filter($"doc_id" < 10), col("doc_id"),
-        col("text"), 10, 10, dir)
+        col("text"), 2, 10, 10, dir)
       val stored = TextOps.lmScoreAgainstModel(docs, col("doc_id"),
           col("text"), dir, lambda = 0.5, pplThreshold = 5.0)
         .as[(Long, Long, Double, Double, Boolean)].collect().toSet
@@ -328,10 +328,10 @@ class TextOpsSpec extends AnyFunSuite {
       assert(stored == direct && stored.nonEmpty)
       // the artifact really is the bounded pruned model
       assert(spark.read.parquet(s"$dir/vocab").count() == 3)   // a, b, c
-      assert(spark.read.parquet(s"$dir/bigrams").count() == 3) // ab, ba, bc
+      assert(spark.read.parquet(s"$dir/grams").count() == 3) // ab, ba, bc
       // rebuild is overwrite-idempotent
       TextOps.writeLmModel(docs.filter($"doc_id" < 10), col("doc_id"),
-        col("text"), 10, 10, dir)
+        col("text"), 2, 10, 10, dir)
       assert(TextOps.lmScoreAgainstModel(docs, col("doc_id"), col("text"),
           dir, 0.5, 5.0)
         .as[(Long, Long, Double, Double, Boolean)].collect().toSet == direct)
@@ -620,7 +620,7 @@ class TextOpsSpec extends AnyFunSuite {
       targets.map { case (i, t) => (i, t) }).toDF("doc_id", "text")
     for (maxV <- Seq(20, 4)) { // un-pruned, and pruned vocab
       val out = TextOps.knPerplexityFilter(docs, col("doc_id"), col("text"),
-          col("doc_id") < 10, maxV, 20, pplThreshold = 20.0)
+          col("doc_id") < 10, 2, maxV, 20, pplThreshold = 20.0)
         .as[(Long, Long, Double, Double, Boolean)].collect()
         .map(r => r._1 -> r).toMap
       assert(!out.contains(13L), "single-token doc must drop")
@@ -650,14 +650,33 @@ class TextOpsSpec extends AnyFunSuite {
     try {
       // the SAME artifact writeLmModel emits — one stored model, two smoothings
       TextOps.writeLmModel(docs.filter($"doc_id" < 10), col("doc_id"),
-        col("text"), 20, 20, dir)
+        col("text"), 2, 20, 20, dir)
       val stored = TextOps.knScoreAgainstModel(docs, col("doc_id"),
           col("text"), dir, pplThreshold = 20.0)
         .as[(Long, Long, Double, Double, Boolean)].collect().toSet
       val direct = TextOps.knPerplexityFilter(docs, col("doc_id"),
-          col("text"), col("doc_id") < 10, 20, 20, 20.0)
+          col("text"), col("doc_id") < 10, 2, 20, 20, 20.0)
         .as[(Long, Long, Double, Double, Boolean)].collect().toSet
       assert(stored == direct && stored.nonEmpty)
+    } finally graft.CacheScope.drain()
+  }
+
+  test("LM order checks: an add-one read of an order-3 store and an order below 2 fail") {
+    val docs = Seq((0L, "a b c a b c"), (1L, "a b c d")).toDF("doc_id", "text")
+    val dir = java.nio.file.Files.createTempDirectory("lm3-model").toString
+    try {
+      TextOps.writeLmModel(docs, col("doc_id"), col("text"), 3, 10, 10, dir)
+      val e = intercept[IllegalArgumentException](
+        TextOps.lmScoreAgainstModel(docs, col("doc_id"), col("text"), dir,
+          0.5, 5.0))
+      assert(e.getMessage.contains("order-3"), e.getMessage)
+      // the same store serves Kneser-Ney at the order it was written with
+      assert(TextOps.knScoreAgainstModel(docs, col("doc_id"), col("text"),
+        dir, 5.0).columns.contains("n_trigrams"))
+      val e1 = intercept[IllegalArgumentException](
+        TextOps.knPerplexityFilter(docs, col("doc_id"), col("text"),
+          lit(true), 1, 10, 10, 5.0))
+      assert(e1.getMessage.contains("got 1"), e1.getMessage)
     } finally graft.CacheScope.drain()
   }
 

@@ -444,7 +444,7 @@ class EventStreamsSpec extends AnyFunSuite {
   private def lmModel(dir: String, id: String): String = {
     graft.operators.TextOps.writeLmModel(docs.filter(col("doc_id") % 10 === 0)
       .select(col("doc_id").as(id), col("text")),
-      col(id), col("text"), 500, 1000, dir)
+      col(id), col("text"), 2, 500, 1000, dir)
     dir
   }
 
@@ -1167,7 +1167,7 @@ class EventStreamsSpec extends AnyFunSuite {
       .select($"doc_id".as("id"), $"text")
     // frozen artifacts, trained offline on the reference slice
     graft.operators.TextOps.writeLmModel(docs.filter($"id" % 10 === 0),
-      col("id"), col("text"), 500, 1000, lm)
+      col("id"), col("text"), 2, 500, 1000, lm)
     val label = array_contains(split(lower(col("text")), """\s+"""), "dup")
     graft.operators.TextOps.writeLinearModel(spark,
       graft.operators.TextOps.trainHashedLinear(docs, col("id"),

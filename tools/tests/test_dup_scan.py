@@ -63,5 +63,21 @@ class Regions(unittest.TestCase):
         self.assertEqual(len(dup_scan.regions(text, window=7)), 1)
 
 
+    def test_block_shared_by_two_files_is_one_cross_file_region(self):
+        a = "\n".join(unique(5, "a") + BLOCK + unique(5, "b"))
+        b = "\n".join(unique(3, "c") + BLOCK + unique(3, "d"))
+        self.assertEqual(dup_scan.scan([("A.scala", a), ("B.scala", b)]),
+                         [("B.scala", 4, 12, "A.scala", 6)])
+        with tempfile.TemporaryDirectory() as d:
+            for name, text in (("A.scala", a), ("B.scala", b)):
+                with open(os.path.join(d, name), "w") as f:
+                    f.write(text)
+            out = subprocess.run(
+                [sys.executable, os.path.join(TOOLS, "dup_scan.py"), d],
+                capture_output=True, text=True, check=True).stdout
+        self.assertTrue(out.endswith("cross-file regions: 1\nregions: 1\n"),
+                        out)
+
+
 if __name__ == "__main__":
     unittest.main()
