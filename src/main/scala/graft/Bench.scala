@@ -35,10 +35,8 @@ object Bench {
     // don't pay a scale-shift janino/JIT bill on their first pass
     // Dev filter: SPARK_GRAFT_ONLY=q61,q62 times a subset (driver runs
     // without it → full suite; the bucketed rows are skipped when filtered)
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(',').map(_.trim).toSet)
-    val selected = SparkEntry.queries.filter { case (n, _) =>
-      only.forall(_.exists(n.startsWith)) }
+    val only = tools.QuerySelect.fromEnv()
+    val selected = SparkEntry.queries.filter { case (n, _) => only.forall(_(n)) }
     for (warmDir <- Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01")) {
       selected.foreach { case (_, fn) =>
         try fn(spark, warmDir).count() catch { case _: Throwable => () }

@@ -23,10 +23,8 @@ object Verify {
     new java.io.File(outDir).mkdirs()
     // Dev filter (same contract as Bench): SPARK_GRAFT_ONLY=q91,q92 dumps a
     // subset; the driver runs without it → full suite
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(',').map(_.trim).toSet)
-    val selected = SparkEntry.queries.filter { case (n, _) =>
-      only.forall(_.exists(n.startsWith)) }
+    val only = tools.QuerySelect.fromEnv()
+    val selected = SparkEntry.queries.filter { case (n, _) => only.forall(_(n)) }
     selected.foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
@@ -50,7 +48,7 @@ object Verify {
       case c => c.toString
     } + "\""
     val json = SparkEntry.oracleSql
-      .filter { case (n, _) => only.forall(_.exists(n.startsWith)) }
+      .filter { case (n, _) => only.forall(_(n)) }
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     val loadEnd = java.lang.management.ManagementFactory

@@ -207,6 +207,49 @@ object Multimodal {
     }
   }
 
+  /** The base id and the odd-class flag of a non-negative `id` in a
+    * NEAR-DUPLICATE variant family of `groups` bases, shared by the three
+    * synthesizers: ids sharing id % groups are the same base, and ids with
+    * (id / groups) odd carry the family's one planted perturbation, so
+    * same-class members are IDENTICAL. groups = 0 is the plain family:
+    * every id is its own base and none is perturbed.
+    */
+  private def variantOf(codec: String, id: Long, groups: Int): (Long, Boolean) = {
+    require(id >= 0, s"$codec is defined for non-negative ids")
+    require(groups >= 0, s"$codec: groups must be >= 0 (0 = the plain family)")
+    if (groups == 0) (id, false) else (id % groups, (id / groups) % 2 == 1)
+  }
+
+  /** Sets bit i (0 ≤ i < 64) iff `bit(i)` and returns the bits as the
+    * (hi, lo) 32-bit halves, bit i < 32 in lo: bit 63 of a single long
+    * would be sign-hostile to bit arithmetic in BOTH Spark SQL and the
+    * oracle, while two non-negative 32-bit halves shift/xor safely
+    * everywhere. The carry every fingerprint here shares, so pairs and the
+    * stored lifecycle ([[Dedup.ahashPairs]] / the aHash index) serve all
+    * three modalities.
+    */
+  private def packBits(bit: Int => Boolean): (Long, Long) = {
+    var hi = 0L
+    var lo = 0L
+    var i = 0
+    while (i < 64) {
+      if (bit(i)) {
+        if (i < 32) lo |= 1L << i else hi |= 1L << (i - 32)
+      }
+      i += 1
+    }
+    (hi, lo)
+  }
+
+  /** The aHash bits of an 8×8 luma grid: bit i iff 64·lum_i > Σlum — the
+    * strict-inequality integer form of "above the mean", so no division
+    * and no float boundary exists for engines to diverge on.
+    */
+  private def aboveMeanBits(lum: Array[Long]): (Long, Long) = {
+    val tot = lum.sum
+    packBits(i => lum(i) * 64L > tot)
+  }
+
   /** REAL image pixel codec on JDK `javax.imageio` — the PNG/GIF/BMP/JPEG
     * readers and PNG/BMP writers ship with the JRE, so no external codec
     * library is involved. Decode returns the full pixel raster; features
@@ -220,30 +263,39 @@ object Multimodal {
     // whole decode in memory
     javax.imageio.ImageIO.setUseCache(false)
 
-    /** Deterministic synthetic RGB image for a non-negative id:
-      * w = 8 + id%24, h = 8 + (id/24)%24, pixel (x, y) =
-      * (r, g, b) = ((id·31 + x·7 + y·13)%256, (id + x·y)%256, (x + 3y)%256).
+    /** Deterministic synthetic RGB image for a non-negative id, drawn from
+      * its base ([[variantOf]]; base = id when groups = 0):
+      * w = 8 + base%24, h = 8 + (base/24)%24, pixel (x, y) = (r, g, b) =
+      * ((base·31 + x·7 + y·13)%256, (base + x·y)%256, (x + 3y)%256).
       * Pure integer arithmetic — the ground truth an oracle reproduces
       * without decoding anything.
+      *
+      * The odd classes of a variant family additionally white out the
+      * single source pixel the 8×8 resize samples for cell (3, 3) —
+      * (3w/8, 3h/8), which no other cell samples because ⌊x·w/8⌋ is
+      * strictly increasing for w ≥ 8 — so variants of one base differ
+      * from it by that flipped cell plus whatever mean-marginal cells
+      * move. An oracle replays the perturbed cell as CASE (x, y) = (3, 3).
       */
-    def synthImage(id: Long): java.awt.image.BufferedImage = {
-      require(id >= 0, "synthImage is defined for non-negative ids")
-      val w = (8 + id % 24).toInt
-      val h = (8 + (id / 24) % 24).toInt
+    def synthImage(id: Long, groups: Int = 0): java.awt.image.BufferedImage = {
+      val (base, odd) = variantOf("synthImage", id, groups)
+      val w = (8 + base % 24).toInt
+      val h = (8 + (base / 24) % 24).toInt
       val img = new java.awt.image.BufferedImage(
         w, h, java.awt.image.BufferedImage.TYPE_INT_RGB)
       var y = 0
       while (y < h) {
         var x = 0
         while (x < w) {
-          val r = ((id * 31 + x * 7 + y * 13) % 256).toInt
-          val g = ((id + x.toLong * y) % 256).toInt
+          val r = ((base * 31 + x * 7 + y * 13) % 256).toInt
+          val g = ((base + x.toLong * y) % 256).toInt
           val b = (x + 3 * y) % 256
           img.setRGB(x, y, (r << 16) | (g << 8) | b)
           x += 1
         }
         y += 1
       }
+      if (odd) img.setRGB(3 * w / 8, 3 * h / 8, 0xffffff)
       img
     }
 
@@ -297,56 +349,14 @@ object Multimodal {
       * perceptual hashes; the classic recipe is Krawetz's aHash): resize
       * to the 8×8 grid through the EXACT-INTEGER nearest map
       * ([[resizeNearest]]), reduce each cell to the ITU-601 luma
-      * NUMERATOR 299r + 587g + 114b, and set bit i = y·8 + x iff
-      * 64·lum_i > Σlum — the strict-inequality integer form of
-      * "above the mean", so no division and no float boundary exists
-      * for engines to diverge on. Returned as the (hi, lo) 32-bit
-      * halves: bit 63 of a single long would be sign-hostile to bit
-      * arithmetic in BOTH Spark SQL and the oracle, while two
-      * non-negative 32-bit halves shift/xor safely everywhere.
+      * NUMERATOR 299r + 587g + 114b, and set bit i = y·8 + x iff the cell
+      * is above the mean ([[aboveMeanBits]]), carried as (hi, lo)
+      * ([[packBits]]).
       */
     def averageHash(img: java.awt.image.BufferedImage): (Long, Long) = {
-      val r8 = resizeNearest(img, 8, 8)
-      val px = r8.getRGB(0, 0, 8, 8, null, 0, 8)
-      val lum = new Array[Long](64)
-      var tot = 0L
-      var i = 0
-      while (i < 64) {
-        val p = px(i)
-        val l = 299L * ((p >> 16) & 0xff) + 587L * ((p >> 8) & 0xff) +
-          114L * (p & 0xff)
-        lum(i) = l
-        tot += l
-        i += 1
-      }
-      var hi = 0L
-      var lo = 0L
-      i = 0
-      while (i < 64) {
-        if (lum(i) * 64L > tot) {
-          if (i < 32) lo |= 1L << i else hi |= 1L << (i - 32)
-        }
-        i += 1
-      }
-      (hi, lo)
-    }
-
-    /** Deterministic NEAR-DUPLICATE variant family for a non-negative id:
-      * the base raster is [[synthImage]](id % groups); ids with
-      * (id / groups) odd additionally white out the single source pixel
-      * the 8×8 resize samples for cell (3, 3) — (3w/8, 3h/8), which no
-      * other cell samples because ⌊x·w/8⌋ is strictly increasing for
-      * w ≥ 8 — so variants of one base differ from it by that flipped
-      * cell plus whatever mean-marginal cells move, while same-class
-      * variants are IDENTICAL. Pure integer arithmetic end to end: an
-      * oracle replays the perturbed cell as CASE (x, y) = (3, 3).
-      */
-    def synthVariant(id: Long, groups: Int): java.awt.image.BufferedImage = {
-      require(groups >= 1)
-      val img = synthImage(id % groups)
-      if ((id / groups) % 2 == 1)
-        img.setRGB(3 * img.getWidth / 8, 3 * img.getHeight / 8, 0xffffff)
-      img
+      val px = resizeNearest(img, 8, 8).getRGB(0, 0, 8, 8, null, 0, 8)
+      aboveMeanBits(px.map(p => 299L * ((p >> 16) & 0xff) +
+        587L * ((p >> 8) & 0xff) + 114L * (p & 0xff)))
     }
 
     /** Exact-integer pixel features: (w, h, n_px, sum_r, sum_g, sum_b,
@@ -386,64 +396,27 @@ object Multimodal {
     * features without parsing anything.
     */
   object VideoCodec {
-    /** Deterministic synthetic y4m clip for a non-negative id:
-      * w = 4 + 2·(id%6), h = 4 + 2·((id/6)%6) (even — 4:2:0 subsampling),
-      * nFrames = 3 + id%5, 25:1 fps; Y(f, x, y) =
-      * (id·17 + f·29 + x·5 + y·11)%256, U(f,i,j) = (id + f + 2i + 3j)%256,
-      * V(f,i,j) = (id·7 + f·3 + i + j)%256.
+    /** Deterministic synthetic y4m clip for a non-negative id, drawn from
+      * its base ([[variantOf]]; base = id when groups = 0):
+      * w = 4 + 2·(base%6), h = 4 + 2·((base/6)%6) (even — 4:2:0
+      * subsampling), nFrames = 3 + base%5, 25:1 fps; frame f shows content
+      * frame g = f + cut, Y(f, x, y) = (base·17 + g·29 + x·5 + y·11)%256,
+      * U(f,i,j) = (base + g + 2i + 3j)%256,
+      * V(f,i,j) = (base·7 + g·3 + i + j)%256.
+      *
+      * cut is 0, or 2 for the odd classes of a RE-CUT family
+      * ([[ImageCodec.synthImage]]'s video sibling): members of one base
+      * are the same underlying CONTENT SEQUENCE (geometry and length
+      * derive from the base, so they agree), and the cut shifts which
+      * content window the clip carries. Two cuts of one base share the
+      * content frames in the overlap, so a PER-FRAME fingerprint still
+      * collides exactly where a re-cut (trimmed intro, shifted edit)
+      * preserves frames — while the single middle-keyframe hash sees
+      * DIFFERENT content frames (m vs m + 2) and misses the pair.
       */
-    def synthY4m(id: Long): Array[Byte] = {
-      require(id >= 0, "synthY4m is defined for non-negative ids")
-      val w = (4 + 2 * (id % 6)).toInt
-      val h = (4 + 2 * ((id / 6) % 6)).toInt
-      val nf = (3 + id % 5).toInt
-      val bos = new java.io.ByteArrayOutputStream()
-      bos.write(s"YUV4MPEG2 W$w H$h F25:1 Ip A1:1 C420\n".getBytes("US-ASCII"))
-      var f = 0
-      while (f < nf) {
-        bos.write("FRAME\n".getBytes("US-ASCII"))
-        var y = 0
-        while (y < h) {
-          var x = 0
-          while (x < w) {
-            bos.write(((id * 17 + f * 29 + x * 5 + y * 11) % 256).toInt)
-            x += 1
-          }
-          y += 1
-        }
-        var j = 0
-        while (j < h / 2) {
-          var i = 0
-          while (i < w / 2) { bos.write(((id + f + 2 * i + 3 * j) % 256).toInt); i += 1 }
-          j += 1
-        }
-        j = 0
-        while (j < h / 2) {
-          var i = 0
-          while (i < w / 2) { bos.write(((id * 7 + f * 3 + i + j) % 256).toInt); i += 1 }
-          j += 1
-        }
-        f += 1
-      }
-      bos.toByteArray
-    }
-
-    /** RE-CUT near-duplicate clip family ([[ImageCodec.synthVariant]]'s
-      * video sibling): ids sharing id % groups are the same underlying
-      * CONTENT SEQUENCE (geometry and length derive from the base, so
-      * family members agree), and cut = ((id/groups) % 2)·2 shifts which
-      * content window the clip carries — frame f shows content frame
-      * f + cut. Two cuts of one base share the content frames in the
-      * overlap, so a PER-FRAME fingerprint still collides exactly where
-      * a re-cut (trimmed intro, shifted edit) preserves frames — while
-      * the single middle-keyframe hash sees DIFFERENT content frames
-      * (m vs m + 2) and misses the pair. Y(f,x,y) =
-      * (base·17 + (f+cut)·29 + x·5 + y·11)%256; U/V analogous.
-      */
-    def synthY4mRecut(id: Long, groups: Int): Array[Byte] = {
-      require(id >= 0 && groups > 0)
-      val base = id % groups
-      val cut = ((id / groups) % 2).toInt * 2
+    def synthY4m(id: Long, groups: Int = 0): Array[Byte] = {
+      val (base, odd) = variantOf("synthY4m", id, groups)
+      val cut = if (odd) 2 else 0
       val w = (4 + 2 * (base % 6)).toInt
       val h = (4 + 2 * ((base / 6) % 6)).toInt
       val nf = (3 + base % 5).toInt
@@ -536,6 +509,20 @@ object Multimodal {
       }
       if (offs.isEmpty) None else Some((w, h, fn, fd, offs.toArray))
     }
+
+    /** The perceptual hash of the w×h Y plane at `yOff` in `bytes` — video
+      * dedup's standard reduction (fingerprint frames like images): the
+      * plane (already luma) resizes to the 8×8 grid through the same
+      * exact-integer nearest map as [[ImageCodec.averageHash]]
+      * (sx = ⌊cx·w/8⌋ — for the sub-8×8 clips y4m allows, several cells
+      * sample one pixel, the standard nearest upscale), with the same
+      * strict above-mean bits and (hi, lo) carry.
+      */
+    def frameHash(bytes: Array[Byte], yOff: Int, w: Int, h: Int): (Long, Long) =
+      aboveMeanBits(Array.tabulate(64) { i =>
+        val (cy, cx) = (i / 8, i % 8)
+        (bytes(yOff + cy * h / 8 * w + cx * w / 8) & 0xff).toLong
+      })
   }
 
   /** Header-metadata schema appended by [[decodeHeaders]]. */
@@ -546,21 +533,52 @@ object Multimodal {
     StructField("channels", IntegerType),
     StructField("sample_rate", IntegerType)))
 
-  /** REAL header-metadata extraction over a binary column: one narrow
-    * `mapPartitions` pass dispatching on magic bytes ([[HeaderCodec]]).
-    * Unrecognized payloads come back kind="unknown" rather than failing —
-    * corrupt blobs are data, not exceptions, at 100 TB.
+  /** The one per-row pass every `decode*` op is (the MapProcessor shape,
+    * SURVEY §2.3): each row of `df` comes out once per feature row `decode`
+    * returns for its `mediaCol` payload (null when the column is null),
+    * with `schema`'s columns appended — and ONCE with them all null when
+    * `decode` returns none, so an undecodable payload is quarantined
+    * visibly, never dropped and never a failure (corrupt blobs are data,
+    * not exceptions, at 100 TB). One narrow `mapPartitions` pass: no
+    * shuffle, no driver collection.
     */
-  def decodeHeaders(df: DataFrame, mediaCol: String): DataFrame = {
-    val outSchema = StructType(df.schema.fields ++ headerSchema.fields)
+  private def decodeRows(df: DataFrame, mediaCol: String, schema: StructType)(
+      decode: Array[Byte] => Iterator[Seq[Any]]): DataFrame = {
+    val outSchema = StructType(df.schema.fields ++ schema.fields)
     val idx = df.schema.fieldIndex(mediaCol)
+    val nulls = Seq.fill[Any](schema.length)(null)
     df.mapPartitions { rows =>
-      rows.map { r =>
-        val (k, w, h, c, sr) = HeaderCodec.sniff(r.getAs[Array[Byte]](idx))
-        Row.fromSeq(r.toSeq ++ Seq(k, w, h, c, sr))
+      rows.flatMap { r =>
+        val in = r.toSeq
+        val feats = decode(r.getAs[Array[Byte]](idx))
+        (if (feats.hasNext) feats else Iterator.single(nulls))
+          .map(f => Row.fromSeq(in ++ f))
       }
     }(Encoders.row(outSchema))
   }
+
+  /** The one per-row pass every `with*Column` op is: appends a `media`
+    * binary column holding `payload` of the row's `idCol`, which must be
+    * a non-negative long. One narrow pass.
+    */
+  private def withPayload(df: DataFrame, idCol: String)(
+      payload: Long => Array[Byte]): DataFrame = {
+    val outSchema = StructType(df.schema.fields :+
+      StructField("media", BinaryType))
+    val idx = df.schema.fieldIndex(idCol)
+    df.mapPartitions { rows =>
+      rows.map(r => Row.fromSeq(r.toSeq :+ payload(r.getLong(idx))))
+    }(Encoders.row(outSchema))
+  }
+
+  /** REAL header-metadata extraction over a binary column, dispatching on
+    * magic bytes ([[HeaderCodec]]). Unrecognized payloads come back
+    * kind="unknown" and null ones kind="null", rather than failing.
+    */
+  def decodeHeaders(df: DataFrame, mediaCol: String): DataFrame =
+    decodeRows(df, mediaCol, headerSchema) { p =>
+      Iterator.single(HeaderCodec.sniff(p).productIterator.toSeq)
+    }
 
   /** REAL audio synthesis + perceptual fingerprint — the audio leg of the
     * dedup-fingerprint family ([[ImageCodec.averageHash]]'s sibling). The
@@ -588,40 +606,29 @@ object Multimodal {
         le16(16) ++ "data".getBytes ++ le32(data.length) ++ data
     }
 
-    /** Deterministic synthetic mono clip for a non-negative id:
-      * n = 64 + id%192 samples at 8 kHz, sample k =
-      * ((id·13 + k·7919) % 65536) − 32768. Pure integer arithmetic — the
-      * oracle replays samples without parsing the container.
-      */
-    def synthWav(id: Long): Array[Byte] = {
-      require(id >= 0, "synthWav is defined for non-negative ids")
-      val n = (64 + id % 192).toInt
-      val samples = Array.tabulate(n)(k =>
-        (((id * 13 + k.toLong * 7919) % 65536) - 32768).toShort)
-      encodeWavPcm16(8000, 1, samples)
-    }
-
-    /** Near-duplicate variant family: base clip = [[synthWav]](id % groups);
-      * ids with (id / groups) odd additionally clamp the single sample at
+    /** Deterministic synthetic mono clip for a non-negative id, drawn from
+      * its base ([[variantOf]]; base = id when groups = 0):
+      * n = 64 + base%192 samples at 8 kHz, sample k =
+      * ((base·13 + k·7919) % 65536) − 32768. Pure integer arithmetic — the
+      * oracle replays samples without parsing the container. The odd
+      * classes of a variant family additionally clamp the single sample at
       * index n/2 to 32767 — one sample lands in one energy window, so the
       * variant differs from its base by at most the two bits that window's
-      * deltas feed, while same-class variants are identical.
+      * deltas feed.
       */
-    def synthWavVariant(id: Long, groups: Int): Array[Byte] = {
-      require(groups >= 1)
-      val base = id % groups
+    def synthWav(id: Long, groups: Int = 0): Array[Byte] = {
+      val (base, odd) = variantOf("synthWav", id, groups)
       val n = (64 + base % 192).toInt
       val samples = Array.tabulate(n)(k =>
         (((base * 13 + k.toLong * 7919) % 65536) - 32768).toShort)
-      if ((id / groups) % 2 == 1) samples(n / 2) = 32767
+      if (odd) samples(n / 2) = 32767
       encodeWavPcm16(8000, 1, samples)
     }
 
     /** The energy-delta fingerprint of a decoded sample array, as the
-      * (hi, lo) 32-bit halves ([[ImageCodec.averageHash]]'s carry
-      * convention). Window of sample k is (k·65)/n — integer division,
-      * the exact GROUP BY an oracle replays; windows left empty by short
-      * clips (n < 65) contribute energy 0.
+      * (hi, lo) 32-bit halves ([[packBits]]). Window of sample k is
+      * (k·65)/n — integer division, the exact GROUP BY an oracle replays;
+      * windows left empty by short clips (n < 65) contribute energy 0.
       */
     def energyDeltaHash(samples: Array[Short]): (Long, Long) = {
       val n = samples.length
@@ -632,16 +639,7 @@ object Multimodal {
         e(((k.toLong * 65) / n).toInt) += s * s
         k += 1
       }
-      var hi = 0L
-      var lo = 0L
-      var i = 0
-      while (i < 64) {
-        if (e(i) > e(i + 1)) {
-          if (i < 32) lo |= 1L << i else hi |= 1L << (i - 32)
-        }
-        i += 1
-      }
-      (hi, lo)
+      packBits(i => e(i) > e(i + 1))
     }
   }
 
@@ -652,47 +650,25 @@ object Multimodal {
     StructField("af_lo", LongType)))
 
   /** REAL decode → energy-delta fingerprint over a binary column — the
-    * audio sibling of [[decodeImageAHash]]: one narrow pass appending
-    * (n_samples, af_hi, af_lo); non-PCM/corrupt payloads yield nulls.
-    * Pairs and the stored lifecycle reuse the image machinery
-    * ([[Dedup.ahashPairs]] / the aHash index) — the fingerprint carry
-    * convention is shared by design.
+    * audio sibling of [[decodeImageAHash]], appending (n_samples, af_hi,
+    * af_lo); non-PCM/corrupt payloads yield nulls. Pairs and the stored
+    * lifecycle reuse the image machinery ([[Dedup.ahashPairs]] / the aHash
+    * index) — the fingerprint carry convention is shared by design.
     */
-  def decodeAudioFingerprint(df: DataFrame, mediaCol: String): DataFrame = {
-    val outSchema = StructType(df.schema.fields ++ audioFingerprintSchema.fields)
-    val idx = df.schema.fieldIndex(mediaCol)
-    df.mapPartitions { rows =>
-      rows.map { r =>
-        val payload = r.getAs[Array[Byte]](idx)
-        val feats = Option(payload).flatMap(HeaderCodec.wavPcm16) match {
-          case Some((_, _, samples)) =>
-            val (hi, lo) = AudioCodec.energyDeltaHash(samples)
-            Seq[Any](samples.length.toLong, hi, lo)
-          case None => Seq[Any](null, null, null)
-        }
-        Row.fromSeq(r.toSeq ++ feats)
+  def decodeAudioFingerprint(df: DataFrame, mediaCol: String): DataFrame =
+    decodeRows(df, mediaCol, audioFingerprintSchema) { p =>
+      Option(p).flatMap(HeaderCodec.wavPcm16).iterator.map { case (_, _, samples) =>
+        val (hi, lo) = AudioCodec.energyDeltaHash(samples)
+        Seq[Any](samples.length.toLong, hi, lo)
       }
-    }(Encoders.row(outSchema))
-  }
+    }
 
-  /** Attach a REAL WAV payload per row ([[AudioCodec.synthWavVariant]] —
-    * groups = 0 means the plain [[AudioCodec.synthWav]] family with no
-    * planted near-dups). One narrow pass; id column non-negative long.
+  /** Attach a REAL WAV payload per row ([[AudioCodec.synthWav]]; groups = 0
+    * is the plain family with no planted near-dups).
     */
   def withAudioColumn(df: DataFrame, idCol: String,
-      groups: Int = 0): DataFrame = {
-    val outSchema = StructType(df.schema.fields :+
-      StructField("media", BinaryType))
-    val idx = df.schema.fieldIndex(idCol)
-    df.mapPartitions { rows =>
-      rows.map { r =>
-        val id = r.getLong(idx)
-        val payload = if (groups <= 0) AudioCodec.synthWav(id)
-          else AudioCodec.synthWavVariant(id, groups)
-        Row.fromSeq(r.toSeq :+ payload)
-      }
-    }(Encoders.row(outSchema))
-  }
+      groups: Int = 0): DataFrame =
+    withPayload(df, idCol)(AudioCodec.synthWav(_, groups))
 
   /** Audio-feature schema appended by [[decodeWavAudio]]. */
   val wavFeatureSchema: StructType = StructType(Seq(
@@ -706,41 +682,33 @@ object Multimodal {
   /** REAL audio decode + features over a binary column: 16-bit PCM WAV
     * payloads are fully decoded ([[HeaderCodec.wavPcm16]] — PCM needs no
     * codec library) and reduced to (channels, rate, sample count,
-    * duration, RMS energy, peak amplitude) in one narrow pass. Energy
-    * accumulates in exact Long arithmetic (int16² sums — no float-order
-    * sensitivity); non-PCM/corrupt payloads yield null features, not
-    * failures. The audio counterpart of [[decodeImageFeatures]].
+    * duration, RMS energy, peak amplitude). Energy accumulates in exact
+    * Long arithmetic (int16² sums — no float-order sensitivity);
+    * non-PCM/corrupt payloads yield null features, not failures. The
+    * audio counterpart of [[decodeImageFeatures]].
     */
-  def decodeWavAudio(df: DataFrame, mediaCol: String): DataFrame = {
-    val outSchema = StructType(df.schema.fields ++ wavFeatureSchema.fields)
-    val idx = df.schema.fieldIndex(mediaCol)
-    df.mapPartitions { rows =>
-      rows.map { r =>
-        val payload = r.getAs[Array[Byte]](idx)
-        val feats = Option(payload).flatMap(HeaderCodec.wavPcm16) match {
-          case Some((ch, rate, samples)) if samples.nonEmpty =>
-            var sumSq = 0L
-            var peak = 0
-            var j = 0
-            while (j < samples.length) {
-              val s = samples(j).toInt
-              sumSq += s.toLong * s
-              val a = math.abs(s)
-              if (a > peak) peak = a
-              j += 1
-            }
-            val frames = samples.length.toLong / ch
-            Seq[Any](ch, rate, samples.length.toLong,
-              frames.toDouble / rate,
-              math.sqrt(sumSq.toDouble / samples.length) / 32768.0, peak)
-          case Some((ch, rate, _)) =>
-            Seq[Any](ch, rate, 0L, 0.0, 0.0, 0)
-          case None => Seq[Any](null, null, null, null, null, null)
-        }
-        Row.fromSeq(r.toSeq ++ feats)
+  def decodeWavAudio(df: DataFrame, mediaCol: String): DataFrame =
+    decodeRows(df, mediaCol, wavFeatureSchema) { p =>
+      Option(p).flatMap(HeaderCodec.wavPcm16).iterator.map {
+        case (ch, rate, samples) if samples.nonEmpty =>
+          var sumSq = 0L
+          var peak = 0
+          var j = 0
+          while (j < samples.length) {
+            val s = samples(j).toInt
+            sumSq += s.toLong * s
+            val a = math.abs(s)
+            if (a > peak) peak = a
+            j += 1
+          }
+          val frames = samples.length.toLong / ch
+          Seq[Any](ch, rate, samples.length.toLong,
+            frames.toDouble / rate,
+            math.sqrt(sumSq.toDouble / samples.length) / 32768.0, peak)
+        case (ch, rate, _) =>
+          Seq[Any](ch, rate, 0L, 0.0, 0.0, 0)
       }
-    }(Encoders.row(outSchema))
-  }
+    }
 
   /** Image-feature schema appended by [[decodeImageFeatures]]. */
   val imageFeatureSchema: StructType = StructType(Seq(
@@ -755,51 +723,24 @@ object Multimodal {
   /** REAL image pixel decode + features over a binary column: every
     * ImageIO-decodable payload (PNG/GIF/BMP/JPEG — the JDK's own codecs)
     * is fully decoded and reduced to [[imageFeatureSchema]]'s exact-integer
-    * features in one narrow pass; undecodable/null payloads yield null
-    * features, not failures. The image sibling of [[decodeWavAudio]].
+    * features; undecodable/null payloads yield null features, not
+    * failures. The image sibling of [[decodeWavAudio]].
+    *
+    * With `resizeTo` = Some((tw, th)) the decoded raster first resizes
+    * through [[ImageCodec.resizeNearest]] and the features are those of
+    * the RESIZED raster — the thumbnail/normalize stage of a multimodal
+    * pipeline with every step (codec, integer source map, integer sums)
+    * oracle-replayable.
     */
-  def decodeImageFeatures(df: DataFrame, mediaCol: String): DataFrame = {
-    val outSchema = StructType(df.schema.fields ++ imageFeatureSchema.fields)
-    val idx = df.schema.fieldIndex(mediaCol)
-    df.mapPartitions { rows =>
-      rows.map { r =>
-        val payload = r.getAs[Array[Byte]](idx)
-        val feats = Option(payload).flatMap(ImageCodec.decode) match {
-          case Some(img) =>
-            val (w, h, n, sr, sg, sb, pk) = ImageCodec.features(img)
-            Seq[Any](w, h, n, sr, sg, sb, pk)
-          case None => Seq[Any](null, null, null, null, null, null, null)
-        }
-        Row.fromSeq(r.toSeq ++ feats)
+  def decodeImageFeatures(df: DataFrame, mediaCol: String,
+      resizeTo: Option[(Int, Int)] = None): DataFrame =
+    decodeRows(df, mediaCol, imageFeatureSchema) { p =>
+      Option(p).flatMap(ImageCodec.decode).iterator.map { img =>
+        val out = resizeTo.fold(img) { case (tw, th) =>
+          ImageCodec.resizeNearest(img, tw, th) }
+        ImageCodec.features(out).productIterator.toSeq
       }
-    }(Encoders.row(outSchema))
-  }
-
-  /** REAL decode → RESIZE → features: every decodable payload resizes to
-    * (tw, th) through [[ImageCodec.resizeNearest]] and reduces to the
-    * exact-integer [[imageFeatureSchema]] of the RESIZED raster — the
-    * thumbnail/normalize stage of a multimodal pipeline with every step
-    * (codec, integer source map, integer sums) oracle-replayable. One
-    * narrow pass; undecodable payloads yield null features.
-    */
-  def decodeResizedImageFeatures(df: DataFrame, mediaCol: String,
-      tw: Int, th: Int): DataFrame = {
-    val outSchema = StructType(df.schema.fields ++ imageFeatureSchema.fields)
-    val idx = df.schema.fieldIndex(mediaCol)
-    df.mapPartitions { rows =>
-      rows.map { r =>
-        val payload = r.getAs[Array[Byte]](idx)
-        val feats = Option(payload).flatMap(ImageCodec.decode) match {
-          case Some(img) =>
-            val (w, h, n, sr, sg, sb, pk) =
-              ImageCodec.features(ImageCodec.resizeNearest(img, tw, th))
-            Seq[Any](w, h, n, sr, sg, sb, pk)
-          case None => Seq[Any](null, null, null, null, null, null, null)
-        }
-        Row.fromSeq(r.toSeq ++ feats)
-      }
-    }(Encoders.row(outSchema))
-  }
+    }
 
   /** aHash schema appended by [[decodeImageAHash]]. */
   val imageAHashSchema: StructType = StructType(Seq(
@@ -809,50 +750,19 @@ object Multimodal {
     StructField("ah_lo", LongType)))
 
   /** REAL decode → perceptual AVERAGE HASH over a binary column — the
-    * fingerprint stage of image dedup ([[ImageCodec.averageHash]]): one
-    * narrow pass appending (img_w, img_h, ah_hi, ah_lo); undecodable
-    * payloads yield null features (corrupt blobs are data at 100 TB).
-    * Pairs come from [[Dedup.ahashPairs]]' lossless banding — this op
-    * only fingerprints, so the expensive decode runs exactly once per
-    * image no matter how many band probes follow.
+    * fingerprint stage of image dedup ([[ImageCodec.averageHash]]),
+    * appending (img_w, img_h, ah_hi, ah_lo); undecodable payloads yield
+    * null features. Pairs come from [[Dedup.ahashPairs]]' lossless
+    * banding — this op only fingerprints, so the expensive decode runs
+    * exactly once per image no matter how many band probes follow.
     */
-  def decodeImageAHash(df: DataFrame, mediaCol: String): DataFrame = {
-    val outSchema = StructType(df.schema.fields ++ imageAHashSchema.fields)
-    val idx = df.schema.fieldIndex(mediaCol)
-    df.mapPartitions { rows =>
-      rows.map { r =>
-        val payload = r.getAs[Array[Byte]](idx)
-        val feats = Option(payload).flatMap(ImageCodec.decode) match {
-          case Some(img) =>
-            val (hi, lo) = ImageCodec.averageHash(img)
-            Seq[Any](img.getWidth, img.getHeight, hi, lo)
-          case None => Seq[Any](null, null, null, null)
-        }
-        Row.fromSeq(r.toSeq ++ feats)
+  def decodeImageAHash(df: DataFrame, mediaCol: String): DataFrame =
+    decodeRows(df, mediaCol, imageAHashSchema) { p =>
+      Option(p).flatMap(ImageCodec.decode).iterator.map { img =>
+        val (hi, lo) = ImageCodec.averageHash(img)
+        Seq[Any](img.getWidth, img.getHeight, hi, lo)
       }
-    }(Encoders.row(outSchema))
-  }
-
-  /** Attach a REAL near-duplicate-family image payload per row
-    * ([[ImageCodec.synthVariant]]) — the fixture for image-dedup gates:
-    * ids sharing id % groups are the same base image, odd classes carry
-    * the one-pixel perturbation. Format alternates PNG/BMP by id parity
-    * (both lossless JDK codecs run). One narrow pass.
-    */
-  def withImageVariantColumn(df: DataFrame, idCol: String,
-      groups: Int): DataFrame = {
-    val outSchema = StructType(df.schema.fields :+
-      StructField("media", BinaryType))
-    val idx = df.schema.fieldIndex(idCol)
-    df.mapPartitions { rows =>
-      rows.map { r =>
-        val id = r.getLong(idx)
-        val fmt = if (id % 2 == 0) "png" else "bmp"
-        Row.fromSeq(r.toSeq :+
-          ImageCodec.encode(ImageCodec.synthVariant(id, groups), fmt))
-      }
-    }(Encoders.row(outSchema))
-  }
+    }
 
   /** Video-feature schema appended by [[decodeVideoFeatures]]. */
   val videoFeatureSchema: StructType = StructType(Seq(
@@ -870,41 +780,33 @@ object Multimodal {
     * shape of a video-pretraining pipeline) and its Y plane reduced to
     * exact integer sums + peak. Corrupt/non-y4m payloads yield null
     * features. The video sibling of [[decodeImageFeatures]] /
-    * [[decodeWavAudio]] — all three modalities now decode for real.
+    * [[decodeWavAudio]] — all three modalities decode for real.
     */
   def decodeVideoFeatures(df: DataFrame, mediaCol: String,
       sampleEvery: Int): DataFrame = {
     require(sampleEvery >= 1)
-    val outSchema = StructType(df.schema.fields ++ videoFeatureSchema.fields)
-    val idx = df.schema.fieldIndex(mediaCol)
-    df.mapPartitions { rows =>
-      rows.map { r =>
-        val payload = r.getAs[Array[Byte]](idx)
-        val feats = Option(payload).flatMap(VideoCodec.parseY4m) match {
-          case Some((w, h, _, _, offs)) =>
-            var sum = 0L
-            var peak = 0L
-            var ns = 0
-            var f = 0
-            while (f < offs.length) {
-              val o = offs(f)
-              var k = 0
-              val n = w * h
-              while (k < n) {
-                val v = (payload(o + k) & 0xff).toLong
-                sum += v
-                if (v > peak) peak = v
-                k += 1
-              }
-              ns += 1
-              f += sampleEvery
-            }
-            Seq[Any](w, h, offs.length, ns, sum, peak)
-          case None => Seq[Any](null, null, null, null, null, null)
+    decodeRows(df, mediaCol, videoFeatureSchema) { p =>
+      VideoCodec.parseY4m(p).iterator.map { case (w, h, _, _, offs) =>
+        var sum = 0L
+        var peak = 0L
+        var ns = 0
+        var f = 0
+        while (f < offs.length) {
+          val o = offs(f)
+          var k = 0
+          val n = w * h
+          while (k < n) {
+            val v = (p(o + k) & 0xff).toLong
+            sum += v
+            if (v > peak) peak = v
+            k += 1
+          }
+          ns += 1
+          f += sampleEvery
         }
-        Row.fromSeq(r.toSeq ++ feats)
+        Seq[Any](w, h, offs.length, ns, sum, peak)
       }
-    }(Encoders.row(outSchema))
+    }
   }
 
   /** Keyframe-hash schema appended by [[decodeVideoKeyframeAHash]]. */
@@ -916,58 +818,19 @@ object Multimodal {
     StructField("kf_hi", LongType),
     StructField("kf_lo", LongType)))
 
-  /** REAL video parse → KEYFRAME perceptual hash — video dedup's standard
-    * reduction (fingerprint a representative frame, then dedup frames
-    * like images): the middle frame's Y plane (already luma) resizes to
-    * the 8×8 grid through the same exact-integer nearest map as
-    * [[ImageCodec.averageHash]] (sx = ⌊cx·w/8⌋ — for the sub-8×8 clips
-    * y4m allows, several cells sample one pixel, the standard nearest
-    * upscale), bits are the strict above-mean comparison 64·y > Σy, and
-    * the (hi, lo) carry is shared with the image/audio fingerprints so
-    * pairs and the stored lifecycle reuse [[Dedup.ahashPairs]] / the
-    * aHash index unchanged. One narrow pass; corrupt/non-y4m payloads
-    * yield nulls.
+  /** REAL video parse → KEYFRAME perceptual hash: the middle frame
+    * kf = n_frames / 2 through [[VideoCodec.frameHash]], so pairs and the
+    * stored lifecycle reuse [[Dedup.ahashPairs]] / the aHash index
+    * unchanged. Corrupt/non-y4m payloads yield nulls.
     */
-  def decodeVideoKeyframeAHash(df: DataFrame, mediaCol: String): DataFrame = {
-    val outSchema = StructType(df.schema.fields ++ videoKeyframeAHashSchema.fields)
-    val idx = df.schema.fieldIndex(mediaCol)
-    df.mapPartitions { rows =>
-      rows.map { r =>
-        val payload = r.getAs[Array[Byte]](idx)
-        val feats = Option(payload).flatMap(VideoCodec.parseY4m) match {
-          case Some((w, h, _, _, offs)) =>
-            val m = offs.length / 2
-            val o = offs(m)
-            val lum = new Array[Long](64)
-            var tot = 0L
-            var cy = 0
-            while (cy < 8) {
-              val sy = cy * h / 8
-              var cx = 0
-              while (cx < 8) {
-                val v = (payload(o + sy * w + cx * w / 8) & 0xff).toLong
-                lum(cy * 8 + cx) = v
-                tot += v
-                cx += 1
-              }
-              cy += 1
-            }
-            var hi = 0L
-            var lo = 0L
-            var i = 0
-            while (i < 64) {
-              if (lum(i) * 64L > tot) {
-                if (i < 32) lo |= 1L << i else hi |= 1L << (i - 32)
-              }
-              i += 1
-            }
-            Seq[Any](w, h, offs.length, m, hi, lo)
-          case None => Seq[Any](null, null, null, null, null, null)
-        }
-        Row.fromSeq(r.toSeq ++ feats)
+  def decodeVideoKeyframeAHash(df: DataFrame, mediaCol: String): DataFrame =
+    decodeRows(df, mediaCol, videoKeyframeAHashSchema) { p =>
+      VideoCodec.parseY4m(p).iterator.map { case (w, h, _, _, offs) =>
+        val m = offs.length / 2
+        val (hi, lo) = VideoCodec.frameHash(p, offs(m), w, h)
+        Seq[Any](w, h, offs.length, m, hi, lo)
       }
-    }(Encoders.row(outSchema))
-  }
+    }
 
   /** Frame-hash schema appended by [[decodeVideoFrameAHashes]]. */
   val videoFrameAHashSchema: StructType = StructType(Seq(
@@ -982,9 +845,8 @@ object Multimodal {
     * reduction ([[decodeVideoKeyframeAHash]] hashes ONE representative
     * frame; a re-cut clip's middle frame differs, so real pipelines
     * fingerprint EVERY sampled keyframe and match clips on ANY shared
-    * frame): every `sampleEvery`-th frame's Y plane through the same
-    * 8×8 exact-integer nearest map and strict above-mean bits, one
-    * output row per sampled frame with the shared (hi, lo) carry — so
+    * frame): every `sampleEvery`-th frame through
+    * [[VideoCodec.frameHash]], one output row per sampled frame — so
     * [[graft.operators.Dedup.ahashPairs]] and the stored aHash index
     * consume frames exactly like images, keyed by
     * [[graft.operators.Dedup.packedKey]](doc, frame). Generator shape
@@ -995,97 +857,36 @@ object Multimodal {
   def decodeVideoFrameAHashes(df: DataFrame, mediaCol: String,
       sampleEvery: Int): DataFrame = {
     require(sampleEvery >= 1)
-    val outSchema = StructType(df.schema.fields ++ videoFrameAHashSchema.fields)
-    val idx = df.schema.fieldIndex(mediaCol)
-    df.mapPartitions { rows =>
-      rows.flatMap { r =>
-        val payload = r.getAs[Array[Byte]](idx)
-        Option(payload).flatMap(VideoCodec.parseY4m) match {
-          case Some((w, h, _, _, offs)) =>
-            Iterator.range(0, offs.length, sampleEvery).map { f =>
-              val o = offs(f)
-              val lum = new Array[Long](64)
-              var tot = 0L
-              var cy = 0
-              while (cy < 8) {
-                val sy = cy * h / 8
-                var cx = 0
-                while (cx < 8) {
-                  val v = (payload(o + sy * w + cx * w / 8) & 0xff).toLong
-                  lum(cy * 8 + cx) = v
-                  tot += v
-                  cx += 1
-                }
-                cy += 1
-              }
-              var hi = 0L
-              var lo = 0L
-              var i = 0
-              while (i < 64) {
-                if (lum(i) * 64L > tot) {
-                  if (i < 32) lo |= 1L << i else hi |= 1L << (i - 32)
-                }
-                i += 1
-              }
-              Row.fromSeq(r.toSeq ++ Seq[Any](w, h, offs.length, f, hi, lo))
-            }
-          case None =>
-            Iterator.single(Row.fromSeq(r.toSeq ++
-              Seq[Any](null, null, null, null, null, null)))
+    decodeRows(df, mediaCol, videoFrameAHashSchema) { p =>
+      VideoCodec.parseY4m(p).iterator.flatMap { case (w, h, _, _, offs) =>
+        Iterator.range(0, offs.length, sampleEvery).map { f =>
+          val (hi, lo) = VideoCodec.frameHash(p, offs(f), w, h)
+          Seq[Any](w, h, offs.length, f, hi, lo)
         }
       }
-    }(Encoders.row(outSchema))
+    }
   }
 
-  /** Attach a REAL re-cut-family y4m payload per row
-    * ([[VideoCodec.synthY4mRecut]]) — the fixture for multi-keyframe
-    * video dedup. One narrow pass; the id column must be a
-    * non-negative long.
+  /** Attach a REAL y4m video payload per row ([[VideoCodec.synthY4m]];
+    * groups ≥ 1 is the re-cut family, the fixture for multi-keyframe video
+    * dedup).
     */
-  def withVideoRecutColumn(df: DataFrame, idCol: String,
-      groups: Int): DataFrame = {
-    val outSchema = StructType(df.schema.fields :+
-      StructField("media", BinaryType))
-    val idx = df.schema.fieldIndex(idCol)
-    df.mapPartitions { rows =>
-      rows.map { r =>
-        Row.fromSeq(r.toSeq :+
-          VideoCodec.synthY4mRecut(r.getLong(idx), groups))
-      }
-    }(Encoders.row(outSchema))
-  }
+  def withVideoColumn(df: DataFrame, idCol: String,
+      groups: Int = 0): DataFrame =
+    withPayload(df, idCol)(VideoCodec.synthY4m(_, groups))
 
-  /** Attach a REAL y4m video payload per row ([[VideoCodec.synthY4m]]).
-    * One narrow pass; the id column must be a non-negative long.
+  /** Attach a REAL image payload per row: [[ImageCodec.synthImage]]
+    * encoded through a real JDK writer, format alternating PNG/BMP by id
+    * parity so BOTH lossless codecs run under any gate built on this
+    * column. groups ≥ 1 is the near-duplicate family, the fixture for
+    * image-dedup gates.
     */
-  def withVideoColumn(df: DataFrame, idCol: String): DataFrame = {
-    val outSchema = StructType(df.schema.fields :+
-      StructField("media", BinaryType))
-    val idx = df.schema.fieldIndex(idCol)
-    df.mapPartitions { rows =>
-      rows.map { r =>
-        Row.fromSeq(r.toSeq :+ VideoCodec.synthY4m(r.getLong(idx)))
-      }
-    }(Encoders.row(outSchema))
-  }
-
-  /** Attach a REAL image payload per row: [[ImageCodec.synthImage]] encoded
-    * through a real JDK writer, format alternating PNG/BMP by id parity so
-    * BOTH lossless codecs run under any gate built on this column. One
-    * narrow pass; the id column must be a non-negative long.
-    */
-  def withImageColumn(df: DataFrame, idCol: String): DataFrame = {
-    val outSchema = StructType(df.schema.fields :+
-      StructField("media", BinaryType))
-    val idx = df.schema.fieldIndex(idCol)
-    df.mapPartitions { rows =>
-      rows.map { r =>
-        val id = r.getLong(idx)
-        val fmt = if (id % 2 == 0) "png" else "bmp"
-        Row.fromSeq(r.toSeq :+ ImageCodec.encode(ImageCodec.synthImage(id), fmt))
-      }
-    }(Encoders.row(outSchema))
-  }
+  def withImageColumn(df: DataFrame, idCol: String,
+      groups: Int = 0): DataFrame =
+    withPayload(df, idCol) { id =>
+      ImageCodec.encode(ImageCodec.synthImage(id, groups),
+        if (id % 2 == 0) "png" else "bmp")
+    }
 
   /** Attach media payload + metadata to a text table (the harness has no
     * binary table, so the payload is the utf-8 bytes of `textCol` — opaque
@@ -1097,22 +898,15 @@ object Multimodal {
         octet_length(col("media")).cast("long").as("n_bytes"),
         lit("utf8-blob").as("format")))
 
-  /** Decode + feature-extract: one imperative batch pass per partition over
-    * the binary column (the MapProcessor shape, SURVEY §2.3), emitting the
-    * original row + [[featureSchema]] columns.
+  /** Decode + feature-extract over an OPAQUE binary column
+    * ([[StubCodec]]), emitting the original row + [[featureSchema]]
+    * columns; a null payload yields (null, 0, 0, 0).
     */
-  def decodeFeatures(df: DataFrame, mediaCol: String): DataFrame = {
-    val outSchema = StructType(df.schema.fields ++ featureSchema.fields)
-    val idx = df.schema.fieldIndex(mediaCol)
-    df.mapPartitions { rows =>
-      rows.map { r =>
-        val payload = r.getAs[Array[Byte]](idx)
-        val (ck, n, w, h) =
-          if (payload == null) (null, 0L, 0, 0) else StubCodec.decode(payload)
-        Row.fromSeq(r.toSeq ++ Seq(ck, n, w, h))
-      }
-    }(Encoders.row(outSchema))
-  }
+  def decodeFeatures(df: DataFrame, mediaCol: String): DataFrame =
+    decodeRows(df, mediaCol, featureSchema) { p =>
+      Iterator.single(if (p == null) Seq[Any](null, 0L, 0, 0)
+        else StubCodec.decode(p).productIterator.toSeq)
+    }
 
   /** Resize stub: recompute dimensions against a bounding box, preserving
     * aspect ratio in integer arithmetic (deterministic, oracle-friendly).

@@ -2675,8 +2675,8 @@ object Pipeline {
   private def q220(t: Tables): DataFrame = {
     val withImg = Multimodal.withImageColumn(
       graft.Fanout(t.documents).select(col("doc_id")), "doc_id")
-    Multimodal.decodeResizedImageFeatures(withImg, "media",
-      ImgResizeTo, ImgResizeTo)
+    Multimodal.decodeImageFeatures(withImg, "media",
+      resizeTo = Some((ImgResizeTo, ImgResizeTo)))
       .select(col("doc_id"), col("img_w"), col("img_h"), col("n_px"),
         col("sum_r"), col("sum_g"), col("sum_b"), col("peak_lum"))
   }
@@ -3249,13 +3249,13 @@ object Pipeline {
     val imgDir = RunCache.dir(t.dir, s"pair_img_idx_$AHashGroups") { d =>
       Dedup.writeAHashIndex(
         Multimodal.decodeImageAHash(
-          Multimodal.withImageVariantColumn(
+          Multimodal.withImageColumn(
             graft.Fanout(t.documents.filter(col("doc_id") % 6 === 0))
               .select(col("doc_id")), "doc_id", AHashGroups), "media")
           .select((col("doc_id") + PairStoreOffset).as("id"),
             col("ah_hi"), col("ah_lo")), d)
     }
-    val pairs = Multimodal.withImageVariantColumn(
+    val pairs = Multimodal.withImageColumn(
         graft.Fanout(t.documents).select(col("doc_id"), col("text")),
         "doc_id", AHashGroups)
       .select(col("doc_id").as("id"), col("text").as("caption"),
@@ -3750,7 +3750,7 @@ object Pipeline {
   // (hi, lo) carry through the SAME banded-pair kernel, keyed by the
   // overflow-guarded packedKey(doc, frame), and pairs reduce to
   // (doc_a, doc_b, n_frame_hits, min_hamming). The fixture is the
-  // re-cut family (synthY4mRecut: same base content, cut ∈ {0, 2});
+  // re-cut family (synthY4m with groups: same base content, cut ∈ {0, 2});
   // VideoDedupSpec pins a planted re-cut pair the middle-frame hash
   // provably misses. Oracle: O(n²) frame scan over the arithmetic
   // replay (q241's shape with the frame dimension).
@@ -3758,7 +3758,7 @@ object Pipeline {
   private val VideoGroups = 40
 
   private def q248(t: Tables): DataFrame = {
-    val withVid = Multimodal.withVideoRecutColumn(
+    val withVid = Multimodal.withVideoColumn(
       graft.Fanout(t.documents).select(col("doc_id")), "doc_id",
       VideoGroups)
     val fps = Multimodal.decodeVideoFrameAHashes(withVid, "media",
@@ -4755,7 +4755,7 @@ object Pipeline {
        |SELECT doc_id, w AS img_w, h AS img_h, ah_hi, ah_lo FROM ah""".stripMargin
 
   private def q235(t: Tables): DataFrame = {
-    val withImg = Multimodal.withImageVariantColumn(
+    val withImg = Multimodal.withImageColumn(
       graft.Fanout(t.documents).select(col("doc_id")), "doc_id", AHashGroups)
     val hashes = Multimodal.decodeImageAHash(withImg, "media")
       .select(col("doc_id").as("id"), col("ah_hi"), col("ah_lo"))
@@ -4786,7 +4786,7 @@ object Pipeline {
 
   private def ahashFingerprints(t: Tables, pred: Column): DataFrame =
     Multimodal.decodeImageAHash(
-      Multimodal.withImageVariantColumn(
+      Multimodal.withImageColumn(
         graft.Fanout(t.documents.filter(pred)).select(col("doc_id")),
         "doc_id", AHashGroups), "media")
       .select(col("doc_id").as("id"), col("ah_hi"), col("ah_lo"))

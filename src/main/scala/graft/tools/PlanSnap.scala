@@ -18,8 +18,11 @@ import graft.{Engine, SparkEntry}
   *    whose final plans (e.g. a broadcast build side) depend on stage
   *    timing;
   *  - expression ids, lambda-variable suffixes, `plan_id`s, RDD ids,
-  *    source line numbers (the `localCheckpoint` call sites) and the
-  *    [[graft.RunCache]] directory's name are masked.
+  *    closure objects (a `MapPartitions` function), source line numbers
+  *    (the `localCheckpoint` call sites), the [[graft.RunCache]]
+  *    directory's name and the sequence number ending each artifact's
+  *    name in it are masked, so a dump does not depend on which queries
+  *    ran before it.
   *
   * Usage: sbt "runMain graft.tools.PlanSnap <outDir> <suffix> <q1,q2,...>"
   * (one query per number, [[QuerySelect]]) with SPARK_GRAFT_SF_DIR
@@ -67,7 +70,9 @@ object PlanSnap {
     "\\b(lambda \\w+?)_\\d+" -> "$1_N", // lambda-variable suffixes
     "plan_id=\\d+" -> "plan_id=N",
     "RDD\\[\\d+\\]" -> "RDD[N]",
+    "\\$Lambda\\$\\d+/0x\\p{XDigit}+@\\p{XDigit}+" -> "\\$Lambda\\$N", // closures
     "graft_run_\\d+" -> "graft_run_N", // the per-JVM artifact cache dir
+    "(graft_run_N/[^/\\s]*)_\\d+" -> "$1_N", // an artifact's sequence number
     "(\\w+\\.(?:scala|java)):\\d+" -> "$1:N") // call-site lines
 
   private def masked(plan: String): String =

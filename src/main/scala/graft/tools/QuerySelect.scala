@@ -19,4 +19,10 @@ private[graft] object QuerySelect {
       hit.get
     }
   }
+
+  /** The keys `SPARK_GRAFT_ONLY` selects (the dev filter of [[graft.Bench]]
+    * and [[graft.Verify]]), or None when it is unset: the full registry.
+    */
+  def fromEnv(): Option[Set[String]] =
+    sys.env.get("SPARK_GRAFT_ONLY").map(apply(_).toSet)
 }

@@ -311,7 +311,7 @@ class DedupSpec extends AnyFunSuite {
   test("aHash index lifecycle: build+ingest ≡ brute force; replay/compact/delete invariants; beforeBatch") {
     val ids = spark.range(0, 60).select($"id".as("doc_id"))
     val fps = Multimodal.decodeImageAHash(
-      Multimodal.withImageVariantColumn(ids, "doc_id", groups = 8), "media")
+      Multimodal.withImageColumn(ids, "doc_id", groups = 8), "media")
       .select($"doc_id".as("id"), $"ah_hi", $"ah_lo")
     val all = fps.as[(Long, Long, Long)].collect()
     def brute(store: Set[Long], probes: Set[Long]) = (for {

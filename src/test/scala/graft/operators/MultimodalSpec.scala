@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -285,9 +286,9 @@ class MultimodalSpec extends AnyFunSuite {
     // ids 7, 47, 127 share base 7; 47 (47/40 = 1) and 127 (127/40 = 3)
     // are odd-class — identical to each other, differing from the base
     // only at (3w/8, 3h/8)
-    val base = ImageCodec.synthVariant(7L, groups)
-    val v1 = ImageCodec.synthVariant(47L, groups)
-    val v2 = ImageCodec.synthVariant(127L, groups)
+    val base = ImageCodec.synthImage(7L, groups)
+    val v1 = ImageCodec.synthImage(47L, groups)
+    val v2 = ImageCodec.synthImage(127L, groups)
     val (w, h) = (base.getWidth, base.getHeight)
     assert((0 until w).forall(x => (0 until h).forall(y =>
       v1.getRGB(x, y) == v2.getRGB(x, y))))
@@ -301,6 +302,12 @@ class MultimodalSpec extends AnyFunSuite {
     val (vh, vl) = ImageCodec.averageHash(v1)
     val ham = java.lang.Long.bitCount(bh ^ vh) + java.lang.Long.bitCount(bl ^ vl)
     assert(ham >= 1 && ham <= 8, s"hamming $ham")
+    // the even classes of a family are the plain image of their base
+    def pixels(img: java.awt.image.BufferedImage) =
+      img.getRGB(0, 0, img.getWidth, img.getHeight, null, 0, img.getWidth).toSeq
+    for (g <- Seq(7, groups); id <- 0L until 200L if (id / g) % 2 == 0)
+      assert(pixels(ImageCodec.synthImage(id, g)) ==
+        pixels(ImageCodec.synthImage(id % g)), s"id $id groups $g")
   }
 
   test("AudioCodec: synthWav round-trips through the real container; energy-delta hash reimplementation; variant = one clamped sample") {
@@ -324,9 +331,9 @@ class MultimodalSpec extends AnyFunSuite {
     // variant: same-class identical; odd class differs from base at exactly
     // sample n/2, and the fingerprint moves by at most 2 bits
     val groups = 8
-    val Some((_, _, base)) = HeaderCodec.wavPcm16(AudioCodec.synthWavVariant(3L, groups))
-    val Some((_, _, v1)) = HeaderCodec.wavPcm16(AudioCodec.synthWavVariant(11L, groups))
-    val Some((_, _, v2)) = HeaderCodec.wavPcm16(AudioCodec.synthWavVariant(27L, groups))
+    val Some((_, _, base)) = HeaderCodec.wavPcm16(AudioCodec.synthWav(3L, groups))
+    val Some((_, _, v1)) = HeaderCodec.wavPcm16(AudioCodec.synthWav(11L, groups))
+    val Some((_, _, v2)) = HeaderCodec.wavPcm16(AudioCodec.synthWav(27L, groups))
     assert(v1.toSeq == v2.toSeq)
     val diffs = base.indices.filter(k => base(k) != v1(k))
     assert(diffs == Seq(base.length / 2) || diffs.isEmpty) // equal if already 32767
@@ -334,6 +341,10 @@ class MultimodalSpec extends AnyFunSuite {
     val (bh, bl) = AudioCodec.energyDeltaHash(base)
     val (vh, vl) = AudioCodec.energyDeltaHash(v1)
     assert(java.lang.Long.bitCount(bh ^ vh) + java.lang.Long.bitCount(bl ^ vl) <= 2)
+    // the even classes of a family are the plain clip of their base
+    for (g <- Seq(groups, 7, 40); id <- 0L until 200L if (id / g) % 2 == 0)
+      assert(AudioCodec.synthWav(id, g).sameElements(AudioCodec.synthWav(id % g)),
+        s"id $id groups $g")
     // distributed fingerprints: non-PCM and null payloads yield nulls
     val rows = Seq((1L, AudioCodec.synthWav(1L)), (2L, "junk".getBytes),
       (3L, null.asInstanceOf[Array[Byte]])).toDF("id", "media")
@@ -368,6 +379,17 @@ class MultimodalSpec extends AnyFunSuite {
       assert(r.getLong(5) == ehi && r.getLong(6) == elo, s"id $id")
     }
     assert(got(2L).isNullAt(1) && got(2L).isNullAt(5))
+    // the keyframe hash is the every-frame hash at frame n_frames / 2
+    val frames = Multimodal.decodeVideoFrameAHashes(rows, "media", 1)
+      .select($"id", $"n_frames", $"frame_idx", $"fr_hi", $"fr_lo")
+      .collect()
+    for (id <- Seq(7L, 41L)) {
+      val mid = frames.filter(f => f.getLong(0) == id &&
+        f.getInt(2) == f.getInt(1) / 2)
+      assert(mid.length == 1, s"id $id")
+      assert(mid(0).getLong(3) == got(id).getLong(5) &&
+        mid(0).getLong(4) == got(id).getLong(6), s"id $id")
+    }
   }
 
   test("VideoCodec: y4m parse round-trip; corrupt containers rejected; sampled features exact") {
@@ -401,6 +423,10 @@ class MultimodalSpec extends AnyFunSuite {
       assert(VideoCodec.parseY4m(withCspace(c)).isEmpty, c)
     for (c <- Seq("C420", "C420jpeg", "C420mpeg2", "C420paldv"))
       assert(VideoCodec.parseY4m(withCspace(c)).nonEmpty, c)
+    // the even classes of a re-cut family are the plain clip of their base
+    for (g <- Seq(7, 40); id <- 0L until 200L if (id / g) % 2 == 0)
+      assert(VideoCodec.synthY4m(id, g).sameElements(VideoCodec.synthY4m(id % g)),
+        s"id $id groups $g")
     // an absent C tag defaults to 4:2:0 per the y4m spec
     val nl = good.indexOf('\n'.toByte)
     val hdrNoC = new String(good, 0, nl, "US-ASCII").replace(" C420", "")
@@ -424,6 +450,47 @@ class MultimodalSpec extends AnyFunSuite {
     for (every <- Seq(1, 2); id <- Seq(3L, 10L)) {
       val (nf, ns, sum) = expected(id, every)
       assert(feats(every)(id) == ((id, nf, ns, sum)), s"id $id every $every")
+    }
+  }
+
+  test("every decoder quarantines null and garbage payloads: inputs pass through, documented row") {
+    val garbage = "garbage".getBytes("US-ASCII")
+    val junk = Seq((1L, null.asInstanceOf[Array[Byte]]), (2L, garbage))
+      .toDF("id", "media")
+    def nulls(n: Int): Seq[Any] = Seq.fill(n)(null)
+    // (decoder, its appended columns for the null payload, for the garbage one)
+    val cases: Seq[(String, DataFrame => DataFrame, Seq[Any], Seq[Any])] = Seq(
+      ("decodeFeatures", Multimodal.decodeFeatures(_, "media"),
+        Seq(null, 0L, 0, 0),
+        Multimodal.StubCodec.decode(garbage).productIterator.toSeq),
+      ("decodeHeaders", Multimodal.decodeHeaders(_, "media"),
+        Seq("null", 0, 0, 0, 0), Seq("unknown", 0, 0, 0, 0)),
+      ("decodeImageFeatures", Multimodal.decodeImageFeatures(_, "media"),
+        nulls(7), nulls(7)),
+      ("decodeImageFeatures resized", Multimodal.decodeImageFeatures(_, "media",
+        resizeTo = Some((16, 16))), nulls(7), nulls(7)),
+      ("decodeImageAHash", Multimodal.decodeImageAHash(_, "media"),
+        nulls(4), nulls(4)),
+      ("decodeAudioFingerprint", Multimodal.decodeAudioFingerprint(_, "media"),
+        nulls(3), nulls(3)),
+      ("decodeWavAudio", Multimodal.decodeWavAudio(_, "media"),
+        nulls(6), nulls(6)),
+      ("decodeVideoFeatures", Multimodal.decodeVideoFeatures(_, "media", 2),
+        nulls(6), nulls(6)),
+      ("decodeVideoKeyframeAHash", Multimodal.decodeVideoKeyframeAHash(_, "media"),
+        nulls(6), nulls(6)),
+      ("decodeVideoFrameAHashes", Multimodal.decodeVideoFrameAHashes(_, "media", 2),
+        nulls(6), nulls(6)))
+    for ((name, decode, onNull, onGarbage) <- cases) {
+      val out = decode(junk)
+      assert(out.schema.fieldNames.take(2).toSeq == Seq("id", "media"), name)
+      val rows = out.collect()
+      assert(rows.length == 2, name) // one row per input, never dropped
+      val byId = rows.map(r => r.getLong(0) -> r.toSeq.drop(1)).toMap
+      assert(byId(1L).head == null, name)
+      assert(byId(2L).head.asInstanceOf[Array[Byte]].sameElements(garbage), name)
+      assert(byId(1L).tail == onNull, name)
+      assert(byId(2L).tail == onGarbage, name)
     }
   }
 }

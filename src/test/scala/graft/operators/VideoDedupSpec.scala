@@ -23,7 +23,7 @@ class VideoDedupSpec extends AnyFunSuite {
   private def frameHashes(ids: Long*) = {
     val df = ids.toSeq.toDF("doc_id")
     Multimodal.decodeVideoFrameAHashes(
-      Multimodal.withVideoRecutColumn(df, "doc_id", G), "media", 2)
+      Multimodal.withVideoColumn(df, "doc_id", G), "media", 2)
       .select($"doc_id", $"frame_idx", $"fr_hi", $"fr_lo")
       .as[(Long, Int, Long, Long)].collect()
       .map(r => (r._1, r._2) -> ((r._3, r._4))).toMap
@@ -44,7 +44,7 @@ class VideoDedupSpec extends AnyFunSuite {
 
   test("middle-keyframe hash MISSES the re-cut pair; multi-keyframe catches it") {
     val df = Seq(idA, idB).toDF("doc_id")
-    val vids = Multimodal.withVideoRecutColumn(df, "doc_id", G)
+    val vids = Multimodal.withVideoColumn(df, "doc_id", G)
     // q241's reduction: one hash per clip, middle frame — different
     // content frames (3 vs 5), hamming far beyond the threshold
     val mids = Multimodal.decodeVideoKeyframeAHash(vids, "media")
