@@ -372,8 +372,9 @@ object NativeKernels {
   }
 
   /** Byte-level [[bpeEncode]]: initial symbols are the word's UTF-8 BYTES
-    * as uppercase hex pairs (the [[graft.operators.TextOps.bpeMergesByteLevel]]
-    * symbolization — a closed 256-symbol base alphabet), then the same
+    * as uppercase hex pairs (the byte-level
+    * [[graft.operators.TextOps.bpeMerges]] symbolization — a closed
+    * 256-symbol base alphabet), then the same
     * exact greedy merge fold.
     */
   private val HexDigits = "0123456789ABCDEF".toCharArray

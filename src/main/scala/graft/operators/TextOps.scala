@@ -47,6 +47,28 @@ object TextOps {
     */
   val byteLevelTokenPattern = """[\p{L}]+|[\p{N}]+|[^\p{L}\p{N}\s]"""
 
+  /** The pre-tokens of `text` every subword tokenizer starts from: the
+    * lower-cased [[byteLevelTokenPattern]] matches with `byteLevel`, else
+    * the whitespace words ([[wordsOf]]).
+    */
+  private[operators] def pretokens(text: Column, byteLevel: Boolean): Column =
+    if (byteLevel)
+      regexp_extract_all(lower(text), lit(byteLevelTokenPattern), lit(0))
+    else wordsOf(text)
+
+  /** The persisted pre-token frame (keys…, ws) of `docs` — the input of
+    * [[tokenCounts]], [[roundTrip]] and [[tokenArrays]], and with
+    * `byteLevel` of [[bpeMergesByteLevelFromPretokens]]. It persists by
+    * the q245 persist-boundary rule: the distinct-word encode and the
+    * per-doc rejoin both read it, so unpersisted the pre-tokenize (the
+    * regex pass is expensive per row) ran twice per execution.
+    */
+  def pretokenize(docs: DataFrame, keys: Seq[Column], text: Column,
+      byteLevel: Boolean): DataFrame = {
+    import graft.CacheScope.ScopedPersist
+    docs.select(keys :+ pretokens(text, byteLevel).as("ws"): _*).persistScoped()
+  }
+
   /** Per-language stopword alternations for the n-gram/stopword language-ID
     * heuristic. `zh` is detected by CJK codepoint presence instead.
     */
@@ -347,6 +369,15 @@ object TextOps {
     * driver. Merge application is the encoders' exact greedy
     * left-to-right stack fold ([[graft.functions.NativeKernels.bpeMergeStep]]).
     *
+    * `byteLevel` selects the production tokenizer boundary (GPT-2, Llama):
+    * pre-tokens come from the regex splitter ([[byteLevelTokenPattern]])
+    * instead of bare whitespace, and every pre-token starts from its UTF-8
+    * BYTES instead of its characters, so any string in any script
+    * tokenizes with a closed 256-symbol base alphabet and no OOV symbol
+    * can exist. Symbols are hex byte pairs ("68", "C3", …); a merged
+    * symbol is the concatenation of its parts' hex, so the merge table is
+    * engine-neutral text (the oracle replays `hex()` of the same bytes).
+    *
     * Determinism: pair counts are exact integer sums of word frequencies;
     * the argmax order (cnt desc, sym_a, sym_b) compares symbols as UTF-8
     * bytes (Spark's string sort order); both the order and the fold are
@@ -354,65 +385,37 @@ object TextOps {
     * fold via list_reduce over singleton lists).
     */
   def bpeMerges(docs: DataFrame, text: Column, rounds: Int,
-      requireFull: Boolean = false): DataFrame =
-    mergeTable(docs.sparkSession, trainBpe(
-      docs
-        .select(text.as("__t"))
-        .select(explode(expr(
-          "filter(split(lower(__t), '\\\\s+'), x -> length(x) > 0)")).as("w"))
-        .groupBy(col("w")).agg(count(lit(1)).as("n"))
-        .select(expr(
-          "transform(sequence(1, length(w)), i -> substring(w, i, 1))").as("syms"),
-          col("n")),
-      rounds, requireFull))
+      requireFull: Boolean = false, byteLevel: Boolean = false): DataFrame =
+    mergeTable(docs.sparkSession, trainBpe(wordSymbols(
+      docs.select(text.as("__t"))
+        .select(explode(pretokens(col("__t"), byteLevel)).as("w")),
+      byteLevel), rounds, requireFull))
 
-  /** BYTE-LEVEL BPE vocabulary induction — the production tokenizer
-    * boundary (GPT-2, Llama): pre-tokenize with the regex splitter
-    * ([[byteLevelTokenPattern]] — unicode letter runs, digit runs, single
-    * punctuation)
-    * instead of bare whitespace, and start every token from its UTF-8
-    * BYTES instead of its characters, so any string in any script
-    * tokenizes with a closed 256-symbol base alphabet and no OOV symbol
-    * can ever exist. Symbols are hex byte pairs ("68", "c3", …); a merged
-    * symbol is the concatenation of its parts' hex, so the merge table is
-    * engine-neutral text (the oracle replays `hex()` of the same bytes).
-    * The merge machinery — exact integer pair counts, (cnt desc, sym_a,
-    * sym_b) argmax, greedy left-to-right fold — is [[bpeMerges]]'s own
-    * loop, shared verbatim.
-    */
-  def bpeMergesByteLevel(docs: DataFrame, text: Column, rounds: Int,
-      requireFull: Boolean = false): DataFrame =
-    mergeTable(docs.sparkSession, trainBpe(
-      byteLevelWordCounts(docs
-        .select(text.as("__t"))
-        .select(explode(regexp_extract_all(lower(col("__t")),
-          lit(byteLevelTokenPattern), lit(0))).as("w"))),
-      rounds, requireFull))
-
-  /** [[bpeMergesByteLevel]] over an ALREADY pre-tokenized frame — one
-    * column `w`, one row per pre-token occurrence — returning the ordered
-    * (sym_a, sym_b) merge list. The shard-packing
-    * family tokenizes the same corpus again right after training, so
-    * deriving both the trainer's word counts and the packing tokenize
-    * from ONE persisted regex pass (instead of two full-corpus regex
-    * passes) is the guide §1.2 "don't compute it twice" form; counts are
-    * identical by construction, so the learned merges are bit-identical.
+  /** Byte-level [[bpeMerges]] over a [[pretokenize]] frame, returning the
+    * ordered (sym_a, sym_b) merge list. The shard-packing family tokenizes
+    * the same corpus right after training, so the trainer's word counts
+    * and the packing tokenize both read ONE persisted regex pass instead
+    * of two (the guide §1.2 "don't compute it twice" form); the counts
+    * are identical by construction, so the learned merges are too.
     */
   def bpeMergesByteLevelFromPretokens(pre: DataFrame, rounds: Int,
       requireFull: Boolean = false): Seq[(String, String)] =
-    trainBpe(byteLevelWordCounts(pre), rounds, requireFull)
-      .map(m => (m._2, m._3))
+    trainBpe(wordSymbols(pre.select(explode(col("ws")).as("w")),
+      byteLevel = true), rounds, requireFull).map(m => (m._2, m._3))
 
-  /** The byte-level (syms, n) word table: hex(w) = hex of the word's UTF-8
-    * bytes (Spark hex-of-string semantics, uppercase — DuckDB's
-    * hex(varchar) matches both); symbols = its 2-char slices.
+  /** The trainer's (syms, n) word table of a pre-token frame (column `w`,
+    * one row per occurrence): the word's characters, or with `byteLevel`
+    * the uppercase hex pairs of its UTF-8 bytes (Spark's hex-of-string;
+    * DuckDB's hex(varchar) matches both).
     */
-  private def byteLevelWordCounts(pre: DataFrame): DataFrame =
-    pre
+  private def wordSymbols(words: DataFrame, byteLevel: Boolean): DataFrame =
+    words
       .groupBy(col("w")).agg(count(lit(1)).as("n"))
-      .select(expr(
-        """transform(sequence(1, length(hex(w)) div 2),
-          |  i -> substring(hex(w), 2 * i - 1, 2))""".stripMargin).as("syms"),
+      .select(expr(if (byteLevel)
+          """transform(sequence(1, length(hex(w)) div 2),
+            |  i -> substring(hex(w), 2 * i - 1, 2))""".stripMargin
+        else "transform(sequence(1, length(w)), i -> substring(w, i, 1))")
+        .as("syms"),
         col("n"))
 
   private def mergeTable(spark: SparkSession,
@@ -501,8 +504,7 @@ object TextOps {
   def wordPieceWordTable(docs: DataFrame, text: Column): DataFrame =
     docs
       .select(text.as("__t"))
-      .select(explode(expr(
-        "filter(split(lower(__t), '\\\\s+'), x -> length(x) > 0)")).as("w"))
+      .select(explode(pretokens(col("__t"), byteLevel = false)).as("w"))
       .groupBy(col("w")).agg(count(lit(1)).as("n"))
       .select(col("w"), expr(
         """transform(sequence(1, length(w)),
@@ -578,41 +580,24 @@ object TextOps {
     (init ++ merges.map { case (a, b) => wpMergedSym(a, b) }).distinct
   }
 
-  /** Tokenize a word set against a WordPiece vocabulary with BERT's
-    * greedy longest-match-first rule — NOT the trainer's merge order:
-    * serving from the flat vocabulary is WordPiece's defining difference
-    * from BPE, whose tokenizer must replay merges in sequence. The vocab
-    * rides as expression data through the native
-    * [[graft.functions.WordPieceEncodeExpr]] (one narrow tree node, zero
-    * shuffles); a word unsegmentable under the vocabulary becomes
-    * `[UNK]`. Input: a frame with column `w`; output: (w, toks).
-    */
-  def wordPieceTokens(words: DataFrame, vocab: Seq[String]): DataFrame =
-    words.select(col("w"),
-      graft.functions.wordpiece_encode(col("w"), vocab).as("toks"))
-
   /** Per-doc WordPiece counts (id, n_tokens, n_unk) of a corpus under a
     * stored vocabulary ([[loadWordPieceVocab]]): each distinct
-    * lowercased whitespace word tokenizes once ([[wordPieceTokens]]), the
-    * counts join back onto the exploded docs and sum per doc. An
-    * unsegmentable word counts as ONE `[UNK]` token and is tallied in
-    * n_unk: a rising n_unk is the drift signal that triggers a
-    * retrain-and-swap, never an in-stream vocabulary update. EVERY input
-    * doc gets a row — a doc with no words (empty or whitespace text)
-    * reports (id, 0, 0) rather than a silent gap.
+    * lowercased whitespace word tokenizes once (the pass under
+    * [[tokenCounts]]), and the counts sum per doc. An unsegmentable word
+    * counts as ONE `[UNK]` token and is tallied in n_unk: a rising n_unk
+    * is the drift signal that triggers a retrain-and-swap, never an
+    * in-stream vocabulary update. EVERY input doc gets a row — a doc with
+    * no words (empty or whitespace text) reports (id, 0, 0) rather than a
+    * silent gap.
     */
   def wordPieceDocCounts(docs: DataFrame, id: Column, text: Column,
       vocab: Seq[String]): DataFrame = {
-    val dw = docs.select(id.as("id"), text.as("__t"))
-      .select(col("id"), explode(expr(
-        "filter(split(lower(__t), '\\\\s+'), x -> length(x) > 0)")).as("w"))
-    val wt = wordPieceTokens(dw.select(col("w")).distinct(), vocab)
-      .select(col("w"), size(col("toks")).cast("long").as("nt"),
-        when(element_at(col("toks"), 1) === lit("[UNK]"), 1L).otherwise(0L)
-          .as("unk"))
-    val perDoc = dw.join(wt, Seq("w"))
-      .groupBy(col("id")).agg(sum(col("nt")).as("nt"),
-        sum(col("unk")).as("unk"))
+    val perDoc = distinctWordPass(
+        docs.select(id.as("id"), wordsOf(text).as("ws")),
+        Encoder.WordPiece(vocab), positions = false)(toks =>
+      Seq(size(toks).cast("long").as("nt"),
+        when(element_at(toks, 1) === lit("[UNK]"), 1L).otherwise(0L).as("unk")))(
+      sum(col("nt")).as("nt"), sum(col("unk")).as("unk"))
     docs.select(id.as("id"))
       .join(perDoc, Seq("id"), "left")
       .select(col("id"), coalesce(col("nt"), lit(0L)).as("n_tokens"),
@@ -631,46 +616,6 @@ object TextOps {
       concat_ws("", transform(slice(toks, lit(2), size(toks) - 1),
         x => when(x.startsWith("##"), x.substr(lit(3), length(x)))
           .otherwise(x))))
-
-  /** Tokenizer INTEGRITY gate for the WordPiece family —
-    * [[bpeRoundTripByteLevel]]'s contract on greedy longest-match-first
-    * serving: every distinct lowercased whitespace word encodes through
-    * the flat vocabulary and decodes back ([[wordPieceDetokenize]]); per
-    * document, reports the word count, round-trip mismatches (an `[UNK]`
-    * is a mismatch unless the word IS the unk literal), and the md5 of
-    * the position-ordered decoded stream — equal to the original word
-    * stream's md5 iff the round trip is exact (the hash-compare oracle
-    * shape; the oracle computes the md5 from the ORIGINAL words and
-    * asserts 0 mismatches).
-    *
-    * 100 TB posture: encode+decode run once per DISTINCT word; the
-    * corpus side is one posexplode + equi-join + per-doc sorted fold.
-    *
-    * @return (id, n_pretokens, n_mismatch, rt_md5), docs with ≥1 word only
-    */
-  def wordPieceRoundTrip(docs: DataFrame, id: Column, text: Column,
-      vocab: Seq[String]): DataFrame = {
-    import graft.CacheScope.ScopedPersist
-    // split ONCE and persist (q245 persist-boundary rule): the vocab
-    // derivation and the per-doc rejoin both read the word arrays
-    val wordArrs = docs.select(id.as("id"), text.as("__t"))
-      .select(col("id"),
-        expr("filter(split(lower(__t), '\\\\s+'), x -> length(x) > 0)")
-          .as("__ws"))
-      .persistScoped()
-    val dw = wordArrs.select(col("id"),
-      posexplode(col("__ws")).as(Seq("pos", "w")))
-    val dec = wordPieceTokens(dw.select(col("w")).distinct(), vocab)
-      .select(col("w"), wordPieceDetokenize(col("toks")).as("dec"))
-    dw
-      .join(dec, "w")
-      .groupBy(col("id"))
-      .agg(count(lit(1)).as("n_pretokens"),
-        sum(when(col("dec") =!= col("w"), 1L).otherwise(0L)).as("n_mismatch"),
-        md5(expr(
-          "array_join(transform(sort_array(collect_list(struct(pos, dec))), x -> x.dec), '')"))
-          .as("rt_md5"))
-  }
 
   /** Persist a trained WordPiece tokenizer to `dir` — `vocab/` (the flat
     * serving vocabulary, one symbol per row with a stable `ord` for
@@ -695,33 +640,84 @@ object TextOps {
   }
 
   /** Load a [[writeWordPieceModel]] vocabulary — the bounded driver-side
-    * artifact [[wordPieceTokens]] ships as expression data.
+    * artifact [[Encoder.WordPiece]] ships as expression data.
     */
   def loadWordPieceVocab(spark: org.apache.spark.sql.SparkSession,
       dir: String): Seq[String] =
     spark.read.parquet(s"$dir/vocab").orderBy(col("ord"))
       .select(col("sym")).collect().map(_.getString(0)).toSeq
 
-  /** Tokenize a word set with a learned merge list ([[bpeMerges]] output):
-    * per word, start from characters and apply each merge rule IN ORDER
-    * with the same exact greedy left-to-right stack fold the trainer used.
-    * Input: a frame with column `w`; output: (w, toks).
-    *
-    * The merge table rides as expression DATA through the native
-    * [[graft.functions.BpeEncodeExpr]] — ONE narrow tree node looping the
-    * merges at runtime, zero shuffles, plan depth constant in |merges|.
-    * (The previous form chained one `aggregate(...)` projection per rule —
-    * correct, but its |merges|-deep plan made a production 32k-merge
-    * vocabulary unplannable; [[bpeVocabTokensChained]] keeps that form as
-    * the spec's bit-identity witness.)
+  /** A trained subword encoder: the one part of [[encodeWords]],
+    * [[tokenCounts]], [[roundTrip]] and [[tokenArrays]] that differs per
+    * tokenizer family. `toks` is the token array of the pre-token column
+    * `w`; `text(toks)` decodes a token array back to its pre-token (used
+    * by [[roundTrip]]). Each model rides as expression DATA through one
+    * native tree node ([[graft.functions.NativeExprs]]): zero shuffles,
+    * plan depth constant in the model's size.
     */
-  def bpeVocabTokens(words: DataFrame, merges: Seq[(String, String)]): DataFrame =
-    words.select(col("w"), graft.functions.bpe_encode(col("w"), merges).as("toks"))
+  sealed trait Encoder {
+    private[operators] def toks: Column
+    private[operators] def text(toks: Column): Column
+  }
+
+  object Encoder {
+
+    /** BPE under an ordered merge list ([[bpeMerges]] output): per word,
+      * start from its characters — or with `byteLevel` its UTF-8 bytes as
+      * hex pairs — and apply each merge rule IN ORDER with the trainer's
+      * exact greedy left-to-right stack fold. (The chained form,
+      * [[bpeVocabTokensChained]], keeps a |merges|-deep plan as the spec's
+      * bit-identity witness.)
+      */
+    final case class Bpe(merges: Seq[(String, String)], byteLevel: Boolean)
+        extends Encoder {
+      private[operators] def toks: Column =
+        graft.functions.bpe_encode(col("w"), merges, byteLevel)
+      private[operators] def text(toks: Column): Column =
+        if (byteLevel) bpeDetokenizeByteLevel(toks) else concat_ws("", toks)
+    }
+
+    /** WordPiece under a flat vocabulary ([[wordPieceVocab]]) with BERT's
+      * greedy longest-match-first rule — NOT the trainer's merge order:
+      * serving from the flat vocabulary is WordPiece's defining difference
+      * from BPE. A word unsegmentable under the vocabulary becomes `[UNK]`.
+      */
+    final case class WordPiece(vocab: Seq[String]) extends Encoder {
+      private[operators] def toks: Column =
+        graft.functions.wordpiece_encode(col("w"), vocab)
+      private[operators] def text(toks: Column): Column =
+        wordPieceDetokenize(toks)
+    }
+
+    /** Unigram-LM Viterbi segmentation under a trained (piece, score)
+      * model ([[graft.operators.Unigram.loadModel]]). With `byteLevel`
+      * the pre-token first maps to one code point per UTF-8 byte
+      * ([[graft.operators.Unigram.byteChars]]), and decoding inverts that
+      * map after concatenating the pieces (Viterbi SEGMENTS the word).
+      */
+    final case class Unigram(model: Seq[(String, Long)], byteLevel: Boolean,
+        maxPieceLen: Int = graft.operators.Unigram.MaxPieceLen)
+        extends Encoder {
+      private[operators] def toks: Column =
+        graft.functions.unigram_encode(
+          if (byteLevel) graft.operators.Unigram.byteChars else col("w"),
+          model, maxPieceLen, graft.operators.Unigram.UnkScoreMicro)
+      private[operators] def text(toks: Column): Column =
+        if (byteLevel)
+          graft.operators.Unigram.byteCharsToStringCol(concat_ws("", toks))
+        else concat_ws("", toks)
+    }
+  }
+
+  /** Tokenize a word set (column `w`) with `enc`: (w, toks). */
+  def encodeWords(words: DataFrame, enc: Encoder): DataFrame =
+    words.select(col("w"), enc.toks.as("toks"))
 
   /** The composable chained-`aggregate` tokenizer — one codegen'd fold per
     * merge rule. Retained as the independent witness the BpeEncodeSpec
-    * pins [[bpeVocabTokens]] against (bit-identical outputs); plan depth
-    * is linear in |merges|, so production use goes through the native form.
+    * pins [[encodeWords]] with [[Encoder.Bpe]] against (bit-identical
+    * outputs); plan depth is linear in |merges|, so production use goes
+    * through the native form.
     */
   private[graft] def bpeVocabTokensChained(words: DataFrame,
       merges: Seq[(String, String)]): DataFrame = {
@@ -739,8 +735,8 @@ object TextOps {
     v
   }
 
-  /** Persist a learned merge table ([[bpeMerges]]/[[bpeMergesByteLevel]]
-    * output) to `dir/merges` — the model-artifact pattern
+  /** Persist a learned merge table ([[bpeMerges]] output, either
+    * boundary) to `dir/merges` — the model-artifact pattern
     * ([[writeLmModel]]/[[writeLinearModel]]) applied to the TOKENIZER:
     * train once, ship the merge list, tokenize forever. The table is
     * tiny (one row per merge rule) and loads driver-side into the
@@ -755,7 +751,7 @@ object TextOps {
   }
 
   /** Load a [[writeBpeModel]] artifact as the ordered merge list the
-    * appliers ([[bpeVocabTokens]]/[[bpeTokenCounts]]) consume. Bounded
+    * appliers ([[Encoder.Bpe]]) consume. Bounded
     * driver action: the merge table IS driver-sized by construction.
     */
   def loadBpeMerges(spark: org.apache.spark.sql.SparkSession,
@@ -804,7 +800,7 @@ object TextOps {
 
   /** Frozen (piece → id) vocabulary for a stored WordPiece model —
     * the BERT id convention: `[UNK]` takes id 0 (it IS a servable output
-    * of [[wordPieceTokens]], so the id map must cover it), then the
+    * of [[Encoder.WordPiece]], so the id map must cover it), then the
     * stored vocabulary entries follow their persisted `ord` at id 1..
     * ([[loadWordPieceVocab]]'s order). Duplicate strings keep the
     * smallest id (the map must be a function). Feed to
@@ -817,118 +813,76 @@ object TextOps {
     entries.groupBy(_._1).view.mapValues(_.map(_._2).min).toMap
   }
 
-  /** Per-document token counts under a learned BPE vocabulary — the
-    * data-prep-time application of [[bpeMerges]] (what decides sequence
-    * packing, token budgets and mixture weights). Returns (id, n_tokens).
-    *
-    * Scale design — tokenize the VOCAB, not the corpus: the distinct-word
-    * set is derived with one hash aggregate, the merge chain runs once
-    * per distinct word (a 10^9-occurrence word is tokenized once), and
-    * the per-word token counts join back onto the exploded corpus words —
-    * an equi-join on the word (AQE broadcasts the vocab side when it
-    * fits) followed by one per-doc sum. Exactly how production tokenizer
-    * pipelines amortize: cache per word, never re-merge per occurrence.
+  /** The distinct-word pass under [[tokenCounts]], [[roundTrip]],
+    * [[tokenArrays]] and [[wordPieceDocCounts]] — tokenize the VOCAB, not
+    * the corpus: over a (keys…, ws) frame, the distinct pre-tokens derive
+    * with one hash aggregate, each encodes ONCE (a 10^9-occurrence word is
+    * tokenized once) and `perWord` maps its `toks` to per-word columns;
+    * those join back onto the exploded corpus (an equi-join on `w`; AQE
+    * broadcasts the vocab side when it fits — with each pre-token's
+    * position `pos` when `positions`) and reduce per key with `agg`.
+    * Exactly how production tokenizer pipelines amortize: cache per word,
+    * never re-encode per occurrence. A key with no pre-tokens has no row.
     */
-  def bpeTokenCounts(docs: DataFrame, id: Column, text: Column,
-      merges: Seq[(String, String)]): DataFrame = {
-    import graft.CacheScope.ScopedPersist
-    // split ONCE and persist the word arrays (q245 persist-boundary rule)
-    // — both the distinct-word vocab and the corpus rejoin read them
-    val words = docs.select(id.as("id"), text.as("__t"))
-      .select(col("id"),
-        expr("filter(split(lower(__t), '\\\\s+'), x -> length(x) > 0)")
-          .as("__ws"))
-      .persistScoped()
-    val dw = words.select(col("id"), explode(col("__ws")).as("w"))
-    val vocab = bpeVocabTokens(dw.select(col("w")).distinct(), merges)
-      .select(col("w"), size(col("toks")).cast("long").as("nt"))
-    dw.join(vocab, "w")
-      .groupBy(col("id")).agg(sum(col("nt")).as("n_tokens"))
-  }
-
-  /** Per-document token counts under a BYTE-LEVEL vocabulary
-    * ([[bpeMergesByteLevel]] output) — the q157 shape at the production
-    * tokenizer boundary: distinct regex pre-tokens tokenize ONCE (the
-    * native `bpe_encode` in byte mode: UTF-8 bytes → hex-pair symbols →
-    * the same greedy fold), per-token counts join back onto the exploded
-    * corpus, one per-doc sum. Returns (id, n_tokens).
-    */
-  def bpeTokenCountsByteLevel(docs: DataFrame, id: Column, text: Column,
-      merges: Seq[(String, String)]): DataFrame = {
-    import graft.CacheScope.ScopedPersist
-    // pre-tokenize ONCE and persist the arrays (q245 persist-boundary
-    // rule): the token regex is expensive per row and feeds both the
-    // distinct-word vocab and the corpus rejoin — unpersisted, the full
-    // corpus paid the regex twice per execution
-    val words = docs.select(id.as("id"),
-      regexp_extract_all(lower(text), lit(byteLevelTokenPattern), lit(0))
-        .as("__ws"))
-      .persistScoped()
-    bpeTokenCountsByteLevelFromWords(words, merges)
-  }
-
-  /** [[bpeTokenCountsByteLevel]] over an already pre-tokenized (and
-    * persisted) `(id, __ws)` frame — lets a caller that ALSO trains the
-    * tokenizer share one regex pass across trainer and count
-    * (see [[bpeMergesByteLevelFromPretokens]]).
-    */
-  def bpeTokenCountsByteLevelFromWords(words: DataFrame,
-      merges: Seq[(String, String)]): DataFrame = {
-    val dw = words.select(col("id"), explode(col("__ws")).as("w"))
-    val vocab = dw.select(col("w")).distinct()
-      .select(col("w"),
-        size(graft.functions.bpe_encode(col("w"), merges, byteLevel = true))
-          .cast("long").as("nt"))
-    dw.join(vocab, "w")
-      .groupBy(col("id")).agg(sum(col("nt")).as("n_tokens"))
-  }
-
-  /** (source, doc_id, toks) per doc of a (source, doc_id, text) frame
-    * under byte-level `merges` — the corpus tokenize shared by every
-    * byte-BPE packing tail (q218/q222/q226/q230/q238/q251) and the shard
-    * export sinks. Tokens are in document order.
-    */
-  def byteTokDocs(docs: DataFrame,
-      merges: Seq[(String, String)]): DataFrame =
-    byteTokDocsFromWords(byteTokWords(docs), merges)
-
-  /** The persisted one-regex-pass pre-token frame (source, doc_id, ws) of
-    * a (source, doc_id, text) frame — built once per query and shared
-    * between the in-query BPE trainer ([[bpeMergesByteLevelFromPretokens]],
-    * whose only jobs are the word-count aggregate it collects) and the
-    * packing tokenize ([[byteTokDocsFromWords]]). It persists by the q245
-    * persist-boundary rule: the byte-level token regex is expensive per
-    * row and feeds BOTH the distinct-word vocab and the per-doc rejoin, so
-    * unpersisted the regex pass ran twice per execution (at sf0.1 the
-    * packing tail carried ~45 task-seconds, a large share of it the
-    * duplicated pre-tokenize).
-    */
-  def byteTokWords(docs: DataFrame): DataFrame = {
-    import graft.CacheScope.ScopedPersist
-    docs.select(col("source"), col("doc_id"),
-      regexp_extract_all(lower(col("text")),
-        lit(byteLevelTokenPattern), lit(0)).as("ws"))
-      .persistScoped()
-  }
-
-  /** [[byteTokDocs]] over a [[byteTokWords]] frame: each distinct
-    * pre-token encodes once, then joins back and reassembles per doc in
-    * position order.
-    */
-  def byteTokDocsFromWords(words: DataFrame,
-      merges: Seq[(String, String)]): DataFrame = {
-    val dw = words.select(col("source"), col("doc_id"),
-      posexplode(col("ws")).as(Seq("pos", "w")))
+  private def distinctWordPass(pre: DataFrame, enc: Encoder,
+      positions: Boolean)(perWord: Column => Seq[Column])(
+      agg: Column*): DataFrame = {
+    val keys = pre.columns.toSeq.filter(_ != "ws").map(col)
+    val dw = pre.select(keys :+ (if (positions)
+      posexplode(col("ws")).as(Seq("pos", "w"))
+    else explode(col("ws")).as("w")): _*)
     val wt = dw.select(col("w")).distinct()
-      .select(col("w"),
-        graft.functions.bpe_encode(col("w"), merges, byteLevel = true)
-          .as("toks"))
-    dw.join(wt, Seq("w"))
-      .groupBy(col("source"), col("doc_id"))
-      .agg(expr(
-        "flatten(transform(sort_array(collect_list(struct(pos, toks))), x -> x.toks))")
-        .as("toks"))
+      .select(col("w"), enc.toks.as("toks"))
+      .select(col("w") +: perWord(col("toks")): _*)
+    dw.join(wt, "w").groupBy(keys: _*).agg(agg.head, agg.tail: _*)
   }
+
+  /** The position-ordered per-key array of a per-word column `c`. */
+  private def inPosOrder(c: String): String =
+    s"transform(sort_array(collect_list(struct(pos, $c))), x -> x.$c)"
+
+  /** Per-key token counts (keys…, n_tokens) of a (keys…, ws) pre-token
+    * frame ([[pretokenize]]) under `enc` — the data-prep-time application
+    * of a trained tokenizer (what decides sequence packing, token budgets
+    * and mixture weights).
+    */
+  def tokenCounts(pre: DataFrame, enc: Encoder): DataFrame =
+    distinctWordPass(pre, enc, positions = false)(toks =>
+      Seq(size(toks).cast("long").as("nt")))(sum(col("nt")).as("n_tokens"))
+
+  /** Tokenizer INTEGRITY check — encode∘decode ≡ identity over the real
+    * corpus (the deploy gate a tokenizer artifact ships behind; a lossy
+    * tokenizer silently corrupts every downstream token count and packed
+    * sequence): every distinct pre-token of a [[pretokenize]] frame
+    * encodes through `enc` and decodes back; per key, reports the
+    * pre-token count, the number of pre-tokens whose round trip
+    * mismatched (a WordPiece `[UNK]` is a mismatch unless the word IS the
+    * unk literal), and the md5 of the POSITION-ORDERED concatenation of
+    * the decoded pre-tokens — equal to the md5 of the original pre-token
+    * stream iff the round trip is exact, which is what puts this on a
+    * hash-compare oracle gate (the oracle computes the md5 from the
+    * ORIGINAL pre-tokens and asserts 0 mismatches — the q45
+    * guarantee-gate shape: oracle = ground truth, engine = the actual
+    * round trip).
+    *
+    * @return (keys…, n_pretokens, n_mismatch, rt_md5), keys with ≥1
+    *         pre-token only
+    */
+  def roundTrip(pre: DataFrame, enc: Encoder): DataFrame =
+    distinctWordPass(pre, enc, positions = true)(toks =>
+      Seq(enc.text(toks).as("dec")))(
+      count(lit(1)).as("n_pretokens"),
+      sum(when(col("dec") =!= col("w"), 1L).otherwise(0L)).as("n_mismatch"),
+      md5(expr(s"array_join(${inPosOrder("dec")}, '')")).as("rt_md5"))
+
+  /** Per-key token arrays (keys…, toks) of a [[pretokenize]] frame under
+    * `enc`, in document order — the corpus tokenize shared by every
+    * byte-BPE packing tail (q218/q222/q226/q230/q238/q251) and the shard
+    * export sinks.
+    */
+  def tokenArrays(pre: DataFrame, enc: Encoder): DataFrame =
+    distinctWordPass(pre, enc, positions = true)(toks => Seq(toks))(
+      expr(s"flatten(${inPosOrder("toks")})").as("toks"))
 
   /** CCNet's head/middle/tail partition (Wenzek et al. 2019 §4.3 — the
     * published pipeline doesn't FILTER on perplexity, it BUCKETS: the
@@ -1091,62 +1045,6 @@ object TextOps {
     */
   def bpeDetokenizeByteLevel(toks: Column): Column =
     decode(unhex(concat_ws("", toks)), "UTF-8")
-
-  /** Tokenizer INTEGRITY check — encode∘decode ≡ identity over the real
-    * corpus (the deploy gate a tokenizer artifact ships behind; a lossy
-    * tokenizer silently corrupts every downstream token count and packed
-    * sequence): every distinct pre-token encodes through the native
-    * byte-level BPE and decodes back ([[bpeDetokenizeByteLevel]]);
-    * per document, reports the pre-token count, the number of words
-    * whose round trip mismatched, and the md5 of the POSITION-ORDERED
-    * concatenation of the decoded words — equal to the md5 of the
-    * original pre-token stream iff the round trip is exact, which is
-    * what puts this on a hash-compare oracle gate (the oracle computes
-    * the md5 from the ORIGINAL pre-tokens and asserts 0 mismatches —
-    * the q45 guarantee-gate shape: oracle = ground truth, engine = the
-    * actual round trip).
-    *
-    * 100 TB posture: the merge chain runs once per DISTINCT pre-token
-    * (the [[bpeTokenCountsByteLevel]] vocab-side amortization); the
-    * corpus side is one posexplode + equi-join + per-doc sorted-struct
-    * fold (bounded by the doc's own token count).
-    *
-    * @return (id, n_pretokens, n_mismatch, rt_md5), docs with ≥1
-    *         pre-token only
-    */
-  def bpeRoundTripByteLevel(docs: DataFrame, id: Column, text: Column,
-      merges: Seq[(String, String)]): DataFrame = {
-    import graft.CacheScope.ScopedPersist
-    // pre-tokenize ONCE and persist (q245 persist-boundary rule): the
-    // vocab derivation and the per-doc rejoin both read the arrays
-    val words = docs.select(id.as("id"),
-      regexp_extract_all(lower(text), lit(byteLevelTokenPattern), lit(0))
-        .as("__ws"))
-      .persistScoped()
-    bpeRoundTripByteLevelFromWords(words, merges)
-  }
-
-  /** [[bpeRoundTripByteLevel]] over an already pre-tokenized (and
-    * persisted) `(id, __ws)` frame — shares one regex pass with the
-    * trainer (see [[bpeMergesByteLevelFromPretokens]]).
-    */
-  def bpeRoundTripByteLevelFromWords(words: DataFrame,
-      merges: Seq[(String, String)]): DataFrame = {
-    val dw = words.select(col("id"),
-      posexplode(col("__ws")).as(Seq("pos", "w")))
-    val vocab = dw.select(col("w")).distinct()
-      .select(col("w"), bpeDetokenizeByteLevel(
-        graft.functions.bpe_encode(col("w"), merges, byteLevel = true))
-        .as("dec"))
-    dw
-      .join(vocab, "w")
-      .groupBy(col("id"))
-      .agg(count(lit(1)).as("n_pretokens"),
-        sum(when(col("dec") =!= col("w"), 1L).otherwise(0L)).as("n_mismatch"),
-        md5(expr(
-          "array_join(transform(sort_array(collect_list(struct(pos, dec))), x -> x.dec), '')"))
-          .as("rt_md5"))
-  }
 
   /** CCNet-style perplexity filter (Wenzek et al. 2019, "CCNet:
     * Extracting High Quality Monolingual Datasets from Web Crawl Data" —

@@ -66,35 +66,32 @@ object Unigram {
   private def isSingleCp(p: String): Boolean =
     p.codePointCount(0, p.length) == 1
 
-  /** Corpus → (w, n) word-frequency table (lowercased whitespace words —
-    * [[TextOps.bpeMerges]]'s word boundary, so fertility rows compare
-    * like for like).
+  /** Corpus → (w, n) word-frequency table: lowercased whitespace words
+    * ([[TextOps.bpeMerges]]'s word boundary, so fertility rows compare
+    * like for like), or with `byteLevel` the production tokenizer
+    * boundary — [[TextOps.bpeMerges]]' byte-level regex pre-tokens, each
+    * re-expressed as ONE CODE POINT PER UTF-8 BYTE ([[byteChars]]), so the
+    * char-level Viterbi machinery runs UNCHANGED over a closed 256-symbol
+    * alphabet and no OOV symbol can exist.
     */
-  def wordTable(docs: DataFrame, text: Column): DataFrame =
-    docs.select(text.as("__t"))
-      .select(explode(expr(
-        "filter(split(lower(__t), '\\\\s+'), x -> length(x) > 0)")).as("w"))
+  def wordTable(docs: DataFrame, text: Column,
+      byteLevel: Boolean = false): DataFrame = {
+    val words = docs.select(text.as("__t"))
+      .select(explode(TextOps.pretokens(col("__t"), byteLevel)).as("w"))
+    (if (byteLevel) words.select(byteChars.as("w")) else words)
       .groupBy(col("w")).agg(count(lit(1)).as("n"))
+  }
 
-  /** BYTE-LEVEL word table — the production tokenizer boundary
-    * ([[TextOps.bpeMergesByteLevel]]'s pre-tokenizer): regex pre-tokens,
-    * each re-expressed as ONE CODE POINT PER UTF-8 BYTE (byte b →
-    * U+0000+b, the GPT-2 byte-to-unicode idea with the identity map), so
-    * the char-level Viterbi machinery runs UNCHANGED over a closed
-    * 256-symbol alphabet and no OOV symbol can exist: a multi-byte
-    * character SPLITS into its byte code points and any byte sequence
-    * stays segmentable. ASCII pre-tokens map to themselves;
+  /** The pre-token column `w` as one code point per UTF-8 byte (byte b →
+    * U+0000+b, the GPT-2 byte-to-unicode idea with the identity map): a
+    * multi-byte character SPLITS into its byte code points and any byte
+    * sequence stays segmentable. ASCII pre-tokens map to themselves;
     * [[byteCharsToString]] inverts the map exactly.
     */
-  def wordTableByteLevel(docs: DataFrame, text: Column): DataFrame =
-    docs.select(text.as("__t"))
-      .select(explode(regexp_extract_all(lower(col("__t")),
-        lit(TextOps.byteLevelTokenPattern), lit(0))).as("w0"))
-      .select(expr(
-        """array_join(transform(sequence(1, length(hex(w0)) div 2),
-          |  i -> chr(CAST(conv(substring(hex(w0), 2 * i - 1, 2), 16, 10)
-          |           AS BIGINT))), '')""".stripMargin).as("w"))
-      .groupBy(col("w")).agg(count(lit(1)).as("n"))
+  private[operators] def byteChars: Column = expr(
+    """array_join(transform(sequence(1, length(hex(w)) div 2),
+      |  i -> chr(CAST(conv(substring(hex(w), 2 * i - 1, 2), 16, 10)
+      |           AS BIGINT))), '')""".stripMargin)
 
   /** Invert the byte→code-point map: a byte-level word or piece back to
     * its original UTF-8 string. Pure JVM (serving/diagnostic helper).
@@ -133,8 +130,8 @@ object Unigram {
     trainPiecesFrom(wordTable(docs, text), seedTopK, rounds, maxPieceLen)
 
   /** [[trainPieces]] over an explicit (w, n) word table — the shared core
-    * both the whitespace ([[wordTable]]) and byte-level
-    * ([[wordTableByteLevel]]) boundaries train through.
+    * both [[wordTable]] boundaries (whitespace and byte-level) train
+    * through.
     */
   def trainPiecesFrom(wordsIn: DataFrame, seedTopK: Int, rounds: Int,
       maxPieceLen: Int = MaxPieceLen): Seq[Piece] = {
@@ -193,30 +190,6 @@ object Unigram {
       .collect().map(r => r.getString(0) -> r.getLong(1))
       .sortBy(_._1).toSeq
 
-  /** Viterbi-tokenize a word frame (column `w`) with a trained model:
-    * appends `toks` — one narrow native-expression map, the serving op.
-    */
-  def tokenize(words: DataFrame, model: Seq[(String, Long)],
-      maxPieceLen: Int = MaxPieceLen): DataFrame =
-    words.withColumn("toks", graft.functions.unigram_encode(
-      col("w"), model, maxPieceLen, UnkScoreMicro))
-
-  /** Per-doc token counts (`id`, n_tokens) of a corpus under a trained
-    * model ([[loadModel]]): per-WORD tokenization once over the corpus's
-    * [[wordTable]], then one join from the exploded docs — never a per-doc
-    * re-tokenize. The id column keeps its input name. Unknown characters
-    * segment at the unk floor, so a model serving unseen text never
-    * fails. A doc with no words has no row.
-    */
-  def docTokenCounts(docs: DataFrame, id: Column, text: Column,
-      model: Seq[(String, Long)]): DataFrame = {
-    val wordToks = tokenize(wordTable(docs, text), model)
-      .select(col("w"), size(col("toks")).cast("long").as("nt"))
-    docs.select(id, explode(TextOps.wordsOf(text)).as("w"))
-      .join(wordToks, Seq("w"))
-      .groupBy(id).agg(sum(col("nt")).as("n_tokens"))
-  }
-
   /** Frozen (piece → id) vocabulary of a trained unigram model: ids
     * follow the stored piece order ([[loadModel]] is piece-sorted), so
     * the map is reproducible from the artifact alone. A piece the model
@@ -231,7 +204,7 @@ object Unigram {
 
   /** [[byteCharsToString]] as a Column (the distributed inverse): each
     * code point of a byte-level string IS one UTF-8 byte value (≤ 0xFF by
-    * the [[wordTableByteLevel]] construction), so the original string is
+    * the [[byteChars]] construction), so the original string is
     * hex(code point) per char → concat → unhex → UTF-8 decode. Pure
     * codegen'd expression chain, no UDF.
     */
@@ -240,51 +213,4 @@ object Unigram {
       transform(sequence(lit(1), length(s)),
         i => lpad(conv(ascii(s.substr(i, lit(1))).cast("string"),
           10, 16), 2, "0")))), "UTF-8")
-
-  /** Tokenizer INTEGRITY gate for the byte-level unigram family —
-    * [[TextOps.bpeRoundTripByteLevel]]'s contract on the Viterbi encoder:
-    * every distinct pre-token maps to byte chars
-    * ([[wordTableByteLevel]]'s symbolization), Viterbi-encodes through
-    * the trained model, and decodes back (concat pieces — Viterbi
-    * SEGMENTS the word, so the piece concatenation is the byte-char word
-    * — then [[byteCharsToStringCol]]); per document the gate reports the
-    * pre-token count, round-trip mismatches, and the md5 of the
-    * position-ordered decoded stream (= the original stream's md5 iff
-    * the round trip is exact — the hash-compare oracle shape).
-    *
-    * 100 TB posture: encode+decode run once per DISTINCT pre-token; the
-    * corpus side is one posexplode + equi-join + per-doc sorted fold.
-    *
-    * @return (id, n_pretokens, n_mismatch, rt_md5), docs with ≥1
-    *         pre-token only
-    */
-  def roundTripByteLevel(docs: DataFrame, id: Column, text: Column,
-      model: Seq[(String, Long)],
-      maxPieceLen: Int = MaxPieceLen): DataFrame = {
-    val byteChars = expr(
-      """array_join(transform(sequence(1, length(hex(w0)) div 2),
-        |  i -> chr(CAST(conv(substring(hex(w0), 2 * i - 1, 2), 16, 10)
-        |           AS BIGINT))), '')""".stripMargin)
-    // pre-tokenize ONCE and persist (q245 persist-boundary rule): the
-    // vocab derivation and the per-doc rejoin both read the arrays
-    val wordArrs = docs.select(id.as("id"),
-      regexp_extract_all(lower(text), lit(TextOps.byteLevelTokenPattern),
-        lit(0)).as("__ws"))
-      .persistScoped()
-    val dw = wordArrs.select(col("id"),
-      posexplode(col("__ws")).as(Seq("pos", "w0")))
-    val vocab = dw.select(col("w0")).distinct()
-      .select(col("w0"), byteChars.as("w"))
-      .select(col("w0"), byteCharsToStringCol(concat_ws("",
-        graft.functions.unigram_encode(col("w"), model, maxPieceLen,
-          UnkScoreMicro))).as("dec"))
-    dw
-      .join(vocab, "w0")
-      .groupBy(col("id"))
-      .agg(count(lit(1)).as("n_pretokens"),
-        sum(when(col("dec") =!= col("w0"), 1L).otherwise(0L)).as("n_mismatch"),
-        md5(expr(
-          "array_join(transform(sort_array(collect_list(struct(pos, dec))), x -> x.dec), '')"))
-          .as("rt_md5"))
-  }
 }

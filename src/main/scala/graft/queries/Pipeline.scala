@@ -2277,7 +2277,7 @@ object Pipeline {
   // applied to the TOKENIZER: q157 re-trains the merge table on every
   // call; production ships the merge list once and tokenizes forever.
   // Train → writeBpeModel (one tiny parquet) → loadBpeMerges →
-  // bpeTokenCounts. Strings round-trip parquet losslessly, so
+  // tokenCounts. Strings round-trip parquet losslessly, so
   // stored-and-applied must equal freshly-trained: q157's oracle applies
   // VERBATIM — the tokenizer-integrity contract as a hash check.
 
@@ -2288,8 +2288,8 @@ object Pipeline {
         TextOps.bpeMerges(graft.Fanout(t.documents), col("text"), BpeRounds,
           requireFull = true), d)
     }
-    TextOps.bpeTokenCounts(graft.Fanout(t.documents), col("doc_id"),
-      col("text"), TextOps.loadBpeMerges(spark, dir))
+    TextOps.tokenCounts(docPretokens(t, byteLevel = false),
+      TextOps.Encoder.Bpe(TextOps.loadBpeMerges(spark, dir), byteLevel = false))
       .select(col("id").as("doc_id"), col("n_tokens"))
   }
 
@@ -2335,7 +2335,7 @@ object Pipeline {
        |FROM sc JOIN d0 USING (id) GROUP BY 1, 2""".stripMargin)
 
   // ===== q180 byte-level BPE vocabulary induction =========================
-  // q156's production-boundary twin (TextOps.bpeMergesByteLevel): GPT-2/
+  // q156's production-boundary twin (TextOps.bpeMerges, byteLevel): GPT-2/
   // Llama-style byte-level training — regex pre-tokenization (letter
   // runs, digit runs, single punctuation) and a closed 256-symbol UTF-8
   // byte alphabet (hex pairs), so no string in any script can ever be
@@ -2345,8 +2345,8 @@ object Pipeline {
   // (uppercase hex of the UTF-8 bytes).
 
   private def q180(t: Tables): DataFrame =
-    TextOps.bpeMergesByteLevel(graft.Fanout(t.documents), col("text"),
-      BpeRounds, requireFull = true)
+    TextOps.bpeMerges(graft.Fanout(t.documents), col("text"),
+      BpeRounds, requireFull = true, byteLevel = true)
 
   // lazy: bpeWc0ByteLevel/bpeCteChain are declared later in the file and
   // object vals initialize in declaration order (the q172Sql lesson)
@@ -2367,12 +2367,12 @@ object Pipeline {
   // application and sums per doc, exactly the q157 oracle shape.
 
   private def q183(t: Tables): DataFrame = {
-    val merges = TextOps.bpeMergesByteLevel(graft.Fanout(t.documents),
-      col("text"), BpeRounds, requireFull = true)
+    val merges = TextOps.bpeMerges(graft.Fanout(t.documents),
+      col("text"), BpeRounds, requireFull = true, byteLevel = true)
       .orderBy(col("merge_round"))
       .collect().map(r => (r.getString(1), r.getString(2))).toSeq
-    TextOps.bpeTokenCountsByteLevel(graft.Fanout(t.documents),
-      col("doc_id"), col("text"), merges)
+    TextOps.tokenCounts(docPretokens(t, byteLevel = true),
+      TextOps.Encoder.Bpe(merges, byteLevel = true))
       .select(col("id").as("doc_id"), col("n_tokens"))
   }
 
@@ -2860,7 +2860,7 @@ object Pipeline {
 
   /** The BYTE-LEVEL word-table CTE body (q210's boundary): regex
     * pre-tokens re-expressed one code point per UTF-8 byte — the exact
-    * SQL twin of [[graft.operators.Unigram.wordTableByteLevel]]'s map.
+    * SQL twin of [[graft.operators.Unigram.byteChars]]' map.
     */
   private lazy val uniUwByte =
     s"""SELECT array_to_string(list_transform(
@@ -2921,7 +2921,8 @@ object Pipeline {
     val spark = t.documents.sparkSession
     import spark.implicits._
     Unigram.trainPiecesFrom(
-      Unigram.wordTableByteLevel(graft.Fanout(t.documents), col("text")),
+      Unigram.wordTable(graft.Fanout(t.documents), col("text"),
+        byteLevel = true),
       UniSeedTopK, UniRounds)
       .map(p => (p.piece, p.cnt, p.scoreMicro))
       .toDF("piece", "cnt", "score_micro")
@@ -3885,8 +3886,8 @@ object Pipeline {
       .orderBy(col("merge_round"))
       .select(col("sym_a"), col("sym_b"))
       .collect().map(r => (r.getString(0), r.getString(1))).toSeq
-    TextOps.wordPieceTokens(wt.select(col("w")).distinct(),
-      TextOps.wordPieceVocab(wt, merges))
+    TextOps.encodeWords(wt.select(col("w")).distinct(),
+      TextOps.Encoder.WordPiece(TextOps.wordPieceVocab(wt, merges)))
       .select(col("w"), size(col("toks")).cast("long").as("n_toks"),
         array_join(col("toks"), " ").as("toks_str"))
   }
@@ -3990,8 +3991,8 @@ object Pipeline {
     val bpeDir = bpeByteModelDir(t)
     val merges = TextOps.loadBpeMerges(spark, bpeDir)
     // tokenize the VOCAB once (the q157/q183 cost shape), flatten per doc
-    shardTail(TextOps.byteTokDocs(graft.Fanout(t.documents), merges),
-      None, None)
+    shardTail(TextOps.tokenArrays(shardPretokens(graft.Fanout(t.documents)),
+      TextOps.Encoder.Bpe(merges, byteLevel = true)), None, None)
   }
 
   private lazy val q218Sql =
@@ -4058,11 +4059,12 @@ object Pipeline {
       s"uni_byte_model_${UniSeedTopK}_$UniRounds") { d =>
       Unigram.writeModel(spark,
         Unigram.trainPiecesFrom(
-          Unigram.wordTableByteLevel(graft.Fanout(t.documents), col("text")),
+          Unigram.wordTable(graft.Fanout(t.documents), col("text"),
+            byteLevel = true),
           UniSeedTopK, UniRounds), d)
     }
-    Unigram.roundTripByteLevel(graft.Fanout(t.documents), col("doc_id"),
-      col("text"), Unigram.loadModel(spark, dir))
+    TextOps.roundTrip(docPretokens(t, byteLevel = true),
+      TextOps.Encoder.Unigram(Unigram.loadModel(spark, dir), byteLevel = true))
       .select(col("id").as("doc_id"), col("n_pretokens"),
         col("n_mismatch"), col("rt_md5"))
   }
@@ -4087,8 +4089,8 @@ object Pipeline {
   private def q225(t: Tables): DataFrame = {
     val spark = t.documents.sparkSession
     val dir = wpModelDir(t)
-    TextOps.wordPieceRoundTrip(graft.Fanout(t.documents), col("doc_id"),
-      col("text"), TextOps.loadWordPieceVocab(spark, dir))
+    TextOps.roundTrip(docPretokens(t, byteLevel = false),
+      TextOps.Encoder.WordPiece(TextOps.loadWordPieceVocab(spark, dir)))
       .select(col("id").as("doc_id"), col("n_pretokens"),
         col("n_mismatch"), col("rt_md5"))
   }
@@ -4124,8 +4126,8 @@ object Pipeline {
         TextOps.bpeVocabIdsByteLevel(merges), d)
     }
     val vocab = TextOps.loadBpeVocabIds(spark, vocabDir)
-    shardTail(TextOps.byteTokDocs(graft.Fanout(t.documents), merges),
-      Some(vocab), eos, interleave)
+    shardTail(TextOps.tokenArrays(shardPretokens(graft.Fanout(t.documents)),
+      TextOps.Encoder.Bpe(merges, byteLevel = true)), Some(vocab), eos, interleave)
   }
 
   /** Packs per-doc byte-BPE tokens `dt(source, doc_id, toks)` into
@@ -4308,12 +4310,25 @@ object Pipeline {
         col("doc_id"), col("text"), 2, LmMaxV, LmMaxB, d)
     }
 
+  /** The persisted (id, ws) pre-tokens of the corpus documents. */
+  private def docPretokens(t: Tables, byteLevel: Boolean): DataFrame =
+    TextOps.pretokenize(graft.Fanout(t.documents), Seq(col("doc_id").as("id")),
+      col("text"), byteLevel)
+
+  /** The persisted (source, doc_id, ws) byte-level pre-tokens of a
+    * (source, doc_id, text) frame — the input of the shard tails'
+    * tokenize.
+    */
+  private def shardPretokens(docs: DataFrame): DataFrame =
+    TextOps.pretokenize(docs, Seq(col("source"), col("doc_id")), col("text"),
+      byteLevel = true)
+
   /** The byte-level BPE merges, trained on the full corpus. */
   private def bpeByteModelDir(t: Tables): String =
     RunCache.dir(t.dir, s"bpe_byte_model_$BpeRounds") { d =>
       TextOps.writeBpeModel(
-        TextOps.bpeMergesByteLevel(graft.Fanout(t.documents), col("text"),
-          BpeRounds, requireFull = true), d)
+        TextOps.bpeMerges(graft.Fanout(t.documents), col("text"),
+          BpeRounds, requireFull = true, byteLevel = true), d)
     }
 
   /** The WordPiece vocabulary, trained on the full corpus. */
@@ -5572,12 +5587,12 @@ object Pipeline {
     // ONE regex pass feeds trainer AND packing tokenize (guide §1.2):
     // the pre-token frame persists once; the trainer's word counts and
     // the per-doc rejoin both read it
-    val tokWords = TextOps.byteTokWords(survivors)
-    val merges = TextOps.bpeMergesByteLevelFromPretokens(
-      tokWords.select(explode(col("ws")).as("w")),
+    val tokWords = shardPretokens(survivors)
+    val merges = TextOps.bpeMergesByteLevelFromPretokens(tokWords,
       BpeRounds, requireFull = true)
     val vocab = if (ids) Some(TextOps.bpeVocabIdsByteLevel(merges)) else None
-    shardTail(TextOps.byteTokDocsFromWords(tokWords, merges), vocab, eos)
+    shardTail(TextOps.tokenArrays(tokWords,
+      TextOps.Encoder.Bpe(merges, byteLevel = true)), vocab, eos)
   }
 
   private lazy val q222Sql =
@@ -5688,8 +5703,8 @@ object Pipeline {
     val spark = t.documents.sparkSession
     val dir = wpModelDir(t)
     val wt = TextOps.wordPieceWordTable(graft.Fanout(t.documents), col("text"))
-    TextOps.wordPieceTokens(wt.select(col("w")).distinct(),
-      TextOps.loadWordPieceVocab(spark, dir))
+    TextOps.encodeWords(wt.select(col("w")).distinct(),
+      TextOps.Encoder.WordPiece(TextOps.loadWordPieceVocab(spark, dir)))
       .select(col("w"), size(col("toks")).cast("long").as("n_toks"),
         array_join(col("toks"), " ").as("toks_str"))
   }
@@ -5753,9 +5768,9 @@ object Pipeline {
   private def q204(t: Tables): DataFrame = {
     val spark = t.documents.sparkSession
     val dir = uniModelDir(t)
-    Unigram.tokenize(
+    TextOps.encodeWords(
       Unigram.wordTable(graft.Fanout(t.documents), col("text")),
-      Unigram.loadModel(spark, dir))
+      TextOps.Encoder.Unigram(Unigram.loadModel(spark, dir), byteLevel = false))
       .select(col("w"), size(col("toks")).cast("long").as("n_toks"),
         array_join(col("toks"), " ").as("toks_str"))
   }
@@ -5769,12 +5784,15 @@ object Pipeline {
   private def q205(t: Tables): DataFrame = {
     val spark = t.documents.sparkSession
     val bpeDir = bpeByteModelDir(t)
-    val bpe = TextOps.bpeTokenCountsByteLevel(graft.Fanout(t.documents),
-      col("doc_id"), col("text"), TextOps.loadBpeMerges(spark, bpeDir))
+    val bpe = TextOps.tokenCounts(docPretokens(t, byteLevel = true),
+        TextOps.Encoder.Bpe(TextOps.loadBpeMerges(spark, bpeDir), byteLevel = true))
       .select(col("id").as("doc_id"), col("n_tokens").as("bpe_tok"))
     val uniDir = uniModelDir(t)
-    val uni = Unigram.docTokenCounts(graft.Fanout(t.documents),
-        col("doc_id"), col("text"), Unigram.loadModel(spark, uniDir))
+    // unpersisted: the whitespace split is cheap to run twice, and
+    // persisting the (id, ws) frame costs a cache-build job
+    val uni = TextOps.tokenCounts(graft.Fanout(t.documents).select(
+        col("doc_id"), TextOps.wordsOf(col("text")).as("ws")),
+        TextOps.Encoder.Unigram(Unigram.loadModel(spark, uniDir), byteLevel = false))
       .withColumnRenamed("n_tokens", "uni_tok")
     t.documents
       .select(col("doc_id"), col("lang"),
@@ -6000,14 +6018,10 @@ object Pipeline {
 
   private def q190(t: Tables): DataFrame = {
     // ONE regex pass feeds trainer AND round-trip (guide §1.2)
-    val words = graft.Fanout(t.documents).select(col("doc_id").as("id"),
-      regexp_extract_all(lower(col("text")),
-        lit(TextOps.byteLevelTokenPattern), lit(0)).as("__ws"))
-      .persistScoped()
-    val merges = TextOps.bpeMergesByteLevelFromPretokens(
-      words.select(explode(col("__ws")).as("w")), BpeRounds,
+    val words = docPretokens(t, byteLevel = true)
+    val merges = TextOps.bpeMergesByteLevelFromPretokens(words, BpeRounds,
       requireFull = true)
-    TextOps.bpeRoundTripByteLevelFromWords(words, merges)
+    TextOps.roundTrip(words, TextOps.Encoder.Bpe(merges, byteLevel = true))
       .select(col("id").as("doc_id"), col("n_pretokens"),
         col("n_mismatch"), col("rt_md5"))
   }
@@ -6312,8 +6326,8 @@ object Pipeline {
     val spark = t.documents.sparkSession
     val dir = bpeByteModelDir(t)
     val merges = TextOps.loadBpeMerges(spark, dir)
-    val bpe = TextOps.bpeTokenCountsByteLevel(graft.Fanout(t.documents),
-      col("doc_id"), col("text"), merges)
+    val bpe = TextOps.tokenCounts(docPretokens(t, byteLevel = true),
+        TextOps.Encoder.Bpe(merges, byteLevel = true))
       .select(col("id").as("doc_id"), col("n_tokens").as("bpe_tok"))
     t.documents
       .select(col("doc_id"), col("lang"),
@@ -6415,14 +6429,12 @@ object Pipeline {
       Seq("doc_id"), "left_semi")
       .localCheckpoint() // feeds BPE training AND tokenization AND packing
     // ONE regex pass feeds trainer AND token counting (guide §1.2)
-    val words5 = d5.select(col("doc_id").as("id"),
-      regexp_extract_all(lower(col("text")),
-        lit(TextOps.byteLevelTokenPattern), lit(0)).as("__ws"))
-      .persistScoped()
-    val merges = TextOps.bpeMergesByteLevelFromPretokens(
-      words5.select(explode(col("__ws")).as("w")), BpeRounds,
+    val words5 = TextOps.pretokenize(d5, Seq(col("doc_id").as("id")),
+      col("text"), byteLevel = true)
+    val merges = TextOps.bpeMergesByteLevelFromPretokens(words5, BpeRounds,
       requireFull = true)
-    val toks = TextOps.bpeTokenCountsByteLevelFromWords(words5, merges)
+    val toks = TextOps.tokenCounts(words5,
+        TextOps.Encoder.Bpe(merges, byteLevel = true))
       .select(col("id").as("doc_id"), col("n_tokens"))
     graft.operators.Curation.packBinsScalable(
       d5.select(col("doc_id"), col("source")).join(toks, Seq("doc_id")),
@@ -7056,8 +7068,8 @@ object Pipeline {
       BpeRounds, requireFull = true) // oracle unrolls exactly BpeRounds
       .orderBy(col("merge_round"))
       .collect().map(r => (r.getString(1), r.getString(2))).toSeq
-    TextOps.bpeTokenCounts(graft.Fanout(t.documents), col("doc_id"), col("text"),
-      merges)
+    TextOps.tokenCounts(docPretokens(t, byteLevel = false),
+      TextOps.Encoder.Bpe(merges, byteLevel = false))
       .select(col("id").as("doc_id"), col("n_tokens"))
   }
 

@@ -852,12 +852,11 @@ object Relational {
       |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE), 2) AS running_spend
       |FROM orders WHERE o_custkey < 50""".stripMargin
 
-  // q68 — backward AS-OF join (an operator Spark lacks natively): each
-  // click is annotated with the user's most recent purchase at-or-before
-  // it. Union/carry-forward implementation — one exchange, no range
-  // explosion (operators/TemporalJoins.asOfBackward); DuckDB oracles it
-  // with its native ASOF LEFT JOIN.
-  private def q68(t: Tables): DataFrame = {
+  /** The as-of queries' inputs (q68/q163/q82/q94): the clicks
+    * (event_id, user_id, ts) and the purchases, one row per (user, ts)
+    * with its max value (user_id, pts, pts_val, pvalue).
+    */
+  private def asOfInputs(t: Tables): (DataFrame, DataFrame) = {
     val ev = t.events
     val clicks = ev.filter(col("event_type") === "click")
       .select(col("event_id"), col("user_id"), col("ts"))
@@ -865,6 +864,22 @@ object Relational {
       .groupBy(col("user_id"), col("ts").as("pts"))
       .agg(max(col("value")).as("pvalue"))
       .select(col("user_id"), col("pts"), col("pts").as("pts_val"), col("pvalue"))
+    (clicks, purchases)
+  }
+
+  /** The as-of oracles' click and purchase CTEs, q68/q163/q94. */
+  private val AsOfCtes =
+    """c AS (SELECT event_id, user_id, ts FROM events WHERE event_type = 'click'),
+      |p AS (SELECT user_id, ts AS pts, max(value) AS pvalue
+      |      FROM events WHERE event_type = 'purchase' GROUP BY 1, 2)""".stripMargin
+
+  // q68 — backward AS-OF join (an operator Spark lacks natively): each
+  // click is annotated with the user's most recent purchase at-or-before
+  // it. Union/carry-forward implementation — one exchange, no range
+  // explosion (operators/TemporalJoins.asOfBackward); DuckDB oracles it
+  // with its native ASOF LEFT JOIN.
+  private def q68(t: Tables): DataFrame = {
+    val (clicks, purchases) = asOfInputs(t)
     graft.operators.TemporalJoins
       .asOfBackward(clicks, purchases, "user_id", "ts", "pts", Seq("pts_val", "pvalue"))
       .select(col("event_id"), col("user_id"),
@@ -872,9 +887,7 @@ object Relational {
   }
 
   private val q68Sql =
-    """WITH c AS (SELECT event_id, user_id, ts FROM events WHERE event_type = 'click'),
-      |p AS (SELECT user_id, ts AS pts, max(value) AS pvalue
-      |      FROM events WHERE event_type = 'purchase' GROUP BY 1, 2)
+    s"""WITH $AsOfCtes
       |SELECT c.event_id, c.user_id, p.pts AS last_purchase_ts,
       |       p.pvalue AS last_purchase_value
       |FROM c ASOF LEFT JOIN p ON c.user_id = p.user_id AND p.pts <= c.ts""".stripMargin
@@ -888,13 +901,7 @@ object Relational {
   private val AsOfTolSeconds = 7200L
 
   private def q163(t: Tables): DataFrame = {
-    val ev = t.events
-    val clicks = ev.filter(col("event_type") === "click")
-      .select(col("event_id"), col("user_id"), col("ts"))
-    val purchases = ev.filter(col("event_type") === "purchase")
-      .groupBy(col("user_id"), col("ts").as("pts"))
-      .agg(max(col("value")).as("pvalue"))
-      .select(col("user_id"), col("pts"), col("pts").as("pts_val"), col("pvalue"))
+    val (clicks, purchases) = asOfInputs(t)
     graft.operators.TemporalJoins
       .asOfBackwardTolerance(clicks, purchases, "user_id", "ts", "pts",
         Seq("pts_val", "pvalue"), AsOfTolSeconds)
@@ -903,9 +910,7 @@ object Relational {
   }
 
   private val q163Sql =
-    s"""WITH c AS (SELECT event_id, user_id, ts FROM events WHERE event_type = 'click'),
-       |p AS (SELECT user_id, ts AS pts, max(value) AS pvalue
-       |      FROM events WHERE event_type = 'purchase' GROUP BY 1, 2)
+    s"""WITH $AsOfCtes
        |SELECT c.event_id, c.user_id,
        |  CASE WHEN p.pts IS NOT NULL AND c.ts - p.pts <= INTERVAL $AsOfTolSeconds SECONDS
        |       THEN p.pts END AS last_purchase_ts,
@@ -918,13 +923,7 @@ object Relational {
   // the full custom-operator ladder sitting behind the DuckDB ASOF oracle,
   // not just its unit spec. One exchange + sort per side, O(|L|+|R|) merge.
   private def q82(t: Tables): DataFrame = {
-    val ev = t.events
-    val clicks = ev.filter(col("event_type") === "click")
-      .select(col("event_id"), col("user_id"), col("ts"))
-    val purchases = ev.filter(col("event_type") === "purchase")
-      .groupBy(col("user_id"), col("ts").as("pts"))
-      .agg(max(col("value")).as("pvalue"))
-      .select(col("user_id"), col("pts"), col("pts").as("pts_val"), col("pvalue"))
+    val (clicks, purchases) = asOfInputs(t)
     graft.plans.AsOfJoin
       .asOfNative(clicks, purchases, "user_id", "ts", "pts", Seq("pts_val", "pvalue"))
       .select(col("event_id"), col("user_id"),
@@ -936,13 +935,7 @@ object Relational {
   // negated epoch-micros (plans/AsOfJoin.asOfForward), DuckDB oracles it
   // with ASOF LEFT JOIN on pts >= ts.
   private def q94(t: Tables): DataFrame = {
-    val ev = t.events
-    val clicks = ev.filter(col("event_type") === "click")
-      .select(col("event_id"), col("user_id"), col("ts"))
-    val purchases = ev.filter(col("event_type") === "purchase")
-      .groupBy(col("user_id"), col("ts").as("pts"))
-      .agg(max(col("value")).as("pvalue"))
-      .select(col("user_id"), col("pts"), col("pts").as("pts_val"), col("pvalue"))
+    val (clicks, purchases) = asOfInputs(t)
     graft.plans.AsOfJoin
       .asOfForward(clicks, purchases, "user_id", "ts", "pts", Seq("pts_val", "pvalue"))
       .select(col("event_id"), col("user_id"),
@@ -950,9 +943,7 @@ object Relational {
   }
 
   private val q94Sql =
-    """WITH c AS (SELECT event_id, user_id, ts FROM events WHERE event_type = 'click'),
-      |p AS (SELECT user_id, ts AS pts, max(value) AS pvalue
-      |      FROM events WHERE event_type = 'purchase' GROUP BY 1, 2)
+    s"""WITH $AsOfCtes
       |SELECT c.event_id, c.user_id, p.pts AS next_purchase_ts,
       |       p.pvalue AS next_purchase_value
       |FROM c ASOF LEFT JOIN p ON c.user_id = p.user_id AND p.pts >= c.ts""".stripMargin
@@ -1071,14 +1062,10 @@ object Relational {
       |WHERE l_orderkey IN (SELECT o_orderkey FROM orders WHERE o_orderpriority = '1-URGENT')
       |GROUP BY l_returnflag""".stripMargin
 
-  // ---------------------------------------------------------------------
-  // q87 — keyed MERGE/upsert (Merge.upsert): an update batch (revised
-  // balances for custkey ≡ 3 mod 7, plus inserted NEW- rows) applied onto
-  // the customer base as updates ∪ (base anti-join update-keys). The
-  // anti-join broadcasts the batch's key set, so the base never shuffles
-  // (pinned in MergeSpec). The +100.0 is IEEE-exact in both engines (no
-  // rounding needed).
-  private def q87(t: Tables): DataFrame = {
+  /** q87/q101's inputs: the customer base and its update batch — revised
+    * balances for custkey ≡ 3 mod 7 plus inserted NEW- rows.
+    */
+  private def upsertInputs(t: Tables): (DataFrame, DataFrame) = {
     val base = t.customer.select(col("c_custkey"), col("c_name"),
       col("c_nationkey"), col("c_acctbal"))
     val revised = base.filter(col("c_custkey") % 7 === 3)
@@ -1087,17 +1074,33 @@ object Relational {
       .select((col("c_custkey") + lit(10000000L)).as("c_custkey"),
         concat(lit("NEW-"), col("c_name")).as("c_name"),
         col("c_nationkey"), col("c_acctbal"))
-    graft.operators.Merge.upsert(base, revised.unionByName(inserts), "c_custkey")
+    (base, revised.unionByName(inserts))
   }
 
-  private val q87Sql =
-    """WITH base AS (SELECT c_custkey, c_name, c_nationkey, c_acctbal FROM customer),
+  /** q87/q101's oracle CTEs: the customer base and the update batch. */
+  private val UpsertCtes =
+    """base AS (SELECT c_custkey, c_name, c_nationkey, c_acctbal FROM customer),
       |upd AS (
       |  SELECT c_custkey, c_name, c_nationkey, c_acctbal + 100.0 AS c_acctbal
       |  FROM base WHERE c_custkey % 7 = 3
       |  UNION ALL
       |  SELECT c_custkey + 10000000, 'NEW-' || c_name, c_nationkey, c_acctbal
-      |  FROM base WHERE c_custkey % 11 = 5)
+      |  FROM base WHERE c_custkey % 11 = 5)""".stripMargin
+
+  // ---------------------------------------------------------------------
+  // q87 — keyed MERGE/upsert (Merge.upsert): an update batch (revised
+  // balances for custkey ≡ 3 mod 7, plus inserted NEW- rows) applied onto
+  // the customer base as updates ∪ (base anti-join update-keys). The
+  // anti-join broadcasts the batch's key set, so the base never shuffles
+  // (pinned in MergeSpec). The +100.0 is IEEE-exact in both engines (no
+  // rounding needed).
+  private def q87(t: Tables): DataFrame = {
+    val (base, batch) = upsertInputs(t)
+    graft.operators.Merge.upsert(base, batch, "c_custkey")
+  }
+
+  private val q87Sql =
+    s"""WITH $UpsertCtes
       |SELECT * FROM upd
       |UNION ALL
       |SELECT * FROM base b
@@ -1355,25 +1358,12 @@ object Relational {
   // Same batch-broadcast plan as q87 plus one semi-join for the
   // superseded set.
   private def q101(t: Tables): DataFrame = {
-    val base = t.customer.select(col("c_custkey"), col("c_name"),
-      col("c_nationkey"), col("c_acctbal"))
-    val revised = base.filter(col("c_custkey") % 7 === 3)
-      .withColumn("c_acctbal", col("c_acctbal") + lit(100.0))
-    val inserts = base.filter(col("c_custkey") % 11 === 5)
-      .select((col("c_custkey") + lit(10000000L)).as("c_custkey"),
-        concat(lit("NEW-"), col("c_name")).as("c_name"),
-        col("c_nationkey"), col("c_acctbal"))
-    graft.operators.Merge.upsertHistory(base, revised.unionByName(inserts), "c_custkey")
+    val (base, batch) = upsertInputs(t)
+    graft.operators.Merge.upsertHistory(base, batch, "c_custkey")
   }
 
   private val q101Sql =
-    """WITH base AS (SELECT c_custkey, c_name, c_nationkey, c_acctbal FROM customer),
-      |upd AS (
-      |  SELECT c_custkey, c_name, c_nationkey, c_acctbal + 100.0 AS c_acctbal
-      |  FROM base WHERE c_custkey % 7 = 3
-      |  UNION ALL
-      |  SELECT c_custkey + 10000000, 'NEW-' || c_name, c_nationkey, c_acctbal
-      |  FROM base WHERE c_custkey % 11 = 5)
+    s"""WITH $UpsertCtes
       |SELECT *, TRUE AS is_current FROM upd
       |UNION ALL
       |SELECT *, TRUE AS is_current FROM base b
@@ -1699,6 +1689,20 @@ object Relational {
         col("n_rows"), col("w_mean"), col("w_std"), col("med"), col("mad"),
         col("n_outliers"))
 
+  /** The MAD oracles' CTEs (q150/q136) over dev(ad): the exact median of
+    * `ad` by the cumulative-count rule.
+    */
+  private val MadCtes =
+    """dc AS (SELECT ad, count(*) AS c FROM dev GROUP BY 1),
+      |dn AS (SELECT CAST(sum(c) AS BIGINT) AS n FROM dc),
+      |dcum AS (SELECT ad, c,
+      |           CAST(coalesce(sum(c) OVER (ORDER BY ad
+      |             ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS cb
+      |         FROM dc),
+      |mad AS (SELECT ad AS mad FROM dcum, dn
+      |        WHERE cb < greatest(1, CAST(ceil(0.5 * dn.n - 1e-6) AS BIGINT))
+      |          AND greatest(1, CAST(ceil(0.5 * dn.n - 1e-6) AS BIGINT)) <= cb + c)""".stripMargin
+
   private val q150Sql =
     s"""WITH c AS (SELECT l_extendedprice AS v, count(*) AS c
        |           FROM lineitem WHERE l_extendedprice IS NOT NULL GROUP BY 1),
@@ -1727,15 +1731,7 @@ object Relational {
        |       FROM m),
        |dev AS (SELECT abs(l_extendedprice - med) AS ad
        |        FROM lineitem, cuts WHERE l_extendedprice IS NOT NULL),
-       |dc AS (SELECT ad, count(*) AS c FROM dev GROUP BY 1),
-       |dn AS (SELECT CAST(sum(c) AS BIGINT) AS n FROM dc),
-       |dcum AS (SELECT ad, c,
-       |           CAST(coalesce(sum(c) OVER (ORDER BY ad
-       |             ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS cb
-       |         FROM dc),
-       |mad AS (SELECT ad AS mad FROM dcum, dn
-       |        WHERE cb < greatest(1, CAST(ceil(0.5 * dn.n - 1e-6) AS BIGINT))
-       |          AND greatest(1, CAST(ceil(0.5 * dn.n - 1e-6) AS BIGINT)) <= cb + c),
+       |$MadCtes,
        |o AS (SELECT CAST(sum(CASE WHEN ad > 4.4478 * mad THEN 1 ELSE 0 END) AS BIGINT)
        |         AS n_outliers,
        |        min(mad) AS mad
@@ -2029,7 +2025,7 @@ object Relational {
   }
 
   private val q136Sql =
-    """WITH c AS (SELECT l_extendedprice AS v, count(*) AS c
+    s"""WITH c AS (SELECT l_extendedprice AS v, count(*) AS c
       |           FROM lineitem WHERE l_extendedprice IS NOT NULL GROUP BY 1),
       |n AS (SELECT CAST(sum(c) AS BIGINT) AS n FROM c),
       |cum AS (SELECT v, c,
@@ -2041,15 +2037,7 @@ object Relational {
       |          AND greatest(1, CAST(ceil(0.5 * n.n - 1e-6) AS BIGINT)) <= cb + c),
       |dev AS (SELECT l_extendedprice AS v, med, abs(l_extendedprice - med) AS ad
       |        FROM lineitem, med),
-      |dc AS (SELECT ad, count(*) AS c FROM dev GROUP BY 1),
-      |dn AS (SELECT CAST(sum(c) AS BIGINT) AS n FROM dc),
-      |dcum AS (SELECT ad, c,
-      |           CAST(coalesce(sum(c) OVER (ORDER BY ad
-      |             ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS cb
-      |         FROM dc),
-      |mad AS (SELECT ad AS mad FROM dcum, dn
-      |        WHERE cb < greatest(1, CAST(ceil(0.5 * dn.n - 1e-6) AS BIGINT))
-      |          AND greatest(1, CAST(ceil(0.5 * dn.n - 1e-6) AS BIGINT)) <= cb + c)
+      |$MadCtes
       |SELECT count(*) AS n_rows,
       |  CAST(sum(CASE WHEN ad > 4.4478 * mad THEN 1 ELSE 0 END) AS BIGINT) AS n_outliers,
       |  min(med) AS med, min(mad) AS mad

@@ -659,7 +659,8 @@ class PlanShapeSpec extends AnyFunSuite {
     // run in driver memory, so 8 rounds cost the jobs 2 rounds do
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     def jobs(rounds: Int): Long = Counters.track(spark) {
-      graft.operators.TextOps.bpeMergesByteLevel(docs, col("text"), rounds)
+      graft.operators.TextOps.bpeMerges(docs, col("text"), rounds,
+        byteLevel = true)
     }._2.jobs
     val (j2, j8) = (jobs(2), jobs(8))
     assert(j2 == j8, s"rounds = 2 ran $j2 jobs, rounds = 8 ran $j8")

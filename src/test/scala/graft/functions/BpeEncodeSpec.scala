@@ -33,7 +33,8 @@ class BpeEncodeSpec extends AnyFunSuite {
     // rules chosen to chain: (a,b)→ab then (ab,a?) etc., plus CJK
     val merges = Seq("a" -> "b", "a" -> "a", "n" -> "a", "na" -> "na",
       "儿" -> "子")
-    val native = TextOps.bpeVocabTokens(words, merges)
+    val native = TextOps.encodeWords(words,
+      TextOps.Encoder.Bpe(merges, byteLevel = false))
       .as[(String, Seq[String])].collect().toMap
     val chained = TextOps.bpeVocabTokensChained(words, merges)
       .as[(String, Seq[String])].collect().toMap
@@ -58,7 +59,8 @@ class BpeEncodeSpec extends AnyFunSuite {
     assert(merges.nonEmpty)
     val vocab = docs
       .select(explode(split(lower($"text"), "\\s+")).as("w")).distinct()
-    val native = TextOps.bpeVocabTokens(vocab, merges)
+    val native = TextOps.encodeWords(vocab,
+      TextOps.Encoder.Bpe(merges, byteLevel = false))
       .as[(String, Seq[String])].collect().toMap
     val chained = TextOps.bpeVocabTokensChained(vocab, merges)
       .as[(String, Seq[String])].collect().toMap
@@ -74,7 +76,8 @@ class BpeEncodeSpec extends AnyFunSuite {
     val merges = Seq("a" -> "b", "ab" -> "c") ++
       (1 to 998).map(i => s"zz$i" -> s"qq$i")
     val words = Seq("abc", "xabcx", "zz1qq1").toDF("w")
-    val out = TextOps.bpeVocabTokens(words, merges)
+    val out = TextOps.encodeWords(words,
+      TextOps.Encoder.Bpe(merges, byteLevel = false))
     // plan depth constant: the analyzed plan prints in O(node count) —
     // a chained plan at 1k merges would be megabytes
     assert(out.queryExecution.analyzed.toString.length < 10000)

@@ -85,7 +85,7 @@ class Kn3Spec extends AnyFunSuite {
     }.toMap
   }
 
-  test("kn3PerplexityFilter matches the independent recursion on every branch") {
+  test("knPerplexityFilter at order 3 matches the independent recursion on every branch") {
     try {
       val exp = reference()
       val out = TextOps.knPerplexityFilter(docs, $"id", $"text",

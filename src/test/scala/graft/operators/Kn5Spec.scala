@@ -98,7 +98,7 @@ class Kn5Spec extends AnyFunSuite {
     }.toMap
   }
 
-  test("kn5PerplexityFilter matches the independent recursion at every backoff level") {
+  test("knPerplexityFilter at order 5 matches the independent recursion at every backoff level") {
     try {
       val exp = reference()
       val out = TextOps.knPerplexityFilter(docs, $"id", $"text",

@@ -280,7 +280,7 @@ class MultimodalSpec extends AnyFunSuite {
     assert(ImageCodec.averageHash(flat) == ((0L, 0L)))
   }
 
-  test("synthVariant: same-class identical, odd class perturbs exactly the cell-(3,3) pixel") {
+  test("synthImage with groups: same-class identical, odd class perturbs exactly the cell-(3,3) pixel") {
     import Multimodal.ImageCodec
     val groups = 40
     // ids 7, 47, 127 share base 7; 47 (47/40 = 1) and 127 (127/40 = 3)

@@ -168,8 +168,8 @@ class TextOpsSpec extends AnyFunSuite {
   test("bpeVocabTokens applies learned merges in order with trainer semantics") {
     val words = Seq("aaab", "ba").toDF("w")
     // merges learned elsewhere: (a,a) then (aa,a) then (a,b)
-    val toks = TextOps.bpeVocabTokens(words,
-      Seq(("a", "a"), ("aa", "a"), ("a", "b")))
+    val toks = TextOps.encodeWords(words, TextOps.Encoder.Bpe(
+      Seq(("a", "a"), ("aa", "a"), ("a", "b")), byteLevel = false))
       .as[(String, Seq[String])].collect().toMap
     // aaab: chars [a,a,a,b] → (a,a): [aa,a,b] → (aa,a): [aaa,b] →
     // (a,b): no 'a' before 'b' anymore → [aaa, b]
@@ -185,11 +185,13 @@ class TextOpsSpec extends AnyFunSuite {
     val merges = TextOps.bpeMerges(docs, $"text", 5)
       .orderBy($"merge_round")
       .as[(Long, String, String, Long)].collect().map(m => (m._2, m._3)).toSeq
-    val counts = TextOps.bpeTokenCounts(docs, $"id", $"text", merges)
+    val counts = TextOps.tokenCounts(TextOps.pretokenize(docs, Seq($"id"),
+        $"text", byteLevel = false), TextOps.Encoder.Bpe(merges, byteLevel = false))
       .as[(Long, Long)].collect().toMap
     assert(counts == Map(1L -> 3L, 2L -> 3L, 3L -> 1L))
     // with NO merges, every char is a token
-    val raw = TextOps.bpeTokenCounts(docs, $"id", $"text", Seq.empty)
+    val raw = TextOps.tokenCounts(TextOps.pretokenize(docs, Seq($"id"),
+        $"text", byteLevel = false), TextOps.Encoder.Bpe(Seq.empty, byteLevel = false))
       .as[(Long, Long)].collect().toMap
     assert(raw == Map(1L -> 6L, 2L -> 6L, 3L -> 2L))
   }
@@ -209,7 +211,7 @@ class TextOpsSpec extends AnyFunSuite {
       Seq(("a", "a"), ("aa", "a"), ("aaa", "b")),
       Seq(("b", "c"), ("a", "bc"), ("abc", "abc")))
     for (ms <- mergeLists) {
-      val bad = TextOps.bpeVocabTokens(words, ms)
+      val bad = TextOps.encodeWords(words, TextOps.Encoder.Bpe(ms, byteLevel = false))
         .as[(String, Seq[String])].collect()
         .filter { case (w, toks) => toks.mkString != w }
       assert(bad.isEmpty, s"merges $ms broke round-trip: ${bad.take(3).toSeq}")
@@ -365,7 +367,7 @@ class TextOpsSpec extends AnyFunSuite {
   test("wordPieceTokens: greedy longest-match-first; BERT UNK semantics") {
     val words = Seq("abc", "abcd", "b", "abab").toDF("w")
     val vocab = Seq("a", "ab", "##b", "##c", "##bc", "##ab")
-    val toks = TextOps.wordPieceTokens(words, vocab)
+    val toks = TextOps.encodeWords(words, TextOps.Encoder.WordPiece(vocab))
       .as[(String, Seq[String])].collect().toMap
     // longest FIRST match wins: "ab" beats "a" even though a + ##bc also
     // yields two tokens
@@ -386,7 +388,8 @@ class TextOpsSpec extends AnyFunSuite {
       .collect().map(m => (m._2, m._3)).toSeq
     assert(merges.size == 4)
     val vocab = TextOps.wordPieceVocab(wt, merges)
-    val out = TextOps.wordPieceTokens(wt.select($"w").distinct(), vocab)
+    val out = TextOps.encodeWords(wt.select($"w").distinct(),
+        TextOps.Encoder.WordPiece(vocab))
       .as[(String, Seq[String])].collect()
     assert(out.nonEmpty)
     val bad = out.filter { case (w, ts) =>
@@ -506,9 +509,9 @@ class TextOpsSpec extends AnyFunSuite {
     assert(ids.values.toSeq.distinct.length == ids.size) // injective
     // every piece the tokenizer can emit on ANY input has an id:
     // vocabulary pieces for segmentable words, [UNK] for the rest
-    val toks = TextOps.wordPieceTokens(
+    val toks = TextOps.encodeWords(
         (wt.select($"w").distinct().as[String].collect().toSeq :+ "zzz@@!!")
-          .toDF("w"), vocab)
+          .toDF("w"), TextOps.Encoder.WordPiece(vocab))
       .select(explode($"toks")).as[String].collect().toSet
     assert(toks.forall(ids.contains), toks.filterNot(ids.contains).take(3))
   }
@@ -527,7 +530,8 @@ class TextOpsSpec extends AnyFunSuite {
         .toDF("id", "text")
       val wt = TextOps.wordPieceWordTable(docs, $"text")
       val vocab = TextOps.wordPieceVocab(wt, Seq.empty)
-      val rt = TextOps.wordPieceRoundTrip(docs, col("id"), col("text"), vocab)
+      val rt = TextOps.roundTrip(TextOps.pretokenize(docs, Seq(col("id")),
+          col("text"), byteLevel = false), TextOps.Encoder.WordPiece(vocab))
         .as[(Long, Long, Long, String)].collect().map(t => t._1 -> t).toMap
       val expected = docs.select($"id", md5(expr(
           """array_join(filter(split(lower(text), '\\s+'),
@@ -537,8 +541,8 @@ class TextOpsSpec extends AnyFunSuite {
       assert(rt(2L) == ((2L, 2L, 0L, expected(2L))))
       // a vocabulary that lost a word: that word counts as a mismatch
       val narrow = vocab.filterNot(s => s == "m" || s == "##m")
-      val rt2 = TextOps.wordPieceRoundTrip(docs, col("id"), col("text"),
-          narrow)
+      val rt2 = TextOps.roundTrip(TextOps.pretokenize(docs, Seq(col("id")),
+          col("text"), byteLevel = false), TextOps.Encoder.WordPiece(narrow))
         .as[(Long, Long, Long, String)].collect().map(t => t._1 -> t).toMap
       assert(rt2(1L)._3 == 1L) // "mat" → [UNK] ≠ "mat"
       assert(rt2(2L)._3 == 0L)
@@ -558,10 +562,11 @@ class TextOpsSpec extends AnyFunSuite {
       TextOps.writeWordPieceModel(wt, mergesDf, dir)
       val stored = TextOps.loadWordPieceVocab(spark, dir)
       assert(stored == TextOps.wordPieceVocab(wt, merges))
-      val fresh = TextOps.wordPieceTokens(wt.select($"w").distinct(),
-          TextOps.wordPieceVocab(wt, merges))
+      val fresh = TextOps.encodeWords(wt.select($"w").distinct(),
+          TextOps.Encoder.WordPiece(TextOps.wordPieceVocab(wt, merges)))
         .as[(String, Seq[String])].collect().toSet
-      val viaStore = TextOps.wordPieceTokens(wt.select($"w").distinct(), stored)
+      val viaStore = TextOps.encodeWords(wt.select($"w").distinct(),
+          TextOps.Encoder.WordPiece(stored))
         .as[(String, Seq[String])].collect().toSet
       assert(viaStore == fresh && fresh.nonEmpty)
       // rebuild is overwrite-idempotent
@@ -794,8 +799,8 @@ class TextOpsSpec extends AnyFunSuite {
     // is the whole point of byte-level: no codepoint can be OOV
     val docs = Seq((1L, "héllo héllo héllo world"), (2L, "héllo world"))
       .toDF("id", "text")
-    val m = TextOps.bpeMergesByteLevel(docs, col("text"), 3,
-        requireFull = true)
+    val m = TextOps.bpeMerges(docs, col("text"), 3,
+        requireFull = true, byteLevel = true)
       .orderBy("merge_round")
       .as[(Long, String, String, Long)].collect()
     // round 1: héllo's five adjacent pairs all tie at cnt 4 (world's at
@@ -842,8 +847,8 @@ class TextOpsSpec extends AnyFunSuite {
   test("byte-level bpe_encode: symbol concat reconstructs hex(word); merges apply greedily") {
     val docs = Seq((1L, "héllo héllo héllo world"), (2L, "héllo world"))
       .toDF("id", "text")
-    val merges = TextOps.bpeMergesByteLevel(docs, col("text"), 3,
-        requireFull = true)
+    val merges = TextOps.bpeMerges(docs, col("text"), 3,
+        requireFull = true, byteLevel = true)
       .orderBy("merge_round")
       .as[(Long, String, String, Long)].collect()
       .map(r => (r._2, r._3)).toSeq
@@ -959,11 +964,13 @@ class TextOpsSpec extends AnyFunSuite {
       (2L, "a1b2 c3... naïve café"),
       (3L, "   ") // no pre-tokens -> no row
     ).toDF("doc_id", "text")
-    val merges = TextOps.bpeMergesByteLevel(docs, $"text", 4, requireFull = true)
+    val merges = TextOps.bpeMerges(docs, $"text", 4, requireFull = true,
+        byteLevel = true)
       .orderBy($"merge_round")
       .collect().map(r => (r.getString(1), r.getString(2))).toSeq
     try {
-      val got = TextOps.bpeRoundTripByteLevel(docs, $"doc_id", $"text", merges)
+      val got = TextOps.roundTrip(TextOps.pretokenize(docs, Seq($"doc_id"),
+          $"text", byteLevel = true), TextOps.Encoder.Bpe(merges, byteLevel = true))
         .as[(Long, Long, Long, String)].collect()
         .map(r => r._1 -> (r._2, r._3, r._4)).toMap
       assert(got.keySet == Set(1L, 2L))
@@ -977,6 +984,73 @@ class TextOpsSpec extends AnyFunSuite {
           .as("m"))
         .as[(Long, String)].collect().toMap
       assert(got.view.mapValues(_._3).toMap == want)
+    } finally graft.CacheScope.drain()
+  }
+
+  test("every encoder through the one pass: exact round trip, arrays match counts, no row without pre-tokens") {
+    val docs = Seq((1L, "The cat sat; the cat ran!"), (2L, "naïve café 42 cats"),
+      (3L, "   "), (4L, "")).toDF("id", "text")
+    // the pre-token streams, replayed on the JVM
+    def pretokens(byteLevel: Boolean): Map[Long, Seq[String]] =
+      docs.as[(Long, String)].collect().map { case (id, t) =>
+        val lc = t.toLowerCase
+        id -> (if (byteLevel)
+          java.util.regex.Pattern.compile(TextOps.byteLevelTokenPattern)
+            .matcher(lc).results().toArray.toSeq
+            .map(_.asInstanceOf[java.util.regex.MatchResult].group())
+        else lc.split("\\s+").toSeq.filter(_.nonEmpty))
+      }.filter(_._2.nonEmpty).toMap
+    def md5Hex(s: String): String =
+      java.security.MessageDigest.getInstance("MD5")
+        .digest(s.getBytes("UTF-8")).map(b => f"${b & 0xff}%02x").mkString
+    try {
+      val merges = TextOps.bpeMerges(docs, col("text"), 4, byteLevel = true)
+        .orderBy("merge_round").collect()
+        .map(r => (r.getString(1), r.getString(2))).toSeq
+      val wt = TextOps.wordPieceWordTable(docs, col("text"))
+      val wpMerges = TextOps.wordPieceMerges(docs, col("text"), 3)
+        .orderBy("merge_round").collect()
+        .map(r => (r.getString(1), r.getString(2))).toSeq
+      val vocab = TextOps.wordPieceVocab(wt, wpMerges)
+      val model = Unigram.trainPiecesFrom(
+          Unigram.wordTable(docs, col("text"), byteLevel = true),
+          seedTopK = 40, rounds = 2)
+        .map(p => p.piece -> p.scoreMicro)
+      val encoders = Seq(
+        ("byte-level BPE", true, TextOps.Encoder.Bpe(merges, byteLevel = true)),
+        ("WordPiece", false, TextOps.Encoder.WordPiece(vocab)),
+        ("byte-level Unigram", true,
+          TextOps.Encoder.Unigram(model, byteLevel = true)))
+      for ((name, byteLevel, enc) <- encoders) {
+        val want = pretokens(byteLevel)
+        assert(want.keySet == Set(1L, 2L), name)
+        val pre = TextOps.pretokenize(docs, Seq(col("id")), col("text"),
+          byteLevel)
+        val rt = TextOps.roundTrip(pre, enc)
+          .as[(Long, Long, Long, String)].collect()
+          .map(r => r._1 -> ((r._2, r._3, r._4))).toMap
+        assert(rt == want.view.mapValues(ws =>
+          (ws.size.toLong, 0L, md5Hex(ws.mkString))).toMap, name)
+        val counts = TextOps.tokenCounts(pre, enc).as[(Long, Long)].collect().toMap
+        val arrays = TextOps.tokenArrays(pre, enc)
+          .as[(Long, Seq[String])].collect().toMap
+        // docs 3 and 4 have no pre-tokens, so no reduction gives them a row
+        assert(counts.keySet == want.keySet && arrays.keySet == want.keySet, name)
+        assert(arrays.view.mapValues(_.size.toLong).toMap == counts, name)
+        assert(want.forall { case (id, ws) => counts(id) >= ws.size }, name)
+      }
+      // with an empty merge table every UTF-8 byte of a pre-token is a token
+      val raw = TextOps.tokenCounts(
+          TextOps.pretokenize(docs, Seq(col("id")), col("text"), byteLevel = true),
+          TextOps.Encoder.Bpe(Seq.empty, byteLevel = true))
+        .as[(Long, Long)].collect().toMap
+      assert(raw == pretokens(byteLevel = true).view
+        .mapValues(_.map(_.getBytes("UTF-8").length.toLong).sum).toMap)
+      // ... while wordPieceDocCounts still reports every input doc
+      val wpc = TextOps.wordPieceDocCounts(docs, col("id"), col("text"), vocab)
+        .as[(Long, Long, Long)].collect().map(r => r._1 -> r).toMap
+      assert(wpc(3L) == ((3L, 0L, 0L)) && wpc(4L) == ((4L, 0L, 0L)))
+      assert(wpc(1L)._3 == 0L && wpc(2L)._3 == 0L) // covered corpus: no UNK
     } finally graft.CacheScope.drain()
   }
 

@@ -11,7 +11,8 @@ class UnigramSpec extends AnyFunSuite {
 
   private def enc(w: String, vocab: Seq[(String, Long)],
       maxLen: Int = Unigram.MaxPieceLen): Seq[String] =
-    Unigram.tokenize(Seq(w).toDF("w"), vocab, maxLen)
+    TextOps.encodeWords(Seq(w).toDF("w"),
+        TextOps.Encoder.Unigram(vocab, byteLevel = false, maxLen))
       .select($"toks").as[Seq[String]].head()
 
   test("Viterbi picks the max-score segmentation") {
@@ -76,16 +77,18 @@ class UnigramSpec extends AnyFunSuite {
     val loaded = Unigram.loadModel(spark, dir)
     assert(loaded == pieces.map(p => p.piece -> p.scoreMicro))
     val words = Unigram.wordTable(corpus, $"text")
-    val fresh = Unigram.tokenize(words, pieces.map(p => p.piece -> p.scoreMicro))
+    val fresh = TextOps.encodeWords(words, TextOps.Encoder.Unigram(
+        pieces.map(p => p.piece -> p.scoreMicro), byteLevel = false))
       .select($"w", $"toks").as[(String, Seq[String])].collect().toMap
-    val served = Unigram.tokenize(words, loaded)
+    val served = TextOps.encodeWords(words,
+        TextOps.Encoder.Unigram(loaded, byteLevel = false))
       .select($"w", $"toks").as[(String, Seq[String])].collect().toMap
     assert(fresh == served)
   }
 
   test("byte-level word table: multi-byte chars split into byte code points; map inverts exactly") {
     val docs = Seq("Théâtre a b", "café a").toDF("text")
-    val words = Unigram.wordTableByteLevel(docs, $"text")
+    val words = Unigram.wordTable(docs, $"text", byteLevel = true)
       .as[(String, Long)].collect().toMap
     // ASCII pre-tokens map to themselves
     assert(words("a") == 2L && words("b") == 1L)
@@ -101,10 +104,11 @@ class UnigramSpec extends AnyFunSuite {
   test("byte-level training: closed alphabet — every byte piece survives, any text segments") {
     val docs = Seq("Théâtre cat", "cat café").toDF("text")
     val pieces = Unigram.trainPiecesFrom(
-      Unigram.wordTableByteLevel(docs, $"text"), seedTopK = 50, rounds = 2)
+      Unigram.wordTable(docs, $"text", byteLevel = true), seedTopK = 50, rounds = 2)
     val vocab = pieces.map(p => p.piece -> p.scoreMicro)
     // tokenize an UNSEEN byte-level word: segments via single-byte pieces
-    val toks = Unigram.tokenize(Seq("dog").toDF("w"), vocab)
+    val toks = TextOps.encodeWords(Seq("dog").toDF("w"),
+        TextOps.Encoder.Unigram(vocab, byteLevel = false))
       .select($"toks").as[Seq[String]].head()
     assert(toks.mkString == "dog") // coverage even for unseen pre-tokens
     // every piece decodes to SOME byte string (the map stays invertible
@@ -125,7 +129,7 @@ class UnigramSpec extends AnyFunSuite {
     try {
       val docs = Seq((1L, "cat sat mat"), (2L, "sat cat dog")).toDF("id", "text")
       val pieces = Unigram.trainPiecesFrom(
-        Unigram.wordTableByteLevel(docs, col("text")), seedTopK = 40, rounds = 2)
+        Unigram.wordTable(docs, col("text"), byteLevel = true), seedTopK = 40, rounds = 2)
       val model = pieces.map(p => p.piece -> p.scoreMicro)
       val ids = Unigram.vocabIds(model)
       assert(ids.size == pieces.size)
@@ -134,9 +138,9 @@ class UnigramSpec extends AnyFunSuite {
       val sorted = model.map(_._1).sorted
       assert(sorted.zipWithIndex.forall { case (p, i) => ids(p) == i.toLong })
       // every piece the encoder emits on the training corpus has an id
-      val emitted = Unigram.tokenize(
-          Unigram.wordTableByteLevel(docs, col("text")).select(col("w")),
-          model)
+      val emitted = TextOps.encodeWords(
+          Unigram.wordTable(docs, col("text"), byteLevel = true).select(col("w")),
+          TextOps.Encoder.Unigram(model, byteLevel = false))
         .select(explode(col("toks"))).as[String].collect().toSet
       assert(emitted.forall(ids.contains), emitted.filterNot(ids.contains))
     } finally graft.CacheScope.drain()
@@ -148,7 +152,7 @@ class UnigramSpec extends AnyFunSuite {
       val docs = Seq((1L, "Théâtre café a b"), (2L, "cat sat a"),
         (3L, "日本語 cat")).toDF("id", "text")
       // the distributed inverse ≡ the JVM helper, on every byte-level word
-      val words = Unigram.wordTableByteLevel(docs, $"text")
+      val words = Unigram.wordTable(docs, $"text", byteLevel = true)
         .select($"w", Unigram.byteCharsToStringCol($"w").as("dec"))
         .as[(String, String)].collect()
       assert(words.nonEmpty)
@@ -158,9 +162,10 @@ class UnigramSpec extends AnyFunSuite {
       // full round trip through a trained model: zero mismatches, md5 of
       // the decoded stream equals the md5 of the original pre-token stream
       val pieces = Unigram.trainPiecesFrom(
-        Unigram.wordTableByteLevel(docs, $"text"), seedTopK = 60, rounds = 2)
+        Unigram.wordTable(docs, $"text", byteLevel = true), seedTopK = 60, rounds = 2)
       val model = pieces.map(p => p.piece -> p.scoreMicro)
-      val rt = Unigram.roundTripByteLevel(docs, col("id"), col("text"), model)
+      val rt = TextOps.roundTrip(TextOps.pretokenize(docs, Seq(col("id")),
+          col("text"), byteLevel = true), TextOps.Encoder.Unigram(model, byteLevel = true))
         .as[(Long, Long, Long, String)].collect().map(t => t._1 -> t).toMap
       val expected = docs.select($"id",
           md5(array_join(regexp_extract_all(lower($"text"),

@@ -568,12 +568,15 @@ class EventStreamsSpec extends AnyFunSuite {
       graft.operators.Unigram.trainPieces(d, $"text", 100, 2), model)
     val m = graft.operators.Unigram.loadModel(spark, model)
     val out = checkOutputSink(halves(d.filter($"id" < 40)),
-      graft.operators.Unigram.docTokenCounts(_, col("id"), col("text"), m))
+      b => graft.operators.TextOps.tokenCounts(graft.operators.TextOps.pretokenize(
+        b, Seq(col("id")), col("text"), byteLevel = false),
+        graft.operators.TextOps.Encoder.Unigram(m, byteLevel = false)))
     // offline: per-word tokenization of the same docs with the model
     val words = d.filter($"id" < 40)
       .select($"id", explode(expr(
         "filter(split(lower(text), '\\\\s+'), x -> length(x) > 0)")).as("w"))
-    val wt = graft.operators.Unigram.tokenize(words.select($"w").distinct(), m)
+    val wt = graft.operators.TextOps.encodeWords(words.select($"w").distinct(),
+        graft.operators.TextOps.Encoder.Unigram(m, byteLevel = false))
       .select($"w", size($"toks").cast("long").as("nt"))
     val offline = words.join(wt, Seq("w"))
       .groupBy($"id").agg(sum($"nt").as("n_tokens"))
@@ -733,9 +736,10 @@ class EventStreamsSpec extends AnyFunSuite {
     val words = d.filter($"id" < 40)
       .select($"id", explode(expr(
         "filter(split(lower(text), '\\\\s+'), x -> length(x) > 0)")).as("w"))
-    val wtoks = graft.operators.TextOps.wordPieceTokens(
+    val wtoks = graft.operators.TextOps.encodeWords(
         words.select($"w").distinct(),
-        graft.operators.TextOps.loadWordPieceVocab(spark, model))
+        graft.operators.TextOps.Encoder.WordPiece(
+          graft.operators.TextOps.loadWordPieceVocab(spark, model)))
       .select($"w", size($"toks").cast("long").as("nt"),
         when(element_at($"toks", 1) === "[UNK]", 1L).otherwise(0L).as("unk"))
     val offline = words.join(wtoks, Seq("w"))
@@ -763,7 +767,7 @@ class EventStreamsSpec extends AnyFunSuite {
     val model = tmp("shards")
     val d = docs.select(col("source"), col("doc_id"), col("text"))
     graft.operators.TextOps.writeBpeModel(
-      graft.operators.TextOps.bpeMergesByteLevel(d, col("text"), 4), model)
+      graft.operators.TextOps.bpeMerges(d, col("text"), 4, byteLevel = true), model)
     (graft.operators.TextOps.loadBpeMerges(spark, model),
       local(d.filter(col("doc_id") < below)))
   }
@@ -772,7 +776,10 @@ class EventStreamsSpec extends AnyFunSuite {
     // bins are batch-local by design, so each batch compares on its own
     val (merges, rows) = shardFixture(40)
     checkOutputSink(halves(rows), b => graft.operators.Curation.packShards(
-      graft.operators.TextOps.byteTokDocs(b, merges), col("source"),
+      graft.operators.TextOps.tokenArrays(
+        graft.operators.TextOps.pretokenize(b,
+          Seq(col("source"), col("doc_id")), col("text"), byteLevel = true),
+        graft.operators.TextOps.Encoder.Bpe(merges, byteLevel = true)), col("source"),
       col("doc_id"), col("toks"), 50L, partitions = 32), batchLocal = true)
   }
 
@@ -784,7 +791,10 @@ class EventStreamsSpec extends AnyFunSuite {
       graft.operators.TextOps.bpeVocabIdsByteLevel(merges), vdir)
     val vocab = graft.operators.TextOps.loadBpeVocabIds(spark, vdir)
     val out = checkOutputSink(Seq(rows), b => graft.operators.Curation.packShardIds(
-      graft.operators.TextOps.byteTokDocs(b, merges), col("source"),
+      graft.operators.TextOps.tokenArrays(
+        graft.operators.TextOps.pretokenize(b,
+          Seq(col("source"), col("doc_id")), col("text"), byteLevel = true),
+        graft.operators.TextOps.Encoder.Bpe(merges, byteLevel = true)), col("source"),
       col("doc_id"), col("toks"), vocab, 50L, partitions = 32), batchLocal = true)
     val s0 = spark.read.parquet(s"$out/batch=0")
       .select("domain", "bin", "n_tokens", "token_ids")
@@ -792,7 +802,10 @@ class EventStreamsSpec extends AnyFunSuite {
     // the id arrays ARE the string shards mapped through the vocab: same
     // bins, same lengths, ids within the vocab's range
     val strShards = graft.operators.Curation.packShards(
-        graft.operators.TextOps.byteTokDocs(rows, merges), col("source"),
+        graft.operators.TextOps.tokenArrays(
+        graft.operators.TextOps.pretokenize(rows,
+          Seq(col("source"), col("doc_id")), col("text"), byteLevel = true),
+        graft.operators.TextOps.Encoder.Bpe(merges, byteLevel = true)), col("source"),
         col("doc_id"), col("toks"), 50L, 8)
       .select($"domain", $"bin", $"n_tokens")
       .as[(String, Long, Long)].collect().toSet

@@ -4,8 +4,9 @@
 
 A path is a file or a directory; a directory stands for every `.scala`
 file under it. Files are read in sorted path order. Each file's code lines
-are read: blank lines are skipped, and so are comment lines (a line
-starting with `//` or `/*`, and every line inside a `/* ... */` block).
+are read, as `tools/loc.py` classifies them: blank lines are skipped, and
+so are comment lines (a line starting with `//` or `/*`, and every line
+inside a `/* ... */` block).
 Each line is compared with all whitespace removed. A window is `window`
 consecutive code lines of one file. A window whose text already occurred
 earlier — earlier in the same file, or in a file read before — is a pasted
@@ -22,24 +23,13 @@ Self-test: `python3 -m unittest discover -s tools/tests`.
 import os
 import sys
 
+from loc import files, line_kinds
+
 
 def code_lines(text):
     """(1-based source line, whitespace-free text) of every code line."""
-    out = []
-    in_block = False
-    for no, raw in enumerate(text.splitlines(), 1):
-        s = raw.strip()
-        if in_block:
-            if "*/" in s:
-                in_block = False
-            continue
-        if not s or s.startswith("//"):
-            continue
-        if s.startswith("/*"):
-            in_block = "*/" not in s[2:]
-            continue
-        out.append((no, "".join(s.split())))
-    return out
+    return [(no, "".join(s.split())) for no, kind, s in line_kinds(text)
+            if kind == "code"]
 
 
 def scan(named_texts, window=8):
@@ -70,19 +60,6 @@ def scan(named_texts, window=8):
 def regions(text, window=8):
     """Pasted regions as (first line, last line, first line of the original)."""
     return [(a, b, o) for _, a, b, _, o in scan([("", text)], window)]
-
-
-def files(paths):
-    """The files the paths name, directories expanded to their `.scala`
-    files, in sorted order."""
-    out = []
-    for p in paths:
-        if os.path.isdir(p):
-            out += [os.path.join(d, f) for d, _, fs in os.walk(p)
-                    for f in fs if f.endswith(".scala")]
-        else:
-            out.append(p)
-    return sorted(out)
 
 
 def main(argv):
