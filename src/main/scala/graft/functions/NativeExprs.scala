@@ -1,7 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, ImplicitCastInputTypes, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
@@ -9,16 +9,19 @@ import org.apache.spark.unsafe.types.UTF8String
 
 import graft.operators.Dedup
 
-/** Native Catalyst expressions for the hot sketch/vector kernels.
+/** Native kernels for the hot sketch/vector/text operators.
   *
   * The composable forms (`transform`/`aggregate`/`zip_with` chains) are
   * semantically identical but pay two structural costs at scale: higher-order
   * functions evaluate interpreted (per-element lambda dispatch + boxing), and
   * 64-slot expression trees are huge (slow analysis, codegen near the
-  * maxFields/hugeMethod cliffs, heavy first-run JIT). Each expression here is
-  * ONE tree node whose doGenCode emits a call into a tight static JVM loop —
-  * the preferred shape for a hot custom kernel (a native Expression beats a
-  * Scala UDF: no Row conversion, null handling stays in codegen).
+  * maxFields/hugeMethod cliffs, heavy first-run JIT). Each kernel here is a
+  * tight static JVM loop that a Column in [[graft.functions]] calls through
+  * Catalyst's own `StaticInvoke`: ONE tree node whose generated code is the
+  * static call, with null handling in codegen (no Row conversion, unlike a
+  * Scala UDF). The four encoders whose table rides as expression data
+  * ([[BpeEncodeExpr]], [[PqEncodeExpr]], [[UnigramEncodeExpr]],
+  * [[WordPieceEncodeExpr]]) are the only expression classes left here.
   *
   * Semantics are kept bit-identical to the composable forms (same fold order,
   * same float→double widening), so the DuckDB oracles are unchanged.
@@ -48,79 +51,13 @@ object NativeKernels {
     (v << 4) | ((d(7) & 0xffL) >>> 4)
   }
 
-  /** Distinct word n-gram shingles in first-occurrence order — identical
-    * to array_distinct(transform(...)) over the same words.
+  /** Calls `f(i, w)` for every stride-1 n-word window of `words` in
+    * window order, `w` being the words `i until i + n` joined by single
+    * spaces — the one window walk every n-gram kernel below hashes,
+    * counts or collects.
     */
-  def shinglesOf(words: ArrayData, n: Int): ArrayData = {
-    val cnt = words.numElements()
-    if (cnt < n) return new GenericArrayData(new Array[AnyRef](0))
-    val seen = new java.util.LinkedHashSet[String]()
-    val sb = new java.lang.StringBuilder(64)
-    var i = 0
-    while (i <= cnt - n) {
-      sb.setLength(0)
-      var j = 0
-      while (j < n) {
-        if (j > 0) sb.append(' ')
-        sb.append(words.getUTF8String(i + j).toString)
-        j += 1
-      }
-      seen.add(sb.toString)
-      i += 1
-    }
-    val out = new Array[AnyRef](seen.size)
-    val it = seen.iterator()
-    var k = 0
-    while (it.hasNext) {
-      out(k) = org.apache.spark.unsafe.types.UTF8String.fromString(it.next())
-      k += 1
-    }
-    new GenericArrayData(out)
-  }
-
-  /** Fused kernel: word n-gram shingles → md5 28-bit hashes → minhash
-    * signature, one pass, no materialized shingle strings. MinHash over
-    * duplicate shingles equals minhash over the distinct set (min is
-    * idempotent), so the string-side array_distinct does not need
-    * replicating here.
-    */
-  def minhashFromWords(words: ArrayData, n: Int, num: Int): ArrayData = {
-    val cnt = words.numElements()
-    val out = new Array[Long](num)
-    java.util.Arrays.fill(out, Long.MaxValue)
-    if (cnt < n) return null
-    val sb = new java.lang.StringBuilder(64)
-    var i = 0
-    while (i <= cnt - n) {
-      sb.setLength(0)
-      var j = 0
-      while (j < n) {
-        if (j > 0) sb.append(' ')
-        sb.append(words.getUTF8String(i + j).toString)
-        j += 1
-      }
-      val x = md5Hash28(sb.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      var k = 0
-      while (k < num) {
-        val h = (Dedup.hashA(k) * x + Dedup.hashB(k)) % Dedup.P
-        if (h < out(k)) out(k) = h
-        k += 1
-      }
-      i += 1
-    }
-    new GenericArrayData(out)
-  }
-
-  /** Winnowing fingerprint (the MOSS scheme): hash every word n-gram in
-    * positional order (duplicates kept), slide a window of `w` hashes,
-    * select the window minimum with RIGHTMOST tiebreak, dedupe selections.
-    * Returns an array of "pos:hash" strings (1-based positions) — callers
-    * explode to (pos, hash) rows, making comparison order-independent.
-    */
-  def winnow(words: ArrayData, n: Int, w: Int): ArrayData = {
-    val cnt = words.numElements()
-    val m = math.max(0, cnt - n + 1)
-    val hs = new Array[Long](m)
+  private def foreachWindow(words: ArrayData, n: Int)(f: (Int, String) => Unit): Unit = {
+    val m = words.numElements() - n + 1
     val sb = new java.lang.StringBuilder(64)
     var i = 0
     while (i < m) {
@@ -131,11 +68,81 @@ object NativeKernels {
         sb.append(words.getUTF8String(i + j).toString)
         j += 1
       }
-      hs(i) = md5Hash28(sb.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      f(i, sb.toString)
       i += 1
     }
+  }
+
+  private def utf8(s: String): Array[Byte] =
+    s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+
+  /** A string collection as a UTF8 array, in the collection's order. */
+  private def utf8Array(ss: java.util.Collection[String]): ArrayData = {
+    val out = new Array[AnyRef](ss.size)
+    val it = ss.iterator()
+    var k = 0
+    while (it.hasNext) {
+      out(k) = UTF8String.fromString(it.next())
+      k += 1
+    }
+    new GenericArrayData(out)
+  }
+
+  /** Distinct word n-gram shingles in first-occurrence order — identical
+    * to array_distinct(transform(...)) over the same words.
+    */
+  def shinglesOf(words: ArrayData, n: Int): ArrayData = {
     val seen = new java.util.LinkedHashSet[String]()
-    i = 0
+    foreachWindow(words, n)((_, w) => seen.add(w))
+    utf8Array(seen)
+  }
+
+  /** A MinHash signature of `num` slots before any value: every slot at
+    * its maximum.
+    */
+  private def emptySignature(num: Int): Array[Long] = {
+    val sig = new Array[Long](num)
+    java.util.Arrays.fill(sig, Long.MaxValue)
+    sig
+  }
+
+  /** One value into a MinHash signature: slot k keeps
+    * min(slot, (A(k)·x + B(k)) mod P).
+    */
+  private def minhashAdd(sig: Array[Long], x: Long): Unit = {
+    var k = 0
+    while (k < sig.length) {
+      val h = (Dedup.hashA(k) * x + Dedup.hashB(k)) % Dedup.P
+      if (h < sig(k)) sig(k) = h
+      k += 1
+    }
+  }
+
+  /** Fused kernel: word n-gram shingles → md5 28-bit hashes → minhash
+    * signature, one pass, no materialized shingle strings. MinHash over
+    * duplicate shingles equals minhash over the distinct set (min is
+    * idempotent), so the string-side array_distinct does not need
+    * replicating here. Null when there are fewer than `n` words.
+    */
+  def minhashFromWords(words: ArrayData, n: Int, num: Int): ArrayData = {
+    if (words.numElements() < n) return null
+    val sig = emptySignature(num)
+    foreachWindow(words, n)((_, w) => minhashAdd(sig, md5Hash28(utf8(w))))
+    new GenericArrayData(sig)
+  }
+
+  /** Winnowing fingerprint (the MOSS scheme): hash every word n-gram in
+    * positional order (duplicates kept), slide a window of `w` hashes,
+    * select the window minimum with RIGHTMOST tiebreak, dedupe selections.
+    * Returns an array of "pos:hash" strings (1-based positions) — callers
+    * explode to (pos, hash) rows, making comparison order-independent.
+    */
+  def winnow(words: ArrayData, n: Int, w: Int): ArrayData = {
+    val m = math.max(0, words.numElements() - n + 1)
+    val hs = new Array[Long](m)
+    foreachWindow(words, n)((i, g) => hs(i) = md5Hash28(utf8(g)))
+    val seen = new java.util.LinkedHashSet[String]()
+    var i = 0
     while (i + w <= m) {
       var best = i
       var j = i
@@ -146,74 +153,43 @@ object NativeKernels {
       seen.add(s"${best + 1}:${hs(best)}")
       i += 1
     }
-    val out = new Array[AnyRef](seen.size)
-    val it = seen.iterator()
-    var k = 0
-    while (it.hasNext) {
-      out(k) = org.apache.spark.unsafe.types.UTF8String.fromString(it.next())
-      k += 1
-    }
-    new GenericArrayData(out)
+    utf8Array(seen)
   }
 
-  /** Fused kernel: token array → md5 60-bit hashes → SimHash fingerprint. */
-  def simhashFromTokens(tokens: ArrayData, bits: Int): Long = {
-    val cnt = tokens.numElements()
+  /** SimHash majority vote over `n` hashes: bit j of the fingerprint is
+    * set when more than half of `hashAt(0 until n)` have bit j set.
+    */
+  private def simhashVote(n: Int, bits: Int)(hashAt: Int => Long): Long = {
     val counts = new Array[Long](bits)
     var i = 0
-    while (i < cnt) {
-      val h = md5Hash60(
-        tokens.getUTF8String(i).toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    while (i < n) {
+      val h = hashAt(i)
       var j = 0
       while (j < bits) { counts(j) += (h >> j) & 1L; j += 1 }
       i += 1
     }
     var fp = 0L
     var j = 0
-    while (j < bits) { if (counts(j) * 2 > cnt) fp |= 1L << j; j += 1 }
+    while (j < bits) { if (counts(j) * 2 > n) fp |= 1L << j; j += 1 }
     fp
   }
+
+  /** Fused kernel: token array → md5 60-bit hashes → SimHash fingerprint. */
+  def simhashFromTokens(tokens: ArrayData, bits: Int): Long =
+    simhashVote(tokens.numElements(), bits)(i =>
+      md5Hash60(utf8(tokens.getUTF8String(i).toString)))
+
   /** MinHash: out(j) = min over xs of (A(j)·x + B(j)) mod P. */
   def minhashSig(xs: ArrayData, num: Int): ArrayData = {
-    val out = new Array[Long](num)
-    java.util.Arrays.fill(out, Long.MaxValue)
-    val n = xs.numElements()
+    val sig = emptySignature(num)
     var i = 0
-    while (i < n) {
-      val x = xs.getLong(i)
-      var j = 0
-      while (j < num) {
-        val h = (Dedup.hashA(j) * x + Dedup.hashB(j)) % Dedup.P
-        if (h < out(j)) out(j) = h
-        j += 1
-      }
-      i += 1
-    }
-    new GenericArrayData(out)
+    while (i < xs.numElements()) { minhashAdd(sig, xs.getLong(i)); i += 1 }
+    new GenericArrayData(sig)
   }
 
   /** SimHash: bit j set when the majority of hashes have bit j set. */
-  def simhashFp(hs: ArrayData, bits: Int): Long = {
-    val n = hs.numElements()
-    val counts = new Array[Long](bits)
-    var i = 0
-    while (i < n) {
-      val h = hs.getLong(i)
-      var j = 0
-      while (j < bits) {
-        counts(j) += (h >> j) & 1L
-        j += 1
-      }
-      i += 1
-    }
-    var fp = 0L
-    var j = 0
-    while (j < bits) {
-      if (counts(j) * 2 > n) fp |= 1L << j
-      j += 1
-    }
-    fp
-  }
+  def simhashFp(hs: ArrayData, bits: Int): Long =
+    simhashVote(hs.numElements(), bits)(hs.getLong)
 
   /** Sign-LSH bucket: bit j of the result is the sign of the dot product
     * of the (float) embedding with pseudo-random hyperplane j, where
@@ -247,26 +223,14 @@ object NativeKernels {
     * zero-shuffle map, same values.
     */
   def repetitionSignals(words: ArrayData, n: Int): ArrayData = {
-    val cnt = words.numElements()
-    if (cnt < n) return null
+    if (words.numElements() < n) return null
     val counts = new java.util.HashMap[String, Integer](64)
-    val sb = new java.lang.StringBuilder(64)
     var max = 0
-    var i = 0
-    while (i <= cnt - n) {
-      sb.setLength(0)
-      var j = 0
-      while (j < n) {
-        if (j > 0) sb.append(' ')
-        sb.append(words.getUTF8String(i + j).toString)
-        j += 1
-      }
-      val key = sb.toString
+    foreachWindow(words, n) { (_, key) =>
       val prev = counts.get(key)
       val c = if (prev == null) 1 else prev.intValue() + 1
       counts.put(key, c)
       if (c > max) max = c
-      i += 1
     }
     new GenericArrayData(Array[Long](max.toLong, counts.size.toLong))
   }
@@ -278,22 +242,10 @@ object NativeKernels {
     * element pays slice + concat_ws + md5 expression dispatch.
     */
   def md5Windows(words: ArrayData, n: Int): ArrayData = {
-    val cnt = words.numElements()
-    val m = math.max(0, cnt - n + 1)
-    val out = new Array[AnyRef](m)
-    val sb = new java.lang.StringBuilder(64)
+    val out = new Array[AnyRef](math.max(0, words.numElements() - n + 1))
     val hexd = "0123456789abcdef".toCharArray
-    var i = 0
-    while (i < m) {
-      sb.setLength(0)
-      var j = 0
-      while (j < n) {
-        if (j > 0) sb.append(' ')
-        sb.append(words.getUTF8String(i + j).toString)
-        j += 1
-      }
-      val d = md5.get().digest(
-        sb.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    foreachWindow(words, n) { (i, w) =>
+      val d = md5.get().digest(utf8(w))
       val hex = new Array[Char](32)
       var k = 0
       while (k < 16) {
@@ -301,8 +253,7 @@ object NativeKernels {
         hex(2 * k + 1) = hexd(d(k) & 0xf)
         k += 1
       }
-      out(i) = org.apache.spark.unsafe.types.UTF8String.fromString(new String(hex))
-      i += 1
+      out(i) = UTF8String.fromString(new String(hex))
     }
     new GenericArrayData(out)
   }
@@ -1102,168 +1053,6 @@ object NativeKernels {
   }
 }
 
-/** minhash_sig(array<long>) → array<long> of `num` signature slots. */
-case class MinHashSigExpr(child: Expression, num: Int)
-    extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullSafeEval(input: Any): Any =
-    NativeKernels.minhashSig(input.asInstanceOf[ArrayData], num)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.NativeKernels.minhashSig($c, $num);")
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** shingles_of(array<string>, n) → distinct word n-grams, first-occurrence
-  * order (= array_distinct of the composable construction).
-  */
-case class ShinglesExpr(child: Expression, n: Int)
-    extends UnaryExpression {
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def nullSafeEval(input: Any): Any =
-    NativeKernels.shinglesOf(input.asInstanceOf[ArrayData], n)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.NativeKernels.shinglesOf($c, $n);")
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** winnow(array<string>, n, w) → array of "pos:hash" fingerprint strings. */
-case class WinnowExpr(child: Expression, n: Int, w: Int)
-    extends UnaryExpression {
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def nullSafeEval(input: Any): Any =
-    NativeKernels.winnow(input.asInstanceOf[ArrayData], n, w)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.NativeKernels.winnow($c, $n, $w);")
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** minhash_words(array<string>, n, num) → fused shingle+hash+minhash;
-  * null when the document has fewer than n words (callers filter nulls,
-  * matching the string path's n_sh > 0 filter).
-  */
-case class MinHashWordsExpr(child: Expression, n: Int, num: Int)
-    extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = true
-  override def nullSafeEval(input: Any): Any =
-    NativeKernels.minhashFromWords(input.asInstanceOf[ArrayData], n, num)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.NativeKernels.minhashFromWords($c, $n, $num);
-      ${ev.isNull} = ${ev.value} == null;""")
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** simhash_words(array<string>) → fused token-hash + SimHash fingerprint. */
-case class SimHashWordsExpr(child: Expression, bits: Int)
-    extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def nullSafeEval(input: Any): Any =
-    NativeKernels.simhashFromTokens(input.asInstanceOf[ArrayData], bits)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.NativeKernels.simhashFromTokens($c, $bits);")
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** simhash_fp(array<long>) → 60-bit long fingerprint. */
-case class SimHashFpExpr(child: Expression, bits: Int)
-    extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def nullSafeEval(input: Any): Any =
-    NativeKernels.simhashFp(input.asInstanceOf[ArrayData], bits)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.NativeKernels.simhashFp($c, $bits);")
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** repetition_signals(array<string>, n) → [max_ngram_count, n_distinct_ngrams];
-  * null for docs shorter than n words.
-  */
-case class RepetitionSignalsExpr(child: Expression, n: Int)
-    extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = true
-  override def nullSafeEval(input: Any): Any =
-    NativeKernels.repetitionSignals(input.asInstanceOf[ArrayData], n)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.NativeKernels.repetitionSignals($c, $n);
-      ${ev.isNull} = ${ev.value} == null;""")
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** lsh_bucket(array<float>) → long bucket id of `planes` sign bits. */
-case class LshBucketExpr(child: Expression, planes: Int)
-    extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def nullSafeEval(input: Any): Any =
-    NativeKernels.lshBucket(input.asInstanceOf[ArrayData], planes)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.NativeKernels.lshBucket($c, $planes);")
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** sorted_intersect_count(array<string>, array<string>) → int; both inputs
-  * must be sorted in binary UTF8 order (sort_array).
-  */
-case class SortedIntersectCountExpr(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def dataType: DataType = IntegerType
-  override def nullSafeEval(a: Any, b: Any): Any =
-    NativeKernels.sortedIntersectCount(
-      a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"${ev.value} = graft.functions.NativeKernels.sortedIntersectCount($a, $b);")
-  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
-/** cosine_f(array<float>, array<float>) → double. */
-case class CosineFExpr(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def dataType: DataType = DoubleType
-  override def nullSafeEval(a: Any, b: Any): Any =
-    NativeKernels.cosineF(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"${ev.value} = graft.functions.NativeKernels.cosineF($a, $b);")
-  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
-/** md5_windows(array<string>, n) → array<string>: all stride-1 n-word
-  * window digests, duplicates kept (see [[NativeKernels.md5Windows]]).
-  */
-case class Md5WindowsExpr(child: Expression, n: Int) extends UnaryExpression
-    with ExpectsInputTypes {
-  // SQL-registered: a mistyped call (non-array input) must fail at analysis
-  // with a clear message, not ClassCastException at eval time
-  override def inputTypes: Seq[DataType] = Seq(ArrayType(StringType))
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def nullSafeEval(words: Any): Any =
-    NativeKernels.md5Windows(words.asInstanceOf[ArrayData], n)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.NativeKernels.md5Windows($c, $n);")
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 /** bpe_encode(word) → array<string> of BPE tokens under the learned merge
   * table, which rides as expression DATA (not as plan): one tree node, the
   * merges looped at runtime by [[NativeKernels.bpeEncode]] — replacing the
@@ -1314,47 +1103,6 @@ case class PqEncodeExpr(child: Expression, cb: Array[Array[Array[Float]]])
   }
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
-}
-
-/** pq_adc(array<int>, array<double>) → double: the ADC lookup-table fold
-  * Σ_m lut[m·nCodes + codes[m]] (see [[NativeKernels.pqAdc]]).
-  */
-case class PqAdcExpr(left: Expression, right: Expression, nCodes: Int)
-    extends BinaryExpression {
-  override def dataType: DataType = DoubleType
-  override def nullSafeEval(codes: Any, lut: Any): Any =
-    NativeKernels.pqAdc(codes.asInstanceOf[ArrayData],
-      lut.asInstanceOf[ArrayData], nCodes)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"${ev.value} = graft.functions.NativeKernels.pqAdc($a, $b, $nCodes);")
-  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
-/** z_value16(bigint, bigint) → bigint: Morton (Z-order) interleave of the
-  * low 16 bits of each input — `a`'s bits land on even positions, `b`'s on
-  * odd. Used by `Compaction.zOrderParquet` to lay data out so that files
-  * carry tight min/max ranges on BOTH columns and scans filtered on either
-  * one prune whole files (multi-dimensional data skipping; single-column
-  * sort ranges only prune its own column). Magic-mask spread is branch-free
-  * and codegen'd. Oracle-reproducible: equals
-  * Σ_i ((a>>i & 1) << 2i) + ((b>>i & 1) << (2i+1)) for i in 0..15.
-  */
-case class ZValue16Expr(left: Expression, right: Expression)
-    extends BinaryExpression with ImplicitCastInputTypes {
-  // SQL-registered: INT inputs would CCE in interpreted eval yet silently
-  // widen under codegen — declaring LongType makes analysis insert the
-  // cast so both eval paths agree (and mistyped calls error clearly)
-  override def inputTypes: Seq[DataType] = Seq(LongType, LongType)
-  override def dataType: DataType = LongType
-  override def nullSafeEval(a: Any, b: Any): Any =
-    NativeKernels.zValue16(a.asInstanceOf[Long], b.asInstanceOf[Long])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"${ev.value} = graft.functions.NativeKernels.zValue16($a, $b);")
-  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
 }
 
 /** unigram_encode(word) → array<string>: Viterbi segmentation of a word
@@ -1549,221 +1297,4 @@ case class WordPieceEncodeExpr(child: Expression, vocab: Seq[String],
   }
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
-}
-
-/** decode_numeric_refs(string) → string with HTML numeric character
-  * references (`&#123;` / `&#x1F;`) decoded to their code points —
-  * [[NativeKernels.decodeNumericRefs]] as one codegen'd tree node. The
-  * composable equivalent (sentinel-split + per-piece transform, the
-  * DuckDB oracle's replay shape) allocates an array per row and runs
-  * the lambda interpreted; this is a single scan.
-  */
-case class DecodeNumericRefsExpr(child: Expression)
-    extends UnaryExpression {
-  override def dataType: DataType = StringType
-  override def nullSafeEval(input: Any): Any =
-    NativeKernels.decodeNumericRefs(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.NativeKernels.decodeNumericRefs($c);")
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** warc_records(string) → array<string> of WARC records split by exact
-  * Content-Length offset arithmetic ([[NativeKernels.warcSplitRecords]]);
-  * a malformed tail (broken framing) arrives as the final array element
-  * for the field parser to quarantine.
-  */
-case class WarcRecordsExpr(child: Expression)
-    extends UnaryExpression {
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def nullSafeEval(input: Any): Any =
-    NativeKernels.warcSplitRecords(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.NativeKernels.warcSplitRecords($c);")
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** warc_records_bin(binary) → array<binary> of WARC records split by
-  * exact Content-Length OCTET arithmetic
-  * ([[NativeKernels.warcSplitRecordsBytes]]) — the byte-true production
-  * framing; same malformed-remainder quarantine contract as the char
-  * form.
-  */
-case class WarcRecordsBytesExpr(child: Expression)
-    extends UnaryExpression {
-  override def dataType: DataType = ArrayType(BinaryType, containsNull = false)
-  override def nullSafeEval(input: Any): Any =
-    NativeKernels.warcSplitRecordsBytes(input.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.NativeKernels.warcSplitRecordsBytes($c);")
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** html_blocks(string) → array<struct<rank:int, block_type:string,
-  * block_idx:int, raw:string>> — stack-based block segmentation in one
-  * depth-aware scan ([[NativeKernels.htmlSegmentBlocks]]); array order
-  * is (rank, block_idx).
-  */
-case class HtmlBlocksExpr(child: Expression)
-    extends UnaryExpression {
-  override def dataType: DataType = ArrayType(StructType(Seq(
-    StructField("rank", IntegerType, nullable = false),
-    StructField("block_type", StringType, nullable = false),
-    StructField("block_idx", IntegerType, nullable = false),
-    StructField("raw", StringType, nullable = false))),
-    containsNull = false)
-  override def nullSafeEval(input: Any): Any =
-    NativeKernels.htmlSegmentBlocks(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.NativeKernels.htmlSegmentBlocks($c);")
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** url_canonicalize(string) → string|null ([[NativeKernels.urlCanonicalize]]):
-  * the crawl-frontier canonical form; null when no `scheme://` prefix.
-  */
-case class UrlCanonExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = StringType
-  override def nullable: Boolean = true
-  override def nullSafeEval(input: Any): Any =
-    NativeKernels.urlCanonicalize(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.NativeKernels.urlCanonicalize($c);
-      ${ev.isNull} = ${ev.value} == null;""")
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** url_host(string) → string ([[NativeKernels.urlHost]]): lowercased
-  * host, "" when no `scheme://` prefix.
-  */
-case class UrlHostExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = StringType
-  override def nullSafeEval(input: Any): Any =
-    NativeKernels.urlHost(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.NativeKernels.urlHost($c);")
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** url_registered_domain(string) → string
-  * ([[NativeKernels.urlRegisteredDomain]]): registrable domain of a
-  * lowercased host under the embedded multi-part-suffix excerpt.
-  */
-case class UrlRegDomainExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = StringType
-  override def nullSafeEval(input: Any): Any =
-    NativeKernels.urlRegisteredDomain(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.NativeKernels.urlRegisteredDomain($c);")
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** url_resolve(base, href) → string|null ([[NativeKernels.urlResolve]]):
-  * RFC 3986 frontier-subset reference resolution; null = not a
-  * crawlable outlink (non-http(s) scheme) or no base identity.
-  */
-case class UrlResolveExpr(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def dataType: DataType = StringType
-  override def nullable: Boolean = true
-  override def nullSafeEval(b: Any, h: Any): Any =
-    NativeKernels.urlResolve(b.asInstanceOf[UTF8String],
-      h.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (b, h) => s"""
-      ${ev.value} = graft.functions.NativeKernels.urlResolve($b, $h);
-      ${ev.isNull} = ${ev.value} == null;""")
-  override protected def withNewChildrenInternal(newLeft: Expression,
-      newRight: Expression): Expression = copy(left = newLeft, right = newRight)
-}
-
-/** warc_gunzip(binary) → binary: concatenated-gzip-member decompression
-  * with stop-at-first-failure quarantine ([[NativeKernels.gunzipMembers]]).
-  */
-case class GunzipMembersExpr(child: Expression)
-    extends UnaryExpression {
-  override def dataType: DataType = BinaryType
-  override def nullSafeEval(input: Any): Any =
-    NativeKernels.gunzipMembers(input.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.NativeKernels.gunzipMembers($c);")
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** gzip_member(binary) → binary: one deterministic gzip member
-  * ([[NativeKernels.gzipMember]]) — fixture synthesis side.
-  */
-case class GzipMemberExpr(child: Expression)
-    extends UnaryExpression {
-  override def dataType: DataType = BinaryType
-  override def nullSafeEval(input: Any): Any =
-    NativeKernels.gzipMember(input.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.NativeKernels.gzipMember($c);")
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** concat_binary(array<binary>) → binary ([[NativeKernels.concatBinary]]). */
-case class ConcatBinaryExpr(child: Expression)
-    extends UnaryExpression {
-  override def dataType: DataType = BinaryType
-  override def nullSafeEval(input: Any): Any =
-    NativeKernels.concatBinary(input.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.NativeKernels.concatBinary($c);")
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** decode_charset(binary, charset-name) → string with per-ROW charset
-  * (the HTTP `charset=` parameter as a column — Spark's builtin
-  * `decode` takes only a static charset); unknown names → UTF-8,
-  * malformed bytes → U+FFFD ([[NativeKernels.decodeCharsetBytes]]).
-  */
-case class DecodeCharsetExpr(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def dataType: DataType = StringType
-  override def nullSafeEval(b: Any, cs: Any): Any =
-    NativeKernels.decodeCharsetBytes(b.asInstanceOf[Array[Byte]],
-      cs.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (b, cs) =>
-      s"${ev.value} = graft.functions.NativeKernels.decodeCharsetBytes($b, $cs);")
-  override protected def withNewChildrenInternal(newLeft: Expression,
-      newRight: Expression): Expression = copy(left = newLeft, right = newRight)
-}
-
-/** encode_charset(string, charset-name) → binary — synthesis twin of
-  * [[DecodeCharsetExpr]] ([[NativeKernels.encodeCharsetBytes]]).
-  */
-case class EncodeCharsetExpr(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def dataType: DataType = BinaryType
-  override def nullSafeEval(s: Any, cs: Any): Any =
-    NativeKernels.encodeCharsetBytes(s.asInstanceOf[UTF8String],
-      cs.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (s, cs) =>
-      s"${ev.value} = graft.functions.NativeKernels.encodeCharsetBytes($s, $cs);")
-  override protected def withNewChildrenInternal(newLeft: Expression,
-      newRight: Expression): Expression = copy(left = newLeft, right = newRight)
 }

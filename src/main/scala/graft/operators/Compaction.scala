@@ -343,7 +343,7 @@ object Compaction {
     * two-dimensional access patterns (e.g. corpus queries by (domain hash,
     * crawl date)).
     *
-    * The z key is computed by the codegen'd native [[graft.functions.ZValue16Expr]]
+    * The z key is computed by the codegen'd native `NativeKernels.zValue16`
     * over the columns' low 16 bits (callers with wider domains bucket
     * first, e.g. `pmod(hash(col), 65536)`); it orders the write only and
     * is not persisted.

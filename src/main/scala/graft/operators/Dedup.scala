@@ -61,7 +61,7 @@ object Dedup {
     * hash array is materialized ONCE per row (as an attribute, so the slot
     * expressions share it instead of re-running md5 per slot), then the
     * whole signature comes from ONE native kernel call
-    * (graft.functions.MinHashSigExpr — tight JVM loop inside codegen; the
+    * (`NativeKernels.minhashSig` — tight JVM loop inside codegen; the
     * equivalent 64 × array_min(transform(...)) tree is interpreted HOF
     * soup with a huge first-run analysis/JIT bill).
     */
@@ -143,9 +143,18 @@ object Dedup {
           col("x.id") < col("y.id"))
       .select(col("x.id").as("id_a"), col("y.id").as("id_b"))
       .distinct()
-    // exact verify with the one-pass sorted-merge kernel (same exactness
-    // as array_intersect over the distinct shingle sets, no per-pair
-    // hash-set build — see ngramJaccardPairsPrefix)
+    jaccardPairs(cand, sh, threshold)
+  }
+
+  /** Candidate pairs (id_a, id_b) verified by exact shingle Jaccard
+    * against the sorted shingle arrays `sh` (id, sh, n_sh) of both sides:
+    * (id_a, id_b, jaccard) with the 4-place jaccard ≥ `threshold`. The
+    * one-pass sorted-merge kernel gives array_intersect's exactness over
+    * the distinct shingle sets without a per-pair hash-set build (see
+    * ngramJaccardPairsPrefix).
+    */
+  private def jaccardPairs(cand: DataFrame, sh: DataFrame,
+      threshold: Double): DataFrame =
     cand
       .join(sh.as("a"), col("id_a") === col("a.id"))
       .join(sh.as("b"), col("id_b") === col("b.id"))
@@ -156,7 +165,6 @@ object Dedup {
           (col("a.n_sh") + col("b.n_sh") - col("n_common")), 4))
       .filter(col("jaccard") >= threshold)
       .select(col("id_a"), col("id_b"), col("jaccard"))
-  }
 
   /** Exact n-gram Jaccard pairs via the inverted-index (shared-shingle)
     * join: explode distinct shingles, self-join on shingle, count shared
@@ -293,7 +301,7 @@ object Dedup {
 
   /** Candidates (id_a, id_b) joined against both docs' SORTED shingle
     * arrays with the exact one-pass native merge count
-    * (graft.functions.SortedIntersectCountExpr) — identical count to
+    * (`NativeKernels.sortedIntersectCount`) — identical count to
     * size(array_intersect(...)) but no per-row hash-set build. A pair
     * colliding on several prefix shingles is verified that many times
     * (verify is cheap); callers run their `distinct()` on the tiny
@@ -657,20 +665,8 @@ object Dedup {
     val exactDrops = nd.select(col("id"), md5(col("text")).as("h"))
       .join(exHashes, "h")
       .select(col("id"))
-    val bandedNew = bandKeys(lshSignatures(nd, n, numHashes), numHashes, bands)
-    val cand = bandedNew.as("x")
-      .join(exBands.as("y"),
-        col("x.band") === col("y.band") && col("x.key") === col("y.key"))
-      .select(col("x.id").as("id_n"), col("y.id").as("id_e"))
-      .distinct()
-    val shNew = shingleArrays(nd, n)
-    val nearDrops = cand
-      .join(shNew.as("a"), col("id_n") === col("a.id"))
-      .join(exShingles.as("b"), col("id_e") === col("b.id"))
-      .withColumn("n_common",
-        graft.functions.sorted_intersect_count(col("a.sh"), col("b.sh")))
-      .filter(round(col("n_common").cast("double") /
-        (col("a.n_sh") + col("b.n_sh") - col("n_common")), 4) >= threshold)
+    val nearDrops = crossIndexPairs(nd, exBands, exShingles,
+      n, numHashes, bands, threshold)
       .select(col("id_n").as("id"))
     nd.join(exactDrops.union(nearDrops).distinct(),
       Seq("id"), "left_anti")
@@ -692,25 +688,38 @@ object Dedup {
     val nd = newDocs.persistScoped()
     val within = minhashLshPairs(nd, n, numHashes, bands, threshold)
       .select(col("id_a"), col("id_b"))
-    val bandedNew = bandKeys(lshSignatures(nd, n, numHashes), numHashes, bands)
     val exBands = priorBatches(store("bands"), beforeBatch)
       .select(col("id"), col("band"), col("key"))
     val exShingles = priorBatches(store("shingles"), beforeBatch)
       .select(col("id"), col("sh"), col("n_sh"))
+    val cross = crossIndexPairs(nd, exBands, exShingles,
+      n, numHashes, bands, threshold)
+      .select(col("id_e").as("id_a"), col("id_n").as("id_b"))
+    within.unionByName(cross)
+  }
+
+  /** The new docs' band-key candidates against a stored corpus index's
+    * band (id, band, key) and shingle (id, sh, n_sh) views, verified by
+    * exact shingle Jaccard ≥ `threshold`: the (id_n, id_e) pairs of a
+    * new doc and an existing near-dup of it.
+    */
+  private def crossIndexPairs(nd: DataFrame, exBands: DataFrame,
+      exShingles: DataFrame, n: Int, numHashes: Int, bands: Int,
+      threshold: Double): DataFrame = {
+    val bandedNew = bandKeys(lshSignatures(nd, n, numHashes), numHashes, bands)
     val cand = bandedNew.as("x")
       .join(exBands.as("y"),
         col("x.band") === col("y.band") && col("x.key") === col("y.key"))
       .select(col("x.id").as("id_n"), col("y.id").as("id_e"))
       .distinct()
-    val cross = cand
+    cand
       .join(shingleArrays(nd, n).as("a"), col("id_n") === col("a.id"))
       .join(exShingles.as("b"), col("id_e") === col("b.id"))
       .withColumn("n_common",
         graft.functions.sorted_intersect_count(col("a.sh"), col("b.sh")))
       .filter(round(col("n_common").cast("double") /
         (col("a.n_sh") + col("b.n_sh") - col("n_common")), 4) >= threshold)
-      .select(col("id_e").as("id_a"), col("id_n").as("id_b"))
-    within.unionByName(cross)
+      .select(col("id_n"), col("id_e"))
   }
 
   /** Distributed connected components over a near-dup pair graph:
@@ -1481,7 +1490,7 @@ object Dedup {
     * Input: (id, text); output: (h, n_docs, n_occ, first_id).
     *
     * Scale design: the window hashes are produced by ONE narrow map — the
-    * native `md5_windows` kernel (graft.functions.Md5WindowsExpr, a tight
+    * native `md5_windows` kernel (`NativeKernels.md5Windows`, a tight
     * codegen'd loop; the composable transform/slice/md5 lambda form pays
     * interpreted per-window expression dispatch) materializes only the
     * md5s (~n_tokens rows per doc after explode, each a 32-char hash,
@@ -1738,22 +1747,11 @@ object Dedup {
     val sh = shingleArrays(docs, n).persistScoped()
     val keyText = docs.select(col("id"), lower(col("text")).as("bkey"))
     val keySorted = docs.select(col("id"),
-      concat_ws(" ", sort_array(expr(
-        "filter(split(lower(text), '\\\\s+'), x -> length(x) > 0)")))
-        .as("bkey"))
+      concat_ws(" ", sort_array(TextOps.wordsOf(col("text")))).as("bkey"))
     val cand = snmPassPairs(keyText, window, scanParts)
       .unionByName(snmPassPairs(keySorted, window, scanParts))
       .distinct()
-    cand
-      .join(sh.as("a"), col("id_a") === col("a.id"))
-      .join(sh.as("b"), col("id_b") === col("b.id"))
-      .withColumn("n_common",
-        graft.functions.sorted_intersect_count(col("a.sh"), col("b.sh")))
-      .withColumn("jaccard",
-        round(col("n_common").cast("double") /
-          (col("a.n_sh") + col("b.n_sh") - col("n_common")), 4))
-      .filter(col("jaccard") >= threshold)
-      .select(col("id_a"), col("id_b"), col("jaccard"))
+    jaccardPairs(cand, sh, threshold)
   }
 
   /** One SNM pass: unordered id pairs whose global ranks in (bkey, id)

@@ -346,8 +346,7 @@ object Retrieval {
     val stats = store("stats")
       .agg(sum(col("n_docs")).as("n_docs"))
     val tf = seeds
-      .select(col("id"), expr(
-        "filter(split(lower(text), '\\\\s+'), x -> length(x) > 0)").as("ws"))
+      .select(col("id"), TextOps.wordsOf(col("text")).as("ws"))
       .filter(size(col("ws")) >= 2)
       .select(col("id"), explode(expr(
         "transform(sequence(1, size(ws) - 1, 1), i -> concat(ws[i - 1], ' ', ws[i]))"))

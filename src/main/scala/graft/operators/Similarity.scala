@@ -21,7 +21,7 @@ object Similarity {
 
 
   /** Cosine similarity of two float-array columns, computed in double via
-    * the native kernel (graft.functions.CosineFExpr) — bit-identical to the
+    * the native kernel (`NativeKernels.cosineF`) — bit-identical to the
     * composable `aggregate(zip_with(...))` fold (same sequential order,
     * same float→double widening) but one codegen'd call instead of
     * interpreted per-element lambdas.
@@ -125,7 +125,7 @@ object Similarity {
     ((((j.toLong * dim + d) * 2654435761L) % 2001L) - 1000L) / 1000.0
 
   /** Sign-LSH bucket id (`planes` bits) of an embedding column — native
-    * kernel (graft.functions.LshBucketExpr) computing [[planeComponent]]
+    * kernel (`NativeKernels.lshBucket`) computing [[planeComponent]]
     * inline; `dim` is taken from the array itself.
     */
   def lshBucket(emb: Column, dim: Int, planes: Int = LshPlanes): Column =
@@ -990,7 +990,7 @@ object Similarity {
     /** ADC: per (m, code), dot(q_m, c_{m,code}) and ‖c_{m,code}‖² in the
       * PERMUTED coordinates the codes were encoded in (the query norm is
       * permutation-invariant and stays on q_vec); a candidate's
-      * approximate cosine is two [[graft.functions.PqAdcExpr]] folds over
+      * approximate cosine is two `NativeKernels.pqAdc` folds over
       * its codes, Σdot / (‖q‖·√Σn²).
       */
     def approx(queries: DataFrame, probes: DataFrame, codes: DataFrame): Approx = {
@@ -1029,7 +1029,7 @@ object Similarity {
     }
 
     /** The residual ADC: ⟨q, x⟩ = ⟨q, c(cell)⟩ + Σ_m lut[m·nCodes +
-      * codes[m]] (the native [[graft.functions.PqAdcExpr]] fold over the
+      * codes[m]] (the native `NativeKernels.pqAdc` fold over the
       * cell-independent residual LUT), normalized by the query norm and
       * the EXACT stored ‖x‖ — [[pqResidualTopK]]'s arithmetic.
       */

@@ -341,7 +341,7 @@ object TextOps {
 
   /** Word n-gram shingles (lowercased), distinct, first-occurrence order —
     * the unit of MinHash and exact-Jaccard dedup. Appended as column `out`.
-    * Native kernel (graft.functions.ShinglesExpr): the composable
+    * Native kernel (`NativeKernels.shinglesOf`): the composable
     * array_distinct(transform(sequence…, slice+concat_ws)) equivalent runs
     * interpreted and cost ~7s of every dedup query at sf0.1.
     */
@@ -652,7 +652,7 @@ object TextOps {
     * tokenizer family. `toks` is the token array of the pre-token column
     * `w`; `text(toks)` decodes a token array back to its pre-token (used
     * by [[roundTrip]]). Each model rides as expression DATA through one
-    * native tree node ([[graft.functions.NativeExprs]]): zero shuffles,
+    * native tree node ([[graft.functions.BpeEncodeExpr]] et al.): zero shuffles,
     * plan depth constant in the model's size.
     */
   sealed trait Encoder {
@@ -1929,7 +1929,7 @@ object TextOps {
     * published pipeline (Gopher, RefinedWeb, Dolma).
     *
     * 100 TB design: both signal families come from the codegen'd
-    * `repetition_signals` kernel ([[graft.functions.NativeExprs]], the
+    * `repetition_signals` kernel (`NativeKernels.repetitionSignals`, the
     * q56 engine) at n=1 (token mode + distinct count) and n=2 (bigram
     * mode) — the entire op is ONE zero-shuffle narrow map over the scan;
     * no explode, no per-(doc,token) aggregation, no window. The oracle

@@ -737,7 +737,7 @@ object Pipeline {
   private def q142(t: Tables): DataFrame = {
     val tf = graft.Fanout(t.documents)
       .select(col("doc_id").as("id"),
-        expr("filter(split(lower(text), '\\\\s+'), x -> length(x) > 0)").as("ws"))
+        TextOps.wordsOf(col("text")).as("ws"))
       .filter(size(col("ws")) >= 2)
       .select(col("id"), explode(expr(
         "transform(sequence(1, size(ws) - 1, 1), i -> concat(ws[i - 1], ' ', ws[i]))"))
@@ -6718,7 +6718,7 @@ object Pipeline {
   private def bigramTf(t: Tables): DataFrame =
     graft.Fanout(t.documents)
       .select(col("doc_id").as("id"),
-        expr("filter(split(lower(text), '\\\\s+'), x -> length(x) > 0)").as("ws"))
+        TextOps.wordsOf(col("text")).as("ws"))
       .filter(size(col("ws")) >= 2)
       .select(col("id"), (size(col("ws")) - 1).cast("long").as("dl"),
         explode(expr(

@@ -165,7 +165,7 @@ class TextOpsSpec extends AnyFunSuite {
     assert(m == Seq((1L, "a", "a", 4L), (2L, "aa", "a", 2L)))
   }
 
-  test("bpeVocabTokens applies learned merges in order with trainer semantics") {
+  test("Bpe encoder applies learned merges in order with trainer semantics") {
     val words = Seq("aaab", "ba").toDF("w")
     // merges learned elsewhere: (a,a) then (aa,a) then (a,b)
     val toks = TextOps.encodeWords(words, TextOps.Encoder.Bpe(
@@ -196,7 +196,7 @@ class TextOpsSpec extends AnyFunSuite {
     assert(raw == Map(1L -> 6L, 2L -> 6L, 3L -> 2L))
   }
 
-  test("bpeVocabTokens round-trip: token concatenation reconstructs every word") {
+  test("Bpe encoder round-trip: token concatenation reconstructs every word") {
     // merge application may regroup symbols but can never lose or invent
     // characters — checked over 200 seeded-random words under three merge
     // lists (incl. self-merges and merges of merged symbols)
@@ -364,7 +364,7 @@ class TextOpsSpec extends AnyFunSuite {
     assert(m2(1) == ((2L, "x", "##yz", 4L, 4L, 4L)))
   }
 
-  test("wordPieceTokens: greedy longest-match-first; BERT UNK semantics") {
+  test("WordPiece encoder: greedy longest-match-first; BERT UNK semantics") {
     val words = Seq("abc", "abcd", "b", "abab").toDF("w")
     val vocab = Seq("a", "ab", "##b", "##c", "##bc", "##ab")
     val toks = TextOps.encodeWords(words, TextOps.Encoder.WordPiece(vocab))
