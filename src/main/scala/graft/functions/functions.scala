@@ -182,7 +182,7 @@ package object functions {
     * message, not a ClassCastException at eval time.
     */
   def md5_windows(words: Column, n: Int): Column =
-    kernel("md5Windows", StringArray, Seq(words, lit(n)),
+    kernel("md5Grams", StringArray, Seq(words, lit(n)),
       inputTypes = Seq(ArrayType(StringType), IntegerType))
 
   /** Morton (Z-order) interleave of the low 16 bits of two bigint columns

@@ -1490,7 +1490,7 @@ object Dedup {
     * Input: (id, text); output: (h, n_docs, n_occ, first_id).
     *
     * Scale design: the window hashes are produced by ONE narrow map — the
-    * native `md5_windows` kernel (`NativeKernels.md5Windows`, a tight
+    * native `md5_windows` kernel (`NativeKernels.md5Grams`, a tight
     * codegen'd loop; the composable transform/slice/md5 lambda form pays
     * interpreted per-window expression dispatch) materializes only the
     * md5s (~n_tokens rows per doc after explode, each a 32-char hash,

@@ -132,7 +132,7 @@ object KernelProperties extends Properties("NativeKernels") {
 
   property("md5Windows equals the per-window md5 of the joined words") =
     forAll(words, Gen.choose(1, 4)) { (ws, n) =>
-      val out = NativeKernels.md5Windows(sarr(ws), n)
+      val out = NativeKernels.md5Grams(sarr(ws), n)
       val got = (0 until out.numElements()).map(out.getUTF8String(_).toString)
       val expect = ws.sliding(n).filter(_.size == n).map { w =>
         java.security.MessageDigest.getInstance("MD5")

@@ -114,7 +114,7 @@ class NativeKernelEvalPathsSpec extends AnyFunSuite {
       c => sorted_intersect_count(c(0), c(1)),
       a => NativeKernels.sortedIntersectCount(arr(a(0)), arr(a(1)))),
     Kernel("md5_windows", Seq("words"), c => md5_windows(c(0), 2),
-      a => NativeKernels.md5Windows(arr(a(0)), 2)),
+      a => NativeKernels.md5Grams(arr(a(0)), 2)),
     Kernel("pq_adc", Seq("codes", "lut"), c => pq_adc(c(0), c(1), 2),
       a => NativeKernels.pqAdc(arr(a(0)), arr(a(1)), 2)),
     Kernel("z_value16", Seq("x", "y"), c => z_value16(c(0), c(1)),
